@@ -73,96 +73,30 @@ _PRIORITY = [
     # new in round 5 (hundred-twelfth batch — continuation session)
     "lang_confusion_audit",
     "tokenizer_fertility",
-    # new in round 5 (hundred-eleventh batch — continuation session)
-    "energy_distance",
-    "bimodality_coefficient",
-    # new in round 5 (hundred-tenth batch — continuation session)
-    "breusch_godfrey",
-    "cumulative_periodogram",
     # new in round 5 (hundred-ninth batch — continuation session)
     "sign_test_wow",
     "wilcoxon_signed_rank",
-    # new in round 5 (hundred-eighth batch — continuation session)
-    "lorenz_asymmetry",
-    "record_counts",
-    # new in round 5 (hundred-seventh batch — continuation session)
-    "weighted_logrank",
-    "median_survival_ci",
-    # new in round 5 (hundred-sixth batch — continuation session)
-    "hill_numbers",
-    "funnel_plot_audit",
-    # new in round 5 (hundred-fifth batch — continuation session)
-    "dagostino_k2",
-    "medcouple",
-    # new in round 5 (hundred-fourth batch — continuation session)
-    "readability_scores",
-    "powerlaw_mle",
     # new in round 5 (hundred-third batch — continuation session)
     "lz_complexity",
     "spectral_flatness",
-    # new in round 5 (hundred-second batch — continuation session)
-    "ewma_control_chart",
-    "western_electric_rules",
     # new in round 5 (hundred-first batch — continuation session)
     "poisson_deviance_gof",
     "hash_collision_audit",
-    # new in round 5 (one-hundredth batch — continuation session)
-    "mcc_confusion",
-    "pinball_loss",
-    # new in round 5 (ninety-ninth batch — continuation session)
-    "chow_test",
-    "hodges_lehmann_ci",
-    # new in round 5 (ninety-eighth batch — continuation session)
-    "prewhitened_mk",
-    "kupiec_pof",
     # new in round 5 (ninety-seventh batch — continuation session)
     "dersimonian_laird",
     "poisson_rate_test",
-    # new in round 5 (ninety-sixth batch — continuation session)
-    "siegel_slopes",
-    "seasonal_sen_slope",
-    # new in round 5 (ninety-fifth batch — continuation session)
-    "seasonal_kendall",
-    "partial_correlation",
     # new in round 5 (ninety-fourth batch — continuation session)
     "zonemap_skipping",
     "cdc_chunking",
     # new in round 5 (ninety-third batch — continuation session)
     "zero_inflation",
     "laplace_trend",
-    # new in round 5 (ninety-second batch — continuation session)
-    "brunner_munzel",
-    "cucconi_test",
-    # new in round 5 (ninety-first batch — continuation session)
-    "anderson_darling_2s",
-    "rle_compressibility",
     # new in round 5 (ninetieth batch — continuation session)
     "honore_sichel",
     "spiegelhalter_z",
-    # new in round 5 (eighty-ninth batch — continuation session)
-    "rmst",
-    "quade_test",
-    # new in round 5 (eighty-eighth batch — continuation session)
-    "getis_ord_g",
-    "conover_scale",
-    # new in round 5 (eighty-seventh batch — continuation session)
-    "atkinson_hoover",
-    "gpd_tail_fit",
-    # new in round 5 (eighty-sixth batch — continuation session)
-    "fleiss_kappa",
-    "icc_agreement",
-    # new in round 5 (eighty-fifth batch — continuation session)
-    "diebold_mariano",
-    "pesaran_timmermann",
-    # new in round 5 (eighty-fourth batch — continuation session)
-    "jonckheere_terpstra",
-    "hodges_lehmann",
     # new in round 5 (eighty-third batch — continuation session)
     "buishand_range",
     "snht_test",
-    # new in round 5 (eighty-second batch — continuation session)
-    "cox_stuart",
-    "bartels_rank",
     # new in round 5 (eighty-first batch — continuation session)
     "turning_points",
     "difference_sign",
@@ -181,9 +115,6 @@ _PRIORITY = [
     # new in round 5 (seventy-sixth batch — continuation session)
     "croston_forecast",
     "tracking_signal",
-    # new in round 5 (seventy-fifth batch — continuation session)
-    "moran_i",
-    "geary_c",
     # new in round 5 (seventy-fourth batch — continuation session)
     "jensen_shannon",
     "hellinger_affinity",

@@ -167,8 +167,8 @@ def engine_throughput(
     scan the materialized tokenized-sequence table → per-sequence 18-stat
     battery (Arrow pandas map, token arrays pass through) → per-entity
     expanding-window derived features → backward as-of join against the
-    entity event stream (window strategy: one exchange, zero Python beyond
-    the battery). Falls back to inline generation when input_dir is None
+    entity event stream (one exchange, zero Python beyond the battery).
+    Falls back to inline generation when input_dir is None
     (the pre-round-3 measurement, kept for comparison)."""
     from pyspark.sql import functions as F
 

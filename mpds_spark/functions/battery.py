@@ -63,9 +63,9 @@ def stat_battery(
     std = float(np.sqrt(d2.sum() / (n - 1))) if n > 1 else 0.0
     skew = float((d2 * d).mean() / m2**1.5) if m2 > 0 else np.nan
     kurt = float((d2 * d2).mean() / (m2 * m2)) if m2 > 0 else np.nan
-    # zcr(normalize_z(a)): z-scoring is a positive affine map when std > 0,
-    # so the sign pattern equals (a - mean) > 0; std == 0 gives all-False
-    # either way (normalize_z returns a - mean)
+    # zcr of the z-scored series: z-scoring is a positive affine map when
+    # std > 0, so the sign pattern equals (a - mean) > 0; std == 0 gives
+    # all-False either way
     zcr = float(np.sum(np.abs(np.diff((d > 0).astype(np.int8)))) / n)
     if regular_grid:
         dfc, dfc_amp = K.fft_dominant_freq(a, min_f, max_f)

@@ -11,7 +11,7 @@ Transcription sources (cited per function):
 - entropy: feature_extraction/InfoTheory/entropy.m:1-9
 - relative_entropy: feature_extraction/InfoTheory/relativeEntropy.m:1-21
 - mi / hist2: feature_extraction/mi/mi.m:16-41, mi/hist2.m:15-34
-- joint/conditional entropy, nmi, nvi: InfoTheory/*.m
+- joint/conditional entropy: InfoTheory/*.m
 """
 
 from __future__ import annotations
@@ -96,17 +96,6 @@ def mutual_information(x: np.ndarray, y: np.ndarray) -> float:
     return entropy(x) + entropy(y) - joint_entropy(x, y)
 
 
-def nmi(x: np.ndarray, y: np.ndarray) -> float:
-    """InfoTheory/nmi.m: I(x,y)/sqrt(H(x)H(y))."""
-    hx, hy = entropy(x), entropy(y)
-    return mutual_information(x, y) / np.sqrt(hx * hy)
-
-
-def nvi(x: np.ndarray, y: np.ndarray) -> float:
-    """InfoTheory/nvi.m: variation of information 1 - I/Hxy."""
-    return 1.0 - mutual_information(x, y) / joint_entropy(x, y)
-
-
 def relative_entropy(x: np.ndarray, y: np.ndarray) -> float:
     """InfoTheory/relativeEntropy.m: KL(p(x)||p(y)) over the shared integer
     support (call sites pass round(a*1e4)); -dot(Px, log2(Py+eps)-log2(Px+eps))."""
@@ -161,13 +150,6 @@ def mi_binned(a: np.ndarray, b: np.ndarray, L: int = 256) -> float:
     papb = np.outer(na, nb)
     mask = (papb > 1e-12) & (n2 > 1e-12)
     return float(np.sum(n2[mask] * np.log2(n2[mask] / papb[mask])))
-
-
-def normalize_z(x: np.ndarray) -> np.ndarray:
-    """MATLAB normalize(x) default: z-score with sample std (n-1)."""
-    x = np.asarray(x, dtype=float)
-    s = np.std(x, ddof=1)
-    return (x - x.mean()) / s if s > 0 else x - x.mean()
 
 
 def decimal_to_bin_matrix(dec: np.ndarray, n_classes: int) -> np.ndarray:

@@ -9,22 +9,15 @@ Two operators:
   emits before updating lastEventHT), and "next event" excludes it too.
 
 - asof_join: two-table point-in-time join (Spark has no native ASOF JOIN).
-  Two physical strategies:
-
-  * "window" (default, all directions): tag-union both sides, ONE
-    shuffle + sort on (entity, on, side), then the match is a pure
-    last(struct, ignoreNulls) expanding window — i.e. the sort-merge as-of
-    scan expressed as LOCF over the merged stream. 100% JVM (WindowExec,
-    whole-stage codegen feeding it), no Python workers, streaming O(n+m),
-    spill-safe, and AQE/skew machinery applies normally. This is the
-    scale path: a single giant entity is still a single WindowExec
-    partition, but sort + running-last spill instead of materializing a
-    pandas group. direction="nearest" rides the same single sort with a
-    dual-visibility payload (see _asof_window_nearest).
-  * "cogroup": cogrouped Arrow groups merged with vectorized numpy
-    searchsorted — no per-row Python, but pays JVM->Arrow->pandas
-    transfer and holds one entity per pandas group. Kept as the
-    differential twin of the window strategy.
+  Tag-union both sides, ONE shuffle + sort on (entity, on, side), then the
+  match is a pure last(struct, ignoreNulls) expanding window — i.e. the
+  sort-merge as-of scan expressed as LOCF over the merged stream. 100% JVM
+  (WindowExec, whole-stage codegen feeding it), no Python workers,
+  streaming O(n+m), spill-safe, and AQE/skew machinery applies normally.
+  A single giant entity is still a single WindowExec partition, but sort +
+  running-last spill instead of materializing a pandas group.
+  direction="nearest" rides the same single sort with a dual-visibility
+  payload (see _asof_window_nearest).
 
   Backward direction is the default and the only one allowed for feature
   columns; forward/nearest require leakage_ok=True (zero-temporal-leakage
@@ -33,14 +26,10 @@ Two operators:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mpds_spark.functions.timeutil import epoch_seconds
-from pyspark.sql.types import StructField, StructType
 
 
 class LeakageError(ValueError):
@@ -91,33 +80,6 @@ def time_since_event(
     return out
 
 
-def _merge_asof_arrays(
-    l_on: np.ndarray,
-    r_on: np.ndarray,
-    direction: str,
-    allow_exact_matches: bool,
-) -> np.ndarray:
-    """Vectorized as-of index lookup: for each left on-value, the index of the
-    matching right row, or -1. Right side must be sorted ascending."""
-    if direction == "backward":
-        side = "right" if allow_exact_matches else "left"
-        idx = np.searchsorted(r_on, l_on, side=side) - 1
-    elif direction == "forward":
-        side = "left" if allow_exact_matches else "right"
-        idx = np.searchsorted(r_on, l_on, side=side)
-        idx[idx >= len(r_on)] = -1
-    elif direction == "nearest":
-        b = _merge_asof_arrays(l_on, r_on, "backward", allow_exact_matches)
-        f = _merge_asof_arrays(l_on, r_on, "forward", allow_exact_matches)
-        db = np.where(b >= 0, np.abs(l_on - r_on[np.clip(b, 0, None)]), np.inf)
-        df_ = np.where(f >= 0, np.abs(r_on[np.clip(f, 0, None)] - l_on), np.inf)
-        idx = np.where(db <= df_, b, f)
-        idx = np.where(np.isinf(db) & np.isinf(df_), -1, idx)
-    else:
-        raise ValueError(f"unknown direction {direction!r}")
-    return idx
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -129,7 +91,6 @@ def asof_join(
     right_cols: list[str] | None = None,
     suffix: str = "_r",
     leakage_ok: bool = False,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Point-in-time as-of join: for each left row, the latest right row of
     the same `by` key(s) with right.on <= left.on (backward; >= for forward).
@@ -137,8 +98,7 @@ def asof_join(
     Matches pandas.merge_asof semantics (differentially tested against it).
     `by` may be a single column or a list (composite key — e.g. the salted
     (entity, chunk) pair). tolerance is in the on-column's unit (seconds
-    for numeric/timestamp). strategy: "window" (default; JVM-only, see
-    module docstring) or "cogroup" (Arrow searchsorted differential twin).
+    for numeric/timestamp). One JVM-only plan; see the module docstring.
     """
     if direction != "backward" and not leakage_ok:
         raise LeakageError(
@@ -146,8 +106,6 @@ def asof_join(
             "pass leakage_ok=True (labels/eval only, never features)."
         )
     by_list = [by] if isinstance(by, str) else list(by)
-    if strategy is None:
-        strategy = "window"
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in [on, *by_list]]
     # disambiguate collisions with left columns
@@ -156,80 +114,14 @@ def asof_join(
         out_names[c] = c + suffix if c in left.columns else c
     right_on_out = f"{on}{suffix}"
 
-    if strategy == "window":
-        if direction == "nearest":
-            return _asof_window_nearest(
-                left, right, on, by_list, tolerance, allow_exact_matches,
-                right_cols, out_names, right_on_out,
-            )
-        return _asof_window(
-            left, right, on, by_list, direction, tolerance, allow_exact_matches,
+    if direction == "nearest":
+        return _asof_window_nearest(
+            left, right, on, by_list, tolerance, allow_exact_matches,
             right_cols, out_names, right_on_out,
         )
-    if strategy != "cogroup":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    # Alias every right column to a fresh name: when left and right share
-    # lineage (self-as-of over one table), identical attribute ids make the
-    # analyzer dedupe/prune right-side columns out of the cogroup silently.
-    by_aliases = [f"__asof_by{i}" for i in range(len(by_list))]
-    r = right.select(
-        *[F.col(b).alias(a) for b, a in zip(by_list, by_aliases)],
-        F.col(on).alias("__asof_on"),
-        *[F.col(c).alias(out_names[c]) for c in right_cols],
-    )
-
-    left_fields = list(left.schema.fields)
-    right_fields = [StructField(right_on_out, right.schema[on].dataType, True)] + [
-        StructField(out_names[c], right.schema[c].dataType, True) for c in right_cols
-    ]
-    out_schema = StructType(left_fields + right_fields)
-
-    is_ts = str(left.schema[on].dataType).lower().startswith("timestamp")
-    tol = tolerance
-    if tol is not None and is_ts:
-        tol = np.timedelta64(int(tolerance * 1_000_000), "us")
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(on, kind="mergesort").reset_index(drop=True)
-        out = lpdf.copy()
-        if len(rpdf) == 0:
-            out[right_on_out] = pd.Series([pd.NA] * len(lpdf), dtype=object)
-            for c in right_cols:
-                out[out_names[c]] = pd.Series([pd.NA] * len(lpdf), dtype=object)
-            return out
-        rpdf = rpdf.sort_values("__asof_on", kind="mergesort").reset_index(
-            drop=True
-        )
-        l_on = lpdf[on].to_numpy()
-        r_on = rpdf["__asof_on"].to_numpy()
-        idx = _merge_asof_arrays(l_on, r_on, direction, allow_exact_matches)
-        valid = idx >= 0
-        take = np.clip(idx, 0, len(rpdf) - 1)
-        matched_on = r_on[take]
-        if tol is not None:
-            dist = np.abs(l_on - matched_on)
-            valid = valid & (dist <= tol)
-        picked = rpdf.iloc[take].reset_index(drop=True)
-        out[right_on_out] = pd.Series(matched_on).mask(~valid)
-        for c in right_cols:
-            out[out_names[c]] = picked[out_names[c]].mask(~valid)
-        return out
-
-    # Pin the cogroup's parallelism with a USER-SPECIFIED repartition on the
-    # group keys: grouped-map cost is per GROUP (pandas/Arrow round-trip),
-    # but AQE coalesces shuffle partitions by BYTES — a many-groups/
-    # small-bytes stage gets collapsed onto a handful of tasks and the
-    # groups execute serially (measured 186 s -> 36 s at sf0.1 for 7k
-    # salted groups). AQE never coalesces user repartitions, and the
-    # cogroup reuses this hash partitioning (no extra exchange).
-    from mpds_spark.operators.util import pin_group_parallelism
-
-    return (
-        pin_group_parallelism(left, *by_list)
-        .groupBy(*by_list)
-        .cogroup(pin_group_parallelism(r, *by_aliases).groupBy(*by_aliases))
-        .applyInPandas(merge, out_schema)
+    return _asof_window(
+        left, right, on, by_list, direction, tolerance, allow_exact_matches,
+        right_cols, out_names, right_on_out,
     )
 
 
@@ -321,9 +213,8 @@ def _asof_window_nearest(
     out_names: dict[str, str],
     right_on_out: str,
 ) -> DataFrame:
-    """direction='nearest' as a single-sort window plan (previously
-    cogroup-only): the tag-union carries every right row TWICE — once in a
-    backward-visible payload column (__rb) and once forward-visible
+    """direction='nearest' as a single-sort window plan: the tag-union
+    carries every right row TWICE — once in a backward-visible payload column (__rb) and once forward-visible
     (__rf) — so ONE (entity, on, rank) sort serves both scans:
 
       backward match = last(__rb, ignoreNulls)  over [-inf, current]
@@ -334,8 +225,8 @@ def _asof_window_nearest(
     forward copy after left iff exact allowed — two independent tie rules
     one ordering could not express with a single payload). The winner is
     the closer match, ties to backward, tolerance applied AFTER the choice
-    — exactly pandas.merge_asof(direction='nearest') / the cogroup twin
-    (differentially tested). One exchange, zero Python; the right side
+    — exactly pandas.merge_asof(direction='nearest') (differentially
+    tested). One exchange, zero Python; the right side
     rides the shuffle twice (it is the smaller side in the canonical
     enrich pattern)."""
     payload = F.struct(

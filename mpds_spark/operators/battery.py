@@ -14,8 +14,6 @@ Both emit ArrayType(DoubleType) feature vectors + a names manifest
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
@@ -27,9 +25,7 @@ from mpds_spark.operators.util import pin_group_parallelism
 
 from mpds_spark.functions.battery import (
     TOKEN_STAT_NAMES,
-    accel_feature_names,
     extract_accel_features,
-    token_features,
     token_features_batch,
 )
 

@@ -165,10 +165,6 @@ def default_decoder(payload: bytes, meta) -> np.ndarray:
     )
 
 
-# back-compat alias: the old stub default now sniffs + really decodes
-_not_implemented_decoder = default_decoder
-
-
 def fake_image_decoder(payload: bytes, meta) -> np.ndarray:
     """Deterministic stand-in decoder: expands the payload bytes into a
     (height, width) float image by tiling — stable across runs/partitions,

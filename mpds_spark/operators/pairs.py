@@ -11,9 +11,6 @@ row ids, so pairs are key-based:
 - pair_diff ← dssFunctionLibrary.R:371-398 (calculateDiffMatrix/Vec):
   given a pair table (on_key, off_key) and a keyed data table, emit
   data[on] - data[off] per feature — two equi-joins + zip_with arithmetic.
-- sampled_pairs ← dssFunctionLibrary.R:38-52 (subsampleSetOfPossiblePairs):
-  seeded sampled cross join capped at n_pairs, deduped; the dropped-count
-  is observable (no silent caps).
 - random_ordered_pairs ← mimicUsefulFunction.R:162-193: sampled pairs
   oriented by a rank column (higher rank first), deduped, capped.
 
@@ -118,44 +115,6 @@ def pair_diff(
         f"__off_{c}" for c in cols + array_cols
     ]
     return j.drop(*drop)
-
-
-def sampled_pairs(
-    left_keys: DataFrame,
-    right_keys: DataFrame,
-    n_pairs: int,
-    key: str = "key",
-    seed: int = 42,
-    max_exact: int = 1_000_000,
-) -> DataFrame:
-    """Candidate pairs (on_key, off_key): exact cross join when |A×B| is
-    small, else seeded oversample (10x) + dedupe + limit, mirroring
-    subsampleSetOfPossiblePairs (dssFunctionLibrary.R:38-52)."""
-    nl = left_keys.count()
-    nr = right_keys.count()
-    lk = left_keys.select(F.col(key).alias("on_key"))
-    rk = right_keys.select(F.col(key).alias("off_key"))
-    if nl * nr <= max_exact:
-        allp = lk.crossJoin(rk)
-        if nl * nr <= n_pairs:
-            return allp
-        return (
-            allp.withColumn("__r", F.rand(seed))
-            .orderBy("__r")
-            .limit(n_pairs)
-            .drop("__r")
-        )
-    frac_each = min(1.0, (10.0 * n_pairs) ** 0.5 / min(nl, nr))
-    ls = lk.sample(fraction=frac_each, seed=seed)
-    rs = rk.sample(fraction=frac_each, seed=seed + 1)
-    return (
-        ls.crossJoin(rs)
-        .dropDuplicates(["on_key", "off_key"])
-        .withColumn("__r", F.rand(seed + 2))
-        .orderBy("__r")
-        .limit(n_pairs)
-        .drop("__r")
-    )
 
 
 def cross_stage_pairs(

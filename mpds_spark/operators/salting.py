@@ -2,21 +2,21 @@
 
 Two mechanisms, matching how each operator class scales:
 
-1. The default as-of strategy ("window") and every pure window operator are
-   sort-based and streaming: a hot entity is one WindowExec partition that
-   SPILLS rather than OOMs, so they need no salting — AQE skew-join
+1. The as-of join and every pure window operator are sort-based and
+   streaming: a hot entity is one WindowExec partition that SPILLS rather
+   than OOMs, so they need no salting to be correct — AQE skew-join
    splitting covers the join legs. (Verified by the hot-entity smoke test.)
 
-2. Grouped-map Arrow ops (cogroup as-of, interpolate strategy='pandas')
-   materialize one pandas group per entity — a 10^8-row entity breaks
-   that (the DEFAULT interpolate/as-of strategies are window-based and
-   skew-safe without salting). salted_asof_join
-   splits each entity's LEFT rows into time-range chunks of bounded size and
-   replays the single latest RIGHT row before each chunk boundary into the
-   chunk ("boundary-overlap replay"), so every chunk is self-contained for a
-   backward as-of scan. Result is provably identical to the unsalted join
-   (differential-tested), with per-group memory O(chunk) instead of
-   O(entity).
+2. Grouped-map Arrow ops (interpolate strategy='pandas') materialize one
+   pandas group per entity — a 10^8-row entity breaks that (the DEFAULT
+   interpolate strategy is window-based and skew-safe without salting).
+   salted_asof_join bounds the as-of scan's sort partition: it
+   splits each entity's LEFT rows into time-range chunks of bounded size
+   and replays the single latest RIGHT row before each chunk boundary into
+   the chunk ("boundary-overlap replay"), so every chunk is self-contained
+   for a backward as-of scan keyed on (entity, chunk). Result is provably
+   identical to the unsalted join (differential-tested), with one
+   WindowExec partition per chunk instead of per entity.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ def salted_asof_join(
     chunk_span: float = 86400.0,
     right_cols: list[str] | None = None,
     suffix: str = "_r",
-    strategy: str = "cogroup",
 ) -> DataFrame:
     """Backward as-of join with (entity, time-chunk) salting.
 
@@ -45,11 +44,10 @@ def salted_asof_join(
     latest right row of any earlier chunk — so matches across chunk
     boundaries are preserved exactly.
 
-    Sizing: each (entity, chunk) becomes ONE pandas group, and grouped-map
-    overhead is per GROUP, not per row — pick chunk_span so groups hold
-    ~10^5-10^6 left rows (the point of salting is splitting a 10^8-row
-    entity into bounded groups, not splitting small entities into dust:
-    measured 210 s for 600k rows in 24k groups vs seconds at sane spans).
+    Sizing: each (entity, chunk) becomes ONE window partition key — pick
+    chunk_span so chunks hold ~10^5-10^6 left rows (the point of salting
+    is splitting a 10^8-row entity into bounded sorts, not splitting
+    small entities into dust).
 
     Tie caveat: "identical to the unsalted join" holds when the right side
     is UNIQUE on (by, on). With duplicate right timestamps the carry picks
@@ -100,8 +98,6 @@ def salted_asof_join(
     # composite key (asof_join supports by=[...]), so there is no string
     # encoding that could collide (e.g. entity 'u1' chunk 2251 vs entity
     # 'u12' chunk 251 under concatenation).
-    # strategy defaults to "cogroup": that's the path whose per-group pandas
-    # memory the salting bounds (the "window" path never needed it).
     out = asof_join(
         l_tag,
         r_all,
@@ -109,7 +105,6 @@ def salted_asof_join(
         by=[by, "__chunk"],
         right_cols=right_cols,
         suffix=suffix,
-        strategy=strategy,
     )
     return out.drop("__chunk")
 

@@ -33,8 +33,6 @@ always an overcount, never under.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -144,13 +144,6 @@ def interleave_split(
     )
 
 
-def per_group_max(
-    df: DataFrame, key: str, value: str, alias: str = "max_value"
-) -> DataFrame:
-    """Parity: dssPerformanceEvaluation.R:49-58 (per-user max score)."""
-    return df.groupBy(key).agg(F.max(value).alias(alias))
-
-
 def series_stats(
     df: DataFrame,
     value: str = "value",

@@ -41,23 +41,25 @@ def _pandas_asof(left, right, direction, tolerance=None, allow_exact=True):
     return out.sort_values(["entity_id", "ts"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["window", "cogroup"])
+_ASOF_CASES = [
+    ("backward", None, True),
+    ("backward", 50.0, True),
+    ("backward", None, False),
+    ("forward", None, True),
+    ("forward", 30.0, False),
+    ("nearest", None, True),
+    ("nearest", 40.0, True),
+    ("nearest", None, False),
+]
+
+
+# each id ends in the physical plan under test: the window plan
 @pytest.mark.parametrize(
     "direction,tolerance,allow_exact",
-    [
-        ("backward", None, True),
-        ("backward", 50.0, True),
-        ("backward", None, False),
-        ("forward", None, True),
-        ("forward", 30.0, False),
-        ("nearest", None, True),
-        ("nearest", 40.0, True),
-        ("nearest", None, False),
-    ],
+    _ASOF_CASES,
+    ids=[f"{d}-{t}-{a}-window" for d, t, a in _ASOF_CASES],
 )
-def test_asof_join_matches_pandas(
-    spark, direction, tolerance, allow_exact, strategy
-):
+def test_asof_join_matches_pandas(spark, direction, tolerance, allow_exact):
     left, right = _random_two_tables()
     got = (
         asof_join(
@@ -67,7 +69,6 @@ def test_asof_join_matches_pandas(
             tolerance=tolerance,
             allow_exact_matches=allow_exact,
             leakage_ok=True,
-            strategy=strategy,
         )
         .orderBy("entity_id", "ts")
         .toPandas()
@@ -147,8 +148,7 @@ def test_asof_join_forward_requires_leakage_opt_in(spark):
 
 
 def test_asof_join_composite_by_key(spark):
-    """by=[...] composite keys: matches must respect BOTH key columns, on
-    both physical strategies."""
+    """by=[...] composite keys: matches must respect BOTH key columns."""
     import pandas as pd
 
     lpdf = pd.DataFrame(
@@ -168,15 +168,11 @@ def test_asof_join_composite_by_key(spark):
     )
     left = spark.createDataFrame(lpdf)
     right = spark.createDataFrame(rpdf)
-    for strategy in ("window", "cogroup"):
-        out = (
-            asof_join(
-                left, right, on="ts", by=["entity_id", "region"],
-                strategy=strategy,
-            )
-            .orderBy("entity_id", "region")
-            .toPandas()
-        )
-        # (a,x)->1, (a,y)->2, (b,x)-> no match (b's only ref is region y)
-        assert out["rv"].tolist()[:2] == [1.0, 2.0]
-        assert pd.isna(out["rv"].iloc[2])
+    out = (
+        asof_join(left, right, on="ts", by=["entity_id", "region"])
+        .orderBy("entity_id", "region")
+        .toPandas()
+    )
+    # (a,x)->1, (a,y)->2, (b,x)-> no match (b's only ref is region y)
+    assert out["rv"].tolist()[:2] == [1.0, 2.0]
+    assert pd.isna(out["rv"].iloc[2])

@@ -740,11 +740,6 @@ BUDGETS = {
     # hellinger: same hour agg + 1-row BC fold and exact argmax
     "hellinger_affinity": {"shuffle": 2, "python": 0,
                            "cartesian": 0, "bnlj": 0},
-    # moran/geary: hour agg + 1-row exact-integer circular folds
-    "moran_i": {"shuffle": 2, "python": 0, "cartesian": 0,
-                "bnlj": 0},
-    "geary_c": {"shuffle": 2, "python": 0, "cartesian": 0,
-                "bnlj": 0},
     # croston: day agg + 1-row demand-epoch folds
     "croston_forecast": {"shuffle": 2, "python": 0, "cartesian": 0,
                          "bnlj": 0},
@@ -786,65 +781,16 @@ BUDGETS = {
                        "bnlj": 0},
     "difference_sign": {"shuffle": 2, "python": 0, "cartesian": 0,
                         "bnlj": 0},
-    # cox-stuart / bartels: day agg + 1-row exact folds
-    "cox_stuart": {"shuffle": 2, "python": 0, "cartesian": 0,
-                   "bnlj": 0},
-    "bartels_rank": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
     # buishand / snht: day agg + 1-row exact partial-sum folds
     "buishand_range": {"shuffle": 2, "python": 0, "cartesian": 0,
                        "bnlj": 0},
     "snht_test": {"shuffle": 2, "python": 0, "cartesian": 0,
                   "bnlj": 0},
-    # jonckheere / hodges-lehmann: day agg + 1-row pair folds
-    "jonckheere_terpstra": {"shuffle": 2, "python": 0,
-                            "cartesian": 0, "bnlj": 0},
-    "hodges_lehmann": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    # diebold-mariano / pesaran-timmermann: day agg + 1-row folds
-    "diebold_mariano": {"shuffle": 2, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    "pesaran_timmermann": {"shuffle": 2, "python": 0,
-                           "cartesian": 0, "bnlj": 0},
-    # fleiss: user window (groupBy rides its partitioning) + item agg
-    # + category explode branch; the bnlj is the 1-row x 1-row
-    # combine of the two aggregate scalars
-    "fleiss_kappa": {"shuffle": 5, "python": 0, "cartesian": 0,
-                     "bnlj": 1},
-    # icc: single chain — window + one single-row ANOVA agg
-    "icc_agreement": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # atkinson/gpd: histogram chain (l_moments pattern); gpd's bnlj
-    # is the broadcast of the 1-row threshold onto the tiny histogram
-    "atkinson_hoover": {"shuffle": 3, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    "gpd_tail_fit": {"shuffle": 4, "python": 0, "cartesian": 0,
-                     "bnlj": 1},
-    # getis-ord / conover: hour/day agg + 1-row exact folds
-    "getis_ord_g": {"shuffle": 2, "python": 0, "cartesian": 0,
-                    "bnlj": 0},
-    "conover_scale": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # rmst rides the survival_km machinery (bnlj = 1-row max fit);
-    # quade is the standard day-agg + 1-row fold
-    "rmst": {"shuffle": 4, "python": 0, "cartesian": 0, "bnlj": 1},
-    "quade_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                   "bnlj": 0},
     # honore/sichel word-count chain; spiegelhalter single corpus agg
     "honore_sichel": {"shuffle": 3, "python": 0, "cartesian": 0,
                       "bnlj": 0},
     "spiegelhalter_z": {"shuffle": 1, "python": 0, "cartesian": 0,
                         "bnlj": 0},
-    # anderson-darling day-array fold; rle user-window chain
-    "anderson_darling_2s": {"shuffle": 2, "python": 0,
-                            "cartesian": 0, "bnlj": 0},
-    "rle_compressibility": {"shuffle": 2, "python": 0,
-                            "cartesian": 0, "bnlj": 0},
-    # brunner-munzel / cucconi: day agg + 1-row rank folds
-    "brunner_munzel": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    "cucconi_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
     # zero-inflation user agg chain; laplace single corpus agg
     "zero_inflation": {"shuffle": 2, "python": 0, "cartesian": 0,
                        "bnlj": 0},
@@ -860,92 +806,26 @@ BUDGETS = {
     # extraction + md5 + both aggregations stay JVM-side
     "cdc_chunking": {"shuffle": 3, "python": 1, "cartesian": 0,
                      "bnlj": 0},
-    # seasonal kendall / partial corr: day agg + 1-row folds
-    "seasonal_kendall": {"shuffle": 2, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
-    "partial_correlation": {"shuffle": 2, "python": 0,
-                            "cartesian": 0, "bnlj": 0},
-    # siegel / seasonal sen: day agg + 1-row median folds
-    "siegel_slopes": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    "seasonal_sen_slope": {"shuffle": 2, "python": 0,
-                           "cartesian": 0, "bnlj": 0},
     # DL meta-analysis / poisson rate: day agg + 1-row folds
     "dersimonian_laird": {"shuffle": 3, "python": 0,
                           "cartesian": 0, "bnlj": 0},
     "poisson_rate_test": {"shuffle": 2, "python": 0,
                           "cartesian": 0, "bnlj": 0},
-    # prewhitened MK day fold; kupiec threshold-fit broadcast
-    "prewhitened_mk": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    "kupiec_pof": {"shuffle": 3, "python": 0, "cartesian": 0,
-                   "bnlj": 1},
-    # chow / HL-CI: day agg + 1-row folds
-    "chow_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
-    "hodges_lehmann_ci": {"shuffle": 2, "python": 0,
-                          "cartesian": 0, "bnlj": 0},
-    # mcc single corpus agg; pinball day fold
-    "mcc_confusion": {"shuffle": 1, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    "pinball_loss": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
     # deviance day fold; collision audit distinct agg
     "poisson_deviance_gof": {"shuffle": 2, "python": 0,
                              "cartesian": 0, "bnlj": 0},
     "hash_collision_audit": {"shuffle": 2, "python": 0,
                              "cartesian": 0, "bnlj": 0},
-    # SPC tier: day agg + 1-row folds
-    "ewma_control_chart": {"shuffle": 2, "python": 0,
-                           "cartesian": 0, "bnlj": 0},
-    "western_electric_rules": {"shuffle": 2, "python": 0,
-                               "cartesian": 0, "bnlj": 0},
     # LZ parse / spectral flatness: day agg + 1-row folds
     "lz_complexity": {"shuffle": 2, "python": 0, "cartesian": 0,
                       "bnlj": 0},
     "spectral_flatness": {"shuffle": 2, "python": 0,
                           "cartesian": 0, "bnlj": 0},
-    # readability word+doc passes; power-law activity histogram
-    "readability_scores": {"shuffle": 4, "python": 0,
-                           "cartesian": 0, "bnlj": 0},
-    "powerlaw_mle": {"shuffle": 3, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    # normality/skewness pair: day agg + 1-row folds
-    "dagostino_k2": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    "medcouple": {"shuffle": 2, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
-    # hill profile / funnel audit: histogram chains
-    "hill_numbers": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    "funnel_plot_audit": {"shuffle": 3, "python": 0,
-                          "cartesian": 0, "bnlj": 0},
-    # weighted logrank / median CI ride the logrank curve machinery
-    # (1-row corpus-max censor boundary broadcast)
-    "weighted_logrank": {"shuffle": 4, "python": 0, "cartesian": 0,
-                         "bnlj": 1},
-    "median_survival_ci": {"shuffle": 4, "python": 0,
-                           "cartesian": 0, "bnlj": 1},
-    # lorenz asymmetry histogram chain; record counts day fold
-    "lorenz_asymmetry": {"shuffle": 3, "python": 0,
-                         "cartesian": 0, "bnlj": 0},
-    "record_counts": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
     # week-over-week paired tests: day agg + 1-row pair folds
     "sign_test_wow": {"shuffle": 2, "python": 0, "cartesian": 0,
                       "bnlj": 0},
     "wilcoxon_signed_rank": {"shuffle": 2, "python": 0,
                              "cartesian": 0, "bnlj": 0},
-    # whiteness pair: day agg + 1-row folds
-    "breusch_godfrey": {"shuffle": 2, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    "cumulative_periodogram": {"shuffle": 2, "python": 0,
-                               "cartesian": 0, "bnlj": 0},
-    # energy / bimodality: day agg + 1-row folds
-    "energy_distance": {"shuffle": 2, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    "bimodality_coefficient": {"shuffle": 2, "python": 0,
-                               "cartesian": 0, "bnlj": 0},
     # lang eval pair: doc map + label aggs
     "lang_confusion_audit": {"shuffle": 2, "python": 0,
                              "cartesian": 0, "bnlj": 0},

@@ -33,6 +33,70 @@ def _shuffles(plan: str) -> int:
     return len(re.findall(r"\bExchange (?:hash|range|Single)", plan))
 
 
+# BroadcastNestedLoopJoin is allowed only where it is the design (broadcast
+# 1-row fits, bounded sampled cross joins, hash-capped theta passes,
+# broadcast-query exact ANN baseline).
+BNLJ_BY_DESIGN = {
+    "ann_cosine_topk",     # broadcast query set x corpus (exact baseline)
+    "ann_recall_audit",    # same exact baseline as its reference leg
+    "histogram_lift",      # broadcast 1-row (min, max) fit
+    "clinical_pairs",      # inter theta pass over hash-capped rows
+    "temperature_mix",     # broadcast 1-row weight-sum x |groups| rows
+    "behavior_divergence",  # broadcast 1-row corpus total x |alphabet|
+    "length_ks_drift",     # |groups| x |distinct lengths| grid cross
+    "psi_drift",           # broadcast 1-row midpoint / bin-edge fits
+    "lagged_corr",         # broadcast 1-row hour-span fit x |entities|
+    "survival_km",         # broadcast 1-row corpus-max censor boundary
+    "welch_pairs",         # pair theta join over the 5-row moment frame
+    "decayed_counts",      # broadcast 1-row corpus-max decay boundary
+    "join_size_audit",     # two broadcast 1-row totals fits per relation
+    "cuped_adjust",        # broadcast 1-row corpus-span midpoint fit
+    "ams_f2_sketch",       # two 1-row frames (exact leg x sketch leg)
+    "pmi_pairs",           # broadcast 1-row pair-mass / token-mass fits
+    "ivm_merge_audit",     # broadcast 1-row corpus-span midpoint fit
+    "simpson_audit",       # broadcast 1-row pooled contingency fit
+    "pagerank_iter",       # broadcast 1-row node-count fit per sweep
+    "knn_eval",            # broadcast sampled query set x corpus
+                           # (documented exact brute baseline)
+    "quant_recall",        # two registered brute legs (exact + int8)
+    "rate_shrinkage",      # broadcast 1-row pooled-rate fit
+    "knn_shapley",         # broadcast held-out query set x corpus
+                           # (registered brute valuation leg)
+    # 1-row / bounded-frame combines registered (with exact counts)
+    # in tests/test_plan_budgets.py BUDGETS — mirrored here:
+    "anova_twoway",        # three 1-row SS joins on the 168-cell frame
+    "bpe_merge_step",      # 1-row best-pair broadcast
+    "cox_ph",              # broadcast 1-row corpus-max censor boundary
+    "degree_assortativity",  # 1-row moment x 1-row node-count combine
+    "eb_shrinkage",        # broadcast 1-row pooled moment fit
+    "hurst_variance_plot",  # three 1-row level joins
+    "kendall_tau",         # cell-pair sweep over the <=100-cell frame
+    "kruskal_wallis",      # 1-row tie-term combine
+    "logrank_test",        # broadcast 1-row corpus-max censor boundary
+    "mann_kendall",        # bounded 31x31 day-pair sweep + 1-row combine
+    "pca_power_iter",      # 1-row cf x si combine
+    "ransac_trend",        # bounded 465x31 candidate sweep joins
+    "runs_test",           # 1-row combine
+    "sinkhorn_ot",         # 1-row corpus-max bin-boundary broadcast
+    "newman_modularity",   # 1-row edge-moment x 1-row degree-moment
+    "km_confidence",       # broadcast 1-row corpus-max censor boundary
+    "ledoit_wolf_shrinkage",  # si broadcast + 1-row moment combines
+    "ols_influence",       # broadcast 1-row moment fit x day frame
+    "pr_curve_ap",         # 1-row AP fold x best-F1 row combine
+    # bounded 1-row combines registered in BUDGETS with bnlj >= 1
+    # (sync-checked against test_plan_budgets by name):
+    "hits_scores",         # 1-row hub/auth norm broadcast per sweep
+    "burrows_delta",       # 1-row corpus-moment broadcast
+    "mood_median_test",    # 1-row grand-median broadcast
+    "ndcg_eval",           # 1-row ideal-DCG combine
+    "nelson_aalen",        # broadcast 1-row corpus-max censor boundary
+    "zonemap_skipping",    # 1-row min/max fit + two 1-row layout aggs
+}
+# Queries whose CONSTRUCTION runs eager work (iterative CC: per-round
+# checkpoint actions) are excluded from the plan inventory.
+EAGER_CONSTRUCTION = {"near_dup_components", "kcenter_coreset"}
+
+
 @pytest.fixture(scope="module")
 def series_df(spark):
     rng = np.random.default_rng(3)
@@ -119,76 +183,11 @@ def test_interval_join_default_is_not_nested_loop(spark, series_df):
 
 def test_catalog_plan_inventory(spark):
     """Global plan contract over the catalog: no CartesianProduct anywhere;
-    BroadcastNestedLoopJoin only where it is the design (broadcast 1-row
-    fits, bounded sampled cross joins, hash-capped theta passes,
-    broadcast-query exact ANN baseline). Queries whose CONSTRUCTION runs
-    eager work (iterative CC: per-round checkpoint actions) are excluded —
-    their plan shape is covered by their own operator tests."""
+    BroadcastNestedLoopJoin only in BNLJ_BY_DESIGN. EAGER_CONSTRUCTION
+    queries are skipped — their plan shape is covered by their own
+    operator tests."""
     from mpds_spark.queries import QUERIES
 
-    BNLJ_BY_DESIGN = {
-        "ann_cosine_topk",     # broadcast query set x corpus (exact baseline)
-        "ann_recall_audit",    # same exact baseline as its reference leg
-        "histogram_lift",      # broadcast 1-row (min, max) fit
-        "clinical_pairs",      # inter theta pass over hash-capped rows
-        "temperature_mix",     # broadcast 1-row weight-sum x |groups| rows
-        "behavior_divergence",  # broadcast 1-row corpus total x |alphabet|
-        "length_ks_drift",     # |groups| x |distinct lengths| grid cross
-        "psi_drift",           # broadcast 1-row midpoint / bin-edge fits
-        "lagged_corr",         # broadcast 1-row hour-span fit x |entities|
-        "survival_km",         # broadcast 1-row corpus-max censor boundary
-        "welch_pairs",         # pair theta join over the 5-row moment frame
-        "decayed_counts",      # broadcast 1-row corpus-max decay boundary
-        "join_size_audit",     # two broadcast 1-row totals fits per relation
-        "cuped_adjust",        # broadcast 1-row corpus-span midpoint fit
-        "ams_f2_sketch",       # two 1-row frames (exact leg x sketch leg)
-        "pmi_pairs",           # broadcast 1-row pair-mass / token-mass fits
-        "ivm_merge_audit",     # broadcast 1-row corpus-span midpoint fit
-        "simpson_audit",       # broadcast 1-row pooled contingency fit
-        "pagerank_iter",       # broadcast 1-row node-count fit per sweep
-        "knn_eval",            # broadcast sampled query set x corpus
-                               # (documented exact brute baseline)
-        "quant_recall",        # two registered brute legs (exact + int8)
-        "rate_shrinkage",      # broadcast 1-row pooled-rate fit
-        "knn_shapley",         # broadcast held-out query set x corpus
-                               # (registered brute valuation leg)
-        # 1-row / bounded-frame combines registered (with exact counts)
-        # in tests/test_plan_budgets.py BUDGETS — mirrored here:
-        "anova_twoway",        # three 1-row SS joins on the 168-cell frame
-        "bpe_merge_step",      # 1-row best-pair broadcast
-        "cox_ph",              # broadcast 1-row corpus-max censor boundary
-        "degree_assortativity",  # 1-row moment x 1-row node-count combine
-        "eb_shrinkage",        # broadcast 1-row pooled moment fit
-        "hurst_variance_plot",  # three 1-row level joins
-        "kendall_tau",         # cell-pair sweep over the <=100-cell frame
-        "kruskal_wallis",      # 1-row tie-term combine
-        "logrank_test",        # broadcast 1-row corpus-max censor boundary
-        "mann_kendall",        # bounded 31x31 day-pair sweep + 1-row combine
-        "pca_power_iter",      # 1-row cf x si combine
-        "ransac_trend",        # bounded 465x31 candidate sweep joins
-        "runs_test",           # 1-row combine
-        "sinkhorn_ot",         # 1-row corpus-max bin-boundary broadcast
-        "newman_modularity",   # 1-row edge-moment x 1-row degree-moment
-        "km_confidence",       # broadcast 1-row corpus-max censor boundary
-        "ledoit_wolf_shrinkage",  # si broadcast + 1-row moment combines
-        "ols_influence",       # broadcast 1-row moment fit x day frame
-        "pr_curve_ap",         # 1-row AP fold x best-F1 row combine
-        # bounded 1-row combines registered in BUDGETS with bnlj >= 1
-        # (sync-checked against test_plan_budgets by name):
-        "hits_scores",         # 1-row hub/auth norm broadcast per sweep
-        "burrows_delta",       # 1-row corpus-moment broadcast
-        "mood_median_test",    # 1-row grand-median broadcast
-        "ndcg_eval",           # 1-row ideal-DCG combine
-        "nelson_aalen",        # broadcast 1-row corpus-max censor boundary
-        "fleiss_kappa",        # 1-row item-agg x 1-row category-agg combine
-        "gpd_tail_fit",        # 1-row p90-threshold broadcast onto histogram
-        "rmst",                # broadcast 1-row corpus-max censor boundary
-        "zonemap_skipping",    # 1-row min/max fit + two 1-row layout aggs
-        "kupiec_pof",          # 1-row week-1 threshold fit broadcast
-        "weighted_logrank",    # broadcast 1-row corpus-max censor boundary
-        "median_survival_ci",  # broadcast 1-row corpus-max censor boundary
-    }
-    EAGER_CONSTRUCTION = {"near_dup_components", "kcenter_coreset"}
     sf = "/root/testdata/sf0.001"
     for name, fn in QUERIES.items():
         if name in EAGER_CONSTRUCTION:
@@ -199,28 +198,52 @@ def test_catalog_plan_inventory(spark):
             assert "BroadcastNestedLoopJoin" not in plan, name
 
 
+def _budgets() -> dict:
+    """tests/test_plan_budgets.py BUDGETS, read as a literal (no import of
+    a sibling test module)."""
+    import ast
+    import os
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    tree = ast.parse(open(os.path.join(here, "test_plan_budgets.py")).read())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and node.targets[0].id == "BUDGETS":
+            return ast.literal_eval(node.value)
+    raise AssertionError("BUDGETS not found")
+
+
 def test_bnlj_registry_synced_with_budgets():
     """Every BUDGETS entry in tests/test_plan_budgets.py that
     registers bnlj >= 1 must also appear in BNLJ_BY_DESIGN above
     (and vice versa is NOT required — budget-less queries may be
     registered here directly). Guards the drift that let
     hits_scores ship with a budgeted BNLJ but no registry row."""
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    bud = open(os.path.join(here, "test_plan_budgets.py")).read()
-    pl = open(os.path.join(here, "test_plans.py")).read()
-    entries = re.findall(
-        r'"([a-z0-9_]+)":\s*\{[^}]*"bnlj":\s*([0-9]+)', bud
-    )
-    need = sorted({n for n, b in entries if int(b) > 0})
-    reg = pl[
-        pl.index("BNLJ_BY_DESIGN = {") : pl.index(
-            "EAGER_CONSTRUCTION"
-        )
-    ]
-    missing = [n for n in need if f'"{n}"' not in reg]
+    need = {n for n, b in _budgets().items() if b.get("bnlj", 0) > 0}
+    missing = sorted(need - BNLJ_BY_DESIGN)
     assert not missing, (
         f"bnlj>0 budgets missing from BNLJ_BY_DESIGN: {missing}"
     )
+
+
+def test_catalog_registries_synced():
+    """One name set across the parallel registries: QUERIES, ORACLES and
+    the bench reference hold exactly the same names; plan budgets, the
+    BNLJ and eager-construction registries and
+    __spark_entry__._PRIORITY name only catalog entries."""
+    import json
+    import os
+
+    import __spark_entry__
+    from mpds_spark.queries import ORACLES, QUERIES
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH", "bench_reference.json")) as f:
+        ref = json.load(f)["queries"]
+    assert set(QUERIES) == set(ORACLES) == set(ref)
+    for name, reg in (
+        ("BUDGETS", set(_budgets())),
+        ("BNLJ_BY_DESIGN", BNLJ_BY_DESIGN),
+        ("EAGER_CONSTRUCTION", EAGER_CONSTRUCTION),
+        ("_PRIORITY", set(__spark_entry__._PRIORITY)),
+    ):
+        assert reg <= set(QUERIES), (name, sorted(reg - set(QUERIES)))

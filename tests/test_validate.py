@@ -4515,49 +4515,6 @@ def test_hellinger_rebuild(spark):
     assert r["arms_consistent"] == (hd < 0.1)
 
 
-def test_moran_geary_rebuild(spark):
-    """Moran I and Geary C vs literal python rebuilds on the circular
-    hour-of-day histogram, plus the exact-integer scaling identity
-    (z_h = n*y_h - S changes neither statistic) and the smooth-field
-    complementarity reading."""
-    from mpds_spark.queries import q_geary_c, q_moran_i
-
-    ri = q_moran_i(spark, "/root/testdata/sf0.001").collect()[0]
-    rc = q_geary_c(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY hour(ts) ORDER BY hour(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    m = sum(ys) / n
-    z = [y - m for y in ys]
-    den = sum(v * v for v in z)
-    num_i = sum(z[i] * z[(i + 1) % n] for i in range(n))
-    num_c = sum(
-        (z[i] - z[(i + 1) % n]) ** 2 for i in range(n)
-    )
-    mi = num_i / den
-    gc = (n - 1) * num_c / (2 * n * den)
-    assert ri["n_cells"] == n and rc["n_cells"] == n
-    assert abs(ri["moran_i"] - mi) < 1e-6
-    assert abs(ri["expected_i"] - (-1 / (n - 1))) < 1e-6
-    assert abs(rc["geary_c"] - gc) < 1e-6
-    assert rc["expected_c"] == 1.0
-    assert -1.1 <= ri["moran_i"] <= 1.1
-    assert rc["geary_c"] >= 0.0
-    # verdicts agree with the raw statistics
-    if mi > 0:
-        assert ri["verdict"] == "positive_autocorr"
-    if gc < 1:
-        assert rc["verdict"] == "positive_autocorr"
-
-
 def test_croston_rebuild(spark):
     """Croston/SBA vs a literal python rebuild of the size/interval
     SES recursions over the thresholded purchase series, plus the
@@ -5110,64 +5067,6 @@ def test_turning_difference_sign_rebuild(spark):
         assert rs["verdict"] == "downward_trend"
 
 
-def test_cox_stuart_bartels_rebuild(spark):
-    """Cox-Stuart sign counts and Bartels RVN vs literal python
-    rebuilds (midrank construction included), plus RVN in (0, 4)
-    and the Cox-Stuart pair bound m <= n div 2."""
-    from mpds_spark.queries import q_bartels_rank, q_cox_stuart
-
-    rc = q_cox_stuart(spark, "/root/testdata/sf0.001").collect()[0]
-    rb = q_bartels_rank(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    c = n // 2
-    sp = sum(1 for i in range(c) if ys[i + c] > ys[i])
-    m = sum(1 for i in range(c) if ys[i + c] != ys[i])
-    z = (2 * sp - m) / m ** 0.5
-    assert rc["n_days"] == n
-    assert rc["offset"] == c
-    assert rc["n_pairs"] == m
-    assert m <= c
-    assert rc["n_later_wins"] == sp
-    assert abs(rc["z_stat"] - z) < 1e-6
-    assert rc["reject_5pct"] == (abs(z) > 1.96)
-    # midranks
-    r = [
-        sum(1 for v in ys if v < y)
-        + (sum(1 for v in ys if v == y) + 1) / 2
-        for y in ys
-    ]
-    rbar = (n + 1) / 2
-    num = sum(
-        (r[t] - r[t + 1]) ** 2 for t in range(n - 1)
-    )
-    den = sum((x - rbar) ** 2 for x in r)
-    rvn = num / den
-    var = (
-        4 * (n - 2) * (5 * n * n - 2 * n - 9)
-        / (5 * n * (n + 1) * (n - 1) ** 2)
-    )
-    assert rb["n_days"] == n
-    assert abs(rb["rvn"] - rvn) < 1e-6
-    assert abs(rb["variance"] - var) < 1e-6
-    assert abs(rb["z_stat"] - (rvn - 2) / var ** 0.5) < 1e-6
-    assert 0.0 < rb["rvn"] < 4.0
-    assert rb["reject_5pct"] == (
-        abs((rvn - 2) / var ** 0.5) > 1.96
-    )
-
-
 def test_buishand_snht_rebuild(spark):
     """Buishand R/U and SNHT T0 vs literal python rebuilds of the
     classical definitions (cumulative deviations from the mean,
@@ -5218,459 +5117,6 @@ def test_buishand_snht_rebuild(spark):
     cpk = max(range(len(tks)), key=lambda k: (tks[k], -k))
     assert rs["cp_day"] == days[cpk]
     assert rs["reject_5pct"] == (t0 > 7.65)
-
-
-def test_jonckheere_hodges_rebuild(spark):
-    """Jonckheere-Terpstra J / tie-corrected variance and the
-    Hodges-Lehmann estimators vs literal python rebuilds (group-
-    keyed tie sums rebuilt the classical way, Walsh averages and
-    cross-half differences enumerated)."""
-    from mpds_spark.queries import (
-        q_hodges_lehmann,
-        q_jonckheere_terpstra,
-    )
-
-    rj = q_jonckheere_terpstra(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rh = q_hodges_lehmann(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-    from collections import Counter
-
-    rows = duckdb.sql(
-        "SELECT day(ts) AS d, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY d ORDER BY d"
-    ).fetchall()
-    days = [r[0] for r in rows]
-    ys = [r[1] for r in rows]
-    ws = [(d - 1) // 7 for d in days]
-    n = len(ys)
-    j = 0.0
-    for i in range(n):
-        for k in range(i + 1, n):
-            if ws[i] < ws[k]:
-                if ys[i] < ys[k]:
-                    j += 1.0
-                elif ys[i] == ys[k]:
-                    j += 0.5
-    ni = Counter(ws)
-    tj = Counter(ys)
-    sg = sum(v * v for v in ni.values())
-    e = (n * n - sg) / 4.0
-    a1 = sum(v * (v - 1) * (2 * v + 5) for v in ni.values())
-    b1 = sum(v * (v - 1) * (2 * v + 5) for v in tj.values())
-    a2 = sum(v * (v - 1) * (v - 2) for v in ni.values())
-    b2 = sum(v * (v - 1) * (v - 2) for v in tj.values())
-    a3 = sum(v * (v - 1) for v in ni.values())
-    b3 = sum(v * (v - 1) for v in tj.values())
-    var = (
-        (n * (n - 1) * (2 * n + 5) - a1 - b1) / 72.0
-        + a2 * b2 / (36.0 * n * (n - 1) * (n - 2))
-        + a3 * b3 / (8.0 * n * (n - 1))
-    )
-    z = (j - e) / var ** 0.5
-    assert rj["n_days"] == n
-    assert rj["n_groups"] == len(ni)
-    assert abs(rj["j_stat"] - j) < 1e-6
-    assert abs(rj["e_j"] - e) < 1e-6
-    assert abs(rj["var_j"] - var) < 1e-6
-    assert abs(rj["z_stat"] - z) < 1e-6
-    assert rj["reject_5pct"] == (abs(z) > 1.96)
-    # Hodges-Lehmann
-    import statistics
-
-    walsh = [
-        (ys[i] + ys[k]) / 2.0
-        for i in range(n)
-        for k in range(i, n)
-    ]
-    h = n // 2
-    diffs = [
-        ys[k] - ys[i] for i in range(h) for k in range(h, n)
-    ]
-    assert rh["n_days"] == n
-    assert rh["n_first_half"] == h
-    assert rh["n_second_half"] == n - h
-    assert abs(rh["pseudo_median"] - statistics.median(walsh)) < 1e-6
-    assert abs(rh["hl_shift"] - statistics.median(diffs)) < 1e-6
-
-
-def test_dm_pt_rebuild(spark):
-    """Diebold-Mariano (naive vs alpha=1/2 SES, HLN-corrected) and
-    Pesaran-Timmermann vs literal python rebuilds with a plain SES
-    recursion (no closed form) and explicit direction counts."""
-    from mpds_spark.queries import (
-        q_diebold_mariano,
-        q_pesaran_timmermann,
-    )
-
-    rd = q_diebold_mariano(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rp = q_pesaran_timmermann(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    s = float(ys[0])
-    ds = []
-    for t in range(1, n):
-        e1 = ys[t] - ys[t - 1]
-        e2 = ys[t] - s
-        ds.append(float(e1 * e1) - e2 * e2)
-        s = (ys[t] + s) / 2.0
-    m = n - 1
-    dbar = sum(ds) / m
-    g0 = sum((d - dbar) ** 2 for d in ds) / m
-    dm = dbar / (g0 / m) ** 0.5
-    hln = dm * ((m - 1) / m) ** 0.5
-    assert rd["n_days"] == n
-    assert rd["n_forecasts"] == m
-    assert abs(rd["mean_loss_diff"] - dbar) < max(1e-6, abs(dbar) * 1e-9)
-    assert abs(rd["dm_stat"] - dm) < 1e-6
-    assert abs(rd["hln_stat"] - hln) < 1e-6
-    assert rd["reject_5pct"] == (abs(hln) > 1.96)
-    # PT
-    mm = n - 2
-    acts = [1 if ys[t] > ys[t - 1] else 0 for t in range(2, n)]
-    preds = [1 if ys[t - 1] > ys[t - 2] else 0 for t in range(2, n)]
-    ph = sum(1 for a, p in zip(acts, preds) if a == p) / mm
-    py = sum(acts) / mm
-    px = sum(preds) / mm
-    ps = py * px + (1 - py) * (1 - px)
-    vh = ps * (1 - ps) / mm
-    vs = (
-        (2 * py - 1) ** 2 * px * (1 - px) / mm
-        + (2 * px - 1) ** 2 * py * (1 - py) / mm
-        + 4 * py * px * (1 - py) * (1 - px) / mm ** 2
-    )
-    pt = (ph - ps) / (vh - vs) ** 0.5
-    assert rp["n_days"] == n
-    assert rp["n_predictions"] == mm
-    assert abs(rp["hit_rate"] - ph) < 1e-6
-    assert abs(rp["p_star"] - ps) < 1e-6
-    assert abs(rp["pt_stat"] - pt) < 1e-6
-    assert rp["reject_5pct"] == (pt > 1.645)
-
-
-def test_fleiss_icc_rebuild(spark):
-    """Fleiss' kappa and ICC(2,1)/ICC(3,1) vs literal python
-    rebuilds from the raw event stream (per-item category counts
-    and the classical two-way ANOVA on float values)."""
-    from mpds_spark.queries import q_fleiss_kappa, q_icc_agreement
-
-    rf = q_fleiss_kappa(spark, "/root/testdata/sf0.001").collect()[0]
-    ri = q_icc_agreement(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-    from collections import Counter, defaultdict
-
-    rows = duckdb.sql(
-        "SELECT user_id, event_type, value FROM (SELECT *,"
-        " row_number() OVER (PARTITION BY user_id"
-        " ORDER BY ts, event_id) AS rn FROM"
-        " '/root/testdata/sf0.001/events.parquet') WHERE rn <= 6"
-        " ORDER BY user_id, rn"
-    ).fetchall()
-    per_user = defaultdict(list)
-    for u, t, v in rows:
-        per_user[u].append((t, v))
-    items = {u: r for u, r in per_user.items() if len(r) == 6}
-    n, R = len(items), 6
-    pis = []
-    marg = Counter()
-    for r in items.values():
-        c = Counter(t for t, _ in r)
-        marg.update(c)
-        pis.append(
-            (sum(v * v for v in c.values()) - R) / (R * (R - 1))
-        )
-    pbar = sum(pis) / n
-    pe = sum((v / (n * R)) ** 2 for v in marg.values())
-    kappa = (pbar - pe) / (1 - pe)
-    assert rf["n_items"] == n
-    assert abs(rf["p_bar"] - pbar) < 1e-6
-    assert abs(rf["p_e"] - pe) < 1e-6
-    assert abs(rf["kappa"] - kappa) < 1e-6
-    assert -1.0 <= rf["kappa"] <= 1.0
-    # ICC on the first-4 value matrix (cents-rounded like the query)
-    k = 4
-    mat = [
-        [round(v * 100) / 100.0 for _, v in r[:k]]
-        for r in per_user.values()
-        if len(r) >= k
-    ]
-    nu = len(mat)
-    t = sum(sum(r) for r in mat)
-    corr = t * t / (nu * k)
-    ssr = sum(sum(r) ** 2 for r in mat) / k - corr
-    ssc = (
-        sum(sum(mat[i][j] for i in range(nu)) ** 2 for j in range(k))
-        / nu
-        - corr
-    )
-    sst = sum(v * v for r in mat for v in r) - corr
-    sse = sst - ssr - ssc
-    msr, msc, mse = (
-        ssr / (nu - 1),
-        ssc / (k - 1),
-        sse / ((nu - 1) * (k - 1)),
-    )
-    icc21 = (msr - mse) / (
-        msr + (k - 1) * mse + k * (msc - mse) / nu
-    )
-    icc31 = (msr - mse) / (msr + (k - 1) * mse)
-    assert ri["n_users"] == nu
-    assert abs(ri["ms_rows"] - msr) < max(1e-5, abs(msr) * 1e-7)
-    assert abs(ri["ms_cols"] - msc) < max(1e-5, abs(msc) * 1e-7)
-    assert abs(ri["ms_error"] - mse) < max(1e-5, abs(mse) * 1e-7)
-    assert abs(ri["icc_2_1"] - icc21) < 1e-5
-    assert abs(ri["icc_3_1"] - icc31) < 1e-5
-
-
-def test_atkinson_gpd_rebuild(spark):
-    """Atkinson/Hoover and the GPD L-moment tail fit vs literal
-    python rebuilds on raw per-user counts / sorted excesses (no
-    histogram collapse — an independent construction), plus the
-    A(0.5) <= A(1) convexity ordering and Hoover in [0, 1)."""
-    from mpds_spark.queries import q_atkinson_hoover, q_gpd_tail_fit
-
-    ra = q_atkinson_hoover(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rg = q_gpd_tail_fit(spark, "/root/testdata/sf0.001").collect()[0]
-    import math
-
-    import duckdb
-
-    xs = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY user_id"
-        ).fetchall()
-    ]
-    n, s = len(xs), sum(xs)
-    mu = s / n
-    hoover = sum(abs(x - mu) for x in xs) / (2 * s)
-    a1 = 1 - math.exp(sum(math.log(x) for x in xs) / n) / mu
-    a05 = 1 - (sum(math.sqrt(x) for x in xs) / n) ** 2 / mu
-    assert ra["n_users"] == n
-    assert ra["total_events"] == s
-    assert abs(ra["hoover_index"] - hoover) < 1e-6
-    assert abs(ra["atkinson_05"] - a05) < 1e-6
-    assert abs(ra["atkinson_1"] - a1) < 1e-6
-    assert 0.0 <= ra["hoover_index"] < 1.0
-    assert ra["atkinson_05"] <= ra["atkinson_1"] + 1e-12
-    # GPD tail fit on sorted purchase cents
-    cs = sorted(
-        t[0]
-        for t in duckdb.sql(
-            "SELECT CAST(sign(value) * floor(abs(value) * 100 + 0.5)"
-            " AS BIGINT) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " WHERE event_type = 'purchase'"
-        ).fetchall()
-    )
-    np_ = len(cs)
-    r = -(-9 * np_ // 10)  # ceil(0.9 N)
-    thr = cs[r - 1]
-    exc = sorted(c - thr for c in cs if c > thr)
-    m = len(exc)
-    l1 = sum(exc) / m
-    b1 = sum(i * x for i, x in enumerate(exc)) / (m * (m - 1))
-    l2 = 2 * b1 - l1
-    k = l1 / l2 - 2
-    assert rg["n_purchases"] == np_
-    assert abs(rg["threshold_dollars"] - thr / 100.0) < 1e-9
-    assert rg["n_exceed"] == m
-    assert abs(rg["mean_excess_dollars"] - l1 / 100.0) < 1e-6
-    assert abs(rg["xi_hat"] - (-k)) < 1e-6
-    assert abs(rg["sigma_dollars"] - l1 * (1 + k) / 100.0) < 1e-5
-
-
-def test_getis_conover_rebuild(spark):
-    """Getis-Ord global G (PySAL-style B0..B4 randomization
-    variance rebuilt literally) and Conover squared-ranks vs python
-    rebuilds using plain float deviations and scipy-free midranks."""
-    from mpds_spark.queries import q_conover_scale, q_getis_ord_g
-
-    rg = q_getis_ord_g(spark, "/root/testdata/sf0.001").collect()[0]
-    rc = q_conover_scale(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY hour(ts) ORDER BY hour(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    num = 2 * sum(
-        ys[i] * ys[(i + 1) % n] for i in range(n)
-    )
-    m1 = sum(ys)
-    m2 = sum(v * v for v in ys)
-    m3 = sum(v ** 3 for v in ys)
-    m4 = sum(v ** 4 for v in ys)
-    den = m1 * m1 - m2
-    g = num / den
-    e = 2.0 / (n - 1)
-    w, s1, s2 = 2 * n, 4 * n, 16 * n
-    b0 = (n * n - 3 * n + 3) * s1 - n * s2 + 3 * w * w
-    b1 = -((n * n - n) * s1 - 2 * n * s2 + 6 * w * w)
-    b2 = -(2 * n * s1 - (n + 3) * s2 + 6 * w * w)
-    b3 = 4 * (n - 1) * s1 - 2 * (n + 1) * s2 + 8 * w * w
-    b4 = s1 - s2 + w * w
-    eg2 = (
-        b0 * m2 * m2 + b1 * m4 + b2 * m1 * m1 * m2
-        + b3 * m1 * m3 + b4 * m1 ** 4
-    ) / (den * den * n * (n - 1) * (n - 2) * (n - 3))
-    var = eg2 - e * e
-    z = (g - e) / var ** 0.5
-    assert rg["n_cells"] == n
-    assert abs(rg["g_stat"] - g) < 1e-6
-    assert abs(rg["e_g"] - e) < 1e-6
-    assert abs(rg["var_g"] - var) < 1e-6
-    assert abs(rg["z_stat"] - z) < 1e-5
-    assert rg["reject_5pct"] == (abs(z) > 1.96)
-    # Conover squared ranks, plain float rebuild
-    rows = duckdb.sql(
-        "SELECT CASE WHEN isodow(date_trunc('day', ts)) >= 6"
-        " THEN 1 ELSE 0 END AS we, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-    ).fetchall()
-    g1v = [y for w_, y in rows if w_ == 1]
-    g2v = [y for w_, y in rows if w_ == 0]
-    mu1, mu2 = sum(g1v) / len(g1v), sum(g2v) / len(g2v)
-    us = [(abs(y - mu1), 1) for y in g1v] + [
-        (abs(y - mu2), 0) for y in g2v
-    ]
-    nn = len(us)
-    # midranks the simple way
-    vals = sorted(u for u, _ in us)
-    def midrank(u):
-        lt = sum(1 for v in vals if v < u)
-        eq = sum(1 for v in vals if v == u)
-        return lt + (eq + 1) / 2.0
-    t = sum(midrank(u) ** 2 for u, w_ in us if w_ == 1)
-    q2 = sum(midrank(u) ** 2 for u, _ in us)
-    q4 = sum(midrank(u) ** 4 for u, _ in us)
-    n1, n2 = len(g1v), len(g2v)
-    et = n1 * q2 / nn
-    vt = n1 * n2 / (nn * (nn - 1)) * (q4 - q2 * q2 / nn)
-    z = (t - et) / vt ** 0.5
-    assert rc["n_days"] == nn
-    assert rc["n_weekend"] == n1
-    assert rc["n_weekday"] == n2
-    assert abs(rc["t_stat"] - t) < 1e-6
-    assert abs(rc["e_t"] - et) < 1e-6
-    assert abs(rc["var_t"] - vt) < 1e-6
-    assert abs(rc["z_stat"] - z) < 1e-6
-    assert rc["reject_5pct"] == (abs(z) > 1.96)
-
-
-def test_rmst_quade_rebuild(spark):
-    """RMST vs a literal trapezoid-free step-function integral over
-    an independently rebuilt KM curve, and the Quade statistic vs
-    the classical construction with float midranks and unscaled
-    S_ij = Q_i (r_ij - 4)."""
-    from mpds_spark.queries import q_quade_test, q_rmst
-
-    rr = q_rmst(spark, "/root/testdata/sf0.001").collect()[0]
-    rq = q_quade_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    spans = duckdb.sql(
-        "SELECT CAST((max(epoch_us(ts)) - min(epoch_us(ts)))"
-        " // 3600000000 AS BIGINT) AS b,"
-        " CASE WHEN max(epoch_us(ts)) <= (SELECT max(epoch_us(ts))"
-        " FROM '/root/testdata/sf0.001/events.parquet')"
-        " - 604800000000 THEN 1 ELSE 0 END AS obs"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY user_id"
-    ).fetchall()
-    from collections import defaultdict
-
-    ev = defaultdict(lambda: [0, 0])
-    for b, o in spans:
-        ev[b][0] += o
-        ev[b][1] += 1 - o
-    bins = sorted(ev)
-    at_risk = len(spans)
-    surv, s = [], 1.0
-    for b in bins:
-        d, c = ev[b]
-        if d == at_risk:
-            s = 0.0
-        else:
-            s *= (at_risk - d) / at_risk
-        surv.append((b, s))
-        at_risk -= d + c
-
-    def rmst(tau):
-        total = min(surv[0][0], tau)
-        for k, (b, sk) in enumerate(surv):
-            nxt = surv[k + 1][0] if k + 1 < len(surv) else tau
-            total += sk * (min(nxt, tau) - min(b, tau))
-        return total / 24.0
-
-    assert rr["n_bins"] == len(bins)
-    assert abs(rr["rmst_7d_days"] - rmst(168)) < 1e-5
-    assert abs(rr["rmst_14d_days"] - rmst(336)) < 1e-5
-    assert rr["rmst_7d_days"] <= rr["rmst_14d_days"] + 1e-9
-    assert 0.0 <= rr["restricted_frac_7d"] <= 1.0
-    # Quade classical rebuild
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " WHERE day(ts) <= 28 GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    assert len(ys) == 28
-    blocks = [ys[7 * b : 7 * b + 7] for b in range(4)]
-
-    def midranks(vals):
-        return [
-            sum(1 for v in vals if v < x)
-            + (sum(1 for v in vals if v == x) + 1) / 2.0
-            for x in vals
-        ]
-
-    rij = [midranks(b) for b in blocks]
-    rngs = [max(b) - min(b) for b in blocks]
-    q = midranks(rngs)
-    sij = [
-        [q[i] * (rij[i][j] - 4.0) for j in range(7)]
-        for i in range(4)
-    ]
-    a = sum(v * v for row in sij for v in row)
-    sj = [sum(sij[i][j] for i in range(4)) for j in range(7)]
-    b_ = sum(v * v for v in sj) / 4.0
-    f = 3.0 * b_ / (a - b_)
-    assert abs(rq["f_stat"] - f) < 1e-6
-    assert rq["reject_5pct"] == (f > 2.661)
 
 
 def test_honore_spiegelhalter_rebuild(spark):
@@ -5739,177 +5185,6 @@ def test_honore_spiegelhalter_rebuild(spark):
     assert rs["n_docs"] == len(rows)
     assert abs(rs["z_stat"] - z) < 1e-5
     assert rs["reject_5pct"] == (abs(z) > 1.96)
-
-
-def test_ad2s_rle_rebuild(spark):
-    """Scholz-Stephens A2akN vs a literal float transcription of
-    JASA 1987 eq. 6 + the a/b/c/d variance polynomial (independent
-    of the engine's exact-long scaling), and the RLE audit vs a
-    straight python run count."""
-    from mpds_spark.queries import (
-        q_anderson_darling_2s,
-        q_rle_compressibility,
-    )
-
-    ra = q_anderson_darling_2s(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rl = q_rle_compressibility(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CASE WHEN isodow(date_trunc('day', ts)) >= 6"
-        " THEN 1 ELSE 0 END AS we, count(*) AS y FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-    ).fetchall()
-    samples = [
-        [y for w, y in rows if w == 1],
-        [y for w, y in rows if w == 0],
-    ]
-    pooled = sorted(y for _, y in rows)
-    n = len(pooled)
-    k = 2
-    zs = sorted(set(pooled))
-    a2 = 0.0
-    for i, sample in enumerate(samples):
-        ni = len(sample)
-        inner = 0.0
-        for z in zs:
-            lj = pooled.count(z)
-            fij = sample.count(z)
-            cj = sum(1 for v in pooled if v <= z)
-            fcum = sum(1 for v in sample if v <= z)
-            ba = cj - lj / 2.0
-            ma = fcum - fij / 2.0
-            den = ba * (n - ba) - n * lj / 4.0
-            inner += (lj / n) * (n * ma - ni * ba) ** 2 / den
-        a2 += inner / ni
-    a2 *= (n - 1) / n
-    h = sum(1.0 / i for i in range(1, n))
-    g = sum(
-        1.0 / ((n - i) * j)
-        for i in range(1, n - 1)
-        for j in range(i + 1, n)
-    )
-    hh = sum(1.0 / len(s) for s in samples)
-    av = (4 * g - 6) * (k - 1) + (10 - 6 * g) * hh
-    bv = (
-        (2 * g - 4) * k * k + 8 * h * k
-        + (2 * g - 14 * h - 4) * hh - 8 * h + 4 * g - 6
-    )
-    cv = (
-        (6 * h + 2 * g - 2) * k * k + (4 * h - 4 * g + 6) * k
-        + (2 * h - 6) * hh + 4 * h
-    )
-    dv = (2 * h + 6) * k * k - 4 * h * k
-    var = (av * n ** 3 + bv * n * n + cv * n + dv) / (
-        (n - 1) * (n - 2) * (n - 3)
-    )
-    t = (a2 - (k - 1)) / var ** 0.5
-    assert ra["n_days"] == n
-    assert abs(ra["a2_stat"] - a2) < 1e-6
-    assert abs(ra["sigma"] - var ** 0.5) < 1e-6
-    assert abs(ra["t_stat"] - t) < 1e-5
-    assert ra["reject_5pct"] == (t > 1.960)
-    # RLE rebuild
-    ev = duckdb.sql(
-        "SELECT user_id, event_type FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " ORDER BY user_id, ts, event_id"
-    ).fetchall()
-    from collections import defaultdict
-
-    seqs = defaultdict(list)
-    for u, t_ in ev:
-        seqs[u].append(t_)
-    runs = sum(
-        1 + sum(1 for a, b in zip(s, s[1:]) if a != b)
-        for s in seqs.values()
-    )
-    dist = sum(len(set(s)) for s in seqs.values())
-    assert rl["n_users"] == len(seqs)
-    assert rl["n_rows"] == len(ev)
-    assert rl["runs_timeorder"] == runs
-    assert rl["runs_sorted"] == dist
-    assert rl["runs_sorted"] <= rl["runs_timeorder"]
-    assert abs(rl["sort_benefit"] - runs / dist) < 1e-6
-
-
-def test_bm_cucconi_rebuild(spark):
-    """Brunner-Munzel vs the lawstat-style float construction
-    (plain midranks, no integer clearing) and Cucconi vs the
-    Marozzi 2009 float formulas."""
-    from mpds_spark.queries import q_brunner_munzel, q_cucconi_test
-
-    rb = q_brunner_munzel(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rc = q_cucconi_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CASE WHEN isodow(date_trunc('day', ts)) >= 6"
-        " THEN 1 ELSE 0 END AS we, count(*) AS y FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-    ).fetchall()
-    x = [y for w, y in rows if w == 1]  # weekend
-    yv = [y for w, y in rows if w == 0]  # weekday
-    n1, n2 = len(x), len(yv)
-    nn = n1 + n2
-    pooled = x + yv
-
-    def midrank(vals, v):
-        return sum(1 for u in vals if u < v) + (
-            sum(1 for u in vals if u == v) + 1
-        ) / 2.0
-
-    r1 = [midrank(pooled, v) for v in x]
-    r2 = [midrank(pooled, v) for v in yv]
-    ri1 = [midrank(x, v) for v in x]
-    ri2 = [midrank(yv, v) for v in yv]
-    r1m, r2m = sum(r1) / n1, sum(r2) / n2
-    v1 = sum(
-        (r1[i] - ri1[i] - r1m + (n1 + 1) / 2.0) ** 2
-        for i in range(n1)
-    ) / (n1 - 1)
-    v2 = sum(
-        (r2[i] - ri2[i] - r2m + (n2 + 1) / 2.0) ** 2
-        for i in range(n2)
-    ) / (n2 - 1)
-    stat = (
-        n1 * n2 * (r2m - r1m)
-        / (nn * (n1 * v1 + n2 * v2) ** 0.5)
-    )
-    df = (n1 * v1 + n2 * v2) ** 2 / (
-        (n1 * v1) ** 2 / (n1 - 1) + (n2 * v2) ** 2 / (n2 - 1)
-    )
-    phat = (r2m - (n2 + 1) / 2.0) / n1
-    assert rb["n_weekend"] == n1
-    assert rb["n_weekday"] == n2
-    assert abs(rb["p_weekday_busier"] - phat) < 1e-6
-    assert abs(rb["bm_stat"] - stat) < 1e-6
-    assert abs(rb["df_welch"] - df) < 1e-4
-    assert rb["reject_5pct"] == (abs(stat) > 1.96)
-    # Cucconi on weekend ranks
-    sr2 = sum(midrank(pooled, v) ** 2 for v in x)
-    sc2 = sum((nn + 1 - midrank(pooled, v)) ** 2 for v in x)
-    den = (
-        n1 * n2 * (nn + 1) * (2 * nn + 1) * (8 * nn + 11) / 5.0
-    ) ** 0.5
-    u = (6 * sr2 - n1 * (nn + 1) * (2 * nn + 1)) / den
-    v = (6 * sc2 - n1 * (nn + 1) * (2 * nn + 1)) / den
-    rho = 2.0 * (nn * nn - 4) / ((2 * nn + 1) * (8 * nn + 11)) - 1
-    c = (u * u + v * v - 2 * rho * u * v) / (2 * (1 - rho * rho))
-    assert abs(rc["u_stat"] - u) < 1e-6
-    assert abs(rc["v_stat"] - v) < 1e-6
-    assert abs(rc["rho"] - rho) < 1e-6
-    assert abs(rc["c_stat"] - c) < 1e-6
-    assert rc["c_stat"] >= 0.0
-    assert rc["reject_5pct"] == (c > 2.995732)
 
 
 def test_zeroinfl_laplace_rebuild(spark):
@@ -6055,168 +5330,6 @@ def test_zonemap_cdc_rebuild(spark):
         ) < 1e-6
 
 
-def test_seasonal_kendall_partial_corr_rebuild(spark):
-    """Hirsch-Slack seasonal Kendall vs a per-season literal MK
-    rebuild (independent tie handling via Counter), and the
-    partial correlation vs numpy-free float Pearson algebra."""
-    from mpds_spark.queries import (
-        q_partial_correlation,
-        q_seasonal_kendall,
-    )
-
-    rs = q_seasonal_kendall(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rp = q_partial_correlation(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-    from collections import Counter, defaultdict
-
-    rows = duckdb.sql(
-        "SELECT isodow(date_trunc('day', ts)) AS g, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-        " ORDER BY date_trunc('day', ts)"
-    ).fetchall()
-    seasons = defaultdict(list)
-    for g, y in rows:
-        seasons[g].append(y)
-    s_tot, var_tot = 0, 0.0
-    for ys in seasons.values():
-        n = len(ys)
-        s_tot += sum(
-            (ys[j] > ys[i]) - (ys[j] < ys[i])
-            for i in range(n)
-            for j in range(i + 1, n)
-        )
-        ties = Counter(ys)
-        var_tot += (
-            n * (n - 1) * (2 * n + 5)
-            - sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
-        ) / 18.0
-    z = (s_tot - (1 if s_tot > 0 else -1 if s_tot < 0 else 0)) / (
-        var_tot ** 0.5
-    )
-    assert rs["n_days"] == len(rows)
-    assert rs["s_stat"] == s_tot
-    assert abs(rs["var_s"] - var_tot) < 1e-6
-    assert abs(rs["z_stat"] - z) < 1e-6
-    assert rs["reject_5pct"] == (abs(z) > 1.96)
-    # partial correlation rebuild
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*), sum(CASE WHEN"
-        " event_type = 'purchase' THEN 1 ELSE 0 END) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts)"
-    ).fetchall()
-    zs = [float(r[0]) for r in rows]
-    xs = [float(r[1]) for r in rows]
-    ys = [float(r[2]) for r in rows]
-    n = len(rows)
-
-    def pearson(a, b):
-        ma, mb = sum(a) / n, sum(b) / n
-        num = sum((u - ma) * (v - mb) for u, v in zip(a, b))
-        da = sum((u - ma) ** 2 for u in a) ** 0.5
-        db = sum((v - mb) ** 2 for v in b) ** 0.5
-        return num / (da * db)
-
-    rxy = pearson(xs, ys)
-    rxz = pearson(xs, zs)
-    ryz = pearson(ys, zs)
-    rpart = (rxy - rxz * ryz) / (
-        (1 - rxz * rxz) * (1 - ryz * ryz)
-    ) ** 0.5
-    t = rpart * ((n - 3) / (1 - rpart * rpart)) ** 0.5
-    assert rp["n_days"] == n
-    assert abs(rp["r_raw"] - rxy) < 1e-6
-    assert abs(rp["r_partial"] - rpart) < 1e-6
-    assert abs(rp["t_stat"] - t) < 1e-5
-    assert -1.0 <= rp["r_partial"] <= 1.0
-    assert rp["reject_5pct"] == (abs(t) > 1.96)
-
-
-def test_siegel_seasonal_sen_rebuild(spark):
-    """Siegel repeated median and the seasonal Sen slope vs
-    statistics.median over literally enumerated slope sets, plus a
-    planted-outlier robustness check of the repeated median."""
-    from mpds_spark.queries import (
-        q_seasonal_sen_slope,
-        q_siegel_slopes,
-    )
-
-    rs = q_siegel_slopes(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rn = q_seasonal_sen_slope(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import statistics
-
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    days = [r[0] for r in rows]
-    ys = [r[1] for r in rows]
-    n = len(ys)
-    meds = [
-        statistics.median(
-            (ys[j] - ys[i]) / (days[j] - days[i])
-            for j in range(n)
-            if j != i
-        )
-        for i in range(n)
-    ]
-    siegel = statistics.median(meds)
-    ts = statistics.median(
-        (ys[j] - ys[i]) / (days[j] - days[i])
-        for i in range(n)
-        for j in range(i + 1, n)
-    )
-    assert rs["n_days"] == n
-    assert abs(rs["siegel_slope"] - siegel) < 1e-6
-    assert abs(rs["theil_sen_slope"] - ts) < 1e-6
-    # repeated median shrugs off a wild day: replace the last day
-    # with 100x its volume and check the python siegel moves little
-    ys2 = ys[:-1] + [ys[-1] * 100]
-    meds2 = [
-        statistics.median(
-            (ys2[j] - ys2[i]) / (days[j] - days[i])
-            for j in range(n)
-            if j != i
-        )
-        for i in range(n)
-    ]
-    siegel2 = statistics.median(meds2)
-    spread = max(ys) - min(ys)
-    assert abs(siegel2 - siegel) < spread  # bounded influence
-    # seasonal Sen rebuild
-    rows = duckdb.sql(
-        "SELECT CAST(date_diff('day', DATE '2024-01-01',"
-        " CAST(date_trunc('day', ts) AS DATE)) AS BIGINT),"
-        " isodow(date_trunc('day', ts)), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-        " ORDER BY 1"
-    ).fetchall()
-    slopes = [
-        (rows[j][2] - rows[i][2]) / (rows[j][0] - rows[i][0])
-        for i in range(len(rows))
-        for j in range(i + 1, len(rows))
-        if rows[j][1] == rows[i][1]
-    ]
-    assert rn["n_days"] == len(rows)
-    assert rn["n_pairs"] == len(slopes)
-    assert abs(
-        rn["seasonal_sen_slope"] - statistics.median(slopes)
-    ) < 1e-6
-
-
 def test_dl_poisson_rate_rebuild(spark):
     """DerSimonian-Laird pooling vs a literal metafor-style float
     rebuild (statistics.mean/variance per stratum) and the
@@ -6303,209 +5416,6 @@ def test_dl_poisson_rate_rebuild(spark):
     assert rp["reject_5pct"] == (abs(z) > 1.96)
 
 
-def test_pwmk_kupiec_rebuild(spark):
-    """TFPW Mann-Kendall vs a literal float rebuild (numpy-free
-    r1, prewhitening and tie-corrected MK) and the Kupiec POF LR
-    vs the textbook binomial likelihood ratio."""
-    from mpds_spark.queries import q_kupiec_pof, q_prewhitened_mk
-
-    rm = q_prewhitened_mk(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rk = q_kupiec_pof(spark, "/root/testdata/sf0.001").collect()[0]
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    ybar = sum(ys) / n
-    r1 = sum(
-        (ys[t] - ybar) * (ys[t - 1] - ybar) for t in range(1, n)
-    ) / sum((y - ybar) ** 2 for y in ys)
-    yp = [ys[t] - r1 * ys[t - 1] for t in range(1, n)]
-
-    def mk(vals):
-        m = len(vals)
-        s = sum(
-            (vals[j] > vals[i]) - (vals[j] < vals[i])
-            for i in range(m)
-            for j in range(i + 1, m)
-        )
-        ties = Counter(vals)
-        var = (
-            m * (m - 1) * (2 * m + 5)
-            - sum(
-                t * (t - 1) * (2 * t + 5) for t in ties.values()
-            )
-        ) / 18.0
-        z = (s - (1 if s > 0 else -1 if s < 0 else 0)) / var ** 0.5
-        return s, z
-
-    sr, zr = mk(ys)
-    sp, zp = mk(yp)
-    assert rm["n_days"] == n
-    assert abs(rm["lag1_autocorr"] - r1) < 1e-6
-    assert rm["s_raw"] == sr
-    assert abs(rm["z_raw"] - zr) < 1e-6
-    assert rm["s_prewhitened"] == sp
-    assert abs(rm["z_prewhitened"] - zp) < 1e-6
-    assert rm["reject_5pct"] == (abs(zp) > 1.96)
-    # Kupiec rebuild
-    cs = [
-        (d, round(v * 100))
-        for d, v in duckdb.sql(
-            "SELECT day(ts), value FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " WHERE event_type = 'purchase'"
-        ).fetchall()
-    ]
-    ins = sorted(c for d, c in cs if d <= 7)
-    thr = ins[-(-19 * len(ins) // 20) - 1]
-    oos = [c for d, c in cs if d > 7]
-    nn, x = len(oos), sum(1 for c in oos if c > thr)
-    p = 0.05
-    lr = -2 * (
-        (nn - x) * math.log(1 - p)
-        + x * math.log(p)
-        - ((nn - x) * math.log(1 - x / nn) if x < nn else 0.0)
-        - (x * math.log(x / nn) if x > 0 else 0.0)
-    )
-    assert abs(rk["threshold_dollars"] - thr / 100.0) < 1e-9
-    assert rk["m_insample"] == len(ins)
-    assert rk["n_oos"] == nn
-    assert rk["x_exceed"] == x
-    assert abs(rk["lr_pof"] - lr) < 1e-5
-    assert rk["lr_pof"] >= 0.0
-    assert rk["reject_5pct"] == (lr > 3.841459)
-
-
-def test_chow_hlci_rebuild(spark):
-    """Chow F vs three literal float OLS fits and the Moses CI vs
-    a sorted-difference rebuild with the same k formula."""
-    from mpds_spark.queries import q_chow_test, q_hodges_lehmann_ci
-
-    rc = q_chow_test(spark, "/root/testdata/sf0.001").collect()[0]
-    rh = q_hodges_lehmann_ci(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import math
-
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-
-    def sse(pts):
-        nn = len(pts)
-        mx = sum(x for x, _ in pts) / nn
-        my = sum(y for _, y in pts) / nn
-        sxx = sum((x - mx) ** 2 for x, _ in pts)
-        sxy = sum((x - mx) * (y - my) for x, y in pts)
-        syy = sum((y - my) ** 2 for _, y in pts)
-        return syy - sxy * sxy / sxx
-
-    n = len(rows)
-    ssep = sse(rows)
-    s1 = sse([r for r in rows if r[0] <= 15])
-    s2 = sse([r for r in rows if r[0] > 15])
-    f = ((ssep - s1 - s2) / 2.0) / ((s1 + s2) / (n - 4))
-    assert rc["n_days"] == n
-    assert abs(rc["sse_pooled"] - ssep) < max(1e-4, ssep * 1e-9)
-    assert abs(rc["sse_split"] - (s1 + s2)) < max(
-        1e-4, (s1 + s2) * 1e-9
-    )
-    assert abs(rc["f_stat"] - f) < 1e-5
-    assert rc["reject_5pct"] == (f > 3.354)
-    # Moses CI rebuild
-    ys = [y for _, y in rows]
-    h = n // 2
-    diffs = sorted(
-        ys[j] - ys[i] for i in range(h) for j in range(h, n)
-    )
-    npair = len(diffs)
-    k = math.floor(
-        npair / 2.0 - 1.96 * math.sqrt(npair * (n + 1) / 12.0)
-    )
-    assert rh["n_pairs"] == npair
-    assert rh["k_rank"] == k
-    assert rh["ci_lo"] == diffs[k - 1]
-    assert rh["ci_hi"] == diffs[npair - k]
-    assert rh["ci_lo"] <= rh["hl_shift"] <= rh["ci_hi"]
-    assert rh["excludes_zero"] == (
-        rh["ci_lo"] > 0 or rh["ci_hi"] < 0
-    )
-
-
-def test_mcc_pinball_rebuild(spark):
-    """MCC/F1 vs sklearn-free cell arithmetic and the pinball loss
-    vs a float expanding-quantile rebuild."""
-    from mpds_spark.queries import q_mcc_confusion, q_pinball_loss
-
-    rm = q_mcc_confusion(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rp = q_pinball_loss(spark, "/root/testdata/sf0.001").collect()[0]
-    import math
-
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END,"
-        " CASE WHEN len(regexp_split_to_array(trim(text),"
-        " '\\s+')) >= 50 THEN 1 ELSE 0 END FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    tp = sum(1 for p, y in rows if p and y)
-    fp = sum(1 for p, y in rows if p and not y)
-    fn = sum(1 for p, y in rows if not p and y)
-    tn = sum(1 for p, y in rows if not p and not y)
-    mcc = (tp * tn - fp * fn) / math.sqrt(
-        (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)
-    )
-    assert (rm["tp"], rm["fp"], rm["fn"], rm["tn"]) == (
-        tp, fp, fn, tn,
-    )
-    assert abs(rm["mcc"] - mcc) < 1e-6
-    assert -1.0 <= rm["mcc"] <= 1.0
-    assert abs(
-        rm["f1"] - 2 * tp / (2 * tp + fp + fn)
-    ) < 1e-6
-    # pinball rebuild
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    tot, cov = 0.0, 0
-    for t in range(7, n):
-        hist = sorted(ys[:t])
-        f = hist[-(-9 * t // 10) - 1]
-        y = ys[t]
-        tot += 0.9 * (y - f) if y >= f else 0.1 * (f - y)
-        cov += 1 if y <= f else 0
-    m = n - 7
-    assert rp["n_forecasts"] == m
-    assert abs(rp["mean_pinball_09"] - tot / m) < 1e-6
-    assert abs(rp["coverage"] - cov / m) < 1e-6
-    assert 0.0 <= rp["coverage"] <= 1.0
-
-
 def test_deviance_collision_rebuild(spark):
     """Poisson deviance vs a literal float fold and the birthday
     audit vs hashlib-truncated slot counting with the closed-form
@@ -6568,69 +5478,6 @@ def test_deviance_collision_rebuild(spark):
         rh["collision_ratio"]
         - (nn - len(slots)) / (nn - ed)
     ) < 1e-4
-
-
-def test_ewma_we_rules_rebuild(spark):
-    """EWMA chart vs a python recursion with steady-state limits,
-    and the Western Electric rule counts vs literal window sweeps."""
-    from mpds_spark.queries import (
-        q_ewma_control_chart,
-        q_western_electric_rules,
-    )
-
-    re_ = q_ewma_control_chart(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rw = q_western_electric_rules(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import math
-
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    days = [d for d, _ in rows]
-    ys = [y for _, y in rows]
-    n = len(ys)
-    mu = sum(ys) / n
-    sig = math.sqrt(sum((y - mu) ** 2 for y in ys) / n)
-    hw = 3 * sig * math.sqrt(0.2 / 1.8)
-    z, sigs, first = mu, 0, None
-    for d, y in rows:
-        z = 0.2 * y + 0.8 * z
-        if z > mu + hw or z < mu - hw:
-            sigs += 1
-            if first is None:
-                first = d
-    assert re_["n_days"] == n
-    assert abs(re_["center_line"] - mu) < 1e-6
-    assert abs(re_["ucl"] - (mu + hw)) < 1e-6
-    assert abs(re_["lcl"] - (mu - hw)) < 1e-6
-    assert abs(re_["final_ewma"] - z) < 1e-6
-    assert re_["n_signals"] == sigs
-    assert re_["first_signal_day"] == first
-    # WE rules rebuild
-    zs = [(y - mu) / sig for y in ys]
-    r1 = sum(1 for v in zs if abs(v) > 3)
-    def rule(width, th, need):
-        c = 0
-        for t in range(width - 1, n):
-            w = zs[t - width + 1 : t + 1]
-            if (
-                sum(1 for v in w if v > th) >= need
-                or sum(1 for v in w if v < -th) >= need
-            ):
-                c += 1
-        return c
-
-    assert rw["rule1_beyond_3sigma"] == r1
-    assert rw["rule2_2of3_beyond_2sigma"] == rule(3, 2.0, 2)
-    assert rw["rule3_4of5_beyond_1sigma"] == rule(5, 1.0, 4)
-    assert rw["rule4_8_same_side"] == rule(8, 0.0, 8)
 
 
 def test_lz_flatness_rebuild(spark):
@@ -6704,414 +5551,6 @@ def test_lz_flatness_rebuild(spark):
     assert 0.0 < rf["spectral_flatness"] <= 1.0 + 1e-9
 
 
-def test_readability_powerlaw_rebuild(spark):
-    """Flesch/fog vs a literal python syllable counter and the CSN
-    alpha vs the closed-form MLE on raw counts."""
-    import math
-    import re as re_mod
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_powerlaw_mle,
-        q_readability_scores,
-    )
-
-    rr = {
-        r["source"]: r
-        for r in q_readability_scores(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    rp = q_powerlaw_mle(spark, "/root/testdata/sf0.001").collect()[0]
-    docs = duckdb.sql(
-        "SELECT source, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    agg = {}
-    for src_, text in docs:
-        a = agg.setdefault(src_, [0, 0, 0, 0, 0])
-        a[0] += 1
-        a[1] += max(1, sum(text.count(ch) for ch in ".!?"))
-        for w in text.strip().split():
-            syl = max(
-                1, len(re_mod.findall(r"[aeiouy]+", w.lower()))
-            )
-            a[2] += 1
-            a[3] += syl
-            a[4] += 1 if syl >= 3 else 0
-    for src_, (nd, sent, wc, syls, cpx) in agg.items():
-        r = rr[src_]
-        assert r["n_docs"] == nd
-        assert r["n_sentences"] == sent
-        assert r["n_words"] == wc
-        assert r["n_syllables"] == syls
-        assert r["n_complex_words"] == cpx
-        flesch = 206.835 - 1.015 * (wc / sent) - 84.6 * (syls / wc)
-        fog = 0.4 * ((wc / sent) + 100.0 * (cpx / wc))
-        assert abs(r["flesch_ease"] - flesch) < 1e-5
-        assert abs(r["gunning_fog"] - fog) < 1e-5
-    # power-law rebuild
-    xs = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY user_id"
-        ).fetchall()
-    ]
-    tail = [x for x in xs if x >= 5]
-    alpha = 1 + len(tail) / sum(math.log(x / 4.5) for x in tail)
-    assert rp["n_users"] == len(xs)
-    assert rp["n_tail"] == len(tail)
-    assert abs(rp["alpha_hat"] - alpha) < 1e-6
-    assert rp["alpha_hat"] > 1.0
-    assert abs(
-        rp["alpha_se"] - (alpha - 1) / math.sqrt(len(tail))
-    ) < 1e-6
-
-
-def test_dagostino_medcouple_rebuild(spark):
-    """K^2 vs a literal float transcription of the 1990 Am. Stat.
-    recipe and the medcouple vs a brute-force kernel median with
-    the same no-tie variant."""
-    import math
-    import statistics
-
-    import duckdb
-
-    from mpds_spark.queries import q_dagostino_k2, q_medcouple
-
-    rd = q_dagostino_k2(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rm = q_medcouple(spark, "/root/testdata/sf0.001").collect()[0]
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    mu = sum(ys) / n
-    m2 = sum((y - mu) ** 2 for y in ys) / n
-    m3 = sum((y - mu) ** 3 for y in ys) / n
-    m4 = sum((y - mu) ** 4 for y in ys) / n
-    g1 = m3 / m2 ** 1.5
-    b2 = m4 / m2 ** 2
-    yy = g1 * math.sqrt((n + 1) * (n + 3) / (6.0 * (n - 2)))
-    beta2 = (
-        3.0 * (n * n + 27 * n - 70) * (n + 1) * (n + 3)
-        / ((n - 2) * (n + 5) * (n + 7) * (n + 9))
-    )
-    w2 = math.sqrt(2 * (beta2 - 1)) - 1
-    delta = 1 / math.sqrt(math.log(math.sqrt(w2)))
-    alpha = math.sqrt(2 / (w2 - 1))
-    z1 = delta * math.log(
-        yy / alpha + math.sqrt((yy / alpha) ** 2 + 1)
-    )
-    x = (b2 - 3.0 * (n - 1) / (n + 1)) / math.sqrt(
-        24.0 * n * (n - 2) * (n - 3)
-        / ((n + 1) ** 2 * (n + 3) * (n + 5))
-    )
-    sqb = (
-        6.0 * (n * n - 5 * n + 2) / ((n + 7) * (n + 9))
-        * math.sqrt(
-            6.0 * (n + 3) * (n + 5) / (n * (n - 2) * (n - 3))
-        )
-    )
-    aa = 6 + 8 / sqb * (2 / sqb + math.sqrt(1 + 4 / sqb ** 2))
-    z2 = (
-        (1 - 2 / (9 * aa))
-        - ((1 - 2 / aa) / (1 + x * math.sqrt(2 / (aa - 2))))
-        ** (1 / 3)
-    ) / math.sqrt(2 / (9 * aa))
-    k2 = z1 * z1 + z2 * z2
-    assert rd["n_days"] == n
-    assert abs(rd["skew_g1"] - g1) < 1e-6
-    assert abs(rd["kurtosis_b2"] - b2) < 1e-6
-    assert abs(rd["z_skew"] - z1) < 1e-5
-    assert abs(rd["z_kurtosis"] - z2) < 1e-5
-    assert abs(rd["k2_stat"] - k2) < 1e-4
-    assert rd["reject_5pct"] == (k2 > 5.991465)
-    # medcouple rebuild
-    med = statistics.median(ys)
-    hs = [
-        ((xi + xj) - 2 * med) / (xi - xj)
-        for xi in ys
-        for xj in ys
-        if xi > med and xj < med and xi != xj
-    ]
-    mc = statistics.median(hs)
-    assert abs(rm["medcouple"] - mc) < 1e-6
-    assert -1.0 <= rm["medcouple"] <= 1.0
-    sv = sorted(ys)
-    q1 = sv[-(-n // 4) - 1]
-    q3 = sv[-(-3 * n // 4) - 1]
-    assert rm["q1"] == q1 and rm["q3"] == q3
-    iqr = q3 - q1
-    if mc >= 0:
-        lo = q1 - 1.5 * math.exp(-4 * mc) * iqr
-        hi = q3 + 1.5 * math.exp(3 * mc) * iqr
-    else:
-        lo = q1 - 1.5 * math.exp(-3 * mc) * iqr
-        hi = q3 + 1.5 * math.exp(4 * mc) * iqr
-    assert abs(rm["fence_lo"] - lo) < 1e-5
-    assert abs(rm["fence_hi"] - hi) < 1e-5
-    assert rm["n_outliers"] == sum(
-        1 for y in ys if y < lo or y > hi
-    )
-
-
-def test_hill_funnel_rebuild(spark):
-    """Hill profile vs Counter arithmetic (with the q-monotonicity
-    invariant q0 >= q1 >= q2 >= qinf) and the funnel audit vs a
-    per-user float z rebuild."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from mpds_spark.queries import q_funnel_plot_audit, q_hill_numbers
-
-    rh = q_hill_numbers(spark, "/root/testdata/sf0.001").collect()[0]
-    rf = q_funnel_plot_audit(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    srcs = Counter(
-        t[0]
-        for t in duckdb.sql(
-            "SELECT source FROM"
-            " '/root/testdata/sf0.001/documents.parquet'"
-        ).fetchall()
-    )
-    d = sum(srcs.values())
-    h = -sum(c / d * math.log(c / d) for c in srcs.values())
-    q2 = d * d / sum(c * c for c in srcs.values())
-    assert rh["n_sources"] == len(srcs)
-    assert rh["n_docs"] == d
-    assert abs(rh["shannon_h"] - h) < 1e-6
-    assert abs(rh["hill_q1"] - math.exp(h)) < 1e-5
-    assert abs(rh["hill_q2"] - q2) < 1e-5
-    assert abs(
-        rh["hill_qinf"] - d / max(srcs.values())
-    ) < 1e-6
-    assert (
-        rh["n_sources"] + 1e-9
-        >= rh["hill_q1"] + 1e-9
-        >= rh["hill_q2"]
-        >= rh["hill_qinf"] - 1e-9
-    )
-    # funnel rebuild
-    rows = duckdb.sql(
-        "SELECT count(*), sum(CASE WHEN event_type = 'purchase'"
-        " THEN 1 ELSE 0 END) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY user_id"
-    ).fetchall()
-    nn = sum(n for n, _ in rows)
-    xx = sum(x for _, x in rows)
-    p = xx / nn
-    out, phis = 0, 0.0
-    for n, x in rows:
-        z = (x - n * p) / math.sqrt(n * p * (1 - p))
-        phis += z * z
-        if abs(z) > 1.96:
-            out += 1
-    assert rf["n_users"] == len(rows)
-    assert abs(rf["pooled_rate"] - p) < 1e-6
-    assert rf["n_outside_funnel"] == out
-    assert abs(
-        rf["overdispersion_phi"] - phis / len(rows)
-    ) < 1e-5
-
-
-def test_weighted_logrank_medianci_rebuild(spark):
-    """Gehan/Tarone-Ware chi2 vs a literal float curve sweep, and
-    the gap-time median + BC band vs an independently rebuilt KM
-    with multiplicative survival products."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_median_survival_ci,
-        q_weighted_logrank,
-    )
-
-    rw = q_weighted_logrank(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rm = q_median_survival_ci(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rows = duckdb.sql(
-        "SELECT user_id, epoch(ts) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " WHERE event_type = 'purchase' ORDER BY user_id, ts,"
-        " event_id"
-    ).fetchall()
-    mx = duckdb.sql(
-        "SELECT max(epoch(ts)) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()[0][0]
-    per = defaultdict(list)
-    for u, t in rows:
-        per[u].append(t)
-    spans = []
-    for u, ts_ in per.items():
-        arm = (
-            int(
-                hashlib.md5(f"lr|{u}".encode()).hexdigest()[:15], 16
-            )
-            % 2
-        )
-        for i, t in enumerate(ts_):
-            nxt = ts_[i + 1] if i + 1 < len(ts_) else None
-            day = math.floor(((nxt or mx) - t) / 3600.0)
-            spans.append((day, 1 if nxt is not None else 0, arm))
-    curve = defaultdict(lambda: [0, 0, 0, 0])
-    for day, obs, arm in spans:
-        c = curve[day]
-        if arm == 1:
-            c[0] += obs
-            c[1] += 1 - obs
-        else:
-            c[2] += obs
-            c[3] += 1 - obs
-    days = sorted(curve)
-    tot1 = sum(curve[d][0] + curve[d][1] for d in days)
-    tott = sum(sum(curve[d]) for d in days)
-    o1 = og = ot = v1 = vg = vt = 0.0
-    n1, nt = tot1, tott
-    for d in days:
-        d1, c1, d0, c0 = curve[d]
-        dd = d1 + d0
-        if dd > 0:
-            term = d1 - dd * n1 / nt
-            o1 += term
-            og += nt * term
-            ot += math.sqrt(nt) * term
-            if nt > 1:
-                vv = (
-                    dd * (n1 / nt) * ((nt - n1) / nt)
-                    * ((nt - dd) / (nt - 1))
-                )
-                v1 += vv
-                vg += nt * nt * vv
-                vt += nt * vv
-        n1 -= d1 + c1
-        nt -= d1 + c1 + d0 + c0
-    assert abs(rw["chi2_logrank"] - o1 * o1 / v1) < 1e-4
-    assert abs(rw["chi2_gehan"] - og * og / vg) < 1e-4
-    assert abs(rw["chi2_tarone_ware"] - ot * ot / vt) < 1e-4
-    # median CI rebuild (pooled)
-    pooled = defaultdict(lambda: [0, 0])
-    for day, obs, _ in spans:
-        pooled[day][0] += obs
-        pooled[day][1] += 1 - obs
-    days = sorted(pooled)
-    at_risk = sum(sum(v) for v in pooled.values())
-    s, gw = 1.0, 0.0
-    scurve = []
-    for d in days:
-        dd, cc = pooled[d]
-        if dd >= at_risk:
-            s = 0.0
-        else:
-            s *= (at_risk - dd) / at_risk
-            gw += dd / (at_risk * (at_risk - dd))
-        scurve.append((d, s, gw))
-        at_risk -= dd + cc
-    med = next(d for d, s_, _ in scurve if s_ <= 0.5)
-    band = [
-        d
-        for d, s_, g_ in scurve
-        if abs(s_ - 0.5) <= 1.96 * s_ * math.sqrt(g_)
-    ]
-    assert abs(rm["median_days"] - med / 24.0) < 1e-6
-    assert abs(rm["ci_lo_days"] - min(band) / 24.0) < 1e-6
-    assert abs(rm["ci_hi_days"] - max(band) / 24.0) < 1e-6
-    assert rm["n_band_bins"] == len(band)
-    assert rm["ci_lo_days"] <= rm["median_days"] <= rm["ci_hi_days"]
-
-
-def test_lorenz_records_rebuild(spark):
-    """Lorenz asymmetry vs a literal sorted-values rebuild of
-    Damgaard-Weiner eq. 3, and record counts vs a running-max
-    python sweep with harmonic moments."""
-    import math
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_lorenz_asymmetry,
-        q_record_counts,
-    )
-
-    rl = q_lorenz_asymmetry(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rr = q_record_counts(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    xs = sorted(
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY user_id"
-        ).fetchall()
-    )
-    n, tot = len(xs), sum(xs)
-    mu = tot / n
-    m = sum(1 for x in xs if x < mu)
-    xm, xm1 = xs[m - 1], xs[m]
-    delta = (mu - xm) / (xm1 - xm) if xm1 > xm else 0.0
-    fmu = (m + delta) / n
-    lmu = (sum(xs[:m]) + delta * xm1) / tot
-    assert rl["n_users"] == n
-    assert rl["total_events"] == tot
-    assert abs(rl["f_at_mean"] - fmu) < 1e-6
-    assert abs(rl["l_at_mean"] - lmu) < 1e-6
-    assert abs(rl["lorenz_asymmetry"] - (fmu + lmu)) < 1e-6
-    # records rebuild
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    nd = len(ys)
-    up = dn = 1
-    mx, mn = ys[0], ys[0]
-    for y in ys[1:]:
-        if y > mx:
-            up += 1
-            mx = y
-        if y < mn:
-            dn += 1
-            mn = y
-    h1 = sum(1 / i for i in range(1, nd + 1))
-    h2 = sum(1 / i / i for i in range(1, nd + 1))
-    assert rr["n_days"] == nd
-    assert rr["upper_records"] == up
-    assert rr["lower_records"] == dn
-    assert abs(rr["expected_records"] - h1) < 1e-6
-    assert abs(
-        rr["z_upper"] - (up - h1) / math.sqrt(h1 - h2)
-    ) < 1e-6
-    assert abs(
-        rr["z_lower"] - (dn - h1) / math.sqrt(h1 - h2)
-    ) < 1e-6
-
-
 def test_wow_sign_wilcoxon_rebuild(spark):
     """Both week-over-week paired tests vs literal python rebuilds
     with float midranks and the scipy convention for ties."""
@@ -7175,145 +5614,6 @@ def test_wow_sign_wilcoxon_rebuild(spark):
     assert abs(rw["var_w"] - var) < 1e-6
     assert abs(rw["z_stat"] - zw) < 1e-6
     assert rw["reject_5pct"] == (abs(zw) > 1.96)
-
-
-def test_bg_cumperio_rebuild(spark):
-    """Breusch-Godfrey LM vs a literal float OLS + partial-R^2
-    rebuild and the cumulative periodogram vs a numpy-free DFT
-    sweep."""
-    import math
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_breusch_godfrey,
-        q_cumulative_periodogram,
-    )
-
-    rb = q_breusch_godfrey(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rc = q_cumulative_periodogram(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    xs = [float(d) for d, _ in rows]
-    ys = [float(y) for _, y in rows]
-    n = len(ys)
-    mx, my = sum(xs) / n, sum(ys) / n
-    b = sum(
-        (x - mx) * (y - my) for x, y in zip(xs, ys)
-    ) / sum((x - mx) ** 2 for x in xs)
-    a = my - b * mx
-    e = [y - a - b * x for x, y in zip(xs, ys)]
-    resp, p1, p2 = e[1:], xs[1:], e[:-1]
-
-    def corr(u, v):
-        m = len(u)
-        mu, mv = sum(u) / m, sum(v) / m
-        return sum(
-            (a_ - mu) * (b_ - mv) for a_, b_ in zip(u, v)
-        ) / math.sqrt(
-            sum((a_ - mu) ** 2 for a_ in u)
-            * sum((b_ - mv) ** 2 for b_ in v)
-        )
-
-    r1, r2, r12 = corr(resp, p1), corr(resp, p2), corr(p1, p2)
-    rsq = (r1 * r1 + r2 * r2 - 2 * r1 * r2 * r12) / (1 - r12 * r12)
-    lm = len(resp) * rsq
-    assert rb["n_days"] == n
-    assert abs(rb["resid_lag1_corr"] - r2) < 1e-5
-    assert abs(rb["aux_r2"] - rsq) < 1e-5
-    assert abs(rb["lm_stat"] - lm) < 1e-4
-    assert rb["reject_5pct"] == (lm > 3.841459)
-    # cumulative periodogram
-    mu = sum(ys) / n
-    ps = []
-    for k in range(1, n // 2 + 1):
-        ca = sum(
-            (ys[t - 1] - mu) * math.cos(2 * math.pi * k * t / n)
-            for t in range(1, n + 1)
-        )
-        sa = sum(
-            (ys[t - 1] - mu) * math.sin(2 * math.pi * k * t / n)
-            for t in range(1, n + 1)
-        )
-        ps.append(ca * ca + sa * sa)
-    tot = sum(ps)
-    h = len(ps)
-    devs = [
-        abs(sum(ps[:k]) / tot - k / h) for k in range(1, h + 1)
-    ]
-    d = max(devs)
-    kmax = devs.index(d) + 1
-    assert rc["n_freqs"] == h
-    assert abs(rc["max_deviation"] - d) < 1e-6
-    assert rc["k_at_max"] == kmax
-    assert abs(rc["crit_5pct"] - 1.36 / math.sqrt(h - 1)) < 1e-6
-    assert rc["reject_5pct"] == (d > 1.36 / math.sqrt(h - 1))
-
-
-def test_energy_bimodality_rebuild(spark):
-    """Energy distance vs brute-force pairwise sums (plus E >= 0
-    and e in [0,1]) and BC vs the SAS formula with
-    statistics-module sample moments."""
-    import math
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_bimodality_coefficient,
-        q_energy_distance,
-    )
-
-    re_ = q_energy_distance(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rb = q_bimodality_coefficient(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rows = duckdb.sql(
-        "SELECT CASE WHEN isodow(date_trunc('day', ts)) >= 6"
-        " THEN 1 ELSE 0 END, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-    ).fetchall()
-    xs = [y for w, y in rows if w == 1]
-    ys = [y for w, y in rows if w == 0]
-    exy = sum(abs(a - b) for a in xs for b in ys) / (
-        len(xs) * len(ys)
-    )
-    exx = sum(abs(a - b) for a in xs for b in xs) / len(xs) ** 2
-    eyy = sum(abs(a - b) for a in ys for b in ys) / len(ys) ** 2
-    e = 2 * exy - exx - eyy
-    assert abs(re_["mean_cross_dist"] - exy) < 1e-6
-    assert abs(re_["energy_distance"] - e) < 1e-6
-    assert re_["energy_distance"] >= -1e-9
-    assert abs(re_["e_coefficient"] - e / (2 * exy)) < 1e-6
-    assert -1e-9 <= re_["e_coefficient"] <= 1.0 + 1e-9
-    # bimodality
-    vals = [y for _, y in rows]
-    n = len(vals)
-    mu = sum(vals) / n
-    m2 = sum((v - mu) ** 2 for v in vals) / n
-    m3 = sum((v - mu) ** 3 for v in vals) / n
-    m4 = sum((v - mu) ** 4 for v in vals) / n
-    b1 = m3 / m2 ** 1.5
-    g1 = b1 * math.sqrt(n * (n - 1)) / (n - 2)
-    b2 = m4 / m2 ** 2
-    g2 = (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * (b2 - 3) + 6)
-    bc = (g1 * g1 + 1) / (
-        g2 + 3 * (n - 1) ** 2 / ((n - 2) * (n - 3))
-    )
-    assert rb["n_days"] == n
-    assert abs(rb["sample_skew_g1"] - g1) < 1e-6
-    assert abs(rb["excess_kurtosis_g2"] - g2) < 1e-6
-    assert abs(rb["bimodality_coef"] - bc) < 1e-6
-    assert 0.0 < rb["bimodality_coef"] <= 1.0 + 1e-9
 
 
 def test_lang_fertility_rebuild(spark):
