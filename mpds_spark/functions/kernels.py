@@ -1,9 +1,10 @@
 """Sequence kernels: numpy transcriptions of the reference's signal code.
 
 Each consumes one ordered 1-D sequence (one entity x timestamp recording /
-one token row) and returns scalars or small vectors. They run inside
-Arrow-vectorized pandas UDFs (operators/battery.py) — numpy per sequence,
-never per-row Python.
+one token row) and returns scalars or small vectors; they run inside the
+Arrow-vectorized UDFs of operators/battery.py. The token battery uses the
+segmented variants at the end of this module instead, which run a whole
+Arrow batch of variable-length sequences in a fixed number of numpy passes.
 
 Transcription sources:
 - zcr               ← feature_extraction/ZCR.m:15
@@ -282,98 +283,148 @@ def pwelch_pitch(data: np.ndarray, fs: float, nfft: int = 512) -> float:
     return float((best + 1) / len(psd) * (fs / 2.0))
 
 
-# ---------------------------------------------------------------- batched
-# Same-length batched variants. The scalar kernels above spend 60-120us of
-# numpy call overhead PER SCALE per sequence (fastdfa is ~80% of the token
-# battery); stacking B same-length sequences into a (B, n) matrix runs the
-# identical per-scale formulas once for the whole group. Numerics: every
-# reduction uses the same axis-wise pairwise summation as the 1-D path, so
-# results match the scalar kernels to <= 1e-12 relative (the final log-log
-# slope uses the closed-form OLS instead of np.polyfit's scaled lstsq —
-# differential-tested in tests/test_battery_batch.py).
+# -------------------------------------------------------------- segmented
+# Whole-batch variants over many variable-length sequences at once. The
+# scalar kernels above spend 60-120us of numpy call overhead PER SCALE per
+# sequence (fastdfa is ~2/3 of the token battery), so these run each step
+# as a fixed number of numpy passes over the whole batch instead.
+#
+# Layout ("padded flat"): sequence d occupies xp[P[d]+1 : P[d]+1+n[d]] and
+# the slot xp[P[d]] just before it holds 0. np.add.reduceat(v, [i, j])
+# returns v[i] + pairwise_sum(v[i+1:j]); starting each reduction on a zero
+# slot makes it pairwise_sum(v[i+1:j]), the summation order of v.sum() in
+# the 1-D kernels, so a whole-sequence sum is bitwise the scalar one.
+# Per-interval DFA sums start on data (no zero slot between intervals), Sxy
+# is summed directly, and the log-log slope is a closed-form OLS instead of
+# np.polyfit's lstsq; all stay within 1e-12 relative of the scalar path
+# (tests/test_battery_batch.py).
 
 
-def fastdfa_batch(X: np.ndarray) -> np.ndarray:
-    """fastdfa for a (B, n) batch of same-length sequences -> (B,) alphas.
+def segment_pairs(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """reduceat indices whose EVEN results are the sums over [lo[d], hi[d])
+    (needs lo[d] < hi[d] <= lo[d+1]; odd results are discarded)."""
+    return np.stack([lo, hi], axis=1).ravel()
 
-    Mirrors fastdfa_core.c:41-161,255-263 exactly as fastdfa() does: DFA on
-    the per-row cumulative sum, binary-subdivision interval widths, closed
-    form per-interval linear detrend on absolute indices, tail kept raw.
+
+def fastdfa_segmented(xp: np.ndarray, P: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """fastdfa for every sequence of a padded flat batch -> (D,) alphas.
+
+    Same transcription as fastdfa(): DFA on the per-sequence cumulative sum
+    (one np.cumsum per sequence, so it is exactly the scalar one),
+    binary-subdivision interval widths, closed-form per-interval linear
+    detrend on absolute indices, tail kept raw. Scale s then runs over every
+    sequence that has scale s together: interval boundaries
+    base + t*round(n/2^s) by repeat/arange, Sy and Sxy per interval by
+    reduceat, the closed-form a and b, the residual in the DIRECT form
+    sum((y - trend)^2) (the SSE identity cancels catastrophically when the
+    residual is small against sum(y^2)), and one reduceat per sequence over
+    its [base, base + k*m) interval span.
     """
-    X = np.asarray(X, dtype=float)
-    B, n = X.shape
-    if n < 8:
-        return np.full(B, np.nan)
-    intervals = _dfa_intervals(n)
-    if len(intervals) < 2:
-        return np.full(B, np.nan)
-    Y = np.cumsum(X, axis=1)
-    S = len(intervals)
-    flucts = np.empty((B, S), dtype=float)
+    D = len(n)
+    alpha = np.full(D, np.nan)
+    # longest first: the sequences that still have scale s are then a
+    # prefix of the layout, and scale s works on that prefix only
+    ok = np.flatnonzero(n >= 8)
+    ok = ok[np.argsort(-n[ok], kind="stable")]
+    if not len(ok):
+        return alpha
+    nd = n[ok]
+    # _dfa_intervals, vectorized over sequences
+    n_sc = (np.log10(nd) / np.log10(2.0)).astype(np.int64)
+    n_sc -= (2.0 ** (n_sc - 1) > nd / 2.5).astype(np.int64)
+    base = np.cumsum(nd + 1) - nd  # first value of each sequence
+    L = int(base[-1] + nd[-1]) + 1  # trailing zero: every end is an index
+    y = np.zeros(L)
+    for src, dst, k in zip((P[ok] + 1).tolist(), base.tolist(), nd.tolist()):
+        np.cumsum(xp[src : src + k], out=y[dst : dst + k])
+    # absolute index of each value within its sequence (-1 on zero slots):
+    # the scalar kernel's Sxy = start*Sy + sum(j*y) is one reduceat of loc*y
+    loc = np.zeros(L)
+    loc[:-1] = np.arange(L - 1) - np.repeat(base, nd + 1)
+    locy = loc * y
+    S = int(n_sc[0])
+    flucts = np.zeros((len(ok), S))  # log10(0) = -inf drops unused scales
+    widths = np.ones((len(ok), S))
     for s in range(S):
-        m = int(intervals[s])
-        k = n // m
-        if k > 0:
-            xm = Y[:, : k * m].reshape(B, k, m)
-            starts = np.arange(k, dtype=float) * m
-            ends = starts + m - 1
-            j = np.arange(m, dtype=float)
-            sy = xm.sum(axis=2)                       # (B, k)
-            # einsum instead of (xm * j).sum: same reduction, no (B, k, m)
-            # product temporary (the batch is memory-bandwidth-bound)
-            sxy = starts * sy + np.einsum("bkm,m->bk", xm, j)  # (B, k)
-            sx = (ends + starts) * m / 2.0            # (k,)
-            sxx = m * (
-                2 * ends**2 + 2 * starts**2 + 2 * starts * ends + ends - starts
-            ) / 6.0
-            delta = m * sxx - sx * sx
-            b = (sy * sxx - sx * sxy) / delta         # (B, k)
-            a = (m * sxy - sx * sy) / delta           # (B, k)
-            # residual kept in the C transcription's DIRECT form (sum of
-            # squared detrended values — no SSE shortcut identity, which
-            # cancels catastrophically when resid << sum(y^2)); built in
-            # ONE reused buffer + einsum reduce instead of materializing
-            # trend / (xm - trend) / square (measured 1.7x at n >= 512)
-            xabs = starts[:, None] + j[None, :]       # (k, m)
-            r = np.multiply(a[:, :, None], xabs[None, :, :])
-            r += b[:, :, None]
-            np.subtract(xm, r, out=r)
-            resid = np.einsum("bkm,bkm->b", r, r)
-        else:
-            resid = np.zeros(B)
-        flucts[:, s] = np.sqrt(resid / n)
+        A = int(np.searchsorted(-n_sc, -s, "left"))  # sequences with scale s
+        end = int(base[A]) if A < len(ok) else L
+        na = nd[:A]
+        m = (na / (1 << s) + 0.5).astype(np.int64)
+        k = na // m
+        # entries: a leading filler [0, base[0]), then per sequence its
+        # k interval starts and the start of its tail (a filler up to the
+        # next sequence)
+        cnt = k + 1
+        owner = np.repeat(np.arange(A), cnt)
+        t = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        mo = m[owner]
+        rel = t * mo
+        idx = np.concatenate(([0], base[owner] + rel))
+        interval = np.concatenate(([False], t < k[owner]))
+        mm = np.concatenate(([1], mo))
+        starts = np.concatenate(([0], rel)).astype(float)
+        span = np.diff(idx, append=end)
+        sy = np.add.reduceat(y[:end], idx)
+        sxy = np.add.reduceat(locy[:end], idx)
+        ends = starts + mm - 1
+        sx = (ends + starts) * mm / 2.0
+        sxx = mm * (
+            2 * ends**2 + 2 * starts**2 + 2 * starts * ends + ends - starts
+        ) / 6.0
+        delta = mm * sxx - sx * sx
+        with np.errstate(divide="ignore", invalid="ignore"):
+            b = np.where(interval, (sy * sxx - sx * sxy) / delta, 0.0)
+            a = np.where(interval, (mm * sxy - sx * sy) / delta, 0.0)
+        # fillers get a = b = 0 and y = 0 on zero slots, so r = 0 there
+        r = np.repeat(a, span)
+        r *= loc[:end]
+        r += np.repeat(b, span)
+        np.subtract(y[:end], r, out=r)
+        r *= r
+        resid = np.add.reduceat(r, segment_pairs(base[:A] - 1, base[:A] + k * m))[::2]
+        flucts[:A, s] = np.sqrt(resid / na)
+        widths[:A, s] = m
+    # alpha: slope of the log-log fit over the finite flucts, as a centred
+    # closed-form OLS (np.polyfit per sequence would cost ~50us each)
     with np.errstate(divide="ignore"):
-        lx = np.log10(intervals.astype(float))        # (S,)
-        ly = np.log10(flucts)                         # (B, S)
-    ok = np.isfinite(ly)
-    w = ok.astype(float)
-    cnt = w.sum(axis=1)
-    ly0 = np.where(ok, ly, 0.0)
-    sx_ = w @ lx
-    sy_ = ly0.sum(axis=1)
-    sxx_ = w @ (lx * lx)
-    sxy_ = ly0 @ lx
-    denom = cnt * sxx_ - sx_ * sx_
+        ly = np.log10(flucts)
+    fin = np.isfinite(ly)
+    cnt = fin.sum(axis=1, keepdims=True)
+    lx = np.where(fin, np.log10(widths), 0.0)
+    ly = np.where(fin, ly, 0.0)
     with np.errstate(divide="ignore", invalid="ignore"):
-        slope = (cnt * sxy_ - sx_ * sy_) / denom
-    return np.where((cnt >= 2) & (denom != 0), slope, np.nan)
+        dx = np.where(fin, lx - lx.sum(axis=1, keepdims=True) / cnt, 0.0)
+        dy = np.where(fin, ly - ly.sum(axis=1, keepdims=True) / cnt, 0.0)
+        var = (dx * dx).sum(axis=1)
+        slope = (dx * dy).sum(axis=1) / var
+    alpha[ok] = np.where((cnt[:, 0] >= 2) & (var > 0), slope, np.nan)
+    return alpha
 
 
-def fft_dominant_freq_batch(
-    X: np.ndarray, min_f: float = 0.01, max_f: float = 0.5
+def fft_dominant_freq_segmented(
+    dp: np.ndarray, P: np.ndarray, n: np.ndarray,
+    min_f: float = 0.01, max_f: float = 0.5,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """fft_dominant_freq for a (B, n) batch -> ((B,) freqs, (B,) powers)."""
-    X = np.asarray(X, dtype=float)
-    B, n = X.shape
-    if n < 4:
-        return np.full(B, np.nan), np.full(B, np.nan)
-    xc = X - X.mean(axis=1)[:, None]
-    p = np.abs(np.fft.rfft(xc, axis=1)) ** 2 / n      # (B, F)
-    f = np.arange(p.shape[1]) / n
-    keep = (f > min_f) & (f <= max_f)
-    if not keep.any():
-        return np.full(B, np.nan), np.full(B, np.nan)
-    fk, pk = f[keep], p[:, keep]
-    i = np.argmax(pk, axis=1)
-    rows = np.arange(B)
-    return fk[i], pk[rows, i]
+    """fft_dominant_freq for every sequence of a padded flat batch of
+    MEAN-CENTRED values -> ((D,) freqs, (D,) powers). The frequency grid
+    depends on n, so this is the one step that stays per length: sequences
+    of one length share one 2-D rfft call."""
+    freq = np.full(len(n), np.nan)
+    power = np.full(len(n), np.nan)
+    cand = np.flatnonzero(n >= 4)
+    order = cand[np.argsort(n[cand], kind="stable")]
+    for grp in np.split(order, np.flatnonzero(np.diff(n[order])) + 1):
+        if not len(grp):
+            continue
+        ln = int(n[grp[0]])
+        f = np.arange(ln // 2 + 1) / ln
+        keep = np.flatnonzero((f > min_f) & (f <= max_f))
+        if not len(keep):
+            continue
+        X = dp[(P[grp] + 1)[:, None] + np.arange(ln)]
+        R = np.fft.rfft(X, axis=1)[:, keep[0] : keep[-1] + 1]
+        pk = np.abs(R) ** 2 / ln
+        i = np.argmax(pk, axis=1)
+        freq[grp] = f[keep[0] + i]
+        power[grp] = pk[np.arange(len(grp)), i]
+    return freq, power

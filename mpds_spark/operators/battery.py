@@ -1,10 +1,11 @@
 """Spark operators wrapping the feature batteries.
 
 - extract_token_battery: per-row 18-stat vector over the `tokens` array —
-  mapInArrow (zero-copy views over the Arrow list buffers, bounded memory,
-  no shuffle at all: a pure map stage pipelined onto the scan). Token
-  arrays pass through UNTOUCHED (the BASELINE.json per-row exact-equality
-  invariant) by reusing the input Arrow column.
+  mapInArrow (the segmented battery reads each batch's Arrow list buffers
+  zero-copy, in calls bounded by token count; no shuffle at all: a pure
+  map stage pipelined onto the scan). Token arrays pass through UNTOUCHED
+  (the BASELINE.json per-row exact-equality invariant) by reusing the
+  input Arrow column.
 - extract_accel_battery: per-(entity, ts) 153-feature accel vector over an
   F2-shaped long table — applyInPandas after the one entity range exchange.
 
@@ -26,13 +27,35 @@ from mpds_spark.operators.util import pin_group_parallelism
 from mpds_spark.functions.battery import (
     TOKEN_STAT_NAMES,
     extract_accel_features,
-    token_features_batch,
+    token_features_segmented,
 )
-
 
 
 def token_battery_names() -> list[str]:
     return list(TOKEN_STAT_NAMES)
+
+
+def token_battery_batch(batch, tokens_col: str, out_col: str, names: list[str]):
+    """One Arrow batch through the token battery: the `names` columns
+    (reused as-is) + the (B, 18) feature list column. The kernel reads the
+    list column's flat values + offsets directly (zero-copy, any slice
+    offset); empty and null rows give all-NaN features."""
+    import pyarrow as pa
+
+    col = batch.column(tokens_col)
+    try:
+        flat = col.values.to_numpy(zero_copy_only=True)
+    except pa.ArrowInvalid:  # nulls inside the arrays: copying fallback
+        flat = col.values.to_numpy(zero_copy_only=False)
+    feats = token_features_segmented(flat, col.offsets.to_numpy())
+    if col.null_count:  # a null row's offsets may span arbitrary values
+        feats[col.is_null().to_numpy(zero_copy_only=False)] = np.nan
+    fla = pa.ListArray.from_arrays(
+        pa.array(np.arange(len(feats) + 1, dtype=np.int32) * feats.shape[1]),
+        pa.array(feats.ravel()),
+    )
+    cols = [batch.column(n) for n in names] + [fla]
+    return pa.RecordBatch.from_arrays(cols, names=names + [out_col])
 
 
 def extract_token_battery(
@@ -44,15 +67,16 @@ def extract_token_battery(
     """Append the per-sequence feature vector; all input columns (including
     the token payload) pass through byte-identical.
 
-    Arrow-native (mapInArrow): token arrays are read as zero-copy numpy
-    views over the Arrow list buffers (flat values + offsets) and passed
-    through by REUSING the input Arrow column — no pandas object-column
-    materialization in either direction (the per-element list<->object
-    conversion was ~40% of the stage). Same-length groups run one
-    vectorized battery call per distinct length (fastdfa alone is ~80% of
-    the scalar path), over chunks re-sliced to a FIXED row count so the
-    per-sequence cost does not depend on partition size (keeps scaling
-    legs with different partition counts comparable).
+    Arrow-native (mapInArrow): each Arrow batch goes to the segmented
+    battery as its list buffers (flat values + offsets, zero-copy), and
+    the token column passes through by REUSING the input Arrow column —
+    no pandas object-column materialization and no per-row slice list in
+    either direction (the per-element list<->object conversion was ~40% of
+    the stage). The kernel runs each stat as whole-batch numpy passes and
+    splits its calls by token count, so the cost per sequence does not
+    depend on how many rows a batch or partition holds (the local[1] and
+    local[4] scaling legs stay comparable) and worker memory stays flat
+    for long documents.
 
     keep_tokens=False drops the payload from the OUTPUT schema: at
     10^12-row scale the token arrays are ~85% of the bytes, and a consumer
@@ -60,50 +84,13 @@ def extract_token_battery(
     pay their Python->JVM transfer. Default True preserves the per-row
     passthrough contract (BASELINE.json token-equality invariant).
     """
-    import pyarrow as pa
-
     out_fields = [f for f in df.schema.fields if keep_tokens or f.name != tokens_col]
     schema = StructType(out_fields + [StructField(out_col, ArrayType(DoubleType()))])
-    chunk_rows = 4096
     names = [f.name for f in out_fields]
 
-    def _featurize(batch: pa.RecordBatch) -> pa.RecordBatch:
-        col = batch.column(batch.schema.get_field_index(tokens_col))
-        try:
-            flat = col.values.to_numpy(zero_copy_only=True)
-            offs = col.offsets.to_numpy(zero_copy_only=True)
-        except pa.ArrowInvalid:  # nulls in the buffers: copying fallback
-            flat = col.values.to_numpy(zero_copy_only=False)
-            offs = col.offsets.to_numpy(zero_copy_only=False)
-        arrs = [flat[offs[j] : offs[j + 1]] for j in range(len(col))]
-        feats = token_features_batch(arrs)
-        fla = pa.ListArray.from_arrays(
-            pa.array(np.arange(len(arrs) + 1, dtype=np.int32) * feats.shape[1]),
-            pa.array(feats.ravel()),
-        )
-        cols = [
-            batch.column(batch.schema.get_field_index(n)) for n in names
-        ] + [fla]
-        return pa.RecordBatch.from_arrays(cols, names=names + [out_col])
-
     def gen(batches):
-        buf: list[pa.RecordBatch] = []
-        nbuf = 0
         for batch in batches:
-            buf.append(batch)
-            nbuf += batch.num_rows
-            while nbuf >= chunk_rows:
-                tbl = pa.Table.from_batches(buf).combine_chunks()
-                head = tbl.slice(0, chunk_rows).combine_chunks().to_batches()
-                assert len(head) == 1
-                yield _featurize(head[0])
-                rest = tbl.slice(chunk_rows).combine_chunks().to_batches()
-                buf = rest
-                nbuf = sum(b.num_rows for b in buf)
-        if nbuf:
-            tbl = pa.Table.from_batches(buf).combine_chunks()
-            for b in tbl.to_batches():
-                yield _featurize(b)
+            yield token_battery_batch(batch, tokens_col, out_col, names)
 
     return df.mapInArrow(gen, schema)
 

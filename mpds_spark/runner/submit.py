@@ -48,12 +48,25 @@ def cmd_synth(args) -> int:
     return 0
 
 
-def cmd_extract(args) -> int:
+def extract_transform(part):
+    """The extract leg for one bucket: battery (token payload not shipped
+    back from Python) -> expanding features -> backward as-of against the
+    10% event subset."""
     from pyspark.sql import functions as F
 
     from mpds_spark.operators.asof import asof_join
     from mpds_spark.operators.battery import extract_token_battery
     from mpds_spark.operators.windows import derived_features
+
+    feat = extract_token_battery(part, keep_tokens=False)
+    feat = feat.withColumn("dss", F.element_at("features", 1))
+    events = feat.filter(F.crc32(F.col("doc_id")) % 10 == 0).select(
+        "entity_id", "ts", F.col("dss").alias("event_val")
+    )
+    return asof_join(derived_features(feat, value="dss"), events)
+
+
+def cmd_extract(args) -> int:
     from mpds_spark.runner.checkpoint import run_partitioned
     from mpds_spark.sources.io import read_sequences
 
@@ -62,18 +75,10 @@ def cmd_extract(args) -> int:
     if "bucket" in df.columns:
         df = df.drop("bucket")
 
-    def transform(part):
-        feat = extract_token_battery(part).drop("tokens")
-        feat = feat.withColumn("dss", F.element_at("features", 1))
-        events = feat.filter(F.crc32(F.col("doc_id")) % 10 == 0).select(
-            "entity_id", "ts", F.col("dss").alias("event_val")
-        )
-        return asof_join(derived_features(feat, value="dss"), events)
-
     res = run_partitioned(
         spark,
         df,
-        transform,
+        extract_transform,
         args.output,
         n_buckets=args.entity_buckets,
         spec=args.spec,

@@ -8,6 +8,7 @@ from mpds_spark.operators.battery import (
     extract_token_battery,
     score_dot,
     slice_modality,
+    token_battery_batch,
     token_battery_names,
 )
 from mpds_spark.sources.synth import synth_sequences
@@ -29,6 +30,100 @@ def test_token_battery_passthrough_and_allclose(spark):
         got = np.asarray(out["features"].iloc[i], dtype=float)
         np.testing.assert_allclose(got, expected, rtol=1e-12, equal_nan=True)
     assert len(out["features"].iloc[0]) == len(token_battery_names())
+
+
+def _expected_features(tokens):
+    if tokens is None or len(tokens) == 0:
+        return np.full(len(token_battery_names()), np.nan)
+    return token_features(np.asarray(tokens))
+
+
+def test_token_battery_multibatch_empty_null_and_sliced(spark):
+    """Empty and null rows give all-NaN features, every other row matches
+    scalar token_features, across several Arrow batches of one partition;
+    tokens come back byte-identical with keep_tokens=True and the features
+    are the same with keep_tokens=False."""
+    import pyarrow as pa
+
+    from mpds_spark.sources.synth import tokens_for
+
+    toks = [tokens_for(i, 3 + 29 * i, 11).tolist() for i in range(9)]
+    toks[2], toks[5], toks[6] = [], None, [7]
+    df = spark.createDataFrame(
+        list(enumerate(toks)), "doc_id int, tokens array<int>"
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        n_batches = df.mapInArrow(
+            lambda it: (pa.RecordBatch.from_pydict({"n": [b.num_rows]}) for b in it),
+            "n long",
+        ).collect()
+        kept = extract_token_battery(df).orderBy("doc_id").collect()
+        dropped = (
+            extract_token_battery(df, keep_tokens=False).orderBy("doc_id").collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert len(n_batches) == 3
+    assert dropped[0].asDict().keys() == {"doc_id", "features"}
+    for row, row_d, src in zip(kept, dropped, toks):
+        assert row["tokens"] == src  # byte-identical passthrough, None stays None
+        exp = _expected_features(src)
+        np.testing.assert_allclose(row["features"], exp, rtol=1e-12, equal_nan=True)
+        np.testing.assert_array_equal(row_d["features"], row["features"])
+    assert np.isnan(kept[2]["features"]).all() and np.isnan(kept[5]["features"]).all()
+
+    # a list column with a nonzero slice offset (and a null row whose
+    # offsets span values) through the same batch function
+    col = pa.array(toks, type=pa.list_(pa.int32()))
+    sliced = pa.RecordBatch.from_arrays(
+        [pa.array(range(9), pa.int32()), col], names=["doc_id", "tokens"]
+    ).slice(3)
+    assert sliced.column(1).offset == 3
+    spanning = pa.ListArray.from_arrays(
+        pa.array([0, 2, 5], pa.int32()), pa.array([1, 2, 3, 4, 5], pa.int32()),
+        mask=pa.array([False, True]),
+    )
+    for batch, src in (
+        (sliced, toks[3:]),
+        (pa.RecordBatch.from_arrays([spanning], names=["tokens"]), [[1, 2], None]),
+    ):
+        out = token_battery_batch(batch, "tokens", "features", batch.schema.names)
+        assert out.column("tokens").equals(batch.column("tokens"))
+        for got, s in zip(out.column("features").to_pylist(), src):
+            np.testing.assert_allclose(
+                got, _expected_features(s), rtol=1e-12, equal_nan=True
+            )
+
+
+def test_extract_transform_output_unchanged(spark):
+    """runner/submit.py extract: battery with keep_tokens=False gives the
+    columns and features of the battery-then-drop("tokens") formulation."""
+    from pyspark.sql import functions as F
+
+    from mpds_spark.operators.asof import asof_join
+    from mpds_spark.operators.windows import derived_features
+    from mpds_spark.runner.submit import extract_transform
+
+    df = synth_sequences(spark, 120, seed=3, n_entities=6)
+    feat = extract_token_battery(df).drop("tokens")
+    feat = feat.withColumn("dss", F.element_at("features", 1))
+    events = feat.filter(F.crc32(F.col("doc_id")) % 10 == 0).select(
+        "entity_id", "ts", F.col("dss").alias("event_val")
+    )
+    ref = asof_join(derived_features(feat, value="dss"), events)
+    got = extract_transform(df)
+    assert got.columns == ref.columns and "tokens" not in got.columns
+    g = got.orderBy("doc_id").toPandas()
+    r = ref.orderBy("doc_id").toPandas()
+    assert len(g) == 120
+    for c in g.columns:
+        if c == "features":
+            np.testing.assert_array_equal(np.stack(g[c]), np.stack(r[c]))
+        else:
+            pd.testing.assert_series_equal(g[c], r[c])
 
 
 def test_accel_battery_spark_matches_numpy(spark):
