@@ -70,39 +70,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # is mirror-EXACT at sf0.01 on final code (tools/check_correctness.py —
 # the same value gate; see BENCH/BASELINE.md closing record).
 _PRIORITY = [
-    # new in round 5 (hundred-twelfth batch — continuation session)
-    "lang_confusion_audit",
-    "tokenizer_fertility",
-    # new in round 5 (hundred-ninth batch — continuation session)
-    "sign_test_wow",
-    "wilcoxon_signed_rank",
-    # new in round 5 (hundred-third batch — continuation session)
-    "lz_complexity",
-    "spectral_flatness",
-    # new in round 5 (hundred-first batch — continuation session)
-    "poisson_deviance_gof",
-    "hash_collision_audit",
-    # new in round 5 (ninety-seventh batch — continuation session)
-    "dersimonian_laird",
-    "poisson_rate_test",
-    # new in round 5 (ninety-fourth batch — continuation session)
-    "zonemap_skipping",
-    "cdc_chunking",
-    # new in round 5 (ninety-third batch — continuation session)
-    "zero_inflation",
-    "laplace_trend",
-    # new in round 5 (ninetieth batch — continuation session)
-    "honore_sichel",
-    "spiegelhalter_z",
-    # new in round 5 (eighty-third batch — continuation session)
-    "buishand_range",
-    "snht_test",
-    # new in round 5 (eighty-first batch — continuation session)
-    "turning_points",
-    "difference_sign",
     # new in round 5 (eightieth batch — continuation session)
     "rare_word_profile",
-    "burrows_delta",
     # new in round 5 (seventy-ninth batch — continuation session)
     "allan_variance",
     "recurrence_quantification",
@@ -115,9 +84,6 @@ _PRIORITY = [
     # new in round 5 (seventy-sixth batch — continuation session)
     "croston_forecast",
     "tracking_signal",
-    # new in round 5 (seventy-fourth batch — continuation session)
-    "jensen_shannon",
-    "hellinger_affinity",
     # new in round 5 (seventy-third batch — continuation session)
     "lin_ccc",
     "bland_altman",
@@ -127,12 +93,8 @@ _PRIORITY = [
     # new in round 5 (seventy-first batch — continuation session)
     "ndcg_eval",
     "mrr_eval",
-    # new in round 5 (seventieth batch — continuation session)
-    "adamic_adar",
-    "hits_scores",
     # new in round 5 (sixty-ninth batch — continuation session)
     "sample_entropy",
-    "spectral_entropy",
     # new in round 5 (sixty-eighth batch — continuation session)
     "grubbs_test",
     "taylor_law",
@@ -167,11 +129,9 @@ _PRIORITY = [
     "wilson_intervals",
     "mde_power",
     # new in round 5 (fifty-seventh batch — continuation session)
-    "pacf_durbin",
     "ols_influence",
     # new in round 5 (fifty-sixth batch — continuation session)
     "l_moments",
-    "chao1_richness",
     # new in round 5 (fifty-fifth batch — continuation session)
     "ledoit_wolf_shrinkage",
     "page_hinkley",
@@ -179,14 +139,12 @@ _PRIORITY = [
     "best_split_stump",
     "tukey_hsd",
     # new in round 5 (fifty-third batch — continuation session)
-    "km_confidence",
     "ses_alpha_grid",
     # new in round 5 (fifty-second batch — continuation session)
     "newman_modularity",
     "horvitz_thompson",
     # new in round 5 (fifty-first batch — continuation session)
     "kmv_distinct",
-    "yule_k",
     # new in round 5 (fiftieth batch — continuation session)
     "box_cox_lambda",
     "dickey_fuller",
@@ -194,20 +152,17 @@ _PRIORITY = [
     "friedman_test",
     "jarque_bera",
     # new in round 5 (forty-eighth batch — continuation session)
-    "ljung_box",
     "cox_ph",
     # new in round 5 (forty-seventh batch — continuation session)
     "kruskal_wallis",
     "mcnemar_test",
     # new in round 5 (forty-sixth batch — continuation session)
     "sprt_monitor",
-    "sinkhorn_ot",
     # new in round 5 (forty-fifth batch — continuation session)
     "ransac_trend",
     "dft_periodogram",
     # new in round 5 (forty-fourth batch — continuation session)
     "bradley_terry",
-    "pca_power_iter",
     # new in round 5 (forty-third batch — continuation session)
     "gumbel_maxima",
     "session_edit_distance",
@@ -215,7 +170,6 @@ _PRIORITY = [
     "cochran_armitage",
     "isotonic_calibration",
     # new in round 5 (forty-first batch — continuation session)
-    "kneser_ney_nll",
     "levene_test",
     # new in round 5 (fortieth batch — continuation session)
     "bh_fdr",

@@ -361,226 +361,3 @@ def degree_assortativity(
         (F.col("__m") / F.lit(2)).cast("long").alias("n_edges"),
         r.alias("assortativity"),
     )
-
-
-def _aa_fold_gen(batches):
-    # guide §4.2: streaming segmented fold over the (x, y, z)-
-    # sorted candidate stream — the identical z-ascending float
-    # sequence as the r5 collect_list + array_sort + aggregate
-    # (acc = acc + 1.0/ln(deg), acc from 0.0), without building a
-    # per-pair struct array for ~2M mostly-singleton groups
-    # (measured 91% of pairs have ONE common neighbor at sf0.1).
-    # math.log is the platform libm ln — the same function the
-    # DuckDB oracle's ln calls, so per-term weights match the
-    # frozen oracle bit-for-bit.
-    import math
-
-    import pyarrow as pa
-
-    cx = cy = None
-    cn = 0
-    acc = 0.0
-    started = False
-    ox, oy, ocn, oaa = [], [], [], []
-
-    def _flush():
-        ox.append(cx)
-        oy.append(cy)
-        ocn.append(cn)
-        oaa.append(acc)
-
-    for b in batches:
-        xs = b.column("x").to_pylist()
-        ys = b.column("y").to_pylist()
-        degs = b.column("__deg").to_pylist()
-        for x_, y_, d_ in zip(xs, ys, degs):
-            if not started or x_ != cx or y_ != cy:
-                if started:
-                    _flush()
-                cx, cy = x_, y_
-                cn = 0
-                acc = 0.0
-                started = True
-            cn += 1
-            acc = acc + 1.0 / math.log(float(d_))
-    if started:
-        _flush()
-    yield pa.record_batch(
-        [
-            pa.array(ox, pa.int64()),
-            pa.array(oy, pa.int64()),
-            pa.array(ocn, pa.int64()),
-            pa.array(oaa, pa.float64()),
-        ],
-        names=["x", "y", "common_neighbors", "aa"],
-    )
-
-
-def adamic_adar(
-    edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    k: int = 12,
-) -> DataFrame:
-    """Adamic-Adar link prediction over a canonical (a < b, distinct)
-    undirected edge set (Adamic & Adar Social Networks 2003; Liben-
-    Nowell & Kleinberg CIKM 2003 established it as the strongest of
-    the simple neighborhood predictors): for every NON-edge pair
-    (x, y) with at least one common neighbor, AA(x, y) =
-    sum_{z in N(x) cap N(y)} 1 / ln(deg z) — common neighbors
-    weighted inversely by how promiscuous they are. On the co-order
-    part graph the top pairs are "items that should co-occur but
-    don't yet" — the candidate-generation feature for
-    recommendation / assortment channels beside cooccurrence_lift's
-    observed pairs.
-
-    Cross-engine determinism: degrees are exact longs and a common
-    neighbor always has deg >= 2 (both wedge edges exist), so each
-    weight 1/ln(deg z) is one positive double division; per-pair
-    weights fold over the NEIGHBOR-ID-SORTED collected array (the
-    pagerank convention) so the float sum order is pinned, and the
-    common-neighbor count is an exact long. Top-k selection orders by
-    (aa DESC, x, y) — the score comparison is between identically-
-    computed doubles, the id tie-break is exact.
-
-    Shape at scale: wedges are generated from the degree-annotated
-    adjacency by ONE hub-side equi-join (z as the join key), existing
-    edges are removed by ONE left-anti join on the canonical pair,
-    and the top-k is a TakeOrderedAndProject (per-partition heaps,
-    never a global sort). Wedge fan-out is quadratic in per-node
-    degree — the same bound triangle_stats documents; hot hubs at web
-    scale get the sqrt(m) orientation guard there, and the catalog
-    query gates the toy-scale wedge volume with a mod filter.
-
-    Returns the top-k frame (part_a, part_b, common_neighbors, aa).
-    """
-    from mpds_spark.operators.util import scratch_persist
-
-    e = scratch_persist(
-        edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
-    )
-    sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("__deg")
-    )
-    adj = sym.join(deg, "src")
-    w1 = adj.select(
-        F.col("src").alias("z"), F.col("dst").alias("x"), "__deg"
-    )
-    w2 = adj.select(F.col("src").alias("z"), F.col("dst").alias("y"))
-    wedges = w1.join(w2, "z").filter(F.col("x") < F.col("y"))
-    cand = wedges.join(
-        e.select(F.col("a").alias("x"), F.col("b").alias("y")),
-        ["x", "y"],
-        "left_anti",
-    )
-    pairs = (
-        cand.select("x", "y", "z", "__deg")
-        .repartition(F.col("x"), F.col("y"))
-        .sortWithinPartitions("x", "y", "z")
-        .mapInArrow(
-            _aa_fold_gen,
-            "x long, y long, common_neighbors long, aa double",
-        )
-    )
-    return (
-        pairs.orderBy(F.desc("aa"), "x", "y").limit(int(k))
-    )
-
-
-def hits_bipartite(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_rounds: int = 2,
-) -> DataFrame:
-    """HITS hubs-and-authorities on a DIRECTED bipartite edge set
-    (Kleinberg JACM 1999) in the EXACT-INTEGER unnormalized form:
-    seeding every hub score at 1 and alternating a_v = sum_{u->v} h_u
-    / h_u = sum_{u->v} a_v for `n_rounds` full sweeps keeps every
-    score an exact-long PATH COUNT (round 1 authority = in-degree;
-    round 2 authority counts directed 3-paths u->v'->u'->v), so the
-    usual floating-point normalization — whose cross-partition sum
-    order no engine pins — never happens; the reported normalized
-    score divides by the round's max, ONE exact-long division per
-    row. On the customer->part purchase graph, hubs are the
-    basket-spanning buyers and authorities the parts that those
-    buyers concentrate on — the classic bipartite reinforcement
-    signal beside pagerank's undirected centrality.
-
-    Shape at scale: each half-sweep is ONE equi-join of the score
-    frame to the edge set + ONE integer aggregation (the Pregel sweep
-    expressed as joins, like pagerank); integer sums are
-    order-independent, so no sorted-fold machinery is needed; the max
-    is a 1-row broadcast. Score growth is bounded by (max degree)^
-    (2*n_rounds) — two rounds on real basket graphs stays far below
-    2^63, and the operator raises if a third round could overflow.
-
-    Returns (side, node, score, score_norm) for every node, where
-    side is 'hub' or 'authority'.
-    """
-    from mpds_spark.operators.util import scratch_persist
-
-    if int(n_rounds) < 1:
-        raise ValueError("n_rounds must be >= 1")
-    e = scratch_persist(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    )
-    h = e.select("src").distinct().select(
-        "src", F.lit(1).cast("long").alias("h")
-    )
-    if int(n_rounds) >= 3:
-        # score growth is bounded by (max degree)^(2*n_rounds); past
-        # two rounds a hot hub can push the exact-long path counts
-        # over 2^63 silently (non-ANSI) — refuse rather than wrap
-        dmax = (
-            e.select(F.col("src").alias("n"))
-            .unionAll(e.select(F.col("dst").alias("n")))
-            .groupBy("n")
-            .count()
-            .agg(F.max("count"))
-            .first()[0]
-            or 1
-        )
-        if int(dmax) ** (2 * int(n_rounds)) >= 2 ** 63:
-            raise ValueError(
-                f"hits_bipartite: max degree {dmax} with "
-                f"n_rounds={n_rounds} could overflow the exact-long "
-                "path counts (bound (max_deg)^(2*n_rounds) >= 2^63)"
-            )
-    a_frame = None
-    for _ in range(int(n_rounds)):
-        a_frame = (
-            e.join(h, "src")
-            .groupBy("dst")
-            .agg(F.sum("h").cast("long").alias("a"))
-        )
-        h = (
-            e.join(a_frame, "dst")
-            .groupBy("src")
-            .agg(F.sum("a").cast("long").alias("h"))
-        )
-    # both final score frames feed TWO consumers each (their max and
-    # the output projection) — without a barrier the whole sweep chain
-    # re-executes per consumer (r6: measured ~4x on the 2-round query)
-    a_frame = scratch_persist(a_frame)
-    h = scratch_persist(h)
-    amax = a_frame.agg(F.max("a").alias("__m"))
-    hmax = h.agg(F.max("h").alias("__m"))
-    auth = a_frame.crossJoin(F.broadcast(amax)).select(
-        F.lit("authority").alias("side"),
-        F.col("dst").alias("node"),
-        F.col("a").alias("score"),
-        (F.col("a").cast("double") / F.col("__m").cast("double"))
-        .alias("score_norm"),
-    )
-    hub = h.crossJoin(F.broadcast(hmax)).select(
-        F.lit("hub").alias("side"),
-        F.col("src").alias("node"),
-        F.col("h").alias("score"),
-        (F.col("h").cast("double") / F.col("__m").cast("double"))
-        .alias("score_norm"),
-    )
-    return auth.unionAll(hub)

@@ -115,121 +115,3 @@ def kaplan_meier(
         "n_censored",
         km.alias("km_survival"),
     )
-
-
-def kaplan_meier_ci(
-    df: DataFrame,
-    entity: str = "entity_id",
-    ts: str = "ts",
-    churn_gap_days: float = 7.0,
-    bin_seconds: int = 86400,
-    z: float = 1.96,
-) -> DataFrame:
-    """Kaplan–Meier curve with the Greenwood variance and log-log
-    confidence bands (Greenwood 1926; Kalbfleisch & Prentice 2002
-    §1.4 — the transform whose bands stay inside [0, 1], what
-    lifelines/survfit print by default):
-
-        Var[S(t)] = S(t)^2 * G(t),  G(t) = sum_{t_i <= t} d_i /
-                                            (n_i (n_i - d_i))
-        theta = ln(-ln S), se_theta = sqrt(G)/|ln S|
-        lo = exp(-exp(theta + z se_theta)), hi = exp(-exp(theta - z
-        se_theta))
-
-    Same curve construction as kaplan_meier (identical risk sets and
-    ln-fold survival); G(t) folds over the same running window with
-    integer-ratio terms, so both the estimate and its bands are
-    cross-engine deterministic. Bands are NULL where undefined
-    (S = 1: no deaths yet; S = 0: exhausted risk set)."""
-    gap_us = int(round(float(churn_gap_days) * 86400e6))
-    bin_us = int(bin_seconds) * 1_000_000
-    us = F.unix_micros(F.col(ts).cast("timestamp"))
-    d = df.select(F.col(entity).alias("__e"), us.alias("__us"))
-    spans = d.groupBy("__e").agg(
-        F.min("__us").alias("__s"), F.max("__us").alias("__t")
-    )
-    mx = d.agg(F.max("__us").alias("__mx"))
-    spans = spans.crossJoin(F.broadcast(mx))
-    sv = spans.select(
-        F.expr(f"(__t - __s) div {bin_us}").alias("duration_bin"),
-        (F.col("__t") <= F.col("__mx") - F.lit(gap_us)).alias("__obs"),
-    )
-    curve = sv.groupBy("duration_bin").agg(
-        F.sum(F.when(F.col("__obs"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_events"),
-        F.sum(F.when(F.col("__obs"), 0).otherwise(1))
-        .cast("long")
-        .alias("n_censored"),
-    )
-    w = Window.orderBy("duration_bin")
-    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    leave = F.col("n_events") + F.col("n_censored")
-    curve = curve.withColumn(
-        "n_risk",
-        (
-            F.sum(leave).over(w_all)
-            - F.coalesce(F.sum(leave).over(w_prev), F.lit(0))
-        ).cast("long"),
-    )
-    term = F.when(
-        F.col("n_events") < F.col("n_risk"),
-        F.log(
-            (F.col("n_risk") - F.col("n_events")).cast("double")
-            / F.col("n_risk").cast("double")
-        ),
-    ).otherwise(F.lit(0.0))
-    gterm = F.when(
-        F.col("n_events") < F.col("n_risk"),
-        F.col("n_events").cast("double")
-        / (
-            F.col("n_risk").cast("double")
-            * (F.col("n_risk") - F.col("n_events")).cast("double")
-        ),
-    ).otherwise(F.lit(0.0))
-    curve = (
-        curve.withColumn("__term", term)
-        .withColumn("__gterm", gterm)
-        .withColumn(
-            "__zero",
-            F.max(
-                F.when(
-                    F.col("n_events") == F.col("n_risk"), 1
-                ).otherwise(0)
-            ).over(w_cum),
-        )
-    )
-    lnsum = F.aggregate(
-        F.collect_list("__term").over(w_cum),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    gsum = F.aggregate(
-        F.collect_list("__gterm").over(w_cum),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    km = F.when(F.col("__zero") == 1, F.lit(0.0)).otherwise(F.exp(lnsum))
-    curve = curve.withColumn("__km", km).withColumn("__g", gsum)
-    s = F.col("__km")
-    g = F.col("__g")
-    se = s * F.sqrt(g)
-    defined = (s > 0) & (s < 1)
-    theta = F.log(-F.log(s))
-    seth = F.sqrt(g) / F.abs(F.log(s))
-    lo = F.exp(-F.exp(theta + F.lit(z) * seth))
-    hi = F.exp(-F.exp(theta - F.lit(z) * seth))
-    return curve.select(
-        "duration_bin",
-        "n_risk",
-        "n_events",
-        "n_censored",
-        s.alias("km_survival"),
-        F.when(defined, se).alias("se_greenwood"),
-        F.when(defined, lo).alias("lo95"),
-        F.when(defined, hi).alias("hi95"),
-    )

@@ -1847,88 +1847,3 @@ def pmi_pairs(
     return out.orderBy(
         F.desc("pmi"), "word_a", "word_b"
     ).limit(int(k))
-
-
-def kneser_ney_score(
-    df: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Interpolated Kneser-Ney BIGRAM LM score, trained on the corpus
-    itself (Kneser & Ney 1995; the interpolated form and the fixed
-    discount follow Chen & Goodman 1998 §2.7 — the smoothing that wins
-    their study and underlies KenLM):
-
-        p(w2 | w1) = max(c(w1 w2) - D, 0) / c(w1 ·)
-                     + (D * N1+(w1 ·) / c(w1 ·)) * N1+(· w2) / N1+(· ·)
-
-    where N1+(w1 ·) counts DISTINCT continuations of w1, N1+(· w2)
-    counts distinct contexts of w2 (the continuation probability that
-    makes "Francisco" cheap despite "San Francisco" being frequent —
-    the whole point of KN), and N1+(· ·) is the bigram-type total.
-    kn_nll(doc) = mean -ln p over the doc's bigram occurrences.
-
-    Compared to bigram_logprob_score's add-alpha baseline this scores
-    REUSED word combinations properly: template/boilerplate docs whose
-    bigrams are frequent but whose continuations are narrow separate
-    from genuinely fluent text.
-
-    Shape at scale: one bigram-keyed count aggregation; context totals,
-    forward/backward continuation counts AND the type total all derive
-    from that one c12 frame (no second corpus pass); the occurrence
-    stream joins back by bigram with map-side combine — occurrence-
-    linear, no self-join, hot bigrams hash-partition like any key.
-    """
-    from mpds_spark.operators.util import scratch_persist
-
-    d = df.withColumn("__ws", words_col(text))
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size("__ws") - 2),
-        lambda i: F.struct(
-            F.element_at("__ws", i + 1).alias("w1"),
-            F.element_at("__ws", i + 2).alias("w2"),
-        ),
-    )
-    occ = (
-        d.filter(F.size("__ws") >= 2)
-        .select(F.col(key), F.explode(bigrams).alias("__b"))
-        .select(key, F.col("__b.w1").alias("w1"),
-                F.col("__b.w2").alias("w2"))
-    )
-    c12 = scratch_persist(
-        occ.groupBy("w1", "w2").agg(
-            F.count(F.lit(1)).cast("long").alias("c12")
-        )
-    )
-    c1 = c12.groupBy("w1").agg(
-        F.sum("c12").cast("long").alias("c1"),
-        F.count(F.lit(1)).cast("long").alias("n1fw"),
-    )
-    bw = c12.groupBy("w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n1bw")
-    )
-    # bigram-type total: a bounded fit-style collect (one long), same
-    # idiom as bigram_logprob_score's vocabulary size
-    t_types = int(c12.count())
-    dd = F.lit(float(discount))
-    p = (
-        F.greatest(F.col("c12").cast("double") - dd, F.lit(0.0))
-        / F.col("c1").cast("double")
-        + (dd * F.col("n1fw").cast("double")
-           / F.col("c1").cast("double"))
-        * (F.col("n1bw").cast("double") / F.lit(float(t_types)))
-    )
-    probs = (
-        c12.join(c1, "w1")
-        .join(bw, "w2")
-        .withColumn("__nlp", -F.log(p))
-    )
-    return (
-        occ.join(probs.select("w1", "w2", "__nlp"), ["w1", "w2"])
-        .groupBy(key)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.avg("__nlp").alias("kn_nll"),
-        )
-    )

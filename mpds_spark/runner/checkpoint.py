@@ -44,6 +44,15 @@ def _manifest_path(out_dir: str, bucket: int) -> str:
     return os.path.join(out_dir, "_lineage", f"bucket_{bucket:05d}.json")
 
 
+def _commit_manifest(out_dir: str, bucket: int, manifest: dict) -> None:
+    """Write to a temp file, then rename over the old manifest: a reader
+    sees the previous manifest or the new one, never a torn write."""
+    path = _manifest_path(out_dir, bucket)
+    with open(path + ".tmp", "w") as fh:
+        json.dump(manifest, fh)
+    os.replace(path + ".tmp", path)
+
+
 def read_lineage(out_dir: str) -> list[dict]:
     d = os.path.join(out_dir, "_lineage")
     if not os.path.isdir(d):
@@ -117,10 +126,7 @@ def run_partitioned(
                 "spec_hash": sh,
                 "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
-            tmp = _manifest_path(out_dir, b) + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            os.replace(tmp, _manifest_path(out_dir, b))  # atomic commit
+            _commit_manifest(out_dir, b, manifest)
             processed.append(b)
         except Exception as e:  # noqa: BLE001
             manifest = {
@@ -130,13 +136,19 @@ def run_partitioned(
                 "input_fingerprint": input_fingerprint,
                 "spec_hash": sh,
             }
-            with open(_manifest_path(out_dir, b), "w") as fh:
-                json.dump(manifest, fh)
+            _commit_manifest(out_dir, b, manifest)
             failed.append(b)
     return {"processed": processed, "skipped": done, "failed": failed}
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "bucket=*")
-    )
+    """Read back only the buckets whose manifest is marked done. A bucket
+    whose last run failed, or that has no manifest, is left out even when
+    an older run's parquet is still on disk. basePath keeps the `bucket`
+    partition column."""
+    paths = [
+        os.path.join(out_dir, f"bucket={m['bucket']}")
+        for m in read_lineage(out_dir)
+        if m.get("status") == "done"
+    ]
+    return spark.read.option("basePath", out_dir).parquet(*paths)

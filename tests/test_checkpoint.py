@@ -2,6 +2,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import make_entity_series
 
@@ -92,3 +93,41 @@ def test_failed_bucket_recorded_and_retried(spark, tmp_path):
     r2 = run_partitioned(spark, df, _transform, out, n_buckets=3, spec="v1")
     assert r2["processed"] == [failed_bucket]
     assert read_output(spark, out).count() == len(pdf)
+
+
+def test_read_output_skips_stale_bucket_of_failed_rerun(spark, tmp_path):
+    """A v2 rerun that fails on one bucket leaves that bucket's v1 parquet
+    on disk under a failed manifest. read_output must return exactly the
+    v2 rows of the buckets the rerun committed, none of the stale v1 rows."""
+    pdf = make_entity_series(n_entities=8, rows_per=10, seed=11)
+    df = spark.createDataFrame(pdf)
+    out = str(tmp_path / "ckpt4")
+
+    def tagged(spec):
+        return lambda part: _transform(part).withColumn("spec", F.lit(spec))
+
+    r1 = run_partitioned(spark, df, tagged("v1"), out, n_buckets=4, spec="v1")
+    assert sorted(r1["processed"]) == [0, 1, 2, 3]
+    calls = {"n": 0}
+
+    def flaky_v2(part):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("injected failure")
+        return tagged("v2")(part)
+
+    r2 = run_partitioned(spark, df, flaky_v2, out, n_buckets=4, spec="v2")
+    assert len(r2["failed"]) == 1
+    failed = r2["failed"][0]
+    assert not [f for f in os.listdir(os.path.join(out, "_lineage"))
+                if f.endswith(".tmp")]
+    stale = spark.read.parquet(os.path.join(out, f"bucket={failed}")).toPandas()
+    assert len(stale) > 0 and set(stale["spec"]) == {"v1"}
+
+    got = read_output(spark, out).toPandas()
+    assert set(got["spec"]) == {"v2"}
+    assert sorted(set(got["bucket"])) == sorted(r2["processed"])
+    exp = pdf[~pdf["entity_id"].isin(set(stale["entity_id"]))]
+    assert sorted(zip(got["entity_id"], got["ts"])) == sorted(
+        zip(exp["entity_id"], exp["ts"])
+    )

@@ -174,33 +174,3 @@ def test_label_propagation_planted_communities(spark):
     assert {got[v] for v in c1} != {got[v] for v in c2}
 
 
-def test_aa_fold_gen_group_spans_batches():
-    """The r6 streaming Adamic-Adar fold must carry group state across
-    Arrow batch boundaries: a (x,y) group split across two batches
-    folds identically to the single-batch fold."""
-    import math
-
-    import pyarrow as pa
-
-    from mpds_spark.operators.graph import _aa_fold_gen
-
-    def mk(rows):
-        xs, ys, ds = zip(*rows)
-        return pa.record_batch(
-            [pa.array(xs, pa.int64()), pa.array(ys, pa.int64()),
-             pa.array(ds, pa.int64())],
-            names=["x", "y", "__deg"],
-        )
-
-    rows = [(1, 2, 3), (1, 2, 5), (1, 2, 7), (4, 9, 2), (4, 9, 4)]
-    whole = list(_aa_fold_gen([mk(rows)]))[0]
-    split = list(_aa_fold_gen([mk(rows[:2]), mk(rows[2:])]))[0]
-    assert whole.to_pydict() == split.to_pydict()
-    got = whole.to_pydict()
-    # literal sequential fold reference
-    acc = 0.0
-    for d in (3, 5, 7):
-        acc = acc + 1.0 / math.log(float(d))
-    assert got["x"] == [1, 4]
-    assert got["common_neighbors"] == [3, 2]
-    assert got["aa"][0] == acc

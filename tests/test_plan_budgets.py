@@ -488,9 +488,6 @@ BUDGETS = {
     # eb: persisted cell histogram (cached-branch convention); the
     # 1-row alpha/beta broadcast is the registered BNLJ
     "eb_shrinkage": {"python": 0, "cartesian": 0, "bnlj": 1},
-    # kn: persisted bigram-count frame (cached-branch convention);
-    # occurrence-linear, no self-join, no BNLJ
-    "kneser_ney_nll": {"python": 0, "cartesian": 0, "bnlj": 0},
     # levene: group window + median agg + global moment agg; the
     # median joins back as a broadcast hash join, never BNLJ
     "levene_test": {"shuffle": 3, "python": 0, "cartesian": 0,
@@ -510,9 +507,6 @@ BUDGETS = {
     # bradley-terry: persisted 1-row iteration frame fans out to the
     # 5-way output union (cached-branch convention)
     "bradley_terry": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # pca: persisted codes + 2080-cell scatter (cached-branch
-    # convention); the 1-row cf x si combine is the registered BNLJ
-    "pca_power_iter": {"python": 0, "cartesian": 0, "bnlj": 1},
     # ransac: persisted day frame; candidate pair join + tol/win
     # broadcasts + sweep/refit joins are the registered bounded BNLJs
     # (465x31 worst case, never a corpus join)
@@ -522,10 +516,6 @@ BUDGETS = {
     # sprt: ONE day agg + tiny cumulative windows
     "sprt_monitor": {"shuffle": 2, "python": 0, "cartesian": 0,
                      "bnlj": 0},
-    # sinkhorn: bin agg + dense collect; the corpus-max 1-row boundary
-    # broadcast is the registered BNLJ; all iterations are ONE fold
-    "sinkhorn_ot": {"shuffle": 3, "python": 0, "cartesian": 0,
-                    "bnlj": 1},
     # kruskal: histogram agg + rank window + broadcast rank join +
     # group agg + tiny folds; 1-row tie combine is the registered BNLJ
     "kruskal_wallis": {"shuffle": 6, "python": 0, "cartesian": 0,
@@ -533,9 +523,6 @@ BUDGETS = {
     # mcnemar: ONE corpus aggregate, nothing else
     "mcnemar_test": {"shuffle": 1, "python": 0, "cartesian": 0,
                      "bnlj": 0},
-    # ljung-box: ONE day agg + 1-row array folds
-    "ljung_box": {"shuffle": 2, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
     # cox: the logrank frame (user lead window + bin agg + tiny curve
     # window) + the 1-row MM fold; corpus-max broadcast is the
     # registered BNLJ
@@ -560,9 +547,6 @@ BUDGETS = {
     # heap, asserted below) + two scope aggs + 6-row join
     "kmv_distinct": {"shuffle": 4, "python": 0, "cartesian": 0,
                      "bnlj": 0},
-    # yule: (source, word) agg + per-source moment agg — one corpus
-    # pass, no join
-    "yule_k": {"shuffle": 2, "python": 0, "cartesian": 0, "bnlj": 0},
     # modularity: persisted edges fan out to the edge-moment and
     # degree-moment branches (cached-branch convention, the
     # degree_assortativity shape); 1-row x 1-row combine is the
@@ -572,10 +556,6 @@ BUDGETS = {
     # pooled fold
     "horvitz_thompson": {"shuffle": 5, "python": 0, "cartesian": 0,
                          "bnlj": 0},
-    # km-ci: the survival_km frame (entity span agg + bin agg + tiny
-    # curve windows); corpus-max broadcast is the registered BNLJ
-    "km_confidence": {"shuffle": 4, "python": 0, "cartesian": 0,
-                      "bnlj": 1},
     # ses: persisted 1-row fold frame fans out to the 9-way alpha
     # grid union (cached-branch convention)
     "ses_alpha_grid": {"python": 0, "cartesian": 0, "bnlj": 0},
@@ -599,12 +579,6 @@ BUDGETS = {
     # l-moments: histogram agg + tiny rank window + moment agg
     "l_moments": {"shuffle": 2, "python": 0, "cartesian": 0,
                   "bnlj": 0},
-    # chao1: (source, word) agg + per-source freq-of-freq agg
-    "chao1_richness": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    # pacf: persisted 1-row Durbin-Levinson frame fans out to the
-    # 5-way lag union (cached-branch convention)
-    "pacf_durbin": {"python": 0, "cartesian": 0, "bnlj": 0},
     # ols-influence: ONE day agg + 1-row moment broadcast back onto
     # the <=31-day frame (registered BNLJ)
     "ols_influence": {"shuffle": 3, "python": 0, "cartesian": 0,
@@ -698,19 +672,6 @@ BUDGETS = {
     # template counts are bounded nested folds on the 1-row frame
     "sample_entropy": {"shuffle": 2, "python": 0, "cartesian": 0,
                        "bnlj": 0},
-    # spectral-entropy: day agg + 1-row collect; the per-k trig
-    # folds and the entropy/flatness folds run on the 1-row frame
-    "spectral_entropy": {"shuffle": 2, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
-    # adamic-adar: persisted-edge cached-branch plan (the printed
-    # plan repeats the cached subtree per reference, so no shuffle
-    # cap); top-k must be a heap (asserted below)
-    # r6: the per-pair z-ascending weight fold is one streaming Arrow
-    # kernel over the (x,y,z)-sorted candidate stream
-    "adamic_adar": {"python": 1, "cartesian": 0, "bnlj": 0},
-    # hits: cached-branch plan; the two BNLJ are the registered
-    # 1-row broadcast max-score joins
-    "hits_scores": {"python": 0, "cartesian": 0, "bnlj": 2},
     # ndcg: persisted part-cell frame (cached-branch); the two BNLJ
     # join the three 1-row side frames; both top-10s are heaps
     # (asserted below)
@@ -733,13 +694,6 @@ BUDGETS = {
     # count folds day-ascending on the 1-row frame
     "bland_altman": {"shuffle": 2, "python": 0, "cartesian": 0,
                      "bnlj": 0},
-    # jensen-shannon: ONE conditional hour agg + 1-row fold over the
-    # <=24-row frame
-    "jensen_shannon": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    # hellinger: same hour agg + 1-row BC fold and exact argmax
-    "hellinger_affinity": {"shuffle": 2, "python": 0,
-                           "cartesian": 0, "bnlj": 0},
     # croston: day agg + 1-row demand-epoch folds
     "croston_forecast": {"shuffle": 2, "python": 0, "cartesian": 0,
                          "bnlj": 0},
@@ -770,67 +724,6 @@ BUDGETS = {
     # rare-words: (source,word) agg + source re-agg
     "rare_word_profile": {"shuffle": 2, "python": 0, "cartesian": 0,
                           "bnlj": 0},
-    # burrows: persisted grid/matrix frames (cached-branch; the
-    # persist barriers are load-bearing — they stop CollapseProject
-    # from inlining the z-matrix into all 380 pair expressions); the
-    # BNLJ prints are the ONE registered 1-row broadcast totals
-    # join, reprinted per cached branch (near/far legs x persists)
-    "burrows_delta": {"python": 0, "cartesian": 0, "bnlj": 8},
-    # kendall-stuart randomness screens: day agg + 1-row exact folds
-    "turning_points": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    "difference_sign": {"shuffle": 2, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    # buishand / snht: day agg + 1-row exact partial-sum folds
-    "buishand_range": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    "snht_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
-    # honore/sichel word-count chain; spiegelhalter single corpus agg
-    "honore_sichel": {"shuffle": 3, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    "spiegelhalter_z": {"shuffle": 1, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    # zero-inflation user agg chain; laplace single corpus agg
-    "zero_inflation": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    "laplace_trend": {"shuffle": 1, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # zonemap: 1-row min/max fit broadcast onto two bin-agg branches
-    # (branch recompute; all exchanges beyond the two bin groupBys
-    # carry <=32-row frames); cdc: explode + two aggs
-    "zonemap_skipping": {"shuffle": 7, "python": 0, "cartesian": 0,
-                         "bnlj": 3},
-    # r6: boundary scan is one vectorized Arrow batch kernel (numpy
-    # int64 sliding-dot, guide §4.2) — exactly one python node; chunk
-    # extraction + md5 + both aggregations stay JVM-side
-    "cdc_chunking": {"shuffle": 3, "python": 1, "cartesian": 0,
-                     "bnlj": 0},
-    # DL meta-analysis / poisson rate: day agg + 1-row folds
-    "dersimonian_laird": {"shuffle": 3, "python": 0,
-                          "cartesian": 0, "bnlj": 0},
-    "poisson_rate_test": {"shuffle": 2, "python": 0,
-                          "cartesian": 0, "bnlj": 0},
-    # deviance day fold; collision audit distinct agg
-    "poisson_deviance_gof": {"shuffle": 2, "python": 0,
-                             "cartesian": 0, "bnlj": 0},
-    "hash_collision_audit": {"shuffle": 2, "python": 0,
-                             "cartesian": 0, "bnlj": 0},
-    # LZ parse / spectral flatness: day agg + 1-row folds
-    "lz_complexity": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    "spectral_flatness": {"shuffle": 2, "python": 0,
-                          "cartesian": 0, "bnlj": 0},
-    # week-over-week paired tests: day agg + 1-row pair folds
-    "sign_test_wow": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    "wilcoxon_signed_rank": {"shuffle": 2, "python": 0,
-                             "cartesian": 0, "bnlj": 0},
-    # lang eval pair: doc map + label aggs
-    "lang_confusion_audit": {"shuffle": 2, "python": 0,
-                             "cartesian": 0, "bnlj": 0},
-    "tokenizer_fertility": {"shuffle": 4, "python": 0,
-                            "cartesian": 0, "bnlj": 0},
 }
 
 
@@ -866,12 +759,9 @@ def test_stump_takeordered(plans):
 
 
 def test_graph_topk_heaps(plans):
-    """adamic_adar's top-12 and both hits_scores top-10s must plan as
-    TakeOrderedAndProject (per-partition heaps) — a global sort of
-    the candidate-pair / node-score frames is the 10^9-node scale
-    wart the r4 topk_users fix banned."""
-    assert "TakeOrderedAndProject" in plans["adamic_adar"]
-    assert "TakeOrderedAndProject" in plans["hits_scores"]
+    """ndcg_eval's ranking and ideal top-10s must plan as
+    TakeOrderedAndProject (per-partition heaps) — a global sort of the
+    part-revenue frame is the scale wart the r4 topk_users fix banned."""
     assert "TakeOrderedAndProject" in plans["ndcg_eval"]
 
 

@@ -74,23 +74,17 @@ BNLJ_BY_DESIGN = {
     "kruskal_wallis",      # 1-row tie-term combine
     "logrank_test",        # broadcast 1-row corpus-max censor boundary
     "mann_kendall",        # bounded 31x31 day-pair sweep + 1-row combine
-    "pca_power_iter",      # 1-row cf x si combine
     "ransac_trend",        # bounded 465x31 candidate sweep joins
     "runs_test",           # 1-row combine
-    "sinkhorn_ot",         # 1-row corpus-max bin-boundary broadcast
     "newman_modularity",   # 1-row edge-moment x 1-row degree-moment
-    "km_confidence",       # broadcast 1-row corpus-max censor boundary
     "ledoit_wolf_shrinkage",  # si broadcast + 1-row moment combines
     "ols_influence",       # broadcast 1-row moment fit x day frame
     "pr_curve_ap",         # 1-row AP fold x best-F1 row combine
     # bounded 1-row combines registered in BUDGETS with bnlj >= 1
     # (sync-checked against test_plan_budgets by name):
-    "hits_scores",         # 1-row hub/auth norm broadcast per sweep
-    "burrows_delta",       # 1-row corpus-moment broadcast
     "mood_median_test",    # 1-row grand-median broadcast
     "ndcg_eval",           # 1-row ideal-DCG combine
     "nelson_aalen",        # broadcast 1-row corpus-max censor boundary
-    "zonemap_skipping",    # 1-row min/max fit + two 1-row layout aggs
 }
 # Queries whose CONSTRUCTION runs eager work (iterative CC: per-round
 # checkpoint actions) are excluded from the plan inventory.
@@ -216,8 +210,8 @@ def test_bnlj_registry_synced_with_budgets():
     """Every BUDGETS entry in tests/test_plan_budgets.py that
     registers bnlj >= 1 must also appear in BNLJ_BY_DESIGN above
     (and vice versa is NOT required — budget-less queries may be
-    registered here directly). Guards the drift that let
-    hits_scores ship with a budgeted BNLJ but no registry row."""
+    registered here directly). Guards against a query shipping with a
+    budgeted BNLJ but no registry row."""
     need = {n for n, b in _budgets().items() if b.get("bnlj", 0) > 0}
     missing = sorted(need - BNLJ_BY_DESIGN)
     assert not missing, (
@@ -247,3 +241,39 @@ def test_catalog_registries_synced():
         ("_PRIORITY", set(__spark_entry__._PRIORITY)),
     ):
         assert reg <= set(QUERIES), (name, sorted(reg - set(QUERIES)))
+
+
+def test_no_orphan_module_privates():
+    """Every module-level `_name` and `SQL_*` constant defined under
+    mpds_spark/ is loaded somewhere in the package, so retiring a catalog
+    entry cannot leave its helpers or oracle SQL behind."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "mpds_spark"
+    )
+    defined, loaded = {}, set()
+    for d, _, files in os.walk(pkg):
+        for f in (f for f in files if f.endswith(".py")):
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                    names = [node.name]
+                elif isinstance(node, ast.Assign):
+                    names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+                else:
+                    continue
+                for n in names:
+                    if n.startswith("SQL_") or (n[0] == "_" and n[:2] != "__"):
+                        defined[n] = os.path.relpath(path, pkg)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    loaded.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    loaded.add(node.attr)
+    assert defined
+    orphans = sorted(f"{p}:{n}" for n, p in defined.items() if n not in loaded)
+    assert not orphans, orphans

@@ -2,7 +2,7 @@ import numpy as np
 import pandas as pd
 
 from mpds_spark.operators.asof import asof_join
-from mpds_spark.operators.salting import hot_entity_stats, salted_asof_join
+from mpds_spark.operators.salting import salted_asof_join
 from mpds_spark.operators.windows import derived_features
 
 
@@ -77,55 +77,14 @@ def test_window_ops_survive_hot_entity(spark):
     )
 
 
-def test_hot_entity_stats(spark):
-    lpdf, _ = _skewed_tables(hot_mult=50)
-    stats = hot_entity_stats(spark.createDataFrame(lpdf))
-    assert stats[0][0] == "e0"
-    assert stats[0][2] > 0.8  # hot entity holds >80% of rows
-
-
-def test_salted_expanding_sum_equals_plain(spark):
-    import numpy as np
-    from pyspark.sql import Window, functions as F
-
-    from mpds_spark.operators.salting import salted_expanding_sum
-
-    lpdf, _ = _skewed_tables(seed=101, hot_mult=60)
-    # integer values -> exact equality between summation trees
-    lpdf["lv"] = np.round(lpdf["lv"] * 100).astype("int64").astype("float64")
-    df = spark.createDataFrame(lpdf)
-    got = (
-        salted_expanding_sum(df, "lv", chunk_span=86400.0)
-        .orderBy("entity_id", "ts")
-        .toPandas()["cumsum"]
-        .to_numpy()
-    )
-    w = (
-        Window.partitionBy("entity_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    exp = (
-        df.withColumn("cumsum", F.sum("lv").over(w))
-        .orderBy("entity_id", "ts")
-        .toPandas()["cumsum"]
-        .to_numpy()
-    )
-    np.testing.assert_array_equal(got, exp)
-
-
-def _hot_series(seed=7, hot_mult=100, null_frac=0.35, int_values=True):
+def _hot_series(seed=7, hot_mult=100, null_frac=0.35):
     """100x hot-entity fixture with CONSECUTIVE integer timestamps per
-    entity: dt == 1 everywhere, so the rate terms are integers and the
-    two-pass summation trees are exact (the bit-equality convention from
-    test_salted_expanding_sum). null_frac of values are null (LOCF food)."""
+    entity: dt == 1 everywhere. null_frac of values are null (LOCF food)."""
     rng = np.random.default_rng(seed)
     frames = []
     for e in range(6):
         n = 30 * (hot_mult if e == 0 else 1)
         vals = rng.normal(size=n)
-        if int_values:
-            vals = np.round(vals * 50).astype("int64").astype("float64")
         vals[rng.uniform(size=n) < null_frac] = np.nan
         frames.append(
             pd.DataFrame(
@@ -155,7 +114,7 @@ def test_salted_locf_bit_equal_to_plain(spark):
     from mpds_spark.operators.backfill import locf
     from mpds_spark.operators.salting import salted_locf
 
-    pdf = _hot_series(int_values=False)  # floats fine: no summation
+    pdf = _hot_series()  # floats fine: no summation
     df = spark.createDataFrame(pdf)
     kw = dict(value="lv", valid_time=3.0, default=-1.0)
     plain = locf(df, **kw).orderBy("entity_id", "ts").toPandas()
@@ -168,52 +127,6 @@ def test_salted_locf_bit_equal_to_plain(spark):
     _assert_cols_equal(
         plain, salted, ["lv_locf", "lv_time_since_sample", "lv_locf_expir"]
     )
-
-
-def test_salted_derived_features_bit_equal_to_plain(spark):
-    """VERDICT r2 #3: all 9 expanding features decomposed two-pass must be
-    bit-equal to the single-window derived_features on integer-valued data
-    (exact summation trees), on the 100x hot-entity fixture with nulls."""
-    from mpds_spark.operators.salting import salted_derived_features
-
-    pdf = _hot_series(int_values=True)
-    df = spark.createDataFrame(pdf)
-    feats = [
-        "dss_avg", "dss_ht_avg", "dss_ht_sq_avg", "dss_max", "dss_min",
-        "dss_rate_avg", "dss_rate_ht_avg", "dss_abs_rate_avg",
-        "dss_abs_rate_ht_avg",
-    ]
-    plain = (
-        derived_features(df, value="lv").orderBy("entity_id", "ts").toPandas()
-    )
-    salted = (
-        salted_derived_features(df, value="lv", chunk_span=256.0)
-        .orderBy("entity_id", "ts")
-        .toPandas()
-    )
-    assert list(salted.columns) == list(df.columns) + feats
-    _assert_cols_equal(plain, salted, feats)
-
-
-def test_salted_derived_features_close_on_floats(spark):
-    """General float data: summation trees differ across chunk boundaries,
-    so the contract is allclose(1e-12), not bit-equality."""
-    from mpds_spark.operators.salting import salted_derived_features
-
-    pdf = _hot_series(seed=13, hot_mult=40, int_values=False)
-    df = spark.createDataFrame(pdf)
-    plain = (
-        derived_features(df, value="lv").orderBy("entity_id", "ts").toPandas()
-    )
-    salted = (
-        salted_derived_features(df, value="lv", chunk_span=100.0)
-        .orderBy("entity_id", "ts")
-        .toPandas()
-    )
-    for c in ("dss_avg", "dss_ht_avg", "dss_abs_rate_ht_avg", "dss_max"):
-        np.testing.assert_allclose(
-            salted[c].to_numpy(), plain[c].to_numpy(), rtol=1e-12, atol=1e-12
-        )
 
 
 def test_salted_key_no_collision_numeric_suffix_entities(spark):
@@ -254,84 +167,6 @@ def test_salted_key_no_collision_numeric_suffix_entities(spark):
     by_e = {r.entity_id: set(salted[salted.entity_id == r.entity_id]["rv"])
             for r in right.collect()}
     assert by_e["u1"] == {100.0} and by_e["u11"] == {200.0}
-
-
-def test_salted_trailing_windows_bit_equal_to_plain(spark):
-    """Time-chunk + boundary-replay trailing windows must be BIT-identical
-    to the single-window trailing_window_features on a 100x hot entity
-    with integer cents — including rows landing EXACTLY on a chunk
-    boundary and exactly at (chunk_end - horizon), the two replay
-    edges."""
-    import datetime as dt
-
-    import numpy as np
-
-    from mpds_spark.operators.salting import salted_trailing_windows
-    from mpds_spark.operators.windows import trailing_window_features
-
-    rng = np.random.default_rng(17)
-    span = 6 * 3600.0  # 6 h chunks over 1 h / 3 h horizons
-    base = dt.datetime(2024, 5, 1)
-    rows, eid = [], 0
-
-    def add(uid, t_us, v):
-        nonlocal eid
-        rows.append(
-            (eid, uid, base + dt.timedelta(microseconds=int(t_us)), int(v))
-        )
-        eid += 1
-
-    # hot entity: 100x the cold ones, spanning ~5 chunks
-    t = 0
-    for _ in range(500):
-        t += int(rng.integers(1, 400) * 1e6)
-        add(1, t, rng.integers(-999, 999))
-    # planted boundary edges for the hot entity: exactly on a chunk
-    # boundary, exactly horizon-distance before one, and 1 us inside
-    for k in (1, 2, 3):
-        add(1, k * span * 1e6, 111)
-        add(1, k * span * 1e6 - 3 * 3600 * 1e6, 222)   # == chunk_end - wmax
-        add(1, k * span * 1e6 - 1, 333)
-    for uid in (2, 3, 4):
-        t = int(rng.integers(0, 3600) * 1e6)
-        for _ in range(5):
-            t += int(rng.integers(1, 7200) * 1e6)
-            add(uid, t, rng.integers(-999, 999))
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, c long"
-    )
-    horizons = {"1h": 3600.0, "3h": 3 * 3600.0}
-    kw = dict(value="c", ts="ts", horizons=horizons, extra=("event_id",))
-    plain = {
-        r["event_id"]: r
-        for r in trailing_window_features(df, by="user_id", **kw).collect()
-    }
-    salted = {
-        r["event_id"]: r
-        for r in salted_trailing_windows(
-            df, entity="user_id", chunk_span=span, **kw
-        ).collect()
-    }
-    assert set(plain) == set(salted) and len(plain) == len(rows)
-    for k, p in plain.items():
-        assert salted[k].asDict() == p.asDict(), k
-
-
-def test_salted_trailing_windows_rejects_short_chunk(spark):
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from mpds_spark.operators.salting import salted_trailing_windows
-
-    df = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1), 1)], "e long, ts timestamp, c long"
-    )
-    with _pytest.raises(ValueError, match="chunk_span"):
-        salted_trailing_windows(
-            df, value="c", ts="ts", entity="e",
-            horizons={"1d": 86400.0}, chunk_span=3600.0,
-        )
 
 
 def test_hot_key_audit_matches_counter(spark):

@@ -1286,71 +1286,6 @@ def test_eb_shrinkage_mom_rebuild(spark):
         assert lo <= r["shrunk_rate"] <= hi
 
 
-def test_kneser_ney_vs_literal_model(spark):
-    """KN probabilities vs a literal python Kneser-Ney bigram model
-    (Chen & Goodman 1998 interpolated form, D=0.75) on every doc, and
-    the probability-simplex sanity: for a planted context the KN
-    distribution over continuations sums to 1."""
-    from mpds_spark.queries import q_kneser_ney_nll
-
-    out = {
-        r["doc_id"]: r
-        for r in q_kneser_ney_nll(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import math
-
-    import duckdb
-    from collections import Counter, defaultdict
-
-    texts = duckdb.sql(
-        "SELECT doc_id, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    c12 = Counter()
-    for _, t in texts:
-        w = t.split()
-        c12.update(zip(w, w[1:]))
-    c1 = defaultdict(int)
-    n1fw = defaultdict(int)
-    n1bw = defaultdict(int)
-    for (w1, w2), c in c12.items():
-        c1[w1] += c
-        n1fw[w1] += 1
-        n1bw[w2] += 1
-    T = len(c12)
-    D = 0.75
-
-    def p(w1, w2):
-        return max(c12[(w1, w2)] - D, 0.0) / c1[w1] + (
-            D * n1fw[w1] / c1[w1]
-        ) * (n1bw[w2] / T)
-
-    # simplex check over every observed continuation of one context
-    # plus the continuation mass it spreads over unseen words: for
-    # corpus-trained KN the observed continuations alone carry
-    # sum(max(c-D,0))/c1 + D*n1fw/c1 * sum(n1bw(w2) for seen w2)/T
-    w1 = max(c1, key=lambda k: (c1[k], k))
-    seen = [w2 for (a, w2) in c12 if a == w1]
-    mass = sum(p(w1, w2) for w2 in seen)
-    full = sum(
-        (D * n1fw[w1] / c1[w1]) * (n1bw[w2] / T)
-        for w2 in set(n1bw) - set(seen)
-    )
-    assert abs(mass + full - 1.0) < 1e-9
-
-    for doc_id, t in texts:
-        w = t.split()
-        if len(w) < 2:
-            assert doc_id not in out
-            continue
-        nll = [-math.log(p(a, b)) for a, b in zip(w, w[1:])]
-        r = out[doc_id]
-        assert r["n_bigrams"] == len(nll)
-        assert abs(r["kn_nll"] - sum(nll) / len(nll)) < 1e-5
-
-
 def test_levene_brown_forsythe_rebuild(spark):
     """F statistic vs a literal python Brown-Forsythe computation
     (median-centered absolute deviations, one-way ANOVA on them),
@@ -1623,116 +1558,6 @@ def test_bradley_terry_mm_rebuild(spark):
     assert resid(p) < resid([0.2] * K)
 
 
-def test_pca_power_iter_rebuild_and_bounds(spark):
-    """Loadings/eigenvalue vs a literal python rebuild of the SAME 8
-    power-iteration steps (identical op order), plus the spectral
-    bounds: the Rayleigh quotient after R steps is monotone in R,
-    lies in [mean eigenvalue, lambda_max], and the loading vector is
-    unit norm. On this near-isotropic random cloud 8 steps do NOT
-    converge to the eigh top vector — small explained_share + slow
-    convergence IS the audit's no-dominant-direction signal; the
-    planted-anisotropy test below covers the converging regime."""
-    from mpds_spark.queries import _PCA_D, _PCA_R, q_pca_power_iter
-
-    rows = sorted(
-        q_pca_power_iter(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["component"],
-    )
-    import duckdb
-    import numpy as np
-
-    vecs = duckdb.sql(
-        "SELECT list_transform(embedding, x ->"
-        " CAST(floor(abs(CAST(x AS DOUBLE))*1000 + 0.5)"
-        " * sign(CAST(x AS DOUBLE)) AS BIGINT)) FROM"
-        " '/root/testdata/sf0.001/embeddings.parquet'"
-    ).fetchall()
-    D = _PCA_D
-    X = [v[0] for v in vecs]
-    n = len(X)
-    S = [[0] * D for _ in range(D)]
-    ssum = [0] * D
-    for q in X:
-        for i in range(D):
-            ssum[i] += q[i]
-            for j in range(i, D):
-                S[i][j] += q[i] * q[j]
-    for i in range(D):
-        for j in range(i):
-            S[i][j] = S[j][i]
-    C = [
-        [(S[i][j] - ssum[i] * ssum[j] / n) / (n - 1) for j in range(D)]
-        for i in range(D)
-    ]
-
-    def mv(v):
-        return [
-            sum(C[i][j] * v[j] for j in range(D)) for i in range(D)
-        ]
-
-    v = [1.0 / D ** 0.5] * D
-    lams = []
-    for _ in range(_PCA_R):
-        u = mv(v)
-        m = sum(e * e for e in u) ** 0.5
-        v = [e / m for e in u]
-        lams.append(sum(a * b for a, b in zip(v, mv(v))))
-    uf = mv(v)
-    lam = sum(a * b for a, b in zip(v, uf))
-    mf = sum(e * e for e in uf) ** 0.5
-    loadings = [e / mf for e in uf]
-    for r, w in zip(rows, loadings):
-        assert abs(r["loading"] - w) < 1e-6
-    assert abs(rows[0]["eigenvalue"] - lam) < 1e-4
-
-    Cn = np.array(C)
-    evals = np.linalg.eigvalsh(Cn)
-    assert lams == sorted(lams), "Rayleigh quotient must be monotone"
-    assert lam <= evals[-1] + 1e-6
-    assert lam >= float(np.trace(Cn)) / D - 1e-6
-    assert abs(np.linalg.norm(np.array(loadings)) - 1.0) < 1e-9
-    assert abs(
-        rows[0]["explained_share"] - lam / float(np.trace(Cn))
-    ) < 1e-4
-
-
-def test_pca_power_iter_planted_direction(spark):
-    """On a planted-anisotropy cloud (one dominant axis, eigengap
-    large) 8 power iterations DO converge: |cos| vs the numpy eigh
-    top eigenvector > 0.999 and explained_share is large."""
-    import os
-    import tempfile
-
-    import numpy as np
-
-    from mpds_spark.queries import q_pca_power_iter
-
-    rng = np.random.default_rng(7)
-    d, n = 64, 120
-    axis = rng.standard_normal(d)
-    axis /= np.linalg.norm(axis)
-    X = (
-        np.outer(rng.standard_normal(n) * 0.5, axis)
-        + rng.standard_normal((n, d)) * 0.02
-    ).astype(np.float32)
-    with tempfile.TemporaryDirectory() as td:
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(X)],
-            "vec_id long, embedding array<float>",
-        ).write.parquet(os.path.join(td, "embeddings.parquet"))
-        rows = sorted(
-            q_pca_power_iter(spark, td).collect(),
-            key=lambda r: r["component"],
-        )
-    Q = np.floor(np.abs(X.astype(np.float64)) * 1000 + 0.5) * np.sign(X)
-    C = np.cov(Q, rowvar=False, ddof=1)
-    evals, evecs = np.linalg.eigh(C)
-    v = np.array([r["loading"] for r in rows])
-    assert abs(abs(float(np.dot(v, evecs[:, -1]))) - 1.0) < 1e-3
-    assert rows[0]["explained_share"] > 0.8
-    assert abs(rows[0]["eigenvalue"] - evals[-1]) / evals[-1] < 1e-3
-
-
 def test_ransac_trend_exhaustive_rebuild(spark):
     """Winning candidate, inlier count and the exact-integer OLS refit
     vs a literal python sweep of every two-day line (Fischler & Bolles
@@ -1857,61 +1682,6 @@ def test_sprt_monitor_rebuild(spark):
         assert r["decision"] == want
 
 
-def test_sinkhorn_ot_rebuild_and_marginals(spark):
-    """OT cost vs a literal python Sinkhorn rebuild (same kernel
-    literals, same fold order), the marginal-residual convergence
-    certificate, and the transport-plan mass balance."""
-    from mpds_spark.queries import _SK_K, _SK_R, q_sinkhorn_ot
-
-    r = q_sinkhorn_ot(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "WITH e AS (SELECT event_type AS t,"
-        " CAST(floor(abs(value)*100+0.5)*sign(value) AS BIGINT) AS c"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " WHERE event_type IN ('purchase','click')),"
-        " mx AS (SELECT max(c) AS mx FROM e)"
-        " SELECT t, CAST(c // (mx // 10 + 1) AS BIGINT) AS b,"
-        " count(*) FROM e, mx GROUP BY 1, 2"
-    ).fetchall()
-    pa = [0] * 10
-    pb = [0] * 10
-    for t, b, c in rows:
-        (pa if t == "purchase" else pb)[b] += c
-    a = [x / sum(pa) for x in pa]
-    b = [x / sum(pb) for x in pb]
-    K = [[_SK_K[abs(i - j)] for j in range(10)] for i in range(10)]
-    v = [1.0] * 10
-    for _ in range(_SK_R):
-        u = [
-            a[i] / sum(K[i][j] * v[j] for j in range(10))
-            if a[i] else 0.0
-            for i in range(10)
-        ]
-        v = [
-            b[j] / sum(K[i][j] * u[i] for i in range(10))
-            if b[j] else 0.0
-            for j in range(10)
-        ]
-    P = [[u[i] * K[i][j] * v[j] for j in range(10)] for i in range(10)]
-    cost = sum(
-        P[i][j] * abs(i - j) for i in range(10) for j in range(10)
-    )
-    assert r["iterations"] == _SK_R
-    assert abs(r["ot_cost"] - cost) < 1e-5
-    # column marginals exact after the final v update; row residual
-    # small and equal to the reported certificate
-    for j in range(10):
-        colsum = sum(P[i][j] for i in range(10))
-        assert abs(colsum - b[j]) < 1e-9
-    resid = sum(
-        abs(sum(P[i][j] for j in range(10)) - a[i]) for i in range(10)
-    )
-    assert abs(r["row_marginal_resid"] - resid) < 1e-5
-    assert r["row_marginal_resid"] < 0.01
-
-
 def test_kruskal_wallis_rebuild(spark):
     """H and the tie-corrected H vs a literal python average-rank
     computation over every event row (Kruskal & Wallis 1952 eq. 1.1
@@ -1981,42 +1751,6 @@ def test_mcnemar_cells_and_consistency_with_kappa(spark):
         ) < 1e-6
     kap = q_cohens_kappa(spark, "/root/testdata/sf0.001").collect()[0]
     assert r["n_docs"] == kap["n_docs"]
-
-
-def test_ljung_box_rebuild(spark):
-    """Q_LB / Q_BP / rho_k vs a literal python rebuild from the daily
-    counts (Ljung & Box 1978 eq. 4; Box & Pierce 1970), the exact
-    integer den, and internal consistency Q_LB >= Q_BP (each lag term
-    is inflated by n/(n-k) >= 1)."""
-    from mpds_spark.queries import q_ljung_box
-
-    r = q_ljung_box(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        c for (c,) in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    s = sum(ys)
-    zs = [n * y - s for y in ys]
-    den = sum(z * z for z in zs)
-    rho = {
-        k: sum(zs[t] * zs[t - k] for t in range(k, n)) / den
-        for k in range(1, 9)
-    }
-    qlb = n * (n + 2) * sum(rho[k] ** 2 / (n - k) for k in range(1, 9))
-    qbp = n * sum(rho[k] ** 2 for k in range(1, 9))
-    assert (r["n_days"], r["den_z2"]) == (n, den)
-    assert abs(r["rho_1"] - rho[1]) < 1e-6
-    assert abs(r["rho_7"] - rho[7]) < 1e-6
-    assert abs(r["q_ljung_box"] - qlb) < 1e-4
-    assert abs(r["q_box_pierce"] - qbp) < 1e-4
-    assert r["q_ljung_box"] >= r["q_box_pierce"]
-    assert r["reject_white"] == (qlb > 15.507)
 
 
 def test_cox_ph_rebuild_and_logrank_consistency(spark):
@@ -2355,47 +2089,6 @@ def test_kmv_rebuild(spark):
     assert merged == sorted(scopes["all"])[:_KMV_K]
 
 
-def test_yule_k_rebuild(spark):
-    """K and Herdan C vs a literal python frequency-of-frequencies
-    rebuild per source, plus the repeat-rate identity: K/10^4 equals
-    the probability two distinct token draws collide, computed from
-    the same counts."""
-    import math
-    from collections import Counter, defaultdict
-
-    from mpds_spark.queries import q_yule_k
-
-    rows = {
-        r["source"]: r
-        for r in q_yule_k(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT source, trim(text) FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    per = defaultdict(Counter)
-    import re as _re
-
-    for s, txt in raw:
-        per[s].update(_re.split(r"\s+", txt))
-    assert set(per) == set(rows)
-    for s, cnt in per.items():
-        n = sum(cnt.values())
-        v = len(cnt)
-        s2 = sum(c * c for c in cnt.values())
-        k = 1e4 * (s2 - n) / (n * n)
-        r = rows[s]
-        assert (r["n_tokens"], r["vocab"], r["sum_c2"]) == (n, v, s2)
-        assert abs(r["yule_k"] - k) < 1e-4
-        assert abs(r["herdan_c"] - math.log(v) / math.log(n)) < 1e-6
-        # repeat-rate identity (sampling WITH replacement form)
-        coll = sum(c * (c - 1) for c in cnt.values()) / (n * (n - 1))
-        k_alt = 1e4 * coll * (n - 1) / n
-        assert abs(k - k_alt) < 1e-9 * max(1.0, k)
-
-
 def test_newman_modularity_rebuild(spark):
     """Q vs a literal python rebuild of the brand partition over the
     naively-enumerated co-order edge set, the exact integer cells,
@@ -2499,52 +2192,6 @@ def test_horvitz_thompson_unbiased_and_consistent(spark):
     }
     for g in ("src0", "src1", "src2"):
         assert ss[g]["n_docs"] == rows[g]["n_kept"]
-
-
-def test_km_confidence_rebuild_and_km_consistency(spark):
-    """Greenwood SE and log-log bands vs a literal python rebuild on
-    the same curve, band ordering lo < S < hi where defined, bands in
-    [0,1], and cross-query consistency: the curve columns must equal
-    survival_km's exactly."""
-    import math
-
-    from mpds_spark.queries import q_km_confidence, q_survival_km
-
-    rows = sorted(
-        q_km_confidence(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["duration_bin"],
-    )
-    km = {
-        r["duration_bin"]: r
-        for r in q_survival_km(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert set(km) == {r["duration_bin"] for r in rows}
-    g = 0.0
-    s_prev = 1.0
-    for r in rows:
-        base = km[r["duration_bin"]]
-        assert (r["n_risk"], r["n_events"], r["n_censored"]) == (
-            base["n_risk"], base["n_events"], base["n_censored"],
-        )
-        assert r["km_survival"] == base["km_survival"]
-        n, d = r["n_risk"], r["n_events"]
-        if d < n:
-            g += d / (n * (n - d))
-        s = r["km_survival"]
-        if 0 < s < 1:
-            se = s * math.sqrt(g)
-            th = math.log(-math.log(s))
-            seth = math.sqrt(g) / abs(math.log(s))
-            lo = math.exp(-math.exp(th + 1.96 * seth))
-            hi = math.exp(-math.exp(th - 1.96 * seth))
-            assert abs(r["se_greenwood"] - se) < 1e-5
-            assert abs(r["lo95"] - lo) < 1e-5
-            assert abs(r["hi95"] - hi) < 1e-5
-            assert 0.0 <= r["lo95"] < s < r["hi95"] <= 1.0
-        else:
-            assert r["se_greenwood"] is None
-        assert s <= s_prev + 1e-12
-        s_prev = s
 
 
 def test_ses_alpha_grid_rebuild(spark):
@@ -2797,104 +2444,6 @@ def test_l_moments_rebuild(spark):
     assert r["l2_scale"] > 0
     assert abs(r["l_skew"]) < 1.0
     assert (5 * r["l_skew"] ** 2 - 1) / 4 - 1e-9 <= r["l_kurt"] < 1.0
-
-
-def test_chao1_rebuild(spark):
-    """Chao1 / coverage vs a literal python frequency-of-frequencies
-    rebuild per source, the lower-bound property chao1 >= vocab, and
-    cross-query consistency with yule_k's (n_tokens, vocab) on the
-    identical tokenization."""
-    from collections import Counter, defaultdict
-    import re as _re
-
-    from mpds_spark.queries import q_chao1_richness, q_yule_k
-
-    rows = {
-        r["source"]: r
-        for r in q_chao1_richness(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT source, trim(text) FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    per = defaultdict(Counter)
-    for s, txt in raw:
-        per[s].update(_re.split(r"\s+", txt))
-    for s, cnt in per.items():
-        n = sum(cnt.values())
-        v = len(cnt)
-        f1 = sum(1 for c in cnt.values() if c == 1)
-        f2 = sum(1 for c in cnt.values() if c == 2)
-        chao = v + f1 * (f1 - 1) / (2 * (f2 + 1))
-        r = rows[s]
-        assert (r["n_tokens"], r["vocab"], r["f1"], r["f2"]) == (
-            n, v, f1, f2,
-        )
-        assert abs(r["chao1"] - chao) < 1e-4
-        assert abs(r["coverage"] - (1 - f1 / n)) < 1e-6
-        assert r["chao1"] >= r["vocab"]
-    yk = {
-        r["source"]: r
-        for r in q_yule_k(spark, "/root/testdata/sf0.001").collect()
-    }
-    for s in rows:
-        assert rows[s]["n_tokens"] == yk[s]["n_tokens"]
-        assert rows[s]["vocab"] == yk[s]["vocab"]
-
-
-def test_pacf_durbin_rebuild(spark):
-    """PACF values vs a literal python Durbin-Levinson recursion on
-    the same exact-integer ACF (identical op order), the lag-1
-    identity pacf(1) = acf(1), and cross-query ACF consistency with
-    ljung_box's rho_1."""
-    from mpds_spark.queries import _PACF_K, q_ljung_box, q_pacf_durbin
-
-    rows = {
-        r["lag"]: r
-        for r in q_pacf_durbin(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    ys = [
-        c for (c,) in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    s = sum(ys)
-    zs = [n * y - s for y in ys]
-    den = sum(z * z for z in zs)
-    rho = {
-        k: sum(zs[t] * zs[t - k] for t in range(k, n)) / den
-        for k in range(1, _PACF_K + 1)
-    }
-    phi = {1: {1: rho[1]}}
-    for k in range(2, _PACF_K + 1):
-        num = rho[k] - sum(
-            phi[k - 1][j] * rho[k - j] for j in range(1, k)
-        )
-        d = 1.0 - sum(phi[k - 1][j] * rho[j] for j in range(1, k))
-        pkk = num / d
-        phi[k] = {
-            j: phi[k - 1][j] - pkk * phi[k - 1][k - j]
-            for j in range(1, k)
-        }
-        phi[k][k] = pkk
-    for k in range(1, _PACF_K + 1):
-        r = rows[k]
-        assert r["n_days"] == n
-        assert abs(r["acf"] - rho[k]) < 1e-6
-        assert abs(r["pacf"] - phi[k][k]) < 1e-5
-        assert r["outside_band"] == (
-            abs(phi[k][k]) > 1.96 / n ** 0.5
-        )
-    assert rows[1]["acf"] == rows[1]["pacf"]
-    lb = q_ljung_box(spark, "/root/testdata/sf0.001").collect()[0]
-    assert rows[1]["acf"] == lb["rho_1"]
 
 
 def test_ols_influence_rebuild(spark):
@@ -3975,159 +3524,6 @@ def test_sample_entropy_rebuild(spark):
     assert r["sampen"] > 0
 
 
-def test_spectral_entropy_rebuild(spark):
-    """Spectral entropy/flatness vs a literal numpy rebuild of the
-    demeaned half-spectrum periodogram of the daily volumes, plus
-    the [0,1] entropy range and flatness <= 1."""
-    import math
-
-    from mpds_spark.queries import q_spectral_entropy
-
-    r = q_spectral_entropy(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    mfr = (n - 1) // 2
-    s = sum(ys)
-    ps = []
-    for k in range(1, mfr + 1):
-        c = sum(
-            (n * ys[t - 1] - s)
-            * math.cos(2 * math.pi * k * t / n)
-            for t in range(1, n + 1)
-        )
-        si = sum(
-            (n * ys[t - 1] - s)
-            * math.sin(2 * math.pi * k * t / n)
-            for t in range(1, n + 1)
-        )
-        ps.append(c * c + si * si)
-    tot = sum(ps)
-    h = -sum(
-        (p / tot) * math.log(p / tot) for p in ps if p > 0
-    ) / math.log(mfr)
-    lnf = sum(math.log(p) for p in ps) / mfr
-    flat = math.exp(lnf) / (tot / mfr)
-    assert r["n_days"] == n
-    assert r["n_freqs"] == mfr
-    assert abs(r["spectral_entropy"] - h) < 1e-6
-    assert abs(r["spectral_flatness"] - flat) < 1e-6
-    assert 0.0 <= r["spectral_entropy"] <= 1.0
-    assert 0.0 < r["spectral_flatness"] <= 1.0
-    band = (
-        "broadband_noise" if h > 0.9
-        else "strongly_periodic" if h < 0.6
-        else "mixed"
-    )
-    assert r["band"] == band
-
-
-def test_adamic_adar_rebuild(spark):
-    """Top-12 AA pairs vs a literal python rebuild over the co-order
-    part graph (wedge enumeration, non-edge filter, 1/ln(deg)
-    weights), plus the ordering contract and the common-neighbor
-    consistency."""
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_adamic_adar
-
-    rows = q_adamic_adar(spark, "/root/testdata/sf0.001").collect()
-    import duckdb
-
-    li = duckdb.sql(
-        "SELECT DISTINCT l_orderkey, l_partkey FROM"
-        " '/root/testdata/sf0.001/lineitem.parquet'"
-        " WHERE l_partkey % 4 = 0"
-    ).fetchall()
-    baskets = defaultdict(set)
-    for ok, pk in li:
-        baskets[ok].add(pk)
-    edges = set()
-    for items in baskets.values():
-        s = sorted(items)
-        for i in range(len(s)):
-            for j in range(i + 1, len(s)):
-                edges.add((s[i], s[j]))
-    nbr = defaultdict(set)
-    for a, b in edges:
-        nbr[a].add(b)
-        nbr[b].add(a)
-    cand = {}
-    for z, ns in nbr.items():
-        dz = len(nbr[z])
-        s = sorted(ns)
-        for i in range(len(s)):
-            for j in range(i + 1, len(s)):
-                x, y = s[i], s[j]
-                if (x, y) in edges:
-                    continue
-                c, w = cand.get((x, y), (0, 0.0))
-                cand[(x, y)] = (c + 1, w + 1.0 / math.log(dz))
-    top = sorted(
-        cand.items(), key=lambda kv: (-kv[1][1], kv[0])
-    )[:12]
-    assert len(rows) == 12
-    got = [(r["part_a"], r["part_b"]) for r in rows]
-    assert got == [k for k, _ in top]
-    for r, (k, (c, w)) in zip(rows, top):
-        assert r["common_neighbors"] == c
-        assert abs(r["aa"] - w) < 1e-6
-        assert (k[0], k[1]) not in edges
-
-
-def test_hits_rebuild(spark):
-    """Exact-integer HITS path counts vs a literal python rebuild of
-    two full sweeps on the customer->part graph, plus the round-1
-    identity (authority = in-degree) and the max-normalization."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_hits_scores
-
-    rows = q_hits_scores(spark, "/root/testdata/sf0.001").collect()
-    import duckdb
-
-    ed = duckdb.sql(
-        "SELECT DISTINCT o_custkey, l_partkey FROM"
-        " '/root/testdata/sf0.001/orders.parquet' o JOIN"
-        " '/root/testdata/sf0.001/lineitem.parquet' l"
-        " ON o.o_orderkey = l.l_orderkey WHERE l_partkey % 4 = 0"
-    ).fetchall()
-    out_e = defaultdict(list)
-    in_e = defaultdict(list)
-    for c, p in ed:
-        out_e[c].append(p)
-        in_e[p].append(c)
-    h = {c: 1 for c in out_e}
-    for _ in range(2):
-        a = {p: sum(h[c] for c in in_e[p]) for p in in_e}
-        h = {c: sum(a[p] for p in out_e[c]) for c in out_e}
-    am = max(a.values())
-    hm = max(h.values())
-    top_a = sorted(a.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    top_h = sorted(h.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    auth_rows = [r for r in rows if r["side"] == "authority"]
-    hub_rows = [r for r in rows if r["side"] == "hub"]
-    assert [(r["node"], r["score"]) for r in auth_rows] == top_a
-    assert [(r["node"], r["score"]) for r in hub_rows] == top_h
-    for r in auth_rows:
-        assert abs(r["score_norm"] - r["score"] / am) < 1e-6
-    for r in hub_rows:
-        assert abs(r["score_norm"] - r["score"] / hm) < 1e-6
-    assert auth_rows[0]["score_norm"] == 1.0
-    assert hub_rows[0]["score_norm"] == 1.0
-
-
 def test_ndcg_rebuild(spark):
     """nDCG@10 vs a literal python rebuild of the temporal-split
     part ranking (first-period revenue ranks, second-period revenue
@@ -4412,107 +3808,6 @@ def test_bland_altman_rebuild(spark):
         abs(mean / (sd / n ** 0.5)) > 1.96
     )
     assert r["loa_lower"] < r["loa_upper"]
-
-
-def test_jensen_shannon_rebuild(spark):
-    """JSD/TV vs a literal python rebuild over the 24x2 hour-arm
-    histogram, plus the JSD <= 1 bit bound, TV exactness and the
-    A/A consistency flag."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_jensen_shannon
-
-    r = q_jensen_shannon(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT hour(ts), user_id FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    cnt = defaultdict(lambda: [0, 0])
-    for h, u in rows:
-        arm = int(
-            hashlib.md5(f"js|{u}".encode()).hexdigest()[:15], 16
-        ) % 2
-        cnt[h][0 if arm == 1 else 1] += 1
-    A = sum(v[0] for v in cnt.values())
-    B = sum(v[1] for v in cnt.values())
-    tv = sum(
-        abs(v[0] / A - v[1] / B) for v in cnt.values()
-    ) / 2
-    js = 0.0
-    for v in cnt.values():
-        p, q = v[0] / A, v[1] / B
-        m = (p + q) / 2
-        if p > 0:
-            js += p / 2 * math.log(p / m)
-        if q > 0:
-            js += q / 2 * math.log(q / m)
-    assert r["n_hours"] == len(cnt)
-    assert r["n_arm1"] == A
-    assert r["n_arm0"] == B
-    assert abs(r["tv_dist"] - tv) < 1e-6
-    assert abs(r["jsd_bits"] - js / math.log(2)) < 1e-6
-    assert abs(r["js_metric"] - math.sqrt(js)) < 1e-6
-    assert 0.0 <= r["jsd_bits"] <= 1.0
-    assert r["arms_consistent"] == (js / math.log(2) < 0.01)
-
-
-def test_hellinger_rebuild(spark):
-    """BC/Hellinger vs a literal python rebuild, plus the
-    H^2 <= TV <= H*sqrt(2) sandwich against the jensen_shannon
-    query's exact TV and the argmax-gap hour."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import (
-        q_hellinger_affinity,
-        q_jensen_shannon,
-    )
-
-    r = q_hellinger_affinity(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    tv = q_jensen_shannon(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]["tv_dist"]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT hour(ts), user_id FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    cnt = defaultdict(lambda: [0, 0])
-    for h, u in rows:
-        arm = int(
-            hashlib.md5(f"js|{u}".encode()).hexdigest()[:15], 16
-        ) % 2
-        cnt[h][0 if arm == 1 else 1] += 1
-    A = sum(v[0] for v in cnt.values())
-    B = sum(v[1] for v in cnt.values())
-    bc = sum(
-        math.sqrt(v[0] / A * v[1] / B) for v in cnt.values()
-    )
-    hd = math.sqrt(1 - bc)
-    gaps = {
-        h: abs(B * v[0] - A * v[1]) for h, v in cnt.items()
-    }
-    mg = max(gaps.values())
-    mh = min(h for h, g in gaps.items() if g == mg)
-    assert r["n_arm1"] == A and r["n_arm0"] == B
-    assert abs(r["bhattacharyya"] - bc) < 1e-6
-    assert abs(r["hellinger"] - hd) < 1e-6
-    assert r["max_gap_hour"] == mh
-    assert abs(r["max_gap"] - mg / (A * B)) < 1e-6
-    # Hellinger-TV sandwich (Le Cam): H^2 <= TV <= H*sqrt(2)
-    assert hd * hd <= tv + 1e-9
-    assert tv <= hd * math.sqrt(2) + 1e-9
-    assert r["arms_consistent"] == (hd < 0.1)
 
 
 def test_croston_rebuild(spark):
@@ -4947,784 +4242,6 @@ def test_rare_word_profile_rebuild(spark):
         assert abs(r["brunet_w"] - w) < 1e-4
 
 
-def test_burrows_delta_rebuild(spark):
-    """Nearest/farthest sources by Burrows Delta vs a literal
-    python rebuild over the global top-20 word z-profiles, plus the
-    symmetry sanity that delta_min <= delta_max everywhere."""
-    from collections import Counter, defaultdict
-
-    from mpds_spark.queries import q_burrows_delta
-
-    rows = q_burrows_delta(spark, "/root/testdata/sf0.001").collect()
-    import duckdb
-
-    docs = duckdb.sql(
-        "SELECT source, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    bysrc = defaultdict(Counter)
-    total = Counter()
-    for s, t in docs:
-        ws = t.strip().split()
-        bysrc[s].update(ws)
-        total.update(ws)
-    top = [
-        w for w, _ in sorted(
-            total.items(), key=lambda kv: (-kv[1], kv[0])
-        )[:20]
-    ]
-    srcs = sorted(bysrc)
-    ns = len(srcs)
-    f = {
-        s: [bysrc[s][w] / sum(bysrc[s].values()) for w in sorted(top)]
-        for s in srcs
-    }
-    nw = len(top)
-    mus = [sum(f[s][i] for s in srcs) / ns for i in range(nw)]
-    sds = [
-        (sum((f[s][i] - mus[i]) ** 2 for s in srcs) / (ns - 1))
-        ** 0.5
-        for i in range(nw)
-    ]
-    z = {
-        s: [(f[s][i] - mus[i]) / sds[i] for i in range(nw)]
-        for s in srcs
-    }
-
-    def delta(a, b):
-        return sum(
-            abs(z[a][i] - z[b][i]) for i in range(nw)
-        ) / nw
-
-    got = {r["source"]: r for r in rows}
-    assert set(got) == set(srcs)
-    for s in srcs:
-        ds = sorted(
-            ((delta(s, o), o) for o in srcs if o != s)
-        )
-        r = got[s]
-        assert r["nearest_source"] == ds[0][1]
-        assert abs(r["delta_min"] - ds[0][0]) < 1e-6
-        assert r["farthest_source"] == ds[-1][1]
-        assert abs(r["delta_max"] - ds[-1][0]) < 1e-6
-        assert r["delta_min"] <= r["delta_max"]
-
-
-def test_turning_difference_sign_rebuild(spark):
-    """Both Kendall-Stuart randomness screens vs literal python
-    rebuilds on the daily volumes, plus the structural bounds
-    T <= n-2 and S <= n-1 and verdict-sign consistency."""
-    from mpds_spark.queries import (
-        q_difference_sign,
-        q_turning_points,
-    )
-
-    rt = q_turning_points(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rs = q_difference_sign(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    tp = sum(
-        1
-        for t in range(1, n - 1)
-        if (ys[t] - ys[t - 1]) * (ys[t] - ys[t + 1]) > 0
-    )
-    s = sum(1 for t in range(1, n) if ys[t] > ys[t - 1])
-    et = 2 * (n - 2) / 3
-    vt = (16 * n - 29) / 90
-    es = (n - 1) / 2
-    vs = (n + 1) / 12
-    assert rt["n_days"] == n and rs["n_days"] == n
-    assert rt["n_turning"] == tp
-    assert rs["n_up_steps"] == s
-    assert rt["n_turning"] <= n - 2
-    assert rs["n_up_steps"] <= n - 1
-    assert abs(rt["expected"] - et) < 1e-6
-    assert abs(rt["variance"] - vt) < 1e-6
-    assert abs(rt["z_stat"] - (tp - et) / vt ** 0.5) < 1e-6
-    assert abs(rs["expected"] - es) < 1e-6
-    assert abs(rs["variance"] - vs) < 1e-6
-    assert abs(rs["z_stat"] - (s - es) / vs ** 0.5) < 1e-6
-    assert rt["reject_5pct"] == (abs(rt["z_stat"]) > 1.96)
-    assert rs["reject_5pct"] == (abs(rs["z_stat"]) > 1.96)
-    if tp < et:
-        assert rt["verdict"] == "too_smooth"
-    if s > es:
-        assert rs["verdict"] == "upward_trend"
-    elif s < es:
-        assert rs["verdict"] == "downward_trend"
-
-
-def test_buishand_snht_rebuild(spark):
-    """Buishand R/U and SNHT T0 vs literal python rebuilds of the
-    classical definitions (cumulative deviations from the mean,
-    n-denominator std), plus the argmax changepoint days and the
-    structural bounds 0 <= U and T_k >= 0."""
-    from mpds_spark.queries import q_buishand_range, q_snht_test
-
-    rb = q_buishand_range(spark, "/root/testdata/sf0.001").collect()[0]
-    rs = q_snht_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts) AS d, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY d ORDER BY d"
-    ).fetchall()
-    days = [r[0] for r in rows]
-    ys = [r[1] for r in rows]
-    n = len(ys)
-    ybar = sum(ys) / n
-    sk = []
-    acc = 0.0
-    for y in ys[:-1]:
-        acc += y - ybar
-        sk.append(acc)
-    dx = (sum((y - ybar) ** 2 for y in ys) / n) ** 0.5
-    r_stat = (max(max(sk), 0.0) - min(min(sk), 0.0)) / (
-        dx * n ** 0.5
-    )
-    u_stat = sum(s * s for s in sk) / (dx * dx * n * (n + 1))
-    assert rb["n_days"] == n
-    assert abs(rb["r_stat"] - r_stat) < 1e-6
-    assert abs(rb["u_stat"] - u_stat) < 1e-6
-    assert u_stat >= 0.0
-    cp = max(range(len(sk)), key=lambda k: (abs(sk[k]), -k))
-    assert rb["cp_day"] == days[cp]
-    assert rb["reject_5pct"] == (r_stat > 1.55)
-    # SNHT
-    tks = []
-    for k in range(1, n):
-        z1 = (sum(ys[:k]) / k - ybar) / dx
-        z2 = (sum(ys[k:]) / (n - k) - ybar) / dx
-        tks.append(k * z1 * z1 + (n - k) * z2 * z2)
-    t0 = max(tks)
-    assert all(t >= 0.0 for t in tks)
-    assert rs["n_days"] == n
-    assert abs(rs["t0_stat"] - t0) < 1e-6
-    cpk = max(range(len(tks)), key=lambda k: (tks[k], -k))
-    assert rs["cp_day"] == days[cpk]
-    assert rs["reject_5pct"] == (t0 > 7.65)
-
-
-def test_honore_spiegelhalter_rebuild(spark):
-    """Honore R / Sichel S vs a Counter-based python rebuild of the
-    per-source frequency spectrum, and Spiegelhalter's Z vs the
-    textbook float formula sum (y-p)(1-2p)/sqrt(sum (1-2p)^2
-    p(1-p)) on raw probabilities."""
-    from mpds_spark.queries import (
-        q_honore_sichel,
-        q_spiegelhalter_z,
-    )
-
-    rh = {
-        r["source"]: r
-        for r in q_honore_sichel(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    rs = q_spiegelhalter_z(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT source, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    per_source = {}
-    for src_, text in rows:
-        per_source.setdefault(src_, Counter()).update(
-            text.strip().split()
-        )
-    for src_, c in per_source.items():
-        n = sum(c.values())
-        v = len(c)
-        v1 = sum(1 for x in c.values() if x == 1)
-        v2 = sum(1 for x in c.values() if x == 2)
-        if v1 >= v:
-            assert src_ not in rh
-            continue
-        r = rh[src_]
-        assert r["n_tokens"] == n
-        assert r["vocab"] == v
-        assert r["v1_hapax"] == v1
-        assert r["v2_dis"] == v2
-        assert abs(
-            r["honore_r"] - 100 * math.log(n) / (1 - v1 / v)
-        ) < 1e-5
-        assert abs(r["sichel_s"] - v2 / v) < 1e-6
-    # Spiegelhalter float rebuild
-    rows = duckdb.sql(
-        "SELECT least(n_chars, 400),"
-        " CASE WHEN len(regexp_split_to_array(trim(text),"
-        " '\\s+')) >= 50 THEN 1 ELSE 0 END FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    num = sum((y - m / 400) * (1 - 2 * m / 400) for m, y in rows)
-    den = sum(
-        (1 - 2 * m / 400) ** 2 * (m / 400) * (1 - m / 400)
-        for m, _ in rows
-    )
-    z = num / den ** 0.5
-    assert rs["n_docs"] == len(rows)
-    assert abs(rs["z_stat"] - z) < 1e-5
-    assert rs["reject_5pct"] == (abs(z) > 1.96)
-
-
-def test_zeroinfl_laplace_rebuild(spark):
-    """van den Broek score statistic and the Laplace U vs literal
-    float rebuilds from the raw stream (python floats, no decimal
-    path), plus centroid_frac in (0, 1)."""
-    from mpds_spark.queries import q_laplace_trend, q_zero_inflation
-
-    rz = q_zero_inflation(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rl = q_laplace_trend(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import math
-
-    import duckdb
-
-    xs = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT sum(CASE WHEN event_type = 'purchase' THEN 1"
-            " ELSE 0 END) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY user_id"
-        ).fetchall()
-    ]
-    n = len(xs)
-    n0 = sum(1 for x in xs if x == 0)
-    lam = sum(xs) / n
-    p0 = math.exp(-lam)
-    stat = (n0 - n * p0) ** 2 / (
-        n * p0 * (1 - p0) - n * lam * p0 * p0
-    )
-    assert rz["n_users"] == n
-    assert rz["n_zero"] == n0
-    assert abs(rz["lambda_hat"] - lam) < 1e-6
-    assert abs(rz["expected_zeros"] - n * p0) < 1e-5
-    assert abs(rz["score_stat"] - stat) < 1e-5
-    assert rz["reject_5pct"] == (stat > 3.841459)
-    # Laplace
-    us = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT epoch_us(ts) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-        ).fetchall()
-    ]
-    m = len(us)
-    mn, mx = min(us), max(us)
-    frac = (sum(us) - m * mn) / m / (mx - mn)
-    z = math.sqrt(12 * m) * (frac - 0.5)
-    assert rl["n_events"] == m
-    assert abs(rl["window_days"] - (mx - mn) / 86400e6) < 1e-6
-    assert 0.0 < rl["centroid_frac"] < 1.0
-    assert abs(rl["centroid_frac"] - frac) < 1e-6
-    assert abs(rl["laplace_u"] - z) < 1e-6
-    assert rl["reject_5pct"] == (abs(z) > 1.96)
-
-
-def test_zonemap_cdc_rebuild(spark):
-    """Zone-map scan fractions vs a python rebuild of the binning
-    arithmetic, and CDC chunking vs a literal python rolling-hash
-    chunker (boundary invariance checked by construction)."""
-    from mpds_spark.queries import q_cdc_chunking, q_zonemap_skipping
-
-    rz = q_zonemap_skipping(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rc = {
-        r["source"]: r
-        for r in q_cdc_chunking(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CAST(epoch_us(ts) AS DOUBLE)/1000000, day(ts),"
-        " user_id FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    mn = min(r[0] for r in rows)
-    mx = max(r[0] for r in rows)
-    ndays = len({r[1] for r in rows})
-    from collections import defaultdict
-
-    tb, hb = defaultdict(list), defaultdict(list)
-    for sec, day, uid in rows:
-        tb[min(31, int((sec - mn) * 32.0 / (mx - mn)))].append(day)
-        hb[uid % 32].append(day)
-    scan_t = sum(max(v) - min(v) + 1 for v in tb.values())
-    scan_h = sum(max(v) - min(v) + 1 for v in hb.values())
-    ft = scan_t / (ndays * len(tb))
-    fh = scan_h / (ndays * len(hb))
-    assert rz["n_bins"] == len(tb)
-    assert rz["n_days"] == ndays
-    assert abs(rz["scan_frac_time_layout"] - ft) < 1e-6
-    assert abs(rz["scan_frac_hash_layout"] - fh) < 1e-6
-    assert rz["scan_frac_time_layout"] <= rz["scan_frac_hash_layout"]
-    # CDC chunker rebuild
-    POW = [31 ** k for k in range(8)]
-
-    def chunks(text):
-        n = len(text)
-        if n < 8:
-            return [text] if text else [text]
-        bounds = []
-        for i in range(8, n + 1):  # 1-based position i
-            h = sum(
-                ord(text[i - 1 - k]) * POW[k] for k in range(8)
-            )
-            if h % 64 == 0:
-                bounds.append(i)
-        starts = [0] + bounds
-        out = []
-        for j in range(len(starts)):
-            if j + 1 < len(starts):
-                out.append(text[starts[j] : starts[j + 1]])
-            elif starts[j] < n:
-                out.append(text[starts[j] :])
-        return out
-
-    docs = duckdb.sql(
-        "SELECT source, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-        " WHERE CAST(('0x' || substring(md5('cdc|' ||"
-        " CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT AS BIGINT)"
-        " % 4 = 0"
-    ).fetchall()
-    per = defaultdict(lambda: [0, set(), 0])
-    for src_, text in docs:
-        for c in chunks(text):
-            per[src_][0] += 1
-            per[src_][1].add(c)
-            per[src_][2] += len(c)
-    for src_, (n, dset, tot) in per.items():
-        r = rc[src_]
-        assert r["n_chunks"] == n
-        assert r["distinct_chunks"] == len(dset)
-        assert abs(r["avg_chunk_chars"] - tot / n) < 1e-6
-        assert abs(
-            r["dup_chunk_rate"] - (n - len(dset)) / n
-        ) < 1e-6
-
-
-def test_dl_poisson_rate_rebuild(spark):
-    """DerSimonian-Laird pooling vs a literal metafor-style float
-    rebuild (statistics.mean/variance per stratum) and the
-    conditional Poisson rate test vs textbook formulas."""
-    from mpds_spark.queries import (
-        q_dersimonian_laird,
-        q_poisson_rate_test,
-    )
-
-    rd = q_dersimonian_laird(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rp = q_poisson_rate_test(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import math
-    import statistics
-
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT (day(date_trunc('day', ts)) - 1) // 7 AS w,"
-        " CASE WHEN isodow(date_trunc('day', ts)) >= 6 THEN 1"
-        " ELSE 0 END AS we, count(*) AS y FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " WHERE day(ts) <= 28"
-        " GROUP BY date_trunc('day', ts) ORDER BY 1"
-    ).fetchall()
-    ds, vs = [], []
-    for w in range(4):
-        g1 = [y for ww, we, y in rows if ww == w and we == 1]
-        g2 = [y for ww, we, y in rows if ww == w and we == 0]
-        if len(g1) < 2 or len(g2) < 2:
-            continue
-        d = statistics.mean(g1) - statistics.mean(g2)
-        v = statistics.variance(g1) / len(g1) + statistics.variance(
-            g2
-        ) / len(g2)
-        if v > 0:
-            ds.append(d)
-            vs.append(v)
-    k = len(ds)
-    sw = sum(1 / v for v in vs)
-    sw2 = sum(1 / v / v for v in vs)
-    fe = sum(d / v for d, v in zip(ds, vs)) / sw
-    q = sum((d - fe) ** 2 / v for d, v in zip(ds, vs))
-    tau2 = max(0.0, (q - (k - 1)) / (sw - sw2 / sw))
-    re = sum(d / (v + tau2) for d, v in zip(ds, vs)) / sum(
-        1 / (v + tau2) for v in vs
-    )
-    i2 = max(0.0, (q - (k - 1)) / q)
-    assert rd["n_strata"] == k
-    assert abs(rd["fixed_effect"] - fe) < 1e-5
-    assert abs(rd["random_effect"] - re) < 1e-5
-    assert abs(rd["cochran_q"] - q) < 1e-5
-    assert abs(rd["tau2"] - tau2) < 1e-5
-    assert abs(rd["i2"] - i2) < 1e-6
-    assert 0.0 <= rd["i2"] < 1.0
-    assert rd["heterogeneous_5pct"] == (q > 7.814728)
-    # poisson rate rebuild
-    rows = duckdb.sql(
-        "SELECT CASE WHEN isodow(date_trunc('day', ts)) >= 6"
-        " THEN 1 ELSE 0 END AS we,"
-        " sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY date_trunc('day', ts)"
-    ).fetchall()
-    n1 = sum(1 for we, _ in rows if we == 1)
-    n2 = len(rows) - n1
-    x1 = sum(x for we, x in rows if we == 1)
-    x2 = sum(x for we, x in rows if we == 0)
-    w = n1 / (n1 + n2)
-    x = x1 + x2
-    z = (x1 - x * w) / math.sqrt(x * w * (1 - w))
-    rr = (x1 / n1) / (x2 / n2)
-    se = math.sqrt(1 / x1 + 1 / x2)
-    assert rp["n1_days"] == n1 and rp["n2_days"] == n2
-    assert rp["x1"] == x1 and rp["x2"] == x2
-    assert abs(rp["z_stat"] - z) < 1e-6
-    assert abs(rp["rate_ratio"] - rr) < 1e-6
-    assert abs(rp["rr_lo95"] - rr * math.exp(-1.96 * se)) < 1e-5
-    assert abs(rp["rr_hi95"] - rr * math.exp(1.96 * se)) < 1e-5
-    assert rp["rr_lo95"] <= rp["rate_ratio"] <= rp["rr_hi95"]
-    assert rp["reject_5pct"] == (abs(z) > 1.96)
-
-
-def test_deviance_collision_rebuild(spark):
-    """Poisson deviance vs a literal float fold and the birthday
-    audit vs hashlib-truncated slot counting with the closed-form
-    expectation."""
-    from mpds_spark.queries import (
-        q_hash_collision_audit,
-        q_poisson_deviance_gof,
-    )
-
-    rd = q_poisson_deviance_gof(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    rh = q_hash_collision_audit(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import hashlib
-    import math
-
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    mu = sum(ys) / n
-    g = 2 * sum(
-        (mu if y == 0 else y * math.log(y / mu) - (y - mu))
-        for y in ys
-    )
-    assert rd["n_days"] == n
-    assert abs(rd["mean_rate"] - mu) < 1e-6
-    assert abs(rd["deviance_g"] - g) < 1e-5
-    assert abs(rd["deviance_per_df"] - g / (n - 1)) < 1e-6
-    assert rd["deviance_g"] >= 0.0
-    assert rd["reject_5pct"] == (g > 43.773)
-    # collision audit rebuild
-    ids = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT doc_id FROM"
-            " '/root/testdata/sf0.001/documents.parquet'"
-        ).fetchall()
-    ]
-    slots = {
-        int(hashlib.md5(str(i).encode()).hexdigest()[:5], 16)
-        for i in ids
-    }
-    nn, m = len(ids), 1 << 20
-    ed = m * (1 - math.exp(nn * math.log(1 - 1 / m)))
-    assert rh["n_keys"] == nn
-    assert rh["observed_distinct"] == len(slots)
-    assert abs(rh["expected_distinct"] - ed) < 1e-4
-    assert rh["observed_collisions"] == nn - len(slots)
-    assert abs(
-        rh["collision_ratio"]
-        - (nn - len(slots)) / (nn - ed)
-    ) < 1e-4
-
-
-def test_lz_flatness_rebuild(spark):
-    """LZ production parse vs a literal python parser with the
-    same phrase rule (checked on the Kaspar-Schuster example
-    string too) and spectral flatness vs a numpy-free DFT."""
-    from mpds_spark.queries import q_lz_complexity, q_spectral_flatness
-
-    rl = q_lz_complexity(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rf = q_spectral_flatness(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import math
-
-    import duckdb
-
-    def lz76(s):
-        c, p, j = 0, 1, 1
-        m = len(s)
-        while j <= m:
-            if s[p - 1 : j] in s[: j - 1]:
-                j += 1
-            else:
-                c += 1
-                p = j + 1
-                j = p
-        if p <= m:
-            c += 1
-        return c
-
-    # the production parse grows phrase-by-phrase; sanity on a
-    # periodic and a balanced string
-    assert lz76("0000000000") < lz76("0110100110")
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    s = "".join(
-        "1" if ys[t] > ys[t - 1] else "0" for t in range(1, len(ys))
-    )
-    c = lz76(s)
-    m = len(s)
-    assert rl["n_steps"] == m
-    assert rl["n_phrases"] == c
-    assert abs(rl["lz_norm"] - c * math.log2(m) / m) < 1e-6
-    # flatness rebuild
-    n = len(ys)
-    mu = sum(ys) / n
-    ps = []
-    for k in range(1, n // 2 + 1):
-        a = sum(
-            (ys[t - 1] - mu) * math.cos(2 * math.pi * k * t / n)
-            for t in range(1, n + 1)
-        )
-        b = sum(
-            (ys[t - 1] - mu) * math.sin(2 * math.pi * k * t / n)
-            for t in range(1, n + 1)
-        )
-        ps.append(a * a + b * b)
-    flat = math.exp(
-        sum(math.log(p) for p in ps) / len(ps)
-    ) / (sum(ps) / len(ps))
-    assert rf["n_freqs"] == len(ps)
-    assert abs(rf["spectral_flatness"] - flat) < 1e-6
-    assert 0.0 < rf["spectral_flatness"] <= 1.0 + 1e-9
-
-
-def test_wow_sign_wilcoxon_rebuild(spark):
-    """Both week-over-week paired tests vs literal python rebuilds
-    with float midranks and the scipy convention for ties."""
-    import math
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_sign_test_wow,
-        q_wilcoxon_signed_rank,
-    )
-
-    rs = q_sign_test_wow(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    rw = q_wilcoxon_signed_rank(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    d = [
-        ys[t + 7] - ys[t]
-        for t in range(len(ys) - 7)
-        if ys[t + 7] != ys[t]
-    ]
-    m = len(d)
-    sp = sum(1 for x in d if x > 0)
-    z = (sp - m / 2 - 0.5 * (1 if sp > m / 2 else -1 if sp < m / 2 else 0)) / (
-        math.sqrt(m) / 2
-    )
-    assert rs["n_pairs"] == m
-    assert rs["n_up_pairs"] == sp
-    assert abs(rs["z_stat"] - z) < 1e-6
-    assert rs["reject_5pct"] == (abs(z) > 1.96)
-    # wilcoxon
-    absd = sorted(abs(x) for x in d)
-
-    def midrank(v):
-        lt = sum(1 for u in absd if u < v)
-        eq = sum(1 for u in absd if u == v)
-        return lt + (eq + 1) / 2.0
-
-    w = sum(midrank(abs(x)) for x in d if x > 0)
-    e = m * (m + 1) / 4.0
-    from collections import Counter
-
-    ties = Counter(abs(x) for x in d)
-    var = m * (m + 1) * (2 * m + 1) / 24.0 - sum(
-        t ** 3 - t for t in ties.values()
-    ) / 48.0
-    zw = (w - e) / math.sqrt(var)
-    assert rw["n_pairs"] == m
-    assert abs(rw["w_plus"] - w) < 1e-6
-    assert abs(rw["e_w"] - e) < 1e-6
-    assert abs(rw["var_w"] - var) < 1e-6
-    assert abs(rw["z_stat"] - zw) < 1e-6
-    assert rw["reject_5pct"] == (abs(zw) > 1.96)
-
-
-def test_lang_fertility_rebuild(spark):
-    """Confusion cells vs a literal python marker classifier and
-    fertility ratios vs Counter arithmetic; per-label shares sum
-    to 1."""
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from mpds_spark.queries import (
-        q_lang_confusion_audit,
-        q_tokenizer_fertility,
-    )
-
-    rc = q_lang_confusion_audit(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    rf = {
-        r["lang"]: r
-        for r in q_tokenizer_fertility(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    docs = duckdb.sql(
-        "SELECT lang, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    markers = {
-        "en": {"the", "and", "of", "to", "is"},
-        "de": {"der", "die", "und", "ist", "das"},
-        "fr": {"le", "la", "et", "est", "les"},
-        "es": {"el", "la", "los", "es", "una"},
-    }
-    cells = Counter()
-    for lang, text in docs:
-        words = text.strip().split()
-        hits = {
-            lg: sum(1 for w in words if w in ms)
-            for lg, ms in markers.items()
-        }
-        g = max(hits.values())
-        pred = "und"
-        if g > 0:
-            for lg in ("en", "de", "fr", "es"):
-                if hits[lg] == g:
-                    pred = lg
-                    break
-        cells[(lang, pred)] += 1
-    got = {(r["lang_label"], r["lang_pred"]): r["n_docs"] for r in rc}
-    assert got == dict(cells)
-    shares = defaultdict(float)
-    for r in rc:
-        shares[r["lang_label"]] += r["share_of_label"]
-    for v in shares.values():
-        assert abs(v - 1.0) < 1e-5
-    # fertility
-    agg = defaultdict(lambda: [0, 0, Counter()])
-    for lang, text in docs:
-        a = agg[lang]
-        a[0] += 1
-        a[1] += len(text)
-        a[2].update(text.strip().split())
-    for lang, (nd, chars, wc) in agg.items():
-        r = rf[lang]
-        tw = sum(wc.values())
-        assert r["n_docs"] == nd
-        assert r["n_words"] == tw
-        assert r["n_word_types"] == len(wc)
-        assert abs(r["chars_per_word"] - chars / tw) < 1e-6
-        assert abs(r["type_token_ratio"] - len(wc) / tw) < 1e-6
-
-
-def test_cdc_starts_kernel_edges():
-    """The r6 vectorized boundary kernel (_cdc_starts) vs a literal
-    per-position rolling-hash loop: empty / short / boundary-rich /
-    non-ASCII BMP inputs. No Spark needed — the numpy body is called
-    directly; exactness here is what keeps chunk identity (and the
-    frozen oracle) byte-stable."""
-    import pandas as pd
-
-    from mpds_spark.queries import _cdc_starts
-
-    POW = [31 ** k for k in range(8)]
-
-    def ref_starts(text):
-        n = len(text)
-        if n < 8:
-            return [0, n]
-        bounds = []
-        for i in range(8, n + 1):
-            h = sum(ord(text[i - 1 - k]) * POW[k] for k in range(8))
-            if h % 64 == 0:
-                bounds.append(i)
-        return [0] + bounds
-
-    cases = [
-        "",
-        "a",
-        "1234567",
-        "12345678",
-        "@" * 64,  # '@'=64: every window hash is 0 mod 64
-        "the quick brown fox jumps over the lazy dog " * 20,
-        "café naïve 世界 " * 40,
-        "\x00\x01\x02\x03\x04\x05\x06\x07" * 16,
-    ]
-    got = _cdc_starts.func(pd.Series(cases))
-    for text, arr in zip(cases, got):
-        assert list(arr) == ref_starts(text), text[:32]
-
-
 def test_cosine_nn1_arrow_matches_cosine_topk(spark):
     """The r6 vectorized 1-NN scorer must reproduce cosine_topk(k=1)
     bit-for-bit on the real embedding table: same neighbor, same
@@ -5753,29 +4270,6 @@ def test_cosine_nn1_arrow_matches_cosine_topk(spark):
     for k in ref:
         assert ref[k][0] == got[k][0], k
         assert ref[k][1] == got[k][1], k  # bitwise-equal doubles
-
-
-def test_lang_confusion_oracle_markers_synced():
-    """SQL_LANG_CONFUSION_AUDIT hard-codes the marker word IN-lists and
-    the en>de>fr>es tie-break inline; this pins them to
-    operators/text.py LANG_MARKERS so a marker edit cannot silently
-    desync engine and oracle until the gate run (ADVICE r5)."""
-    import re
-
-    from mpds_spark.operators.text import LANG_MARKERS
-    from mpds_spark.queries import SQL_LANG_CONFUSION_AUDIT
-
-    in_lists = re.findall(
-        r"list_filter\(words, x -> x IN\s*\(([^)]*)\)",
-        SQL_LANG_CONFUSION_AUDIT,
-    )
-    assert len(in_lists) == len(LANG_MARKERS)
-    for (lang, markers), found in zip(LANG_MARKERS.items(), in_lists):
-        got = [w.strip().strip("'") for w in found.split(",")]
-        assert got == markers, (lang, got, markers)
-    # tie-break order in the CASE chain must match dict order
-    case_order = re.findall(r"WHEN n_(\w+) = g AND g > 0", SQL_LANG_CONFUSION_AUDIT)
-    assert case_order == list(LANG_MARKERS)
 
 
 def test_cosine_nn1_arrow_tie_break(spark):
