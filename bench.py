@@ -165,7 +165,7 @@ def engine_throughput(
 ) -> dict:
     """sequences/sec for the flagship leg (the BASELINE.json metric):
     scan the materialized tokenized-sequence table → per-sequence 18-stat
-    battery (Arrow pandas map, token arrays pass through) → per-entity
+    battery (scalar Arrow UDF, token arrays stay in the JVM) → per-entity
     expanding-window derived features → backward as-of join against the
     entity event stream (one exchange, zero Python beyond the battery).
     Falls back to inline generation when input_dir is None
@@ -211,9 +211,8 @@ def engine_throughput(
         df = synth_sequences(spark, n_docs, seed=seed, num_partitions=64)
     # keep_tokens=False: the temporal leg only needs (keys, ts, feature
     # vector) — at 10^12-row scale the token arrays are ~85% of the bytes
-    # and must never ride through a shuffle, nor pay the Python->JVM
-    # transfer out of the battery stage (the passthrough contract itself
-    # is pinned by the token-equality tests).
+    # and must never ride through a shuffle (the passthrough contract
+    # itself is pinned by the token-equality tests).
     joined = _pipeline(df)
     # untimed per-rep priming pass on a tiny slice of the SAME plan,
     # repartitioned across every core: forks all Python workers (each

@@ -1,11 +1,13 @@
 """Spark operators wrapping the feature batteries.
 
 - extract_token_battery: per-row 18-stat vector over the `tokens` array —
-  mapInArrow (the segmented battery reads each batch's Arrow list buffers
-  zero-copy, in calls bounded by token count; no shuffle at all: a pure
-  map stage pipelined onto the scan). Token arrays pass through UNTOUCHED
-  (the BASELINE.json per-row exact-equality invariant) by reusing the
-  input Arrow column.
+  a scalar Arrow UDF projection (the segmented battery reads each batch's
+  Arrow list buffers zero-copy, in calls bounded by token count; no
+  shuffle at all: a pure projection pipelined onto the scan). Only the
+  token column goes to Python and only the features come back, so token
+  arrays never leave the JVM and stay byte-identical (the BASELINE.json
+  per-row exact-equality invariant); the UDF is deterministic, so
+  Catalyst pushes filters on other columns below it.
 - extract_accel_battery: per-(entity, ts) 153-feature accel vector over an
   F2-shaped long table — applyInPandas after the one entity range exchange.
 
@@ -17,12 +19,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from mpds_spark.operators.util import pin_group_parallelism
+from mpds_spark.pyworker import lazy_zip_caches
 
 from mpds_spark.functions.battery import (
     TOKEN_STAT_NAMES,
@@ -35,14 +40,11 @@ def token_battery_names() -> list[str]:
     return list(TOKEN_STAT_NAMES)
 
 
-def token_battery_batch(batch, tokens_col: str, out_col: str, names: list[str]):
-    """One Arrow batch through the token battery: the `names` columns
-    (reused as-is) + the (B, 18) feature list column. The kernel reads the
-    list column's flat values + offsets directly (zero-copy, any slice
-    offset); empty and null rows give all-NaN features."""
-    import pyarrow as pa
-
-    col = batch.column(tokens_col)
+def token_battery_array(col: pa.Array) -> pa.Array:
+    """One Arrow list array through the token battery -> a list<double>
+    array of the 18 features per row. The kernel reads the list array's
+    flat values + offsets directly (zero-copy, any slice offset); empty
+    and null rows give all-NaN features."""
     try:
         flat = col.values.to_numpy(zero_copy_only=True)
     except pa.ArrowInvalid:  # nulls inside the arrays: copying fallback
@@ -50,12 +52,15 @@ def token_battery_batch(batch, tokens_col: str, out_col: str, names: list[str]):
     feats = token_features_segmented(flat, col.offsets.to_numpy())
     if col.null_count:  # a null row's offsets may span arbitrary values
         feats[col.is_null().to_numpy(zero_copy_only=False)] = np.nan
-    fla = pa.ListArray.from_arrays(
+    return pa.ListArray.from_arrays(
         pa.array(np.arange(len(feats) + 1, dtype=np.int32) * feats.shape[1]),
         pa.array(feats.ravel()),
     )
-    cols = [batch.column(n) for n in names] + [fla]
-    return pa.RecordBatch.from_arrays(cols, names=names + [out_col])
+
+
+def _token_battery_udf(tokens: pa.Array) -> pa.Array:
+    lazy_zip_caches()  # workers forked after the session's priming job
+    return token_battery_array(tokens)
 
 
 def extract_token_battery(
@@ -67,32 +72,23 @@ def extract_token_battery(
     """Append the per-sequence feature vector; all input columns (including
     the token payload) pass through byte-identical.
 
-    Arrow-native (mapInArrow): each Arrow batch goes to the segmented
-    battery as its list buffers (flat values + offsets, zero-copy), and
-    the token column passes through by REUSING the input Arrow column —
-    no pandas object-column materialization and no per-row slice list in
-    either direction (the per-element list<->object conversion was ~40% of
-    the stage). The kernel runs each stat as whole-batch numpy passes and
-    splits its calls by token count, so the cost per sequence does not
-    depend on how many rows a batch or partition holds (the local[1] and
-    local[4] scaling legs stay comparable) and worker memory stays flat
-    for long documents.
+    A scalar Arrow UDF (`arrow_udf`, pa.Array -> pa.Array) in a
+    projection: each Arrow batch of the token column goes to the
+    segmented battery as its list buffers (flat values + offsets,
+    zero-copy), and the features come back as one list array. The other
+    columns never leave the JVM, and because the UDF is deterministic
+    Catalyst can push a filter on them (the flagship's event subset)
+    below the Python node. The kernel runs each stat as whole-batch numpy
+    passes and splits its calls by token count, so the cost per sequence
+    does not depend on how many rows a batch or partition holds (the
+    local[1] and local[4] scaling legs stay comparable) and worker memory
+    stays flat for long documents.
 
-    keep_tokens=False drops the payload from the OUTPUT schema: at
-    10^12-row scale the token arrays are ~85% of the bytes, and a consumer
-    that immediately projects them away (the temporal join leg) should not
-    pay their Python->JVM transfer. Default True preserves the per-row
-    passthrough contract (BASELINE.json token-equality invariant).
+    keep_tokens=False drops the token column from the output.
     """
-    out_fields = [f for f in df.schema.fields if keep_tokens or f.name != tokens_col]
-    schema = StructType(out_fields + [StructField(out_col, ArrayType(DoubleType()))])
-    names = [f.name for f in out_fields]
-
-    def gen(batches):
-        for batch in batches:
-            yield token_battery_batch(batch, tokens_col, out_col, names)
-
-    return df.mapInArrow(gen, schema)
+    battery = arrow_udf(_token_battery_udf, ArrayType(DoubleType()))
+    out = df.withColumn(out_col, battery(F.col(tokens_col)))
+    return out if keep_tokens else out.drop(tokens_col)
 
 
 def extract_accel_battery(

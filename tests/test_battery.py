@@ -8,7 +8,7 @@ from mpds_spark.operators.battery import (
     extract_token_battery,
     score_dot,
     slice_modality,
-    token_battery_batch,
+    token_battery_array,
     token_battery_names,
 )
 from mpds_spark.sources.synth import synth_sequences
@@ -38,7 +38,7 @@ def _expected_features(tokens):
     return token_features(np.asarray(tokens))
 
 
-def test_token_battery_multibatch_empty_null_and_sliced(spark):
+def test_token_battery_array_multibatch_empty_null_and_sliced(spark):
     """Empty and null rows give all-NaN features, every other row matches
     scalar token_features, across several Arrow batches of one partition;
     tokens come back byte-identical with keep_tokens=True and the features
@@ -75,24 +75,18 @@ def test_token_battery_multibatch_empty_null_and_sliced(spark):
         np.testing.assert_array_equal(row_d["features"], row["features"])
     assert np.isnan(kept[2]["features"]).all() and np.isnan(kept[5]["features"]).all()
 
-    # a list column with a nonzero slice offset (and a null row whose
-    # offsets span values) through the same batch function
-    col = pa.array(toks, type=pa.list_(pa.int32()))
-    sliced = pa.RecordBatch.from_arrays(
-        [pa.array(range(9), pa.int32()), col], names=["doc_id", "tokens"]
-    ).slice(3)
-    assert sliced.column(1).offset == 3
+    # a list array with a nonzero slice offset (and a null row whose
+    # offsets span values) through the array-level kernel the UDF runs
+    sliced = pa.array(toks, type=pa.list_(pa.int32())).slice(3)
+    assert sliced.offset == 3
     spanning = pa.ListArray.from_arrays(
         pa.array([0, 2, 5], pa.int32()), pa.array([1, 2, 3, 4, 5], pa.int32()),
         mask=pa.array([False, True]),
     )
-    for batch, src in (
-        (sliced, toks[3:]),
-        (pa.RecordBatch.from_arrays([spanning], names=["tokens"]), [[1, 2], None]),
-    ):
-        out = token_battery_batch(batch, "tokens", "features", batch.schema.names)
-        assert out.column("tokens").equals(batch.column("tokens"))
-        for got, s in zip(out.column("features").to_pylist(), src):
+    for col, src in ((sliced, toks[3:]), (spanning, [[1, 2], None])):
+        out = token_battery_array(col)
+        assert len(out) == len(src) and out.null_count == 0
+        for got, s in zip(out.to_pylist(), src):
             np.testing.assert_allclose(
                 got, _expected_features(s), rtol=1e-12, equal_nan=True
             )
@@ -124,6 +118,52 @@ def test_extract_transform_output_unchanged(spark):
             np.testing.assert_array_equal(np.stack(g[c]), np.stack(r[c]))
         else:
             pd.testing.assert_series_equal(g[c], r[c])
+
+
+def _plan_nodes(node, above=()):
+    """(node, its ancestors) for every node of a physical plan, through
+    AQE's query stages."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan(), above)
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan(), above)
+        return
+    yield node, above
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i), above + (node,))
+
+
+def test_extract_transform_plan_pushes_event_filter_under_battery(spark, tmp_path):
+    """The flagship plan (runner/submit.py extract_transform over parquet):
+    exactly 2 Python nodes, both ArrowEvalPython, each returning only the
+    feature vector (tokens never come back from Python), and the 10%
+    event Filter below one of them, so that pass sees only event rows."""
+    from mpds_spark.runner.submit import extract_transform
+
+    path = str(tmp_path / "seq")
+    synth_sequences(spark, 120, seed=3, n_entities=6).write.parquet(path)
+    got = extract_transform(spark.read.parquet(path))
+    got.collect()
+    nodes = list(_plan_nodes(got._jdf.queryExecution().executedPlan()))
+    python = [
+        n for n, _ in nodes
+        if "Python" in n.nodeName() or n.nodeName().endswith(("InArrow", "InPandas"))
+    ]
+    assert [n.nodeName() for n in python] == ["ArrowEvalPython"] * 2
+    for n in python:
+        attrs = n.resultAttrs()
+        assert [attrs.apply(i).dataType().simpleString() for i in range(attrs.size())] == [
+            "array<double>"
+        ]
+    filters = [
+        above for n, above in nodes
+        if n.nodeName() == "Filter" and "crc32" in n.condition().toString()
+    ]
+    assert len(filters) == 1
+    assert sum(a.nodeName() == "ArrowEvalPython" for a in filters[0]) == 1
 
 
 def test_accel_battery_spark_matches_numpy(spark):
