@@ -18,31 +18,37 @@ Public API (DataFrame in / DataFrame out):
     extract_battery, robust_scale, rescale_scores
 """
 
-from mpds_spark.session import get_spark
-from mpds_spark.operators.asof import asof_join, time_since_event
-from mpds_spark.operators.backfill import locf, interpolate
-from mpds_spark.operators.windows import derived_features, lag_lead_diff
-from mpds_spark.operators.sessionize import (
-    sessionize,
-    remove_short_on_intervals,
-    unite_adjacent_on_intervals,
-    event_response,
-    interval_join,
-)
+import importlib
 
-__all__ = [
-    "get_spark",
-    "asof_join",
-    "time_since_event",
-    "locf",
-    "interpolate",
-    "derived_features",
-    "lag_lead_diff",
-    "sessionize",
-    "remove_short_on_intervals",
-    "unite_adjacent_on_intervals",
-    "event_response",
-    "interval_join",
-]
+# Public name -> defining module. Imported on first access (PEP 562), so a
+# Python worker that imports one engine module (the token battery, the
+# worker priming hook) does not pay for pyspark.sql, pandas and every
+# operator module.
+_EXPORTS = {
+    "get_spark": "mpds_spark.session",
+    "asof_join": "mpds_spark.operators.asof",
+    "time_since_event": "mpds_spark.operators.asof",
+    "locf": "mpds_spark.operators.backfill",
+    "interpolate": "mpds_spark.operators.backfill",
+    "derived_features": "mpds_spark.operators.windows",
+    "lag_lead_diff": "mpds_spark.operators.windows",
+    "sessionize": "mpds_spark.operators.sessionize",
+    "remove_short_on_intervals": "mpds_spark.operators.sessionize",
+    "unite_adjacent_on_intervals": "mpds_spark.operators.sessionize",
+    "event_response": "mpds_spark.operators.sessionize",
+    "interval_join": "mpds_spark.operators.sessionize",
+}
+
+__all__ = list(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value
+

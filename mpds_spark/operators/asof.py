@@ -61,12 +61,16 @@ def time_since_event(
     t = epoch_seconds(df, ts)
     ev_ts = F.when(F.col(event) == 1, t)
 
-    out = df.withColumn(
-        "time_since_last_event", t - F.max(ev_ts).over(prev)
-    ).withColumn("time_since_first_event", t - F.min(ev_ts).over(prev))
+    # one select, so one Window node: the frames differ but share the spec
+    cols = {
+        "time_since_last_event": t - F.max(ev_ts).over(prev),
+        "time_since_first_event": t - F.min(ev_ts).over(prev),
+    }
     if include_forward:
         nxt = w.rowsBetween(1, Window.unboundedFollowing)
-        out = out.withColumn("time_to_next_event", F.min(ev_ts).over(nxt) - t)
+        cols["time_to_next_event"] = F.min(ev_ts).over(nxt) - t
+    out = df.withColumns(cols)
+    if include_forward:
         # R parity (mimicUsefulFunction.R:86-88): timeToFirstEvent is defined
         # ONLY on rows before any event was seen, where it equals
         # timeToNextEvent; after the first event it stays NULL.

@@ -59,25 +59,26 @@ def locf(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     t = epoch_seconds(df, ts)
-    carried = F.last(F.col(value), ignorenulls=True).over(w)
     last_sample_t = F.last(
         F.when(F.col(value).isNotNull(), t), ignorenulls=True
     ).over(w)
-    tsls = t - last_sample_t
-
-    out = df.withColumn(f"{p}_locf", carried).withColumn(
-        f"{p}_time_since_sample", tsls
+    locf_c, tsls_c = f"{p}_locf", f"{p}_time_since_sample"
+    # one Window node; expiry and default read the carried column, so the
+    # window is not evaluated again
+    out = df.withColumns(
+        {
+            locf_c: F.last(F.col(value), ignorenulls=True).over(w),
+            tsls_c: t - last_sample_t,
+        }
     )
+    finish = {}
     if valid_time is not None:
-        out = out.withColumn(
-            f"{p}_locf_expir",
-            F.when(tsls > F.lit(float(valid_time)), F.lit(None)).otherwise(carried),
-        )
+        finish[f"{p}_locf_expir"] = F.when(
+            F.col(tsls_c) > F.lit(float(valid_time)), F.lit(None)
+        ).otherwise(F.col(locf_c))
     if default is not None:
-        out = out.withColumn(
-            f"{p}_locf", F.coalesce(F.col(f"{p}_locf"), F.lit(default))
-        )
-    return out
+        finish[locf_c] = F.coalesce(F.col(locf_c), F.lit(default))
+    return out.withColumns(finish)
 
 
 def interpolate(

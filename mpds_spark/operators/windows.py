@@ -5,6 +5,13 @@ JVM execution, no Python in the hot path. One logical range exchange on the
 entity key feeds every window in a stage (Catalyst reuses the partitioning
 across same-keyed windows).
 
+Each operator builds its window columns in one `select` per dependency
+level, so it opens one Window node per level: Spark gives every
+`withColumn` that holds a window expression its own node, and evaluates a
+window expression once per occurrence, even an identical one.
+derived_features is two levels (the lag pair, then the expanding
+aggregates); lag_lead_diff is one.
+
 Reference parity:
 - derived_features  ← dssl/dssFunctionLibrary.R:876-917
   (extractDSSFeaturesForEachPatient: expanding cumsum/cummax windows,
@@ -39,6 +46,33 @@ def _nan_to_zero(c: Column) -> Column:
     return F.when(c.isNull() | F.isnan(c), F.lit(0.0)).otherwise(c)
 
 
+_LAGS = ("__lag_v", "__lag_t")
+
+
+def _first_diffs(df: DataFrame, value: str, entity: str, ts: str):
+    """One Window node: the previous row's value and epoch time per entity as
+    the temporary columns `_LAGS`, and the first differences over them.
+
+    Returns (frame, signed_diff, abs_diff, diff_t). Parity:
+    dssFunctionLibrary.R:887-893, where an entity's first row gets diff 0,
+    abs_diff 0 and diff_t 1.
+    """
+    w = entity_window(entity, ts)
+    t = epoch_seconds(df, ts)
+    lag_v, lag_t = _LAGS
+    lagged = df.withColumns(
+        {lag_v: F.lag(value, 1).over(w), lag_t: F.lag(t, 1).over(w)}
+    )
+    dv = F.col(value) - F.col(lag_v)
+    dt = t - F.col(lag_t)
+    return (
+        lagged,
+        F.coalesce(dv, F.lit(0.0)),
+        F.coalesce(F.abs(dv), F.lit(0.0)),
+        F.coalesce(F.abs(dt), F.lit(1.0)),
+    )
+
+
 def lag_lead_diff(
     df: DataFrame,
     value: str,
@@ -46,21 +80,16 @@ def lag_lead_diff(
     ts: str = "ts",
     prefix: str | None = None,
 ) -> DataFrame:
-    """Per-entity first differences of value and time.
+    """Per-entity first differences of value and time, from one Window node.
 
     Parity: dssFunctionLibrary.R:887-893 — first row of each entity gets
     abs_diff=0 and diff_ts=1 (the reference's documented defaults).
     """
     p = prefix or value
-    w = entity_window(entity, ts)
-    dv = F.col(value) - F.lag(value, 1).over(w)
-    te = epoch_seconds(df, ts)
-    dt = te - F.lag(te, 1).over(w)
-    return (
-        df.withColumn(f"{p}_diff", F.coalesce(dv, F.lit(0.0)))
-        .withColumn(f"{p}_abs_diff", F.coalesce(F.abs(dv), F.lit(0.0)))
-        .withColumn("diff_ts", F.coalesce(F.abs(dt), F.lit(1.0)))
-    )
+    lagged, diff, abs_diff, diff_t = _first_diffs(df, value, entity, ts)
+    return lagged.withColumns(
+        {f"{p}_diff": diff, f"{p}_abs_diff": abs_diff, "diff_ts": diff_t}
+    ).drop(*_LAGS)
 
 
 def derived_features(
@@ -76,53 +105,55 @@ def derived_features(
     backward-looking (leakage-safe). NaN/NULL → 0 as in the reference's
     res_df[is.na(res_df)] = 0.
 
-    Scale: a single WindowExec pass per entity partition — O(n) expanding
-    aggregates, no self-join, no shuffle beyond the one entity exchange.
+    Scale: two Window nodes over one entity exchange and one sort — the lag
+    pair (`_first_diffs`), then every expanding aggregate in one `select`
+    over the one frame spec, each computed once. The feature ratios are a
+    plain projection on top. O(n) per entity, no self-join.
     """
+    lagged, signed_diff, abs_diff, diff_t = _first_diffs(df, value, entity, ts)
     w = entity_window(entity, ts)
     we = expanding(w)
     t = epoch_seconds(df, ts)
     v = F.col(value)
-
-    line_num = F.row_number().over(w)
-    cum = lambda c: F.sum(c).over(we)  # noqa: E731
-
-    dv = v - F.lag(value, 1).over(w)
-    dt = t - F.lag(t, 1).over(w)
-    abs_diff = F.coalesce(F.abs(dv), F.lit(0.0))
-    diff_t = F.coalesce(F.abs(dt), F.lit(1.0))
-    signed_diff = F.coalesce(dv, F.lit(0.0))
-    abs_rate = abs_diff / diff_t
     rate = signed_diff / diff_t
-
-    cumsum_ht = cum(t)
-    cumsum_ht_sq = cum(t * t)
-
-    out = (
-        df.withColumn("dss_avg", cum(v) / line_num)
-        .withColumn("dss_ht_avg", cum(v * t) / cumsum_ht)
-        .withColumn("dss_ht_sq_avg", cum(v * t * t) / cumsum_ht_sq)
-        .withColumn("dss_max", F.max(v).over(we))
-        .withColumn("dss_min", F.min(v).over(we))
-        .withColumn("dss_rate_avg", cum(rate) / line_num)
-        .withColumn("dss_rate_ht_avg", cum(rate * t) / cumsum_ht)
-        .withColumn("dss_abs_rate_avg", cum(abs_rate) / line_num)
-        .withColumn("dss_abs_rate_ht_avg", cum(abs_rate * t) / cumsum_ht)
+    abs_rate = abs_diff / diff_t
+    sums = {
+        "__dss_s_v": v,
+        "__dss_s_vt": v * t,
+        "__dss_s_vtt": v * t * t,
+        "__dss_s_t": t,
+        "__dss_s_tt": t * t,
+        "__dss_s_r": rate,
+        "__dss_s_rt": rate * t,
+        "__dss_s_a": abs_rate,
+        "__dss_s_at": abs_rate * t,
+    }
+    # Spark evaluates every window expression of a select separately, even
+    # identical ones, so each aggregate is named once here and the features
+    # below refer to the names.
+    aggs = {
+        "__dss_n": F.row_number().over(w),
+        **{k: F.sum(c).over(we) for k, c in sums.items()},
+        "__dss_max": F.max(v).over(we),
+        "__dss_min": F.min(v).over(we),
+    }
+    a = {k: F.col(k) for k in aggs}
+    feats = {
+        "dss_avg": a["__dss_s_v"] / a["__dss_n"],
+        "dss_ht_avg": a["__dss_s_vt"] / a["__dss_s_t"],
+        "dss_ht_sq_avg": a["__dss_s_vtt"] / a["__dss_s_tt"],
+        "dss_max": a["__dss_max"],
+        "dss_min": a["__dss_min"],
+        "dss_rate_avg": a["__dss_s_r"] / a["__dss_n"],
+        "dss_rate_ht_avg": a["__dss_s_rt"] / a["__dss_s_t"],
+        "dss_abs_rate_avg": a["__dss_s_a"] / a["__dss_n"],
+        "dss_abs_rate_ht_avg": a["__dss_s_at"] / a["__dss_s_t"],
+    }
+    return (
+        lagged.withColumns(aggs)
+        .withColumns({k: _nan_to_zero(c) for k, c in feats.items()})
+        .drop(*_LAGS, *aggs)
     )
-    feat_cols = [
-        "dss_avg",
-        "dss_ht_avg",
-        "dss_ht_sq_avg",
-        "dss_max",
-        "dss_min",
-        "dss_rate_avg",
-        "dss_rate_ht_avg",
-        "dss_abs_rate_avg",
-        "dss_abs_rate_ht_avg",
-    ]
-    for c in feat_cols:
-        out = out.withColumn(c, _nan_to_zero(F.col(c)))
-    return out
 
 
 def interleave_split(

@@ -147,6 +147,58 @@ def test_sessionize_plan_single_entity_exchange(spark, series_df):
     assert _shuffles(plan) == 1, plan
 
 
+def _narrow_chain(df):
+    from mpds_spark.operators.asof import asof_join
+    from mpds_spark.operators.backfill import locf
+    from mpds_spark.operators.sessionize import sessionize
+    from mpds_spark.operators.windows import derived_features
+
+    masked = df.withColumn("value", F.when(F.col("value") > -1, F.col("value")))
+    filled = locf(masked, value="value", valid_time=5e4, default=0.0)
+    feat = derived_features(filled, value="value_locf")
+    events = df.filter("value > 1").select("entity_id", "ts", F.col("value").alias("ev"))
+    return asof_join(sessionize(feat, gap=1800.0), events)
+
+
+def _derived_then_asof(df):
+    from mpds_spark.operators.asof import asof_join
+    from mpds_spark.operators.windows import derived_features
+
+    events = df.filter("value > 1").select("entity_id", "ts", F.col("value").alias("ev"))
+    return asof_join(derived_features(df, value="value"), events)
+
+
+def _window_plans():
+    from mpds_spark.operators.asof import time_since_event
+    from mpds_spark.operators.backfill import locf
+    from mpds_spark.operators.sessionize import sessionize
+    from mpds_spark.operators.windows import derived_features, lag_lead_diff
+
+    def tse(df):
+        ev = df.withColumn("event", (F.col("value") > 1).cast("int"))
+        return time_since_event(ev, include_forward=True, leakage_ok=True)
+
+    return {
+        "locf": (lambda df: locf(df, valid_time=5e4, default=0.0), 1),
+        "derived_features": (lambda df: derived_features(df, value="value"), 2),
+        "lag_lead_diff": (lambda df: lag_lead_diff(df, "value"), 1),
+        "time_since_event": (tse, 1),
+        "sessionize": (lambda df: sessionize(df, gap=1800.0), 2),
+        "narrow_chain": (_narrow_chain, 6),
+        "derived_then_asof": (_derived_then_asof, 3),
+    }
+
+
+@pytest.mark.parametrize("name", list(_window_plans()))
+def test_window_node_count(spark, series_df, name):
+    """One Window node per dependency level of an operator: a window column
+    added by its own withColumn would add a node, and one Column used in two
+    withColumn calls would be computed twice."""
+    build, want = _window_plans()[name]
+    plan = _plan(build(series_df))
+    assert _n(plan, "Window") == want, plan
+
+
 def test_lsh_candidates_plan_no_cartesian(spark):
     from mpds_spark.operators.dedup import lsh_candidate_pairs
 

@@ -1,6 +1,6 @@
 """Randomized differential property tests (hypothesis) — engine kernels vs
-the literal loop transcriptions in oracles.py, plus one Spark-level
-property for the sessionize family."""
+the literal loop transcriptions in oracles.py, plus Spark-level properties
+for the sessionize family, derived_features and locf."""
 
 import numpy as np
 import pandas as pd
@@ -150,6 +150,127 @@ def test_sessionize_family_property(spark, sig, th, seed):
         pdf["signal"].to_numpy(), th,
     )
     np.testing.assert_array_equal(got_ua, exp_ua)
+
+
+_FEATS = [
+    "dss_avg", "dss_ht_avg", "dss_ht_sq_avg", "dss_max", "dss_min",
+    "dss_rate_avg", "dss_rate_ht_avg", "dss_abs_rate_avg", "dss_abs_rate_ht_avg",
+]
+
+
+def _entity_frame(series) -> pd.DataFrame:
+    """One (entity_id, ts, value) frame from per-entity lists of (gap, value):
+    ts is the running sum of the gaps, so it is distinct within an entity.
+    Rows are reversed so the operator, not the input order, sorts them."""
+    frames = [
+        pd.DataFrame({
+            "entity_id": f"e{k}",
+            "ts": np.cumsum([g for g, _ in rows]),
+            "value": [v for _, v in rows],
+        })
+        for k, rows in enumerate(series)
+    ]
+    return pd.concat(frames, ignore_index=True).iloc[::-1]
+
+
+# Quarter-unit values and half-unit gaps keep v*t*t and every running sum
+# exact in a double, so the engine's (v*t)*t and the oracle's v*(t**2) agree
+# to the last bit and rtol=1e-12 tests the semantics, not rounding order.
+_quarters = st.integers(-10_000, 10_000).map(lambda k: k / 4)
+_gaps = st.integers(1, 1_000).map(lambda k: k / 2)
+# short gaps and a valid_time on the same grid: a time since the last
+# sample often equals valid_time exactly, the expiry boundary
+_short_gaps = st.integers(1, 8).map(lambda k: k / 2)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(
+        st.lists(st.tuples(_gaps, _quarters), min_size=1, max_size=25),
+        min_size=1,
+        max_size=10,
+    )
+)
+def test_derived_features_equals_reference(spark, series):
+    from mpds_spark.operators.windows import derived_features
+
+    pdf = _entity_frame(series)
+    got = (
+        derived_features(spark.createDataFrame(pdf), value="value")
+        .orderBy("entity_id", "ts")
+        .toPandas()
+    )
+    s = pdf.sort_values(["entity_id", "ts"])
+    want = pd.concat(
+        [oracles.derived_features(g, value="value", ts="ts")
+         for _, g in s.groupby("entity_id")],
+        ignore_index=True,
+    )
+    for c in _FEATS:
+        np.testing.assert_allclose(
+            got[c].to_numpy(), want[c].to_numpy(), rtol=1e-12, err_msg=c
+        )
+
+
+def test_derived_features_reapplied_keeps_column_order(spark):
+    """Feature columns already in the input are replaced in place; new ones
+    are appended in the reference order. So applying the operator to its own
+    output leaves the column order as it was."""
+    from mpds_spark.operators.windows import derived_features
+
+    pdf = _entity_frame([[(1.0, 2.0), (2.0, -1.0)], [(0.5, 3.0)]])
+    pdf.insert(1, "dss_max", 0.0)
+    once = derived_features(spark.createDataFrame(pdf), value="value")
+    assert once.columns == (
+        ["entity_id", "dss_max", "ts", "value"]
+        + [c for c in _FEATS if c != "dss_max"]
+    )
+    assert derived_features(once, value="value").columns == once.columns
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(_short_gaps, st.one_of(st.none(), _quarters)),
+            min_size=1,
+            max_size=25,
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+    st.integers(1, 16).map(lambda k: k / 2),
+)
+def test_locf_equals_reference(spark, series, valid_time):
+    from mpds_spark.operators.backfill import locf
+
+    pdf = _entity_frame(series)
+    pdf["value"] = pdf["value"].astype("float64")
+    got = (
+        locf(spark.createDataFrame(pdf), value="value", valid_time=valid_time)
+        .orderBy("entity_id", "ts")
+        .toPandas()
+    )
+    s = pdf.sort_values(["entity_id", "ts"]).reset_index(drop=True)
+    want = oracles.locf_with_expiration(
+        s["entity_id"].to_numpy(), s["ts"].to_numpy(), s["value"].to_numpy(),
+        valid_time,
+    )
+    for c, w in zip(
+        ["value_locf", "value_time_since_sample", "value_locf_expir"], want
+    ):
+        np.testing.assert_allclose(
+            got[c].to_numpy(dtype=float), w, rtol=1e-12, equal_nan=True,
+            err_msg=c,
+        )
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
