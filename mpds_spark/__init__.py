@@ -19,11 +19,20 @@ Public API (DataFrame in / DataFrame out):
 """
 
 import importlib
+import os
+
+# Inside a PySpark worker (Spark sets this variable for every Python
+# worker it starts), stop the per-task re-read of the zip archives on
+# sys.path. A worker imports this package whenever it unpickles an engine
+# UDF, so every engine UDF gets the fix from here; see pyworker.py.
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    from mpds_spark.pyworker import lazy_zip_caches
+
+    lazy_zip_caches()
 
 # Public name -> defining module. Imported on first access (PEP 562), so a
-# Python worker that imports one engine module (the token battery, the
-# worker priming hook) does not pay for pyspark.sql, pandas and every
-# operator module.
+# Python worker that imports one engine module (the token battery, say)
+# does not pay for pyspark.sql, pandas and every operator module.
 _EXPORTS = {
     "get_spark": "mpds_spark.session",
     "asof_join": "mpds_spark.operators.asof",

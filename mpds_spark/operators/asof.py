@@ -9,9 +9,12 @@ Two operators:
   emits before updating lastEventHT), and "next event" excludes it too.
 
 - asof_join: two-table point-in-time join (Spark has no native ASOF JOIN).
-  Tag-union both sides, ONE shuffle + sort on (entity, on, side), then the
-  match is a pure last(struct, ignoreNulls) expanding window — i.e. the
-  sort-merge as-of scan expressed as LOCF over the merged stream. 100% JVM
+  Tag-union both sides, one entity-keyed shuffle of each row + sort on
+  (entity, on, side), then the match is a pure last(struct, ignoreNulls)
+  expanding window — i.e. the sort-merge as-of scan expressed as LOCF over
+  the merged stream. A left side that an upstream window leg already
+  hash-partitioned by entity is not shuffled again: only the right side
+  is (see _tag_union). 100% JVM
   (WindowExec, whole-stage codegen feeding it), no Python workers,
   streaming O(n+m), spill-safe, and AQE/skew machinery applies normally.
   A single giant entity is still a single WindowExec partition, but sort +
@@ -129,6 +132,36 @@ def asof_join(
     )
 
 
+def _tag_union(l_tag: DataFrame, r_tag: DataFrame, by: list[str]) -> DataFrame:
+    """The tagged sides' union that the as-of window scans.
+
+    A plain union loses its children's partitioning, so the window's
+    exchange above it shuffles both sides, even a wide left side that an
+    upstream window leg (locf, derived_features, sessionize) has already
+    hash-partitioned by `by`. When Spark plans `l_tag.repartition(*by)`
+    without a shuffle, that is the case: both tagged sides are then
+    repartitioned by `by` before the union. EnsureRequirements drops the
+    left's repartition, the union keeps the common partitioning
+    (spark.sql.unionOutputPartitioning), and the window needs no exchange:
+    only the right side is shuffled. Otherwise the union is left plain and
+    the one exchange above it shuffles both sides once.
+
+    The check plans the left side (no job runs)."""
+    if _hash_partitioned_by(l_tag, by):
+        return l_tag.repartition(*by).unionByName(r_tag.repartition(*by))
+    return l_tag.unionByName(r_tag)
+
+
+def _hash_partitioned_by(df: DataFrame, by: list[str]) -> bool:
+    """True when the physical plan of `df.repartition(*by)` has no shuffle
+    at its top, i.e. `df` already comes out hash-partitioned by `by`."""
+    plan = df.repartition(*by)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    # under AQE the plan's root node is the one child of AdaptiveSparkPlan
+    root = lines[1] if lines[0].startswith("AdaptiveSparkPlan") else lines[0]
+    return not root.lstrip("+- ").startswith("Exchange")
+
+
 def _asof_window(
     left: DataFrame,
     right: DataFrame,
@@ -145,7 +178,8 @@ def _asof_window(
 
     Plan: union(left+side, right+side) → WindowExec partitioned by entity,
     ordered by (on, side) → last(struct(right row), ignoreNulls) over the
-    expanding frame → keep left rows. One exchange, zero Python. The right
+    expanding frame → keep left rows. Each row is shuffled at most once
+    (see _tag_union), zero Python. The right
     row is carried as ONE struct so all its columns come from the same
     matched row (independent per-column last() could mix rows when the
     right side itself has nulls — pandas merge_asof is row-wise).
@@ -167,7 +201,7 @@ def _asof_window(
     for f in left.schema.fields:
         if f.name not in [*by, on]:
             r_tag = r_tag.withColumn(f.name, F.lit(None).cast(f.dataType))
-    u = l_tag.unionByName(r_tag.select(*l_tag.columns))
+    u = _tag_union(l_tag, r_tag.select(*l_tag.columns), by)
 
     # side sort value: 0 scans first. Right-first at ties <=> exact allowed.
     side_rank = F.when(
@@ -230,9 +264,9 @@ def _asof_window_nearest(
     one ordering could not express with a single payload). The winner is
     the closer match, ties to backward, tolerance applied AFTER the choice
     — exactly pandas.merge_asof(direction='nearest') (differentially
-    tested). One exchange, zero Python; the right side
-    rides the shuffle twice (it is the smaller side in the canonical
-    enrich pattern)."""
+    tested). Zero Python; the left side is shuffled at most once (see
+    _tag_union) and the right side twice (it is the smaller side in the
+    canonical enrich pattern)."""
     payload = F.struct(
         F.col(on).alias("__m_on"),
         *[F.col(c).alias(out_names[c]) for c in right_cols],
@@ -255,7 +289,7 @@ def _asof_window_nearest(
                 t = t.withColumn(f.name, F.lit(None).cast(f.dataType))
         return t.select(*l_tag.columns)
 
-    u = l_tag.unionByName(_r_tag("__rb", 0)).unionByName(_r_tag("__rf", 2))
+    u = _tag_union(l_tag, _r_tag("__rb", 0).unionByName(_r_tag("__rf", 2)), by)
 
     # tie rank at equal on: left rows = 1; backward copies sort before
     # left iff exact matches allowed; forward copies after left iff exact

@@ -27,7 +27,6 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from mpds_spark.operators.util import pin_group_parallelism
-from mpds_spark.pyworker import lazy_zip_caches
 
 from mpds_spark.functions.battery import (
     TOKEN_STAT_NAMES,
@@ -58,11 +57,6 @@ def token_battery_array(col: pa.Array) -> pa.Array:
     )
 
 
-def _token_battery_udf(tokens: pa.Array) -> pa.Array:
-    lazy_zip_caches()  # workers forked after the session's priming job
-    return token_battery_array(tokens)
-
-
 def extract_token_battery(
     df: DataFrame,
     tokens_col: str = "tokens",
@@ -86,7 +80,7 @@ def extract_token_battery(
 
     keep_tokens=False drops the token column from the output.
     """
-    battery = arrow_udf(_token_battery_udf, ArrayType(DoubleType()))
+    battery = arrow_udf(token_battery_array, ArrayType(DoubleType()))
     out = df.withColumn(out_col, battery(F.col(tokens_col)))
     return out if keep_tokens else out.drop(tokens_col)
 

@@ -171,6 +171,7 @@ def minhash_signature(
         ktype = df.schema[key].dataType.simpleString()
 
         def _mh_gen(batches):
+            import mpds_spark  # noqa: F401  installs the worker fix-ups
             import hashlib
 
             import pyarrow as pa
@@ -392,6 +393,7 @@ def simhash64(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFra
     are bit-identical to the r5 explode+agg."""
 
     def _sig_gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         import hashlib
 
         import numpy as np

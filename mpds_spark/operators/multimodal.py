@@ -279,6 +279,7 @@ def sample_frames(
     )
 
     def gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         for pdf in batches:
             ids, frame_nos, frames = [], [], []
             for mid, payload, meta in zip(

@@ -89,6 +89,7 @@ def cosine_nn1_arrow(
     qm_l = [list(r[1]) for r in q_rows]
 
     def gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         import numpy as _n
         import pyarrow as pa
 

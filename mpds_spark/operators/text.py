@@ -984,6 +984,7 @@ def cross_group_ngram_overlap(
     from mpds_spark.operators.util import scratch_persist
 
     def _gram_gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         # guide §4.2: gram ASSEMBLY is a per-batch kernel — the word
         # split stays JVM-side (words_col, exact regex semantics), so
         # a gram here is exactly ' '.join of the same word slice the

@@ -461,6 +461,7 @@ def consistent_hash_audit(
     r2h, r2n = ring(int(n_nodes) + 1)
 
     def _assign_gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         # guide §4.2: per-batch md5 + sorted-ring searchsorted replaces
         # the r5 per-row interpreted filter over the 128/144-element
         # ring literal (first vnode with h >= key position, wrapping to

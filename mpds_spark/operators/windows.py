@@ -270,8 +270,13 @@ def event_burstiness(
     )
     w = Window.partitionBy(by).orderBy(*order)
     dec = "decimal(38,0)"
-    g = (F.col("__us") - F.lag("__us").over(w)).cast(dec)
-    d = d.withColumn("__g", g).withColumn("__gn", F.lead("__g").over(w))
+    # the next gap is lead(us) - us, not lead(__g): one Window node
+    d = d.withColumns(
+        {
+            "__g": (F.col("__us") - F.lag("__us").over(w)).cast(dec),
+            "__gn": (F.lead("__us").over(w) - F.col("__us")).cast(dec),
+        }
+    )
     has_pair = F.col("__g").isNotNull() & F.col("__gn").isNotNull()
 
     def dsum(c):
@@ -509,9 +514,9 @@ def cusum_changepoint(
         *([F.col(tiebreak)] if tiebreak else []),
     )
     w = Window.partitionBy(by).orderBy(*order)
-    full = Window.partitionBy(by).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    # whole-partition frame on the same ordering: one Window node, and
+    # exact counts and decimal sums do not depend on the order
+    full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     dec = "decimal(38,0)"
     d = d.select(
         F.col(by),
@@ -964,12 +969,14 @@ def rolling_slope(
         .withColumn("__x", F.col("__us") - F.first("__us").over(we))
     )
     xd, yd = F.col("__x").cast(dec), F.col("__y").cast(dec)
-    d = (
-        d.withColumn("__n", F.count(F.lit(1)).over(wf).cast("long"))
-        .withColumn("__sx", F.sum(xd).over(wf))
-        .withColumn("__sy", F.sum(yd).over(wf))
-        .withColumn("__sxy", F.sum(xd * yd).over(wf))
-        .withColumn("__sxx", F.sum(xd * xd).over(wf))
+    d = d.withColumns(
+        {
+            "__n": F.count(F.lit(1)).over(wf).cast("long"),
+            "__sx": F.sum(xd).over(wf),
+            "__sy": F.sum(yd).over(wf),
+            "__sxy": F.sum(xd * yd).over(wf),
+            "__sxx": F.sum(xd * xd).over(wf),
+        }
     )
     n = F.col("__n").cast(dec)
     num = (n * F.col("__sxy") - F.col("__sx") * F.col("__sy")).cast("double")
@@ -1319,14 +1326,12 @@ def sax_symbols(
         * F.floor(F.abs(F.col(value)) * scale + F.lit(0.5))
     ).cast("long")
     w = Window.partitionBy(by).orderBy(F.col(ts))
-    d = df.select(
-        F.col(by), F.col(ts), cents.alias("__c")
-    ).withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(
-            Window.partitionBy(by).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
+    full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    d = df.select(F.col(by), F.col(ts), cents.alias("__c")).withColumns(
+        {
+            "__rn": F.row_number().over(w),
+            "__n": F.count(F.lit(1)).over(full),
+        }
     )
     seg = d.groupBy(
         F.col(by),

@@ -10,10 +10,12 @@ runs. Python 3.13 made the method lazy; `lazy_zip_caches` backports
 that: an archive is re-read only when its (st_mtime_ns, st_size) changed
 since it was last read.
 
-Install it inside a task (session priming, the token battery), never as
-`spark.python.daemon.module`: files shipped with `--py-files` reach
-sys.path only per task, so a daemon module from this package could not
-be imported at worker launch on a cluster.
+`mpds_spark/__init__.py` installs it when the package is imported inside
+a PySpark worker, which happens whenever the worker unpickles an engine
+UDF: the worker's first task still pays the re-reads, its later tasks do
+not. Never install it as `spark.python.daemon.module`: files shipped
+with `--py-files` reach sys.path only per task, so a daemon module from
+this package could not be imported at worker launch on a cluster.
 """
 
 from __future__ import annotations

@@ -14452,6 +14452,7 @@ def _quant_scatter_gen(D):
     count row (0,0,n) — dim^2-bounded regardless of row count."""
 
     def gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         import numpy as np
         import pyarrow as pa
 
@@ -17827,6 +17828,7 @@ def q_jl_projection_audit(spark, sf_dir):
     signs = _jl_signs()
 
     def _jl_gen(batches):
+        import mpds_spark  # noqa: F401  installs the worker fix-ups
         # guide §4.2: quantization (identical IEEE float64 sequence as
         # the r5 in-plan transform) + the 16x64 sign projection as one
         # int64 matmul per batch — every y is an EXACT LONG, identical

@@ -9,16 +9,12 @@ Key choices (scale rationale):
 - UTC session timezone: the DuckDB oracle compares naive-UTC timestamps.
 - shuffle.partitions defaults to the core count in local mode; on a real
   cluster leave the default and let AQE coalesce.
-- Python workers are primed at session start (MPDS_PRIME_PYTHON_WORKERS=0
-  turns it off): one worker per core pays the numpy/pandas/pyarrow
-  imports once and gets `pyworker.lazy_zip_caches`, which stops the
-  per-task re-read of every zip archive on sys.path (~0.27 CPU-s per
-  task on Python < 3.13). A priming failure is logged, never raised.
+- Building a session runs no job: Spark forks Python workers only when a
+  plan reaches a Python node, so a JVM-only pipeline never starts one.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -66,44 +62,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("MPDS_PRIME_PYTHON_WORKERS", "1") == "1":
-        _prime_python_workers(spark)
     return spark
-
-
-def _prime_python_workers(spark: SparkSession) -> set[int]:
-    """Fork one Python worker per core, pay the pandas/pyarrow/numpy
-    import once and install `lazy_zip_caches`, at session creation — the
-    same reason the JVM and parquet footers are warmed before any
-    measurement: with spark.python.worker.reuse (default) the pool
-    persists, so the first Arrow-kernel stage of the session does not
-    absorb a multi-second fork+import storm into whatever query happens
-    to run it, and no later task of a primed worker re-reads the zip
-    archives on its sys.path. No data is read and nothing is cached.
-    Returns the pids of the workers it ran in (empty if it failed).
-    Disable with MPDS_PRIME_PYTHON_WORKERS=0."""
-    try:
-        n = spark.sparkContext.defaultParallelism
-
-        def _prime(batches):
-            import os
-
-            import numpy  # noqa: F401
-            import pandas  # noqa: F401
-            import pyarrow
-
-            from mpds_spark.pyworker import lazy_zip_caches
-
-            lazy_zip_caches()
-            for _ in batches:
-                yield pyarrow.RecordBatch.from_pydict({"pid": [os.getpid()]})
-
-        rows = spark.range(n, numPartitions=n).mapInArrow(_prime, "pid long").collect()
-        return {r.pid for r in rows}
-    except Exception:
-        # priming must never break session creation, but without it every
-        # task pays the zip re-reads again: say so
-        logging.getLogger(__name__).warning(
-            "Python worker priming failed", exc_info=True
-        )
-        return set()

@@ -4,6 +4,8 @@ operator scale, not just its output values. These are the properties the
 regressions):
 
 - temporal operators: ONE exchange, zero Python in the plan;
+- an as-of join after an entity-keyed window leg shuffles only its right
+  side: the left keeps the leg's partitioning through the union;
 - bucketed candidate joins: never a cartesian/nested-loop product;
 - range joins with an entity equi-key: sort-merge (or hash), with the
   range as a post-filter — not a nested loop.
@@ -168,11 +170,48 @@ def _derived_then_asof(df):
     return asof_join(derived_features(df, value="value"), events)
 
 
+def _union_split(plan: str) -> tuple[str, list[str]]:
+    """(the plan text above its one Union node, the text of each of the
+    Union's child subtrees)."""
+    lines = plan.splitlines()
+    (u,) = [i for i, ln in enumerate(lines) if ln.lstrip(" :+-").startswith("Union")]
+    col = lines[u].index("Union") - 3  # a child's ":- "/"+- " marker column
+    branches = []
+    for ln in lines[u + 1 :]:
+        mark = ln[col + 3 : col + 6]
+        if mark in (":- ", "+- "):
+            branches.append([ln])
+        elif mark in (":  ", "   ") and len(ln) > col + 6:
+            branches[-1].append(ln)
+        else:
+            break
+    return "\n".join(lines[:u]), ["\n".join(b) for b in branches]
+
+
+@pytest.mark.parametrize("build", [_narrow_chain, _derived_then_asof])
+def test_asof_after_window_leg_shuffles_right_side_only(spark, series_df, build):
+    """The left side comes out of an entity-keyed window leg already
+    hash-partitioned by entity: the as-of union keeps that partitioning,
+    so no exchange sits above it, the left branch holds only the leg's
+    own exchange and the right branch one exchange of its own. A second
+    shuffle of the wide left side would add an exchange above the union."""
+    above, branches = _union_split(_plan(build(series_df)))
+    assert _shuffles(above) == 0, above
+    assert len(branches) == 2
+    assert [_shuffles(b) for b in branches] == [1, 1], branches
+
+
 def _window_plans():
     from mpds_spark.operators.asof import time_since_event
     from mpds_spark.operators.backfill import locf
     from mpds_spark.operators.sessionize import sessionize
-    from mpds_spark.operators.windows import derived_features, lag_lead_diff
+    from mpds_spark.operators.windows import (
+        cusum_changepoint,
+        derived_features,
+        event_burstiness,
+        lag_lead_diff,
+        rolling_slope,
+    )
 
     def tse(df):
         ev = df.withColumn("event", (F.col("value") > 1).cast("int"))
@@ -186,6 +225,9 @@ def _window_plans():
         "sessionize": (lambda df: sessionize(df, gap=1800.0), 2),
         "narrow_chain": (_narrow_chain, 6),
         "derived_then_asof": (_derived_then_asof, 3),
+        "rolling_slope": (rolling_slope, 2),
+        "event_burstiness": (event_burstiness, 1),
+        "cusum_changepoint": (cusum_changepoint, 1),
     }
 
 

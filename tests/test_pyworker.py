@@ -1,19 +1,23 @@
 """pyworker.lazy_zip_caches: a zip importer re-reads its archive's
-directory only when the file changed, and primed Spark workers carry the
-fix."""
+directory only when the file changed; every Spark worker that ran an
+engine UDF carries the fix; and a session that runs no Python starts no
+Python worker."""
 
 import importlib
-import logging
+import inspect
+import json
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
-import pyarrow as pa
 import pytest
 
 from mpds_spark import pyworker
-from mpds_spark.session import _prime_python_workers
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 eager_only = pytest.mark.skipif(
     sys.version_info >= (3, 13), reason="zipimport is lazy from Python 3.13 on"
@@ -108,42 +112,122 @@ def test_noop_from_python_313(reads, monkeypatch):
     assert zipimport.zipimporter.invalidate_caches is pyworker._reread
 
 
-def test_primed_workers_have_lazy_zip_caches(spark):
-    """Every pool worker that session priming touched reports the fix as
-    installed when a later job runs in it."""
-    primed = _prime_python_workers(spark)
-    assert primed
-
-    def probe(batches):
-        import os
-        import sys
-        import zipimport
-
-        from mpds_spark.pyworker import _invalidate_caches
-
-        lazy = (
-            zipimport.zipimporter.invalidate_caches is _invalidate_caches
-            or sys.version_info >= (3, 13)
-        )
-        for _ in batches:
-            yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "lazy": [lazy]})
-
-    n = spark.sparkContext.defaultParallelism
-    rows = spark.range(2 * n, numPartitions=2 * n).mapInArrow(
-        probe, "pid long, lazy boolean"
-    ).collect()
-    reused = {r.pid: r.lazy for r in rows if r.pid in primed}
-    assert reused, "no task ran in a primed worker"
-    assert all(reused.values())
+def _descendants(pid: int) -> list[tuple[int, int, str]]:
+    """(pid, parent pid, command line) of every live descendant of `pid`,
+    read from /proc."""
+    procs = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{d}/cmdline", "rb") as f:
+                cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
+        except (OSError, ValueError, IndexError):
+            continue  # the process exited while we read it
+        procs.append((int(d), ppid, cmd))
+    out, todo = [], [pid]
+    while todo:
+        parent = todo.pop()
+        for p in procs:
+            if p[1] == parent:
+                out.append(p)
+                todo.append(p[0])
+    return out
 
 
-def test_priming_failure_logs_one_warning(caplog):
-    class NoContext:
-        @property
-        def sparkContext(self):
-            raise RuntimeError("no context")
+def _run_session(body: str) -> dict:
+    """Run `body` in a fresh Python process after `spark =
+    get_spark(master="local[2]")`, with `_descendants` defined; return the
+    JSON object it prints on its last line."""
+    script = "\n".join(
+        [
+            "import json, os, sys",
+            f"sys.path.insert(0, {ROOT!r})",
+            inspect.getsource(_descendants),
+            "from mpds_spark.session import get_spark",
+            'spark = get_spark(master="local[2]")',
+            textwrap.dedent(body),
+            "spark.stop()",
+        ]
+    )
+    path = os.pathsep.join([ROOT, os.environ.get("PYTHONPATH", "")])
+    env = dict(os.environ, PYTHONPATH=path)
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=ROOT, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-4000:]
+    return json.loads(res.stdout.strip().splitlines()[-1])
 
-    with caplog.at_level(logging.WARNING, logger="mpds_spark.session"):
-        assert _prime_python_workers(NoContext()) == set()
-    assert [r.levelno for r in caplog.records] == [logging.WARNING]
-    assert "priming failed" in caplog.records[0].getMessage()
+
+def test_engine_udf_workers_have_lazy_zip_caches():
+    """After an action running an engine UDF that is a closure pickled by
+    value (simhash64's generator), and then a token battery action, every
+    Python worker that ran them reports the fix as installed when a later
+    task reuses it. Each action is probed on its own, so neither UDF can
+    lean on the other. The probe reads zipimport's method before it
+    imports anything from mpds_spark, so it cannot install the fix."""
+    rounds = _run_session(
+        """
+        import pyarrow as pa
+        from mpds_spark.operators.battery import extract_token_battery
+        from mpds_spark.operators.dedup import simhash64
+
+        def workers():  # the pyspark daemon's children
+            daemon = [p for p in _descendants(os.getpid()) if "pyspark.daemon" in p[2]]
+            return {p[0] for p in daemon if p[1] in {q[0] for q in daemon}}
+
+        def probe(batches):
+            import os
+            import sys
+            import zipimport
+
+            m = zipimport.zipimporter.invalidate_caches
+            lazy = sys.version_info >= (3, 13) or (
+                m.__module__, m.__name__
+            ) == ("mpds_spark.pyworker", "_invalidate_caches")
+            for _ in batches:
+                yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "lazy": [lazy]})
+
+        docs = spark.createDataFrame(
+            [(i, [1, 2, i], f"w{i} w{i + 1} common tail") for i in range(40)],
+            "doc_id long, tokens array<int>, text string",
+        ).repartition(4)
+        seen, ran, rounds = set(), set(), []
+        for df in (simhash64(docs), extract_token_battery(docs)):
+            df.write.format("noop").mode("overwrite").save()
+            ran |= workers() - seen  # forked for this engine action
+            rows = spark.range(16, numPartitions=16).mapInArrow(
+                probe, "pid long, lazy boolean"
+            ).collect()
+            rounds.append({"ran": sorted(ran), "probe": [[r.pid, r.lazy] for r in rows]})
+            seen = workers()  # a worker forked for the probe ran no engine UDF
+        print(json.dumps(rounds))
+        """
+    )
+    for r in rounds:
+        assert r["ran"], "no Python worker ran the engine UDF"
+        reused = {pid: lazy for pid, lazy in r["probe"] if pid in r["ran"]}
+        assert reused, "no later task ran in a worker that ran an engine UDF"
+        assert all(reused.values()), reused
+
+
+def test_session_starts_no_python_worker():
+    """get_spark plus one JVM-only action runs exactly that action's job,
+    and no pyspark daemon or worker process is started."""
+    got = _run_session(
+        """
+        spark.range(1000).write.format("noop").mode("overwrite").save()
+        tree = _descendants(os.getpid())
+        print(json.dumps({
+            "jobs": spark.sparkContext.statusTracker().getJobIdsForGroup(),
+            "java": [c for _, _, c in tree if "java" in c.split(" ")[0]],
+            "python": [c for _, _, c in tree if "pyspark.daemon" in c or "pyspark.worker" in c],
+        }))
+        """
+    )
+    assert got["java"], "the JVM was not found among the driver's descendants"
+    assert got["python"] == [], got["python"]
+    assert len(got["jobs"]) == 1, got["jobs"]

@@ -1,13 +1,14 @@
 """CPU each Python worker spends outside the UDF, per task.
 
 Runs an identity mapInArrow over --tasks one-row partitions, --rounds
-times, in a get_spark session (so the worker pool is primed). At the
-start of each task the generator reads the worker's CPU time
-(resource.getrusage, user + system) and diffs it against the value the
-previous task in the same worker left at its end: the gap is what the
-worker spent between two UDF bodies (task set-up, import-cache
-invalidation, result flush). Prints the median gap per worker and over
-all tasks; a worker's first task has no gap.
+times, in a get_spark session. The probe first imports mpds_spark, as
+every engine UDF does, so it runs with the fix-ups the package installs
+in a worker (mpds_spark/pyworker.py). At the start of each task it reads
+the worker's CPU time (resource.getrusage, user + system) and diffs it
+against the value the previous task in the same worker left at its end:
+the gap is what the worker spent between two UDF bodies (task set-up,
+import-cache invalidation, result flush). Prints the median gap per
+worker and over all tasks; a worker's first task has no gap.
 Usage: python tools/worker_overhead.py [--cores 4] [--tasks 32] [--rounds 3]
 """
 
@@ -22,6 +23,8 @@ from mpds_spark.session import get_spark  # noqa: E402
 
 def probe(batches):
     import resource
+
+    import mpds_spark  # noqa: F401  installs the worker fix-ups
     import pyarrow as pa
 
     def cpu():  # this worker's user + system CPU seconds
