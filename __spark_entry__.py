@@ -72,52 +72,26 @@ def entry(spark: SparkSession) -> DataFrame:
 _PRIORITY = [
     # new in round 5 (eightieth batch — continuation session)
     "rare_word_profile",
-    # new in round 5 (seventy-ninth batch — continuation session)
-    "allan_variance",
-    "recurrence_quantification",
     # new in round 5 (seventy-eighth batch — continuation session)
     "nelson_aalen",
-    "theta_forecast",
     # new in round 5 (seventy-seventh batch — continuation session)
     "g_test",
     "mood_median_test",
-    # new in round 5 (seventy-sixth batch — continuation session)
-    "croston_forecast",
-    "tracking_signal",
-    # new in round 5 (seventy-third batch — continuation session)
-    "lin_ccc",
-    "bland_altman",
     # new in round 5 (seventy-second batch — continuation session)
     "brier_decomposition",
     "youden_j",
     # new in round 5 (seventy-first batch — continuation session)
     "ndcg_eval",
     "mrr_eval",
-    # new in round 5 (sixty-ninth batch — continuation session)
-    "sample_entropy",
-    # new in round 5 (sixty-eighth batch — continuation session)
-    "grubbs_test",
-    "taylor_law",
     # new in round 5 (sixty-seventh batch — continuation session)
-    "pettitt_test",
     "cliffs_delta",
-    # new in round 5 (sixty-sixth batch — continuation session)
-    "breusch_pagan",
-    "cronbach_alpha",
     # new in round 5 (sixty-fifth batch — continuation session)
-    "durbin_watson",
     "bartlett_test",
-    # new in round 5 (sixty-fourth batch — continuation session)
-    "variance_ratio",
-    "granger_causality",
     # new in round 5 (sixty-third batch — continuation session)
-    "kpss_test",
     "mantel_haenszel",
     # new in round 5 (sixty-second batch — continuation session)
-    "capture_recapture",
     "odds_ratio_ci",
     # new in round 5 (sixty-first batch — continuation session)
-    "seasonal_strength",
     "cochran_q",
     # new in round 5 (sixtieth batch — continuation session)
     "jl_projection_audit",
@@ -128,18 +102,12 @@ _PRIORITY = [
     # new in round 5 (fifty-eighth batch — continuation session)
     "wilson_intervals",
     "mde_power",
-    # new in round 5 (fifty-seventh batch — continuation session)
-    "ols_influence",
     # new in round 5 (fifty-sixth batch — continuation session)
     "l_moments",
     # new in round 5 (fifty-fifth batch — continuation session)
     "ledoit_wolf_shrinkage",
-    "page_hinkley",
     # new in round 5 (fifty-fourth batch — continuation session)
     "best_split_stump",
-    "tukey_hsd",
-    # new in round 5 (fifty-third batch — continuation session)
-    "ses_alpha_grid",
     # new in round 5 (fifty-second batch — continuation session)
     "newman_modularity",
     "horvitz_thompson",
@@ -147,27 +115,16 @@ _PRIORITY = [
     "kmv_distinct",
     # new in round 5 (fiftieth batch — continuation session)
     "box_cox_lambda",
-    "dickey_fuller",
-    # new in round 5 (forty-ninth batch — continuation session)
-    "friedman_test",
-    "jarque_bera",
     # new in round 5 (forty-eighth batch — continuation session)
     "cox_ph",
     # new in round 5 (forty-seventh batch — continuation session)
     "kruskal_wallis",
     "mcnemar_test",
-    # new in round 5 (forty-sixth batch — continuation session)
-    "sprt_monitor",
-    # new in round 5 (forty-fifth batch — continuation session)
-    "ransac_trend",
-    "dft_periodogram",
     # new in round 5 (forty-fourth batch — continuation session)
     "bradley_terry",
     # new in round 5 (forty-third batch — continuation session)
-    "gumbel_maxima",
     "session_edit_distance",
     # new in round 5 (forty-second batch — continuation session)
-    "cochran_armitage",
     "isotonic_calibration",
     # new in round 5 (forty-first batch — continuation session)
     "levene_test",
@@ -177,9 +134,6 @@ _PRIORITY = [
     # new in round 5 (thirty-ninth batch — continuation session)
     "bpe_merge_step",
     "padding_waste_audit",
-    # new in round 5 (thirty-eighth batch — continuation session)
-    "mann_kendall",
-    "runs_test",
     # new in round 5 (thirty-seventh batch — continuation session)
     "logrank_test",
     "segmented_trend",
@@ -365,7 +319,6 @@ _PRIORITY = [
     "ngram_jaccard",
     "minhash_signature",
     "lsh_candidates",
-    "simhash",
     "doc_fingerprint",
     "lang_id",
     "ann_cosine_topk",

@@ -15,15 +15,11 @@ Parity:
   entity becomes defVal everywhere. Needs the *next* non-null value, so it
   is forward-looking: gated by leakage_ok (train-prep only, never features).
 
-Scale: locf is pure window expressions (one entity exchange, WindowExec,
-whole-stage codegen). interpolate is a grouped-map Arrow UDF with a fully
-vectorized pandas body (no per-row Python).
+Scale: locf and interpolate are pure window expressions (one entity
+exchange, WindowExec, whole-stage codegen; no Python).
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -89,16 +85,16 @@ def interpolate(
     default: float = 0.0,
     out_col: str | None = None,
     leakage_ok: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """Per-entity linear interpolation of nulls (reference semantics above).
 
     Forward-looking (uses the next non-null sample): requires leakage_ok.
 
-    strategy="window" (default): pure window expressions — JVM-only, one
-    entity exchange, no pandas group materialization (scale path).
-    strategy="pandas": grouped-map Arrow numpy kernel (the original
-    transcription; differential-tested equal to the window plan).
+    Pure window expressions (one entity exchange, WindowExec only):
+    1. pad: last row's null <- last non-null; first row's null <- default;
+       all-null entity <- default everywhere
+    2. interior nulls: (yn*(x-xp) + yp*(xn-x)) / (xn-xp) between the padded
+       previous/next non-null neighbors.
     """
     if not leakage_ok:
         raise LeakageError(
@@ -106,52 +102,9 @@ def interpolate(
             "leakage_ok=True — train-prep only, never feature columns."
         )
     oc = out_col or f"{value}_interp"
-    if strategy == "window":
-        return _interpolate_window(df, value, entity, ts, default, oc)
-    if strategy != "pandas":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    schema = df.withColumn(oc, F.col(value).cast("double")).schema
-    cols = [f.name for f in schema.fields]
-
-    # timestamps → float seconds for the kernel
-    work = df
-    if str(df.schema[ts].dataType).lower().startswith("timestamp"):
-        work = df.withColumn("__ts_d", epoch_seconds(df, ts))
-        ts_num = "__ts_d"
-    else:
-        ts_num = ts
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_num, kind="mergesort").reset_index(drop=True)
-        x = pdf[ts_num].to_numpy(dtype="float64")
-        y = pdf[value].to_numpy(dtype="float64", na_value=np.nan)
-        pdf[oc] = _interp_reference(x, y, default)
-        return pdf[cols]
-
-    from mpds_spark.operators.util import pin_group_parallelism
-
-    return (
-        pin_group_parallelism(work, entity)
-        .groupBy(entity)
-        .applyInPandas(fn, schema)
-    )
-
-
-def _interpolate_window(
-    df: DataFrame, value: str, entity: str, ts: str, default: float, oc: str
-) -> DataFrame:
-    """Reference interpolation as pure window expressions (same formula and
-    padding rules as _interp_reference; one exchange, WindowExec only):
-    1. pad: last row's null <- last non-null; first row's null <- default;
-       all-null entity <- default everywhere
-    2. interior nulls: (yn*(x-xp) + yp*(xn-x)) / (xn-xp) between the padded
-       previous/next non-null neighbors.
-    """
     t = epoch_seconds(df, ts)
     w = Window.partitionBy(entity).orderBy(t)
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
 
     v = F.col(value).cast("double")
     n_val = F.count(v).over(full)
@@ -185,34 +138,6 @@ def _interpolate_window(
         oc, F.when(F.col("__v2").isNotNull(), F.col("__v2")).otherwise(interp)
     )
     return out.drop("__v2", "__t")
-
-
-def _interp_reference(x: np.ndarray, y: np.ndarray, def_val: float) -> np.ndarray:
-    """Pure-numpy transcription of mimic.singlePatientLinearInterpolation
-    (mimicUsefulFunction.R:669-708) + mimic.aux.linear_approx (:631-667)."""
-    y = y.copy()
-    non_na = ~np.isnan(y)
-    if non_na.all():
-        return y
-    if not non_na.any():
-        return np.full_like(y, def_val, dtype="float64")
-    # pad last with last non-null, first with default (reference order)
-    if np.isnan(y[-1]):
-        y[-1] = y[non_na][-1]
-    if np.isnan(y[0]):
-        y[0] = def_val
-    # linear_approx: interpolate remaining interior nulls between neighbors
-    non_na = ~np.isnan(y)
-    xi = x[non_na]
-    yi = y[non_na]
-    nan_idx = np.where(~non_na)[0]
-    if len(nan_idx):
-        # position of each nan between its non-null neighbors
-        pos = np.searchsorted(xi, x[nan_idx], side="right")
-        xp, yp = xi[pos - 1], yi[pos - 1]
-        xn, yn = xi[pos], yi[pos]
-        y[nan_idx] = (yn * (x[nan_idx] - xp) + yp * (xn - x[nan_idx])) / (xn - xp)
-    return y
 
 
 def densify_daily(

@@ -351,35 +351,10 @@ def near_dup_pairs(
     return out.select("doc_a", "doc_b", "n_common", "jaccard")
 
 
-def simhash16(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
-    """16-bit SimHash per doc: bit b set iff the term-frequency-weighted
-    sign-sum of word-hash bit b is positive. Word hash = first 4 hex chars
-    of md5(word) (engine-portable)."""
-    w = df.select(
-        F.col(key).alias("k"), F.explode(words_col(text)).alias("word")
-    )
-    h = F.conv(F.substring(F.md5("word"), 1, 4), 16, 10).cast("long")
-    w = w.withColumn("h", h)
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(16)
-    ]
-    sums = w.groupBy("k").agg(*aggs)
-    sim = None
-    for b in range(16):
-        bit = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = bit if sim is None else sim + bit
-    return sums.select(F.col("k").alias(key), sim.cast("long").alias("simhash"))
-
-
 def simhash64(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
     """64-bit SimHash per doc, as two 32-bit halves (sim_hi = bits 63..32,
     sim_lo = bits 31..0, both non-negative BIGINTs).
 
-    16-bit simhash16 is kept for back-compat, but 2^16 codes collide
-    massively at production corpus sizes; 64-bit is the standard width.
     Two 32-bit halves (md5 hex chars 1-8 / 9-16) keep every value
     < 2^32, so the arithmetic stays inside signed BIGINT in any engine
     (a single 64-bit unsigned hash would overflow a signed long).

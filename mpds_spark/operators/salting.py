@@ -10,9 +10,7 @@ Two mechanisms, matching how each operator class scales:
    salted variant; windows.derived_features and
    windows.trailing_window_features are the only implementations.
 
-2. Grouped-map Arrow ops (interpolate strategy='pandas') materialize one
-   pandas group per entity — a 10^8-row entity breaks that (the DEFAULT
-   interpolate strategy is window-based and skew-safe without salting).
+2. Where one sort partition per entity is itself too large,
    salted_asof_join bounds the as-of scan's sort partition: it
    splits each entity's LEFT rows into time-range chunks of bounded size
    and replays the single latest RIGHT row before each chunk boundary into

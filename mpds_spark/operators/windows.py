@@ -1312,11 +1312,13 @@ def sax_symbols(
     on the top symbol in both engines (documented, not reachable on
     real cent streams).
 
-    Shape at scale: one entity window (rn/n) + one (entity, segment)
-    agg carrying (count, sum, sum-of-squares), entity moments re-derived
-    from the TINY segment frame (never a second corpus scan), broadcast
-    joined back, one final entity agg for the word. Per-entity history
-    bounds the window partition — the salting contract applies beyond.
+    Shape at scale: one scan and one entity exchange. A single window
+    pass computes rn plus the entity moments (count, sum, sum of
+    squares); the (entity, segment) agg carries the moments along with
+    each segment's (count, sum), and one final entity agg builds the
+    word. Both aggs reuse the window's entity partitioning. Per-entity
+    history bounds the window partition — the salting contract applies
+    beyond.
 
     Returns (by, n_obs, sax)."""
     scale = int(10**decimals)
@@ -1327,10 +1329,13 @@ def sax_symbols(
     ).cast("long")
     w = Window.partitionBy(by).orderBy(F.col(ts))
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    c = F.col("__c").cast("decimal(38,0)")
     d = df.select(F.col(by), F.col(ts), cents.alias("__c")).withColumns(
         {
             "__rn": F.row_number().over(w),
             "__n": F.count(F.lit(1)).over(full),
+            "__sx": F.sum(c).over(full),
+            "__sxx": F.sum(c * c).over(full),
         }
     )
     seg = d.groupBy(
@@ -1339,19 +1344,13 @@ def sax_symbols(
     ).agg(
         F.count(F.lit(1)).cast("long").alias("__k"),
         F.sum("__c").cast("long").alias("__sc"),
-        F.sum(F.col("__c").cast("decimal(38,0)")
-              * F.col("__c").cast("decimal(38,0)")).alias("__ssq"),
+        # constant per entity: carried, not re-aggregated
+        *(F.max(m).alias(m) for m in ("__n", "__sx", "__sxx")),
     )
-    mo = seg.groupBy(by).agg(
-        F.sum("__k").cast("long").alias("__nn"),
-        F.sum("__sc").cast("decimal(38,0)").alias("__sx"),
-        F.sum("__ssq").alias("__sxx"),
-    )
-    j = seg.join(F.broadcast(mo), by)
-    nd = F.col("__nn").cast("double")
+    nd = F.col("__n").cast("double")
     mu = F.col("__sx").cast("double") / nd
     var = (
-        F.col("__nn").cast("decimal(38,0)") * F.col("__sxx")
+        F.col("__n").cast("decimal(38,0)") * F.col("__sxx")
         - F.col("__sx") * F.col("__sx")
     ).cast("double") / (nd * nd)
     z = (
@@ -1363,9 +1362,11 @@ def sax_symbols(
         .when(z < F.lit(0.6745), F.lit("c"))
         .otherwise(F.lit("d"))
     )
-    per_seg = j.select(F.col(by), F.col("__seg"), sym.alias("__sym"))
-    out = per_seg.groupBy(by).agg(
-        F.count(F.lit(1)).cast("long").alias("__w"),
+    per_seg = seg.select(
+        F.col(by), F.col("__seg"), F.col("__n"), sym.alias("__sym")
+    )
+    return per_seg.groupBy(by).agg(
+        F.max("__n").alias("n_obs"),
         F.array_join(
             F.expr(
                 "transform(array_sort(collect_list("
@@ -1373,10 +1374,6 @@ def sax_symbols(
             ),
             "",
         ).alias("sax"),
-    )
-    n_obs = mo.select(F.col(by), F.col("__nn").alias("n_obs"))
-    return out.join(F.broadcast(n_obs), by).select(
-        F.col(by), "n_obs", "sax"
     )
 
 

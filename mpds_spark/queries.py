@@ -744,7 +744,6 @@ from mpds_spark.operators.dedup import (  # noqa: E402
     lsh_candidate_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
-    simhash16,
 )
 from mpds_spark.operators.pairs import ordering_pairs  # noqa: E402
 from mpds_spark.operators.similarity import cosine_topk, lsh_cosine_topk  # noqa: E402
@@ -820,33 +819,6 @@ b AS (
 SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
 FROM b a JOIN b c USING (band, bh) WHERE a.doc_id < c.doc_id
 """
-
-
-def q_simhash(spark, sf_dir):
-    return simhash16(load(spark, sf_dir, "documents"))
-
-
-_SIMHASH_SUMS = ",\n    ".join(
-    f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-    for b in range(16)
-)
-_SIMHASH_BITS = " + ".join(
-    f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(16)
-)
-SQL_SIMHASH = f"""
-WITH w AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
-  FROM documents
-), h AS (
-  SELECT doc_id, ('0x' || substring(md5(word), 1, 4))::UBIGINT AS h FROM w
-), s AS (
-  SELECT doc_id,
-    {_SIMHASH_SUMS}
-  FROM h GROUP BY doc_id
-)
-SELECT doc_id, CAST({_SIMHASH_BITS} AS BIGINT) AS simhash FROM s
-"""
-
 
 def q_doc_fingerprint(spark, sf_dir):
     return doc_fingerprint(load(spark, sf_dir, "documents"), n=5)
@@ -1040,7 +1012,6 @@ QUERIES.update(
         "ngram_jaccard": q_ngram_jaccard,
         "minhash_signature": q_minhash_signature,
         "lsh_candidates": q_lsh_candidates,
-        "simhash": q_simhash,
         "doc_fingerprint": q_doc_fingerprint,
         "lang_id": q_lang_id,
         "ann_cosine_topk": q_ann_cosine_topk,
@@ -1054,7 +1025,6 @@ _RAW_ORACLES.update(
         "ngram_jaccard": SQL_NGRAM_JACCARD,
         "minhash_signature": SQL_MINHASH,
         "lsh_candidates": SQL_LSH_CANDIDATES,
-        "simhash": SQL_SIMHASH,
         "doc_fingerprint": SQL_FINGERPRINT,
         "lang_id": SQL_LANG_ID,
         "ann_cosine_topk": SQL_ANN_COSINE,
@@ -12995,270 +12965,6 @@ FROM f ORDER BY sse, b LIMIT 1
 QUERIES["segmented_trend"] = q_segmented_trend
 _RAW_ORACLES["segmented_trend"] = SQL_SEGMENTED_TREND
 
-
-def q_mann_kendall(spark, sf_dir):
-    """Mann-Kendall nonparametric trend test on daily event volume
-    (Mann 1945, Kendall 1975; Hirsch et al. 1982 made it the standard
-    monitoring-series audit): S = sum over day pairs i<j of
-    sign(y_j - y_i), tie-corrected variance
-    var = (n(n-1)(2n+5) - sum_t t(t-1)(2t+5)) / 18, and the
-    continuity-corrected z. The significance companion to
-    theil_sen_slope (magnitude) and segmented_trend (shape): it asks
-    "is there a monotone trend at all" with no distributional
-    assumption, which is the right first question for a pipeline
-    volume monitor. The corpus is touched ONCE by the day aggregate;
-    S comes from a registered-by-design BNLJ self-join of the
-    persisted <=31-row day frame (a bounded 31x31 pair sweep, never a
-    corpus join); the tie term regroups the same frame. S, n and the
-    tie term are exact longs; var is ONE division of exact integers;
-    z is a fixed expression tree (IEEE sqrt is correctly rounded, so
-    cross-engine exact). At 10^12 rows the pair sweep is still 465
-    comparisons."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = scratch_persist(
-        ev.groupBy("__x").agg(
-            F.count(F.lit(1)).cast("long").alias("__y")
-        )
-    )
-    d1 = day.select(F.col("__x").alias("x1"), F.col("__y").alias("y1"))
-    d2 = day.select(F.col("__x").alias("x2"), F.col("__y").alias("y2"))
-    sfrm = (
-        d1.join(d2, F.col("x1") < F.col("x2"))
-        .agg(
-            F.sum(
-                F.when(F.col("y2") > F.col("y1"), 1)
-                .when(F.col("y2") < F.col("y1"), -1)
-                .otherwise(0)
-            ).cast("long").alias("s_stat")
-        )
-    )
-    tiefrm = (
-        day.groupBy("__y")
-        .agg(F.count(F.lit(1)).cast("long").alias("__t"))
-        .agg(
-            F.sum("__t").cast("long").alias("n_days"),
-            F.sum(
-                F.col("__t") * (F.col("__t") - 1)
-                * (2 * F.col("__t") + 5)
-            ).cast("long").alias("tie_term"),
-        )
-    )
-    f = sfrm.crossJoin(tiefrm)
-    n = F.col("n_days")
-    var_s = (
-        (n * (n - 1) * (2 * n + 5) - F.col("tie_term")).cast("double")
-        / F.lit(18.0)
-    )
-    s = F.col("s_stat")
-    z = (
-        F.when(s > 0, (s - 1).cast("double") / F.sqrt(var_s))
-        .when(s < 0, (s + 1).cast("double") / F.sqrt(var_s))
-        .otherwise(F.lit(0.0))
-    )
-    return f.select(
-        "n_days",
-        "s_stat",
-        "tie_term",
-        _r6(var_s).alias("var_s"),
-        _r6(z).alias("z_score"),
-        F.when(s > 0, F.lit("increasing"))
-        .when(s < 0, F.lit("decreasing"))
-        .otherwise(F.lit("no_trend")).alias("trend"),
-    )
-
-
-SQL_MANN_KENDALL = """
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), s AS (
-  SELECT CAST(sum(CASE WHEN b.y > a.y THEN 1
-                       WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT)
-         AS s_stat
-  FROM day a JOIN day b ON a.x < b.x
-), t AS (
-  SELECT CAST(sum(tt) AS BIGINT) AS n_days,
-         CAST(sum(tt*(tt-1)*(2*tt+5)) AS BIGINT) AS tie_term
-  FROM (SELECT CAST(count(*) AS BIGINT) AS tt FROM day GROUP BY y)
-), f AS (
-  SELECT n_days, s_stat, tie_term,
-    CAST(n_days*(n_days-1)*(2*n_days+5) - tie_term AS DOUBLE) / 18.0
-      AS var_s
-  FROM s, t
-)
-SELECT n_days, s_stat, tie_term,
-  round(var_s, 6) AS var_s,
-  round(CASE WHEN s_stat > 0
-             THEN CAST(s_stat - 1 AS DOUBLE) / sqrt(var_s)
-             WHEN s_stat < 0
-             THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(var_s)
-             ELSE 0.0 END, 6) AS z_score,
-  CASE WHEN s_stat > 0 THEN 'increasing'
-       WHEN s_stat < 0 THEN 'decreasing'
-       ELSE 'no_trend' END AS trend
-FROM f
-"""
-
-QUERIES["mann_kendall"] = q_mann_kendall
-_RAW_ORACLES["mann_kendall"] = SQL_MANN_KENDALL
-
-
-def q_runs_test(spark, sf_dir):
-    """Wald-Wolfowitz runs test of the daily event-volume sequence
-    around its median (Wald & Wolfowitz 1940; the classic randomness
-    audit — too FEW runs means the series is sticky/trending, too MANY
-    means oscillation, either way iid-based monitors are miscalibrated
-    and block-wise resampling is required). Days equal to the median
-    are dropped (the standard treatment); R = 1 + #sign changes,
-    E[R] = 1 + 2*n1*n2/n, Var[R] = 2*n1*n2*(2*n1*n2 - n)/(n^2*(n-1)).
-    The corpus is touched ONCE by the day aggregate; everything after
-    runs on the persisted <=31-row day frame: the median is kept as
-    the INTEGER doubled statistic med2 = y_lo + y_hi (so the
-    above/below classification never touches a float), the sign
-    changes come from one lag over the tiny frame, and E/Var/z are
-    fixed expression trees over exact longs. The single-partition
-    windows scan 31 rows by construction at any corpus scale."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = scratch_persist(
-        ev.groupBy("__x").agg(
-            F.count(F.lit(1)).cast("long").alias("__y")
-        )
-    )
-    wr = Window.orderBy("__y", "__x")
-    ranked = day.select(
-        "__x", "__y",
-        F.row_number().over(wr).alias("__rn"),
-        F.count(F.lit(1)).over(
-            Window.orderBy("__y", "__x").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).cast("long").alias("__n"),
-    )
-    med = ranked.agg(
-        (
-            F.sum(
-                F.when(
-                    F.col("__rn") == F.floor((F.col("__n") + 1) / 2),
-                    F.col("__y"),
-                ).otherwise(0)
-            )
-            + F.sum(
-                F.when(
-                    F.col("__rn") == F.floor(F.col("__n") / 2) + 1,
-                    F.col("__y"),
-                ).otherwise(0)
-            )
-        ).cast("long").alias("med2")
-    )
-    signs = (
-        day.crossJoin(med)
-        .filter(2 * F.col("__y") != F.col("med2"))
-        .select(
-            "__x",
-            F.when(2 * F.col("__y") > F.col("med2"), 1)
-            .otherwise(0).alias("__s"),
-        )
-    )
-    lagged = signs.select(
-        "__s", F.lag("__s").over(Window.orderBy("__x")).alias("__p")
-    )
-    agg = lagged.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.sum("__s").cast("long").alias("n_above"),
-        (
-            1
-            + F.sum(
-                F.when(
-                    F.col("__p").isNotNull()
-                    & (F.col("__p") != F.col("__s")),
-                    1,
-                ).otherwise(0)
-            )
-        ).cast("long").alias("runs"),
-    )
-    n1 = F.col("n_above")
-    nk = F.col("n_kept")
-    n2 = nk - n1
-    two = (2 * n1 * n2).cast("double")
-    e_runs = F.lit(1.0) + two / nk.cast("double")
-    var_runs = (
-        two * (two - nk.cast("double"))
-        / (nk.cast("double") * nk.cast("double")
-           * (nk - 1).cast("double"))
-    )
-    z = F.when(
-        var_runs > 0,
-        (F.col("runs").cast("double") - e_runs) / F.sqrt(var_runs),
-    ).otherwise(F.lit(0.0))
-    return agg.select(
-        "n_kept",
-        "n_above",
-        n2.alias("n_below"),
-        "runs",
-        _r6(e_runs).alias("expected_runs"),
-        _r6(var_runs).alias("var_runs"),
-        _r6(z).alias("z_score"),
-    )
-
-
-SQL_RUNS_TEST = """
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), ranked AS (
-  SELECT x, y, row_number() OVER (ORDER BY y, x) AS rn,
-         CAST(count(*) OVER () AS BIGINT) AS n
-  FROM day
-), med AS (
-  SELECT CAST(sum(CASE WHEN rn = (n + 1) // 2 THEN y ELSE 0 END)
-            + sum(CASE WHEN rn = n // 2 + 1 THEN y ELSE 0 END)
-         AS BIGINT) AS med2
-  FROM ranked
-), s AS (
-  SELECT x, CASE WHEN 2*y > med2 THEN 1 ELSE 0 END AS sgn
-  FROM day, med WHERE 2*y <> med2
-), lagged AS (
-  SELECT sgn, lag(sgn) OVER (ORDER BY x) AS prev FROM s
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_kept,
-         CAST(sum(sgn) AS BIGINT) AS n_above,
-         CAST(1 + sum(CASE WHEN prev IS NOT NULL AND prev <> sgn
-                           THEN 1 ELSE 0 END) AS BIGINT) AS runs
-  FROM lagged
-), f AS (
-  SELECT n_kept, n_above, n_kept - n_above AS n_below, runs,
-    1.0 + CAST(2*n_above*(n_kept-n_above) AS DOUBLE)
-        / CAST(n_kept AS DOUBLE) AS e_runs,
-    CAST(2*n_above*(n_kept-n_above) AS DOUBLE)
-      * (CAST(2*n_above*(n_kept-n_above) AS DOUBLE)
-         - CAST(n_kept AS DOUBLE))
-      / (CAST(n_kept AS DOUBLE) * CAST(n_kept AS DOUBLE)
-         * CAST(n_kept - 1 AS DOUBLE)) AS var_runs
-  FROM agg
-)
-SELECT n_kept, n_above, n_below, runs,
-  round(e_runs, 6) AS expected_runs,
-  round(var_runs, 6) AS var_runs,
-  round(CASE WHEN var_runs > 0
-             THEN (CAST(runs AS DOUBLE) - e_runs) / sqrt(var_runs)
-             ELSE 0.0 END, 6) AS z_score
-FROM f
-"""
-
-QUERIES["runs_test"] = q_runs_test
-_RAW_ORACLES["runs_test"] = SQL_RUNS_TEST
-
-
 def q_bpe_merge_step(spark, sf_dir):
     """One byte-pair-encoding merge iteration over the corpus word
     streams (Gage 1994; Sennrich, Haddow & Birch 2016 made it THE
@@ -13920,97 +13626,6 @@ FROM f
 QUERIES["levene_test"] = q_levene_test
 _RAW_ORACLES["levene_test"] = SQL_LEVENE_TEST
 
-
-def q_cochran_armitage(spark, sf_dir):
-    """Cochran-Armitage trend-in-proportions test of the purchase
-    SHARE across the ordered days of the month (Cochran 1954, Armitage
-    1955 — the dose-response test, with the day index as the dose: a
-    1-dof monotone-drift audit of the event mix that a plain
-    chi-square on the same cells cannot see because it ignores the
-    level ORDERING; the mix-drift companion to segmented_trend's
-    volume drift). T = sum_i s_i (x_i - n_i X/N) has the exact integer
-    numerator N*sum(s x) - X*sum(s n); z^2 = N*T_num^2 /
-    (X (N-X) (N*sum(s^2 n) - sum(s n)^2)) is a fixed expression tree
-    whose every operand is an exact long < 2^53, so each double
-    conversion is correctly rounded and the gate is exact with zero
-    rounding. ONE corpus aggregate to the <=31-day frame; the user
-    frame is never touched."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__s"),
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0).alias("__pur"),
-    )
-    lev = ev.groupBy("__s").agg(
-        F.count(F.lit(1)).cast("long").alias("__ni"),
-        F.sum("__pur").cast("long").alias("__xi"),
-    )
-    one = lev.agg(
-        F.count(F.lit(1)).cast("long").alias("n_levels"),
-        F.sum("__ni").cast("long").alias("n_events"),
-        F.sum("__xi").cast("long").alias("n_pos"),
-        F.sum(F.col("__s") * F.col("__ni")).cast("long").alias("ssn"),
-        F.sum(F.col("__s") * F.col("__xi")).cast("long").alias("ssx"),
-        F.sum(F.col("__s") * F.col("__s") * F.col("__ni"))
-        .cast("long").alias("ss2n"),
-    )
-    N = F.col("n_events")
-    X = F.col("n_pos")
-    tnum = N * F.col("ssx") - X * F.col("ssn")
-    Nd = N.cast("double")
-    Xd = X.cast("double")
-    Td = tnum.cast("double")
-    z2 = (Nd * Td * Td) / (
-        Xd * (Nd - Xd)
-        * (Nd * F.col("ss2n").cast("double")
-           - F.col("ssn").cast("double") * F.col("ssn").cast("double"))
-    )
-    return one.select(
-        "n_levels", "n_events", "n_pos",
-        tnum.alias("t_num"),
-        _r6(z2).alias("z2"),
-        F.when(tnum > 0, F.lit("increasing"))
-        .when(tnum < 0, F.lit("decreasing"))
-        .otherwise(F.lit("no_trend")).alias("trend"),
-    )
-
-
-SQL_COCHRAN_ARMITAGE = """
-WITH lev AS (
-  SELECT CAST(day(ts) AS BIGINT) AS s,
-    CAST(count(*) AS BIGINT) AS ni,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS xi
-  FROM events GROUP BY 1
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_levels,
-    CAST(sum(ni) AS BIGINT) AS n_events,
-    CAST(sum(xi) AS BIGINT) AS n_pos,
-    CAST(sum(s * ni) AS BIGINT) AS ssn,
-    CAST(sum(s * xi) AS BIGINT) AS ssx,
-    CAST(sum(s * s * ni) AS BIGINT) AS ss2n
-  FROM lev
-)
-SELECT n_levels, n_events, n_pos,
-  n_events * ssx - n_pos * ssn AS t_num,
-  round((CAST(n_events AS DOUBLE)
-         * CAST(n_events * ssx - n_pos * ssn AS DOUBLE)
-         * CAST(n_events * ssx - n_pos * ssn AS DOUBLE))
-        / (CAST(n_pos AS DOUBLE)
-           * (CAST(n_events AS DOUBLE) - CAST(n_pos AS DOUBLE))
-           * (CAST(n_events AS DOUBLE) * CAST(ss2n AS DOUBLE)
-              - CAST(ssn AS DOUBLE) * CAST(ssn AS DOUBLE))), 6)
-    AS z2,
-  CASE WHEN n_events * ssx - n_pos * ssn > 0 THEN 'increasing'
-       WHEN n_events * ssx - n_pos * ssn < 0 THEN 'decreasing'
-       ELSE 'no_trend' END AS trend
-FROM one
-"""
-
-QUERIES["cochran_armitage"] = q_cochran_armitage
-_RAW_ORACLES["cochran_armitage"] = SQL_COCHRAN_ARMITAGE
-
-
 def q_isotonic_calibration(spark, sf_dir):
     """Isotonic regression of the calibration_bins reliability curve
     (PAVA solution via the Barlow et al. 1972 minimax identity
@@ -14136,107 +13751,6 @@ FROM ex
 
 QUERIES["isotonic_calibration"] = q_isotonic_calibration
 _RAW_ORACLES["isotonic_calibration"] = SQL_ISOTONIC_CALIBRATION
-
-
-def q_gumbel_maxima(spark, sf_dir):
-    """Gumbel extreme-value fit of DAILY MAXIMUM purchase value by
-    block maxima + method of moments (Gumbel 1958; the Fisher-Tippett
-    1928 type-I domain — the capacity-planning question 'how big a
-    spike should we provision for' answered from tail theory instead
-    of eyeballing the max): scale beta = std * sqrt(6)/pi, location
-    mu = mean - gamma * beta (Euler-Mascheroni gamma pinned as the
-    identical literal on both engines), and the T-block return levels
-    x_T = mu - beta * ln(-ln(1 - 1/T)) for T = 7 and 30 days. Daily
-    maxima are exact integer cents from ONE corpus aggregate; n, sum,
-    sum-of-squares over the <=31-day frame are exact longs, so
-    mean/std/mu/beta/rl are fixed expression trees (IEEE sqrt exact;
-    the lns follow the catalog's established cross-engine ln
-    precedent). At 10^12 rows the block-maxima frame is still 31
-    rows."""
-    ev = _events(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__d"),
-        (F.signum("value")
-         * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5)))
-        .cast("long").alias("__c"),
-    )
-    day = ev.groupBy("__d").agg(F.max("__c").alias("__m"))
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__m").cast("long").alias("__s"),
-        F.sum(F.col("__m") * F.col("__m")).cast("long").alias("__q"),
-    )
-    nd = F.col("n_days").cast("double")
-    sd = F.col("__s").cast("double")
-    qd = F.col("__q").cast("double")
-    mean = sd / nd / F.lit(100.0)
-    std = F.sqrt(
-        (qd - sd * sd / nd) / (F.col("n_days") - 1).cast("double")
-    ) / F.lit(100.0)
-    euler = F.lit(0.5772156649015329)
-    beta = std * F.sqrt(F.lit(6.0)) / F.lit(3.141592653589793)
-    mu = mean - euler * beta
-
-    def rl(T):
-        return mu - beta * F.log(
-            -F.log(F.lit(1.0) - F.lit(1.0) / F.lit(float(T)))
-        )
-
-    return one.select(
-        "n_days",
-        _r6(mean).alias("mean_daily_max"),
-        _r6(std).alias("std_daily_max"),
-        _r6(mu).alias("gumbel_mu"),
-        _r6(beta).alias("gumbel_beta"),
-        _r6(rl(7)).alias("return_level_7d"),
-        _r6(rl(30)).alias("return_level_30d"),
-    )
-
-
-SQL_GUMBEL_MAXIMA = """
-WITH e AS (
-  SELECT CAST(day(ts) AS BIGINT) AS d,
-    CAST(floor(abs(value)*100 + 0.5) * sign(value) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase'
-), day AS (
-  SELECT d, CAST(max(c) AS BIGINT) AS m FROM e GROUP BY d
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_days,
-    CAST(sum(m) AS BIGINT) AS s,
-    CAST(sum(m * m) AS BIGINT) AS q
-  FROM day
-), f AS (
-  SELECT n_days,
-    CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE) / 100.0 AS mean,
-    sqrt((CAST(q AS DOUBLE)
-          - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-            / CAST(n_days AS DOUBLE))
-         / CAST(n_days - 1 AS DOUBLE)) / 100.0 AS std
-  FROM one
-), g AS (
-  SELECT n_days, mean, std,
-    std * sqrt(6.0) / 3.141592653589793 AS beta
-  FROM f
-), h AS (
-  SELECT n_days, mean, std, beta,
-    mean - 0.5772156649015329 * beta AS mu
-  FROM g
-)
-SELECT n_days,
-  round(mean, 6) AS mean_daily_max,
-  round(std, 6) AS std_daily_max,
-  round(mu, 6) AS gumbel_mu,
-  round(beta, 6) AS gumbel_beta,
-  round(mu - beta * ln(-ln(1.0 - 1.0 / 7.0)), 6) AS return_level_7d,
-  round(mu - beta * ln(-ln(1.0 - 1.0 / 30.0)), 6) AS return_level_30d
-FROM h
-"""
-
-QUERIES["gumbel_maxima"] = q_gumbel_maxima
-_RAW_ORACLES["gumbel_maxima"] = SQL_GUMBEL_MAXIMA
-
 
 def q_session_edit_distance(spark, sf_dir):
     """Histogram of Levenshtein edit distances between each user's
@@ -14490,378 +14004,6 @@ def _quant_scatter_gen(D):
             )
 
     return gen
-
-
-def q_ransac_trend(spark, sf_dir):
-    """RANSAC line fit of daily event volume, made fully deterministic
-    by sweeping EVERY two-day candidate line instead of random
-    sampling (Fischler & Bolles 1981; with <=31 days the
-    465-candidate exhaustive sweep IS the algorithm, no RNG needed —
-    the robust alternative to OLS when a release-day spike or outage
-    day would drag the least-squares trend): for each day pair the
-    line through the two points counts its inliers (residual within
-    10% of the mean daily count), the candidate with the most inliers
-    wins (smallest-pair tie-break), and the final slope/intercept are
-    RE-FIT by OLS on the winning inlier set from exact integer
-    moments. The corpus is touched ONCE by the day aggregate; the
-    candidate x day sweep is a bounded 465x31 join over the persisted
-    tiny frame (registered BNLJ-by-design), never a corpus join."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = scratch_persist(
-        ev.groupBy("__x").agg(
-            F.count(F.lit(1)).cast("long").alias("__y")
-        )
-    )
-    tol = day.agg(
-        (F.lit(0.1) * (
-            F.sum("__y").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        )).alias("__tol")
-    )
-    a = day.select(F.col("__x").alias("x1"), F.col("__y").alias("y1"))
-    b = day.select(F.col("__x").alias("x2"), F.col("__y").alias("y2"))
-    # try_divide: Catalyst's join reorder may evaluate the slope on
-    # pairs that fail x1 < x2 before that predicate applies (ANSI mode
-    # throws on double/0 in Spark 4); surviving rows always have
-    # x2 > x1, so try_divide equals plain division on them
-    cand = a.join(b, F.col("x1") < F.col("x2")).select(
-        "x1", "y1", "x2",
-        F.try_divide(
-            (F.col("y2") - F.col("y1")).cast("double"),
-            (F.col("x2") - F.col("x1")).cast("double"),
-        ).alias("__sl"),
-    )
-    sweep = cand.crossJoin(tol).join(
-        day.select(F.col("__x").alias("xx"), F.col("__y").alias("yy")),
-        F.abs(
-            F.col("yy").cast("double")
-            - (F.col("y1").cast("double")
-               + F.col("__sl")
-               * (F.col("xx") - F.col("x1")).cast("double"))
-        ) <= F.col("__tol"),
-    )
-    scored = sweep.groupBy("x1", "x2", "y1", "__sl").agg(
-        F.count(F.lit(1)).cast("long").alias("__inl")
-    )
-    win = scored.agg(
-        F.min(
-            F.struct(
-                (-F.col("__inl")).alias("ninl"),
-                F.col("x1"), F.col("x2"), F.col("y1"), F.col("__sl"),
-            )
-        ).alias("w")
-    ).select(
-        F.col("w.x1").alias("x1"), F.col("w.x2").alias("x2"),
-        F.col("w.y1").alias("wy1"), F.col("w.__sl").alias("wsl"),
-        (-F.col("w.ninl")).cast("long").alias("n_inliers"),
-    )
-    refit = win.crossJoin(tol).join(
-        day,
-        F.abs(
-            F.col("__y").cast("double")
-            - (F.col("wy1").cast("double")
-               + F.col("wsl")
-               * (F.col("__x") - F.col("x1")).cast("double"))
-        ) <= F.col("__tol"),
-    ).groupBy("x1", "x2", "n_inliers").agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.sum("__x").cast("long").alias("__sx"),
-        F.sum("__y").cast("long").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__y")).cast("long").alias("__sxy"),
-        F.sum(F.col("__x") * F.col("__x")).cast("long").alias("__sxx"),
-    )
-    nd = F.col("__n").cast("double")
-    sxd = F.col("__sx").cast("double")
-    syd = F.col("__sy").cast("double")
-    slope = (
-        F.col("__sxy").cast("double") - sxd * syd / nd
-    ) / (F.col("__sxx").cast("double") - sxd * sxd / nd)
-    return refit.select(
-        F.col("x1").alias("anchor_day1"),
-        F.col("x2").alias("anchor_day2"),
-        "n_inliers",
-        _r6(slope).alias("slope_refit"),
-        _r6(syd / nd - slope * (sxd / nd)).alias("intercept_refit"),
-    )
-
-
-SQL_RANSAC_TREND = """
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), tol AS (
-  SELECT 0.1 * (CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE))
-    AS tol
-  FROM day
-), cand AS (
-  SELECT a.x AS x1, a.y AS y1, b.x AS x2,
-    CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS sl
-  FROM day a JOIN day b ON a.x < b.x
-), scored AS (
-  SELECT c.x1, c.x2, c.y1, c.sl, CAST(count(*) AS BIGINT) AS inl
-  FROM cand c, tol, day d
-  WHERE abs(CAST(d.y AS DOUBLE)
-            - (CAST(c.y1 AS DOUBLE)
-               + c.sl * CAST(d.x - c.x1 AS DOUBLE))) <= tol
-  GROUP BY c.x1, c.x2, c.y1, c.sl
-), win AS (
-  SELECT x1, x2, y1 AS wy1, sl AS wsl, inl AS n_inliers
-  FROM scored ORDER BY inl DESC, x1, x2 LIMIT 1
-), refit AS (
-  SELECT w.x1, w.x2, w.n_inliers,
-    CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(d.x) AS BIGINT) AS sx,
-    CAST(sum(d.y) AS BIGINT) AS sy,
-    CAST(sum(d.x * d.y) AS BIGINT) AS sxy,
-    CAST(sum(d.x * d.x) AS BIGINT) AS sxx
-  FROM win w, tol, day d
-  WHERE abs(CAST(d.y AS DOUBLE)
-            - (CAST(w.wy1 AS DOUBLE)
-               + w.wsl * CAST(d.x - w.x1 AS DOUBLE))) <= tol
-  GROUP BY w.x1, w.x2, w.n_inliers
-)
-SELECT x1 AS anchor_day1, x2 AS anchor_day2, n_inliers,
-  round((CAST(sxy AS DOUBLE)
-         - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-        / (CAST(sxx AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-             / CAST(n AS DOUBLE)), 6) AS slope_refit,
-  round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
-        - ((CAST(sxy AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)
-              / CAST(n AS DOUBLE))
-           / (CAST(sxx AS DOUBLE)
-              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                / CAST(n AS DOUBLE)))
-          * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-    AS intercept_refit
-FROM refit
-"""
-
-QUERIES["ransac_trend"] = q_ransac_trend
-_RAW_ORACLES["ransac_trend"] = SQL_RANSAC_TREND
-
-
-def q_dft_periodogram(spark, sf_dir):
-    """Discrete-Fourier periodogram of the daily event-volume series
-    at cycle counts k = 1..8 over the month (Schuster 1898 — THE
-    seasonality detector; the weekly cycle shows up as power
-    concentrated at k ~ n/7): P_k = C_k^2 + S_k^2 with C_k =
-    sum_t y_t cos(2 pi k t/n) and S_k the sine sum, t the dense day
-    rank. The corpus is touched ONCE by the day aggregate; the trig
-    sums fold DAY-ASCENDING over the collected <=31-point arrays so
-    both engines execute the identical float sequence (cos/sin follow
-    the catalog's cross-engine libm precedent, verified at all three
-    SFs), and the mean is removed exactly via the integer identity
-    n*y_t - S inside the fold (scaled by n, so P_k carries n^2 — the
-    power SHARE divides it out). Output: per-k power share of the
-    detrended total."""
-    from mpds_spark.operators.util import scratch_persist
-
-    K = 8
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__x", "__y"))
-        ).alias("__a"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("__y").cast("long").alias("s"),
-    ).select(
-        F.transform(F.col("__a"), lambda e: e["__y"]).alias("ys"),
-        "n", "s",
-    )
-    twopi = F.lit(6.283185307179586)
-    nd = F.col("n").cast("double")
-
-    def trig(k, fn):
-        # sum over t of (n*y_t - S) * fn(2 pi k t / n), t ascending
-        return F.aggregate(
-            F.sequence(F.lit(1), F.col("n").cast("int")),
-            F.lit(0.0),
-            lambda acc, t: acc
-            + (F.col("n") * F.element_at("ys", t) - F.col("s"))
-            .cast("double")
-            * fn(twopi * F.lit(float(k)) * t.cast("double") / nd),
-        )
-
-    powers = one.select(
-        "n",
-        *[
-            (trig(k, F.cos) * trig(k, F.cos)
-             + trig(k, F.sin) * trig(k, F.sin)).alias(f"p{k}")
-            for k in range(1, K + 1)
-        ],
-    )
-    powers = scratch_persist(powers)
-    tot = " + ".join(f"p{k}" for k in range(1, K + 1))
-    rows = []
-    for k in range(1, K + 1):
-        rows.append(
-            powers.selectExpr(
-                f"{k} AS k",
-                f"p{k} AS __p",
-                f"({tot}) AS __tot",
-            )
-        )
-    res = rows[0]
-    for r in rows[1:]:
-        res = res.unionAll(r)
-    return res.select(
-        "k",
-        _r6(F.col("__p") / F.col("__tot")).alias("power_share"),
-    )
-
-
-def _dft_sql() -> str:
-    K = 8
-
-    def trig(k, fn):
-        return (
-            f"list_reduce(list_transform(range(1, n + 1), t -> "
-            f"CAST(n * ys[t] - s AS DOUBLE) "
-            f"* {fn}(6.283185307179586 * CAST({k} AS DOUBLE) "
-            f"* CAST(t AS DOUBLE) / CAST(n AS DOUBLE))), "
-            f"(a, b) -> a + b)"
-        )
-
-    pcols = ", ".join(
-        f"{trig(k, 'cos')} * {trig(k, 'cos')}"
-        f" + {trig(k, 'sin')} * {trig(k, 'sin')} AS p{k}"
-        for k in range(1, K + 1)
-    )
-    tot = " + ".join(f"p{k}" for k in range(1, K + 1))
-    finals = " UNION ALL ".join(
-        f"SELECT {k} AS k, round(p{k} / ({tot}), 6) AS power_share"
-        f" FROM powers"
-        for k in range(1, K + 1)
-    )
-    return f"""
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), one AS (
-  SELECT list(y ORDER BY x) AS ys, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS s
-  FROM day
-), powers AS (
-  SELECT n, {pcols} FROM one
-)
-{finals}
-"""
-
-
-SQL_DFT_PERIODOGRAM = _dft_sql()
-
-QUERIES["dft_periodogram"] = q_dft_periodogram
-_RAW_ORACLES["dft_periodogram"] = SQL_DFT_PERIODOGRAM
-
-
-import math as _math
-
-_SPRT_LN_LIFT = _math.log(1.1)
-_SPRT_LN19 = _math.log(19.0)
-
-
-def q_sprt_monitor(spark, sf_dir):
-    """Wald sequential probability ratio test replayed over the month
-    of daily purchase shares (Wald 1945 — the sequential monitor that
-    lets a metric watch stop EARLY with guaranteed alpha/beta, the
-    ancestor of every always-valid A/B sequential boundary): H0 = the
-    pooled share p0, H1 = a 10% lift 1.1*p0, so the per-event
-    log-likelihood ratio is x*ln(1.1) + (n-x)*ln((1-p1)/(1-p0)) and
-    the cumulative LLR is a running window over the <=31-day frame;
-    decision boundaries +-ln(19) are the alpha=beta=0.05 Wald bounds,
-    with ln(1.1) and ln(19) pinned as identical python literals on
-    both engines. Replaying against the POOLED p0 makes this an A/A
-    null replay: the LLR should random-walk between the boundaries,
-    and an early accept_h1 crossing flags a drifting metric (the
-    sequential companion to srm_check). ONE corpus aggregate; the
-    cumulative machinery never touches more than 31 rows."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__s"),
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0).alias("__pur"),
-    )
-    cells = ev.groupBy("__s").agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.sum("__pur").cast("long").alias("__x"),
-    )
-    wc = Window.orderBy("__s").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wt = Window.orderBy("__s").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    t = cells.select(
-        F.col("__s").alias("day"),
-        F.sum("__n").over(wc).cast("long").alias("cum_events"),
-        F.sum("__x").over(wc).cast("long").alias("cum_purchases"),
-        F.sum("__n").over(wt).cast("long").alias("__N"),
-        F.sum("__x").over(wt).cast("long").alias("__X"),
-    )
-    p0 = F.col("__X").cast("double") / F.col("__N").cast("double")
-    p1 = F.lit(1.1) * p0
-    l0 = F.log((F.lit(1.0) - p1) / (F.lit(1.0) - p0))
-    llr = (
-        F.col("cum_purchases").cast("double") * F.lit(_SPRT_LN_LIFT)
-        + (F.col("cum_events") - F.col("cum_purchases")).cast("double")
-        * l0
-    )
-    return t.select(
-        "day", "cum_events", "cum_purchases",
-        _r6(llr).alias("llr"),
-        F.when(llr >= F.lit(_SPRT_LN19), F.lit("accept_h1"))
-        .when(llr <= F.lit(-_SPRT_LN19), F.lit("accept_h0"))
-        .otherwise(F.lit("continue")).alias("decision"),
-    )
-
-
-SQL_SPRT_MONITOR = f"""
-WITH cells AS (
-  SELECT CAST(day(ts) AS BIGINT) AS s,
-    CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x
-  FROM events GROUP BY 1
-), t AS (
-  SELECT s AS day,
-    CAST(sum(n) OVER w AS BIGINT) AS cum_events,
-    CAST(sum(x) OVER w AS BIGINT) AS cum_purchases,
-    CAST(sum(n) OVER () AS BIGINT) AS nn,
-    CAST(sum(x) OVER () AS BIGINT) AS xx
-  FROM cells
-  WINDOW w AS (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW)
-), f AS (
-  SELECT day, cum_events, cum_purchases,
-    CAST(cum_purchases AS DOUBLE) * CAST({_SPRT_LN_LIFT!r} AS DOUBLE)
-    + CAST(cum_events - cum_purchases AS DOUBLE)
-      * ln((1.0 - 1.1 * (CAST(xx AS DOUBLE) / CAST(nn AS DOUBLE)))
-           / (1.0 - CAST(xx AS DOUBLE) / CAST(nn AS DOUBLE))) AS llr
-  FROM t
-)
-SELECT day, cum_events, cum_purchases,
-  round(llr, 6) AS llr,
-  CASE WHEN llr >= CAST({_SPRT_LN19!r} AS DOUBLE) THEN 'accept_h1'
-       WHEN llr <= CAST({(-_SPRT_LN19)!r} AS DOUBLE) THEN 'accept_h0'
-       ELSE 'continue' END AS decision
-FROM f
-"""
-
-QUERIES["sprt_monitor"] = q_sprt_monitor
-_RAW_ORACLES["sprt_monitor"] = SQL_SPRT_MONITOR
 
 
 def q_kruskal_wallis(spark, sf_dir):
@@ -15349,292 +14491,6 @@ SQL_COX_PH = _cox_sql()
 QUERIES["cox_ph"] = q_cox_ph
 _RAW_ORACLES["cox_ph"] = SQL_COX_PH
 
-
-_FR_CHI2_4_95 = 9.488
-
-
-def q_friedman_test(spark, sf_dir):
-    """Friedman blocked rank test (Friedman 1937) of event-type daily
-    volume with day-of-month blocks — the WITHIN-block companion to
-    kruskal_wallis: kruskal asks whether the value distributions of
-    the types differ pooled over the month, Friedman asks whether the
-    type ORDERING is consistent day after day, which is robust to the
-    day-level volume swings that dominate a pooled test. Treatments =
-    the 5 event types, blocks = days; the dense 31x5 measurement grid
-    is built as 5 CONDITIONAL-COUNT COLUMNS of one day aggregate
-    (missing cells are true zeros by construction — no type-grid
-    cross join), and the within-block average ranks collapse to
-    row-level integer expressions over those 5 columns using the
-    catalog's doubled mid-rank convention r2_i = 2*#{c_j < c_i} +
-    #{c_j = c_i} + 1 — no window, no shuffle beyond the two aggs.
-    Per-type rank sums R2_j = 2*R_j and the rank-square total are
-    exact longs from ONE global aggregate, and the tie-general
-    statistic (Conover 1999 eq. 5.5, scaled by 4/4)
-    Q = (k-1) * sum_j (R2_j - n(k+1))^2 / (sum r2^2 - n k (k+1)^2)
-    is ONE division of exact integers — the no-tie case reduces to
-    the familiar 12/(nk(k+1)) sum R_j^2 - 3n(k+1). The persisted
-    1-row frame fans out to the 5 output rows (cached-branch
-    convention); at 10^12 events the rank machinery is 31 rows."""
-    from mpds_spark.operators.util import scratch_persist
-
-    k = _BT_K
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__d"),
-        "event_type",
-    )
-    day = ev.groupBy("__d").agg(*[
-        F.sum(
-            F.when(F.col("event_type") == t, 1).otherwise(0)
-        ).cast("long").alias(f"c{i}")
-        for i, t in enumerate(_BT_TYPES)
-    ])
-    r2s = []
-    for i in range(k):
-        lt = sum(
-            F.when(F.col(f"c{j}") < F.col(f"c{i}"), 1).otherwise(0)
-            for j in range(k) if j != i
-        )
-        eq = sum(
-            F.when(F.col(f"c{j}") == F.col(f"c{i}"), 1).otherwise(0)
-            for j in range(k) if j != i
-        )
-        r2s.append(
-            (2 * lt + (eq + 1) + 1).cast("long").alias(f"r2_{i}")
-        )
-    r = day.select(*r2s)
-    one = r.agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        *[F.sum(f"r2_{i}").cast("long").alias(f"R2_{i}")
-          for i in range(k)],
-        F.sum(
-            sum(F.col(f"r2_{i}") * F.col(f"r2_{i}") for i in range(k))
-        ).cast("long").alias("__a4"),
-    )
-    ss = sum(
-        (F.col(f"R2_{i}") - F.col("__n") * F.lit(k + 1))
-        * (F.col(f"R2_{i}") - F.col("__n") * F.lit(k + 1))
-        for i in range(k)
-    ).cast("long")
-    den = (
-        F.col("__a4") - F.col("__n") * F.lit(k) * F.lit((k + 1) * (k + 1))
-    ).cast("long")
-    q = F.when(
-        den > 0,
-        F.lit(k - 1) * ss.cast("double") / den.cast("double"),
-    ).otherwise(F.lit(0.0))
-    one = scratch_persist(one.select(
-        *[f"R2_{i}" for i in range(k)],
-        F.col("__n").alias("n_blocks"),
-        F.lit(k).cast("long").alias("k_treatments"),
-        _r6(q).alias("q_friedman"),
-        (q > F.lit(_FR_CHI2_4_95)).alias("reject_equal"),
-    ))
-    outs = [
-        one.selectExpr(
-            f"'{t}' AS event_type",
-            f"CAST(R2_{i} AS DOUBLE) / 2.0 AS rank_sum",
-            "n_blocks", "k_treatments", "q_friedman", "reject_equal",
-        )
-        for i, t in enumerate(_BT_TYPES)
-    ]
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res
-
-
-def _friedman_sql() -> str:
-    k = _BT_K
-    cases = ", ".join(
-        f"CAST(sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS c{i}"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    r2s = []
-    for i in range(k):
-        lt = " + ".join(
-            f"CASE WHEN c{j} < c{i} THEN 1 ELSE 0 END"
-            for j in range(k) if j != i
-        )
-        eq = " + ".join(
-            f"CASE WHEN c{j} = c{i} THEN 1 ELSE 0 END"
-            for j in range(k) if j != i
-        )
-        r2s.append(
-            f"CAST(2 * ({lt}) + (({eq}) + 1) + 1 AS BIGINT) AS r2_{i}"
-        )
-    sums = ", ".join(
-        f"CAST(sum(r2_{i}) AS BIGINT) AS R2_{i}" for i in range(k)
-    )
-    sq = " + ".join(f"r2_{i} * r2_{i}" for i in range(k))
-    ss = " + ".join(
-        f"(R2_{i} - n * {k + 1}) * (R2_{i} - n * {k + 1})"
-        for i in range(k)
-    )
-    finals = " UNION ALL ".join(
-        f"SELECT '{t}' AS event_type,"
-        f" CAST(R2_{i} AS DOUBLE) / 2.0 AS rank_sum,"
-        " n_blocks, k_treatments, q_friedman, reject_equal FROM f"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    return f"""
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS d, {cases}
-  FROM events GROUP BY 1
-), r AS (
-  SELECT {', '.join(r2s)} FROM day
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, {sums},
-    CAST(sum({sq}) AS BIGINT) AS a4
-  FROM r
-), f AS (
-  SELECT {', '.join(f'R2_{i}' for i in range(k))},
-    n AS n_blocks, CAST({k} AS BIGINT) AS k_treatments,
-    round(CASE WHEN a4 - n * {k} * {(k + 1) * (k + 1)} > 0 THEN
-      {k - 1} * CAST({ss} AS DOUBLE)
-      / CAST(a4 - n * {k} * {(k + 1) * (k + 1)} AS DOUBLE)
-    ELSE 0.0 END, 6) AS q_friedman,
-    CASE WHEN a4 - n * {k} * {(k + 1) * (k + 1)} > 0 THEN
-      {k - 1} * CAST({ss} AS DOUBLE)
-      / CAST(a4 - n * {k} * {(k + 1) * (k + 1)} AS DOUBLE)
-    ELSE 0.0 END > {_FR_CHI2_4_95!r} AS reject_equal
-  FROM one
-)
-{finals}
-"""
-
-
-SQL_FRIEDMAN_TEST = _friedman_sql()
-
-QUERIES["friedman_test"] = q_friedman_test
-_RAW_ORACLES["friedman_test"] = SQL_FRIEDMAN_TEST
-
-
-_JB_CHI2_2_95 = 5.991
-
-
-def q_jarque_bera(spark, sf_dir):
-    """Jarque-Bera normality test (Jarque & Bera 1980; Bowman &
-    Shenton 1975) of each event type's daily-count series — the
-    omnibus skew/kurtosis gate you run BEFORE trusting the Gaussian
-    machinery downstream (gumbel block maxima, welch/levene/anova all
-    assume rough normality of their inputs): JB = n/6 (g1^2 +
-    (g2-3)^2/4) with g1 = sqrt(n) M3/M2^1.5 and g2 = n M4/M2^2.
-    EXACT INTEGER central moments in ONE pass: with y_t the (type,
-    day) counts, S = sum y and P_k = sum y^k raw power sums (exact
-    longs / decimal(38,0) / HUGEINT), the scaled central moments of
-    z_t = n*y_t - S expand binomially —
-    M2z = n^2 P2 - n S^2, M3z = n^3 P3 - 3 n^2 S P2 + 2 n S^3,
-    M4z = n^4 P4 - 4 n^3 S P3 + 6 n^2 S^2 P2 - 3 n S^4 —
-    so NO mean-centering join and the corpus is touched ONCE; the
-    n-scaling cancels inside g1/g2 (z = n*(y - mean) exactly).
-    Every downstream value is a fixed expression tree over exact
-    integers (x*sqrt(x) for the ^1.5, no pow) — the gate is exact
-    with zero float folds (integer-exact for daily counts up to
-    ~1e6/day at month scale; widen the decimal at 10^12 rows/day).
-    Reject at the chi2(2) 95% point 5.991."""
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__d"),
-    )
-    cells = ev.groupBy("event_type", "__d").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    yd = F.col("__y").cast("decimal(38,0)")
-    mom = cells.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.sum("__y").cast("long").alias("__s"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("__p2"),
-        F.sum(yd * yd * yd).cast("decimal(38,0)").alias("__p3"),
-        F.sum(yd * yd * yd * yd).cast("decimal(38,0)").alias("__p4"),
-    )
-    nn = F.col("__n").cast("decimal(38,0)")
-    sd = F.col("__s").cast("decimal(38,0)")
-    p2 = F.col("__p2").cast("decimal(38,0)")
-    m2 = (nn * nn * p2 - nn * sd * sd).cast("double")
-    m3 = (
-        nn * nn * nn * F.col("__p3")
-        - F.lit(3) * nn * nn * sd * p2
-        + F.lit(2) * nn * sd * sd * sd
-    ).cast("double")
-    m4 = (
-        nn * nn * nn * nn * F.col("__p4")
-        - F.lit(4) * nn * nn * nn * sd * F.col("__p3")
-        + F.lit(6) * nn * nn * sd * sd * p2
-        - F.lit(3) * nn * sd * sd * sd * sd
-    ).cast("double")
-    nd = F.col("__n").cast("double")
-    g1 = F.when(
-        m2 > 0, F.sqrt(nd) * m3 / (m2 * F.sqrt(m2))
-    ).otherwise(F.lit(0.0))
-    g2 = F.when(m2 > 0, nd * m4 / (m2 * m2)).otherwise(F.lit(0.0))
-    jb = nd / F.lit(6.0) * (
-        g1 * g1
-        + (g2 - F.lit(3.0)) * (g2 - F.lit(3.0)) / F.lit(4.0)
-    )
-    return mom.select(
-        "event_type",
-        F.col("__n").alias("n_days"),
-        _r6(g1).alias("skew_g1"),
-        _r6(g2).alias("kurt_g2"),
-        _r6(jb).alias("jb_stat"),
-        (jb > F.lit(_JB_CHI2_2_95)).alias("reject_normal"),
-    )
-
-
-SQL_JARQUE_BERA = f"""
-WITH cells AS (
-  SELECT event_type, CAST(day(ts) AS BIGINT) AS d,
-    CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY event_type, day(ts)
-), mom AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS s,
-    CAST(sum(y * y) AS BIGINT) AS p2,
-    CAST(sum(CAST(y AS HUGEINT) * y * y) AS HUGEINT) AS p3,
-    CAST(sum(CAST(y AS HUGEINT) * y * y * y) AS HUGEINT) AS p4
-  FROM cells GROUP BY event_type
-), cm AS (
-  SELECT event_type, n,
-    CAST(CAST(n AS HUGEINT) * n * p2
-         - CAST(n AS HUGEINT) * s * s AS DOUBLE) AS m2,
-    CAST(CAST(n AS HUGEINT) * n * n * p3
-         - 3 * CAST(n AS HUGEINT) * n * s * p2
-         + 2 * CAST(n AS HUGEINT) * s * s * s AS DOUBLE) AS m3,
-    CAST(CAST(n AS HUGEINT) * n * n * n * p4
-         - 4 * CAST(n AS HUGEINT) * n * n * s * p3
-         + 6 * CAST(n AS HUGEINT) * n * s * s * p2
-         - 3 * CAST(n AS HUGEINT) * s * s * s * s AS DOUBLE) AS m4
-  FROM mom
-), f AS (
-  SELECT event_type, n,
-    CASE WHEN m2 > 0 THEN
-      sqrt(CAST(n AS DOUBLE)) * m3 / (m2 * sqrt(m2))
-    ELSE 0.0 END AS g1,
-    CASE WHEN m2 > 0 THEN
-      CAST(n AS DOUBLE) * m4 / (m2 * m2)
-    ELSE 0.0 END AS g2
-  FROM cm
-), jb AS (
-  SELECT event_type, n, g1, g2,
-    CAST(n AS DOUBLE) / 6.0 * (g1 * g1 + (g2 - 3.0) * (g2 - 3.0) / 4.0)
-      AS jb
-  FROM f
-)
-SELECT event_type, n AS n_days,
-  round(g1, 6) AS skew_g1,
-  round(g2, 6) AS kurt_g2,
-  round(jb, 6) AS jb_stat,
-  jb > {_JB_CHI2_2_95!r} AS reject_normal
-FROM jb
-"""
-
-QUERIES["jarque_bera"] = q_jarque_bera
-_RAW_ORACLES["jarque_bera"] = SQL_JARQUE_BERA
-
-
 _BC_LAMBDAS = [-1.0, -0.5, 0.0, 0.5, 1.0]
 
 
@@ -15815,122 +14671,6 @@ SQL_BOX_COX_LAMBDA = _box_cox_sql()
 
 QUERIES["box_cox_lambda"] = q_box_cox_lambda
 _RAW_ORACLES["box_cox_lambda"] = SQL_BOX_COX_LAMBDA
-
-
-_DF_TAU_MU_5PCT = -2.96
-
-
-def q_dickey_fuller(spark, sf_dir):
-    """Dickey-Fuller unit-root test of the daily event-volume series
-    (Dickey & Fuller 1979; drift specification Delta y_t = alpha +
-    beta y_{t-1} + eps, the DF(0) regression — the stationarity gate
-    you run BEFORE trusting ACF-based tooling or holt_trend: a
-    unit root makes sample autocorrelations
-    meaningless). OLS on the <=30-obs lag frame from EXACT INTEGER
-    moments: with x = y_{t-1}, d = y_t - y_{t-1} (exact longs) and
-    m = n-1 observations, beta = (m*Sxd - Sx*Sd)/(m*Sxx - Sx^2) is
-    ONE division of exact integers, alpha = (Sd - beta*Sx)/m, and
-    RSS = (SYYc - beta*SXYc)/m with SXYc/SYYc exact longs, so
-    t = beta/se is a fixed expression tree — the gate is exact with
-    zero float folds. Reject 'unit root' when t < -2.96 (Fuller 1976
-    / MacKinnon 1991 tau_mu 5% point near n=30, pinned literal). The
-    corpus is touched ONCE by the day aggregate; the regression frame
-    is the <=31-day series."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    wlag = Window.orderBy("__x")
-    lagf = day.select(
-        F.col("__y").alias("__cur"),
-        F.lag("__y").over(wlag).alias("__prev"),
-    ).filter(F.col("__prev").isNotNull())
-    mom = lagf.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("__prev").cast("long").alias("sx"),
-        F.sum(F.col("__cur") - F.col("__prev")).cast("long").alias("sd"),
-        F.sum(F.col("__prev") * F.col("__prev")).cast("long")
-        .alias("sxx"),
-        F.sum(
-            F.col("__prev") * (F.col("__cur") - F.col("__prev"))
-        ).cast("long").alias("sxd"),
-        F.sum(
-            (F.col("__cur") - F.col("__prev"))
-            * (F.col("__cur") - F.col("__prev"))
-        ).cast("long").alias("sdd"),
-    )
-    den = (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    sxyc = (F.col("m") * F.col("sxd") - F.col("sx") * F.col("sd"))
-    syyc = (F.col("m") * F.col("sdd") - F.col("sd") * F.col("sd"))
-    beta = sxyc.cast("double") / den.cast("double")
-    alpha = (
-        F.col("sd").cast("double") - beta * F.col("sx").cast("double")
-    ) / F.col("m").cast("double")
-    rss = (syyc.cast("double") - beta * sxyc.cast("double")) \
-        / F.col("m").cast("double")
-    s2 = rss / (F.col("m") - 2).cast("double")
-    se = F.sqrt(s2 * F.col("m").cast("double") / den.cast("double"))
-    t = beta / se
-    ok = (den > 0) & (F.col("m") > 2)
-    return mom.select(
-        (F.col("m") + 1).alias("n_days"),
-        _r6(F.when(ok, beta)).alias("beta"),
-        _r6(F.when(ok, alpha)).alias("alpha"),
-        _r6(F.when(ok, t)).alias("t_stat"),
-        F.when(ok, t < F.lit(_DF_TAU_MU_5PCT)).alias("unit_root_rejected"),
-    )
-
-
-SQL_DICKEY_FULLER = f"""
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), lagf AS (
-  SELECT y AS cur, lag(y) OVER (ORDER BY x) AS prev FROM day
-), mom AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-    CAST(sum(prev) AS BIGINT) AS sx,
-    CAST(sum(cur - prev) AS BIGINT) AS sd,
-    CAST(sum(prev * prev) AS BIGINT) AS sxx,
-    CAST(sum(prev * (cur - prev)) AS BIGINT) AS sxd,
-    CAST(sum((cur - prev) * (cur - prev)) AS BIGINT) AS sdd
-  FROM lagf WHERE prev IS NOT NULL
-), f AS (
-  SELECT m,
-    m * sxx - sx * sx AS den,
-    m * sxd - sx * sd AS sxyc,
-    m * sdd - sd * sd AS syyc,
-    sx, sd
-  FROM mom
-), g AS (
-  SELECT m, den, sx, sd,
-    CAST(sxyc AS DOUBLE) / CAST(den AS DOUBLE) AS beta,
-    (CAST(syyc AS DOUBLE)
-     - CAST(sxyc AS DOUBLE) / CAST(den AS DOUBLE)
-       * CAST(sxyc AS DOUBLE)) / CAST(m AS DOUBLE) AS rss
-  FROM f WHERE den > 0 AND m > 2
-), h AS (
-  SELECT m, beta,
-    (CAST(sd AS DOUBLE) - beta * CAST(sx AS DOUBLE))
-      / CAST(m AS DOUBLE) AS alpha,
-    beta / sqrt(rss / CAST(m - 2 AS DOUBLE)
-                * CAST(m AS DOUBLE) / CAST(den AS DOUBLE)) AS t
-  FROM g
-)
-SELECT m + 1 AS n_days,
-  round(beta, 6) AS beta,
-  round(alpha, 6) AS alpha,
-  round(t, 6) AS t_stat,
-  t < {_DF_TAU_MU_5PCT!r} AS unit_root_rejected
-FROM h
-"""
-
-QUERIES["dickey_fuller"] = q_dickey_fuller
-_RAW_ORACLES["dickey_fuller"] = SQL_DICKEY_FULLER
-
 
 _KMV_K = 256
 _KMV_SPACE = float(1 << 60)  # 16^15, the 60-bit md5-prefix hash space
@@ -16281,155 +15021,6 @@ SQL_HORVITZ_THOMPSON = _ht_sql()
 QUERIES["horvitz_thompson"] = q_horvitz_thompson
 _RAW_ORACLES["horvitz_thompson"] = SQL_HORVITZ_THOMPSON
 
-
-_SES_ALPHAS = [round(0.1 * i, 1) for i in range(1, 10)]
-
-
-def q_ses_alpha_grid(spark, sf_dir):
-    """Simple-exponential-smoothing alpha selection for the daily
-    event-volume series by one-step-ahead SSE over the grid
-    alpha = 0.1..0.9 (Brown 1956; Hyndman & Athanasopoulos FPP3 §8.1
-    — the forecasting-hyperparameter sweep beside holt_trend: SES is
-    the level-only special case, and the SSE grid is exactly how
-    statsmodels' fixed-smoothing path evaluates it): l_1 = y_1,
-    e_t = y_t - l_{t-1}, l_t = alpha*y_t + (1-alpha)*l_{t-1}. Each
-    alpha's recursion runs as ONE left fold over the day-ascending
-    array with a (level, sse) struct accumulator — Spark seeds
-    aggregate() with the first element and folds the rest via
-    slice(); DuckDB's list_reduce seeds from the first element
-    NATIVELY, so the two engines execute the identical float
-    sequence by construction. Counts are exact longs; is_best takes
-    the smallest SSE with the smaller-alpha tie-break. The persisted
-    1-row frame fans out to the 9-row grid (cached-branch); at 10^12
-    rows the fold still sees <=31 values."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__x", "__y"))
-        ).alias("__a"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    ).selectExpr(
-        "n",
-        "transform(__a, e -> cast(e.__y as double)) AS ys",
-    )
-    cols = ["n"]
-    for i, a in enumerate(_SES_ALPHAS):
-        fold = (
-            "aggregate(slice(ys, 2, cast(n - 1 as int)),"
-            " named_struct('l', element_at(ys, 1), 'sse', 0.0D),"
-            f" (acc, y) -> named_struct("
-            f"'l', {a!r} * y + (1.0 - {a!r}) * acc.l,"
-            " 'sse', acc.sse + (y - acc.l) * (y - acc.l)))"
-        )
-        cols.append(f"{fold} AS st_{i}")
-    one = one.selectExpr(*cols)
-    one = scratch_persist(one.selectExpr(
-        "n",
-        *[c for i in range(len(_SES_ALPHAS))
-          for c in (f"st_{i}.sse AS sse_{i}", f"st_{i}.l AS lvl_{i}")],
-        "least(" + ", ".join(
-            f"st_{i}.sse" for i in range(len(_SES_ALPHAS))
-        ) + ") AS __best",
-    ))
-    outs = [
-        one.selectExpr(
-            f"CAST({a!r} AS DOUBLE) AS alpha",
-            "n AS n_days",
-            f"sse_{i} AS __sse",
-            f"sqrt(sse_{i} / cast(n - 1 as double)) AS __rmse",
-            f"lvl_{i} AS __lvl",
-            "(sse_{i} <= __best{ties}) AS is_best".format(
-                i=i,
-                ties="".join(
-                    f" AND sse_{j} > __best" for j in range(i)
-                ),
-            ),
-        )
-        for i, a in enumerate(_SES_ALPHAS)
-    ]
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res.select(
-        "alpha", "n_days",
-        _r6("__sse").alias("sse"),
-        _r6("__rmse").alias("rmse"),
-        _r6("__lvl").alias("final_level"),
-        "is_best",
-    )
-
-
-def _ses_sql() -> str:
-    # DuckDB list_reduce evaluates struct-accumulator fields
-    # SEQUENTIALLY (the 'sse' field sees the already-updated 'l'), so
-    # the oracle avoids struct accumulators entirely: each one-step
-    # level l_{t-1} is recomputed from scratch as a plain DOUBLE fold
-    # over the prefix (identical op sequence => bit-identical to the
-    # running value), and the SSE folds t-ascending. O(n^2) on the
-    # <=31-day frame.
-    def lvl(a, hi):
-        return (
-            f"list_reduce(list_slice(ys, 1, {hi}), (acc, y) ->"
-            f" CAST({a!r} AS DOUBLE) * y"
-            f" + (CAST(1.0 AS DOUBLE) - CAST({a!r} AS DOUBLE)) * acc)"
-        )
-
-    folds = []
-    for i, a in enumerate(_SES_ALPHAS):
-        err = f"(ys[t] - {lvl(a, 't - 1')})"
-        folds.append(
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-            " list_transform(range(2, CAST(n + 1 AS INTEGER)),"
-            f" t -> {err} * {err})), (acc, v) -> acc + v) AS sse_{i}"
-        )
-        folds.append(f"{lvl(a, 'CAST(n AS INTEGER)')} AS lvl_{i}")
-    best = "least(" + ", ".join(
-        f"sse_{i}" for i in range(len(_SES_ALPHAS))
-    ) + ")"
-    finals = " UNION ALL ".join(
-        "SELECT CAST({a!r} AS DOUBLE) AS alpha, n AS n_days,"
-        " round(sse_{i}, 6) AS sse,"
-        " round(sqrt(sse_{i} / CAST(n - 1 AS DOUBLE)), 6) AS rmse,"
-        " round(lvl_{i}, 6) AS final_level,"
-        " (sse_{i} <= best{ties}) AS is_best FROM b".format(
-            a=a, i=i,
-            ties="".join(
-                f" AND sse_{j} > best" for j in range(i)
-            ),
-        )
-        for i, a in enumerate(_SES_ALPHAS)
-    )
-    return f"""
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), one AS (
-  SELECT list(CAST(y AS DOUBLE) ORDER BY x) AS ys,
-    CAST(count(*) AS BIGINT) AS n
-  FROM day
-), fl AS (
-  SELECT n, {', '.join(folds)} FROM one
-), b AS (
-  SELECT *, {best} AS best FROM fl
-)
-{finals}
-"""
-
-
-SQL_SES_ALPHA_GRID = _ses_sql()
-
-QUERIES["ses_alpha_grid"] = q_ses_alpha_grid
-_RAW_ORACLES["ses_alpha_grid"] = SQL_SES_ALPHA_GRID
-
-
 def q_best_split_stump(spark, sf_dir):
     """CART decision-stump split finder (Breiman et al. 1984): the
     single n_chars threshold that best separates the >=20-words
@@ -16554,155 +15145,6 @@ FROM best
 
 QUERIES["best_split_stump"] = q_best_split_stump
 _RAW_ORACLES["best_split_stump"] = SQL_BEST_SPLIT_STUMP
-
-
-_THSD_Q_K5_DF120 = 3.92  # studentized range q(0.05; k=5, df=120)
-
-
-def q_tukey_hsd(spark, sf_dir):
-    """Tukey-Kramer HSD post-hoc pairwise comparisons of event-type
-    daily volume (Tukey 1949; Kramer 1956 unequal-n form) — the
-    follow-up kruskal_wallis / friedman_test / anova_twoway all
-    punt on: the omnibus tests say SOME types differ, HSD says WHICH
-    pairs, with the studentized-range correction that keeps the
-    familywise error at alpha across all 10 comparisons (what a naive
-    10x welch sweep inflates). Per-type moments (n_i, S_i, sum y^2)
-    come from 5 conditional-count column sets of ONE cell aggregate
-    (exact longs); MSW = sum_g (n_g P2_g - S_g^2)/n_g / (N - k) is a
-    fixed 5-term chain of exact-integer ratios; each pair's
-    |mean_i - mean_j| tests against q* sqrt(MSW/2 (1/n_i + 1/n_j))
-    with the pinned q(0.05; 5, 120) = 3.92 literal. The persisted
-    1-row moment frame fans out to the 10 pair rows (cached-branch).
-    At 10^12 events the comparison frame is 1 row."""
-    from mpds_spark.operators.util import scratch_persist
-
-    k = _BT_K
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__d"),
-        "event_type",
-    )
-    cells = ev.groupBy("__d", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = cells.agg(*[
-        c for i, t in enumerate(_BT_TYPES) for c in (
-            F.sum(F.when(F.col("event_type") == t, 1).otherwise(0))
-            .cast("long").alias(f"n{i}"),
-            F.sum(
-                F.when(F.col("event_type") == t, F.col("__y"))
-                .otherwise(0)
-            ).cast("long").alias(f"s{i}"),
-            F.sum(
-                F.when(F.col("event_type") == t,
-                       F.col("__y") * F.col("__y")).otherwise(0)
-            ).cast("long").alias(f"p{i}"),
-        )
-    ])
-    ssw = " + ".join(
-        f"(cast(n{i} as double) * cast(p{i} as double)"
-        f" - cast(s{i} as double) * cast(s{i} as double))"
-        f" / cast(n{i} as double)"
-        for i in range(k)
-    )
-    ntot = " + ".join(f"n{i}" for i in range(k))
-    one = scratch_persist(one.selectExpr(
-        "*",
-        f"({ssw}) / cast(({ntot}) - {k} as double) AS msw",
-        f"cast({ntot} as long) AS n_cells",
-    ))
-    outs = []
-    for i in range(k):
-        for j in range(i + 1, k):
-            diff = (
-                f"cast(s{i} as double) / cast(n{i} as double)"
-                f" - cast(s{j} as double) / cast(n{j} as double)"
-            )
-            hsd = (
-                f"{_THSD_Q_K5_DF120!r} * sqrt(msw / 2.0"
-                f" * (1.0 / cast(n{i} as double)"
-                f"    + 1.0 / cast(n{j} as double)))"
-            )
-            outs.append(one.selectExpr(
-                f"'{_BT_TYPES[i]}' AS type_a",
-                f"'{_BT_TYPES[j]}' AS type_b",
-                "n_cells",
-                f"({diff}) AS __diff",
-                "msw AS __msw",
-                f"({hsd}) AS __hsd",
-                f"(abs({diff}) > {hsd}) AS significant",
-            ))
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res.select(
-        "type_a", "type_b", "n_cells",
-        _r6("__diff").alias("mean_diff"),
-        _r6("__msw").alias("msw"),
-        _r6("__hsd").alias("hsd_threshold"),
-        "significant",
-    )
-
-
-def _tukey_sql() -> str:
-    k = _BT_K
-    moms = ", ".join(
-        f"CAST(sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n{i},"
-        f" CAST(sum(CASE WHEN event_type = '{t}' THEN y ELSE 0 END)"
-        f" AS BIGINT) AS s{i},"
-        f" CAST(sum(CASE WHEN event_type = '{t}' THEN y * y ELSE 0 END)"
-        f" AS BIGINT) AS p{i}"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    ssw = " + ".join(
-        f"(CAST(n{i} AS DOUBLE) * CAST(p{i} AS DOUBLE)"
-        f" - CAST(s{i} AS DOUBLE) * CAST(s{i} AS DOUBLE))"
-        f" / CAST(n{i} AS DOUBLE)"
-        for i in range(k)
-    )
-    ntot = " + ".join(f"n{i}" for i in range(k))
-    pairs = []
-    for i in range(k):
-        for j in range(i + 1, k):
-            diff = (
-                f"CAST(s{i} AS DOUBLE) / CAST(n{i} AS DOUBLE)"
-                f" - CAST(s{j} AS DOUBLE) / CAST(n{j} AS DOUBLE)"
-            )
-            hsd = (
-                f"{_THSD_Q_K5_DF120!r} * sqrt(msw / 2.0"
-                f" * (1.0 / CAST(n{i} AS DOUBLE)"
-                f"    + 1.0 / CAST(n{j} AS DOUBLE)))"
-            )
-            pairs.append(
-                f"SELECT '{_BT_TYPES[i]}' AS type_a,"
-                f" '{_BT_TYPES[j]}' AS type_b, n_cells,"
-                f" round({diff}, 6) AS mean_diff,"
-                " round(msw, 6) AS msw,"
-                f" round({hsd}, 6) AS hsd_threshold,"
-                f" (abs({diff}) > {hsd}) AS significant FROM m"
-            )
-    return f"""
-WITH cells AS (
-  SELECT CAST(day(ts) AS BIGINT) AS d, event_type,
-    CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-), one AS (
-  SELECT {moms} FROM cells
-), m AS (
-  SELECT *, ({ssw}) / CAST(({ntot}) - {k} AS DOUBLE) AS msw,
-    CAST({ntot} AS BIGINT) AS n_cells
-  FROM one
-)
-{' UNION ALL '.join(pairs)}
-"""
-
-
-SQL_TUKEY_HSD = _tukey_sql()
-
-QUERIES["tukey_hsd"] = q_tukey_hsd
-_RAW_ORACLES["tukey_hsd"] = SQL_TUKEY_HSD
-
 
 _LW_D = 64
 
@@ -16900,136 +15342,11 @@ SQL_LEDOIT_WOLF = _lw_sql()
 QUERIES["ledoit_wolf_shrinkage"] = q_ledoit_wolf_shrinkage
 _RAW_ORACLES["ledoit_wolf_shrinkage"] = SQL_LEDOIT_WOLF
 
-
-_PH_DELTA = 0.001
-_PH_LAMBDA = 0.05
-
-
-def q_page_hinkley(spark, sf_dir):
-    """Page-Hinkley drift monitor replayed over the month of daily
-    purchase shares (Page 1954 §5; Hinkley 1971 — the mean-shift
-    detector streaming-ML stacks (river/MOA) run per feature: the
-    cumulative deviation from the RUNNING mean, m_t = sum_{i<=t}
-    (x_i - xbar_i - delta), alarms when it rises more than lambda
-    above its own running minimum; unlike cusum_changepoint's
-    fixed-reference two-sided scan this tracks an adaptive baseline,
-    and unlike sprt_monitor it needs no alternative hypothesis).
-    Daily shares are exact-integer ratios p_t/n_t; every float after
-    that is a PREFIX FOLD over the day-ascending array — running
-    means, m, and the running minimum are all O(n^2)/O(n^3)
-    recomputed-prefix folds executed identically by both engines
-    (the ses_alpha_grid convention: plain DOUBLE accumulators only,
-    no struct folds), so the replay is exact. An alarm says the share
-    is NOT mean-stationary (the weekday pattern in this corpus does
-    trip it — exactly what the detector is for). ONE corpus
-    aggregate; the detector never sees more than 31 values."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__s"),
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0).alias("__pur"),
-    )
-    cells = ev.groupBy("__s").agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.sum("__pur").cast("long").alias("__x"),
-    )
-    one = cells.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__s", "__n", "__x"))
-        ).alias("__a"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    ).selectExpr(
-        "n",
-        "transform(__a, e -> e.__s) AS days",
-        "transform(__a, e -> cast(e.__x as double)"
-        " / cast(e.__n as double)) AS xs",
-    )
-    d, lam = _PH_DELTA, _PH_LAMBDA
-    one = one.selectExpr(
-        "n", "days", "xs",
-        "transform(sequence(1, cast(n as int)), t ->"
-        " element_at(xs, t)"
-        " - aggregate(slice(xs, 1, t), 0.0D, (acc, v) -> acc + v)"
-        f"   / cast(t as double) - {d!r}) AS devs",
-    ).selectExpr(
-        "n", "days", "xs",
-        "transform(sequence(1, cast(n as int)), t ->"
-        " aggregate(slice(devs, 1, t), 0.0D, (acc, v) -> acc + v))"
-        " AS ms",
-    ).selectExpr(
-        "n", "days", "xs", "ms",
-        "transform(sequence(1, cast(n as int)), t ->"
-        " element_at(ms, t) - array_min(slice(ms, 1, t))) AS phs",
-    )
-    out = one.selectExpr(
-        "posexplode(days) AS (__p, day)",
-        "xs", "ms", "phs",
-    ).selectExpr(
-        "day",
-        "element_at(xs, __p + 1) AS __x",
-        "element_at(ms, __p + 1) AS __m",
-        "element_at(phs, __p + 1) AS __ph",
-    )
-    return out.select(
-        "day",
-        _r6("__x").alias("share"),
-        _r6("__m").alias("m_cum"),
-        _r6("__ph").alias("ph_stat"),
-        (F.col("__ph") > F.lit(lam)).alias("alarm"),
-    )
-
-
-SQL_PAGE_HINKLEY = f"""
-WITH cells AS (
-  SELECT CAST(day(ts) AS BIGINT) AS s,
-    CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x
-  FROM events GROUP BY 1
-), one AS (
-  SELECT list(s ORDER BY s) AS days,
-    list(CAST(x AS DOUBLE) / CAST(n AS DOUBLE) ORDER BY s) AS xs,
-    CAST(count(*) AS BIGINT) AS n
-  FROM cells
-), dv AS (
-  SELECT n, days, xs,
-    list_transform(range(1, CAST(n + 1 AS INTEGER)), t ->
-      xs[t] - list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list_slice(xs, 1, t)), (acc, v) -> acc + v)
-              / CAST(t AS DOUBLE) - {_PH_DELTA!r}) AS devs
-  FROM one
-), mm AS (
-  SELECT n, days, xs,
-    list_transform(range(1, CAST(n + 1 AS INTEGER)), t ->
-      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        list_slice(devs, 1, t)), (acc, v) -> acc + v)) AS ms
-  FROM dv
-), ph AS (
-  SELECT n, days, xs, ms,
-    list_transform(range(1, CAST(n + 1 AS INTEGER)), t ->
-      ms[t] - list_aggregate(list_slice(ms, 1, t), 'min')) AS phs
-  FROM mm
-), rows_out AS (
-  SELECT days[t] AS day, xs[t] AS x, ms[t] AS m, phs[t] AS p
-  FROM ph, unnest(range(1, CAST(n + 1 AS INTEGER))) AS u(t)
-)
-SELECT day,
-  round(x, 6) AS share,
-  round(m, 6) AS m_cum,
-  round(p, 6) AS ph_stat,
-  p > {_PH_LAMBDA!r} AS alarm
-FROM rows_out
-"""
-
-QUERIES["page_hinkley"] = q_page_hinkley
-_RAW_ORACLES["page_hinkley"] = SQL_PAGE_HINKLEY
-
-
 def q_l_moments(spark, sf_dir):
     """L-moment shape statistics of the purchase-value distribution
     (Hosking JRSS-B 1990 — the order-statistic moments that stay
     FINITE and robust for the heavy-tailed monetary columns where
-    jarque_bera's classical skew/kurtosis explode: L-CV, L-skewness
+    the classical skew/kurtosis explode: L-CV, L-skewness
     and L-kurtosis are THE regional-frequency-analysis features and
     the distribution fingerprint that survives subsampling). Fully
     EXACT from the distinct-cents histogram: with c the rank mass
@@ -17169,129 +15486,6 @@ SQL_L_MOMENTS = _lmom_sql()
 
 QUERIES["l_moments"] = q_l_moments
 _RAW_ORACLES["l_moments"] = SQL_L_MOMENTS
-
-
-def q_ols_influence(spark, sf_dir):
-    """Regression influence diagnostics for the daily-volume linear
-    trend (Cook 1977; Belsley, Kuh & Welsch 1980 — leverage,
-    internally studentized residuals, Cook's distance: WHICH days
-    drive the fitted trend, the diagnostic companion to
-    ransac_trend's robust fit and dickey_fuller's OLS machinery; a
-    single outage or launch day with D > 4/n can flip a trend
-    readout). y = daily count on x = day-of-month; beta/alpha/SSR
-    from EXACT INTEGER moments (m Sxy - Sx Sy etc., single
-    divisions), then per-day leverage h_t = 1/m + m(x_t - xbar)^2 /
-    (m Sxx - Sx^2) [written as exact-integer ratios:
-    (m x_t - Sx)^2 / (m (m Sxx - Sx^2))], residual e_t, studentized
-    r_t = e_t / sqrt(s2 (1 - h_t)) and D_t = r_t^2 h_t /
-    (2 (1 - h_t)) — every term a fixed expression of exact longs
-    joined back by a broadcast 1-row moment fit (the registered
-    BNLJ). At 10^12 events the diagnostic frame is <=31 rows."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    mom = day.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("__x").cast("long").alias("sx"),
-        F.sum("__y").cast("long").alias("sy"),
-        F.sum(F.col("__x") * F.col("__x")).cast("long").alias("sxx"),
-        F.sum(F.col("__x") * F.col("__y")).cast("long").alias("sxy"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("syy"),
-    )
-    j = day.join(F.broadcast(mom))
-    den = (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    sxyc = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy"))
-    syyc = (F.col("m") * F.col("syy") - F.col("sy") * F.col("sy"))
-    beta = sxyc.cast("double") / den.cast("double")
-    alpha = (
-        F.col("sy").cast("double") - beta * F.col("sx").cast("double")
-    ) / F.col("m").cast("double")
-    rss = (syyc.cast("double") - beta * sxyc.cast("double")) \
-        / F.col("m").cast("double")
-    s2 = rss / (F.col("m") - 2).cast("double")
-    dev = (F.col("m") * F.col("__x") - F.col("sx"))
-    h = (
-        F.lit(1.0) / F.col("m").cast("double")
-        + (dev * dev).cast("double")
-        / (F.col("m").cast("double") * den.cast("double"))
-    )
-    e = F.col("__y").cast("double") - (alpha + beta
-                                       * F.col("__x").cast("double"))
-    ok = (F.col("m") > 2) & (den > 0)
-    rstud = e / F.sqrt(s2 * (F.lit(1.0) - h))
-    cook = (rstud * rstud) * h / (F.lit(2.0) * (F.lit(1.0) - h))
-    infl = cook > F.lit(4.0) / F.col("m").cast("double")
-    return j.select(
-        F.col("__x").alias("day"),
-        F.col("__y").alias("volume"),
-        _r6(F.when(ok, h)).alias("leverage"),
-        _r6(F.when(ok, e)).alias("residual"),
-        _r6(F.when(ok, rstud)).alias("r_student"),
-        _r6(F.when(ok, cook)).alias("cooks_d"),
-        F.when(ok, infl).alias("influential"),
-    )
-
-
-SQL_OLS_INFLUENCE = """
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), mom AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-    CAST(sum(x * x) AS BIGINT) AS sxx,
-    CAST(sum(x * y) AS BIGINT) AS sxy,
-    CAST(sum(y * y) AS BIGINT) AS syy
-  FROM day
-), f AS (
-  SELECT day.x, day.y, mom.m, mom.sx, mom.sy,
-    m * sxx - sx * sx AS den,
-    m * sxy - sx * sy AS sxyc,
-    m * syy - sy * sy AS syyc
-  FROM day CROSS JOIN mom
-), g AS (
-  SELECT x, y, m, sx, sy, den,
-    CAST(sxyc AS DOUBLE) / CAST(den AS DOUBLE) AS beta,
-    (CAST(syyc AS DOUBLE)
-     - CAST(sxyc AS DOUBLE) / CAST(den AS DOUBLE)
-       * CAST(sxyc AS DOUBLE)) / CAST(m AS DOUBLE) AS rss
-  FROM f WHERE m > 2 AND den > 0
-), h AS (
-  SELECT x, y, m, den, beta,
-    (CAST(sy AS DOUBLE) - beta * CAST(sx AS DOUBLE))
-      / CAST(m AS DOUBLE) AS alpha,
-    rss / CAST(m - 2 AS DOUBLE) AS s2,
-    1.0 / CAST(m AS DOUBLE)
-      + CAST((m * x - sx) * (m * x - sx) AS DOUBLE)
-        / (CAST(m AS DOUBLE) * CAST(den AS DOUBLE)) AS lev
-  FROM g
-), i AS (
-  SELECT x, y, m, lev,
-    CAST(y AS DOUBLE) - (alpha + beta * CAST(x AS DOUBLE)) AS e,
-    s2
-  FROM h
-), k AS (
-  SELECT x, y, m, lev, e,
-    e / sqrt(s2 * (1.0 - lev)) AS rstud
-  FROM i
-)
-SELECT x AS day, y AS volume,
-  round(lev, 6) AS leverage,
-  round(e, 6) AS residual,
-  round(rstud, 6) AS r_student,
-  round((rstud * rstud) * lev / (2.0 * (1.0 - lev)), 6) AS cooks_d,
-  (rstud * rstud) * lev / (2.0 * (1.0 - lev))
-    > 4.0 / CAST(m AS DOUBLE) AS influential
-FROM k
-"""
-
-QUERIES["ols_influence"] = q_ols_influence
-_RAW_ORACLES["ols_influence"] = SQL_OLS_INFLUENCE
-
 
 _WI_Z = 1.96
 
@@ -18120,119 +16314,6 @@ FROM best CROSS JOIN apf
 QUERIES["pr_curve_ap"] = q_pr_curve_ap
 _RAW_ORACLES["pr_curve_ap"] = SQL_PR_CURVE_AP
 
-
-def q_seasonal_strength(spark, sf_dir):
-    """Weekly seasonality strength of daily event volume as the
-    day-of-week eta-squared (the one-way ANOVA R^2 = SSB/SST over
-    dow groups — the variance-decomposition reading of what
-    dft_periodogram shows as power at k ~ n/7 and friedman_test
-    shows as rank consistency: 'WHAT SHARE of day-to-day volume
-    variation is the weekly cycle', Hyndman & Athanasopoulos FPP3
-    seasonal-strength analog with the flat-trend simplification
-    appropriate to a one-month window). EXACT INTEGERS throughout:
-    with day counts y, dow group sums S_g and sizes n_g, SST*n and
-    SSB*n are integer combinations (n sum y^2 - S^2 and
-    n sum_g S_g^2/n_g re-scaled by the lcm-free per-group single
-    divisions), so eta2 is a ratio of two doubles each assembled
-    from exact longs. Per-dow mean volume rides along (7 rows +
-    strength replicated, cached-branch fan-out avoided — the dow
-    frame IS the output). ONE day agg + ONE dow agg."""
-    ev = _events(spark, sf_dir).select(
-        F.to_date(F.col("ts").cast("timestamp")).alias("__d"),
-        F.dayofweek(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__dow"),
-    )
-    day = ev.groupBy("__d", "__dow").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    bydow = day.groupBy("__dow").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__s"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("__q"),
-    )
-    wt = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    t = bydow.select(
-        "*",
-        F.sum("n_days").over(wt).cast("long").alias("__n"),
-        F.sum("__s").over(wt).cast("long").alias("__st"),
-        F.sum("__q").over(wt).cast("long").alias("__qt"),
-        # SSB accumulations need S_g^2/n_g — fold in dow order as
-        # exact-ratio doubles
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(__dow, __s,"
-            " n_days)) OVER (ROWS BETWEEN UNBOUNDED PRECEDING AND"
-            " UNBOUNDED FOLLOWING)), 0.0D, (acc, x) ->"
-            " acc + cast(x.__s as double) * cast(x.__s as double)"
-            " / cast(x.n_days as double))"
-        ).alias("__gs"),
-    )
-    nd = F.col("__n").cast("double")
-    sst = F.col("__qt").cast("double") \
-        - F.col("__st").cast("double") * F.col("__st").cast("double") \
-        / nd
-    ssb = F.col("__gs") - F.col("__st").cast("double") \
-        * F.col("__st").cast("double") / nd
-    eta2 = F.when(sst > 0, ssb / sst).otherwise(F.lit(0.0))
-    return t.select(
-        F.col("__dow").alias("dow"),
-        "n_days",
-        _r6(
-            F.col("__s").cast("double") / F.col("n_days").cast("double")
-        ).alias("mean_volume"),
-        _r6(ssb).alias("ssb"),
-        _r6(sst).alias("sst"),
-        _r6(eta2).alias("seasonal_strength"),
-    )
-
-
-SQL_SEASONAL_STRENGTH = """
-WITH day AS (
-  SELECT CAST(ts AS DATE) AS d,
-    CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-    CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-), bydow AS (
-  SELECT dow, CAST(count(*) AS BIGINT) AS n_days,
-    CAST(sum(y) AS BIGINT) AS s,
-    CAST(sum(y * y) AS BIGINT) AS q
-  FROM day GROUP BY dow
-), gsf AS (
-  SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      list(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-           / CAST(n_days AS DOUBLE) ORDER BY dow)),
-      (acc, x) -> acc + x) AS gs
-  FROM bydow
-), t AS (
-  SELECT dow, n_days, s,
-    CAST(sum(n_days) OVER () AS BIGINT) AS n,
-    CAST(sum(s) OVER () AS BIGINT) AS st,
-    CAST(sum(q) OVER () AS BIGINT) AS qt,
-    gsf.gs AS gs
-  FROM bydow CROSS JOIN gsf
-), f AS (
-  SELECT dow, n_days, s,
-    CAST(qt AS DOUBLE)
-      - CAST(st AS DOUBLE) * CAST(st AS DOUBLE)
-        / CAST(n AS DOUBLE) AS sst,
-    gs - CAST(st AS DOUBLE) * CAST(st AS DOUBLE)
-        / CAST(n AS DOUBLE) AS ssb
-  FROM t
-)
-SELECT dow, n_days,
-  round(CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE), 6) AS mean_volume,
-  round(ssb, 6) AS ssb,
-  round(sst, 6) AS sst,
-  round(CASE WHEN sst > 0 THEN ssb / sst ELSE 0.0 END, 6)
-    AS seasonal_strength
-FROM f
-"""
-
-QUERIES["seasonal_strength"] = q_seasonal_strength
-_RAW_ORACLES["seasonal_strength"] = SQL_SEASONAL_STRENGTH
-
-
 _CQ_RULES = [
     ("len120", "n_chars >= 120"),
     ("words20",
@@ -18352,91 +16433,6 @@ SQL_COCHRAN_Q = _cq_sql()
 QUERIES["cochran_q"] = q_cochran_q
 _RAW_ORACLES["cochran_q"] = SQL_COCHRAN_Q
 
-
-def q_capture_recapture(spark, sf_dir):
-    """Chapman-corrected Lincoln-Petersen capture-recapture estimate
-    of the active-user population from the month's two halves
-    (Lincoln 1930; Petersen 1896; Chapman 1951 — the two-sample
-    mark-recapture estimator N = (n1+1)(n2+1)/(m+1) - 1 with
-    Seber 1970's variance; in a data platform this is the closed-
-    population audit: if the estimate from two observation windows
-    undershoots the true distinct count, user identity is CHURNING
-    under you — cookies resetting, ids rotating — exactly what
-    breaks retention features). Capture 1 = users seen on days
-    1-15, capture 2 = days 16+, marks m = users in both; all exact
-    longs from ONE user-level aggregate; estimate, variance and the
-    relative error vs the TRUE distinct count (observable here, the
-    audit's point) are fixed expression trees. 2 shuffles at any
-    corpus size."""
-    ev = _events(spark, sf_dir).select(
-        "user_id",
-        (F.dayofmonth(F.col("ts").cast("timestamp")) <= 15)
-        .alias("__h1"),
-    )
-    peru = ev.groupBy("user_id").agg(
-        F.max(F.when(F.col("__h1"), 1).otherwise(0)).alias("__in1"),
-        F.max(F.when(~F.col("__h1"), 1).otherwise(0)).alias("__in2"),
-    )
-    one = peru.agg(
-        F.count(F.lit(1)).cast("long").alias("n_true"),
-        F.sum("__in1").cast("long").alias("n1"),
-        F.sum("__in2").cast("long").alias("n2"),
-        F.sum(F.col("__in1") * F.col("__in2")).cast("long").alias("m"),
-    )
-    n1 = F.col("n1").cast("double")
-    n2 = F.col("n2").cast("double")
-    m = F.col("m").cast("double")
-    est = (n1 + 1) * (n2 + 1) / (m + 1) - F.lit(1.0)
-    var = (
-        (n1 + 1) * (n2 + 1) * (n1 - m) * (n2 - m)
-        / ((m + 1) * (m + 1) * (m + 2))
-    )
-    return one.select(
-        "n_true", "n1", "n2", "m",
-        _r6(est).alias("chapman_estimate"),
-        _r6(F.sqrt(var)).alias("se"),
-        _r6(
-            (est - F.col("n_true").cast("double"))
-            / F.col("n_true").cast("double")
-        ).alias("rel_err"),
-    )
-
-
-SQL_CAPTURE_RECAPTURE = """
-WITH peru AS (
-  SELECT user_id,
-    max(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS in1,
-    max(CASE WHEN day(ts) > 15 THEN 1 ELSE 0 END) AS in2
-  FROM events GROUP BY user_id
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_true,
-    CAST(sum(in1) AS BIGINT) AS n1,
-    CAST(sum(in2) AS BIGINT) AS n2,
-    CAST(sum(in1 * in2) AS BIGINT) AS m
-  FROM peru
-), f AS (
-  SELECT n_true, n1, n2, m,
-    (CAST(n1 AS DOUBLE) + 1) * (CAST(n2 AS DOUBLE) + 1)
-      / (CAST(m AS DOUBLE) + 1) - 1.0 AS est,
-    (CAST(n1 AS DOUBLE) + 1) * (CAST(n2 AS DOUBLE) + 1)
-      * (CAST(n1 AS DOUBLE) - CAST(m AS DOUBLE))
-      * (CAST(n2 AS DOUBLE) - CAST(m AS DOUBLE))
-      / ((CAST(m AS DOUBLE) + 1) * (CAST(m AS DOUBLE) + 1)
-         * (CAST(m AS DOUBLE) + 2)) AS var
-  FROM one
-)
-SELECT n_true, n1, n2, m,
-  round(est, 6) AS chapman_estimate,
-  round(sqrt(var), 6) AS se,
-  round((est - CAST(n_true AS DOUBLE)) / CAST(n_true AS DOUBLE), 6)
-    AS rel_err
-FROM f
-"""
-
-QUERIES["capture_recapture"] = q_capture_recapture
-_RAW_ORACLES["capture_recapture"] = SQL_CAPTURE_RECAPTURE
-
-
 def q_odds_ratio_ci(spark, sf_dir):
     """Weekend x purchase odds ratio with the Woolf 95% log-interval
     (Woolf Ann. Hum. Genet. 1955; Bland & Altman BMJ 2000 — THE 2x2
@@ -18522,186 +16518,6 @@ FROM f
 
 QUERIES["odds_ratio_ci"] = q_odds_ratio_ci
 _RAW_ORACLES["odds_ratio_ci"] = SQL_ODDS_RATIO_CI
-
-
-def q_kpss_test(spark, sf_dir):
-    """KPSS level-stationarity test of daily event volume
-    (Kwiatkowski, Phillips, Schmidt & Shin J. Econometrics 1992 —
-    the null-REVERSED complement to dickey_fuller: ADF's null is a
-    unit root, KPSS's null is stationarity, and the 2x2 of their
-    verdicts is the standard pre-check before trusting any
-    rolling-mean feature or CI that assumes mean reversion).
-    Daily counts are exact longs from ONE corpus aggregate; the
-    demeaned residual numerators n*y_t - X and the partial-sum
-    numerators n*cumY_t - t*X are exact longs (< 2^53 at any
-    realistic month volume) so every double is ONE exact-integer
-    division; eta = sum((S_t/n)^2) / s2_lrv with the Bartlett
-    long-run variance s2 = g0/n + sum_j 2*(1-j/(l+1))*g_j/n at
-    Schwert's l = floor(4*(n/100)^(1/4)) computed via the
-    IEEE-exact sqrt(sqrt(.)) so no pow() crosses engines; the
-    autocovariance folds g_j run t-ascending over the <=31-element
-    day arrays on BOTH engines (sequence/element_at in Spark,
-    range/list indexing in DuckDB) so the float sequences are
-    identical. Reject at the 5% level-stationarity critical value
-    0.463 (KPSS 1992 Table 1, pinned literal). 2 shuffles at any
-    corpus size: the day aggregate and the tiny single-partition
-    day window."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    wcum = Window.orderBy("__day").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    day = day.select(
-        "__day",
-        "__y",
-        F.sum("__y").over(wcum).cast("long").alias("__cy"),
-        F.row_number().over(Window.orderBy("__day"))
-        .cast("long").alias("__t"),
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__X"),
-        F.array_sort(
-            F.collect_list(F.struct("__t", "__y", "__cy"))
-        ).alias("__a"),
-    )
-    one = one.withColumn(
-        "__e",
-        F.expr(
-            "transform(__a, s -> cast(n_days * s.__y - __X as double)"
-            " / cast(n_days as double))"
-        ),
-    ).withColumn(
-        "__s",
-        F.expr(
-            "transform(__a, s -> cast(n_days * s.__cy - s.__t * __X"
-            " as double) / cast(n_days as double))"
-        ),
-    ).withColumn(
-        "__l",
-        F.expr(
-            "cast(floor(4.0D * sqrt(sqrt(cast(n_days as double)"
-            " / 100.0D))) as long)"
-        ),
-    )
-    one = one.withColumn(
-        "__g0",
-        F.expr(
-            "aggregate(transform(__e, x -> x * x), 0.0D,"
-            " (acc, x) -> acc + x)"
-        ),
-    ).withColumn(
-        "__ss",
-        F.expr(
-            "aggregate(transform(__s, x -> x * x), 0.0D,"
-            " (acc, x) -> acc + x)"
-        ),
-    )
-    for j in (1, 2, 3, 4):
-        one = one.withColumn(
-            f"__g{j}",
-            F.expr(
-                f"CASE WHEN n_days > {j} THEN"
-                f" aggregate(transform(sequence({j + 1}L, n_days),"
-                f" i -> element_at(__e, cast(i as int))"
-                f" * element_at(__e, cast(i - {j} as int))), 0.0D,"
-                f" (acc, x) -> acc + x) ELSE 0.0D END"
-            ),
-        )
-    nD = F.col("n_days").cast("double")
-    lD = F.col("__l").cast("double")
-    s2 = F.col("__g0") / nD
-    for j in (1, 2, 3, 4):
-        s2 = s2 + F.when(
-            F.col("__l") >= j,
-            F.lit(2.0) * (F.lit(1.0) - F.lit(float(j)) / (lD + 1.0))
-            * F.col(f"__g{j}") / nD,
-        ).otherwise(F.lit(0.0))
-    one = one.withColumn("__s2", s2)
-    stat = F.col("__ss") / (nD * F.col("__s2"))
-    return one.select(
-        "n_days",
-        F.col("__l").alias("lag_l"),
-        _r6(F.col("__g0") / nD).alias("s2_short"),
-        _r6("__s2").alias("s2_long"),
-        _r6(stat).alias("kpss_stat"),
-        (stat > F.lit(0.463)).alias("reject_5pct"),
-    )
-
-
-SQL_KPSS_TEST = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), cum AS (
-  SELECT day, y,
-    CAST(sum(y) OVER (ORDER BY day) AS BIGINT) AS cy,
-    CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
-  FROM day
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_days,
-    CAST(sum(y) AS BIGINT) AS X,
-    list(y ORDER BY t) AS ye,
-    list(cy ORDER BY t) AS cye
-  FROM cum
-), arr AS (
-  SELECT n_days, X,
-    list_transform(range(1, n_days + 1),
-      i -> CAST(n_days * ye[i] - X AS DOUBLE)
-           / CAST(n_days AS DOUBLE)) AS e,
-    list_transform(range(1, n_days + 1),
-      t -> CAST(n_days * cye[t] - t * X AS DOUBLE)
-           / CAST(n_days AS DOUBLE)) AS s,
-    CAST(floor(CAST(4.0 AS DOUBLE)
-      * sqrt(sqrt(CAST(n_days AS DOUBLE) / CAST(100.0 AS DOUBLE))))
-      AS BIGINT) AS l
-  FROM one
-), fold AS (
-  SELECT n_days, l,
-    list_sum(list_transform(e, x -> x * x)) AS g0,
-    list_sum(list_transform(s, x -> x * x)) AS ss,
-    CASE WHEN n_days > 1 THEN list_sum(list_transform(
-      range(2, n_days + 1), i -> e[i] * e[i - 1]))
-      ELSE CAST(0.0 AS DOUBLE) END AS g1,
-    CASE WHEN n_days > 2 THEN list_sum(list_transform(
-      range(3, n_days + 1), i -> e[i] * e[i - 2]))
-      ELSE CAST(0.0 AS DOUBLE) END AS g2,
-    CASE WHEN n_days > 3 THEN list_sum(list_transform(
-      range(4, n_days + 1), i -> e[i] * e[i - 3]))
-      ELSE CAST(0.0 AS DOUBLE) END AS g3,
-    CASE WHEN n_days > 4 THEN list_sum(list_transform(
-      range(5, n_days + 1), i -> e[i] * e[i - 4]))
-      ELSE CAST(0.0 AS DOUBLE) END AS g4
-  FROM arr
-), f AS (
-  SELECT n_days, l, g0, ss,
-    g0 / CAST(n_days AS DOUBLE)
-    + (CASE WHEN l >= 1 THEN 2.0 * (1.0 - 1.0 / (CAST(l AS DOUBLE)
-         + 1.0)) * g1 / CAST(n_days AS DOUBLE) ELSE 0.0 END)
-    + (CASE WHEN l >= 2 THEN 2.0 * (1.0 - 2.0 / (CAST(l AS DOUBLE)
-         + 1.0)) * g2 / CAST(n_days AS DOUBLE) ELSE 0.0 END)
-    + (CASE WHEN l >= 3 THEN 2.0 * (1.0 - 3.0 / (CAST(l AS DOUBLE)
-         + 1.0)) * g3 / CAST(n_days AS DOUBLE) ELSE 0.0 END)
-    + (CASE WHEN l >= 4 THEN 2.0 * (1.0 - 4.0 / (CAST(l AS DOUBLE)
-         + 1.0)) * g4 / CAST(n_days AS DOUBLE) ELSE 0.0 END)
-    AS s2
-  FROM fold
-)
-SELECT n_days, l AS lag_l,
-  round(g0 / CAST(n_days AS DOUBLE), 6) AS s2_short,
-  round(s2, 6) AS s2_long,
-  round(ss / (CAST(n_days AS DOUBLE) * s2), 6) AS kpss_stat,
-  (ss / (CAST(n_days AS DOUBLE) * s2) > 0.463) AS reject_5pct
-FROM f
-"""
-
-QUERIES["kpss_test"] = q_kpss_test
-_RAW_ORACLES["kpss_test"] = SQL_KPSS_TEST
-
 
 def q_mantel_haenszel(spark, sf_dir):
     """Mantel-Haenszel pooled odds ratio across day-of-week strata
@@ -18891,564 +16707,12 @@ FROM f
 QUERIES["mantel_haenszel"] = q_mantel_haenszel
 _RAW_ORACLES["mantel_haenszel"] = SQL_MANTEL_HAENSZEL
 
-
-def q_variance_ratio(spark, sf_dir):
-    """Lo-MacKinlay variance-ratio test of the cumulative event-count
-    path at horizons q in {2, 3, 5} (Lo & MacKinlay Rev. Fin. Studies
-    1988 — THE random-walk diagnostic: if daily increments are iid
-    the q-period variance is exactly q times the 1-period variance,
-    VR < 1 flags mean reversion and VR > 1 flags trending/momentum;
-    for a data platform this says whether tomorrow's volume forecast
-    may simply scale today's noise or needs an AR term — the
-    horizon-sweep companion to value_acf/hurst_variance_plot).
-    Daily counts are exact longs from ONE corpus aggregate; with
-    x_0 = 0 the overlapping q-period deviations carry exact-integer
-    numerators n*(x_t - x_{t-q}) - q*X so every double is one exact
-    division; folds run t-ascending over the <=31-element day arrays
-    on BOTH engines; the unbiased-overlapping denominator
-    m = q*(n-q+1)*(1-q/n) and the homoskedastic
-    z = (VR-1)/sqrt(2(2q-1)(q-1)/(3qn)) are fixed expression trees
-    (LM 1988 eqs. 12, 14). The persisted 1-row moment frame fans out
-    to the 3 q-rows (cached-branch). 2 shuffles at any corpus
-    size."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    wcum = Window.orderBy("__day").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    day = day.select(
-        "__day",
-        "__y",
-        F.sum("__y").over(wcum).cast("long").alias("__cy"),
-        F.row_number().over(Window.orderBy("__day"))
-        .cast("long").alias("__t"),
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__X"),
-        F.array_sort(
-            F.collect_list(F.struct("__t", "__y", "__cy"))
-        ).alias("__a"),
-    )
-    one = one.withColumn(
-        "__cyarr", F.expr("transform(__a, s -> s.__cy)")
-    ).withColumn(
-        "__s1",
-        F.expr(
-            "aggregate(transform(__a, s -> (cast(n_days * s.__y - __X"
-            " as double) / cast(n_days as double))"
-            " * (cast(n_days * s.__y - __X as double)"
-            " / cast(n_days as double))), 0.0D, (acc, x) -> acc + x)"
-            " / cast(n_days - 1 as double)"
-        ),
-    )
-    one = scratch_persist(one)
-    outs = []
-    for q in (2, 3, 5):
-        sq = (
-            f"aggregate(transform(sequence({q}L, n_days), t ->"
-            f" (cast(n_days * (element_at(__cyarr, cast(t as int))"
-            f" - (CASE WHEN t - {q} >= 1 THEN element_at(__cyarr,"
-            f" cast(t - {q} as int)) ELSE 0L END)) - {q} * __X"
-            f" as double) / cast(n_days as double))"
-            f" * (cast(n_days * (element_at(__cyarr, cast(t as int))"
-            f" - (CASE WHEN t - {q} >= 1 THEN element_at(__cyarr,"
-            f" cast(t - {q} as int)) ELSE 0L END)) - {q} * __X"
-            f" as double) / cast(n_days as double))), 0.0D,"
-            f" (acc, x) -> acc + x)"
-            f" / (cast({q} as double) * cast(n_days - {q} + 1 as double)"
-            f" * (cast(1 as double) - cast({q} as double)"
-            f" / cast(n_days as double)))"
-        )
-        vr = f"({sq}) / __s1"
-        z = (
-            f"(({vr}) - cast(1 as double))"
-            f" / sqrt(cast(2 * (2 * {q} - 1) * ({q} - 1) as double)"
-            f" / cast(3 * {q} as double) / cast(n_days as double))"
-        )
-        outs.append(
-            one.filter(F.col("n_days") > q).selectExpr(
-                f"cast({q} as long) AS q",
-                "n_days",
-                f"{vr} AS __vr",
-                f"{z} AS __z",
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res.select(
-        "q",
-        "n_days",
-        _r6("__vr").alias("vr"),
-        _r6("__z").alias("z_stat"),
-        (F.abs(F.col("__z")) > F.lit(1.96)).alias("reject_5pct"),
-    )
-
-
-SQL_VARIANCE_RATIO = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), cum AS (
-  SELECT day, y,
-    CAST(sum(y) OVER (ORDER BY day) AS BIGINT) AS cy,
-    CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
-  FROM day
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_days,
-    CAST(sum(y) AS BIGINT) AS X,
-    list(y ORDER BY t) AS ye,
-    list(cy ORDER BY t) AS cye
-  FROM cum
-), base AS (
-  SELECT n_days, X, cye,
-    list_sum(list_transform(range(1, n_days + 1),
-      i -> (CAST(n_days * ye[i] - X AS DOUBLE)
-            / CAST(n_days AS DOUBLE))
-         * (CAST(n_days * ye[i] - X AS DOUBLE)
-            / CAST(n_days AS DOUBLE))))
-      / CAST(n_days - 1 AS DOUBLE) AS s1
-  FROM one
-), qs AS (
-  SELECT CAST(q AS BIGINT) AS q FROM (VALUES (2), (3), (5)) v(q)
-), f AS (
-  SELECT qs.q, b.n_days,
-    list_sum(list_transform(range(qs.q, b.n_days + 1),
-      t -> (CAST(b.n_days * (b.cye[t] - (CASE WHEN t - qs.q >= 1
-              THEN b.cye[t - qs.q] ELSE CAST(0 AS BIGINT) END))
-            - qs.q * b.X AS DOUBLE) / CAST(b.n_days AS DOUBLE))
-         * (CAST(b.n_days * (b.cye[t] - (CASE WHEN t - qs.q >= 1
-              THEN b.cye[t - qs.q] ELSE CAST(0 AS BIGINT) END))
-            - qs.q * b.X AS DOUBLE) / CAST(b.n_days AS DOUBLE))))
-      / (CAST(qs.q AS DOUBLE) * CAST(b.n_days - qs.q + 1 AS DOUBLE)
-         * (CAST(1 AS DOUBLE) - CAST(qs.q AS DOUBLE)
-            / CAST(b.n_days AS DOUBLE)))
-      / b.s1 AS vr
-  FROM base b, qs
-  WHERE b.n_days > qs.q
-), z AS (
-  SELECT q, n_days, vr,
-    (vr - CAST(1 AS DOUBLE))
-    / sqrt(CAST(2 * (2 * q - 1) * (q - 1) AS DOUBLE)
-           / CAST(3 * q AS DOUBLE) / CAST(n_days AS DOUBLE)) AS zs
-  FROM f
-)
-SELECT q, n_days,
-  round(vr, 6) AS vr,
-  round(zs, 6) AS z_stat,
-  (abs(zs) > 1.96) AS reject_5pct
-FROM z
-"""
-
-QUERIES["variance_ratio"] = q_variance_ratio
-_RAW_ORACLES["variance_ratio"] = SQL_VARIANCE_RATIO
-
-
-def _granger_frags(nu, Sz, Sz2, Sol, Sol2, Solz, Scl, Scl2, Sclz,
-                   Solcl):
-    """Shared SQL fragments for one Granger direction — executed
-    VERBATIM by both engines (the bradley_terry convention) so every
-    float op happens in the same order. All inputs are names of
-    exact-integer moment columns; outputs are expression strings for
-    the restricted/unrestricted SSEs, the lag coefficients and the
-    F statistic. Cramer's rule on the 3x3 normal equations with
-    every moment cast to double FIRST (minor products overflow
-    int64); SSE via the moment identity sum(z^2) - a*Sz - b*Solz
-    - c*Sclz, so no second pass over the data is needed."""
-    d = {k: f"cast({v} as double)" for k, v in dict(
-        nu=nu, Sz=Sz, Sz2=Sz2, Sol=Sol, Sol2=Sol2, Solz=Solz,
-        Scl=Scl, Scl2=Scl2, Sclz=Sclz, Solcl=Solcl,
-    ).items()}
-    brn = f"({d['nu']} * {d['Solz']} - {d['Sol']} * {d['Sz']})"
-    brd = f"({d['nu']} * {d['Sol2']} - {d['Sol']} * {d['Sol']})"
-    br = f"({brn} / {brd})"
-    ar = f"(({d['Sz']} - {br} * {d['Sol']}) / {d['nu']})"
-    sse_r = (
-        f"({d['Sz2']} - {ar} * {d['Sz']} - {br} * {d['Solz']})"
-    )
-    det = (
-        f"({d['nu']} * ({d['Sol2']} * {d['Scl2']}"
-        f" - {d['Solcl']} * {d['Solcl']})"
-        f" - {d['Sol']} * ({d['Sol']} * {d['Scl2']}"
-        f" - {d['Solcl']} * {d['Scl']})"
-        f" + {d['Scl']} * ({d['Sol']} * {d['Solcl']}"
-        f" - {d['Sol2']} * {d['Scl']}))"
-    )
-    da = (
-        f"({d['Sz']} * ({d['Sol2']} * {d['Scl2']}"
-        f" - {d['Solcl']} * {d['Solcl']})"
-        f" - {d['Sol']} * ({d['Solz']} * {d['Scl2']}"
-        f" - {d['Solcl']} * {d['Sclz']})"
-        f" + {d['Scl']} * ({d['Solz']} * {d['Solcl']}"
-        f" - {d['Sol2']} * {d['Sclz']}))"
-    )
-    db = (
-        f"({d['nu']} * ({d['Solz']} * {d['Scl2']}"
-        f" - {d['Solcl']} * {d['Sclz']})"
-        f" - {d['Sz']} * ({d['Sol']} * {d['Scl2']}"
-        f" - {d['Solcl']} * {d['Scl']})"
-        f" + {d['Scl']} * ({d['Sol']} * {d['Sclz']}"
-        f" - {d['Solz']} * {d['Scl']}))"
-    )
-    dc = (
-        f"({d['nu']} * ({d['Sol2']} * {d['Sclz']}"
-        f" - {d['Solz']} * {d['Solcl']})"
-        f" - {d['Sol']} * ({d['Sol']} * {d['Sclz']}"
-        f" - {d['Solz']} * {d['Scl']})"
-        f" + {d['Sz']} * ({d['Sol']} * {d['Solcl']}"
-        f" - {d['Sol2']} * {d['Scl']}))"
-    )
-    a = f"({da} / {det})"
-    b = f"({db} / {det})"
-    c = f"({dc} / {det})"
-    sse_u = (
-        f"({d['Sz2']} - {a} * {d['Sz']} - {b} * {d['Solz']}"
-        f" - {c} * {d['Sclz']})"
-    )
-    ok = f"(abs({det}) > cast(0 as double) and abs({brd}) > cast(0 as double))"
-    f_stat = (
-        f"(({sse_r} - {sse_u}) * ({d['nu']} - cast(3 as double))"
-        f" / {sse_u})"
-    )
-    return {
-        "ok": ok, "b_own": b, "b_cross": c,
-        "sse_r": sse_r, "sse_u": sse_u, "f": f_stat,
-    }
-
-
-_GRANGER_XY = _granger_frags(
-    "nu", "syt", "syt2", "syl", "syl2", "syly",
-    "sxl", "sxl2", "sxly", "sylxl",
-)
-_GRANGER_YX = _granger_frags(
-    "nu", "sxt", "sxt2", "sxl", "sxl2", "sxlx",
-    "syl", "syl2", "sylx", "sylxl",
-)
-
-
-def q_granger_causality(spark, sf_dir):
-    """Bivariate lag-1 Granger-causality F-tests between daily click
-    and daily purchase volume, both directions (Granger Econometrica
-    1969 — 'does yesterday's click volume improve today's purchase
-    forecast beyond purchases' own history?': the lead-lag AUDIT
-    behind cross-metric alerting and feature selection for
-    next-day-volume models; the regression companion to lagged_corr,
-    which reports raw cross-correlation without conditioning on the
-    own lag). Daily type counts are exact longs from ONE corpus
-    aggregate; the 14 regression moments over the <=30 lagged days
-    are exact-integer sums (order-free); the restricted (own-lag)
-    and unrestricted (own+cross-lag) OLS fits come from Cramer's
-    rule on the 3x3 normal equations with every moment cast to
-    double first, and both SSEs use the moment identity
-    sum(z^2) - a*Sz - b*Solz - c*Sclz — so the whole test is a fixed
-    expression tree executed VERBATIM by both engines (shared
-    generated fragments, the bradley_terry convention) and no
-    second data pass exists. F compared to the pinned 4.21
-    (the F(1, 27) 5% point for a 31-day month — approximate by one
-    df if days are missing, documented). The persisted 1-row moment
-    frame fans out to the 2 direction rows (cached-branch).
-    2 shuffles at any corpus size."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).alias("__day"),
-        "event_type",
-    )
-    day = ev.groupBy("__day").agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1)
-              .otherwise(0)).cast("long").alias("__p"),
-        F.sum(F.when(F.col("event_type") == "click", 1)
-              .otherwise(0)).cast("long").alias("__c"),
-    )
-    wlag = Window.orderBy("__day")
-    lagf = day.select(
-        F.col("__p").alias("__yt"),
-        F.col("__c").alias("__xt"),
-        F.lag("__p").over(wlag).alias("__yl"),
-        F.lag("__c").over(wlag).alias("__xl"),
-    ).filter(F.col("__yl").isNotNull())
-    one = lagf.agg(
-        F.count(F.lit(1)).cast("long").alias("nu"),
-        F.sum("__yt").cast("long").alias("syt"),
-        F.sum("__xt").cast("long").alias("sxt"),
-        F.sum("__yl").cast("long").alias("syl"),
-        F.sum("__xl").cast("long").alias("sxl"),
-        F.sum(F.col("__yt") * F.col("__yt")).cast("long").alias("syt2"),
-        F.sum(F.col("__xt") * F.col("__xt")).cast("long").alias("sxt2"),
-        F.sum(F.col("__yl") * F.col("__yl")).cast("long").alias("syl2"),
-        F.sum(F.col("__xl") * F.col("__xl")).cast("long").alias("sxl2"),
-        F.sum(F.col("__yl") * F.col("__xl")).cast("long").alias("sylxl"),
-        F.sum(F.col("__yl") * F.col("__yt")).cast("long").alias("syly"),
-        F.sum(F.col("__xl") * F.col("__yt")).cast("long").alias("sxly"),
-        F.sum(F.col("__xl") * F.col("__xt")).cast("long").alias("sxlx"),
-        F.sum(F.col("__yl") * F.col("__xt")).cast("long").alias("sylx"),
-    )
-    one = scratch_persist(one)
-    outs = []
-    for label, fr in (
-        ("clicks->purchases", _GRANGER_XY),
-        ("purchases->clicks", _GRANGER_YX),
-    ):
-        outs.append(one.selectExpr(
-            f"'{label}' AS direction",
-            "nu AS n_used",
-            f"CASE WHEN {fr['ok']} THEN {fr['b_own']}"
-            " ELSE NULL END AS __bo",
-            f"CASE WHEN {fr['ok']} THEN {fr['b_cross']}"
-            " ELSE NULL END AS __bc",
-            f"CASE WHEN {fr['ok']} THEN {fr['sse_r']}"
-            " ELSE NULL END AS __sr",
-            f"CASE WHEN {fr['ok']} THEN {fr['sse_u']}"
-            " ELSE NULL END AS __su",
-            f"CASE WHEN {fr['ok']} THEN {fr['f']}"
-            " ELSE NULL END AS __f",
-        ))
-    res = outs[0].unionByName(outs[1])
-    return res.select(
-        "direction",
-        "n_used",
-        _r6("__bo").alias("b_own_lag"),
-        _r6("__bc").alias("b_cross_lag"),
-        _r6("__sr").alias("sse_restricted"),
-        _r6("__su").alias("sse_unrestricted"),
-        _r6("__f").alias("f_stat"),
-        (F.col("__f") > F.lit(4.21)).alias("reject_approx_5pct"),
-    )
-
-
-_SQL_GRANGER_DIR = """
-  SELECT '{label}' AS direction, nu,
-    CASE WHEN {ok} THEN {b_own} ELSE NULL END AS bo,
-    CASE WHEN {ok} THEN {b_cross} ELSE NULL END AS bc,
-    CASE WHEN {ok} THEN {sse_r} ELSE NULL END AS sr,
-    CASE WHEN {ok} THEN {sse_u} ELSE NULL END AS su,
-    CASE WHEN {ok} THEN {f} ELSE NULL END AS ff
-  FROM one
-"""
-
-SQL_GRANGER_CAUSALITY = """
-WITH day AS (
-  SELECT day(ts) AS day,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-      AS BIGINT) AS p,
-    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-      AS BIGINT) AS c
-  FROM events GROUP BY day(ts)
-), lagf AS (
-  SELECT p AS yt, c AS xt,
-    lag(p) OVER (ORDER BY day) AS yl,
-    lag(c) OVER (ORDER BY day) AS xl
-  FROM day
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS nu,
-    CAST(sum(yt) AS BIGINT) AS syt,
-    CAST(sum(xt) AS BIGINT) AS sxt,
-    CAST(sum(yl) AS BIGINT) AS syl,
-    CAST(sum(xl) AS BIGINT) AS sxl,
-    CAST(sum(yt * yt) AS BIGINT) AS syt2,
-    CAST(sum(xt * xt) AS BIGINT) AS sxt2,
-    CAST(sum(yl * yl) AS BIGINT) AS syl2,
-    CAST(sum(xl * xl) AS BIGINT) AS sxl2,
-    CAST(sum(yl * xl) AS BIGINT) AS sylxl,
-    CAST(sum(yl * yt) AS BIGINT) AS syly,
-    CAST(sum(xl * yt) AS BIGINT) AS sxly,
-    CAST(sum(xl * xt) AS BIGINT) AS sxlx,
-    CAST(sum(yl * xt) AS BIGINT) AS sylx
-  FROM lagf WHERE yl IS NOT NULL
-), u AS (
-{dir_xy}
-  UNION ALL
-{dir_yx}
-)
-SELECT direction, nu AS n_used,
-  round(bo, 6) AS b_own_lag,
-  round(bc, 6) AS b_cross_lag,
-  round(sr, 6) AS sse_restricted,
-  round(su, 6) AS sse_unrestricted,
-  round(ff, 6) AS f_stat,
-  (ff > 4.21) AS reject_approx_5pct
-FROM u
-""".format(
-    dir_xy=_SQL_GRANGER_DIR.format(
-        label="clicks->purchases",
-        ok=_GRANGER_XY["ok"], b_own=_GRANGER_XY["b_own"],
-        b_cross=_GRANGER_XY["b_cross"], sse_r=_GRANGER_XY["sse_r"],
-        sse_u=_GRANGER_XY["sse_u"], f=_GRANGER_XY["f"],
-    ),
-    dir_yx=_SQL_GRANGER_DIR.format(
-        label="purchases->clicks",
-        ok=_GRANGER_YX["ok"], b_own=_GRANGER_YX["b_own"],
-        b_cross=_GRANGER_YX["b_cross"], sse_r=_GRANGER_YX["sse_r"],
-        sse_u=_GRANGER_YX["sse_u"], f=_GRANGER_YX["f"],
-    ),
-)
-
-QUERIES["granger_causality"] = q_granger_causality
-_RAW_ORACLES["granger_causality"] = SQL_GRANGER_CAUSALITY
-
-
-def q_durbin_watson(spark, sf_dir):
-    """Durbin-Watson test for lag-1 autocorrelation in the residuals
-    of the daily-volume-on-time OLS trend (Durbin & Watson Biometrika
-    1950/51 — the classic 'is the trend line lying?' diagnostic: after
-    removing a linear trend from daily event counts, DW ~ 2 says the
-    leftover noise is white, DW << 2 says positive serial correlation
-    (the trend's standard errors are overstated and a naive
-    capacity-planning extrapolation will overshoot), DW >> 2 says
-    negative/oscillating residuals). Daily
-    counts are exact longs from ONE corpus aggregate; with
-    t = 1..n the time moments St = n(n+1)/2 and St2 = n(n+1)(2n+1)/6
-    are closed-form exact longs, so the scaled residuals
-    E_t = n*D*y_t - D*Sy + Nb*St - n*Nb*t (D = n*St2 - St^2,
-    Nb = n*Sty - St*Sy) are EXACT INTEGERS — the common factor n*D
-    cancels in DW = sum (E_t - E_{t-1})^2 / sum E_t^2, so every
-    double is one exact-long cast followed by one multiply, folded
-    t-ascending on BOTH engines. Slope = Nb/D is one exact division.
-    Savin & White (Econometrica 1977) 5% bounds at n = 30, k = 1
-    pinned: dL = 1.352, dU = 1.489 (the 30-day test frame). 2
-    shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__Sy"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__y"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn("__yarr", F.expr("transform(__a, s -> s.__y)"))
-        .withColumn("__St", F.expr("n_days * (n_days + 1) div 2"))
-        .withColumn(
-            "__St2",
-            F.expr("n_days * (n_days + 1) * (2 * n_days + 1) div 6"),
-        )
-        .withColumn(
-            "__Sty",
-            F.expr(
-                "aggregate(sequence(1L, n_days), 0L, (acc, t) ->"
-                " acc + t * element_at(__yarr, cast(t as int)))"
-            ),
-        )
-    )
-    one = one.withColumn(
-        "__D", F.expr("n_days * __St2 - __St * __St")
-    ).withColumn("__Nb", F.expr("n_days * __Sty - __St * __Sy"))
-    one = one.withColumn(
-        "__earr",
-        F.expr(
-            "transform(sequence(1L, n_days), t ->"
-            " n_days * __D * element_at(__yarr, cast(t as int))"
-            " - __D * __Sy + __Nb * __St - n_days * __Nb * t)"
-        ),
-    )
-    one = one.withColumn(
-        "__num",
-        F.expr(
-            "aggregate(sequence(2L, n_days), 0.0D, (acc, t) ->"
-            " acc + cast(element_at(__earr, cast(t as int))"
-            " - element_at(__earr, cast(t - 1 as int)) as double)"
-            " * cast(element_at(__earr, cast(t as int))"
-            " - element_at(__earr, cast(t - 1 as int)) as double))"
-        ),
-    ).withColumn(
-        "__den",
-        F.expr(
-            "aggregate(sequence(1L, n_days), 0.0D, (acc, t) ->"
-            " acc + cast(element_at(__earr, cast(t as int)) as double)"
-            " * cast(element_at(__earr, cast(t as int)) as double))"
-        ),
-    )
-    one = one.filter(
-        (F.col("n_days") > 2)
-        & (F.col("__D") > 0)
-        & (F.col("__den") > 0.0)
-    )
-    dw = F.col("__num") / F.col("__den")
-    return one.select(
-        "n_days",
-        _r6(F.col("__Nb").cast("double") / F.col("__D").cast("double"))
-        .alias("slope_per_day"),
-        _r6(dw).alias("dw"),
-        _r6(F.lit(1.0) - dw / F.lit(2.0)).alias("rho_hat"),
-        F.when(dw < 1.352, F.lit("positive_autocorr"))
-        .when(dw > 2.648, F.lit("negative_autocorr"))
-        .when((dw >= 1.489) & (dw <= 2.511), F.lit("no_autocorr"))
-        .otherwise(F.lit("inconclusive"))
-        .alias("verdict"),
-    )
-
-
-SQL_DURBIN_WATSON = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS Sy,
-    list(y ORDER BY day) AS yarr
-  FROM day
-), mo AS (
-  SELECT n, Sy, yarr,
-    n * (n + 1) // 2 AS St,
-    n * (n + 1) * (2 * n + 1) // 6 AS St2,
-    list_sum(list_transform(range(1, n + 1),
-      t -> t * yarr[t])) AS Sty
-  FROM one
-), dd AS (
-  SELECT n, Sy, yarr, St, Sty,
-    n * St2 - St * St AS D,
-    n * Sty - St * Sy AS Nb
-  FROM mo
-), ea AS (
-  SELECT n, D, Nb,
-    list_transform(range(1, n + 1),
-      t -> n * D * yarr[t] - D * Sy + Nb * St - n * Nb * t) AS earr
-  FROM dd
-), f AS (
-  SELECT n, D, Nb,
-    list_sum(list_transform(range(2, n + 1),
-      t -> CAST(earr[t] - earr[t - 1] AS DOUBLE)
-         * CAST(earr[t] - earr[t - 1] AS DOUBLE))) AS num,
-    list_sum(list_transform(range(1, n + 1),
-      t -> CAST(earr[t] AS DOUBLE)
-         * CAST(earr[t] AS DOUBLE))) AS den
-  FROM ea
-)
-SELECT n AS n_days,
-  round(CAST(Nb AS DOUBLE) / CAST(D AS DOUBLE), 6) AS slope_per_day,
-  round(num / den, 6) AS dw,
-  round(1.0 - num / den / 2.0, 6) AS rho_hat,
-  CASE WHEN num / den < 1.352 THEN 'positive_autocorr'
-       WHEN num / den > 2.648 THEN 'negative_autocorr'
-       WHEN num / den >= 1.489 AND num / den <= 2.511
-         THEN 'no_autocorr'
-       ELSE 'inconclusive' END AS verdict
-FROM f WHERE n > 2 AND D > 0 AND den > 0
-"""
-
-QUERIES["durbin_watson"] = q_durbin_watson
-_RAW_ORACLES["durbin_watson"] = SQL_DURBIN_WATSON
-
-
 def q_bartlett_test(spark, sf_dir):
     """Bartlett's test of variance homogeneity for `value` across the
     5 event types (Bartlett Proc. R. Soc. A 1937 — the likelihood-
     ratio-based twin of levene_test: Levene is robust to
     non-normality, Bartlett is the more powerful parametric test when
-    jarque_bera clears the normality gate; running both is the
+    the values pass a normality check; running both is the
     textbook heteroskedasticity pre-check before pooling per-type
     value statistics into one scaler, cf. the fit in robust_scale).
     Values are exact 2-decimal cents (the derived_features idiom,
@@ -19585,441 +16849,6 @@ FROM f
 QUERIES["bartlett_test"] = q_bartlett_test
 _RAW_ORACLES["bartlett_test"] = SQL_BARTLETT_TEST
 
-
-def q_breusch_pagan(spark, sf_dir):
-    """Breusch-Pagan heteroskedasticity test (Koenker's studentized
-    form) on the residuals of the daily-volume-on-time OLS trend
-    (Breusch & Pagan Econometrica 1979; Koenker J. Econometrics 1981
-    — the VARIANCE companion to durbin_watson's autocorrelation
-    check: DW asks whether the trend's residuals are serially
-    correlated, BP asks whether their spread GROWS or SHRINKS with
-    time; either failure means the trend's standard errors — and any
-    capacity-planning band built from them — are wrong. Koenker's
-    form is the modern default because it drops BP's normality
-    assumption: LM = n * R^2 of the auxiliary regression of e_t^2 on
-    t). Reuses durbin_watson's exact-integer residual machinery:
-    daily counts y_t are exact longs from ONE corpus aggregate, the
-    time moments St/St2 are closed-form exact longs, and the scaled
-    residuals E_t = n*D*y_t - D*Sy + Nb*St - n*Nb*t are EXACT
-    INTEGERS; R^2 is scale-invariant so the auxiliary regression runs
-    on g_t = (cast E_t as double)^2 directly — each g_t is ONE
-    deterministic IEEE product of an exact-long cast with itself, and
-    the three auxiliary moments Sg/Stg/Sgg fold t-ascending on BOTH
-    engines. LM = n * (n*Stg - St*Sg)^2 / (D * (n*Sgg - Sg^2)) is a
-    fixed expression tree; chi2(1) 5% point 3.841 pinned. 2 shuffles
-    at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__Sy"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__y"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn("__yarr", F.expr("transform(__a, s -> s.__y)"))
-        .withColumn("__St", F.expr("n_days * (n_days + 1) div 2"))
-        .withColumn(
-            "__St2",
-            F.expr("n_days * (n_days + 1) * (2 * n_days + 1) div 6"),
-        )
-        .withColumn(
-            "__Sty",
-            F.expr(
-                "aggregate(sequence(1L, n_days), 0L, (acc, t) ->"
-                " acc + t * element_at(__yarr, cast(t as int)))"
-            ),
-        )
-    )
-    one = one.withColumn(
-        "__D", F.expr("n_days * __St2 - __St * __St")
-    ).withColumn("__Nb", F.expr("n_days * __Sty - __St * __Sy"))
-    one = one.withColumn(
-        "__garr",
-        F.expr(
-            "transform(sequence(1L, n_days), t ->"
-            " cast(n_days * __D * element_at(__yarr, cast(t as int))"
-            " - __D * __Sy + __Nb * __St - n_days * __Nb * t"
-            " as double))"
-        ),
-    )
-    one = (
-        one
-        .withColumn(
-            "__Sg",
-            F.expr(
-                "aggregate(sequence(1L, n_days), 0.0D, (acc, t) ->"
-                " acc + element_at(__garr, cast(t as int))"
-                " * element_at(__garr, cast(t as int)))"
-            ),
-        )
-        .withColumn(
-            "__Stg",
-            F.expr(
-                "aggregate(sequence(1L, n_days), 0.0D, (acc, t) ->"
-                " acc + cast(t as double)"
-                " * element_at(__garr, cast(t as int))"
-                " * element_at(__garr, cast(t as int)))"
-            ),
-        )
-        .withColumn(
-            "__Sgg",
-            F.expr(
-                "aggregate(sequence(1L, n_days), 0.0D, (acc, t) ->"
-                " acc + element_at(__garr, cast(t as int))"
-                " * element_at(__garr, cast(t as int))"
-                " * element_at(__garr, cast(t as int))"
-                " * element_at(__garr, cast(t as int)))"
-            ),
-        )
-    )
-    nd = F.col("n_days").cast("double")
-    sxy = nd * F.col("__Stg") - F.col("__St").cast("double") * F.col(
-        "__Sg"
-    )
-    sxx = F.col("__D").cast("double")
-    syy = nd * F.col("__Sgg") - F.col("__Sg") * F.col("__Sg")
-    one = one.filter(
-        (F.col("n_days") > 2) & (F.col("__D") > 0) & (syy > 0.0)
-    )
-    r2 = sxy * sxy / (sxx * syy)
-    lm = nd * r2
-    return one.select(
-        "n_days",
-        _r6(r2).alias("r2_aux"),
-        _r6(lm).alias("bp_lm"),
-        (lm > F.lit(3.841)).alias("reject_5pct"),
-        F.when(sxy > 0.0, F.lit("variance_increasing"))
-        .when(sxy < 0.0, F.lit("variance_decreasing"))
-        .otherwise(F.lit("flat"))
-        .alias("direction"),
-    )
-
-
-SQL_BREUSCH_PAGAN = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS Sy,
-    list(y ORDER BY day) AS yarr
-  FROM day
-), mo AS (
-  SELECT n, Sy, yarr,
-    n * (n + 1) // 2 AS St,
-    n * (n + 1) * (2 * n + 1) // 6 AS St2,
-    list_sum(list_transform(range(1, n + 1),
-      t -> t * yarr[t])) AS Sty
-  FROM one
-), dd AS (
-  SELECT n, Sy, yarr, St, St2,
-    n * St2 - St * St AS D,
-    n * Sty - St * Sy AS Nb
-  FROM mo
-), ga AS (
-  SELECT n, St, D,
-    list_transform(range(1, n + 1),
-      t -> CAST(n * D * yarr[t] - D * Sy + Nb * St - n * Nb * t
-                AS DOUBLE)) AS garr
-  FROM dd
-), f AS (
-  SELECT n, St, D,
-    list_sum(list_transform(range(1, n + 1),
-      t -> garr[t] * garr[t])) AS Sg,
-    list_sum(list_transform(range(1, n + 1),
-      t -> CAST(t AS DOUBLE) * garr[t] * garr[t])) AS Stg,
-    list_sum(list_transform(range(1, n + 1),
-      t -> garr[t] * garr[t] * garr[t] * garr[t])) AS Sgg
-  FROM ga
-), z AS (
-  SELECT n,
-    CAST(n AS DOUBLE) * Stg - CAST(St AS DOUBLE) * Sg AS sxy,
-    CAST(D AS DOUBLE) AS sxx,
-    CAST(n AS DOUBLE) * Sgg - Sg * Sg AS syy
-  FROM f WHERE n > 2 AND D > 0
-)
-SELECT n AS n_days,
-  round(sxy * sxy / (sxx * syy), 6) AS r2_aux,
-  round(CAST(n AS DOUBLE) * sxy * sxy / (sxx * syy), 6) AS bp_lm,
-  (CAST(n AS DOUBLE) * sxy * sxy / (sxx * syy) > 3.841)
-    AS reject_5pct,
-  CASE WHEN sxy > 0 THEN 'variance_increasing'
-       WHEN sxy < 0 THEN 'variance_decreasing'
-       ELSE 'flat' END AS direction
-FROM z WHERE syy > 0
-"""
-
-QUERIES["breusch_pagan"] = q_breusch_pagan
-_RAW_ORACLES["breusch_pagan"] = SQL_BREUSCH_PAGAN
-
-
-def q_cronbach_alpha(spark, sf_dir):
-    """Cronbach's alpha internal-consistency coefficient treating the
-    5 event types as ITEMS and the calendar days as SUBJECTS
-    (Cronbach Psychometrika 1951; Nunnally 1978 for the 0.7
-    acceptance bar — the reliability audit that answers 'may I sum
-    the per-type daily volumes into ONE activity score?': alpha near
-    1 says the 5 per-type series co-move and a single composite
-    feature is justified; alpha near 0 says they are independent
-    channels and a sum would destroy signal — the feature-design
-    gate before any rollup_activity-style composite, and the
-    covariance-side complement to bartlett_test's variance check).
-    Item scores x_{d,i} = count of type-i events on day d are exact
-    longs from ONE conditional corpus aggregate (absent types
-    contribute exact-zero columns); alpha = k/(k-1) * (1 - sum_i
-    var_i / var_total) is computed from the exact-long moment
-    identities (n*Q_i - S_i^2) and (n*Q_T - S_T^2) — the n(n-1)
-    denominators cancel, so the whole statistic is ONE exact-long
-    division; every double is one exact-long cast. k = 5 pinned
-    (the corpus event-type alphabet). 2 shuffles at any corpus
-    size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).alias("__day"),
-        "event_type",
-    )
-    types = ["click", "error", "purchase", "signup", "view"]
-    aggs = []
-    for i, t in enumerate(types):
-        aggs.append(
-            F.sum(
-                F.when(F.col("event_type") == t, F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).cast("long").alias(f"__x{i}")
-        )
-    day = ev.groupBy("__day").agg(*aggs)
-    tot = " + ".join(f"__x{i}" for i in range(len(types)))
-    day = day.withColumn("__t", F.expr(tot))
-    one_aggs = [F.count(F.lit(1)).cast("long").alias("n_days")]
-    for i in range(len(types)):
-        one_aggs.append(
-            F.sum(f"__x{i}").cast("long").alias(f"__s{i}")
-        )
-        one_aggs.append(
-            F.sum(F.col(f"__x{i}") * F.col(f"__x{i}"))
-            .cast("long").alias(f"__q{i}")
-        )
-    one_aggs.append(F.sum("__t").cast("long").alias("__st"))
-    one_aggs.append(
-        F.sum(F.col("__t") * F.col("__t")).cast("long").alias("__qt")
-    )
-    one = day.agg(*one_aggs)
-    item_num = " + ".join(
-        f"(n_days * __q{i} - __s{i} * __s{i})"
-        for i in range(len(types))
-    )
-    one = (
-        one
-        .withColumn("__inum", F.expr(item_num))
-        .withColumn("__tden", F.expr("n_days * __qt - __st * __st"))
-    )
-    one = one.filter((F.col("n_days") > 1) & (F.col("__tden") > 0))
-    k = float(len(types))
-    ratio = F.col("__inum").cast("double") / F.col("__tden").cast(
-        "double"
-    )
-    alpha = F.lit(k / (k - 1.0)) * (F.lit(1.0) - ratio)
-    nn1 = (
-        F.col("n_days").cast("double")
-        * (F.col("n_days") - 1).cast("double")
-    )
-    return one.select(
-        F.lit(int(k)).alias("k_items"),
-        "n_days",
-        _r6(F.col("__inum").cast("double") / nn1).alias(
-            "sum_item_var"
-        ),
-        _r6(F.col("__tden").cast("double") / nn1).alias("total_var"),
-        _r6(alpha).alias("alpha"),
-        (alpha >= F.lit(0.7)).alias("acceptable"),
-    )
-
-
-SQL_CRONBACH_ALPHA = """
-WITH day AS (
-  SELECT day(ts) AS day,
-    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x0,
-    CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x1,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x2,
-    CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x3,
-    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x4
-  FROM events GROUP BY day(ts)
-), d2 AS (
-  SELECT *, x0 + x1 + x2 + x3 + x4 AS t FROM day
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(x0) AS BIGINT) AS s0, CAST(sum(x0 * x0) AS BIGINT) AS q0,
-    CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x1 * x1) AS BIGINT) AS q1,
-    CAST(sum(x2) AS BIGINT) AS s2, CAST(sum(x2 * x2) AS BIGINT) AS q2,
-    CAST(sum(x3) AS BIGINT) AS s3, CAST(sum(x3 * x3) AS BIGINT) AS q3,
-    CAST(sum(x4) AS BIGINT) AS s4, CAST(sum(x4 * x4) AS BIGINT) AS q4,
-    CAST(sum(t) AS BIGINT) AS st, CAST(sum(t * t) AS BIGINT) AS qt
-  FROM d2
-), f AS (
-  SELECT n,
-    (n * q0 - s0 * s0) + (n * q1 - s1 * s1) + (n * q2 - s2 * s2)
-      + (n * q3 - s3 * s3) + (n * q4 - s4 * s4) AS inum,
-    n * qt - st * st AS tden
-  FROM one WHERE n > 1
-)
-SELECT 5 AS k_items, n AS n_days,
-  round(CAST(inum AS DOUBLE)
-        / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)), 6)
-    AS sum_item_var,
-  round(CAST(tden AS DOUBLE)
-        / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)), 6)
-    AS total_var,
-  round(1.25 * (1.0 - CAST(inum AS DOUBLE) / CAST(tden AS DOUBLE)),
-        6) AS alpha,
-  (1.25 * (1.0 - CAST(inum AS DOUBLE) / CAST(tden AS DOUBLE))
-   >= 0.7) AS acceptable
-FROM f WHERE tden > 0
-"""
-
-QUERIES["cronbach_alpha"] = q_cronbach_alpha
-_RAW_ORACLES["cronbach_alpha"] = SQL_CRONBACH_ALPHA
-
-
-def q_pettitt_test(spark, sf_dir):
-    """Pettitt's nonparametric change-point test on daily event
-    volume (Pettitt Applied Statistics 1979 — THE single-changepoint
-    screen for monitoring series: where cusum_changepoint needs a
-    scale and page_hinkley a drift parameter, Pettitt asks the
-    assumption-free question 'did the level of this series shift at
-    some unknown day?' via a rank statistic, making it the standard
-    first look before segmented_trend fits the two pieces). The
-    statistic U_t = sum_{i<=t} sum_{j>t} sign(y_j - y_i) is an EXACT
-    INTEGER for every split point t; the corpus is touched ONCE by
-    the day aggregate and the <=31-element U array is a bounded
-    nested fold on the 1-row frame (O(n^3) = 15k comparisons at
-    n = 31 — constant work at any corpus size). K = max_t |U_t| with
-    the EARLIEST-t tie-break via 1-based first-occurrence
-    array_position on BOTH engines; the Pettitt approximation
-    p = 2 exp(-6 K^2 / (n^3 + n^2)) is one exact-long division
-    inside one exp. 2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__y"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn("__yarr", F.expr("transform(__a, s -> s.__y)"))
-        .withColumn("__darr", F.expr("transform(__a, s -> s.__day)"))
-        .withColumn(
-            "__uarr",
-            F.expr(
-                "transform(sequence(1L, n_days - 1), t ->"
-                " aggregate(sequence(1L, t), 0L, (ai, i) ->"
-                "  ai + aggregate(sequence(t + 1, n_days), 0L,"
-                "   (aj, j) -> aj + (CASE"
-                "    WHEN element_at(__yarr, cast(j as int))"
-                "       > element_at(__yarr, cast(i as int)) THEN 1L"
-                "    WHEN element_at(__yarr, cast(j as int))"
-                "       < element_at(__yarr, cast(i as int)) THEN -1L"
-                "    ELSE 0L END))))"
-            ),
-        )
-    )
-    one = (
-        one
-        .withColumn(
-            "__absu", F.expr("transform(__uarr, u -> abs(u))")
-        )
-        .withColumn("__k", F.expr("array_max(__absu)"))
-        .withColumn(
-            "__tstar",
-            F.expr("array_position(__absu, __k)").cast("long"),
-        )
-    )
-    one = one.filter((F.col("n_days") > 2) & (F.col("__k") > 0))
-    uat = F.expr("element_at(__uarr, cast(__tstar as int))")
-    p = F.lit(2.0) * F.exp(
-        F.lit(-6.0) * (F.col("__k") * F.col("__k")).cast("double")
-        / F.expr(
-            "cast(n_days * n_days * n_days"
-            " + n_days * n_days as double)"
-        )
-    )
-    return one.select(
-        "n_days",
-        F.col("__k").alias("k_stat"),
-        F.expr("element_at(__darr, cast(__tstar as int))")
-        .alias("change_day"),
-        uat.alias("u_at_k"),
-        _r6(p).alias("p_approx"),
-        (p < F.lit(0.05)).alias("significant_5pct"),
-        F.when(uat > 0, F.lit("upward_shift"))
-        .otherwise(F.lit("downward_shift"))
-        .alias("direction"),
-    )
-
-
-SQL_PETTITT_TEST = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    list(y ORDER BY day) AS yarr,
-    list(day ORDER BY day) AS darr
-  FROM day
-), ua AS (
-  SELECT n, darr,
-    list_transform(range(1, n), t ->
-      list_sum(list_transform(range(1, t + 1), i ->
-        list_sum(list_transform(range(t + 1, n + 1), j ->
-          CASE WHEN yarr[j] > yarr[i] THEN 1
-               WHEN yarr[j] < yarr[i] THEN -1
-               ELSE 0 END))))) AS uarr
-  FROM one
-), kk AS (
-  SELECT n, darr, uarr,
-    list_transform(uarr, u -> abs(u)) AS absu
-  FROM ua
-), f AS (
-  SELECT n, darr, uarr,
-    list_max(absu) AS k,
-    CAST(list_position(absu, list_max(absu)) AS BIGINT) AS tstar
-  FROM kk
-)
-SELECT n AS n_days, k AS k_stat,
-  darr[CAST(tstar AS INT)] AS change_day,
-  uarr[CAST(tstar AS INT)] AS u_at_k,
-  round(2.0 * exp(-6.0 * CAST(k * k AS DOUBLE)
-        / CAST(n * n * n + n * n AS DOUBLE)), 6) AS p_approx,
-  (2.0 * exp(-6.0 * CAST(k * k AS DOUBLE)
-        / CAST(n * n * n + n * n AS DOUBLE)) < 0.05)
-    AS significant_5pct,
-  CASE WHEN uarr[CAST(tstar AS INT)] > 0 THEN 'upward_shift'
-       ELSE 'downward_shift' END AS direction
-FROM f WHERE n > 2 AND k > 0
-"""
-
-QUERIES["pettitt_test"] = q_pettitt_test
-_RAW_ORACLES["pettitt_test"] = SQL_PETTITT_TEST
-
-
 def q_cliffs_delta(spark, sf_dir):
     """Cliff's delta ordinal effect size for `value` between the two
     md5-parity user arms (Cliff Psychological Bulletin 1993; Romano
@@ -20147,422 +16976,6 @@ FROM f
 
 QUERIES["cliffs_delta"] = q_cliffs_delta
 _RAW_ORACLES["cliffs_delta"] = SQL_CLIFFS_DELTA
-
-
-def q_grubbs_test(spark, sf_dir):
-    """Grubbs' maximum-studentized-deviation outlier test on the
-    daily event volumes (Grubbs Technometrics 1969; critical value
-    from the NIST/SEMATECH e-Handbook table — the single-outlier
-    screen that anomaly_mad's robust z-scores deliberately avoid
-    being: Grubbs is the classical NORMAL-theory test whose verdict
-    auditors expect next to the MAD flags, and disagreement between
-    the two is itself a distribution-shape signal, cf. jarque_bera).
-    G = max_t |y_t - ybar| / s with the deviation numerators
-    |n*y_t - Sy| EXACT LONGS (so the argmax and its EARLIEST-day
-    tie-break are exact integer comparisons via array_position), and
-    G = maxnum / (n * s) where s = sqrt((n*Syy - Sy^2)/(n(n-1))) is
-    one IEEE-exact sqrt of one exact-long division — every double
-    one exact-long cast. Two-sided 5% critical value at the 30-day
-    test frame pinned: 2.908 (NIST table, n = 30). 2 shuffles at
-    any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__Sy"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("__Syy"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__y"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn(
-            "__num",
-            F.expr("transform(__a, s -> abs(n_days * s.__y - __Sy))"),
-        )
-        .withColumn("__mx", F.expr("array_max(__num)"))
-        .withColumn(
-            "__i",
-            F.expr("array_position(__num, __mx)").cast("int"),
-        )
-        .withColumn("__ss", F.expr("n_days * __Syy - __Sy * __Sy"))
-    )
-    one = one.filter((F.col("n_days") > 2) & (F.col("__ss") > 0))
-    nd = F.col("n_days").cast("double")
-    s = F.sqrt(
-        F.col("__ss").cast("double") / (nd * (nd - F.lit(1.0)))
-    )
-    g = F.col("__mx").cast("double") / (nd * s)
-    ystar = F.expr("element_at(__a, __i).__y")
-    return one.select(
-        "n_days",
-        F.expr("element_at(__a, __i).__day").alias("outlier_day"),
-        ystar.alias("outlier_value"),
-        _r6(F.col("__Sy").cast("double") / nd).alias("mean_volume"),
-        _r6(s).alias("sd_volume"),
-        _r6(g).alias("g_stat"),
-        (g > F.lit(2.908)).alias("reject_5pct"),
-        F.when(
-            (nd * ystar.cast("double"))
-            > F.col("__Sy").cast("double"),
-            F.lit("high"),
-        ).otherwise(F.lit("low")).alias("side"),
-    )
-
-
-SQL_GRUBBS_TEST = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS Sy,
-    CAST(sum(y * y) AS BIGINT) AS Syy,
-    list(day ORDER BY day) AS darr,
-    list(y ORDER BY day) AS yarr
-  FROM day
-), nu AS (
-  SELECT n, Sy, Syy, darr, yarr,
-    list_transform(yarr, y -> abs(n * y - Sy)) AS num,
-    n * Syy - Sy * Sy AS ss
-  FROM one
-), f AS (
-  SELECT n, Sy, darr, yarr, ss,
-    list_max(num) AS mx,
-    list_position(num, list_max(num)) AS i
-  FROM nu WHERE n > 2 AND ss > 0
-)
-SELECT n AS n_days,
-  darr[i] AS outlier_day,
-  yarr[i] AS outlier_value,
-  round(CAST(Sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_volume,
-  round(sqrt(CAST(ss AS DOUBLE)
-        / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))), 6)
-    AS sd_volume,
-  round(CAST(mx AS DOUBLE) / (CAST(n AS DOUBLE)
-        * sqrt(CAST(ss AS DOUBLE)
-          / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))), 6)
-    AS g_stat,
-  (CAST(mx AS DOUBLE) / (CAST(n AS DOUBLE)
-        * sqrt(CAST(ss AS DOUBLE)
-          / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))) > 2.908)
-    AS reject_5pct,
-  CASE WHEN CAST(n AS DOUBLE) * CAST(yarr[i] AS DOUBLE)
-            > CAST(Sy AS DOUBLE) THEN 'high'
-       ELSE 'low' END AS side
-FROM f
-"""
-
-QUERIES["grubbs_test"] = q_grubbs_test
-_RAW_ORACLES["grubbs_test"] = SQL_GRUBBS_TEST
-
-
-def q_taylor_law(spark, sf_dir):
-    """Taylor's power law exponent for event volume across the 24
-    hour-of-day groups (Taylor Nature 1961; Eisler et al. Adv. Phys.
-    2008 for the fluctuation-scaling reading — the cross-GROUP
-    burstiness audit beside nb_dispersion's single-series check: for
-    each hour-of-day, the mean and variance of that hour's daily
-    count are one point on the log-log plane; the OLS slope b of
-    ln var on ln mean is the scaling exponent — b = 1 is Poisson
-    arrivals, b -> 2 means bursty/aggregated traffic whose hot hours
-    get MORE than proportionally noisier, which decides whether
-    per-hour capacity must be provisioned on mean or on mean^b).
-    The corpus is touched ONCE by the (day, hour) cell aggregate — a
-    <=744-row frame bounded by the calendar, like the <=31-day
-    frames — collected sorted into ONE row; n_days, the per-hour
-    sums S_h and square-sums Q_h are exact longs via bounded nested
-    folds, each variance (n*Q_h - S_h^2)/(n(n-1)) and mean S_h/n is
-    one exact division, and the log-log OLS moments fold
-    hour-ascending on BOTH engines. Verdict bands pinned at 0.8/1.2.
-    2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-        F.hour(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__h"),
-    )
-    cell = ev.groupBy("__day", "__h").agg(
-        F.count(F.lit(1)).cast("long").alias("__c")
-    )
-    one = cell.agg(
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__h", "__c"))
-        ).alias("__a"),
-    )
-    one = one.withColumn(
-        "__nd",
-        F.expr(
-            "cast(size(array_distinct(transform(__a, x -> x.__day)))"
-            " as long)"
-        ),
-    )
-    # per-hour (S_h, Q_h) as exact longs; keep hours with a defined,
-    # positive variance and positive mean (ln needs both)
-    one = one.withColumn(
-        "__hs",
-        F.expr(
-            "filter(transform(sequence(0L, 23L), h -> struct("
-            " h as h,"
-            " aggregate(__a, 0L, (acc, x) ->"
-            "  acc + IF(x.__h = h, x.__c, 0L)) as s,"
-            " aggregate(__a, 0L, (acc, x) ->"
-            "  acc + IF(x.__h = h, x.__c * x.__c, 0L)) as q)),"
-            " p -> p.s > 0 AND __nd * p.q - p.s * p.s > 0)"
-        ),
-    )
-    one = one.withColumn(
-        "__pts",
-        F.expr(
-            "transform(__hs, p -> struct("
-            " ln(cast(p.s as double) / cast(__nd as double)) as x,"
-            " ln(cast(__nd * p.q - p.s * p.s as double)"
-            "  / (cast(__nd as double) * cast(__nd - 1 as double)))"
-            "  as y))"
-        ),
-    ).withColumn("__k", F.expr("cast(size(__pts) as long)"))
-
-    def fold(term):
-        return F.expr(
-            "aggregate(__pts, 0.0D, (acc, p) -> acc + (" + term + "))"
-        )
-
-    one = (
-        one
-        .withColumn("__sx", fold("p.x"))
-        .withColumn("__sy", fold("p.y"))
-        .withColumn("__sxy", fold("p.x * p.y"))
-        .withColumn("__sxx", fold("p.x * p.x"))
-        .withColumn("__syy", fold("p.y * p.y"))
-    )
-    one = one.filter((F.col("__nd") > 1) & (F.col("__k") > 2))
-    kd = F.col("__k").cast("double")
-    dxy = kd * F.col("__sxy") - F.col("__sx") * F.col("__sy")
-    dxx = kd * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-    dyy = kd * F.col("__syy") - F.col("__sy") * F.col("__sy")
-    one = one.filter((dxx > 0.0) & (dyy > 0.0))
-    b = dxy / dxx
-    a = (F.col("__sy") - b * F.col("__sx")) / kd
-    r2 = dxy * dxy / (dxx * dyy)
-    return one.select(
-        F.col("__nd").alias("n_days"),
-        F.col("__k").alias("n_hours"),
-        _r6(b).alias("taylor_b"),
-        _r6(a).alias("ln_a"),
-        _r6(r2).alias("r2"),
-        F.when(b > 1.2, F.lit("aggregated"))
-        .when(b < 0.8, F.lit("underdispersed"))
-        .otherwise(F.lit("poisson_like"))
-        .alias("verdict"),
-    )
-
-
-SQL_TAYLOR_LAW = """
-WITH cell AS (
-  SELECT day(ts) AS day, hour(ts) AS h,
-    CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY day(ts), hour(ts)
-), one AS (
-  SELECT list({'h': h, 'c': c} ORDER BY day, h) AS a,
-    CAST(count(DISTINCT day) AS BIGINT) AS nd
-  FROM cell
-), hs AS (
-  SELECT nd,
-    list_filter(
-      list_transform(range(0, 24), h -> {
-        's': list_sum(list_transform(a,
-          x -> CASE WHEN x.h = h THEN x.c ELSE 0 END)),
-        'q': list_sum(list_transform(a,
-          x -> CASE WHEN x.h = h THEN x.c * x.c ELSE 0 END))}),
-      p -> p.s > 0 AND nd * p.q - p.s * p.s > 0) AS hsl
-  FROM one
-), pts AS (
-  SELECT nd,
-    list_transform(hsl, p -> {
-      'x': ln(CAST(p.s AS DOUBLE) / CAST(nd AS DOUBLE)),
-      'y': ln(CAST(nd * p.q - p.s * p.s AS DOUBLE)
-         / (CAST(nd AS DOUBLE) * CAST(nd - 1 AS DOUBLE)))}) AS pl,
-    CAST(len(hsl) AS BIGINT) AS k
-  FROM hs
-), mo AS (
-  SELECT nd, k,
-    list_sum(list_transform(pl, p -> p.x)) AS sx,
-    list_sum(list_transform(pl, p -> p.y)) AS sy,
-    list_sum(list_transform(pl, p -> p.x * p.y)) AS sxy,
-    list_sum(list_transform(pl, p -> p.x * p.x)) AS sxx,
-    list_sum(list_transform(pl, p -> p.y * p.y)) AS syy
-  FROM pts WHERE nd > 1 AND k > 2
-), f AS (
-  SELECT nd, k,
-    CAST(k AS DOUBLE) * sxy - sx * sy AS dxy,
-    CAST(k AS DOUBLE) * sxx - sx * sx AS dxx,
-    CAST(k AS DOUBLE) * syy - sy * sy AS dyy,
-    sx, sy
-  FROM mo
-)
-SELECT nd AS n_days, k AS n_hours,
-  round(dxy / dxx, 6) AS taylor_b,
-  round((sy - (dxy / dxx) * sx) / CAST(k AS DOUBLE), 6) AS ln_a,
-  round(dxy * dxy / (dxx * dyy), 6) AS r2,
-  CASE WHEN dxy / dxx > 1.2 THEN 'aggregated'
-       WHEN dxy / dxx < 0.8 THEN 'underdispersed'
-       ELSE 'poisson_like' END AS verdict
-FROM f WHERE dxx > 0 AND dyy > 0
-"""
-
-QUERIES["taylor_law"] = q_taylor_law
-_RAW_ORACLES["taylor_law"] = SQL_TAYLOR_LAW
-
-
-def q_sample_entropy(spark, sf_dir):
-    """Sample entropy of the daily event-volume series at embedding
-    m = 2 and tolerance r = 0.5 * SD (Richman & Moorman Am. J.
-    Physiol. 2000; the tolerance sits above the classic 0.1-0.25*SD
-    band on purpose — Yentes et al. Ann. Biomed. Eng. 2013 show that
-    for VERY SHORT series (here n = 30 days) small r starves the
-    m+1 template count and SampEn degenerates, so the short-series
-    guidance is a wider r — the amplitude-aware regularity twin of
-    perm_entropy's ordinal measure: SampEn = -ln(A/B) where B counts
-    length-2 template matches under the Chebyshev tolerance and A
-    counts their length-3 extensions; low SampEn means today's
-    volume pattern keeps repeating (forecastable, cacheable), high
-    SampEn means template matches die out (provision for surprise) —
-    and unlike the original ApEn it is self-match-free and nearly
-    length-unbiased, which is why it is the monitoring default).
-    Daily counts are exact longs; distances |y_i - y_j| are exact
-    integers, the tolerance rr = 0.2 * s is ONE deterministic IEEE
-    product of the exact-moment sqrt, so every <=378-pair template
-    comparison is the identical float comparison on BOTH engines and
-    A, B are EXACT LONGS from bounded nested folds on the 1-row
-    frame; SampEn = ln(B) - ln(A) on exact-long casts. Bands 0.5/1.5
-    pinned. 2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__Sy"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("__Syy"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__y"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn("__yarr", F.expr("transform(__a, s -> s.__y)"))
-        .withColumn("__ss", F.expr("n_days * __Syy - __Sy * __Sy"))
-    )
-    one = one.filter((F.col("n_days") > 4) & (F.col("__ss") > 0))
-    nd = F.col("n_days").cast("double")
-    s = F.sqrt(
-        F.col("__ss").cast("double") / (nd * (nd - F.lit(1.0)))
-    )
-    one = one.withColumn("__rr", F.lit(0.5) * s)
-    # M = n - 2 templates; B: 2-matches, A: 3-matches, pairs i < j
-    dij = (
-        "cast(abs(element_at(__yarr, cast(i {o} as int))"
-        " - element_at(__yarr, cast(j {o} as int))) as double)"
-    )
-    d0 = dij.format(o="+ 0")
-    d1 = dij.format(o="+ 1")
-    d2 = dij.format(o="+ 2")
-    one = (
-        one
-        .withColumn(
-            "__b",
-            F.expr(
-                "aggregate(sequence(1L, n_days - 3), 0L, (ai, i) ->"
-                " ai + aggregate(sequence(i + 1, n_days - 2), 0L,"
-                f" (aj, j) -> aj + IF({d0} <= __rr AND {d1} <= __rr,"
-                " 1L, 0L)))"
-            ),
-        )
-        .withColumn(
-            "__aa",
-            F.expr(
-                "aggregate(sequence(1L, n_days - 3), 0L, (ai, i) ->"
-                " ai + aggregate(sequence(i + 1, n_days - 2), 0L,"
-                f" (aj, j) -> aj + IF({d0} <= __rr AND {d1} <= __rr"
-                f" AND {d2} <= __rr, 1L, 0L)))"
-            ),
-        )
-    )
-    one = one.filter((F.col("__b") > 0) & (F.col("__aa") > 0))
-    sampen = F.log(F.col("__b").cast("double")) - F.log(
-        F.col("__aa").cast("double")
-    )
-    return one.select(
-        "n_days",
-        _r6(F.col("__rr")).alias("r_tol"),
-        F.col("__b").alias("b_count"),
-        F.col("__aa").alias("a_count"),
-        _r6(sampen).alias("sampen"),
-        F.when(sampen < 0.5, F.lit("regular"))
-        .when(sampen > 1.5, F.lit("complex"))
-        .otherwise(F.lit("moderate"))
-        .alias("band"),
-    )
-
-
-SQL_SAMPLE_ENTROPY = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS Sy,
-    CAST(sum(y * y) AS BIGINT) AS Syy,
-    list(y ORDER BY day) AS yarr
-  FROM day
-), pre AS (
-  SELECT n, yarr, n * Syy - Sy * Sy AS ss
-  FROM one WHERE n > 4 AND n * Syy - Sy * Sy > 0
-), rr AS (
-  SELECT n, yarr,
-    0.5 * sqrt(CAST(ss AS DOUBLE)
-      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) AS r
-  FROM pre
-), cnt AS (
-  SELECT n, r,
-    list_sum(list_transform(range(1, n - 2), i ->
-      list_sum(list_transform(range(i + 1, n - 1), j ->
-        CASE WHEN CAST(abs(yarr[i] - yarr[j]) AS DOUBLE) <= r
-          AND CAST(abs(yarr[i + 1] - yarr[j + 1]) AS DOUBLE) <= r
-        THEN 1 ELSE 0 END)))) AS b,
-    list_sum(list_transform(range(1, n - 2), i ->
-      list_sum(list_transform(range(i + 1, n - 1), j ->
-        CASE WHEN CAST(abs(yarr[i] - yarr[j]) AS DOUBLE) <= r
-          AND CAST(abs(yarr[i + 1] - yarr[j + 1]) AS DOUBLE) <= r
-          AND CAST(abs(yarr[i + 2] - yarr[j + 2]) AS DOUBLE) <= r
-        THEN 1 ELSE 0 END)))) AS a
-  FROM rr
-)
-SELECT n AS n_days,
-  round(r, 6) AS r_tol,
-  CAST(b AS BIGINT) AS b_count,
-  CAST(a AS BIGINT) AS a_count,
-  round(ln(CAST(b AS DOUBLE)) - ln(CAST(a AS DOUBLE)), 6) AS sampen,
-  CASE WHEN ln(CAST(b AS DOUBLE)) - ln(CAST(a AS DOUBLE)) < 0.5
-         THEN 'regular'
-       WHEN ln(CAST(b AS DOUBLE)) - ln(CAST(a AS DOUBLE)) > 1.5
-         THEN 'complex'
-       ELSE 'moderate' END AS band
-FROM cnt WHERE b > 0 AND a > 0
-"""
-
-QUERIES["sample_entropy"] = q_sample_entropy
-_RAW_ORACLES["sample_entropy"] = SQL_SAMPLE_ENTROPY
-
 
 def q_ndcg_eval(spark, sf_dir):
     """NDCG@10 of the revenue-based part ranking under a temporal
@@ -21201,513 +17614,6 @@ FROM best
 QUERIES["youden_j"] = q_youden_j
 _RAW_ORACLES["youden_j"] = SQL_YOUDEN_J
 
-
-def q_lin_ccc(spark, sf_dir):
-    """Lin's concordance correlation coefficient between the daily
-    click-volume and daily view-volume series (Lin Biometrics 1989 —
-    the AGREEMENT statistic Pearson r deliberately is not: r asks
-    'do the two channels co-move', CCC asks 'do they give the SAME
-    number', penalizing location and scale shifts through the
-    bias-correction factor C_b = CCC/r; the right audit before
-    treating two telemetry channels as interchangeable measures of
-    daily activity, and the parametric twin of cohens_kappa's
-    categorical agreement). The day x channel counts come from ONE
-    conditional corpus aggregate; with Lin's 1/n moment convention
-    every n^2 denominator cancels, so CCC = 2(nSxy - SxSy) /
-    (nSxx - Sx^2 + nSyy - Sy^2 + (Sx-Sy)^2) is ONE division of
-    EXACT LONGS, and r, C_b, the location shift u and scale ratio
-    follow as fixed expression trees (IEEE sqrt). 2 shuffles at any
-    corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-        "event_type",
-    )
-    day = ev.groupBy("__day").agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("long").alias("__x"),
-        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        .cast("long").alias("__y"),
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__x").cast("long").alias("__sx"),
-        F.sum("__y").cast("long").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__x")).cast("long").alias("__sxx"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("__syy"),
-        F.sum(F.col("__x") * F.col("__y")).cast("long").alias("__sxy"),
-    )
-    n = F.col("n_days")
-    dxx = (n * F.col("__sxx") - F.col("__sx") * F.col("__sx"))
-    dyy = (n * F.col("__syy") - F.col("__sy") * F.col("__sy"))
-    dxy = (n * F.col("__sxy") - F.col("__sx") * F.col("__sy"))
-    dm = F.col("__sx") - F.col("__sy")
-    one = one.filter((n > 1) & (dxx > 0) & (dyy > 0))
-    ccc = (F.lit(2.0) * dxy.cast("double")) / (
-        dxx.cast("double") + dyy.cast("double")
-        + (dm * dm).cast("double")
-    )
-    rr = dxy.cast("double") / (
-        F.sqrt(dxx.cast("double")) * F.sqrt(dyy.cast("double"))
-    )
-    scale = F.sqrt(dxx.cast("double") / dyy.cast("double"))
-    return one.select(
-        "n_days",
-        _r6(F.col("__sx").cast("double") / n.cast("double"))
-        .alias("mean_clicks"),
-        _r6(F.col("__sy").cast("double") / n.cast("double"))
-        .alias("mean_views"),
-        _r6(rr).alias("pearson_r"),
-        _r6(ccc).alias("ccc"),
-        _r6(ccc / rr).alias("c_b"),
-        _r6(scale).alias("scale_ratio"),
-        (ccc > F.lit(0.9)).alias("interchangeable"),
-    )
-
-
-SQL_LIN_CCC = """
-WITH day AS (
-  SELECT day(ts) AS day,
-    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-      AS BIGINT) AS x,
-    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-      AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-    CAST(sum(x * x) AS BIGINT) AS sxx,
-    CAST(sum(y * y) AS BIGINT) AS syy,
-    CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM day
-), f AS (
-  SELECT n, sx, sy,
-    n * sxx - sx * sx AS dxx,
-    n * syy - sy * sy AS dyy,
-    n * sxy - sx * sy AS dxy,
-    sx - sy AS dm
-  FROM one WHERE n > 1
-)
-SELECT n AS n_days,
-  round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_clicks,
-  round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_views,
-  round(CAST(dxy AS DOUBLE)
-        / (sqrt(CAST(dxx AS DOUBLE)) * sqrt(CAST(dyy AS DOUBLE))),
-        6) AS pearson_r,
-  round(2.0 * CAST(dxy AS DOUBLE)
-        / (CAST(dxx AS DOUBLE) + CAST(dyy AS DOUBLE)
-           + CAST(dm * dm AS DOUBLE)), 6) AS ccc,
-  round((2.0 * CAST(dxy AS DOUBLE)
-        / (CAST(dxx AS DOUBLE) + CAST(dyy AS DOUBLE)
-           + CAST(dm * dm AS DOUBLE)))
-        / (CAST(dxy AS DOUBLE)
-           / (sqrt(CAST(dxx AS DOUBLE))
-              * sqrt(CAST(dyy AS DOUBLE)))), 6) AS c_b,
-  round(sqrt(CAST(dxx AS DOUBLE) / CAST(dyy AS DOUBLE)), 6)
-    AS scale_ratio,
-  (2.0 * CAST(dxy AS DOUBLE)
-   / (CAST(dxx AS DOUBLE) + CAST(dyy AS DOUBLE)
-      + CAST(dm * dm AS DOUBLE)) > 0.9) AS interchangeable
-FROM f WHERE dxx > 0 AND dyy > 0
-"""
-
-QUERIES["lin_ccc"] = q_lin_ccc
-_RAW_ORACLES["lin_ccc"] = SQL_LIN_CCC
-
-
-def q_bland_altman(spark, sf_dir):
-    """Bland-Altman limits of agreement between the daily click and
-    view volumes (Bland & Altman Lancet 1986 — the agreement plot
-    behind lin_ccc's single number: per-day differences d_t =
-    clicks_t - views_t, bias = mean d, limits of agreement = bias
-    +/- 1.96 sd; the within-limits share says how often the two
-    channels disagree by more than the noise band, and a bias whose
-    |t| = |mean|/(sd/sqrt(n)) clears 1.96 flags a SYSTEMATIC offset
-    one channel must be corrected for before substitution). The
-    differences are exact longs from the same conditional day
-    aggregate as lin_ccc; mean/sd come from exact-long moments (one
-    IEEE sqrt), the LoA are fixed expression trees, and the
-    within-band count compares exact-long-cast differences against
-    the deterministically-computed band edges — identical float
-    comparisons on BOTH engines via the day-ascending fold.
-    2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-        "event_type",
-    )
-    day = ev.groupBy("__day").agg(
-        (
-            F.sum(F.when(F.col("event_type") == "click", 1)
-                  .otherwise(0))
-            - F.sum(F.when(F.col("event_type") == "view", 1)
-                    .otherwise(0))
-        ).cast("long").alias("__d"),
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__d").cast("long").alias("__sd"),
-        F.sum(F.col("__d") * F.col("__d")).cast("long").alias("__sdd"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__d"))
-        ).alias("__a"),
-    )
-    n = F.col("n_days")
-    ss = n * F.col("__sdd") - F.col("__sd") * F.col("__sd")
-    one = one.filter((n > 1) & (ss > 0))
-    nd = n.cast("double")
-    mean = F.col("__sd").cast("double") / nd
-    sd = F.sqrt(ss.cast("double") / (nd * (nd - F.lit(1.0))))
-    lo = mean - F.lit(1.96) * sd
-    hi = mean + F.lit(1.96) * sd
-    one = (
-        one
-        .withColumn("__lo", lo)
-        .withColumn("__hi", hi)
-        .withColumn(
-            "__within",
-            F.expr(
-                "aggregate(__a, 0L, (acc, x) -> acc"
-                " + IF(cast(x.__d as double) >= __lo AND"
-                " cast(x.__d as double) <= __hi, 1L, 0L))"
-            ),
-        )
-    )
-    tstat = mean / (sd / F.sqrt(nd))
-    return one.select(
-        "n_days",
-        _r6(mean).alias("bias"),
-        _r6(sd).alias("sd_diff"),
-        _r6(F.col("__lo")).alias("loa_lower"),
-        _r6(F.col("__hi")).alias("loa_upper"),
-        F.col("__within").alias("n_within"),
-        _r6(F.col("__within").cast("double") / nd)
-        .alias("pct_within"),
-        (F.abs(tstat) > F.lit(1.96)).alias("systematic_bias"),
-    )
-
-
-SQL_BLAND_ALTMAN = """
-WITH day AS (
-  SELECT day(ts) AS day,
-    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-      - sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-      AS BIGINT) AS d
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(d) AS BIGINT) AS sd_,
-    CAST(sum(d * d) AS BIGINT) AS sdd,
-    list(d ORDER BY day) AS darr
-  FROM day
-), f AS (
-  SELECT n, sd_, darr,
-    CAST(sd_ AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-    sqrt(CAST(n * sdd - sd_ * sd_ AS DOUBLE)
-         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) AS sd
-  FROM one WHERE n > 1 AND n * sdd - sd_ * sd_ > 0
-), g AS (
-  SELECT n, mean, sd,
-    mean - 1.96 * sd AS lo,
-    mean + 1.96 * sd AS hi,
-    list_sum(list_transform(darr, d ->
-      CASE WHEN CAST(d AS DOUBLE) >= mean - 1.96 * sd
-        AND CAST(d AS DOUBLE) <= mean + 1.96 * sd
-      THEN 1 ELSE 0 END)) AS within
-  FROM f
-)
-SELECT n AS n_days,
-  round(mean, 6) AS bias,
-  round(sd, 6) AS sd_diff,
-  round(lo, 6) AS loa_lower,
-  round(hi, 6) AS loa_upper,
-  CAST(within AS BIGINT) AS n_within,
-  round(CAST(within AS DOUBLE) / CAST(n AS DOUBLE), 6)
-    AS pct_within,
-  (abs(mean / (sd / sqrt(CAST(n AS DOUBLE)))) > 1.96)
-    AS systematic_bias
-FROM g
-"""
-
-QUERIES["bland_altman"] = q_bland_altman
-_RAW_ORACLES["bland_altman"] = SQL_BLAND_ALTMAN
-
-
-def q_croston_forecast(spark, sf_dir):
-    """Croston's method with the Syntetos-Boylan approximation for
-    the INTERMITTENT daily series 'number of purchases over 150'
-    (Croston Op. Res. Q. 1972; Syntetos & Boylan IJF 2005 for the
-    (1 - alpha/2) bias fix and the ADI/CV^2 demand taxonomy — the
-    forecaster ses_alpha_grid cannot be: SES of a zero-inflated
-    series converges to a meaningless blend, Croston separates the
-    SIZE of demand from the TIME BETWEEN demands, SES-smooths each,
-    and forecasts size/interval; the taxonomy cell (smooth /
-    intermittent / erratic / lumpy at the 1.32/0.49 cutoffs) is the
-    standard router deciding whether Croston applies at all).
-    Demand sizes and inter-demand intervals are EXACT LONGS from the
-    day frame; both SES recursions run alpha = 0.2 seeded at the
-    first element — Spark folds slice(arr, 2, m-1) seeded with
-    element 1, DuckDB's list_reduce seeds from the first element
-    natively, so both engines execute the identical float sequence
-    (the ses_alpha_grid convention); ADI = t_m / m and CV^2 are
-    exact-long divisions. 2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-        ((F.col("event_type") == "purchase")
-         & (F.col("value") > 150)).alias("__hit"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.sum(F.when(F.col("__hit"), 1).otherwise(0))
-        .cast("long").alias("__z")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.array_sort(
-            F.collect_list(
-                F.when(F.col("__z") > 0,
-                       F.struct("__day", "__z"))
-            )
-        ).alias("__d"),
-    )
-    one = (
-        one
-        .withColumn("__m", F.expr("cast(size(__d) as long)"))
-        .filter(F.col("__m") >= 2)
-        .withColumn(
-            "__zarr",
-            F.expr("transform(__d, s -> cast(s.__z as double))"),
-        )
-        .withColumn(
-            "__parr",
-            F.expr(
-                "transform(sequence(1L, __m), k -> cast("
-                " IF(k = 1, element_at(__d, 1).__day,"
-                " element_at(__d, cast(k as int)).__day"
-                " - element_at(__d, cast(k - 1 as int)).__day)"
-                " as double))"
-            ),
-        )
-        .withColumn("__sz", F.expr("aggregate(__d, 0L, (a, s) -> a + s.__z)"))
-        .withColumn(
-            "__szz",
-            F.expr("aggregate(__d, 0L, (a, s) -> a + s.__z * s.__z)"),
-        )
-        .withColumn("__tm", F.expr("element_at(__d, cast(__m as int)).__day"))
-    )
-    ses = (
-        "aggregate(slice({arr}, 2, cast(__m - 1 as int)),"
-        " element_at({arr}, 1),"
-        " (acc, v) -> 0.2D * v + 0.8D * acc)"
-    )
-    one = (
-        one
-        .withColumn("__zl", F.expr(ses.format(arr="__zarr")))
-        .withColumn("__pl", F.expr(ses.format(arr="__parr")))
-    )
-    md = F.col("__m").cast("double")
-    adi = F.col("__tm").cast("double") / md
-    cv2 = (
-        (F.col("__m") * F.col("__szz")
-         - F.col("__sz") * F.col("__sz")).cast("double")
-        * md
-        / (
-            (F.col("__m") - 1).cast("double")
-            * (F.col("__sz") * F.col("__sz")).cast("double")
-        )
-    )
-    cro = F.col("__zl") / F.col("__pl")
-    return one.select(
-        "n_days",
-        F.col("__m").alias("n_demands"),
-        _r6(F.lit(1.0) - md / F.col("n_days").cast("double"))
-        .alias("zero_share"),
-        _r6(adi).alias("adi"),
-        _r6(cv2).alias("cv2"),
-        _r6(F.col("__zl")).alias("size_level"),
-        _r6(F.col("__pl")).alias("interval_level"),
-        _r6(cro).alias("croston"),
-        _r6(F.lit(0.9) * cro).alias("sba"),
-        F.when((adi < 1.32) & (cv2 < 0.49), F.lit("smooth"))
-        .when((adi >= 1.32) & (cv2 < 0.49), F.lit("intermittent"))
-        .when((adi < 1.32) & (cv2 >= 0.49), F.lit("erratic"))
-        .otherwise(F.lit("lumpy"))
-        .alias("demand_class"),
-    )
-
-
-SQL_CROSTON_FORECAST = """
-WITH day AS (
-  SELECT day(ts) AS day,
-    CAST(sum(CASE WHEN event_type = 'purchase' AND value > 150
-      THEN 1 ELSE 0 END) AS BIGINT) AS z
-  FROM events GROUP BY day(ts)
-), nd AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_days FROM day
-), dem AS (
-  SELECT day, z FROM day WHERE z > 0
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-    list(CAST(z AS DOUBLE) ORDER BY day) AS zarr,
-    list(day ORDER BY day) AS darr,
-    CAST(sum(z) AS BIGINT) AS sz,
-    CAST(sum(z * z) AS BIGINT) AS szz,
-    CAST(max(day) AS BIGINT) AS tm
-  FROM dem
-), pa AS (
-  SELECT m, zarr, sz, szz, tm,
-    list_transform(range(1, CAST(m + 1 AS INTEGER)), k ->
-      CAST(CASE WHEN k = 1 THEN darr[1]
-           ELSE darr[k] - darr[k - 1] END AS DOUBLE)) AS parr
-  FROM one WHERE m >= 2
-), sl AS (
-  SELECT m, sz, szz, tm,
-    list_reduce(zarr, (acc, v) -> 0.2 * v + 0.8 * acc) AS zl,
-    list_reduce(parr, (acc, v) -> 0.2 * v + 0.8 * acc) AS pl
-  FROM pa
-), f AS (
-  SELECT m, sz, szz, tm, zl, pl,
-    CAST(tm AS DOUBLE) / CAST(m AS DOUBLE) AS adi,
-    CAST(m * szz - sz * sz AS DOUBLE) * CAST(m AS DOUBLE)
-      / (CAST(m - 1 AS DOUBLE) * CAST(sz * sz AS DOUBLE)) AS cv2
-  FROM sl
-)
-SELECT nd.n_days, m AS n_demands,
-  round(1.0 - CAST(m AS DOUBLE) / CAST(nd.n_days AS DOUBLE), 6)
-    AS zero_share,
-  round(adi, 6) AS adi,
-  round(cv2, 6) AS cv2,
-  round(zl, 6) AS size_level,
-  round(pl, 6) AS interval_level,
-  round(zl / pl, 6) AS croston,
-  round(0.9 * (zl / pl), 6) AS sba,
-  CASE WHEN adi < 1.32 AND cv2 < 0.49 THEN 'smooth'
-       WHEN adi >= 1.32 AND cv2 < 0.49 THEN 'intermittent'
-       WHEN adi < 1.32 AND cv2 >= 0.49 THEN 'erratic'
-       ELSE 'lumpy' END AS demand_class
-FROM f, nd
-"""
-
-QUERIES["croston_forecast"] = q_croston_forecast
-_RAW_ORACLES["croston_forecast"] = SQL_CROSTON_FORECAST
-
-
-def q_tracking_signal(spark, sf_dir):
-    """Brown's cumulative-error tracking signal for the alpha = 0.3
-    SES forecast of daily event volume (Brown 1959 'Statistical
-    Forecasting for Inventory Control'; the +/-4-MAD action limit is
-    the standard ops-management rule — the MONITOR that belongs on
-    top of whatever ses_alpha_grid/holt_trend deploy: a forecast can
-    have fine RMSE yet drift consistently to one side, and
-    TS = sum(e_t) / MAD crossing +/-4 is the classic 'your forecast
-    is biased, re-fit it' alarm — the forecasting twin of
-    sprt_monitor's sequential test). One-step errors e_t = y_t -
-    l_{t-1} recompute each prefix level FROM SCRATCH as a plain
-    double fold (the ses_alpha_grid O(n^2) convention — identical op
-    sequence on BOTH engines, no struct accumulators, which DuckDB
-    evaluates field-sequentially); the error and |error| sums fold
-    t-ascending. 2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__x", "__y"))
-        ).alias("__a"),
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-    ).selectExpr(
-        "n_days",
-        "transform(__a, e -> cast(e.__y as double)) AS __ys",
-    )
-    one = one.filter(F.col("n_days") > 2)
-    lvl = (
-        "aggregate(slice(__ys, 2, cast(t - 2 as int)),"
-        " element_at(__ys, 1), (acc, y) ->"
-        " 0.3D * y + 0.7D * acc)"
-    )
-    err = f"(element_at(__ys, cast(t as int)) - {lvl})"
-    one = (
-        one
-        .withColumn(
-            "__cum",
-            F.expr(
-                "aggregate(sequence(2L, n_days), 0.0D,"
-                f" (acc, t) -> acc + {err})"
-            ),
-        )
-        .withColumn(
-            "__sad",
-            F.expr(
-                "aggregate(sequence(2L, n_days), 0.0D,"
-                f" (acc, t) -> acc + abs({err}))"
-            ),
-        )
-    )
-    one = one.filter(F.col("__sad") > 0.0)
-    mad = F.col("__sad") / (F.col("n_days") - 1).cast("double")
-    ts = F.col("__cum") / mad
-    return one.select(
-        "n_days",
-        F.lit(0.3).alias("alpha"),
-        _r6(F.col("__cum")).alias("cum_error"),
-        _r6(mad).alias("mad"),
-        _r6(ts).alias("tracking_signal"),
-        (F.abs(ts) > F.lit(4.0)).alias("alarm"),
-        F.when(ts > 0.0, F.lit("under_forecasting"))
-        .when(ts < 0.0, F.lit("over_forecasting"))
-        .otherwise(F.lit("unbiased"))
-        .alias("bias_direction"),
-    )
-
-
-def _tracking_sql() -> str:
-    lvl = (
-        "list_reduce(list_slice(ys, 1, t - 1), (acc, y) ->"
-        " 0.3 * y + 0.7 * acc)"
-    )
-    err = f"(ys[t] - {lvl})"
-    return f"""
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), one AS (
-  SELECT list(CAST(y AS DOUBLE) ORDER BY x) AS ys,
-    CAST(count(*) AS BIGINT) AS n
-  FROM day
-), f AS (
-  SELECT n,
-    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      list_transform(range(2, CAST(n + 1 AS INTEGER)),
-        t -> {err})), (acc, v) -> acc + v) AS cum,
-    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      list_transform(range(2, CAST(n + 1 AS INTEGER)),
-        t -> abs({err}))), (acc, v) -> acc + v) AS sad
-  FROM one WHERE n > 2
-)
-SELECT n AS n_days, 0.3 AS alpha,
-  round(cum, 6) AS cum_error,
-  round(sad / CAST(n - 1 AS DOUBLE), 6) AS mad,
-  round(cum / (sad / CAST(n - 1 AS DOUBLE)), 6) AS tracking_signal,
-  (abs(cum / (sad / CAST(n - 1 AS DOUBLE))) > 4.0) AS alarm,
-  CASE WHEN cum / (sad / CAST(n - 1 AS DOUBLE)) > 0
-         THEN 'under_forecasting'
-       WHEN cum / (sad / CAST(n - 1 AS DOUBLE)) < 0
-         THEN 'over_forecasting'
-       ELSE 'unbiased' END AS bias_direction
-FROM f WHERE sad > 0
-"""
-
-
-SQL_TRACKING_SIGNAL = _tracking_sql()
-
-QUERIES["tracking_signal"] = q_tracking_signal
-_RAW_ORACLES["tracking_signal"] = SQL_TRACKING_SIGNAL
-
-
 def q_g_test(spark, sf_dir):
     """Likelihood-ratio G-test of independence with the Williams
     correction on the same daypart x event-type table as
@@ -22043,7 +17949,7 @@ def q_nelson_aalen(spark, sf_dir):
     so the cumulative H and its variance are prefix folds over the
     collected bin-ascending array — each d_i/n_i one exact-long
     division, every prefix its own identical fold on BOTH engines
-    (the tracking_signal O(B^2) convention). Returns the curve at
+    (O(B^2) over the bounded bin count). Returns the curve at
     every event bin."""
     from mpds_spark.operators.util import scratch_persist
 
@@ -22168,463 +18074,6 @@ FROM ex WHERE r.r > 0
 
 QUERIES["nelson_aalen"] = q_nelson_aalen
 _RAW_ORACLES["nelson_aalen"] = SQL_NELSON_AALEN
-
-
-def q_theta_forecast(spark, sf_dir):
-    """Classical Theta-method 1/2/3-day-ahead forecasts of daily
-    event volume (Assimakopoulos & Nikolopoulos IJF 2000 — the M3
-    competition winner; Hyndman & Billah IJF 2003 proved it is SES
-    with drift, which is why it pairs here with ses_alpha_grid and
-    tracking_signal as the deployed-forecaster tier): theta-0 line =
-    the OLS trend a + b t (durbin_watson's exact-integer machinery:
-    a, b are exact-long ratios), theta-2 line = 2 y_t - (a + b t)
-    (doubles via single exact divisions), SES(alpha = 0.3, seeded at
-    the first element) smooths the theta-2 line — Spark folds
-    slice(...) seeded with element 1, DuckDB list_reduce seeds
-    natively, identical float sequences — and the h-step forecast
-    averages the extrapolated theta-0 line with the theta-2 level.
-    2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__x", "__y"))
-        ).alias("__a"),
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__Sy"),
-    ).selectExpr(
-        "n_days", "__Sy",
-        "transform(__a, e -> e.__y) AS __ys",
-    )
-    one = (
-        one
-        .withColumn("__St", F.expr("n_days * (n_days + 1) div 2"))
-        .withColumn(
-            "__St2",
-            F.expr("n_days * (n_days + 1) * (2 * n_days + 1) div 6"),
-        )
-        .withColumn(
-            "__Sty",
-            F.expr(
-                "aggregate(sequence(1L, n_days), 0L, (acc, t) ->"
-                " acc + t * element_at(__ys, cast(t as int)))"
-            ),
-        )
-    )
-    one = (
-        one
-        .withColumn("__D", F.expr("n_days * __St2 - __St * __St"))
-        .withColumn("__Nb", F.expr("n_days * __Sty - __St * __Sy"))
-        .filter((F.col("n_days") > 2) & (F.col("__D") > 0))
-        .withColumn(
-            "__b", F.expr("cast(__Nb as double) / cast(__D as double)")
-        )
-        .withColumn(
-            "__a0",
-            F.expr(
-                "(cast(__Sy as double) - (cast(__Nb as double)"
-                " / cast(__D as double)) * cast(__St as double))"
-                " / cast(n_days as double)"
-            ),
-        )
-    )
-    one = one.withColumn(
-        "__t2",
-        F.expr(
-            "transform(sequence(1L, n_days), t ->"
-            " 2.0D * cast(element_at(__ys, cast(t as int)) as double)"
-            " - (__a0 + __b * cast(t as double)))"
-        ),
-    ).withColumn(
-        "__l",
-        F.expr(
-            "aggregate(slice(__t2, 2, cast(n_days - 1 as int)),"
-            " element_at(__t2, 1), (acc, v) ->"
-            " 0.3D * v + 0.7D * acc)"
-        ),
-    )
-
-    def fc(h):
-        return _r6(
-            F.lit(0.5)
-            * (F.col("__a0")
-               + F.col("__b")
-               * (F.col("n_days") + F.lit(h)).cast("double"))
-            + F.lit(0.5) * F.col("__l")
-        ).alias(f"forecast_{h}")
-
-    return one.select(
-        "n_days",
-        _r6(F.col("__b")).alias("trend_slope"),
-        _r6(F.col("__a0")).alias("trend_intercept"),
-        _r6(F.col("__l")).alias("theta2_level"),
-        fc(1),
-        fc(2),
-        fc(3),
-        _r6(
-            F.expr(
-                "cast(element_at(__ys, cast(n_days as int))"
-                " as double)"
-            )
-        ).alias("naive_last"),
-    )
-
-
-SQL_THETA_FORECAST = """
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), one AS (
-  SELECT list(y ORDER BY x) AS ys,
-    CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS Sy
-  FROM day
-), mo AS (
-  SELECT ys, n, Sy,
-    n * (n + 1) // 2 AS St,
-    n * (n + 1) * (2 * n + 1) // 6 AS St2,
-    list_sum(list_transform(range(1, CAST(n + 1 AS INTEGER)),
-      t -> t * ys[t])) AS Sty
-  FROM one
-), dd AS (
-  SELECT ys, n, Sy, St,
-    n * St2 - St * St AS D,
-    n * Sty - St * Sy AS Nb
-  FROM mo
-), ab AS (
-  SELECT ys, n,
-    CAST(Nb AS DOUBLE) / CAST(D AS DOUBLE) AS b,
-    (CAST(Sy AS DOUBLE) - (CAST(Nb AS DOUBLE) / CAST(D AS DOUBLE))
-     * CAST(St AS DOUBLE)) / CAST(n AS DOUBLE) AS a0
-  FROM dd WHERE n > 2 AND D > 0
-), t2 AS (
-  SELECT n, b, a0, ys,
-    list_transform(range(1, CAST(n + 1 AS INTEGER)), t ->
-      2.0 * CAST(ys[t] AS DOUBLE)
-      - (a0 + b * CAST(t AS DOUBLE))) AS th2
-  FROM ab
-), lv AS (
-  SELECT n, b, a0, ys,
-    list_reduce(th2, (acc, v) -> 0.3 * v + 0.7 * acc) AS l
-  FROM t2
-)
-SELECT n AS n_days,
-  round(b, 6) AS trend_slope,
-  round(a0, 6) AS trend_intercept,
-  round(l, 6) AS theta2_level,
-  round(0.5 * (a0 + b * CAST(n + 1 AS DOUBLE)) + 0.5 * l, 6)
-    AS forecast_1,
-  round(0.5 * (a0 + b * CAST(n + 2 AS DOUBLE)) + 0.5 * l, 6)
-    AS forecast_2,
-  round(0.5 * (a0 + b * CAST(n + 3 AS DOUBLE)) + 0.5 * l, 6)
-    AS forecast_3,
-  round(CAST(ys[CAST(n AS INTEGER)] AS DOUBLE), 6) AS naive_last
-FROM lv
-"""
-
-QUERIES["theta_forecast"] = q_theta_forecast
-_RAW_ORACLES["theta_forecast"] = SQL_THETA_FORECAST
-
-
-def q_allan_variance(spark, sf_dir):
-    """Non-overlapping Allan variance of daily event volume at
-    averaging times tau = 1, 2, 4 days (Allan Proc. IEEE 1966 — the
-    clock-community's noise-type discriminator, and for event-rate
-    telemetry the cleanest 'what KIND of noise is this?' instrument:
-    white rate noise gives AVAR ~ tau^-1, flicker floors it flat,
-    random-walk drift makes it RISE with tau — the log-log slope
-    between consecutive taus routes directly to how long a rate
-    feature may be averaged before drift dominates; the
-    multi-resolution companion to variance_ratio and
-    hurst_variance_plot). EVERYTHING is exact integers: block sums
-    S_k are exact longs, AVAR(tau) = sum (S_k - S_{k-1})^2 /
-    (2 (m-1) tau^2) is ONE exact-long division (the tau^2 from the
-    block-mean denominators factors out), and only the reported
-    ADEV = sqrt(AVAR) and the slope ln-ratio are IEEE doubles. ONE
-    day aggregate; the 3 tau rows explode from the 1-row frame.
-    2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__x")
-    )
-    day = ev.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__x", "__y"))
-        ).alias("__a"),
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-    ).selectExpr(
-        "n_days", "transform(__a, e -> e.__y) AS __ys"
-    )
-    # per-tau: m = n div tau blocks, S_k = sum of block k,
-    # num = sum_{k>=2} (S_k - S_{k-1})^2  (exact longs)
-    blk = (
-        "aggregate(sequence(1L, {tau}L), 0L, (acc, j) -> acc"
-        " + element_at(__ys, cast((k - 1) * {tau} + j as int)))"
-    )
-    row = (
-        "named_struct('tau', {tau}L,"
-        " 'm', n_days div {tau},"
-        " 'num', aggregate(sequence(2L, n_days div {tau}), 0L,"
-        " (acc, k) -> acc + ({sk} - {skm1}) * ({sk} - {skm1})))"
-    )
-
-    def mk(tau):
-        sk = blk.format(tau=tau)
-        skm1 = (
-            "aggregate(sequence(1L, {tau}L), 0L, (acc, j) -> acc"
-            " + element_at(__ys, cast((k - 2) * {tau} + j as int)))"
-        ).format(tau=tau)
-        return row.format(tau=tau, sk=sk, skm1=skm1)
-
-    one = one.withColumn(
-        "__rows",
-        F.expr("array(" + ", ".join(mk(t) for t in (1, 2, 4)) + ")"),
-    )
-    out = one.select(
-        "n_days", F.explode("__rows").alias("__r")
-    ).select(
-        "n_days",
-        F.expr("__r.tau").alias("tau_days"),
-        F.expr("__r.m").alias("m_blocks"),
-        F.expr("__r.num").alias("diff2_sum"),
-        _r6(
-            F.expr(
-                "cast(__r.num as double)"
-                " / (2.0D * cast(__r.m - 1 as double)"
-                " * cast(__r.tau * __r.tau as double))"
-            )
-        ).alias("avar"),
-        _r6(
-            F.sqrt(
-                F.expr(
-                    "cast(__r.num as double)"
-                    " / (2.0D * cast(__r.m - 1 as double)"
-                    " * cast(__r.tau * __r.tau as double))"
-                )
-            )
-        ).alias("adev"),
-    ).filter(F.col("m_blocks") > 1)
-    return out
-
-
-SQL_ALLAN_VARIANCE = """
-WITH day AS (
-  SELECT CAST(day(ts) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), one AS (
-  SELECT list(y ORDER BY x) AS ys, CAST(count(*) AS BIGINT) AS n
-  FROM day
-), taus AS (
-  SELECT n, ys, unnest([1, 2, 4]) AS tau FROM one
-), rows_ AS (
-  SELECT n, CAST(tau AS BIGINT) AS tau, n // tau AS m,
-    list_sum(list_prepend(CAST(0 AS BIGINT),
-      list_transform(range(2, CAST(n // tau + 1 AS INTEGER)), k ->
-        (list_sum(list_transform(range(1, tau + 1), j ->
-           ys[(k - 1) * tau + j]))
-         - list_sum(list_transform(range(1, tau + 1), j ->
-           ys[(k - 2) * tau + j])))
-        * (list_sum(list_transform(range(1, tau + 1), j ->
-           ys[(k - 1) * tau + j]))
-         - list_sum(list_transform(range(1, tau + 1), j ->
-           ys[(k - 2) * tau + j])))))) AS num
-  FROM taus
-)
-SELECT n AS n_days, tau AS tau_days, m AS m_blocks,
-  CAST(num AS BIGINT) AS diff2_sum,
-  round(CAST(num AS DOUBLE)
-    / (2.0 * CAST(m - 1 AS DOUBLE) * CAST(tau * tau AS DOUBLE)), 6)
-    AS avar,
-  round(sqrt(CAST(num AS DOUBLE)
-    / (2.0 * CAST(m - 1 AS DOUBLE) * CAST(tau * tau AS DOUBLE))), 6)
-    AS adev
-FROM rows_ WHERE m > 1
-"""
-
-QUERIES["allan_variance"] = q_allan_variance
-_RAW_ORACLES["allan_variance"] = SQL_ALLAN_VARIANCE
-
-
-def q_recurrence_quantification(spark, sf_dir):
-    """Recurrence quantification of the daily volume series at the
-    SampEn tolerance r = 0.5 * SD (Webber & Zbilut J. Appl. Physiol.
-    1994; Marwan et al. Phys. Rep. 2007 — the recurrence-plot
-    summary trio: RR = share of day pairs whose volumes recur within
-    tolerance (the density sample_entropy's B count normalizes),
-    DET = share of recurrent pairs sitting on a diagonal line of
-    length >= 2 (recurring SEQUENCES, not just values — high DET
-    with low RR is the signature of deterministic dynamics, the
-    thing that makes tomorrow predictable from a matched history),
-    and LMAX = the longest such diagonal, whose inverse estimates
-    divergence). All pair predicates compare EXACT-INTEGER distances
-    against the one deterministic IEEE tolerance (the sample_entropy
-    convention), so the recurrence matrix is identical on BOTH
-    engines and RR/DET/LMAX counts are EXACT LONGS from bounded
-    O(n^2)/O(n^3) folds on the 1-row frame (n = 31 days -> <=27k
-    fold steps, constant at any corpus size). 2 shuffles."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__day"),
-    )
-    day = ev.groupBy("__day").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    one = day.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("__y").cast("long").alias("__Sy"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("__Syy"),
-        F.array_sort(
-            F.collect_list(F.struct("__day", "__y"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn("__yarr", F.expr("transform(__a, s -> s.__y)"))
-        .withColumn("__ss", F.expr("n_days * __Syy - __Sy * __Sy"))
-        .filter("n_days > 4 AND n_days * __Syy - __Sy * __Sy > 0")
-    )
-    nd = F.col("n_days").cast("double")
-    s = F.sqrt(
-        F.col("__ss").cast("double") / (nd * (nd - F.lit(1.0)))
-    )
-    one = one.withColumn("__rr_tol", F.lit(0.5) * s)
-    rec = (
-        "cast(abs(element_at(__yarr, cast({i} as int))"
-        " - element_at(__yarr, cast({j} as int))) as double)"
-        " <= __rr_tol"
-    )
-    r_ij = rec.format(i="i", j="j")
-    r_n = rec.format(i="i + 1", j="j + 1")
-    r_p = rec.format(i="i - 1", j="j - 1")
-    one = (
-        one
-        .withColumn(
-            "__nrec",
-            F.expr(
-                "aggregate(sequence(1L, n_days - 1), 0L, (ai, i) ->"
-                " ai + aggregate(sequence(i + 1, n_days), 0L,"
-                f" (aj, j) -> aj + IF({r_ij}, 1L, 0L)))"
-            ),
-        )
-        .withColumn(
-            "__ndet",
-            F.expr(
-                "aggregate(sequence(1L, n_days - 1), 0L, (ai, i) ->"
-                " ai + aggregate(sequence(i + 1, n_days), 0L,"
-                f" (aj, j) -> aj + IF(({r_ij}) AND ("
-                f" (i < n_days AND j < n_days AND ({r_n}))"
-                f" OR (i > 1 AND ({r_p}))"
-                "), 1L, 0L)))"
-            ),
-        )
-        .withColumn(
-            # longest diagonal: for offset d and start s, the run
-            # length is (first non-recurrent k >= s) - s
-            "__lmax",
-            F.expr(
-                "aggregate(sequence(1L, n_days - 1), 0L, (am, d) ->"
-                " greatest(am, aggregate("
-                "  sequence(1L, n_days - d), 0L, (as_, s) ->"
-                "  greatest(as_, aggregate("
-                "   sequence(s, n_days - d), n_days - d + 1 - s,"
-                "   (az, k) -> least(az, IF("
-                + rec.format(i="k", j="k + d")
-                + ", n_days - d + 1 - s, k - s)))))))"
-            ),
-        )
-    )
-    one = one.filter(F.col("__nrec") > 0)
-    npairs = (
-        F.col("n_days") * (F.col("n_days") - 1) / F.lit(2)
-    ).cast("double")
-    det = F.col("__ndet").cast("double") / F.col("__nrec").cast(
-        "double"
-    )
-    return one.select(
-        "n_days",
-        _r6(F.col("__rr_tol")).alias("r_tol"),
-        F.col("__nrec").alias("n_recurrent"),
-        _r6(F.col("__nrec").cast("double") / npairs)
-        .alias("recurrence_rate"),
-        _r6(det).alias("determinism"),
-        F.col("__lmax").alias("lmax"),
-        F.when(det > 0.7, F.lit("deterministic"))
-        .when(det < 0.3, F.lit("stochastic"))
-        .otherwise(F.lit("mixed"))
-        .alias("band"),
-    )
-
-
-SQL_RECURRENCE_QUANTIFICATION = """
-WITH day AS (
-  SELECT day(ts) AS day, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY day(ts)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS Sy,
-    CAST(sum(y * y) AS BIGINT) AS Syy,
-    list(y ORDER BY day) AS yarr
-  FROM day
-), pre AS (
-  SELECT n, yarr,
-    0.5 * sqrt(CAST(n * Syy - Sy * Sy AS DOUBLE)
-      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) AS r
-  FROM one WHERE n > 4 AND n * Syy - Sy * Sy > 0
-), cnt AS (
-  SELECT n, r,
-    list_sum(list_transform(range(1, n), i ->
-      list_sum(list_prepend(CAST(0 AS BIGINT),
-        list_transform(range(i + 1, CAST(n + 1 AS INTEGER)), j ->
-          CASE WHEN CAST(abs(yarr[i] - yarr[j]) AS DOUBLE) <= r
-          THEN 1 ELSE 0 END))))) AS nrec,
-    list_sum(list_transform(range(1, n), i ->
-      list_sum(list_prepend(CAST(0 AS BIGINT),
-        list_transform(range(i + 1, CAST(n + 1 AS INTEGER)), j ->
-          CASE WHEN CAST(abs(yarr[i] - yarr[j]) AS DOUBLE) <= r
-            AND ((i < n AND j < n AND
-              CAST(abs(yarr[i + 1] - yarr[j + 1]) AS DOUBLE) <= r)
-             OR (i > 1 AND
-              CAST(abs(yarr[i - 1] - yarr[j - 1]) AS DOUBLE) <= r))
-          THEN 1 ELSE 0 END))))) AS ndet,
-    list_max(list_transform(range(1, n), d ->
-      list_max(list_transform(range(1, CAST(n - d + 1 AS INTEGER)),
-        s -> list_reduce(list_prepend(n - d + 1 - s,
-          list_transform(range(s, CAST(n - d + 1 AS INTEGER)), k ->
-            CASE WHEN CAST(abs(yarr[k] - yarr[k + d]) AS DOUBLE)
-              <= r THEN n - d + 1 - s ELSE k - s END)),
-          (acc, v) -> least(acc, v)))))) AS lmax
-  FROM pre
-)
-SELECT n AS n_days,
-  round(r, 6) AS r_tol,
-  CAST(nrec AS BIGINT) AS n_recurrent,
-  round(CAST(nrec AS DOUBLE)
-    / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE) / 2.0), 6)
-    AS recurrence_rate,
-  round(CAST(ndet AS DOUBLE) / CAST(nrec AS DOUBLE), 6)
-    AS determinism,
-  CAST(lmax AS BIGINT) AS lmax,
-  CASE WHEN CAST(ndet AS DOUBLE) / CAST(nrec AS DOUBLE) > 0.7
-         THEN 'deterministic'
-       WHEN CAST(ndet AS DOUBLE) / CAST(nrec AS DOUBLE) < 0.3
-         THEN 'stochastic'
-       ELSE 'mixed' END AS band
-FROM cnt WHERE nrec > 0
-"""
-
-QUERIES["recurrence_quantification"] = q_recurrence_quantification
-_RAW_ORACLES["recurrence_quantification"] = (
-    SQL_RECURRENCE_QUANTIFICATION
-)
-
 
 def q_rare_word_profile(spark, sf_dir):
     """Honoré's R, Sichel's S and Brunet's W per source from the

@@ -47,17 +47,11 @@ def test_locf_default_fills_leading_nulls(spark):
     assert got["value_locf"].tolist() == [-1.0, 5.0, 5.0]
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("strategy", ["window", "pandas"])
-def test_interpolate_matches_reference(spark, strategy):
+def test_interpolate_matches_reference(spark):
     pdf = make_entity_series(null_frac=0.5)
     df = spark.createDataFrame(pdf)
     got = (
-        interpolate(
-            df, value="value", default=0.0, leakage_ok=True, strategy=strategy
-        )
+        interpolate(df, value="value", default=0.0, leakage_ok=True)
         .orderBy("entity_id", "ts")
         .toPandas()
     )
@@ -85,21 +79,19 @@ def test_interpolate_all_null_entity_gets_default(spark):
             "value": [None, None],
         }
     )
-    for strategy in ("window", "pandas"):
-        got = (
-            interpolate(
-                spark.createDataFrame(
-                    pdf, "entity_id string, ts double, value double"
-                ),
-                value="value",
-                default=3.5,
-                leakage_ok=True,
-                strategy=strategy,
-            )
-            .orderBy("ts")
-            .toPandas()
+    got = (
+        interpolate(
+            spark.createDataFrame(
+                pdf, "entity_id string, ts double, value double"
+            ),
+            value="value",
+            default=3.5,
+            leakage_ok=True,
         )
-        assert got["value_interp"].tolist() == [3.5, 3.5]
+        .orderBy("ts")
+        .toPandas()
+    )
+    assert got["value_interp"].tolist() == [3.5, 3.5]
 
 
 def test_interpolate_requires_leakage_opt_in(spark):

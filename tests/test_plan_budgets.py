@@ -365,9 +365,9 @@ BUDGETS = {
     # PMI: persisted postings (cached-branch convention: no shuffle
     # budget); the 2 BNLJs are the registered 1-row T/N totals
     "pmi_pairs": {"python": 0, "cartesian": 0, "bnlj": 2},
-    # SAX: entity window + (entity,seg) agg + tiny moment agg; the
-    # word is one final entity agg, joins broadcast
-    "sax_symbols": {"shuffle": 3, "python": 0, "cartesian": 0, "bnlj": 0},
+    # SAX: ONE entity exchange; the window carries the entity moments,
+    # and the (entity,seg) and word aggs reuse its partitioning
+    "sax_symbols": {"shuffle": 1, "python": 0, "cartesian": 0, "bnlj": 0},
     # Holt: ONE entity exchange, serial struct fold inside codegen
     "holt_trend": {"shuffle": 1, "python": 0, "cartesian": 0, "bnlj": 0},
     # IVM/simpson: one fact agg + 1-row registered broadcast each
@@ -469,13 +469,6 @@ BUDGETS = {
     # segmented: ONE day agg + tiny 31-row candidate windows + argmin
     "segmented_trend": {"shuffle": 2, "python": 0, "cartesian": 0,
                         "bnlj": 0},
-    # mann-kendall: persisted 31-row day frame (cached-branch
-    # convention); the pair sweep + 1-row combine are the registered
-    # BNLJs — bounded 31x31, never a corpus join
-    "mann_kendall": {"python": 0, "cartesian": 0, "bnlj": 2},
-    # runs test: ONE day agg + tiny-frame rank/lag windows; the 1-row
-    # med2 broadcast is the registered BNLJ
-    "runs_test": {"shuffle": 6, "python": 0, "cartesian": 0, "bnlj": 1},
     # bpe: persisted posting frame (cached-branch convention); the two
     # 1-row top/total combines are the registered BNLJs
     "bpe_merge_step": {"python": 0, "cartesian": 0, "bnlj": 2},
@@ -492,30 +485,15 @@ BUDGETS = {
     # median joins back as a broadcast hash join, never BNLJ
     "levene_test": {"shuffle": 3, "python": 0, "cartesian": 0,
                     "bnlj": 0},
-    # cochran-armitage: ONE day agg + global moment agg, no windows
-    "cochran_armitage": {"shuffle": 2, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
     # isotonic: ONE bin agg + global collect; minimax is array math
     "isotonic_calibration": {"shuffle": 2, "python": 0, "cartesian": 0,
                              "bnlj": 0},
-    # gumbel: ONE day-max agg + global moment agg
-    "gumbel_maxima": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
     # edit distance: (user,day) agg + user lag window + histogram agg
     "session_edit_distance": {"shuffle": 3, "python": 0,
                               "cartesian": 0, "bnlj": 0},
     # bradley-terry: persisted 1-row iteration frame fans out to the
     # 5-way output union (cached-branch convention)
     "bradley_terry": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # ransac: persisted day frame; candidate pair join + tol/win
-    # broadcasts + sweep/refit joins are the registered bounded BNLJs
-    # (465x31 worst case, never a corpus join)
-    "ransac_trend": {"python": 0, "cartesian": 0, "bnlj": 5},
-    # dft: persisted 1-row power frame fans out to the 8-way union
-    "dft_periodogram": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # sprt: ONE day agg + tiny cumulative windows
-    "sprt_monitor": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
     # kruskal: histogram agg + rank window + broadcast rank join +
     # group agg + tiny folds; 1-row tie combine is the registered BNLJ
     "kruskal_wallis": {"shuffle": 6, "python": 0, "cartesian": 0,
@@ -528,21 +506,9 @@ BUDGETS = {
     # registered BNLJ
     "cox_ph": {"shuffle": 4, "python": 0, "cartesian": 0,
                "bnlj": 1},
-    # friedman: persisted 1-row rank-moment frame fans out to the
-    # 5-way output union (cached-branch convention); ranks are
-    # row-level expressions over the 5 conditional-count columns —
-    # no grid cross, no window
-    "friedman_test": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # jarque-bera: cell agg + per-type raw-power-sum agg, central
-    # moments by binomial expansion — ONE corpus pass, no join
-    "jarque_bera": {"shuffle": 2, "python": 0, "cartesian": 0,
-                    "bnlj": 0},
     # box-cox: persisted 1-row histogram-fold frame fans out to the
     # 5-way lambda-grid union (cached-branch convention)
     "box_cox_lambda": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # dickey-fuller: ONE day agg + tiny lag window + moment agg
-    "dickey_fuller": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
     # kmv: stacked distinct + scope rank window (WindowGroupLimit
     # heap, asserted below) + two scope aggs + 6-row join
     "kmv_distinct": {"shuffle": 4, "python": 0, "cartesian": 0,
@@ -556,16 +522,10 @@ BUDGETS = {
     # pooled fold
     "horvitz_thompson": {"shuffle": 5, "python": 0, "cartesian": 0,
                          "bnlj": 0},
-    # ses: persisted 1-row fold frame fans out to the 9-way alpha
-    # grid union (cached-branch convention)
-    "ses_alpha_grid": {"python": 0, "cartesian": 0, "bnlj": 0},
     # stump: histogram agg + tiny prefix window + TakeOrdered argmin
     # (asserted below)
     "best_split_stump": {"shuffle": 2, "python": 0, "cartesian": 0,
                          "bnlj": 0},
-    # tukey: persisted 1-row moment frame fans out to the 10 pair
-    # rows (cached-branch convention)
-    "tukey_hsd": {"python": 0, "cartesian": 0, "bnlj": 0},
     # ledoit-wolf: persisted codes + dim^2 scatter (cached-branch,
     # the pca shape); si-broadcast per-row/cell passes + two 1-row
     # moment combines are the registered BNLJs
@@ -573,16 +533,9 @@ BUDGETS = {
     # persisted kernel frame's cached plan is re-displayed per
     # consumer, inflating the TEXTUAL count to 7)
     "ledoit_wolf_shrinkage": {"python": 7, "cartesian": 0, "bnlj": 4},
-    # page-hinkley: ONE day agg + 1-row prefix-fold arrays
-    "page_hinkley": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
     # l-moments: histogram agg + tiny rank window + moment agg
     "l_moments": {"shuffle": 2, "python": 0, "cartesian": 0,
                   "bnlj": 0},
-    # ols-influence: ONE day agg + 1-row moment broadcast back onto
-    # the <=31-day frame (registered BNLJ)
-    "ols_influence": {"shuffle": 3, "python": 0, "cartesian": 0,
-                      "bnlj": 1},
     # wilson: ONE type agg + tiny total window
     "wilson_intervals": {"shuffle": 2, "python": 0, "cartesian": 0,
                          "bnlj": 0},
@@ -607,71 +560,25 @@ BUDGETS = {
     # + 1-row AP-fold combine (registered BNLJ)
     "pr_curve_ap": {"shuffle": 4, "python": 0, "cartesian": 0,
                     "bnlj": 1},
-    # seasonal-strength: day agg + dow agg + tiny 7-row window
-    "seasonal_strength": {"shuffle": 3, "python": 0, "cartesian": 0,
-                          "bnlj": 0},
     # cochran-q: ONE corpus aggregate, nothing else
     "cochran_q": {"shuffle": 1, "python": 0, "cartesian": 0,
                   "bnlj": 0},
-    # capture-recapture: user agg + 1-row global agg
-    "capture_recapture": {"shuffle": 2, "python": 0, "cartesian": 0,
-                          "bnlj": 0},
     # odds-ratio: ONE corpus aggregate, nothing else
     "odds_ratio_ci": {"shuffle": 1, "python": 0, "cartesian": 0,
                       "bnlj": 0},
-    # kpss: day agg + tiny single-partition day window; folds are
-    # array exprs on the 1-row frame
-    "kpss_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
     # mantel-haenszel: ONE corpus agg to the 7-row strata frame +
     # 1-row fold agg
     "mantel_haenszel": {"shuffle": 2, "python": 0, "cartesian": 0,
                         "bnlj": 0},
-    # variance-ratio: persisted 1-row moment frame fans out to the
-    # 3 q-rows (cached-branch convention — the printed plan repeats
-    # the cached subtree per branch, so no shuffle cap)
-    "variance_ratio": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # granger: persisted 1-row moment frame fans out to the 2
-    # direction rows (cached-branch)
-    "granger_causality": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # durbin-watson: day agg + 1-row global agg; residuals are array
-    # folds on the 1-row frame
-    "durbin_watson": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
     # bartlett: ONE corpus agg to the 5-row type frame + 1-row fold
     # agg
     "bartlett_test": {"shuffle": 2, "python": 0, "cartesian": 0,
                       "bnlj": 0},
-    # breusch-pagan: same day agg + 1-row global agg as durbin_watson;
-    # the auxiliary regression is array folds on the 1-row frame
-    "breusch_pagan": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # cronbach: ONE conditional corpus agg to the <=31-row day frame +
-    # 1-row moment agg; alpha is a fixed expression tree
-    "cronbach_alpha": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    # pettitt: day agg + 1-row global agg; the U array is a bounded
-    # nested fold on the 1-row frame
-    "pettitt_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
     # cliffs-delta: corpus agg to the domain-bounded distinct-cents
     # frame + cumulative window over that frame (the window's single-
     # partition exchange fuses with the 1-row agg) — 2 exchanges
     "cliffs_delta": {"shuffle": 2, "python": 0, "cartesian": 0,
                      "bnlj": 0},
-    # grubbs: day agg + 1-row global agg; argmax deviation is an
-    # exact-integer array scan on the 1-row frame
-    "grubbs_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                    "bnlj": 0},
-    # taylor: (day,hour) cell agg (<=744 rows, calendar-bounded) +
-    # 1-row collect; per-hour moments and the log-log OLS are
-    # bounded folds on the 1-row frame
-    "taylor_law": {"shuffle": 2, "python": 0, "cartesian": 0,
-                   "bnlj": 0},
-    # sample-entropy: day agg + 1-row global agg; the <=378-pair
-    # template counts are bounded nested folds on the 1-row frame
-    "sample_entropy": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
     # ndcg: persisted part-cell frame (cached-branch); the two BNLJ
     # join the three 1-row side frames; both top-10s are heaps
     # (asserted below)
@@ -687,19 +594,6 @@ BUDGETS = {
     # score-domain frame + 1-row argmax
     "youden_j": {"shuffle": 3, "python": 0, "cartesian": 0,
                  "bnlj": 0},
-    # lin-ccc: ONE conditional day agg + 1-row moment agg
-    "lin_ccc": {"shuffle": 2, "python": 0, "cartesian": 0,
-                "bnlj": 0},
-    # bland-altman: same day agg + 1-row moments; the within-band
-    # count folds day-ascending on the 1-row frame
-    "bland_altman": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    # croston: day agg + 1-row demand-epoch folds
-    "croston_forecast": {"shuffle": 2, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
-    # tracking-signal: day agg + 1-row O(n^2) prefix refolds
-    "tracking_signal": {"shuffle": 2, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
     # g-test: cell agg + 1-row marginal folds over the <=20 cells
     "g_test": {"shuffle": 2, "python": 0, "cartesian": 0,
                "bnlj": 0},
@@ -712,15 +606,6 @@ BUDGETS = {
     # censor-cutoff join
     "nelson_aalen": {"shuffle": 4, "python": 0, "cartesian": 0,
                      "bnlj": 1},
-    # theta: day agg + 1-row trend moments and theta2 SES fold
-    "theta_forecast": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    # allan: day agg + 1-row exact block-diff folds, 3-row explode
-    "allan_variance": {"shuffle": 2, "python": 0, "cartesian": 0,
-                       "bnlj": 0},
-    # rqa: day agg + 1-row bounded O(n^2)/O(n^3) integer folds
-    "recurrence_quantification": {"shuffle": 2, "python": 0,
-                                  "cartesian": 0, "bnlj": 0},
     # rare-words: (source,word) agg + source re-agg
     "rare_word_profile": {"shuffle": 2, "python": 0, "cartesian": 0,
                           "bnlj": 0},

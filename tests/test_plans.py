@@ -75,12 +75,8 @@ BNLJ_BY_DESIGN = {
     "kendall_tau",         # cell-pair sweep over the <=100-cell frame
     "kruskal_wallis",      # 1-row tie-term combine
     "logrank_test",        # broadcast 1-row corpus-max censor boundary
-    "mann_kendall",        # bounded 31x31 day-pair sweep + 1-row combine
-    "ransac_trend",        # bounded 465x31 candidate sweep joins
-    "runs_test",           # 1-row combine
     "newman_modularity",   # 1-row edge-moment x 1-row degree-moment
     "ledoit_wolf_shrinkage",  # si broadcast + 1-row moment combines
-    "ols_influence",       # broadcast 1-row moment fit x day frame
     "pr_curve_ap",         # 1-row AP fold x best-F1 row combine
     # bounded 1-row combines registered in BUDGETS with bnlj >= 1
     # (sync-checked against test_plan_budgets by name):
@@ -371,3 +367,22 @@ def test_no_orphan_module_privates():
     assert defined
     orphans = sorted(f"{p}:{n}" for n, p in defined.items() if n not in loaded)
     assert not orphans, orphans
+
+
+def test_every_query_function_is_registered():
+    """Every top-level `q_*` function in queries.py is a value in QUERIES,
+    so unregistering a catalog entry cannot leave its query behind."""
+    import ast
+    import inspect
+
+    from mpds_spark import queries
+
+    tree = ast.parse(inspect.getsource(queries))
+    names = [
+        n.name for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")
+    ]
+    assert names
+    registered = set(queries.QUERIES.values())
+    unregistered = [n for n in names if getattr(queries, n) not in registered]
+    assert not unregistered, unregistered

@@ -17,7 +17,6 @@ import oracles
 from mpds_spark.functions import kernels as K
 from mpds_spark.functions import mlstats as S
 from mpds_spark.functions.battery import reaction_lags
-from mpds_spark.operators.backfill import _interp_reference
 from mpds_spark.operators.sessionize import (
     remove_short_on_intervals,
     unite_adjacent_on_intervals,
@@ -74,26 +73,6 @@ def test_reaction_lags_equals_loop(vp):
     t = np.arange(len(vp), dtype=float) * 0.37
     np.testing.assert_allclose(
         reaction_lags(t, v, p), oracles.reaction_lags_loop(t, v, p)
-    )
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.one_of(st.none(), st.floats(-100, 100, allow_nan=False)),
-        min_size=1,
-        max_size=100,
-    ),
-    st.floats(-5, 5, allow_nan=False),
-)
-def test_interp_kernel_equals_reference_loop(ys, default):
-    y = np.array([np.nan if v is None else v for v in ys])
-    x = np.cumsum(np.abs(np.sin(np.arange(len(y)))) + 0.1)
-    np.testing.assert_allclose(
-        _interp_reference(x, y.copy(), default),
-        oracles.interpolate_single(x, y.copy(), default),
-        rtol=1e-12,
-        equal_nan=True,
     )
 
 
@@ -271,6 +250,50 @@ def test_locf_equals_reference(spark, series, valid_time):
             got[c].to_numpy(dtype=float), w, rtol=1e-12, equal_nan=True,
             err_msg=c,
         )
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(_short_gaps, st.one_of(st.none(), _quarters)),
+            min_size=1,
+            max_size=25,
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+    st.integers(-20, 20).map(lambda k: k / 4),
+)
+def test_interpolate_equals_reference(spark, series, default):
+    """Random null patterns (leading, trailing, interior runs, all-null
+    entities) through the window plan against the reference loop."""
+    from mpds_spark.operators.backfill import interpolate
+
+    pdf = _entity_frame(series)
+    pdf["value"] = pdf["value"].astype("float64")
+    got = (
+        interpolate(
+            spark.createDataFrame(pdf), value="value", default=default,
+            leakage_ok=True,
+        )
+        .orderBy("entity_id", "ts")
+        .toPandas()
+    )
+    s = pdf.sort_values(["entity_id", "ts"]).reset_index(drop=True)
+    want = np.concatenate([
+        oracles.interpolate_single(
+            g["ts"].to_numpy(), g["value"].to_numpy(), default
+        )
+        for _, g in s.groupby("entity_id", sort=True)
+    ])
+    np.testing.assert_allclose(
+        got["value_interp"].to_numpy(dtype=float), want, rtol=1e-12
+    )
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])

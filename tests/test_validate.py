@@ -1008,77 +1008,6 @@ def test_segmented_trend_rebuild(spark):
     assert 0.0 <= r["sse_reduction"] <= 1.0
 
 
-def test_mann_kendall_brute_force(spark):
-    """S / tie-corrected variance / continuity-corrected z vs the
-    literal O(n^2) pairwise definition in python over the same daily
-    counts (Mann 1945 eq. for S; Kendall 1975 tie variance)."""
-    from mpds_spark.queries import q_mann_kendall
-
-    r = q_mann_kendall(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        y
-        for (y,) in duckdb.sql(
-            "SELECT CAST(count(*) AS BIGINT) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    s = sum(
-        (ys[j] > ys[i]) - (ys[j] < ys[i])
-        for i in range(n)
-        for j in range(i + 1, n)
-    )
-    from collections import Counter
-
-    tie = sum(t * (t - 1) * (2 * t + 5) for t in Counter(ys).values())
-    var = (n * (n - 1) * (2 * n + 5) - tie) / 18.0
-    z = (s - 1) / var**0.5 if s > 0 else ((s + 1) / var**0.5 if s < 0 else 0.0)
-    assert (r["n_days"], r["s_stat"], r["tie_term"]) == (n, s, tie)
-    assert abs(r["var_s"] - var) < 1e-5
-    assert abs(r["z_score"] - z) < 1e-5
-    assert r["trend"] == (
-        "increasing" if s > 0 else "decreasing" if s < 0 else "no_trend"
-    )
-
-
-def test_runs_test_rebuild(spark):
-    """Runs count / moments / z vs a literal python rebuild (Wald &
-    Wolfowitz 1940), including the drop-equal-to-median treatment and
-    the doubled-median integer classification."""
-    from mpds_spark.queries import q_runs_test
-
-    r = q_runs_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CAST(day(ts) AS BIGINT), CAST(count(*) AS BIGINT) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    ys = [y for _, y in rows]
-    srt = sorted(ys)
-    n = len(srt)
-    med2 = srt[(n + 1) // 2 - 1] + srt[n // 2]
-    signs = [1 if 2 * y > med2 else 0 for y in ys if 2 * y != med2]
-    runs = 1 + sum(a != b for a, b in zip(signs, signs[1:]))
-    nk, n1 = len(signs), sum(signs)
-    n2 = nk - n1
-    e = 1.0 + 2 * n1 * n2 / nk
-    var = (
-        2 * n1 * n2 * (2 * n1 * n2 - nk) / (nk * nk * (nk - 1))
-    )
-    z = (runs - e) / var**0.5 if var > 0 else 0.0
-    assert (r["n_kept"], r["n_above"], r["n_below"], r["runs"]) == (
-        nk, n1, n2, runs,
-    )
-    assert abs(r["expected_runs"] - e) < 1e-5
-    assert abs(r["var_runs"] - var) < 1e-5
-    assert abs(r["z_score"] - z) < 1e-5
-
-
 def test_bpe_merge_step_greedy_rebuild(spark):
     """Top pair + greedy left-to-right merge count vs a literal python
     BPE application over every document (including the A==B run case
@@ -1325,44 +1254,6 @@ def test_levene_brown_forsythe_rebuild(spark):
     assert abs(r["within_ms"] - W / (N - k)) < 1e-2
 
 
-def test_cochran_armitage_rebuild(spark):
-    """T numerator and z^2 vs the literal Cochran-Armitage definition
-    T = sum s_i (x_i - n_i X/N) computed in python over the same day
-    cells (Armitage 1955 eq. 2-3)."""
-    from mpds_spark.queries import q_cochran_armitage
-
-    r = q_cochran_armitage(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    cells = duckdb.sql(
-        "SELECT CAST(day(ts) AS BIGINT), CAST(count(*) AS BIGINT),"
-        " CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END)"
-        " AS BIGINT) FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1"
-    ).fetchall()
-    N = sum(n for _, n, _ in cells)
-    X = sum(x for _, _, x in cells)
-    t = sum(s * (x - n * X / N) for s, n, x in cells)
-    t_num = N * sum(s * x for s, _, x in cells) - X * sum(
-        s * n for s, n, _ in cells
-    )
-    assert abs(t_num / N - t) < 1e-6
-    var = (X / N) * (1 - X / N) * (
-        sum(s * s * n for s, n, _ in cells)
-        - sum(s * n for s, n, _ in cells) ** 2 / N
-    )
-    z2 = (t_num / N) ** 2 / var
-    assert r["t_num"] == t_num
-    assert (r["n_events"], r["n_pos"], r["n_levels"]) == (
-        N, X, len(cells),
-    )
-    assert abs(r["z2"] - z2) < 1e-4
-    assert r["trend"] == (
-        "increasing" if t_num > 0
-        else "decreasing" if t_num < 0 else "no_trend"
-    )
-
-
 def _pava(ns, xs):
     """Classic stack-based pool-adjacent-violators (weighted means)."""
     blocks = []  # (weight, sum, span)
@@ -1406,45 +1297,6 @@ def test_isotonic_minimax_equals_pava(spark):
     # planted violators: strictly decreasing rates pool into one block
     ns2, xs2 = [10, 10, 10], [9, 5, 1]
     assert _pava(ns2, xs2) == [0.5, 0.5, 0.5]
-
-
-def test_gumbel_maxima_formula(spark):
-    """MoM fit vs a literal python computation over the same daily
-    maxima, and the quantile sanity F(rl_T) = 1 - 1/T under the fitted
-    Gumbel CDF exp(-exp(-(x-mu)/beta))."""
-    from mpds_spark.queries import q_gumbel_maxima
-
-    r = q_gumbel_maxima(spark, "/root/testdata/sf0.001").collect()[0]
-    import math
-
-    import duckdb
-
-    ms = [
-        m
-        for (m,) in duckdb.sql(
-            "SELECT CAST(max(CAST(floor(abs(value)*100+0.5)*sign(value)"
-            " AS BIGINT)) AS BIGINT) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " WHERE event_type='purchase' GROUP BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ms)
-    mean = sum(ms) / n / 100.0
-    std = (
-        (sum(m * m for m in ms) - sum(ms) ** 2 / n) / (n - 1)
-    ) ** 0.5 / 100.0
-    beta = std * math.sqrt(6.0) / math.pi
-    mu = mean - 0.5772156649015329 * beta
-    assert r["n_days"] == n
-    assert abs(r["mean_daily_max"] - mean) < 1e-4
-    assert abs(r["gumbel_mu"] - mu) < 1e-4
-    assert abs(r["gumbel_beta"] - beta) < 1e-4
-    for T, col in ((7, "return_level_7d"), (30, "return_level_30d")):
-        want = mu - beta * math.log(-math.log(1.0 - 1.0 / T))
-        assert abs(r[col] - want) < 1e-4
-        cdf = math.exp(-math.exp(-(r[col] - mu) / beta))
-        assert abs(cdf - (1.0 - 1.0 / T)) < 1e-6
-    assert r["return_level_30d"] > r["return_level_7d"]
 
 
 def test_session_edit_distance_brute_force(spark):
@@ -1556,130 +1408,6 @@ def test_bradley_terry_mm_rebuild(spark):
         return tot
 
     assert resid(p) < resid([0.2] * K)
-
-
-def test_ransac_trend_exhaustive_rebuild(spark):
-    """Winning candidate, inlier count and the exact-integer OLS refit
-    vs a literal python sweep of every two-day line (Fischler & Bolles
-    1981 consensus rule, 10%-of-mean tolerance)."""
-    from mpds_spark.queries import q_ransac_trend
-
-    r = q_ransac_trend(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CAST(day(ts) AS BIGINT), CAST(count(*) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    tol = 0.1 * (sum(y for _, y in rows) / len(rows))
-    best = None
-    for i in range(len(rows)):
-        for j in range(i + 1, len(rows)):
-            x1, y1 = rows[i]
-            x2, y2 = rows[j]
-            sl = (y2 - y1) / (x2 - x1)
-            inl = [
-                (x, y) for x, y in rows
-                if abs(y - (y1 + sl * (x - x1))) <= tol
-            ]
-            key = (-len(inl), x1, x2)
-            if best is None or key < best[0]:
-                best = (key, inl)
-    (ninl_neg, bx1, bx2), inliers = best
-    assert (r["anchor_day1"], r["anchor_day2"]) == (bx1, bx2)
-    assert r["n_inliers"] == -ninl_neg == len(inliers)
-    n = len(inliers)
-    sx = sum(x for x, _ in inliers)
-    sy = sum(y for _, y in inliers)
-    sxy = sum(x * y for x, y in inliers)
-    sxx = sum(x * x for x, _ in inliers)
-    slope = (sxy - sx * sy / n) / (sxx - sx * sx / n)
-    assert abs(r["slope_refit"] - slope) < 1e-5
-    assert abs(
-        r["intercept_refit"] - (sy / n - slope * (sx / n))
-    ) < 1e-4
-
-
-def test_dft_periodogram_rebuild(spark):
-    """Power shares vs a literal python DFT over the same detrended
-    daily series (identical fold order, libm cos/sin), plus the
-    Parseval-flavored sanity that shares sum to 1."""
-    from mpds_spark.queries import q_dft_periodogram
-
-    rows = sorted(
-        q_dft_periodogram(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["k"],
-    )
-    import math
-
-    import duckdb
-
-    ys = [
-        y
-        for (y,) in duckdb.sql(
-            "SELECT CAST(count(*) AS BIGINT) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    s = sum(ys)
-    powers = []
-    for k in range(1, 9):
-        c = 0.0
-        sn = 0.0
-        for t in range(1, n + 1):
-            ang = 6.283185307179586 * k * t / n
-            c += (n * ys[t - 1] - s) * math.cos(ang)
-            sn += (n * ys[t - 1] - s) * math.sin(ang)
-        powers.append(c * c + sn * sn)
-    tot = sum(powers)
-    for r, p in zip(rows, powers):
-        assert abs(r["power_share"] - p / tot) < 1e-6
-    assert abs(sum(r["power_share"] for r in rows) - 1.0) < 1e-6
-
-
-def test_sprt_monitor_rebuild(spark):
-    """Cumulative LLR vs a literal python Wald SPRT replay with the
-    same pinned literals, plus the A/A-null expectation that the
-    final-day LLR corresponds to the pooled rate (the boundary
-    decision recomputed identically)."""
-    from mpds_spark.queries import (
-        _SPRT_LN19, _SPRT_LN_LIFT, q_sprt_monitor,
-    )
-
-    rows = {
-        r["day"]: r
-        for r in q_sprt_monitor(spark, "/root/testdata/sf0.001").collect()
-    }
-    import math
-
-    import duckdb
-
-    cells = duckdb.sql(
-        "SELECT CAST(day(ts) AS BIGINT), CAST(count(*) AS BIGINT),"
-        " CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END)"
-        " AS BIGINT) FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    N = sum(n for _, n, _ in cells)
-    X = sum(x for _, _, x in cells)
-    p0 = X / N
-    l0 = math.log((1.0 - 1.1 * p0) / (1.0 - p0))
-    cn = cx = 0
-    for d, n, x in cells:
-        cn += n
-        cx += x
-        llr = cx * _SPRT_LN_LIFT + (cn - cx) * l0
-        r = rows[d]
-        assert (r["cum_events"], r["cum_purchases"]) == (cn, cx)
-        assert abs(r["llr"] - llr) < 1e-5
-        want = (
-            "accept_h1" if llr >= _SPRT_LN19
-            else "accept_h0" if llr <= -_SPRT_LN19 else "continue"
-        )
-        assert r["decision"] == want
 
 
 def test_kruskal_wallis_rebuild(spark):
@@ -1848,104 +1576,6 @@ def test_cox_ph_rebuild_and_logrank_consistency(spark):
     assert r["score_at_null"] == lr["o_minus_e"]
 
 
-def test_friedman_rebuild(spark):
-    """Rank sums and the tie-general Q vs a literal python average-rank
-    rebuild on the dense day x type count grid (Friedman 1937; Conover
-    1999 eq. 5.5), plus the no-tie reduction identity when no block
-    has tied counts."""
-    from mpds_spark.queries import _BT_TYPES, q_friedman_test
-
-    rows = {
-        r["event_type"]: r
-        for r in q_friedman_test(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-    from collections import defaultdict
-
-    raw = duckdb.sql(
-        "SELECT day(ts), event_type, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1, 2"
-    ).fetchall()
-    grid = defaultdict(dict)
-    for d, t, c in raw:
-        grid[d][t] = c
-    k = len(_BT_TYPES)
-    rsum = dict.fromkeys(_BT_TYPES, 0.0)
-    a_sq = 0.0
-    n = len(grid)
-    for d in grid:
-        cs = [(grid[d].get(t, 0), t) for t in _BT_TYPES]
-        vals = sorted(c for c, _ in cs)
-        for c, t in cs:
-            lt = sum(1 for v in vals if v < c)
-            eq = sum(1 for v in vals if v == c)
-            rk = lt + (eq + 1) / 2.0
-            rsum[t] += rk
-            a_sq += rk * rk
-    cc = n * k * (k + 1) ** 2 / 4.0
-    ss = sum((rsum[t] - n * (k + 1) / 2.0) ** 2 for t in _BT_TYPES)
-    q = (k - 1) * ss / (a_sq - cc) if a_sq > cc else 0.0
-    for t in _BT_TYPES:
-        assert abs(rows[t]["rank_sum"] - rsum[t]) < 1e-9
-        assert rows[t]["n_blocks"] == n
-        assert rows[t]["k_treatments"] == k
-        assert abs(rows[t]["q_friedman"] - q) < 1e-4
-        assert rows[t]["reject_equal"] == (q > 9.488)
-    # rank sums over all treatments are a fixed total n*k*(k+1)/2
-    assert abs(sum(rsum.values()) - n * k * (k + 1) / 2.0) < 1e-9
-    # no-tie reduction: if no block has ties, Q equals the textbook
-    # 12/(nk(k+1)) sum R^2 - 3n(k+1)
-    has_tie = any(
-        len({grid[d].get(t, 0) for t in _BT_TYPES}) < k for d in grid
-    )
-    if not has_tie:
-        q_classic = 12.0 / (n * k * (k + 1)) * sum(
-            v * v for v in rsum.values()
-        ) - 3.0 * n * (k + 1)
-        assert abs(q - q_classic) < 1e-9
-
-
-def test_jarque_bera_rebuild(spark):
-    """g1/g2/JB vs literal python central moments of each type's daily
-    count series, and the decision threshold."""
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_jarque_bera
-
-    rows = {
-        r["event_type"]: r
-        for r in q_jarque_bera(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT event_type, day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1, 2"
-    ).fetchall()
-    series = defaultdict(list)
-    for t, _, c in raw:
-        series[t].append(c)
-    for t, ys in series.items():
-        n = len(ys)
-        mean = sum(ys) / n
-        m2 = sum((y - mean) ** 2 for y in ys) / n
-        m3 = sum((y - mean) ** 3 for y in ys) / n
-        m4 = sum((y - mean) ** 4 for y in ys) / n
-        g1 = m3 / m2 ** 1.5
-        g2 = m4 / m2 ** 2
-        jb = n / 6.0 * (g1 ** 2 + (g2 - 3.0) ** 2 / 4.0)
-        r = rows[t]
-        assert r["n_days"] == n
-        assert abs(r["skew_g1"] - g1) < 1e-6
-        assert abs(r["kurt_g2"] - g2) < 1e-6
-        assert abs(r["jb_stat"] - jb) < 1e-4
-        assert r["reject_normal"] == (jb > 5.991)
-        assert not math.isnan(r["jb_stat"])
-
-
 def test_box_cox_rebuild(spark):
     """Per-lambda profile log-likelihood vs a literal python rebuild
     with the identical fold order over the cents histogram (Box & Cox
@@ -2003,43 +1633,6 @@ def test_box_cox_rebuild(spark):
     for r in rows:
         assert r["is_best"] == (r["lambda"] == best)
     assert sum(r["is_best"] for r in rows) == 1
-
-
-def test_dickey_fuller_rebuild(spark):
-    """beta/alpha/t vs a literal python OLS of Delta y on (1, lag y)
-    over the daily series (Dickey & Fuller 1979 drift form), cross-
-    checked against numpy lstsq."""
-    import numpy as np
-
-    from mpds_spark.queries import q_dickey_fuller
-
-    r = q_dickey_fuller(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        c for (c,) in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    x = np.array(ys[:-1], dtype=float)
-    d = np.diff(np.array(ys, dtype=float))
-    m = len(x)
-    X = np.column_stack([np.ones(m), x])
-    coef, _, _, _ = np.linalg.lstsq(X, d, rcond=None)
-    resid = d - X @ coef
-    s2 = float(resid @ resid) / (m - 2)
-    den = m * float(x @ x) - float(x.sum()) ** 2
-    se = (s2 * m / den) ** 0.5
-    assert r["n_days"] == m + 1
-    assert abs(r["alpha"] - coef[0]) < 1e-4
-    assert abs(r["beta"] - coef[1]) < 1e-6
-    assert abs(r["t_stat"] - coef[1] / se) < 1e-4
-    assert r["unit_root_rejected"] == (coef[1] / se < -2.96)
-    # mean-reverting daily volume: beta must be negative (the series
-    # is a stationary count process, not a random walk)
-    assert r["beta"] < 0
 
 
 def test_kmv_rebuild(spark):
@@ -2194,46 +1787,6 @@ def test_horvitz_thompson_unbiased_and_consistent(spark):
         assert ss[g]["n_docs"] == rows[g]["n_kept"]
 
 
-def test_ses_alpha_grid_rebuild(spark):
-    """Per-alpha one-step-ahead SSE and final level vs a literal
-    python recursion (identical op order), the is_best argmin with
-    smaller-alpha tie-break, and the RMSE identity."""
-    import math
-
-    from mpds_spark.queries import _SES_ALPHAS, q_ses_alpha_grid
-
-    rows = {
-        r["alpha"]: r
-        for r in q_ses_alpha_grid(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    ys = [
-        float(c) for (c,) in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    sses = {}
-    for a in _SES_ALPHAS:
-        l, sse = ys[0], 0.0
-        for y in ys[1:]:
-            sse += (y - l) * (y - l)
-            l = a * y + (1.0 - a) * l
-        sses[a] = sse
-        r = rows[a]
-        assert r["n_days"] == n
-        assert abs(r["sse"] - sse) < 1e-4
-        assert abs(r["rmse"] - math.sqrt(sse / (n - 1))) < 1e-6
-        assert abs(r["final_level"] - l) < 1e-6
-    best = min(_SES_ALPHAS, key=lambda a: (sses[a], a))
-    for a, r in rows.items():
-        assert r["is_best"] == (a == best)
-    assert sum(r["is_best"] for r in rows.values()) == 1
-
-
 def test_best_split_stump_rebuild(spark):
     """Best threshold and Gini quantities vs a literal python sweep of
     EVERY candidate split, cell-count identities, and the gain bound
@@ -2285,48 +1838,6 @@ def test_best_split_stump_rebuild(spark):
     assert 0.0 <= r["gini_gain"] <= r["gini_parent"] + 1e-12
 
 
-def test_tukey_hsd_rebuild(spark):
-    """Pairwise mean diffs, pooled MSW, and HSD thresholds vs a
-    literal python rebuild on the (type, day) cells; antisymmetry of
-    the significance call; MSW matches the one-way ANOVA pooled
-    within-group variance."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import _BT_TYPES, q_tukey_hsd
-
-    rows = {
-        (r["type_a"], r["type_b"]): r
-        for r in q_tukey_hsd(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert len(rows) == 10
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT event_type, day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet' GROUP BY 1, 2"
-    ).fetchall()
-    per = defaultdict(list)
-    for t, _, c in raw:
-        per[t].append(c)
-    nn = {t: len(v) for t, v in per.items()}
-    ss = {t: sum(v) for t, v in per.items()}
-    ssw = sum(
-        sum((y - ss[t] / nn[t]) ** 2 for y in per[t]) for t in per
-    )
-    ncells = sum(nn.values())
-    msw = ssw / (ncells - len(per))
-    for i, a in enumerate(_BT_TYPES):
-        for b in _BT_TYPES[i + 1:]:
-            r = rows[(a, b)]
-            diff = ss[a] / nn[a] - ss[b] / nn[b]
-            hsd = 3.92 * (msw / 2 * (1 / nn[a] + 1 / nn[b])) ** 0.5
-            assert r["n_cells"] == ncells
-            assert abs(r["mean_diff"] - diff) < 1e-4
-            assert abs(r["msw"] - msw) < 1e-4
-            assert abs(r["hsd_threshold"] - hsd) < 1e-4
-            assert r["significant"] == (abs(diff) > hsd)
-
-
 def test_ledoit_wolf_rebuild(spark):
     """Shrinkage intensity vs a literal numpy rebuild on the SAME
     milli-quantized codes (Ledoit & Wolf 2004 eqs. 12-15, MLE 1/n
@@ -2364,45 +1875,6 @@ def test_ledoit_wolf_rebuild(spark):
     assert abs(r["shrinkage"] - b2 / d2) < 1e-5
     assert 0.0 <= r["shrinkage"] <= 1.0
     assert r["b2"] <= r["dispersion_d2"] + 1e-12
-
-
-def test_page_hinkley_rebuild(spark):
-    """PH statistic vs a literal python replay with identical prefix
-    arithmetic, the invariant ph >= 0 with ph = 0 whenever m sets a
-    new running minimum, and the A/A expectation that the pooled
-    replay raises no alarm."""
-    from mpds_spark.queries import _PH_DELTA, _PH_LAMBDA, q_page_hinkley
-
-    rows = sorted(
-        q_page_hinkley(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["day"],
-    )
-    import duckdb
-
-    cells = duckdb.sql(
-        "SELECT day(ts), count(*),"
-        " sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    xs = [x / n for _, n, x in cells]
-    ms = []
-    for t in range(1, len(xs) + 1):
-        xbar = sum(xs[:t]) / t
-        dev_prefix = [
-            xs[i] - sum(xs[: i + 1]) / (i + 1) - _PH_DELTA
-            for i in range(t)
-        ]
-        ms.append(sum(dev_prefix))
-    for t, r in enumerate(rows, start=1):
-        ph = ms[t - 1] - min(ms[:t])
-        assert abs(r["share"] - xs[t - 1]) < 1e-6
-        assert abs(r["m_cum"] - ms[t - 1]) < 1e-5
-        assert abs(r["ph_stat"] - ph) < 1e-5
-        assert r["ph_stat"] >= 0.0
-        if ms[t - 1] <= min(ms[:t]):
-            assert r["ph_stat"] == 0.0
-        assert r["alarm"] == (ph > _PH_LAMBDA)
 
 
 def test_l_moments_rebuild(spark):
@@ -2444,46 +1916,6 @@ def test_l_moments_rebuild(spark):
     assert r["l2_scale"] > 0
     assert abs(r["l_skew"]) < 1.0
     assert (5 * r["l_skew"] ** 2 - 1) / 4 - 1e-9 <= r["l_kurt"] < 1.0
-
-
-def test_ols_influence_rebuild(spark):
-    """Leverage/residual/Cook's D vs a literal numpy hat-matrix
-    computation, the leverage identities sum(h) = 2 and
-    1/m <= h < 1, and the influence flag."""
-    import numpy as np
-
-    from mpds_spark.queries import q_ols_influence
-
-    rows = sorted(
-        q_ols_influence(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["day"],
-    )
-    import duckdb
-
-    cells = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    x = np.array([d for d, _ in cells], dtype=float)
-    y = np.array([c for _, c in cells], dtype=float)
-    m = len(x)
-    X = np.column_stack([np.ones(m), x])
-    H = X @ np.linalg.inv(X.T @ X) @ X.T
-    h = np.diag(H)
-    coef = np.linalg.lstsq(X, y, rcond=None)[0]
-    e = y - X @ coef
-    s2 = float(e @ e) / (m - 2)
-    r_stud = e / np.sqrt(s2 * (1 - h))
-    cook = r_stud**2 * h / (2 * (1 - h))
-    assert abs(sum(r["leverage"] for r in rows) - 2.0) < 1e-4
-    for i, r in enumerate(rows):
-        assert abs(r["leverage"] - h[i]) < 1e-6
-        assert 1.0 / m - 1e-12 <= r["leverage"] < 1.0
-        assert abs(r["residual"] - e[i]) < 1e-4
-        assert abs(r["r_student"] - r_stud[i]) < 1e-4
-        assert abs(r["cooks_d"] - cook[i]) < 1e-4
-        assert r["influential"] == (cook[i] > 4.0 / m)
 
 
 def test_wilson_intervals_rebuild(spark):
@@ -2749,47 +2181,6 @@ def test_pr_curve_ap_rebuild(spark):
     assert abs(r["best_f1"] - 2 * p_ * rcl / (p_ + rcl)) < 1e-5
 
 
-def test_seasonal_strength_rebuild(spark):
-    """eta^2 and per-dow means vs a literal python one-way variance
-    decomposition, the ANOVA identity SSB <= SST, and strength in
-    [0, 1]."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_seasonal_strength
-
-    rows = {
-        r["dow"]: r
-        for r in q_seasonal_strength(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT CAST(ts AS DATE), dayofweek(ts) + 1, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet' GROUP BY 1, 2"
-    ).fetchall()
-    per = defaultdict(list)
-    for _, dow, c in raw:
-        per[dow].append(c)
-    allv = [c for v in per.values() for c in v]
-    n = len(allv)
-    gm = sum(allv) / n
-    sst = sum((y - gm) ** 2 for y in allv)
-    ssb = sum(
-        len(v) * (sum(v) / len(v) - gm) ** 2 for v in per.values()
-    )
-    for dow, v in per.items():
-        r = rows[dow]
-        assert r["n_days"] == len(v)
-        assert abs(r["mean_volume"] - sum(v) / len(v)) < 1e-6
-        assert abs(r["sst"] - sst) < 1e-3
-        assert abs(r["ssb"] - ssb) < 1e-3
-        assert abs(r["seasonal_strength"] - ssb / sst) < 1e-6
-        assert 0.0 <= r["seasonal_strength"] <= 1.0
-        assert r["ssb"] <= r["sst"] + 1e-9
-
-
 def test_cochran_q_rebuild_and_mcnemar_reduction(spark):
     """Q vs a literal python computation over per-doc rule triples,
     and the k=2 reduction identity: Cochran's Q restricted to the
@@ -2836,43 +2227,6 @@ def test_cochran_q_rebuild_and_mcnemar_reduction(spark):
         assert abs(q2 - mn["chi2"]) < 1e-6
 
 
-def test_capture_recapture_rebuild(spark):
-    """Capture cells vs a literal python split of the month, the
-    Chapman estimate/SE formulas, and the closed-population sanity
-    that the estimate lands within a few SE of the true count on
-    identity-stable data."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_capture_recapture
-
-    r = q_capture_recapture(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT user_id, min(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0"
-        " END) IS NOT NULL,"
-        " max(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END),"
-        " max(CASE WHEN day(ts) > 15 THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/events.parquet' GROUP BY user_id"
-    ).fetchall()
-    n_true = len(raw)
-    n1 = sum(t[2] for t in raw)
-    n2 = sum(t[3] for t in raw)
-    m = sum(1 for t in raw if t[2] and t[3])
-    est = (n1 + 1) * (n2 + 1) / (m + 1) - 1
-    var = (
-        (n1 + 1) * (n2 + 1) * (n1 - m) * (n2 - m)
-        / ((m + 1) ** 2 * (m + 2))
-    )
-    assert (r["n_true"], r["n1"], r["n2"], r["m"]) == (
-        n_true, n1, n2, m,
-    )
-    assert abs(r["chapman_estimate"] - est) < 1e-4
-    assert abs(r["se"] - var ** 0.5) < 1e-4
-    assert abs(r["chapman_estimate"] - n_true) \
-        <= max(4 * r["se"], 0.1 * n_true)
-
-
 def test_odds_ratio_ci_rebuild(spark):
     """Cells and the Woolf interval vs a literal python rebuild, the
     CI-contains-point-estimate invariant, and consistency between
@@ -2907,51 +2261,6 @@ def test_odds_ratio_ci_rebuild(spark):
     assert abs(r["or_hi95"] - hi) < 1e-5
     assert r["or_lo95"] < r["odds_ratio"] < r["or_hi95"]
     assert r["significant"] == (lo > 1.0 or hi < 1.0)
-
-
-def test_kpss_rebuild(spark):
-    """KPSS statistic vs a literal python rebuild (demeaned
-    residuals, partial sums, Bartlett long-run variance at
-    Schwert's lag) plus the internal identities: the lag formula,
-    s2_long collapsing to s2_short when all autocovariance weights
-    were zeroed, and the reject flag against the pinned 0.463."""
-    from mpds_spark.queries import q_kpss_test
-
-    r = q_kpss_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    X = sum(ys)
-    e = [(n * y - X) / n for y in ys]
-    cum = 0.0
-    ss = 0.0
-    cy = 0
-    for t, y in enumerate(ys, start=1):
-        cy += y
-        s = (n * cy - t * X) / n
-        ss += s * s
-    lag = int(4.0 * ((n / 100.0) ** 0.25))
-    g0 = sum(x * x for x in e)
-    s2 = g0 / n
-    for j in range(1, lag + 1):
-        gj = sum(e[i] * e[i - j] for i in range(j, n))
-        s2 += 2.0 * (1.0 - j / (lag + 1)) * gj / n
-    stat = ss / (n * s2)
-    assert r["n_days"] == n
-    assert r["lag_l"] == lag
-    assert abs(r["s2_short"] - g0 / n) < 1e-4
-    assert abs(r["s2_long"] - s2) < 1e-4
-    assert abs(r["kpss_stat"] - stat) < 1e-6
-    assert r["reject_5pct"] == (stat > 0.463)
-    assert r["s2_long"] > 0.0
 
 
 def test_mantel_haenszel_rebuild(spark):
@@ -3012,148 +2321,6 @@ def test_mantel_haenszel_rebuild(spark):
     )
 
 
-def test_variance_ratio_rebuild(spark):
-    """VR(q) and z(q) vs a literal python rebuild of the
-    Lo-MacKinlay overlapping estimator (with x_0 = 0 and the
-    unbiased-overlapping denominator), plus the internal
-    identities VR -> 1 consistency of the reject flag and the
-    q-row coverage."""
-    from mpds_spark.queries import q_variance_ratio
-
-    rows = {
-        r["q"]: r
-        for r in q_variance_ratio(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    X = sum(ys)
-    mu = X / n
-    xs = [0]
-    for y in ys:
-        xs.append(xs[-1] + y)
-    s1 = sum((y - mu) ** 2 for y in ys) / (n - 1)
-    for q in (2, 3, 5):
-        m = q * (n - q + 1) * (1 - q / n)
-        sq = sum(
-            (xs[t] - xs[t - q] - q * mu) ** 2
-            for t in range(q, n + 1)
-        ) / m
-        vr = sq / s1
-        z = (vr - 1) / (
-            (2 * (2 * q - 1) * (q - 1) / (3 * q * n)) ** 0.5
-        )
-        r = rows[q]
-        assert r["n_days"] == n
-        assert abs(r["vr"] - vr) < 1e-6
-        assert abs(r["z_stat"] - z) < 1e-5
-        assert r["reject_5pct"] == (abs(z) > 1.96)
-    assert set(rows) == {2, 3, 5}
-
-
-def test_granger_rebuild(spark):
-    """Both Granger directions vs numpy lstsq fits of the
-    restricted/unrestricted lag-1 regressions (the moment-identity
-    SSEs must match the residual-sum definition) and the F-statistic
-    formula."""
-    import numpy as np
-
-    from mpds_spark.queries import q_granger_causality
-
-    rows = {
-        r["direction"]: r
-        for r in q_granger_causality(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    day = duckdb.sql(
-        "SELECT sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0"
-        " END), sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    p = np.array([t[0] for t in day], dtype=float)
-    c = np.array([t[1] for t in day], dtype=float)
-    for label, z, cl in (
-        ("clicks->purchases", p, c),
-        ("purchases->clicks", c, p),
-    ):
-        zt, ol, clg = z[1:], z[:-1], cl[:-1]
-        nu = len(zt)
-        Xr = np.column_stack([np.ones(nu), ol])
-        Xu = np.column_stack([np.ones(nu), ol, clg])
-        br, *_ = np.linalg.lstsq(Xr, zt, rcond=None)
-        bu, *_ = np.linalg.lstsq(Xu, zt, rcond=None)
-        sse_r = float(np.sum((zt - Xr @ br) ** 2))
-        sse_u = float(np.sum((zt - Xu @ bu) ** 2))
-        f = (sse_r - sse_u) * (nu - 3) / sse_u
-        r = rows[label]
-        assert r["n_used"] == nu
-        assert abs(r["b_own_lag"] - bu[1]) < 1e-6
-        assert abs(r["b_cross_lag"] - bu[2]) < 1e-6
-        assert abs(r["sse_restricted"] - sse_r) < 1e-3
-        assert abs(r["sse_unrestricted"] - sse_u) < 1e-3
-        assert abs(r["f_stat"] - f) < 1e-4
-        assert r["reject_approx_5pct"] == (r["f_stat"] > 4.21)
-
-
-def test_durbin_watson_rebuild(spark):
-    """DW statistic vs a literal python rebuild of the
-    trend-residual autocorrelation test (OLS of daily counts on
-    t = 1..n, first-difference ratio on the residuals), plus the
-    rho_hat identity and the Savin-White verdict banding."""
-    from mpds_spark.queries import q_durbin_watson
-
-    r = q_durbin_watson(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    ts = list(range(1, n + 1))
-    tbar = sum(ts) / n
-    ybar = sum(ys) / n
-    sxy = sum((t - tbar) * (y - ybar) for t, y in zip(ts, ys))
-    sxx = sum((t - tbar) ** 2 for t in ts)
-    b = sxy / sxx
-    a = ybar - b * tbar
-    e = [y - a - b * t for t, y in zip(ts, ys)]
-    num = sum((e[i] - e[i - 1]) ** 2 for i in range(1, n))
-    den = sum(x * x for x in e)
-    dw = num / den
-    assert r["n_days"] == n
-    assert abs(r["slope_per_day"] - b) < 1e-6
-    assert abs(r["dw"] - dw) < 1e-6
-    assert abs(r["rho_hat"] - (1.0 - dw / 2.0)) < 1e-6
-    if dw < 1.352:
-        assert r["verdict"] == "positive_autocorr"
-    elif dw > 2.648:
-        assert r["verdict"] == "negative_autocorr"
-    elif 1.489 <= dw <= 2.511:
-        assert r["verdict"] == "no_autocorr"
-    else:
-        assert r["verdict"] == "inconclusive"
-    assert 0.0 < dw < 4.0
-
-
 def test_bartlett_rebuild(spark):
     """Bartlett T vs a literal python rebuild over the 5 per-type
     sample variances of value (exact cents), plus the
@@ -3200,137 +2367,6 @@ def test_bartlett_rebuild(spark):
     assert abs(r["bartlett_t"] - t) < 1e-4
     assert r["reject_5pct"] == (t > 9.488)
     assert r["c_factor"] > 1.0
-
-
-def test_breusch_pagan_rebuild(spark):
-    """Koenker-form BP LM vs a literal python rebuild: OLS of daily
-    counts on t = 1..n, then the auxiliary regression of the squared
-    residuals on t; LM = n * R^2, chi2(1) banding at 3.841."""
-    from mpds_spark.queries import q_breusch_pagan
-
-    r = q_breusch_pagan(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    ts = list(range(1, n + 1))
-    tbar = sum(ts) / n
-    ybar = sum(ys) / n
-    b = sum((t - tbar) * (y - ybar) for t, y in zip(ts, ys)) / sum(
-        (t - tbar) ** 2 for t in ts
-    )
-    a = ybar - b * tbar
-    g = [(y - a - b * t) ** 2 for t, y in zip(ts, ys)]
-    gbar = sum(g) / n
-    sxy = sum((t - tbar) * (gi - gbar) for t, gi in zip(ts, g))
-    sxx = sum((t - tbar) ** 2 for t in ts)
-    syy = sum((gi - gbar) ** 2 for gi in g)
-    r2 = sxy * sxy / (sxx * syy)
-    lm = n * r2
-    assert r["n_days"] == n
-    assert abs(r["r2_aux"] - r2) < 1e-6
-    assert abs(r["bp_lm"] - lm) < 1e-5
-    assert r["reject_5pct"] == (lm > 3.841)
-    if sxy > 0:
-        assert r["direction"] == "variance_increasing"
-    elif sxy < 0:
-        assert r["direction"] == "variance_decreasing"
-    assert 0.0 <= r["r2_aux"] <= 1.0
-
-
-def test_cronbach_alpha_rebuild(spark):
-    """Cronbach's alpha vs a literal python rebuild over the day x
-    event-type count matrix (sample variances, k/(k-1) form), plus
-    the variance-decomposition identity total_var =
-    sum_item_var + 2*sum_of_item_covariances (checked implicitly via
-    the alpha formula) and the Nunnally 0.7 flag."""
-    from mpds_spark.queries import q_cronbach_alpha
-
-    r = q_cronbach_alpha(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), event_type, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1, 2"
-    ).fetchall()
-    types = ["click", "error", "purchase", "signup", "view"]
-    days = sorted({d for d, _, _ in rows})
-    mat = {d: {t: 0 for t in types} for d in days}
-    for d, t, c in rows:
-        mat[d][t] = c
-    n = len(days)
-
-    def svar(xs):
-        m = sum(xs) / n
-        return sum((x - m) ** 2 for x in xs) / (n - 1)
-
-    item_vars = [svar([mat[d][t] for d in days]) for t in types]
-    tot = [sum(mat[d][t] for t in types) for d in days]
-    vt = svar(tot)
-    k = len(types)
-    alpha = k / (k - 1) * (1.0 - sum(item_vars) / vt)
-    assert r["k_items"] == k
-    assert r["n_days"] == n
-    assert abs(r["sum_item_var"] - sum(item_vars)) < 1e-6
-    assert abs(r["total_var"] - vt) < 1e-6
-    assert abs(r["alpha"] - alpha) < 1e-6
-    assert r["acceptable"] == (alpha >= 0.7)
-    assert r["alpha"] <= 1.25
-
-
-def test_pettitt_rebuild(spark):
-    """Pettitt K/U_t vs a literal python rebuild of the rank
-    change-point statistic over the daily counts, plus the
-    earliest-t tie-break, the approximate p formula and the
-    direction banding."""
-    import math
-
-    from mpds_spark.queries import q_pettitt_test
-
-    r = q_pettitt_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    days = [d for d, _ in rows]
-    ys = [c for _, c in rows]
-    n = len(ys)
-
-    def sgn(v):
-        return (v > 0) - (v < 0)
-
-    us = []
-    for t in range(1, n):
-        us.append(
-            sum(
-                sgn(ys[j] - ys[i])
-                for i in range(t)
-                for j in range(t, n)
-            )
-        )
-    k = max(abs(u) for u in us)
-    tstar = next(i for i, u in enumerate(us) if abs(u) == k)
-    p = 2.0 * math.exp(-6.0 * k * k / (n**3 + n**2))
-    assert r["n_days"] == n
-    assert r["k_stat"] == k
-    assert r["change_day"] == days[tstar]
-    assert r["u_at_k"] == us[tstar]
-    assert abs(r["p_approx"] - p) < 1e-6
-    assert r["significant_5pct"] == (p < 0.05)
-    assert r["direction"] == (
-        "upward_shift" if us[tstar] > 0 else "downward_shift"
-    )
 
 
 def test_cliffs_delta_rebuild(spark):
@@ -3384,144 +2420,6 @@ def test_cliffs_delta_rebuild(spark):
     assert r["band"] == band
     # hash-random A/A arms: the effect must be negligible
     assert r["band"] == "negligible"
-
-
-def test_grubbs_rebuild(spark):
-    """Grubbs G vs a literal python rebuild (max studentized
-    deviation of the daily counts, sample sd), plus the earliest-day
-    argmax tie-break, the NIST 2.908 banding and the side flag."""
-    from mpds_spark.queries import q_grubbs_test
-
-    r = q_grubbs_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    days = [d for d, _ in rows]
-    ys = [c for _, c in rows]
-    n = len(ys)
-    m = sum(ys) / n
-    s = (sum((y - m) ** 2 for y in ys) / (n - 1)) ** 0.5
-    devs = [abs(y - m) for y in ys]
-    g = max(devs) / s
-    i = devs.index(max(devs))
-    assert r["n_days"] == n
-    assert r["outlier_day"] == days[i]
-    assert r["outlier_value"] == ys[i]
-    assert abs(r["mean_volume"] - m) < 1e-6
-    assert abs(r["sd_volume"] - s) < 1e-6
-    assert abs(r["g_stat"] - g) < 1e-6
-    assert r["reject_5pct"] == (g > 2.908)
-    assert r["side"] == ("high" if ys[i] > m else "low")
-    assert r["g_stat"] > 0
-
-
-def test_taylor_law_rebuild(spark):
-    """Taylor exponent vs a literal python rebuild: per-hour-of-day
-    mean/variance of the daily counts (zero days included via the
-    n_days denominator), log-log OLS, r^2 and the banding."""
-    import math
-
-    from mpds_spark.queries import q_taylor_law
-
-    r = q_taylor_law(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), hour(ts), count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1, 2"
-    ).fetchall()
-    days = sorted({d for d, _, _ in rows})
-    nd = len(days)
-    pts = []
-    for h in range(24):
-        cs = {d: 0 for d in days}
-        for d, hh, c in rows:
-            if hh == h:
-                cs[d] = c
-        vals = [cs[d] for d in days]
-        s = sum(vals)
-        q = sum(v * v for v in vals)
-        if s > 0 and nd * q - s * s > 0:
-            mean = s / nd
-            var = (nd * q - s * s) / (nd * (nd - 1))
-            pts.append((math.log(mean), math.log(var)))
-    k = len(pts)
-    sx = sum(x for x, _ in pts)
-    sy = sum(y for _, y in pts)
-    sxy = sum(x * y for x, y in pts)
-    sxx = sum(x * x for x, _ in pts)
-    syy = sum(y * y for _, y in pts)
-    dxy = k * sxy - sx * sy
-    dxx = k * sxx - sx * sx
-    dyy = k * syy - sy * sy
-    b = dxy / dxx
-    assert r["n_days"] == nd
-    assert r["n_hours"] == k
-    assert abs(r["taylor_b"] - b) < 1e-6
-    assert abs(r["ln_a"] - (sy - b * sx) / k) < 1e-6
-    assert abs(r["r2"] - dxy * dxy / (dxx * dyy)) < 1e-6
-    band = (
-        "aggregated" if b > 1.2
-        else "underdispersed" if b < 0.8
-        else "poisson_like"
-    )
-    assert r["verdict"] == band
-    assert 0.0 <= r["r2"] <= 1.0
-
-
-def test_sample_entropy_rebuild(spark):
-    """SampEn(m=2, r=0.5*SD) vs a literal python rebuild of the
-    Richman-Moorman template counts over the daily volumes, plus
-    A <= B and the banding."""
-    import math
-
-    from mpds_spark.queries import q_sample_entropy
-
-    r = q_sample_entropy(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    m = sum(ys) / n
-    sd = (sum((y - m) ** 2 for y in ys) / (n - 1)) ** 0.5
-    tol = 0.5 * sd
-    M = n - 2
-    b = a = 0
-    for i in range(M - 1):
-        for j in range(i + 1, M):
-            if (
-                abs(ys[i] - ys[j]) <= tol
-                and abs(ys[i + 1] - ys[j + 1]) <= tol
-            ):
-                b += 1
-                if abs(ys[i + 2] - ys[j + 2]) <= tol:
-                    a += 1
-    sampen = math.log(b) - math.log(a)
-    assert r["n_days"] == n
-    assert abs(r["r_tol"] - tol) < 1e-6
-    assert r["b_count"] == b
-    assert r["a_count"] == a
-    assert r["a_count"] <= r["b_count"]
-    assert abs(r["sampen"] - sampen) < 1e-6
-    band = (
-        "regular" if sampen < 0.5
-        else "complex" if sampen > 1.5
-        else "moderate"
-    )
-    assert r["band"] == band
-    assert r["sampen"] > 0
 
 
 def test_ndcg_rebuild(spark):
@@ -3739,175 +2637,6 @@ def test_youden_rebuild(spark):
     assert -1.0 <= r["youden_j"] <= 1.0
 
 
-def test_lin_ccc_rebuild(spark):
-    """Lin's CCC vs a literal python rebuild over the daily
-    click/view pairs (1/n moment convention), plus |CCC| <= |r|,
-    the C_b = CCC/r identity and the scale ratio."""
-    from mpds_spark.queries import q_lin_ccc
-
-    r = q_lin_ccc(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0"
-        " END), sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    xs = [a for a, _ in rows]
-    ys = [b for _, b in rows]
-    n = len(xs)
-    mx, my = sum(xs) / n, sum(ys) / n
-    sxx = sum((x - mx) ** 2 for x in xs) / n
-    syy = sum((y - my) ** 2 for y in ys) / n
-    sxy = sum(
-        (x - mx) * (y - my) for x, y in zip(xs, ys)
-    ) / n
-    ccc = 2 * sxy / (sxx + syy + (mx - my) ** 2)
-    pr = sxy / (sxx ** 0.5 * syy ** 0.5)
-    assert r["n_days"] == n
-    assert abs(r["mean_clicks"] - mx) < 1e-6
-    assert abs(r["mean_views"] - my) < 1e-6
-    assert abs(r["pearson_r"] - pr) < 1e-6
-    assert abs(r["ccc"] - ccc) < 1e-6
-    assert abs(r["c_b"] - ccc / pr) < 1e-5
-    assert abs(r["scale_ratio"] - (sxx / syy) ** 0.5) < 1e-6
-    assert abs(r["ccc"]) <= abs(r["pearson_r"]) + 1e-9
-    assert r["interchangeable"] == (ccc > 0.9)
-
-
-def test_bland_altman_rebuild(spark):
-    """Bland-Altman bias/LoA vs a literal python rebuild over the
-    daily click-view differences, plus the within-band count and the
-    bias t-test flag."""
-    from mpds_spark.queries import q_bland_altman
-
-    r = q_bland_altman(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0"
-        " END) - sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0"
-        " END) FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    ds = [d for d, in rows]
-    n = len(ds)
-    mean = sum(ds) / n
-    sd = (sum((d - mean) ** 2 for d in ds) / (n - 1)) ** 0.5
-    lo, hi = mean - 1.96 * sd, mean + 1.96 * sd
-    within = sum(1 for d in ds if lo <= d <= hi)
-    assert r["n_days"] == n
-    assert abs(r["bias"] - mean) < 1e-6
-    assert abs(r["sd_diff"] - sd) < 1e-6
-    assert abs(r["loa_lower"] - lo) < 1e-6
-    assert abs(r["loa_upper"] - hi) < 1e-6
-    assert r["n_within"] == within
-    assert abs(r["pct_within"] - within / n) < 1e-6
-    assert r["systematic_bias"] == (
-        abs(mean / (sd / n ** 0.5)) > 1.96
-    )
-    assert r["loa_lower"] < r["loa_upper"]
-
-
-def test_croston_rebuild(spark):
-    """Croston/SBA vs a literal python rebuild of the size/interval
-    SES recursions over the thresholded purchase series, plus the
-    Syntetos-Boylan taxonomy cell and the SBA = 0.9*Croston
-    identity at alpha = 0.2."""
-    from mpds_spark.queries import q_croston_forecast
-
-    r = q_croston_forecast(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT day(ts), sum(CASE WHEN event_type = 'purchase' AND"
-        " value > 150 THEN 1 ELSE 0 END) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY day(ts) ORDER BY day(ts)"
-    ).fetchall()
-    n_days = len(rows)
-    dem = [(d, z) for d, z in rows if z > 0]
-    m = len(dem)
-    zs = [float(z) for _, z in dem]
-    ps = [float(dem[0][0])] + [
-        float(dem[k][0] - dem[k - 1][0]) for k in range(1, m)
-    ]
-
-    def ses(xs, a=0.2):
-        lvl = xs[0]
-        for v in xs[1:]:
-            lvl = a * v + (1 - a) * lvl
-        return lvl
-
-    zl, pl = ses(zs), ses(ps)
-    sz = sum(z for _, z in dem)
-    szz = sum(z * z for _, z in dem)
-    adi = dem[-1][0] / m
-    cv2 = (m * szz - sz * sz) * m / ((m - 1) * sz * sz)
-    assert r["n_days"] == n_days
-    assert r["n_demands"] == m
-    assert abs(r["zero_share"] - (1 - m / n_days)) < 1e-6
-    assert abs(r["adi"] - adi) < 1e-6
-    assert abs(r["cv2"] - cv2) < 1e-6
-    assert abs(r["size_level"] - zl) < 1e-6
-    assert abs(r["interval_level"] - pl) < 1e-6
-    assert abs(r["croston"] - zl / pl) < 1e-6
-    assert abs(r["sba"] - 0.9 * zl / pl) < 1e-6
-    cls = (
-        "smooth" if adi < 1.32 and cv2 < 0.49
-        else "intermittent" if adi >= 1.32 and cv2 < 0.49
-        else "erratic" if adi < 1.32
-        else "lumpy"
-    )
-    assert r["demand_class"] == cls
-    assert r["interval_level"] >= 1.0
-
-
-def test_tracking_signal_rebuild(spark):
-    """Brown tracking signal vs a literal python SES(0.3) rebuild
-    over the daily volumes, plus the TS bound |TS| <= n-1 and the
-    bias-direction banding."""
-    from mpds_spark.queries import q_tracking_signal
-
-    r = q_tracking_signal(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-
-    ys = [
-        float(t[0])
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    lvl = ys[0]
-    cum = sad = 0.0
-    for t in range(1, n):
-        e = ys[t] - lvl
-        cum += e
-        sad += abs(e)
-        lvl = 0.3 * ys[t] + 0.7 * lvl
-    mad = sad / (n - 1)
-    ts = cum / mad
-    assert r["n_days"] == n
-    assert r["alpha"] == 0.3
-    assert abs(r["cum_error"] - cum) < 1e-6
-    assert abs(r["mad"] - mad) < 1e-6
-    assert abs(r["tracking_signal"] - ts) < 1e-6
-    assert r["alarm"] == (abs(ts) > 4.0)
-    assert abs(r["tracking_signal"]) <= n - 1
-    if ts > 0:
-        assert r["bias_direction"] == "under_forecasting"
-    elif ts < 0:
-        assert r["bias_direction"] == "over_forecasting"
-
-
 def test_g_test_rebuild(spark):
     """G and Williams q vs a literal python rebuild over the
     daypart x type table, plus the G ~ X^2 proximity (both should
@@ -4053,150 +2782,6 @@ def test_nelson_aalen_rebuild(spark):
         if b in km:
             # Fleming-Harrington dominates KM
             assert got["fh_survival"] >= km[b] - 1e-9
-
-
-def test_theta_forecast_rebuild(spark):
-    """Theta forecasts vs a literal python rebuild (OLS theta-0
-    line, SES(0.3) on the theta-2 line, 50/50 combination), plus the
-    equal-spacing identity forecast_2 - forecast_1 = b/2."""
-    from mpds_spark.queries import q_theta_forecast
-
-    r = q_theta_forecast(spark, "/root/testdata/sf0.001").collect()[
-        0
-    ]
-    import duckdb
-
-    ys = [
-        float(t[0])
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    ts = list(range(1, n + 1))
-    tb = sum(ts) / n
-    yb = sum(ys) / n
-    b = sum((t - tb) * (y - yb) for t, y in zip(ts, ys)) / sum(
-        (t - tb) ** 2 for t in ts
-    )
-    a = yb - b * tb
-    th2 = [2 * y - (a + b * t) for t, y in zip(ts, ys)]
-    lvl = th2[0]
-    for x in th2[1:]:
-        lvl = 0.3 * x + 0.7 * lvl
-    assert r["n_days"] == n
-    assert abs(r["trend_slope"] - b) < 1e-6
-    assert abs(r["trend_intercept"] - a) < 1e-6
-    assert abs(r["theta2_level"] - lvl) < 1e-6
-    for h in (1, 2, 3):
-        exp = 0.5 * (a + b * (n + h)) + 0.5 * lvl
-        assert abs(r[f"forecast_{h}"] - exp) < 1e-6
-    assert abs(
-        (r["forecast_2"] - r["forecast_1"]) - b / 2
-    ) < 1e-5
-    assert r["naive_last"] == ys[-1]
-
-
-def test_allan_variance_rebuild(spark):
-    """AVAR(1,2,4) vs a literal python rebuild of the non-
-    overlapping block differences, plus the white-noise direction
-    check that AVAR is finite and positive at every tau."""
-    from mpds_spark.queries import q_allan_variance
-
-    rows = q_allan_variance(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    got = {r["tau_days"]: r for r in rows}
-    for tau in (1, 2, 4):
-        m = n // tau
-        if m <= 1:
-            assert tau not in got
-            continue
-        S = [
-            sum(ys[(k - 1) * tau:(k - 1) * tau + tau])
-            for k in range(1, m + 1)
-        ]
-        num = sum(
-            (S[k] - S[k - 1]) ** 2 for k in range(1, m)
-        )
-        avar = num / (2 * (m - 1) * tau * tau)
-        r = got[tau]
-        assert r["n_days"] == n
-        assert r["m_blocks"] == m
-        assert r["diff2_sum"] == num
-        assert abs(r["avar"] - avar) < 1e-6
-        assert abs(r["adev"] - avar ** 0.5) < 1e-6
-        assert r["avar"] > 0
-
-
-def test_rqa_rebuild(spark):
-    """RR/DET/LMAX vs a literal python recurrence-matrix rebuild at
-    r = 0.5*SD, plus DET membership logic and the LMAX >= 2 iff
-    any-diagonal-pair consistency."""
-    from mpds_spark.queries import q_recurrence_quantification
-
-    r = q_recurrence_quantification(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    ys = [
-        t[0]
-        for t in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " GROUP BY day(ts) ORDER BY day(ts)"
-        ).fetchall()
-    ]
-    n = len(ys)
-    m = sum(ys) / n
-    sd = (sum((y - m) ** 2 for y in ys) / (n - 1)) ** 0.5
-    tol = 0.5 * sd
-
-    def rec(i, j):
-        return abs(ys[i] - ys[j]) <= tol
-
-    nrec = ndet = 0
-    for i in range(n - 1):
-        for j in range(i + 1, n):
-            if rec(i, j):
-                nrec += 1
-                nxt = i + 1 < n and j + 1 < n and rec(i + 1, j + 1)
-                prv = i > 0 and rec(i - 1, j - 1)
-                if nxt or prv:
-                    ndet += 1
-    lmax = 0
-    for d in range(1, n):
-        run = 0
-        for k in range(0, n - d):
-            if rec(k, k + d):
-                run += 1
-                lmax = max(lmax, run)
-            else:
-                run = 0
-    assert r["n_days"] == n
-    assert abs(r["r_tol"] - tol) < 1e-6
-    assert r["n_recurrent"] == nrec
-    assert abs(
-        r["recurrence_rate"] - nrec / (n * (n - 1) / 2)
-    ) < 1e-6
-    assert abs(r["determinism"] - ndet / nrec) < 1e-6
-    assert r["lmax"] == lmax
-    assert (r["lmax"] >= 2) == (r["determinism"] > 0)
-    assert 0.0 <= r["determinism"] <= 1.0
 
 
 def test_rare_word_profile_rebuild(spark):
