@@ -269,7 +269,7 @@ def test_locf_equals_reference(spark, series, valid_time):
     ),
     st.integers(-20, 20).map(lambda k: k / 4),
 )
-def test_interpolate_equals_reference(spark, series, default):
+def test_interp_kernel_equals_reference_loop(spark, series, default):
     """Random null patterns (leading, trailing, interior runs, all-null
     entities) through the window plan against the reference loop."""
     from mpds_spark.operators.backfill import interpolate
