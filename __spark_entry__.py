@@ -70,70 +70,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # is mirror-EXACT at sf0.01 on final code (tools/check_correctness.py —
 # the same value gate; see BENCH/BASELINE.md closing record).
 _PRIORITY = [
-    # new in round 5 (eightieth batch — continuation session)
-    "rare_word_profile",
-    # new in round 5 (seventy-eighth batch — continuation session)
-    "nelson_aalen",
-    # new in round 5 (seventy-seventh batch — continuation session)
-    "g_test",
-    "mood_median_test",
-    # new in round 5 (seventy-second batch — continuation session)
-    "brier_decomposition",
-    "youden_j",
-    # new in round 5 (seventy-first batch — continuation session)
-    "ndcg_eval",
-    "mrr_eval",
-    # new in round 5 (sixty-seventh batch — continuation session)
-    "cliffs_delta",
-    # new in round 5 (sixty-fifth batch — continuation session)
-    "bartlett_test",
-    # new in round 5 (sixty-third batch — continuation session)
-    "mantel_haenszel",
-    # new in round 5 (sixty-second batch — continuation session)
-    "odds_ratio_ci",
-    # new in round 5 (sixty-first batch — continuation session)
-    "cochran_q",
-    # new in round 5 (sixtieth batch — continuation session)
-    "jl_projection_audit",
-    "pr_curve_ap",
-    # new in round 5 (fifty-ninth batch — continuation session)
-    "nb_dispersion",
-    "markov_stationary",
-    # new in round 5 (fifty-eighth batch — continuation session)
-    "wilson_intervals",
-    "mde_power",
-    # new in round 5 (fifty-sixth batch — continuation session)
-    "l_moments",
-    # new in round 5 (fifty-fifth batch — continuation session)
-    "ledoit_wolf_shrinkage",
-    # new in round 5 (fifty-fourth batch — continuation session)
-    "best_split_stump",
-    # new in round 5 (fifty-second batch — continuation session)
-    "newman_modularity",
-    "horvitz_thompson",
-    # new in round 5 (fifty-first batch — continuation session)
-    "kmv_distinct",
-    # new in round 5 (fiftieth batch — continuation session)
-    "box_cox_lambda",
-    # new in round 5 (forty-eighth batch — continuation session)
-    "cox_ph",
-    # new in round 5 (forty-seventh batch — continuation session)
-    "kruskal_wallis",
-    "mcnemar_test",
-    # new in round 5 (forty-fourth batch — continuation session)
-    "bradley_terry",
-    # new in round 5 (forty-third batch — continuation session)
-    "session_edit_distance",
-    # new in round 5 (forty-second batch — continuation session)
-    "isotonic_calibration",
-    # new in round 5 (forty-first batch — continuation session)
-    "levene_test",
-    # new in round 5 (fortieth batch — continuation session)
-    "bh_fdr",
-    "eb_shrinkage",
-    # new in round 5 (thirty-ninth batch — continuation session)
-    "bpe_merge_step",
-    "padding_waste_audit",
     # new in round 5 (thirty-seventh batch — continuation session)
     "logrank_test",
     "segmented_trend",

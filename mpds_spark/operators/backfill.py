@@ -16,7 +16,7 @@ Parity:
   is forward-looking: gated by leakage_ok (train-prep only, never features).
 
 Scale: locf and interpolate are pure window expressions (one entity
-exchange, WindowExec, whole-stage codegen; no Python).
+exchange and one sort, WindowExec, whole-stage codegen; no Python).
 """
 
 from __future__ import annotations
@@ -90,7 +90,9 @@ def interpolate(
 
     Forward-looking (uses the next non-null sample): requires leakage_ok.
 
-    Pure window expressions (one entity exchange, WindowExec only):
+    Pure window expressions over one entity exchange and one sort on the
+    projected epoch time `__t`, in two Window levels that each name their
+    aggregates once:
     1. pad: last row's null <- last non-null; first row's null <- default;
        all-null entity <- default everywhere
     2. interior nulls: (yn*(x-xp) + yp*(xn-x)) / (xn-xp) between the padded
@@ -102,42 +104,41 @@ def interpolate(
             "leakage_ok=True — train-prep only, never feature columns."
         )
     oc = out_col or f"{value}_interp"
-    t = epoch_seconds(df, ts)
-    w = Window.partitionBy(entity).orderBy(t)
+    d = df.withColumn("__t", epoch_seconds(df, ts))
+    w = Window.partitionBy(entity).orderBy("__t")
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-
     v = F.col(value).cast("double")
-    n_val = F.count(v).over(full)
-    last_val = F.last(v, ignorenulls=True).over(full)
-    rn = F.row_number().over(w)
-    n_rows = F.count(F.lit(1)).over(full)
-
+    pad = {
+        "__n_val": F.count(v).over(full),
+        "__last_val": F.last(v, ignorenulls=True).over(full),
+        "__rn": F.row_number().over(w),
+        "__n_rows": F.count(F.lit(1)).over(full),
+    }
+    rn = F.col("__rn")
     v2 = (
         F.when(v.isNotNull(), v)
-        .when(n_val == 0, F.lit(float(default)))
-        .when(rn == n_rows, last_val)  # pad last (before first: R order)
-        .when(rn == 1, F.lit(float(default)))  # pad first with default
+        .when(F.col("__n_val") == 0, F.lit(float(default)))
+        # pad last (before first: R order), then pad first with default
+        .when(rn == F.col("__n_rows"), F.col("__last_val"))
+        .when(rn == 1, F.lit(float(default)))
     )
-    d = df.withColumn("__v2", v2).withColumn("__t", t)
-    wb = Window.partitionBy(entity).orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    d = d.withColumns(pad).withColumn("__v2", v2)
+    wb = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wf = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    y = F.col("__v2")
+    x = F.when(y.isNotNull(), F.col("__t"))
+    near = {
+        "__yp": F.last(y, ignorenulls=True).over(wb),
+        "__xp": F.last(x, ignorenulls=True).over(wb),
+        "__yn": F.first(y, ignorenulls=True).over(wf),
+        "__xn": F.first(x, ignorenulls=True).over(wf),
+    }
+    t, yp, xp, yn, xn = (F.col(c) for c in ("__t", *near))
+    interp = (yn * (t - xp) + yp * (xn - t)) / (xn - xp)
+    out = d.withColumns(near).withColumn(
+        oc, F.when(y.isNotNull(), y).otherwise(interp)
     )
-    wf = Window.partitionBy(entity).orderBy("__t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    yp = F.last("__v2", ignorenulls=True).over(wb)
-    xp = F.last(
-        F.when(F.col("__v2").isNotNull(), F.col("__t")), ignorenulls=True
-    ).over(wb)
-    yn = F.first("__v2", ignorenulls=True).over(wf)
-    xn = F.first(
-        F.when(F.col("__v2").isNotNull(), F.col("__t")), ignorenulls=True
-    ).over(wf)
-    interp = (yn * (F.col("__t") - xp) + yp * (xn - F.col("__t"))) / (xn - xp)
-    out = d.withColumn(
-        oc, F.when(F.col("__v2").isNotNull(), F.col("__v2")).otherwise(interp)
-    )
-    return out.drop("__v2", "__t")
+    return out.drop("__t", *pad, "__v2", *near)
 
 
 def densify_daily(

@@ -12965,5198 +12965,6 @@ FROM f ORDER BY sse, b LIMIT 1
 QUERIES["segmented_trend"] = q_segmented_trend
 _RAW_ORACLES["segmented_trend"] = SQL_SEGMENTED_TREND
 
-def q_bpe_merge_step(spark, sf_dir):
-    """One byte-pair-encoding merge iteration over the corpus word
-    streams (Gage 1994; Sennrich, Haddow & Birch 2016 made it THE
-    subword tokenizer-training step): count every adjacent token pair,
-    pick the most frequent (count desc, then lexicographic — the
-    deterministic tie-break real BPE trainers pin), and report what
-    applying that merge greedily left-to-right does to the corpus
-    token count. The pair stream is the posting-list (doc, pos+1)
-    equi-join — the phrase_search shape, only positions shuffle, never
-    a theta join; the posting frame is persisted so the corpus
-    tokenizes ONCE. Greedy application never needs a sequential fold:
-    two occurrences of (A,B) can share a token only when A == B, so
-    merges_applied = pair_count for A != B, and for A == B it is
-    sum(floor(L/2)) over maximal runs of A — recovered exactly by
-    gaps-and-islands (pos - row_number) on A's postings. Counts are
-    exact longs; the one float is the reduction share. At 10^12 tokens
-    this is the real first iteration of a distributed BPE trainer:
-    pair counts are one word-pair-keyed agg, the argmax is a 1-row
-    frame, and the run-length pass touches only the winning token's
-    postings."""
-    from mpds_spark.operators.util import scratch_persist
-
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.col("text"), " ").alias("__w")
-    )
-    post = scratch_persist(
-        docs.select(
-            "doc_id", F.posexplode("__w").alias("__p", "__word")
-        )
-    )
-    a = post.select(
-        F.col("doc_id").alias("d1"), F.col("__p").alias("p1"),
-        F.col("__word").alias("w1"),
-    )
-    b = post.select(
-        F.col("doc_id").alias("d2"), F.col("__p").alias("p2"),
-        F.col("__word").alias("w2"),
-    )
-    cnts = (
-        a.join(
-            b,
-            (F.col("d1") == F.col("d2"))
-            & (F.col("p2") == F.col("p1") + 1),
-        )
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    top = cnts.agg(
-        F.min(
-            F.struct(
-                (-F.col("cnt")).alias("nc"),
-                F.col("w1").alias("tw1"),
-                F.col("w2").alias("tw2"),
-            )
-        ).alias("t")
-    ).select(
-        F.col("t.tw1").alias("tw1"),
-        F.col("t.tw2").alias("tw2"),
-        (-F.col("t.nc")).cast("long").alias("pair_count"),
-    )
-    tot = post.agg(
-        F.count(F.lit(1)).cast("long").alias("tokens_before")
-    )
-    wisl = Window.partitionBy("doc_id").orderBy("__p")
-    eq_app = (
-        post.crossJoin(top.select("tw1"))
-        .filter(F.col("__word") == F.col("tw1"))
-        .select(
-            "doc_id",
-            (F.col("__p") - F.row_number().over(wisl)).alias("__g"),
-        )
-        .groupBy("doc_id", "__g")
-        .agg(F.count(F.lit(1)).cast("long").alias("__L"))
-        .agg(
-            F.coalesce(
-                F.sum(F.floor(F.col("__L") / 2)), F.lit(0)
-            ).cast("long").alias("eq_app")
-        )
-    )
-    f = top.crossJoin(tot).crossJoin(eq_app)
-    applied = F.when(
-        F.col("tw1") == F.col("tw2"), F.col("eq_app")
-    ).otherwise(F.col("pair_count"))
-    return f.select(
-        F.col("tw1").alias("pair_left"),
-        F.col("tw2").alias("pair_right"),
-        "pair_count",
-        applied.alias("merges_applied"),
-        "tokens_before",
-        (F.col("tokens_before") - applied).alias("tokens_after"),
-        _r6(
-            applied.cast("double")
-            / F.col("tokens_before").cast("double")
-        ).alias("reduction_share"),
-    )
-
-
-SQL_BPE_MERGE_STEP = """
-WITH ws AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-), pairs AS (
-  SELECT w[i] AS w1, w[i + 1] AS w2
-  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i FROM ws)
-), top AS (
-  SELECT w1 AS tw1, w2 AS tw2, CAST(count(*) AS BIGINT) AS pair_count
-  FROM pairs GROUP BY w1, w2
-  ORDER BY count(*) DESC, w1, w2 LIMIT 1
-), tot AS (
-  SELECT CAST(sum(len(w)) AS BIGINT) AS tokens_before FROM ws
-), occ AS (
-  SELECT doc_id, i
-  FROM (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS i FROM ws),
-       top
-  WHERE w[i] = top.tw1
-), runs AS (
-  SELECT CAST(count(*) AS BIGINT) AS L
-  FROM (SELECT doc_id,
-          i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS g
-        FROM occ)
-  GROUP BY doc_id, g
-), eqapp AS (
-  SELECT CAST(coalesce(sum(L // 2), 0) AS BIGINT) AS eq_app FROM runs
-)
-SELECT tw1 AS pair_left, tw2 AS pair_right, pair_count,
-  CASE WHEN tw1 = tw2 THEN eq_app ELSE pair_count END
-    AS merges_applied,
-  tokens_before,
-  tokens_before - CASE WHEN tw1 = tw2 THEN eq_app ELSE pair_count END
-    AS tokens_after,
-  round(CAST(CASE WHEN tw1 = tw2 THEN eq_app ELSE pair_count END
-             AS DOUBLE)
-        / CAST(tokens_before AS DOUBLE), 6) AS reduction_share
-FROM top, tot, eqapp
-"""
-
-QUERIES["bpe_merge_step"] = q_bpe_merge_step
-_RAW_ORACLES["bpe_merge_step"] = SQL_BPE_MERGE_STEP
-
-
-def q_padding_waste_audit(spark, sf_dir):
-    """Batch padding-waste audit: how many pad tokens does fixed-size-8
-    batching burn per source under arrival-order vs length-sorted
-    batching (the bucketed-batching argument every seq2seq/LLM trainer
-    makes — Vaswani et al. 2017 tensor2tensor and fairseq both ship
-    length-bucketed loaders; this measures the win on OUR corpus
-    instead of assuming it). Per (source, batch of 8 consecutive
-    docs): padded cost = rows * max(len), waste = padded - real.
-    Everything is exact longs off ONE persisted per-doc length frame;
-    waste_pct is the single division. The per-source row_number is the
-    per-shard sort a real loader does; at 10^12 docs each source
-    partition range-sorts independently (the documented
-    range-partition + boundary-carry variant applies if one source
-    dominates)."""
-    from mpds_spark.operators.util import scratch_persist
-
-    d = scratch_persist(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "source",
-            F.size(F.split(F.col("text"), " ")).cast("long")
-            .alias("__l"),
-        )
-    )
-
-    def audit(order_cols, label):
-        w = Window.partitionBy("source").orderBy(*order_cols)
-        batched = d.select(
-            "source", "__l",
-            F.floor((F.row_number().over(w) - 1) / 8).alias("__b"),
-        )
-        per_batch = batched.groupBy("source", "__b").agg(
-            F.count(F.lit(1)).cast("long").alias("__rows"),
-            F.max("__l").alias("__mx"),
-            F.sum("__l").cast("long").alias("__real"),
-        )
-        agg = per_batch.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_batches"),
-            F.sum("__real").cast("long").alias("real_tokens"),
-            F.sum(F.col("__rows") * F.col("__mx")).cast("long")
-            .alias("padded_tokens"),
-        )
-        return agg.select(
-            F.lit(label).alias("strategy"),
-            "source", "n_batches", "real_tokens", "padded_tokens",
-            _r6(
-                (F.col("padded_tokens") - F.col("real_tokens"))
-                .cast("double")
-                / F.col("padded_tokens").cast("double")
-            ).alias("waste_pct"),
-        )
-
-    return audit([F.col("doc_id")], "arrival").unionAll(
-        audit([F.col("__l"), F.col("doc_id")], "length_sorted")
-    )
-
-
-SQL_PADDING_WASTE = """
-WITH d AS (
-  SELECT doc_id, source,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS l
-  FROM documents
-), a AS (
-  SELECT source, l,
-    (row_number() OVER (PARTITION BY source ORDER BY doc_id) - 1) // 8
-      AS b
-  FROM d
-), s AS (
-  SELECT source, l,
-    (row_number() OVER (PARTITION BY source ORDER BY l, doc_id) - 1)
-      // 8 AS b
-  FROM d
-), pa AS (
-  SELECT source, b, CAST(count(*) AS BIGINT) AS rows_,
-    CAST(max(l) AS BIGINT) AS mx, CAST(sum(l) AS BIGINT) AS real_
-  FROM a GROUP BY source, b
-), ps AS (
-  SELECT source, b, CAST(count(*) AS BIGINT) AS rows_,
-    CAST(max(l) AS BIGINT) AS mx, CAST(sum(l) AS BIGINT) AS real_
-  FROM s GROUP BY source, b
-), fa AS (
-  SELECT 'arrival' AS strategy, source,
-    CAST(count(*) AS BIGINT) AS n_batches,
-    CAST(sum(real_) AS BIGINT) AS real_tokens,
-    CAST(sum(rows_ * mx) AS BIGINT) AS padded_tokens
-  FROM pa GROUP BY source
-), fs AS (
-  SELECT 'length_sorted' AS strategy, source,
-    CAST(count(*) AS BIGINT) AS n_batches,
-    CAST(sum(real_) AS BIGINT) AS real_tokens,
-    CAST(sum(rows_ * mx) AS BIGINT) AS padded_tokens
-  FROM ps GROUP BY source
-), u AS (
-  SELECT * FROM fa UNION ALL SELECT * FROM fs
-)
-SELECT strategy, source, n_batches, real_tokens, padded_tokens,
-  round(CAST(padded_tokens - real_tokens AS DOUBLE)
-        / CAST(padded_tokens AS DOUBLE), 6) AS waste_pct
-FROM u
-"""
-
-QUERIES["padding_waste_audit"] = q_padding_waste_audit
-_RAW_ORACLES["padding_waste_audit"] = SQL_PADDING_WASTE
-
-
-def _chi2_inv_1dof(p: float) -> float:
-    """Inverse upper-tail chi-square(1): the z with erfc(z/sqrt(2)) = p,
-    squared. 200 deterministic bisection steps on [0, 40] converge past
-    double resolution, so the returned literal is a pure function of p —
-    the SAME double is embedded in the Spark plan and the DuckDB SQL
-    (repr round-trips doubles exactly), and the BH comparisons stay
-    cross-engine exact."""
-    import math
-
-    lo, hi = 0.0, 40.0
-    for _ in range(200):
-        mid = (lo + hi) / 2
-        if math.erfc(mid / math.sqrt(2.0)) > p:
-            lo = mid
-        else:
-            hi = mid
-    z = (lo + hi) / 2
-    return z * z
-
-
-_BH_M = 24
-_BH_ALPHA = 0.05
-_BH_CRITS = [
-    _chi2_inv_1dof(i * _BH_ALPHA / _BH_M) for i in range(1, _BH_M + 1)
-]
-
-
-def q_bh_fdr(spark, sf_dir):
-    """Benjamini-Hochberg step-up FDR control over the 24 simultaneous
-    per-hour purchase-rate tests (Benjamini & Hochberg 1995 — THE
-    multiple-testing correction for feature screens and metric sweeps;
-    running 24 hourly tests at alpha=0.05 uncorrected expects a false
-    alarm, which is how seasonality dashboards cry wolf). Each hour
-    gets the one-sample binomial chi-square against the pooled rate (a
-    fixed expression tree of exact longs, so the statistic is
-    cross-engine exact); BH works in chi2 space — p_(i) <= i*alpha/m
-    iff chi2_(i) >= chi2inv(1 - i*alpha/m) — with the 24 critical
-    values precomputed ONCE by deterministic bisection and embedded as
-    identical literals on both engines, so no runtime erf is needed
-    (Spark has none). Reject ranks 1..k where k is the LARGEST
-    satisfied rank (the step-up rule — a window max over the 24-row
-    frame, so a non-monotone chi2 sequence still rejects everything
-    below the last crossing). ONE corpus aggregate; everything after
-    runs on 24 rows at any scale."""
-    ev = _events(spark, sf_dir).select(
-        F.hour(F.col("ts").cast("timestamp")).cast("long")
-        .alias("hour"),
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0).alias("__pur"),
-    )
-    c = ev.groupBy("hour").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("__pur").cast("long").alias("purchases"),
-    )
-    tall = Window.orderBy("hour").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    t = c.select(
-        "hour", "n_events", "purchases",
-        F.sum("n_events").over(tall).cast("long").alias("__N"),
-        F.sum("purchases").over(tall).cast("long").alias("__X"),
-    )
-    nd = F.col("n_events").cast("double")
-    xd = F.col("purchases").cast("double")
-    Nd = F.col("__N").cast("double")
-    Xd = F.col("__X").cast("double")
-    num = xd - nd * Xd / Nd
-    den = nd * (Xd / Nd) * (F.lit(1.0) - Xd / Nd)
-    s = t.select(
-        "hour", "n_events", "purchases",
-        (xd / nd).alias("__rate"),
-        (num * num / den).alias("__chi2"),
-    )
-    wr = Window.orderBy(F.desc("__chi2"), "hour")
-    crit_arr = F.array(*[F.lit(v) for v in _BH_CRITS])
-    r = s.select(
-        "hour", "n_events", "purchases", "__rate", "__chi2",
-        F.row_number().over(wr).alias("rank"),
-    ).select(
-        "*", F.element_at(crit_arr, F.col("rank")).alias("__crit")
-    )
-    wk = Window.orderBy("hour").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    k = F.max(
-        F.when(F.col("__chi2") >= F.col("__crit"), F.col("rank"))
-        .otherwise(0)
-    ).over(wk)
-    return r.select(
-        "hour", "n_events", "purchases",
-        _r6(F.col("__rate")).alias("rate"),
-        _r6(F.col("__chi2")).alias("chi2"),
-        "rank",
-        _r6(F.col("__crit")).alias("bh_critical"),
-        (F.col("rank") <= k).alias("rejected"),
-    )
-
-
-_BH_VALUES = ",\n         ".join(
-    f"({i + 1}, CAST({v!r} AS DOUBLE))" for i, v in enumerate(_BH_CRITS)
-)
-
-SQL_BH_FDR = f"""
-WITH c AS (
-  SELECT CAST(hour(ts) AS BIGINT) AS hour,
-    CAST(count(*) AS BIGINT) AS n_events,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS purchases
-  FROM events GROUP BY 1
-), t AS (
-  SELECT hour, n_events, purchases,
-    CAST(sum(n_events) OVER () AS BIGINT) AS nn,
-    CAST(sum(purchases) OVER () AS BIGINT) AS xx
-  FROM c
-), s AS (
-  SELECT hour, n_events, purchases,
-    CAST(purchases AS DOUBLE) / CAST(n_events AS DOUBLE) AS rate,
-    ((CAST(purchases AS DOUBLE)
-      - CAST(n_events AS DOUBLE) * CAST(xx AS DOUBLE)
-        / CAST(nn AS DOUBLE))
-     * (CAST(purchases AS DOUBLE)
-        - CAST(n_events AS DOUBLE) * CAST(xx AS DOUBLE)
-          / CAST(nn AS DOUBLE)))
-    / (CAST(n_events AS DOUBLE)
-       * (CAST(xx AS DOUBLE) / CAST(nn AS DOUBLE))
-       * (1.0 - CAST(xx AS DOUBLE) / CAST(nn AS DOUBLE))) AS chi2
-  FROM t
-), r AS (
-  SELECT *, row_number() OVER (ORDER BY chi2 DESC, hour) AS rank
-  FROM s
-), cr (rank, crit) AS (
-  VALUES {_BH_VALUES}
-), j AS (
-  SELECT r.*, cr.crit FROM r JOIN cr ON r.rank = cr.rank
-), k AS (
-  SELECT max(CASE WHEN chi2 >= crit THEN rank ELSE 0 END) AS kmax
-  FROM j
-)
-SELECT hour, n_events, purchases,
-  round(rate, 6) AS rate,
-  round(chi2, 6) AS chi2,
-  rank,
-  round(crit, 6) AS bh_critical,
-  rank <= kmax AS rejected
-FROM j, k
-"""
-
-QUERIES["bh_fdr"] = q_bh_fdr
-_RAW_ORACLES["bh_fdr"] = SQL_BH_FDR
-
-
-def q_eb_shrinkage(spark, sf_dir):
-    """Empirical-Bayes beta-binomial shrinkage of per-user purchase
-    rates with the prior FITTED from the data by method of moments
-    (Robbins 1956 empirical Bayes; the beta-binomial MoM is the
-    textbook Efron & Morris 1975 batting-average treatment): estimate
-    (m, v) = mean/variance of raw rates across users with n >= 5,
-    prior strength s = m(1-m)/v - 1, alpha = m*s, beta = (1-m)*s,
-    shrunk rate = (x + alpha)/(n + alpha + beta). The data-driven
-    companion to rate_shrinkage's FIXED prior strength 20 — here the
-    data says how much to trust small samples. The corpus aggregates
-    to per-user (x, n), then to the DISTINCT (x, n) CELL histogram, so
-    the rate moments are sequential folds over the (n, x)-sorted
-    bounded cell array (the theil_index convention — no per-row float
-    reduction ever touches the user frame, and at 10^12 users the cell
-    frame is still bounded by max-events-per-user^2). MoM caveat
-    documented: if between-user variance is sub-binomial the strength
-    goes negative and EB is undefined — both engines emit the same
-    fixed expressions either way, so the gate stays exact."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        "user_id",
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0).alias("__pur"),
-    )
-    u = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("__pur").cast("long").alias("x"),
-    ).filter(F.col("n") >= 5)
-    cells = scratch_persist(
-        u.groupBy("x", "n").agg(
-            F.count(F.lit(1)).cast("long").alias("users")
-        )
-    )
-    xd = F.col("x").cast("double")
-    ndc = F.col("n").cast("double")
-    ud = F.col("users").cast("double")
-    terms = cells.select(
-        F.struct(
-            F.col("n").alias("n"), F.col("x").alias("x"),
-            (ud * (xd / ndc)).alias("t1"),
-            (ud * (xd / ndc) * (xd / ndc)).alias("t2"),
-        ).alias("__s"),
-        "users",
-    )
-    st = terms.agg(
-        F.sum("users").cast("long").alias("uu"),
-        F.sort_array(F.collect_list("__s")).alias("__arr"),
-    ).select(
-        "uu",
-        F.aggregate(
-            F.transform(F.col("__arr"), lambda e: e["t1"]),
-            F.lit(0.0), lambda a, b: a + b,
-        ).alias("sr"),
-        F.aggregate(
-            F.transform(F.col("__arr"), lambda e: e["t2"]),
-            F.lit(0.0), lambda a, b: a + b,
-        ).alias("sr2"),
-    )
-    uud = F.col("uu").cast("double")
-    m = F.col("sr") / uud
-    v = (F.col("sr2") - F.col("sr") * F.col("sr") / uud) / (
-        (F.col("uu") - 1).cast("double")
-    )
-    s = m * (F.lit(1.0) - m) / v - F.lit(1.0)
-    ab = st.select(
-        (m * s).alias("__alpha"),
-        ((F.lit(1.0) - m) * s).alias("__beta"),
-    )
-    f = cells.crossJoin(ab)
-    return f.select(
-        F.col("x").alias("purchases"),
-        F.col("n").alias("n_events"),
-        "users",
-        _r6(xd / ndc).alias("raw_rate"),
-        _r6(
-            (xd + F.col("__alpha"))
-            / (ndc + F.col("__alpha") + F.col("__beta"))
-        ).alias("shrunk_rate"),
-        _r6(F.col("__alpha")).alias("alpha"),
-        _r6(F.col("__beta")).alias("beta"),
-    )
-
-
-SQL_EB_SHRINKAGE = """
-WITH u AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS x
-  FROM events GROUP BY 1
-), cells AS (
-  SELECT x, n, CAST(count(*) AS BIGINT) AS users
-  FROM u WHERE n >= 5 GROUP BY x, n
-), st AS (
-  SELECT CAST(sum(users) AS BIGINT) AS uu,
-    coalesce(list_reduce(
-      list(CAST(users AS DOUBLE)
-           * (CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-           ORDER BY n, x),
-      (a, b) -> a + b), 0.0) AS sr,
-    coalesce(list_reduce(
-      list(CAST(users AS DOUBLE)
-           * (CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-           * (CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-           ORDER BY n, x),
-      (a, b) -> a + b), 0.0) AS sr2
-  FROM cells
-), p AS (
-  SELECT uu, sr / CAST(uu AS DOUBLE) AS m,
-    (sr2 - sr * sr / CAST(uu AS DOUBLE))
-      / CAST(uu - 1 AS DOUBLE) AS v
-  FROM st
-), ab AS (
-  SELECT m * (m * (1.0 - m) / v - 1.0) AS alpha,
-         (1.0 - m) * (m * (1.0 - m) / v - 1.0) AS beta
-  FROM p
-)
-SELECT c.x AS purchases, c.n AS n_events, c.users,
-  round(CAST(c.x AS DOUBLE) / CAST(c.n AS DOUBLE), 6) AS raw_rate,
-  round((CAST(c.x AS DOUBLE) + alpha)
-        / (CAST(c.n AS DOUBLE) + alpha + beta), 6) AS shrunk_rate,
-  round(alpha, 6) AS alpha,
-  round(beta, 6) AS beta
-FROM cells c, ab
-"""
-
-QUERIES["eb_shrinkage"] = q_eb_shrinkage
-_RAW_ORACLES["eb_shrinkage"] = SQL_EB_SHRINKAGE
-
-
-def q_levene_test(spark, sf_dir):
-    """Brown-Forsythe homogeneity-of-variance test of event value
-    across event types (Levene 1960 with Brown & Forsythe 1974's
-    median centers — the robust pre-check before any pooled-variance
-    t/F machinery, and the reason Welch pairs exist in this catalog:
-    if this F is large, pooling is wrong). Deviations are kept
-    INTEGER: z = |2*cents - med2_g| where med2_g is the group's
-    doubled median (lo+hi middle ranks), so every per-row quantity and
-    every group moment (n, sum z, sum z^2) is an exact long — the
-    common factor 2 cancels inside F. The between-groups term folds
-    S_g^2/n_g in group-sorted order over the tiny k-row frame; F is a
-    fixed expression tree. ONE corpus exchange: the group-rank window,
-    the median agg, the deviation pass and the moment agg all share
-    the event_type partitioning."""
-    ev = _events(spark, sf_dir).select(
-        F.col("event_type").alias("g"),
-        "event_id",
-        (F.signum("value")
-         * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5)))
-        .cast("long").alias("__c"),
-    )
-    wg = Window.partitionBy("g").orderBy("__c", "event_id")
-    wn = Window.partitionBy("g")
-    ranked = ev.select(
-        "g", "__c",
-        F.row_number().over(wg).alias("__rn"),
-        F.count(F.lit(1)).over(wn).cast("long").alias("__n"),
-    )
-    med = ranked.groupBy("g").agg(
-        (
-            F.sum(
-                F.when(
-                    F.col("__rn") == F.floor((F.col("__n") + 1) / 2),
-                    F.col("__c"),
-                ).otherwise(0)
-            )
-            + F.sum(
-                F.when(
-                    F.col("__rn") == F.floor(F.col("__n") / 2) + 1,
-                    F.col("__c"),
-                ).otherwise(0)
-            )
-        ).cast("long").alias("med2")
-    )
-    z = ranked.join(F.broadcast(med), "g").select(
-        "g", F.abs(2 * F.col("__c") - F.col("med2")).alias("__z")
-    )
-    grp = z.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("ng"),
-        F.sum("__z").cast("long").alias("s"),
-        F.sum(F.col("__z") * F.col("__z")).cast("long").alias("q"),
-    )
-    one = grp.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("ng").cast("long").alias("n"),
-        F.sum("s").cast("long").alias("st"),
-        F.sum("q").cast("long").alias("qt"),
-        F.sort_array(
-            F.collect_list(F.struct("g", "ng", "s"))
-        ).alias("__arr"),
-    ).select(
-        "k", "n", "st", "qt",
-        F.aggregate(
-            F.transform(
-                F.col("__arr"),
-                lambda e: e["s"].cast("double") * e["s"].cast("double")
-                / e["ng"].cast("double"),
-            ),
-            F.lit(0.0), lambda a, b: a + b,
-        ).alias("sb"),
-    )
-    b = F.col("sb") - (
-        F.col("st").cast("double") * F.col("st").cast("double")
-        / F.col("n").cast("double")
-    )
-    w = F.col("qt").cast("double") - F.col("sb")
-    km1 = (F.col("k") - 1).cast("double")
-    nmk = (F.col("n") - F.col("k")).cast("double")
-    return one.select(
-        F.col("k").alias("k_groups"),
-        F.col("n").alias("n_total"),
-        (F.col("k") - 1).alias("df1"),
-        (F.col("n") - F.col("k")).alias("df2"),
-        _r6(b / km1).alias("between_ms"),
-        _r6(w / nmk).alias("within_ms"),
-        _r6((b / km1) / (w / nmk)).alias("f_stat"),
-    )
-
-
-SQL_LEVENE_TEST = """
-WITH e AS (
-  SELECT event_type AS g, event_id,
-    CAST(floor(abs(value)*100 + 0.5) * sign(value) AS BIGINT) AS c
-  FROM events
-), r AS (
-  SELECT g, c,
-    row_number() OVER (PARTITION BY g ORDER BY c, event_id) AS rn,
-    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n
-  FROM e
-), m AS (
-  SELECT g, CAST(sum(CASE WHEN rn = (n + 1) // 2 THEN c ELSE 0 END)
-             + sum(CASE WHEN rn = n // 2 + 1 THEN c ELSE 0 END)
-         AS BIGINT) AS med2
-  FROM r GROUP BY g
-), z AS (
-  SELECT r.g, abs(2 * r.c - m.med2) AS z FROM r JOIN m ON r.g = m.g
-), grp AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS ng,
-    CAST(sum(z) AS BIGINT) AS s,
-    CAST(sum(z * z) AS BIGINT) AS q
-  FROM z GROUP BY g
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ng) AS BIGINT) AS n,
-    CAST(sum(s) AS BIGINT) AS st, CAST(sum(q) AS BIGINT) AS qt,
-    coalesce(list_reduce(
-      list(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(ng AS DOUBLE)
-           ORDER BY g),
-      (a, b) -> a + b), 0.0) AS sb
-  FROM grp
-), f AS (
-  SELECT k, n,
-    sb - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(n AS DOUBLE)
-      AS b,
-    CAST(qt AS DOUBLE) - sb AS w
-  FROM one
-)
-SELECT k AS k_groups, n AS n_total, k - 1 AS df1, n - k AS df2,
-  round(b / CAST(k - 1 AS DOUBLE), 6) AS between_ms,
-  round(w / CAST(n - k AS DOUBLE), 6) AS within_ms,
-  round((b / CAST(k - 1 AS DOUBLE)) / (w / CAST(n - k AS DOUBLE)), 6)
-    AS f_stat
-FROM f
-"""
-
-QUERIES["levene_test"] = q_levene_test
-_RAW_ORACLES["levene_test"] = SQL_LEVENE_TEST
-
-def q_isotonic_calibration(spark, sf_dir):
-    """Isotonic regression of the calibration_bins reliability curve
-    (PAVA solution via the Barlow et al. 1972 minimax identity
-    iso_i = max_{j<=i} min_{k>=i} weightedMean(x[j..k]) — the
-    calibration-repair step of Zadrozny & Elkan 2002 that every
-    score-based curation filter should run before thresholding).
-    Same deterministic classifier as calibration_bins: score bin =
-    min(9, min(n_chars,400) div 40), label = doc has >= 50 words. The
-    corpus aggregates ONCE to the <=10-bin frame; the minimax runs as
-    nested bounded transforms over the bin-sorted arrays, every
-    candidate mean ONE division of exact slice-sum longs, so max/min
-    pick identical doubles on both engines and the gate is exact. The
-    pytest proves the minimax equals classic stack-based PAVA. At
-    10^12 docs the isotonic fit still touches 10 rows."""
-    d = load(spark, sf_dir, "documents").select(
-        F.least(F.col("n_chars"), F.lit(400)).cast("long").alias("__m"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 50,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__y"),
-    )
-    b = d.groupBy(
-        F.least(F.lit(9).cast("long"), F.expr("__m div 40"))
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("__y").cast("long").alias("pos"),
-    )
-    one = b.agg(
-        F.sort_array(
-            F.collect_list(F.struct("bin", "n", "pos"))
-        ).alias("__arr")
-    ).select(
-        F.transform(F.col("__arr"), lambda e: e["bin"]).alias("bs"),
-        F.transform(F.col("__arr"), lambda e: e["n"]).alias("ns"),
-        F.transform(F.col("__arr"), lambda e: e["pos"]).alias("xs"),
-        F.size(F.col("__arr")).alias("bcnt"),
-    )
-
-    def ssum(arr, j, k):
-        return F.aggregate(
-            F.slice(arr, j, k - j + 1),
-            F.lit(0).cast("long"),
-            lambda a, e: a + e,
-        )
-
-    iso = one.select(
-        "bs", "ns", "xs",
-        F.transform(
-            F.sequence(F.lit(1), F.col("bcnt")),
-            lambda i: F.array_max(
-                F.transform(
-                    F.sequence(F.lit(1), i),
-                    lambda j: F.array_min(
-                        F.transform(
-                            F.sequence(i, F.col("bcnt")),
-                            lambda k: ssum(F.col("xs"), j, k)
-                            .cast("double")
-                            / ssum(F.col("ns"), j, k).cast("double"),
-                        )
-                    ),
-                )
-            ),
-        ).alias("iso_arr"),
-    )
-    z = iso.select(
-        F.explode(
-            F.arrays_zip(
-                F.col("bs").alias("bin"),
-                F.col("ns").alias("n"),
-                F.col("xs").alias("pos"),
-                F.col("iso_arr").alias("iso"),
-            )
-        ).alias("__e")
-    )
-    return z.select(
-        F.col("__e.bin").alias("bin"),
-        F.col("__e.n").alias("n_docs"),
-        F.col("__e.pos").alias("n_pos"),
-        _r6(
-            F.col("__e.pos").cast("double")
-            / F.col("__e.n").cast("double")
-        ).alias("raw_rate"),
-        _r6(F.col("__e.iso")).alias("iso_rate"),
-    )
-
-
-SQL_ISOTONIC_CALIBRATION = """
-WITH d AS (
-  SELECT least(n_chars, 400) AS m,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1 >= 50
-         THEN 1 ELSE 0 END AS y
-  FROM documents
-), bins AS (
-  SELECT least(9, m // 40) AS bin,
-    CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS pos
-  FROM d GROUP BY 1
-), one AS (
-  SELECT list(bin ORDER BY bin) AS bs,
-         list(n ORDER BY bin) AS ns,
-         list(pos ORDER BY bin) AS xs,
-         CAST(count(*) AS BIGINT) AS bcnt
-  FROM bins
-), iso AS (
-  SELECT bs, ns, xs, bcnt,
-    list_transform(range(1, bcnt + 1), i ->
-      list_max(list_transform(range(1, i + 1), j ->
-        list_min(list_transform(range(i, bcnt + 1), k ->
-          CAST(list_sum(xs[j:k]) AS DOUBLE)
-          / CAST(list_sum(ns[j:k]) AS DOUBLE)))))) AS iso_arr
-  FROM one
-), ex AS (
-  SELECT bs, ns, xs, iso_arr,
-    unnest(range(1, bcnt + 1)) AS i
-  FROM iso
-)
-SELECT bs[i] AS bin, ns[i] AS n_docs, xs[i] AS n_pos,
-  round(CAST(xs[i] AS DOUBLE) / CAST(ns[i] AS DOUBLE), 6) AS raw_rate,
-  round(iso_arr[i], 6) AS iso_rate
-FROM ex
-"""
-
-QUERIES["isotonic_calibration"] = q_isotonic_calibration
-_RAW_ORACLES["isotonic_calibration"] = SQL_ISOTONIC_CALIBRATION
-
-def q_session_edit_distance(spark, sf_dir):
-    """Histogram of Levenshtein edit distances between each user's
-    CONSECUTIVE active-day behavior strings (Levenshtein 1966; the
-    day's events collapse to an initials string in time order —
-    'vvcp' = view view click purchase — so the distance measures how
-    much a user's daily routine mutates day over day: the behavioral-
-    stability feature that separates habitual from exploratory users,
-    and the sequence-level drift audit for event pipelines). Day
-    strings are deterministic (ts is unique per user); distances are
-    exact integers from the JVM/native levenshtein on BOTH engines;
-    the histogram is exact longs — zero floats anywhere. One
-    (user, day) aggregate + one user-keyed lag; day strings are <= a
-    few dozen chars so the O(len^2) DP is constant work per pair."""
-    ev = _events(spark, sf_dir).select(
-        "user_id",
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__d"),
-        F.col("ts").cast("timestamp").cast("double").alias("__t"),
-        F.substring("event_type", 1, 1).alias("__i"),
-    )
-    day = ev.groupBy("user_id", "__d").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("__t", "__i"))),
-                lambda e: e["__i"],
-            ),
-            "",
-        ).alias("__s")
-    )
-    w = Window.partitionBy("user_id").orderBy("__d")
-    pairs = day.select(
-        F.lag("__s").over(w).alias("__p"), "__s"
-    ).filter(F.col("__p").isNotNull())
-    return (
-        pairs.select(
-            F.levenshtein("__p", "__s").cast("long")
-            .alias("edit_distance")
-        )
-        .groupBy("edit_distance")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    )
-
-
-SQL_SESSION_EDIT_DISTANCE = """
-WITH e AS (
-  SELECT user_id, CAST(day(ts) AS BIGINT) AS d, ts,
-    substring(event_type, 1, 1) AS i
-  FROM events
-), day AS (
-  SELECT user_id, d, string_agg(i, '' ORDER BY ts) AS s
-  FROM e GROUP BY user_id, d
-), pairs AS (
-  SELECT lag(s) OVER (PARTITION BY user_id ORDER BY d) AS p, s
-  FROM day
-)
-SELECT CAST(levenshtein(p, s) AS BIGINT) AS edit_distance,
-  CAST(count(*) AS BIGINT) AS n_pairs
-FROM pairs WHERE p IS NOT NULL
-GROUP BY 1
-"""
-
-QUERIES["session_edit_distance"] = q_session_edit_distance
-_RAW_ORACLES["session_edit_distance"] = SQL_SESSION_EDIT_DISTANCE
-
-
-_BT_TYPES = ["click", "error", "purchase", "signup", "view"]
-_BT_K = len(_BT_TYPES)
-_BT_R = 10
-
-
-def _bt_fragments():
-    """Shared SQL fragments for the Bradley-Terry MM iterations: the
-    SAME strings run through Spark selectExpr and the DuckDB CTE
-    chain, so every float op is literally identical cross-engine."""
-    K = _BT_K
-    carry = []
-    for i in range(K):
-        for j in range(i + 1, K):
-            carry.append(
-                f"CAST(w{i}{j} + w{j}{i} AS DOUBLE) AS n{i}{j}"
-            )
-    for i in range(K):
-        ws = " + ".join(f"w{i}{j}" for j in range(K) if j != i)
-        ls = " + ".join(f"w{j}{i}" for j in range(K) if j != i)
-        carry.append(f"CAST({ws} AS DOUBLE) AS bw{i}")
-        carry.append(f"CAST({ws} AS BIGINT) AS wt{i}")
-        carry.append(f"CAST({ls} AS BIGINT) AS lt{i}")
-    init = [f"CAST(0.2 AS DOUBLE) AS p0_{i}" for i in range(K)]
-    iters = []
-    for t in range(1, _BT_R + 1):
-        qs = []
-        for i in range(K):
-            den = " + ".join(
-                f"n{min(i, j)}{max(i, j)} / (p{t - 1}_{i} + p{t - 1}_{j})"
-                for j in range(K) if j != i
-            )
-            qs.append(f"bw{i} / ({den}) AS q{t}_{i}")
-        s = " + ".join(f"q{t}_{i}" for i in range(K))
-        ps = [f"q{t}_{i} / ({s}) AS p{t}_{i}" for i in range(K)]
-        iters.append((qs, ps))
-    return carry, init, iters
-
-
-def q_bradley_terry(spark, sf_dir):
-    """Bradley-Terry strength ranking of the event types from pairwise
-    user-level dominance (Zermelo 1929; Bradley & Terry 1952; fitted
-    by Hunter 2004's MM algorithm, 10 iterations from the uniform
-    start — the SAME model RLHF reward pipelines fit to pairwise
-    preference data, exercised here on 'which event type does a user
-    do more of': w_ij = #users with count_i > count_j, ties dropped).
-    The corpus aggregates to per-user type counts, then ONE global
-    aggregate yields all 20 directed win counts (exact longs); the MM
-    fixed-point iterations p_i <- W_i / sum_j n_ij/(p_i+p_j),
-    renormalized each round, run on that 1-row frame as generated SQL
-    fragments executed VERBATIM by both engines (selectExpr here, a
-    CTE chain in DuckDB), so every division happens in the same order
-    and the gate is exact. The 1-row iteration frame is persisted
-    before the 5-way output union (cached-branch convention). At
-    10^12 events the iteration cost is still 1 row x 10 rounds."""
-    from mpds_spark.operators.util import scratch_persist
-
-    K = _BT_K
-    ev = _events(spark, sf_dir).select("user_id", "event_type")
-    u = ev.groupBy("user_id").agg(*[
-        F.sum(
-            F.when(F.col("event_type") == t, 1).otherwise(0)
-        ).cast("long").alias(f"c{i}")
-        for i, t in enumerate(_BT_TYPES)
-    ])
-    wins = []
-    for i in range(K):
-        for j in range(K):
-            if i != j:
-                wins.append(
-                    F.sum(
-                        F.when(F.col(f"c{i}") > F.col(f"c{j}"), 1)
-                        .otherwise(0)
-                    ).cast("long").alias(f"w{i}{j}")
-                )
-    w = u.agg(*wins)
-    carry, init, iters = _bt_fragments()
-    df = w.selectExpr("*", *carry).selectExpr("*", *init)
-    for qs, ps in iters:
-        df = df.selectExpr("*", *qs).selectExpr("*", *ps)
-    df = scratch_persist(df)
-    outs = [
-        df.selectExpr(
-            f"'{t}' AS event_type",
-            f"wt{i} AS wins",
-            f"lt{i} AS losses",
-            f"p{_BT_R}_{i} AS __p",
-        )
-        for i, t in enumerate(_BT_TYPES)
-    ]
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res.select(
-        "event_type", "wins", "losses",
-        _r6(F.col("__p")).alias("bt_strength"),
-    )
-
-
-def _bt_sql() -> str:
-    K = _BT_K
-    carry, init, iters = _bt_fragments()
-    cases = ", ".join(
-        f"CAST(sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS c{i}"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    winsel = ", ".join(
-        f"CAST(sum(CASE WHEN c{i} > c{j} THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS w{i}{j}"
-        for i in range(K) for j in range(K) if i != j
-    )
-    ctes = [
-        f"u AS (SELECT user_id, {cases} FROM events GROUP BY user_id)",
-        f"w AS (SELECT {winsel} FROM u)",
-        f"base AS (SELECT *, {', '.join(carry)} FROM w)",
-        f"it0 AS (SELECT *, {', '.join(init)} FROM base)",
-    ]
-    prev = "it0"
-    for t, (qs, ps) in enumerate(iters, start=1):
-        ctes.append(f"iq{t} AS (SELECT *, {', '.join(qs)} FROM {prev})")
-        ctes.append(f"it{t} AS (SELECT *, {', '.join(ps)} FROM iq{t})")
-        prev = f"it{t}"
-    finals = " UNION ALL ".join(
-        f"SELECT '{t}' AS event_type, wt{i} AS wins, lt{i} AS losses,"
-        f" round(p{_BT_R}_{i}, 6) AS bt_strength FROM {prev}"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + finals
-
-
-SQL_BRADLEY_TERRY = _bt_sql()
-
-QUERIES["bradley_terry"] = q_bradley_terry
-_RAW_ORACLES["bradley_terry"] = SQL_BRADLEY_TERRY
-
-
-def _quant_scatter_gen(D):
-    """guide §4.2: per-batch vectorized partial scatter over the
-    milli-quantized embedding codes (ledoit_wolf_shrinkage).  The
-    quantization is the identical IEEE
-    float64 sequence as the r5 in-plan transform (widen to double,
-    abs*1000+0.5, floor, multiply by sign, truncate to int64), and
-    every emitted value is an INTEGER partial sum — integer addition
-    is order-independent, so groupBy-sum over batch partials is
-    bit-equal to the r5 per-pair explode+agg.  Rows emitted per
-    batch: D(D+1)/2 upper-tri cells (i,j,p), D dim sums (i,0,s), one
-    count row (0,0,n) — dim^2-bounded regardless of row count."""
-
-    def gen(batches):
-        import mpds_spark  # noqa: F401  installs the worker fix-ups
-        import numpy as np
-        import pyarrow as pa
-
-        iu, ju = np.triu_indices(D)
-        for b in batches:
-            col = b.column(0)
-            n = len(col)
-            if n == 0:
-                continue
-            x = np.asarray(
-                col.flatten(), dtype=np.float64
-            ).reshape(n, D)
-            q = (
-                np.sign(x)
-                * np.floor(np.abs(x) * 1000.0 + 0.5)
-            ).astype(np.int64)
-            s_mat = q.T @ q
-            si = q.sum(axis=0, dtype=np.int64)
-            i_out = np.concatenate(
-                [iu + 1, np.arange(1, D + 1), [0]]
-            ).astype(np.int64)
-            j_out = np.concatenate(
-                [ju + 1, np.zeros(D, dtype=np.int64), [0]]
-            ).astype(np.int64)
-            p_out = np.concatenate(
-                [s_mat[iu, ju], si, [n]]
-            ).astype(np.int64)
-            yield pa.record_batch(
-                [
-                    pa.array(i_out),
-                    pa.array(j_out),
-                    pa.array(p_out),
-                ],
-                names=["i", "j", "p"],
-            )
-
-    return gen
-
-
-def q_kruskal_wallis(spark, sf_dir):
-    """Kruskal-Wallis rank one-way ANOVA of event value across event
-    types (Kruskal & Wallis 1952 — the distribution-free complement to
-    levene_test/welch_pairs: it asks whether ANY group's value
-    distribution is shifted, with no normality assumption, which is
-    the right omnibus test for heavy-tailed revenue-like values).
-    Ranks never require a global per-row sort: doubled mid-ranks
-    r2(c) = 2*cum_before + t_c + 1 come from the DISTINCT-cents
-    histogram (the spearman_rank convention) and stay EXACT INTEGERS;
-    per-group rank sums R2_g are exact longs; H = 12/(N(N+1)) *
-    sum_g (R2_g/2)^2/n_g - 3(N+1) and the tie correction
-    C = 1 - sum(t^3-t)/(N^3-N) fold group-sorted/value-sorted over
-    bounded frames. ONE corpus agg to the histogram + one rank join
-    back + one group agg. At 10^12 rows the rank table is the value
-    histogram."""
-    ev = _events(spark, sf_dir).select(
-        F.col("event_type").alias("g"),
-        (F.signum("value")
-         * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5)))
-        .cast("long").alias("__c"),
-    )
-    hist = ev.groupBy("__c").agg(
-        F.count(F.lit(1)).cast("long").alias("__t")
-    )
-    wv = Window.orderBy("__c").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ranks = hist.select(
-        "__c", "__t",
-        (2 * (F.sum("__t").over(wv) - F.col("__t"))
-         + F.col("__t") + 1).cast("long").alias("__r2"),
-    )
-    joined = ev.join(ranks.select("__c", "__r2"), "__c")
-    grp = joined.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("ng"),
-        F.sum("__r2").cast("long").alias("r2g"),
-    )
-    tiefrm = hist.agg(
-        F.sum(
-            F.col("__t") * F.col("__t") * F.col("__t") - F.col("__t")
-        ).cast("long").alias("tie")
-    )
-    one = grp.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("ng").cast("long").alias("n"),
-        F.sort_array(
-            F.collect_list(F.struct("g", "ng", "r2g"))
-        ).alias("__arr"),
-    ).crossJoin(tiefrm)
-    nd = F.col("n").cast("double")
-    sb = F.aggregate(
-        F.transform(
-            F.col("__arr"),
-            lambda e: (e["r2g"].cast("double") / F.lit(2.0))
-            * (e["r2g"].cast("double") / F.lit(2.0))
-            / e["ng"].cast("double"),
-        ),
-        F.lit(0.0), lambda a, b: a + b,
-    )
-    h = F.lit(12.0) / (nd * (nd + F.lit(1.0))) * sb \
-        - F.lit(3.0) * (nd + F.lit(1.0))
-    corr = F.lit(1.0) - F.col("tie").cast("double") / (
-        nd * nd * nd - nd
-    )
-    return one.select(
-        F.col("k").alias("k_groups"),
-        F.col("n").alias("n_total"),
-        F.col("tie").alias("tie_term"),
-        _r6(h).alias("h_stat"),
-        _r6(h / corr).alias("h_corrected"),
-    )
-
-
-SQL_KRUSKAL_WALLIS = """
-WITH e AS (
-  SELECT event_type AS g,
-    CAST(floor(abs(value)*100 + 0.5) * sign(value) AS BIGINT) AS c
-  FROM events
-), hist AS (
-  SELECT c, CAST(count(*) AS BIGINT) AS t FROM e GROUP BY c
-), ranks AS (
-  SELECT c, t,
-    CAST(2 * (sum(t) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED
-              PRECEDING AND CURRENT ROW) - t) + t + 1 AS BIGINT)
-      AS r2
-  FROM hist
-), grp AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS ng,
-    CAST(sum(r2) AS BIGINT) AS r2g
-  FROM e JOIN ranks USING (c) GROUP BY g
-), tiefrm AS (
-  SELECT CAST(sum(t * t * t - t) AS BIGINT) AS tie FROM hist
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ng) AS BIGINT) AS n,
-    coalesce(list_reduce(
-      list((CAST(r2g AS DOUBLE) / 2.0) * (CAST(r2g AS DOUBLE) / 2.0)
-           / CAST(ng AS DOUBLE) ORDER BY g),
-      (a, b) -> a + b), 0.0) AS sb
-  FROM grp
-), f AS (
-  SELECT k, n, tie,
-    12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)) * sb
-      - 3.0 * (CAST(n AS DOUBLE) + 1.0) AS h,
-    1.0 - CAST(tie AS DOUBLE)
-      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-         - CAST(n AS DOUBLE)) AS corr
-  FROM one, tiefrm
-)
-SELECT k AS k_groups, n AS n_total, tie AS tie_term,
-  round(h, 6) AS h_stat,
-  round(h / corr, 6) AS h_corrected
-FROM f
-"""
-
-QUERIES["kruskal_wallis"] = q_kruskal_wallis
-_RAW_ORACLES["kruskal_wallis"] = SQL_KRUSKAL_WALLIS
-
-
-def q_mcnemar_test(spark, sf_dir):
-    """McNemar's test on the cohens_kappa rater pair (McNemar 1947;
-    Edwards 1948 continuity correction — the PAIRED disagreement test
-    that kappa does not give you: kappa says how much two
-    quality-filter rules agree, McNemar says whether their
-    DISAGREEMENTS are one-sided, i.e. one rule is systematically
-    stricter, which is what you check before swapping rule A for rule
-    B in a curation pipeline). Uses the identical deterministic raters
-    (n_chars >= 120 vs >= 20 words via the space-count identity); the
-    discordant cells b = A-only, c = B-only come from ONE aggregate;
-    chi2 = (b-c)^2/(b+c) and the corrected (|b-c|-1)^2/(b+c) are
-    single exact-integer-ratio divisions."""
-    d = load(spark, sf_dir, "documents").select(
-        F.when(F.col("n_chars") >= 120, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("__ra"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 20,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__rb"),
-    )
-    a = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.col("__ra") * (1 - F.col("__rb"))).cast("long")
-        .alias("b_only_a"),
-        F.sum((1 - F.col("__ra")) * F.col("__rb")).cast("long")
-        .alias("c_only_b"),
-    )
-    b = F.col("b_only_a")
-    c = F.col("c_only_b")
-    bc = (b + c).cast("double")
-    chi2 = F.when(
-        b + c > 0,
-        ((b - c) * (b - c)).cast("double") / bc,
-    ).otherwise(F.lit(0.0))
-    chi2_cc = F.when(
-        b + c > 0,
-        ((F.abs(b - c) - 1) * (F.abs(b - c) - 1)).cast("double") / bc,
-    ).otherwise(F.lit(0.0))
-    return a.select(
-        "n_docs", "b_only_a", "c_only_b",
-        _r6(chi2).alias("chi2"),
-        _r6(chi2_cc).alias("chi2_corrected"),
-        (chi2_cc > F.lit(3.841)).alias("one_sided_disagreement"),
-    )
-
-
-SQL_MCNEMAR_TEST = """
-WITH d AS (
-  SELECT CASE WHEN n_chars >= 120 THEN 1 ELSE 0 END AS ra,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1 >= 20
-         THEN 1 ELSE 0 END AS rb
-  FROM documents
-), a AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-    CAST(sum(ra * (1 - rb)) AS BIGINT) AS b_only_a,
-    CAST(sum((1 - ra) * rb) AS BIGINT) AS c_only_b
-  FROM d
-)
-SELECT n_docs, b_only_a, c_only_b,
-  round(CASE WHEN b_only_a + c_only_b > 0
-    THEN CAST((b_only_a - c_only_b) * (b_only_a - c_only_b) AS DOUBLE)
-         / CAST(b_only_a + c_only_b AS DOUBLE)
-    ELSE 0.0 END, 6) AS chi2,
-  round(CASE WHEN b_only_a + c_only_b > 0
-    THEN CAST((abs(b_only_a - c_only_b) - 1)
-              * (abs(b_only_a - c_only_b) - 1) AS DOUBLE)
-         / CAST(b_only_a + c_only_b AS DOUBLE)
-    ELSE 0.0 END, 6) AS chi2_corrected,
-  CASE WHEN b_only_a + c_only_b > 0
-    THEN CAST((abs(b_only_a - c_only_b) - 1)
-              * (abs(b_only_a - c_only_b) - 1) AS DOUBLE)
-         / CAST(b_only_a + c_only_b AS DOUBLE)
-    ELSE 0.0 END > 3.841 AS one_sided_disagreement
-FROM a
-"""
-
-QUERIES["mcnemar_test"] = q_mcnemar_test
-_RAW_ORACLES["mcnemar_test"] = SQL_MCNEMAR_TEST
-
-
-_COX_R = 15
-
-
-def _cox_den_duck(th: str) -> str:
-    """Breslow MM denominator sum_bins d * n1 / (n0 + n1*theta) as a
-    DuckDB left fold over the day-ascending risk-set list (exact
-    logrank_test frame; list_reduce is a guaranteed sequential fold,
-    matching Spark's aggregate)."""
-    return (
-        "list_reduce(list_transform(a, x ->"
-        " CASE WHEN x.d1 + x.d0 > 0 AND x.n1 > 0 THEN"
-        " CAST(x.d1 + x.d0 AS DOUBLE) * CAST(x.n1 AS DOUBLE)"
-        " / (CAST(x.nt - x.n1 AS DOUBLE)"
-        f"    + CAST(x.n1 AS DOUBLE) * {th})"
-        " ELSE 0.0 END), (acc, t) -> acc + t)"
-    )
-
-
-def q_cox_ph(spark, sf_dir):
-    """Cox proportional-hazards fit of the md5-parity arm effect on
-    inter-purchase gap times (Cox 1972, Breslow 1974 tie handling —
-    the regression companion to survival_km/logrank_test: logrank
-    answers 'do the curves differ', Cox answers 'by WHAT hazard
-    ratio', the effect size a curation A/B readout ships). One binary
-    covariate makes the Breslow partial likelihood a function of
-    theta = exp(beta) alone: L(theta) = theta^s1 / prod_bins
-    (n0 + n1*theta)^d, and the score root solves s1/theta =
-    sum d*n1/(n0 + n1*theta) — fitted by the monotone fixed-point
-    iteration theta <- s1 / sum_bins d*n1/(n0 + n1*theta) (15 rounds
-    from theta=1; the Zermelo/MM shape bradley_terry uses, so NO
-    exp() inside the loop — ln enters once at the end under the
-    catalog's cross-engine ln precedent). Risk sets are the EXACT
-    logrank_test frame (hour-binned completed gaps, final open gap
-    right-censored, arms hash-random so H0 is true by construction
-    and hazard_ratio ~ 1): deaths/at-risk per bin are exact longs;
-    Spark runs all 15 rounds as ONE nested-aggregate fold over the
-    collected <=720-row array (the sinkhorn precedent — chained HOF
-    projections stall Catalyst), DuckDB as a CTE chain with the
-    identical per-round update expression; standard error
-    1/sqrt(I(theta)) from the observed information
-    I = sum d*n1*n0*theta/(n0+n1*theta)^2, Wald z = ln(theta)/se,
-    and score_at_null re-reports the logrank O-E fold (cross-query
-    consistency gate). At 10^12 events only the hour-bin curve
-    crosses the global window; the fit itself is 1 row."""
-    d = _events(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select(
-        F.col("user_id").alias("__e"),
-        F.col("ts").cast("timestamp").cast("double").alias("__t"),
-        "event_id",
-    )
-    mx = _events(spark, sf_dir).agg(
-        F.max(F.col("ts").cast("timestamp").cast("double")).alias("__mx")
-    )
-    wlead = Window.partitionBy("__e").orderBy("__t", "event_id")
-    g = d.withColumn("__nxt", F.lead("__t").over(wlead)).join(
-        F.broadcast(mx)
-    )
-    sv = g.select(
-        F.floor(
-            (F.coalesce(F.col("__nxt"), F.col("__mx")) - F.col("__t"))
-            / F.lit(3600.0)
-        ).cast("long").alias("__day"),
-        F.when(F.col("__nxt").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0)).cast("long").alias("__obs"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("lr|"),
-                                   F.col("__e").cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long") % 2
-        ).alias("__arm"),
-    )
-    curve = sv.groupBy("__day").agg(
-        F.sum(F.when(F.col("__arm") == 1, F.col("__obs")).otherwise(0))
-        .cast("long").alias("__d1"),
-        F.sum(F.when(F.col("__arm") == 1, 1 - F.col("__obs")).otherwise(0))
-        .cast("long").alias("__c1"),
-        F.sum(F.when(F.col("__arm") == 0, F.col("__obs")).otherwise(0))
-        .cast("long").alias("__d0"),
-        F.sum(F.when(F.col("__arm") == 0, 1 - F.col("__obs")).otherwise(0))
-        .cast("long").alias("__c0"),
-    )
-    wall = Window.orderBy("__day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    tall = Window.orderBy("__day").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    curve = curve.select(
-        "*",
-        (
-            F.sum(F.col("__d1") + F.col("__c1")).over(tall)
-            - F.coalesce(
-                F.sum(F.col("__d1") + F.col("__c1")).over(wall), F.lit(0)
-            )
-        ).cast("long").alias("__n1"),
-        (
-            F.sum(
-                F.col("__d1") + F.col("__c1") + F.col("__d0") + F.col("__c0")
-            ).over(tall)
-            - F.coalesce(
-                F.sum(
-                    F.col("__d1") + F.col("__c1")
-                    + F.col("__d0") + F.col("__c0")
-                ).over(wall),
-                F.lit(0),
-            )
-        ).cast("long").alias("__nt"),
-    )
-    agg = curve.agg(
-        F.sum("__d1").cast("long").alias("s1"),
-        F.sum("__d0").cast("long").alias("s0"),
-        F.array_sort(
-            F.collect_list(
-                F.struct("__day", "__d1", "__d0", "__n1", "__nt")
-            )
-        ).alias("__a"),
-    )
-    # the per-round Breslow MM denominator as a Spark fold over __a,
-    # parameterized on the current theta expression
-    def den(th: str) -> str:
-        return (
-            "aggregate(__a, 0.0D, (acc, x) ->"
-            " acc + (CASE WHEN x.__d1 + x.__d0 > 0 AND x.__n1 > 0 THEN"
-            " cast(x.__d1 + x.__d0 as double) * cast(x.__n1 as double)"
-            " / (cast(x.__nt - x.__n1 as double)"
-            f"    + cast(x.__n1 as double) * {th})"
-            " ELSE 0.0D END))"
-        )
-
-    th_fold = (
-        f"aggregate(sequence(1, {_COX_R}), 1.0D, (th, r) ->"
-        f" CASE WHEN {den('th')} > 0.0D THEN"
-        f" cast(s1 as double) / {den('th')}"
-        " ELSE th END) AS th"
-    )
-    agg = agg.selectExpr("s1", "s0", "__a", th_fold)
-    info = (
-        "aggregate(__a, 0.0D, (acc, x) ->"
-        " acc + (CASE WHEN x.__d1 + x.__d0 > 0 AND x.__n1 > 0"
-        " AND x.__nt > x.__n1 THEN"
-        " cast(x.__d1 + x.__d0 as double) * cast(x.__n1 as double)"
-        " * cast(x.__nt - x.__n1 as double) * th"
-        " / ((cast(x.__nt - x.__n1 as double)"
-        "     + cast(x.__n1 as double) * th)"
-        "    * (cast(x.__nt - x.__n1 as double)"
-        "       + cast(x.__n1 as double) * th))"
-        " ELSE 0.0D END)) AS info"
-    )
-    u0 = (
-        "aggregate(__a, 0.0D, (acc, x) ->"
-        " acc + (CASE WHEN x.__d1 + x.__d0 > 0 THEN"
-        " cast(x.__d1 as double) - cast(x.__d1 + x.__d0 as double)"
-        " * cast(x.__n1 as double) / cast(x.__nt as double)"
-        " ELSE 0.0D END)) AS u0"
-    )
-    agg = agg.selectExpr("s1", "s0", "th", info, u0)
-    return agg.selectExpr(
-        "s1 AS deaths_arm1",
-        "s0 AS deaths_arm0",
-        "th AS __th", "info AS __info", "u0 AS __u0",
-    ).select(
-        "deaths_arm1", "deaths_arm0",
-        _r6("__th").alias("hazard_ratio"),
-        _r6(
-            F.when(F.col("__th") > 0, F.log(F.col("__th")))
-        ).alias("log_hr"),
-        _r6(
-            F.when(
-                F.col("__info") > 0,
-                F.lit(1.0) / F.sqrt(F.col("__info")),
-            )
-        ).alias("se_log_hr"),
-        _r6(
-            F.when(
-                (F.col("__th") > 0) & (F.col("__info") > 0),
-                F.log(F.col("__th")) * F.sqrt(F.col("__info")),
-            )
-        ).alias("wald_z"),
-        _r6("__u0").alias("score_at_null"),
-    )
-
-
-def _cox_sql() -> str:
-    ctes = [
-        """mx AS (SELECT max(epoch(ts)) AS mx FROM events)""",
-        """d AS (
-  SELECT user_id AS e, epoch(ts) AS t,
-    lead(epoch(ts)) OVER (PARTITION BY user_id
-                          ORDER BY epoch(ts), event_id) AS nxt
-  FROM events WHERE event_type = 'purchase'
-)""",
-        """sv AS (
-  SELECT CAST(floor((coalesce(nxt, (SELECT mx FROM mx)) - t) / 3600.0)
-              AS BIGINT) AS day,
-    CASE WHEN nxt IS NOT NULL THEN 1 ELSE 0 END AS obs,
-    CAST(('0x' || substring(md5('lr|' || CAST(e AS VARCHAR)), 1, 15))
-      ::UBIGINT % 2 AS BIGINT) AS arm
-  FROM d
-)""",
-        """curve AS (
-  SELECT day,
-    CAST(sum(CASE WHEN arm = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-    CAST(sum(CASE WHEN arm = 1 THEN 1 - obs ELSE 0 END) AS BIGINT)
-      AS c1,
-    CAST(sum(CASE WHEN arm = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-    CAST(sum(CASE WHEN arm = 0 THEN 1 - obs ELSE 0 END) AS BIGINT)
-      AS c0
-  FROM sv GROUP BY day
-)""",
-        """risk AS (
-  SELECT day, d1, d0,
-    CAST((SELECT sum(d1 + c1) FROM curve)
-      - coalesce(sum(d1 + c1) OVER (ORDER BY day
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS n1,
-    CAST((SELECT sum(d1 + c1 + d0 + c0) FROM curve)
-      - coalesce(sum(d1 + c1 + d0 + c0) OVER (ORDER BY day
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS nt
-  FROM curve
-)""",
-        """base AS (
-  SELECT CAST(sum(d1) AS BIGINT) AS s1, CAST(sum(d0) AS BIGINT) AS s0,
-    list({'d1': d1, 'd0': d0, 'n1': n1, 'nt': nt} ORDER BY day) AS a,
-    1.0 AS th0
-  FROM risk
-)""",
-    ]
-    prev = "base"
-    for r in range(_COX_R):
-        ctes.append(
-            f"dn{r} AS (SELECT *, {_cox_den_duck(f'th{r}')} AS den{r}"
-            f" FROM {prev})"
-        )
-        ctes.append(
-            f"it{r} AS (SELECT *, CASE WHEN den{r} > 0.0 THEN"
-            f" CAST(s1 AS DOUBLE) / den{r} ELSE th{r} END AS th{r + 1}"
-            f" FROM dn{r})"
-        )
-        prev = f"it{r}"
-    info = (
-        "list_reduce(list_transform(a, x ->"
-        " CASE WHEN x.d1 + x.d0 > 0 AND x.n1 > 0 AND x.nt > x.n1 THEN"
-        " CAST(x.d1 + x.d0 AS DOUBLE) * CAST(x.n1 AS DOUBLE)"
-        " * CAST(x.nt - x.n1 AS DOUBLE) * th"
-        " / ((CAST(x.nt - x.n1 AS DOUBLE) + CAST(x.n1 AS DOUBLE) * th)"
-        "    * (CAST(x.nt - x.n1 AS DOUBLE)"
-        "       + CAST(x.n1 AS DOUBLE) * th))"
-        " ELSE 0.0 END), (acc, t) -> acc + t)"
-    )
-    u0 = (
-        "list_reduce(list_transform(a, x ->"
-        " CASE WHEN x.d1 + x.d0 > 0 THEN"
-        " CAST(x.d1 AS DOUBLE) - CAST(x.d1 + x.d0 AS DOUBLE)"
-        " * CAST(x.n1 AS DOUBLE) / CAST(x.nt AS DOUBLE)"
-        " ELSE 0.0 END), (acc, t) -> acc + t)"
-    )
-    ctes.append(
-        f"fin AS (SELECT s1, s0, th{_COX_R} AS th, a FROM {prev})"
-    )
-    ctes.append(
-        f"ff AS (SELECT s1, s0, th, {info} AS info, {u0} AS u0 FROM fin)"
-    )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        "SELECT s1 AS deaths_arm1, s0 AS deaths_arm0,\n"
-        "  round(th, 6) AS hazard_ratio,\n"
-        "  round(CASE WHEN th > 0 THEN ln(th) END, 6) AS log_hr,\n"
-        "  round(CASE WHEN info > 0 THEN 1.0 / sqrt(info) END, 6)"
-        " AS se_log_hr,\n"
-        "  round(CASE WHEN th > 0 AND info > 0 THEN"
-        " ln(th) * sqrt(info) END, 6) AS wald_z,\n"
-        "  round(u0, 6) AS score_at_null\n"
-        "FROM ff"
-    )
-
-
-SQL_COX_PH = _cox_sql()
-
-QUERIES["cox_ph"] = q_cox_ph
-_RAW_ORACLES["cox_ph"] = SQL_COX_PH
-
-_BC_LAMBDAS = [-1.0, -0.5, 0.0, 0.5, 1.0]
-
-
-def _bc_x(lam: float) -> str:
-    """Box-Cox transform of yv at the grid point, as expression text
-    executed verbatim by both engines (sqrt/ln only — no generic pow).
-    yv is bound by the caller's fold lambda."""
-    if lam == -1.0:
-        return "(1.0 - 1.0 / yv)"
-    if lam == -0.5:
-        return "(2.0 * (1.0 - 1.0 / sqrt(yv)))"
-    if lam == 0.0:
-        return "ln(yv)"
-    if lam == 0.5:
-        return "(2.0 * (sqrt(yv) - 1.0))"
-    return "(yv - 1.0)"
-
-
-def q_box_cox_lambda(spark, sf_dir):
-    """Box-Cox power-transform selection for the purchase-value
-    distribution (Box & Cox 1964 — the feature-engineering step that
-    decides HOW to transform a heavy-tailed monetary column before the
-    Gaussian machinery: profile log-likelihood
-    LL(lambda) = -n/2 ln(sigma2_lambda) + (lambda-1) sum ln y over the
-    grid {-1, -1/2, 0, 1/2, 1}, where the transforms need only
-    sqrt/ln/reciprocal — no generic pow). The corpus collapses ONCE to
-    the DISTINCT-cents histogram (the kruskal_wallis convention), so
-    every float enters via folds over the <=10k-element value-sorted
-    array executed in identical order by both engines (ln/sqrt follow
-    the catalog's cross-engine libm precedent); counts and n are exact
-    longs. The persisted 1-row frame fans out to the 5 output rows
-    (cached-branch convention); is_best breaks ties toward the
-    smaller lambda. At 10^12 rows the histogram is still the number
-    of distinct prices."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select(
-        (
-            F.signum("value")
-            * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-        ).cast("long").alias("__c")
-    ).filter(F.col("__c") > 0)  # Box-Cox domain: strictly positive y
-    hist = ev.groupBy("__c").agg(
-        F.count(F.lit(1)).cast("long").alias("__t")
-    )
-    one = hist.agg(
-        F.sort_array(
-            F.collect_list(F.struct("__c", "__t"))
-        ).alias("__a"),
-        F.sum("__t").cast("long").alias("n"),
-    )
-
-    def fold(body: str) -> str:
-        # yv bound per element; t is the exact multiplicity
-        return (
-            "aggregate(__a, 0.0D, (acc, e) -> acc + ("
-            "cast(e.__t as double) * "
-            + body.replace(
-                "yv", "(cast(e.__c as double) / 100.0)"
-            )
-            + "))"
-        )
-
-    cols = ["__a", "n", f"{fold('ln(yv)')} AS logsum"]
-    for i, lam in enumerate(_BC_LAMBDAS):
-        x = _bc_x(lam)
-        cols.append(f"{fold(x)} AS s1_{i}")
-        cols.append(f"{fold(f'{x} * {x}')} AS s2_{i}")
-    one = one.selectExpr(*cols)
-    lls = []
-    for i, lam in enumerate(_BC_LAMBDAS):
-        sig = (
-            f"((s2_{i} - s1_{i} * s1_{i} / cast(n as double))"
-            " / cast(n as double))"
-        )
-        lls.append(f"{sig} AS sigma2_{i}")
-        lls.append(
-            f"(-0.5 * cast(n as double) * ln({sig})"
-            f" + ({lam!r} - 1.0) * logsum) AS ll_{i}"
-        )
-    one = one.selectExpr("n", *lls)
-    best = "greatest(" + ", ".join(
-        f"ll_{i}" for i in range(len(_BC_LAMBDAS))
-    ) + ")"
-    one = scratch_persist(one.selectExpr("*", f"{best} AS __best"))
-    outs = [
-        one.selectExpr(
-            f"CAST({lam!r} AS DOUBLE) AS lambda",
-            "n AS n_obs",
-            f"sigma2_{i} AS __sig",
-            f"ll_{i} AS __ll",
-            # tie-break toward the smaller lambda: earlier grid points
-            # claim the flag via strict comparison on the later ones
-            "(ll_{i} >= __best{ties}) AS is_best".format(
-                i=i,
-                ties="".join(
-                    f" AND ll_{j} < __best" for j in range(i)
-                ),
-            ),
-        )
-        for i, lam in enumerate(_BC_LAMBDAS)
-    ]
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res.select(
-        "lambda", "n_obs",
-        _r6("__sig").alias("sigma2"),
-        _r6("__ll").alias("loglik"),
-        "is_best",
-    )
-
-
-def _box_cox_sql() -> str:
-    def fold(body: str) -> str:
-        return (
-            "list_reduce(list_transform(a, e -> CAST(e.t AS DOUBLE) * "
-            + body.replace("yv", "(CAST(e.c AS DOUBLE) / 100.0)")
-            + "), (acc, v) -> acc + v)"
-        )
-
-    scols = [fold("ln(yv)") + " AS logsum"]
-    for i, lam in enumerate(_BC_LAMBDAS):
-        x = _bc_x(lam)
-        scols.append(f"{fold(x)} AS s1_{i}")
-        scols.append(f"{fold(f'{x} * {x}')} AS s2_{i}")
-    lls = []
-    for i, lam in enumerate(_BC_LAMBDAS):
-        sig = (
-            f"((s2_{i} - s1_{i} * s1_{i} / CAST(n AS DOUBLE))"
-            " / CAST(n AS DOUBLE))"
-        )
-        lls.append(f"{sig} AS sigma2_{i}")
-        lls.append(
-            f"(-0.5 * CAST(n AS DOUBLE) * ln({sig})"
-            f" + ({lam!r} - 1.0) * logsum) AS ll_{i}"
-        )
-    best = "greatest(" + ", ".join(
-        f"ll_{i}" for i in range(len(_BC_LAMBDAS))
-    ) + ")"
-    finals = " UNION ALL ".join(
-        "SELECT CAST({lam!r} AS DOUBLE) AS lambda, n AS n_obs,"
-        " round(sigma2_{i}, 6) AS sigma2,"
-        " round(ll_{i}, 6) AS loglik,"
-        " (ll_{i} >= best{ties}) AS is_best FROM b".format(
-            lam=lam, i=i,
-            ties="".join(
-                f" AND ll_{j} < best" for j in range(i)
-            ),
-        )
-        for i, lam in enumerate(_BC_LAMBDAS)
-    )
-    return f"""
-WITH ev AS (
-  SELECT CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase'
-    AND CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT) > 0
-), hist AS (
-  SELECT c, CAST(count(*) AS BIGINT) AS t FROM ev GROUP BY c
-), one AS (
-  SELECT list({{'c': c, 't': t}} ORDER BY c) AS a,
-    CAST(sum(t) AS BIGINT) AS n
-  FROM hist
-), s AS (
-  SELECT n, {', '.join(scols)} FROM one
-), l AS (
-  SELECT n, logsum, {', '.join(lls)} FROM s
-), b AS (
-  SELECT *, {best} AS best FROM l
-)
-{finals}
-"""
-
-
-SQL_BOX_COX_LAMBDA = _box_cox_sql()
-
-QUERIES["box_cox_lambda"] = q_box_cox_lambda
-_RAW_ORACLES["box_cox_lambda"] = SQL_BOX_COX_LAMBDA
-
-_KMV_K = 256
-_KMV_SPACE = float(1 << 60)  # 16^15, the 60-bit md5-prefix hash space
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """KMV / k-minimum-values distinct-count sketch of users per event
-    type and pooled (Bar-Yossef et al. RANDOM 2002; Beyer et al.
-    SIGMOD 2007 unbiased estimator D = (k-1)/u_(k)) — the ORDER-
-    STATISTIC sketch family beside hll_cardinality's register family:
-    KMV supports set EXPRESSIONS (union/intersection via the combined
-    k smallest) and gives a distribution-free error bound, which is
-    why join-size planners carry it. Hashes are the catalog's 60-bit
-    md5 prefixes (exact longs, uniform on [0, 2^60)); the k smallest
-    per scope come from a rank window that plans as a per-partition
-    WindowGroupLimit heap — never a global sort; when a scope has
-    fewer than k distinct keys the sketch IS the exact set (est =
-    count, the standard small-regime behavior). The estimate
-    (k-1) * 2^60 / h_(k) is one division of exactly-representable
-    values, audited against the exact distinct count per scope. At
-    10^12 rows each scope ships k=256 longs — mergeable by taking
-    the k smallest of a union."""
-    ev = _events(spark, sf_dir).select("event_type", "user_id")
-    stacked = ev.select(
-        F.col("event_type").alias("__scope"), "user_id"
-    ).unionAll(
-        ev.select(F.lit("all").alias("__scope"), "user_id")
-    ).distinct()
-    h = stacked.select(
-        "__scope",
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16, 10,
-        ).cast("long").alias("__h"),
-    )
-    exact = h.groupBy("__scope").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_distinct")
-    )
-    wr = Window.partitionBy("__scope").orderBy("__h")
-    topk = h.withColumn("__rn", F.row_number().over(wr)).filter(
-        F.col("__rn") <= F.lit(_KMV_K)
-    ).groupBy("__scope").agg(
-        F.count(F.lit(1)).cast("long").alias("k_used"),
-        F.max("__h").cast("long").alias("__kth"),
-    )
-    j = exact.join(topk, "__scope")
-    est = F.when(
-        F.col("k_used") < F.lit(_KMV_K),
-        F.col("k_used").cast("double"),
-    ).otherwise(
-        F.lit(float(_KMV_K - 1)) * F.lit(_KMV_SPACE)
-        / F.col("__kth").cast("double")
-    )
-    return j.select(
-        F.col("__scope").alias("scope"),
-        "exact_distinct",
-        "k_used",
-        _r6(est).alias("kmv_estimate"),
-        _r6(
-            (est - F.col("exact_distinct").cast("double"))
-            / F.col("exact_distinct").cast("double")
-        ).alias("rel_err"),
-    )
-
-
-SQL_KMV_DISTINCT = f"""
-WITH stacked AS (
-  SELECT DISTINCT scope, user_id FROM (
-    SELECT event_type AS scope, user_id FROM events
-    UNION ALL
-    SELECT 'all' AS scope, user_id FROM events
-  )
-), h AS (
-  SELECT scope,
-    CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))
-      ::UBIGINT AS BIGINT) AS hv
-  FROM stacked
-), exact AS (
-  SELECT scope, CAST(count(*) AS BIGINT) AS exact_distinct
-  FROM h GROUP BY scope
-), topk AS (
-  SELECT scope, CAST(count(*) AS BIGINT) AS k_used,
-    CAST(max(hv) AS BIGINT) AS kth
-  FROM (
-    SELECT scope, hv,
-      row_number() OVER (PARTITION BY scope ORDER BY hv) AS rn
-    FROM h
-  ) WHERE rn <= {_KMV_K}
-  GROUP BY scope
-), j AS (
-  SELECT exact.scope, exact_distinct, k_used,
-    CASE WHEN k_used < {_KMV_K} THEN CAST(k_used AS DOUBLE)
-      ELSE {float(_KMV_K - 1)!r} * {_KMV_SPACE!r}
-           / CAST(kth AS DOUBLE) END AS est
-  FROM exact JOIN topk USING (scope)
-)
-SELECT scope, exact_distinct, k_used,
-  round(est, 6) AS kmv_estimate,
-  round((est - CAST(exact_distinct AS DOUBLE))
-        / CAST(exact_distinct AS DOUBLE), 6) AS rel_err
-FROM j
-"""
-
-QUERIES["kmv_distinct"] = q_kmv_distinct
-_RAW_ORACLES["kmv_distinct"] = SQL_KMV_DISTINCT
-
-
-def q_newman_modularity(spark, sf_dir):
-    """Newman modularity of the BRAND partition over the co-order part
-    graph (Newman & Girvan 2004; Newman PNAS 2006 eq. 17 — Q =
-    sum_c [e_c/m - (d_c/2m)^2], the null-adjusted intra-community
-    edge share): do parts of the same brand co-occur in orders more
-    than the degree-preserving null predicts? The categorical
-    companion to degree_assortativity (same %4-gated edge set, same
-    persisted-edges convention): assortativity asks whether hubs
-    attach to hubs, modularity asks whether a GIVEN labeling explains
-    the edge structure — run with quality buckets or dedup components
-    as the labels it is the audit that decides whether a partition is
-    worth sharding by. Both sums are EXACT LONGS (intra-edge count;
-    per-brand degree masses d_c and sum d_c^2 from one explode+agg),
-    so Q = intra/m - sum(d_c^2)/(4m^2) is two divisions of exact
-    integers. The 1-row edge-moment x 1-row degree-moment combine is
-    the registered BNLJ; at 10^12 rows the brand frame is <=|brands|."""
-    from mpds_spark.operators.graph import co_occurrence_edges
-    from mpds_spark.operators.util import scratch_persist
-
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_partkey") % 4 == 0
-    )
-    e = scratch_persist(
-        co_occurrence_edges(li, basket="l_orderkey", item="l_partkey")
-    )
-    brand = load(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("__pk"), F.col("p_brand").alias("__br")
-    )
-    ann = e.join(
-        F.broadcast(brand.select(F.col("__pk").alias("a"),
-                                 F.col("__br").alias("__ba"))), "a"
-    ).join(
-        F.broadcast(brand.select(F.col("__pk").alias("b"),
-                                 F.col("__br").alias("__bb"))), "b"
-    )
-    em = ann.agg(
-        F.count(F.lit(1)).cast("long").alias("n_edges"),
-        F.sum(
-            F.when(F.col("__ba") == F.col("__bb"), 1).otherwise(0)
-        ).cast("long").alias("intra_edges"),
-    )
-    deg = e.select(
-        F.explode(F.array("a", "b")).alias("__pk")
-    ).groupBy("__pk").agg(
-        F.count(F.lit(1)).cast("long").alias("__deg")
-    )
-    dc = deg.join(F.broadcast(brand), "__pk").groupBy("__br").agg(
-        F.sum("__deg").cast("long").alias("__dc")
-    )
-    dm = dc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_communities"),
-        F.sum(F.col("__dc") * F.col("__dc")).cast("long").alias("__d2"),
-    )
-    j = em.join(F.broadcast(dm))
-    md = F.col("n_edges").cast("double")
-    intra_share = F.col("intra_edges").cast("double") / md
-    expected = F.col("__d2").cast("double") / (F.lit(4.0) * md * md)
-    return j.select(
-        "n_edges", "intra_edges", "n_communities",
-        _r6(intra_share).alias("intra_share"),
-        _r6(expected).alias("expected_share"),
-        _r6(intra_share - expected).alias("modularity"),
-    )
-
-
-SQL_NEWMAN_MODULARITY = """
-WITH op AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-  FROM lineitem WHERE l_partkey % 4 = 0
-), e AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-), brand AS (
-  SELECT p_partkey AS pk, p_brand AS br FROM part
-), em AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_edges,
-    CAST(sum(CASE WHEN ba.br = bb.br THEN 1 ELSE 0 END) AS BIGINT)
-      AS intra_edges
-  FROM e JOIN brand ba ON ba.pk = e.a
-         JOIN brand bb ON bb.pk = e.b
-), deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-    SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-  ) GROUP BY node
-), dc AS (
-  SELECT brand.br, CAST(sum(degree) AS BIGINT) AS dcm
-  FROM deg JOIN brand ON brand.pk = deg.node
-  GROUP BY brand.br
-), dm AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_communities,
-    CAST(sum(dcm * dcm) AS BIGINT) AS d2
-  FROM dc
-)
-SELECT n_edges, intra_edges, n_communities,
-  round(CAST(intra_edges AS DOUBLE) / CAST(n_edges AS DOUBLE), 6)
-    AS intra_share,
-  round(CAST(d2 AS DOUBLE)
-        / (4.0 * CAST(n_edges AS DOUBLE) * CAST(n_edges AS DOUBLE)), 6)
-    AS expected_share,
-  round(CAST(intra_edges AS DOUBLE) / CAST(n_edges AS DOUBLE)
-        - CAST(d2 AS DOUBLE)
-          / (4.0 * CAST(n_edges AS DOUBLE) * CAST(n_edges AS DOUBLE)),
-        6) AS modularity
-FROM em CROSS JOIN dm
-"""
-
-QUERIES["newman_modularity"] = q_newman_modularity
-_RAW_ORACLES["newman_modularity"] = SQL_NEWMAN_MODULARITY
-
-
-_HT_RATES = {"src0": 0.5, "src1": 0.25, "src2": 1.0, "src3": 0.1}
-
-
-def q_horvitz_thompson(spark, sf_dir):
-    """Horvitz-Thompson estimation audit over the deterministic
-    stratified sample (Horvitz & Thompson JASA 1952): every kept doc
-    is inverse-weighted by its inclusion probability pi_s (the
-    stratum rate), so N_hat = n_kept/pi_s and T_hat(chars) =
-    sum_kept(n_chars)/pi_s are design-unbiased totals — the estimator
-    that makes rate-subsampled pipelines still report calibrated
-    corpus statistics (count a 10%-sampled stratum at x10). Reuses
-    the EXACT stratified_sample inclusion rule (md5 content-hash
-    threshold, operators/sampling.py:371 — same seed, so the kept
-    sets of the shared strata are identical across the two queries,
-    pytest-asserted), audits the estimates against the true per-
-    stratum totals, and pools the covered strata. Kept agg + true
-    agg + |strata|-row join; at 10^12 docs the audit frame is
-    |strata|+1 rows."""
-    from mpds_spark.operators.sampling import stratified_sample
-
-    docs = load(spark, sf_dir, "documents")
-    kept = stratified_sample(docs, _HT_RATES, group="source")
-    rates = spark.createDataFrame(
-        [(g, float(x)) for g, x in _HT_RATES.items()],
-        "source string, __pi double",
-    )
-    ka = kept.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.sum(F.col("n_chars").cast("long")).cast("long")
-        .alias("__kchars"),
-    )
-    tr = docs.join(F.broadcast(rates), "source").groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_true"),
-        F.sum(F.col("n_chars").cast("long")).cast("long")
-        .alias("chars_true"),
-    )
-    per = tr.join(ka, "source", "left").join(
-        F.broadcast(rates), "source"
-    ).select(
-        "source",
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        "n_true",
-        (F.coalesce("n_kept", F.lit(0)).cast("double") / F.col("__pi"))
-        .alias("__nht"),
-        "chars_true",
-        (F.coalesce("__kchars", F.lit(0)).cast("double")
-         / F.col("__pi")).alias("__cht"),
-    )
-    # pooled float totals fold in source order (integer sums are
-    # order-free; the double HT sums are not)
-    pooled = per.agg(
-        F.lit("__all__").alias("source"),
-        F.sum("n_kept").cast("long").alias("n_kept"),
-        F.sum("n_true").cast("long").alias("n_true"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(source, __nht))),"
-            " 0.0D, (acc, x) -> acc + x.__nht)"
-        ).alias("__nht"),
-        F.sum("chars_true").cast("long").alias("chars_true"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(source, __cht))),"
-            " 0.0D, (acc, x) -> acc + x.__cht)"
-        ).alias("__cht"),
-    )
-    allr = per.unionAll(pooled)
-    return allr.select(
-        "source", "n_kept", "n_true",
-        _r6("__nht").alias("n_ht"),
-        "chars_true",
-        _r6("__cht").alias("chars_ht"),
-        _r6(
-            (F.col("__cht") - F.col("chars_true").cast("double"))
-            / F.col("chars_true").cast("double")
-        ).alias("chars_rel_err"),
-    )
-
-
-def _ht_sql() -> str:
-    rv = ", ".join(f"('{g}', {x!r})" for g, x in _HT_RATES.items())
-    return f"""
-WITH rates(source, pi) AS (
-  VALUES {rv}
-), kept AS (
-  SELECT d.source,
-    CAST(count(*) AS BIGINT) AS n_kept,
-    CAST(sum(n_chars) AS BIGINT) AS kchars
-  FROM documents d JOIN rates USING (source)
-  WHERE CAST(('0x' || substr(md5('strat|' || d.source || '|'
-      || CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) / 4294967296.0
-    < rates.pi
-  GROUP BY d.source
-), tr AS (
-  SELECT d.source, CAST(count(*) AS BIGINT) AS n_true,
-    CAST(sum(n_chars) AS BIGINT) AS chars_true
-  FROM documents d JOIN rates USING (source)
-  GROUP BY d.source
-), per AS (
-  SELECT tr.source,
-    CAST(coalesce(kept.n_kept, 0) AS BIGINT) AS n_kept,
-    tr.n_true,
-    CAST(coalesce(kept.n_kept, 0) AS DOUBLE) / rates.pi AS nht,
-    tr.chars_true,
-    CAST(coalesce(kept.kchars, 0) AS DOUBLE) / rates.pi AS cht
-  FROM tr LEFT JOIN kept ON kept.source = tr.source
-          JOIN rates ON rates.source = tr.source
-), pooled AS (
-  SELECT '__all__' AS source,
-    CAST(sum(n_kept) AS BIGINT) AS n_kept,
-    CAST(sum(n_true) AS BIGINT) AS n_true,
-    list_reduce(list_prepend(0.0, list(nht ORDER BY source)),
-                (acc, x) -> acc + x) AS nht,
-    CAST(sum(chars_true) AS BIGINT) AS chars_true,
-    list_reduce(list_prepend(0.0, list(cht ORDER BY source)),
-                (acc, x) -> acc + x) AS cht
-  FROM per
-), allr AS (
-  SELECT * FROM per UNION ALL SELECT * FROM pooled
-)
-SELECT source, n_kept, n_true,
-  round(nht, 6) AS n_ht,
-  chars_true,
-  round(cht, 6) AS chars_ht,
-  round((cht - CAST(chars_true AS DOUBLE))
-        / CAST(chars_true AS DOUBLE), 6) AS chars_rel_err
-FROM allr
-"""
-
-
-SQL_HORVITZ_THOMPSON = _ht_sql()
-
-QUERIES["horvitz_thompson"] = q_horvitz_thompson
-_RAW_ORACLES["horvitz_thompson"] = SQL_HORVITZ_THOMPSON
-
-def q_best_split_stump(spark, sf_dir):
-    """CART decision-stump split finder (Breiman et al. 1984): the
-    single n_chars threshold that best separates the >=20-words
-    quality label by Gini impurity — the one-feature special case of
-    the split search every tree learner runs, and the weak-supervision
-    primitive that turns a labeling rule into a cheap surrogate
-    feature threshold. The corpus collapses ONCE to the distinct-
-    n_chars histogram with per-class counts (exact longs); prefix
-    sums over the value-ascending window make every candidate split
-    'x <= v' a row, the weighted Gini
-    sum_side (n_s - (s1^2 + s0^2)/n_s) is a fixed expression over
-    exact integers per candidate (single divisions), and the argmin
-    is a TakeOrdered over (score, threshold) — smallest-threshold
-    tie-break, no global sort. At 10^12 docs the candidate frame is
-    the number of distinct lengths."""
-    d = load(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("long").alias("__v"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 20,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__y"),
-    )
-    hist = d.groupBy("__v").agg(
-        F.sum("__y").cast("long").alias("__p"),
-        F.sum(1 - F.col("__y")).cast("long").alias("__q"),
-    )
-    w = Window.orderBy("__v")
-    wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wt = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cand = hist.select(
-        "__v",
-        F.sum("__p").over(wc).cast("long").alias("__l1"),
-        F.sum("__q").over(wc).cast("long").alias("__l0"),
-        F.sum("__p").over(wt).cast("long").alias("__t1"),
-        F.sum("__q").over(wt).cast("long").alias("__t0"),
-    ).select(
-        "__v", "__l1", "__l0", "__t1", "__t0",
-        (F.col("__l1") + F.col("__l0")).alias("__nl"),
-        (F.col("__t1") - F.col("__l1") + F.col("__t0") - F.col("__l0"))
-        .alias("__nr"),
-    ).filter((F.col("__nl") > 0) & (F.col("__nr") > 0))
-    r1 = F.col("__t1") - F.col("__l1")
-    r0 = F.col("__t0") - F.col("__l0")
-    score = (
-        F.col("__nl").cast("double")
-        - (F.col("__l1") * F.col("__l1")
-           + F.col("__l0") * F.col("__l0")).cast("double")
-        / F.col("__nl").cast("double")
-        + F.col("__nr").cast("double")
-        - (r1 * r1 + r0 * r0).cast("double")
-        / F.col("__nr").cast("double")
-    )
-    best = cand.select(
-        "__v", "__l1", "__l0", "__t1", "__t0", "__nl", "__nr",
-        score.alias("__score"),
-    ).orderBy("__score", "__v").limit(1)
-    n = (F.col("__t1") + F.col("__t0")).cast("double")
-    gini_parent = F.lit(1.0) - (
-        (F.col("__t1") * F.col("__t1")
-         + F.col("__t0") * F.col("__t0")).cast("double") / (n * n)
-    )
-    return best.select(
-        (F.col("__t1") + F.col("__t0")).alias("n_docs"),
-        F.col("__t1").alias("n_pos"),
-        F.col("__v").alias("best_threshold"),
-        F.col("__nl").alias("n_left"),
-        F.col("__l1").alias("pos_left"),
-        F.col("__nr").alias("n_right"),
-        (F.col("__t1") - F.col("__l1")).alias("pos_right"),
-        _r6(gini_parent).alias("gini_parent"),
-        _r6(F.col("__score") / n).alias("gini_split"),
-        _r6(gini_parent - F.col("__score") / n).alias("gini_gain"),
-    )
-
-
-SQL_BEST_SPLIT_STUMP = """
-WITH d AS (
-  SELECT CAST(n_chars AS BIGINT) AS v,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1 >= 20
-         THEN 1 ELSE 0 END AS y
-  FROM documents
-), hist AS (
-  SELECT v, CAST(sum(y) AS BIGINT) AS p,
-    CAST(sum(1 - y) AS BIGINT) AS q
-  FROM d GROUP BY v
-), cand AS (
-  SELECT v,
-    CAST(sum(p) OVER wc AS BIGINT) AS l1,
-    CAST(sum(q) OVER wc AS BIGINT) AS l0,
-    CAST(sum(p) OVER () AS BIGINT) AS t1,
-    CAST(sum(q) OVER () AS BIGINT) AS t0
-  FROM hist
-  WINDOW wc AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                AND CURRENT ROW)
-), scored AS (
-  SELECT v, l1, l0, t1, t0, l1 + l0 AS nl,
-    (t1 - l1) + (t0 - l0) AS nr,
-    CAST(l1 + l0 AS DOUBLE)
-      - CAST(l1 * l1 + l0 * l0 AS DOUBLE) / CAST(l1 + l0 AS DOUBLE)
-      + CAST((t1 - l1) + (t0 - l0) AS DOUBLE)
-      - CAST((t1 - l1) * (t1 - l1) + (t0 - l0) * (t0 - l0) AS DOUBLE)
-        / CAST((t1 - l1) + (t0 - l0) AS DOUBLE) AS score
-  FROM cand
-  WHERE l1 + l0 > 0 AND (t1 - l1) + (t0 - l0) > 0
-), best AS (
-  SELECT * FROM scored ORDER BY score, v LIMIT 1
-)
-SELECT t1 + t0 AS n_docs, t1 AS n_pos, v AS best_threshold,
-  nl AS n_left, l1 AS pos_left, nr AS n_right, t1 - l1 AS pos_right,
-  round(1.0 - CAST(t1 * t1 + t0 * t0 AS DOUBLE)
-        / (CAST(t1 + t0 AS DOUBLE) * CAST(t1 + t0 AS DOUBLE)), 6)
-    AS gini_parent,
-  round(score / CAST(t1 + t0 AS DOUBLE), 6) AS gini_split,
-  round(1.0 - CAST(t1 * t1 + t0 * t0 AS DOUBLE)
-        / (CAST(t1 + t0 AS DOUBLE) * CAST(t1 + t0 AS DOUBLE))
-        - score / CAST(t1 + t0 AS DOUBLE), 6) AS gini_gain
-FROM best
-"""
-
-QUERIES["best_split_stump"] = q_best_split_stump
-_RAW_ORACLES["best_split_stump"] = SQL_BEST_SPLIT_STUMP
-
-_LW_D = 64
-
-
-def q_ledoit_wolf_shrinkage(spark, sf_dir):
-    """Ledoit-Wolf covariance shrinkage intensity for the embedding
-    cloud (Ledoit & Wolf 2004, "A well-conditioned estimator for
-    large-dimensional covariance matrices", JMA — THE closed-form
-    answer to 'how much do I shrink the sample covariance toward
-    mu*I before whitening/Mahalanobis at d=64': rho* = b^2/d^2 with
-    d^2 = ||S - mu I||_F^2 the dispersion and b^2 = min(d^2,
-    (1/n^2) sum_k ||y_k y_k' - S||_F^2) the estimation noise — the
-    quantity sklearn's LedoitWolf.shrinkage_ returns, here with the
-    MLE 1/n covariance of the milli-quantized embedding codes).
-    EVERYTHING is exact integers until the final
-    divisions: with A_ij = n M_ij - s_i s_j (scatter M, dim sums s)
-    the covariance is A/n^2, so ||S||_F^2 = sum A^2/n^4 and
-    tr(S) = sum A_ii/n^2 are exact-integer ratios; the noise term
-    collapses by sum_k ||y_k y_k' - S||^2 = sum_k ||y_k||^4 -
-    n||S||^2 with ||y_k||^2 = B_k/n^2, B_k = n^2 (x_k.x_k) -
-    2n (x_k.s) + s.s exact per row (A^2/B^2 sums ride decimal(38,0)
-    / HUGEINT). The dim^2-bounded scatter is the only corpus-scale
-    agg (pca convention); two 1-row combines + the si broadcast are
-    the registered BNLJs."""
-    from mpds_spark.operators.util import scratch_persist
-
-    D = _LW_D
-    codes = scratch_persist(
-        load(spark, sf_dir, "embeddings").select(
-            F.transform(
-                "embedding",
-                lambda x: (
-                    F.signum(x.cast("double"))
-                    * F.floor(F.abs(x.cast("double")) * 1000
-                              + F.lit(0.5))
-                ).cast("long"),
-            ).alias("q")
-        )
-    )
-    # shared Arrow scatter kernel (pca convention, r6): integer
-    # partial sums per batch, bit-equal to the per-pair explode+agg
-    part = scratch_persist(
-        load(spark, sf_dir, "embeddings")
-        .select("embedding")
-        .mapInArrow(_quant_scatter_gen(D), "i long, j long, p long")
-    )
-    cells = part.filter("i >= 1 AND j >= 1").groupBy(
-        F.col("i").cast("int").alias("i"),
-        F.col("j").cast("int").alias("j"),
-    ).agg(F.sum("p").cast("long").alias("s"))
-    # the j = 0 rows carry both the dim sums (i >= 1) and the count
-    # row (i = 0) — one aggregation yields si AND n, no extra combine
-    dimsums = part.filter("j = 0").groupBy(
-        F.col("i").cast("int").alias("i")
-    ).agg(F.sum("p").cast("long").alias("s"))
-    si_row = scratch_persist(dimsums.agg(
-        F.sort_array(
-            F.collect_list(
-                F.when(F.col("i") >= 1, F.struct("i", "s"))
-            )
-        ).alias("__a"),
-        F.max(F.when(F.col("i") == 0, F.col("s"))).alias("n"),
-    ).selectExpr(
-        "transform(__a, e -> e.s) AS si",
-        "n",
-        "aggregate(transform(__a, e -> e.s), 0L,"
-        " (acc, s) -> acc + s * s) AS ss",
-    ))
-    perrow = codes.join(F.broadcast(si_row)).selectExpr(
-        "n",
-        "aggregate(q, 0L, (acc, v) -> acc + v * v) AS xx",
-        f"aggregate(sequence(1, {D}), 0L, (acc, d) ->"
-        " acc + element_at(q, d) * element_at(si, d)) AS xs",
-        "ss",
-    ).selectExpr(
-        "cast(n * n * xx - 2 * n * xs + ss as decimal(38,0)) AS B"
-    )
-    momB = perrow.agg(
-        F.sum(F.col("B") * F.col("B")).cast("decimal(38,0)")
-        .alias("sumB2"),
-    )
-    cellsA = cells.join(F.broadcast(si_row)).selectExpr(
-        "i", "j",
-        "cast(n * s - element_at(si, i) * element_at(si, j) as"
-        " decimal(38,0)) AS A",
-    )
-    momA = cellsA.selectExpr(
-        "i", "j", "A",
-        "CASE WHEN i = j THEN 1 ELSE 2 END AS w",
-    ).agg(
-        F.sum(F.expr("w * A * A")).cast("decimal(38,0)").alias("sumA2"),
-        F.sum(F.expr("CASE WHEN i = j THEN A ELSE 0 END"))
-        .cast("decimal(38,0)").alias("sumAii"),
-    )
-    one = si_row.select("n").join(F.broadcast(momA)).join(
-        F.broadcast(momB)
-    )
-    nd = F.col("n").cast("double")
-    dd = F.lit(float(D))
-    n4 = nd * nd * nd * nd
-    a2 = F.col("sumA2").cast("double")
-    aii = F.col("sumAii").cast("double")
-    b2s = F.col("sumB2").cast("double")
-    mu = aii / (dd * nd * nd)
-    d2 = (a2 - aii * aii / dd) / n4
-    bbar2 = (b2s - nd * a2) / (n4 * nd * nd)
-    b2 = F.least(bbar2, d2)
-    rho = F.when(d2 > 0, b2 / d2).otherwise(F.lit(0.0))
-    return one.select(
-        F.col("n").alias("n_vectors"),
-        F.lit(D).cast("long").alias("dim"),
-        _r6(mu).alias("mu"),
-        _r6(d2).alias("dispersion_d2"),
-        _r6(bbar2).alias("noise_bbar2"),
-        _r6(b2).alias("b2"),
-        _r6(rho).alias("shrinkage"),
-    )
-
-
-def _lw_sql() -> str:
-    D = _LW_D
-    return f"""
-WITH q AS (
-  SELECT list_transform(embedding, x ->
-    CAST(floor(abs(CAST(x AS DOUBLE))*1000 + 0.5)
-         * sign(CAST(x AS DOUBLE)) AS BIGINT)) AS q
-  FROM embeddings
-), tri AS (
-  SELECT unnest(flatten(list_transform(range(1, {D + 1}), i ->
-    list_transform(range(i, {D + 1}), j ->
-      struct_pack(i := i, j := j, p := q[i]*q[j]))))) AS e
-  FROM q
-), cells AS (
-  SELECT e.i AS i, e.j AS j, CAST(sum(e.p) AS BIGINT) AS s
-  FROM tri GROUP BY 1, 2
-), ds AS (
-  SELECT i, CAST(sum(q[i]) AS BIGINT) AS s,
-    CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT q, unnest(range(1, {D + 1})) AS i FROM q)
-  GROUP BY i
-), sir AS (
-  SELECT list(s ORDER BY i) AS si, min(c) AS n,
-    list_reduce(list_transform(list(s ORDER BY i), s -> s * s),
-                (a, b) -> a + b) AS ss
-  FROM ds
-), perrow AS (
-  SELECT CAST(sir.n * sir.n *
-      list_reduce(list_transform(q.q, v -> v * v), (a, b) -> a + b)
-    - 2 * sir.n *
-      list_reduce(list_transform(range(1, {D + 1}), d ->
-        q.q[d] * sir.si[d]), (a, b) -> a + b)
-    + sir.ss AS HUGEINT) AS B
-  FROM q CROSS JOIN sir
-), momB AS (
-  SELECT CAST(sum(B * B) AS HUGEINT) AS sumB2 FROM perrow
-), cellsA AS (
-  SELECT i, j,
-    CAST(sir.n * cells.s - sir.si[i] * sir.si[j] AS HUGEINT) AS A
-  FROM cells CROSS JOIN sir
-), momA AS (
-  SELECT CAST(sum((CASE WHEN i = j THEN 1 ELSE 2 END) * A * A)
-              AS HUGEINT) AS sumA2,
-    CAST(sum(CASE WHEN i = j THEN A ELSE 0 END) AS HUGEINT) AS sumAii
-  FROM cellsA
-), one AS (
-  SELECT sir.n, momA.sumA2, momA.sumAii, momB.sumB2
-  FROM sir CROSS JOIN momA CROSS JOIN momB
-), f AS (
-  SELECT n,
-    CAST(sumAii AS DOUBLE)
-      / ({float(D)!r} * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS mu,
-    (CAST(sumA2 AS DOUBLE)
-     - CAST(sumAii AS DOUBLE) * CAST(sumAii AS DOUBLE) / {float(D)!r})
-    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-       * CAST(n AS DOUBLE)) AS d2,
-    (CAST(sumB2 AS DOUBLE) - CAST(n AS DOUBLE) * CAST(sumA2 AS DOUBLE))
-    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-       * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-      AS bbar2
-  FROM one
-)
-SELECT n AS n_vectors, CAST({D} AS BIGINT) AS dim,
-  round(mu, 6) AS mu,
-  round(d2, 6) AS dispersion_d2,
-  round(bbar2, 6) AS noise_bbar2,
-  round(least(bbar2, d2), 6) AS b2,
-  round(CASE WHEN d2 > 0 THEN least(bbar2, d2) / d2 ELSE 0.0 END, 6)
-    AS shrinkage
-FROM f
-"""
-
-
-SQL_LEDOIT_WOLF = _lw_sql()
-
-QUERIES["ledoit_wolf_shrinkage"] = q_ledoit_wolf_shrinkage
-_RAW_ORACLES["ledoit_wolf_shrinkage"] = SQL_LEDOIT_WOLF
-
-def q_l_moments(spark, sf_dir):
-    """L-moment shape statistics of the purchase-value distribution
-    (Hosking JRSS-B 1990 — the order-statistic moments that stay
-    FINITE and robust for the heavy-tailed monetary columns where
-    the classical skew/kurtosis explode: L-CV, L-skewness
-    and L-kurtosis are THE regional-frequency-analysis features and
-    the distribution fingerprint that survives subsampling). Fully
-    EXACT from the distinct-cents histogram: with c the rank mass
-    before a value and t its multiplicity, the order-statistic sums
-    collapse by sum_{i=c+1}^{c+t} C(i-1, r) = C(c+t, r+1) - C(c, r+1),
-    carried as FALLING FACTORIALS P_{r+1}(m) = m(m-1)..(m-r) in
-    decimal(38,0)/HUGEINT so no binomial division happens until the
-    single exact-ratio division per b_r: b_r = G_r / ((r+1)! * n *
-    C(n-1, r)) with G_r = sum_v v*(P_{r+1}(c+t) - P_{r+1}(c)).
-    lambda_1..4 and the tau ratios are fixed expression trees over
-    those four doubles. ONE corpus aggregate; everything after the
-    histogram is a <=10k-row frame. Values in dollars (cents/100)."""
-    ev = _events(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select(
-        (
-            F.signum("value")
-            * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-        ).cast("long").alias("__c")
-    )
-    h = ev.groupBy("__c").agg(
-        F.count(F.lit(1)).cast("long").alias("__t")
-    )
-    w = Window.orderBy("__c")
-    wc = w.rowsBetween(Window.unboundedPreceding, -1)
-    rows = h.select(
-        "__c", "__t",
-        F.coalesce(F.sum("__t").over(wc), F.lit(0)).cast("long")
-        .alias("__b"),
-    )
-
-    def pfall(m: str, k: int) -> str:
-        # falling factorial P_k(m) in decimal(38,0)
-        terms = " * ".join(
-            f"cast({m} - {r} as decimal(38,0))" for r in range(k)
-        )
-        return f"({terms})"
-
-    gcols = []
-    for r in range(4):
-        k = r + 1
-        up = pfall("(__b + __t)", k)
-        lo = pfall("__b", k)
-        gcols.append(
-            f"cast(__c as decimal(38,0)) * ({up} - {lo}) AS g{r}"
-        )
-    rows = rows.selectExpr("__c", "__t", *gcols)
-    mom = rows.agg(
-        F.sum("__t").cast("long").alias("n"),
-        *[
-            F.sum(f"g{r}").cast("decimal(38,0)").alias(f"G{r}")
-            for r in range(4)
-        ],
-    )
-    nd = F.col("n").cast("double")
-    # C(n-1, r) as doubles from exact longs (n-1 choose r, r<=3)
-    c1 = (F.col("n") - 1).cast("double")
-    c2 = ((F.col("n") - 1) * (F.col("n") - 2) / F.lit(2)).cast("double")
-    c3 = (
-        (F.col("n") - 1) * (F.col("n") - 2) * (F.col("n") - 3)
-        / F.lit(6)
-    ).cast("double")
-    fact = [1.0, 2.0, 6.0, 24.0]
-    b = [
-        F.col("G0").cast("double") / (F.lit(fact[0]) * nd),
-        F.col("G1").cast("double") / (F.lit(fact[1]) * nd * c1),
-        F.col("G2").cast("double") / (F.lit(fact[2]) * nd * c2),
-        F.col("G3").cast("double") / (F.lit(fact[3]) * nd * c3),
-    ]
-    l1 = b[0]
-    l2 = 2 * b[1] - b[0]
-    l3 = 6 * b[2] - 6 * b[1] + b[0]
-    l4 = 20 * b[3] - 30 * b[2] + 12 * b[1] - b[0]
-    return mom.select(
-        "n",
-        _r6(l1 / F.lit(100.0)).alias("l1_mean"),
-        _r6(l2 / F.lit(100.0)).alias("l2_scale"),
-        _r6(l2 / l1).alias("l_cv"),
-        _r6(l3 / l2).alias("l_skew"),
-        _r6(l4 / l2).alias("l_kurt"),
-    )
-
-
-def _lmom_sql() -> str:
-    def pfall(m: str, k: int) -> str:
-        terms = " * ".join(
-            f"CAST({m} - {r} AS HUGEINT)" for r in range(k)
-        )
-        return f"({terms})"
-
-    gcols = ", ".join(
-        f"CAST(sum(CAST(c AS HUGEINT)"
-        f" * ({pfall('(b + t)', r + 1)} - {pfall('b', r + 1)}))"
-        f" AS HUGEINT) AS G{r}"
-        for r in range(4)
-    )
-    return f"""
-WITH ev AS (
-  SELECT CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase'
-), h AS (
-  SELECT c, CAST(count(*) AS BIGINT) AS t FROM ev GROUP BY c
-), rk AS (
-  SELECT c, t,
-    CAST(coalesce(sum(t) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED
-      PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS b
-  FROM h
-), mom AS (
-  SELECT CAST(sum(t) AS BIGINT) AS n, {gcols} FROM rk
-), f AS (
-  SELECT n,
-    CAST(G0 AS DOUBLE) / (1.0 * CAST(n AS DOUBLE)) AS b0,
-    CAST(G1 AS DOUBLE) / (2.0 * CAST(n AS DOUBLE)
-      * CAST(n - 1 AS DOUBLE)) AS b1,
-    CAST(G2 AS DOUBLE) / (6.0 * CAST(n AS DOUBLE)
-      * CAST((n - 1) * (n - 2) // 2 AS DOUBLE)) AS b2,
-    CAST(G3 AS DOUBLE) / (24.0 * CAST(n AS DOUBLE)
-      * CAST((n - 1) * (n - 2) * (n - 3) // 6 AS DOUBLE)) AS b3
-  FROM mom
-), l AS (
-  SELECT n, b0 AS l1, 2 * b1 - b0 AS l2,
-    6 * b2 - 6 * b1 + b0 AS l3,
-    20 * b3 - 30 * b2 + 12 * b1 - b0 AS l4
-  FROM f
-)
-SELECT n,
-  round(l1 / 100.0, 6) AS l1_mean,
-  round(l2 / 100.0, 6) AS l2_scale,
-  round(l2 / l1, 6) AS l_cv,
-  round(l3 / l2, 6) AS l_skew,
-  round(l4 / l2, 6) AS l_kurt
-FROM l
-"""
-
-
-SQL_L_MOMENTS = _lmom_sql()
-
-QUERIES["l_moments"] = q_l_moments
-_RAW_ORACLES["l_moments"] = SQL_L_MOMENTS
-
-_WI_Z = 1.96
-
-
-def q_wilson_intervals(spark, sf_dir):
-    """Wilson score 95% intervals for each event type's share of
-    total events (Wilson JASA 1927; Brown, Cai & DasGupta 2001 —
-    the proportion CI that actually holds its coverage at small n
-    and extreme p, where the naive Wald interval collapses; what a
-    metrics layer should print next to every rate). Counts are exact
-    longs from ONE aggregate; the interval
-    (p + z^2/2n +- z sqrt(p(1-p)/n + z^2/4n^2)) / (1 + z^2/n) is a
-    fixed expression tree per type with the z = 1.96 literal pinned,
-    and the Wald interval rides along to show the difference. At
-    10^12 events the interval frame is |types| rows."""
-    ev = _events(spark, sf_dir).select("event_type")
-    cells = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("k")
-    )
-    wt = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    t = cells.select(
-        "event_type", "k",
-        F.sum("k").over(wt).cast("long").alias("n"),
-    )
-    z = F.lit(_WI_Z)
-    kd = F.col("k").cast("double")
-    nd = F.col("n").cast("double")
-    p = kd / nd
-    z2n = z * z / nd
-    center = (p + z2n / F.lit(2.0)) / (F.lit(1.0) + z2n)
-    half = (
-        z
-        * F.sqrt(
-            p * (F.lit(1.0) - p) / nd
-            + z * z / (F.lit(4.0) * nd * nd)
-        )
-        / (F.lit(1.0) + z2n)
-    )
-    wald = z * F.sqrt(p * (F.lit(1.0) - p) / nd)
-    return t.select(
-        "event_type", "k", "n",
-        _r6(p).alias("share"),
-        _r6(center - half).alias("wilson_lo"),
-        _r6(center + half).alias("wilson_hi"),
-        _r6(p - wald).alias("wald_lo"),
-        _r6(p + wald).alias("wald_hi"),
-    )
-
-
-SQL_WILSON_INTERVALS = f"""
-WITH cells AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS k
-  FROM events GROUP BY event_type
-), t AS (
-  SELECT event_type, k, CAST(sum(k) OVER () AS BIGINT) AS n FROM cells
-), f AS (
-  SELECT event_type, k, n,
-    CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-    {_WI_Z!r} * {_WI_Z!r} / CAST(n AS DOUBLE) AS z2n
-  FROM t
-), g AS (
-  SELECT event_type, k, n, p,
-    (p + z2n / 2.0) / (1.0 + z2n) AS center,
-    {_WI_Z!r} * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-      + {_WI_Z!r} * {_WI_Z!r}
-        / (4.0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-      / (1.0 + z2n) AS half,
-    {_WI_Z!r} * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)) AS wald
-  FROM f
-)
-SELECT event_type, k, n,
-  round(p, 6) AS share,
-  round(center - half, 6) AS wilson_lo,
-  round(center + half, 6) AS wilson_hi,
-  round(p - wald, 6) AS wald_lo,
-  round(p + wald, 6) AS wald_hi
-FROM g
-"""
-
-QUERIES["wilson_intervals"] = q_wilson_intervals
-_RAW_ORACLES["wilson_intervals"] = SQL_WILSON_INTERVALS
-
-
-_MDE_Z_ALPHA = 1.96   # two-sided 5%
-_MDE_Z_BETA = 0.8416  # 80% power
-
-
-def q_mde_power(spark, sf_dir):
-    """Minimum detectable effect of the md5-parity A/B design for
-    each event type's per-user conversion rate (the classic
-    two-proportion power formula, e.g. Cohen 1988 / every experiment
-    sizing sheet: MDE_abs = (z_{a/2} + z_beta) sqrt(2 p(1-p) / n)
-    at 80% power, 5% two-sided — the 'how small a lift could this
-    split even see' readout that belongs NEXT TO srm_check before
-    anyone celebrates a flat metric). Baseline p = share of users
-    with >= 1 event of the type, n = the smaller arm's user count
-    (conservative), z literals pinned; exact longs from one
-    user-level aggregate + one global aggregate. At 10^12 events the
-    sizing frame is |types| rows."""
-    ev = _events(spark, sf_dir).select("user_id", "event_type")
-    peru = ev.groupBy("user_id").agg(*[
-        F.max(
-            F.when(F.col("event_type") == t, 1).otherwise(0)
-        ).cast("long").alias(f"c{i}")
-        for i, t in enumerate(_BT_TYPES)
-    ]).select(
-        "*",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("lr|"),
-                                   F.col("user_id").cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long") % 2
-        ).alias("__arm"),
-    )
-    from mpds_spark.operators.util import scratch_persist
-
-    one = scratch_persist(peru.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum(F.col("__arm")).cast("long").alias("n_arm1"),
-        *[
-            F.sum(f"c{i}").cast("long").alias(f"k{i}")
-            for i in range(len(_BT_TYPES))
-        ],
-    ))
-    za, zb = F.lit(_MDE_Z_ALPHA), F.lit(_MDE_Z_BETA)
-    outs = []
-    for i, t in enumerate(_BT_TYPES):
-        nd = F.col("n_users").cast("double")
-        n1 = F.col("n_arm1").cast("double")
-        n0 = nd - n1
-        narm = F.least(n0, n1)
-        p = F.col(f"k{i}").cast("double") / nd
-        mde = (za + zb) * F.sqrt(
-            F.lit(2.0) * p * (F.lit(1.0) - p) / narm
-        )
-        outs.append(
-            one.select(
-                F.lit(t).alias("event_type"),
-                F.col("n_users"),
-                narm.cast("long").alias("n_smaller_arm"),
-                _r6(p).alias("baseline_rate"),
-                _r6(mde).alias("mde_abs"),
-                _r6(
-                    F.when(p > 0, mde / p)
-                ).alias("mde_rel"),
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res
-
-
-def _mde_sql() -> str:
-    cases = ", ".join(
-        f"CAST(sum(c{i}) AS BIGINT) AS k{i}"
-        for i in range(len(_BT_TYPES))
-    )
-    percase = ", ".join(
-        f"CAST(max(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS c{i}"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    zsum = f"({_MDE_Z_ALPHA!r} + {_MDE_Z_BETA!r})"
-    finals = " UNION ALL ".join(
-        f"SELECT '{t}' AS event_type, n_users,"
-        " CAST(least(CAST(n_users - n_arm1 AS DOUBLE),"
-        " CAST(n_arm1 AS DOUBLE)) AS BIGINT) AS n_smaller_arm,"
-        f" round(CAST(k{i} AS DOUBLE) / CAST(n_users AS DOUBLE), 6)"
-        " AS baseline_rate,"
-        f" round({zsum} * sqrt(2.0"
-        f" * (CAST(k{i} AS DOUBLE) / CAST(n_users AS DOUBLE))"
-        f" * (1.0 - CAST(k{i} AS DOUBLE) / CAST(n_users AS DOUBLE))"
-        " / least(CAST(n_users - n_arm1 AS DOUBLE),"
-        " CAST(n_arm1 AS DOUBLE))), 6) AS mde_abs,"
-        f" round(CASE WHEN k{i} > 0 THEN"
-        f" {zsum} * sqrt(2.0"
-        f" * (CAST(k{i} AS DOUBLE) / CAST(n_users AS DOUBLE))"
-        f" * (1.0 - CAST(k{i} AS DOUBLE) / CAST(n_users AS DOUBLE))"
-        " / least(CAST(n_users - n_arm1 AS DOUBLE),"
-        " CAST(n_arm1 AS DOUBLE)))"
-        f" / (CAST(k{i} AS DOUBLE) / CAST(n_users AS DOUBLE))"
-        " END, 6) AS mde_rel FROM one"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    return f"""
-WITH peru AS (
-  SELECT user_id, {percase},
-    CAST(('0x' || substring(md5('lr|' || CAST(user_id AS VARCHAR)),
-      1, 15))::UBIGINT % 2 AS BIGINT) AS arm
-  FROM events GROUP BY user_id
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_users,
-    CAST(sum(arm) AS BIGINT) AS n_arm1, {cases}
-  FROM peru
-)
-{finals}
-"""
-
-
-SQL_MDE_POWER = _mde_sql()
-
-QUERIES["mde_power"] = q_mde_power
-_RAW_ORACLES["mde_power"] = SQL_MDE_POWER
-
-
-def q_nb_dispersion(spark, sf_dir):
-    """Poisson overdispersion test + negative-binomial moment fit for
-    per-user event counts (Boehning 1994's O statistic — the
-    asymptotically-normal score test of H0: Poisson; Cameron &
-    Trivedi 1990 family — the 'is a Poisson rate feature enough, or
-    do we need the NB dispersion parameter' gate every count-feature
-    pipeline should run before modeling): with exact integer moments
-    n, S = sum y, Q = sum y^2 over the per-user counts, the sample
-    mean/variance, the dispersion index v/m, the MoM NB size
-    r = m^2/(v - m) and p = m/v, and O = (n S2/m - n)/sqrt(2(n-1))
-    are all fixed expression trees (v written as the exact-integer
-    ratio (nQ - S^2)/(n(n-1)) so both engines divide identical
-    longs). Overdispersed at the one-sided 5% point 1.645. ONE
-    user agg + ONE global agg; the test frame is 1 row at 10^12
-    events."""
-    ev = _events(spark, sf_dir).select("user_id")
-    peru = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    mom = peru.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("__y").cast("long").alias("s"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("q"),
-    )
-    nd = F.col("n_users").cast("double")
-    m = F.col("s").cast("double") / nd
-    vnum = (
-        F.col("n_users") * F.col("q") - F.col("s") * F.col("s")
-    ).cast("double")
-    vden = (
-        F.col("n_users") * (F.col("n_users") - 1)
-    ).cast("double")
-    v = vnum / vden
-    disp = v / m
-    r = F.when(v > m, m * m / (v - m))
-    p = F.when(v > 0, m / v)
-    o = (nd * v / m - nd) / F.sqrt(
-        F.lit(2.0) * (nd - F.lit(1.0))
-    )
-    return mom.select(
-        "n_users",
-        _r6(m).alias("mean_count"),
-        _r6(v).alias("var_count"),
-        _r6(disp).alias("dispersion_index"),
-        _r6(r).alias("nb_size_r"),
-        _r6(p).alias("nb_prob_p"),
-        _r6(o).alias("boehning_o"),
-        (o > F.lit(1.645)).alias("overdispersed"),
-    )
-
-
-SQL_NB_DISPERSION = """
-WITH peru AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY user_id
-), mom AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS s,
-    CAST(sum(y * y) AS BIGINT) AS q
-  FROM peru
-), f AS (
-  SELECT n,
-    CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS m,
-    CAST(n * q - s * s AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE) AS v
-  FROM mom
-), g AS (
-  SELECT n, m, v, v / m AS disp,
-    CASE WHEN v > m THEN m * m / (v - m) END AS r,
-    CASE WHEN v > 0 THEN m / v END AS p,
-    (CAST(n AS DOUBLE) * v / m - CAST(n AS DOUBLE))
-      / sqrt(2.0 * (CAST(n AS DOUBLE) - 1.0)) AS o
-  FROM f
-)
-SELECT n AS n_users,
-  round(m, 6) AS mean_count,
-  round(v, 6) AS var_count,
-  round(disp, 6) AS dispersion_index,
-  round(r, 6) AS nb_size_r,
-  round(p, 6) AS nb_prob_p,
-  round(o, 6) AS boehning_o,
-  o > 1.645 AS overdispersed
-FROM g
-"""
-
-QUERIES["nb_dispersion"] = q_nb_dispersion
-_RAW_ORACLES["nb_dispersion"] = SQL_NB_DISPERSION
-
-
-_MS_R = 20
-
-
-def q_markov_stationary(spark, sf_dir):
-    """Stationary distribution of the per-user event-type transition
-    chain by unrolled power iteration (Kemeny & Snell 1960 ch. 4 —
-    pi = pi P; 20 left-multiplications from the uniform start, the
-    convergence horizon a 5-state ergodic chain needs), audited
-    against the EMPIRICAL type distribution with the total-variation
-    distance: if the process were stationary the two match, so a
-    large TV flags cohort drift inside the month — the missing third
-    of the catalog's Markov family (transition_entropy = how
-    predictable, markov_accuracy = how well a 1-step predictor does,
-    THIS = where the chain settles). Transition counts are exact
-    longs from ONE lag pass sharing the entity-keyed exchange (the
-    transition_entropy shape); row-normalized probabilities are
-    exact-integer ratios; the 100 update expressions are generated
-    ONCE and executed verbatim by both engines (selectExpr chain /
-    CTE chain, the bradley_terry convention). The persisted 1-row
-    frame fans out to the 5 output rows (cached-branch)."""
-    from mpds_spark.operators.util import scratch_persist
-
-    K = _BT_K
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_type",
-        F.col("ts").cast("timestamp").cast("double").alias("__t"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("__t", "event_id")
-    pairs = ev.select(
-        F.lag("event_type").over(w).alias("__prev"),
-        F.col("event_type").alias("__cur"),
-    ).filter(F.col("__prev").isNotNull())
-    one = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_trans"),
-        *[
-            F.sum(
-                F.when(
-                    (F.col("__prev") == a) & (F.col("__cur") == b), 1
-                ).otherwise(0)
-            ).cast("long").alias(f"c{i}{j}")
-            for i, a in enumerate(_BT_TYPES)
-            for j, b in enumerate(_BT_TYPES)
-        ],
-        *[
-            F.sum(
-                F.when(F.col("__cur") == b, 1).otherwise(0)
-            ).cast("long").alias(f"e{j}")
-            for j, b in enumerate(_BT_TYPES)
-        ],
-    )
-    rows_ = [
-        f"(c{i}0 + c{i}1 + c{i}2 + c{i}3 + c{i}4) AS r{i}"
-        for i in range(K)
-    ]
-    one = one.selectExpr("*", *rows_)
-    ps = [
-        f"CASE WHEN r{i} > 0 THEN cast(c{i}{j} as double)"
-        f" / cast(r{i} as double) ELSE {1.0 / K!r} END AS p{i}{j}"
-        for i in range(K) for j in range(K)
-    ]
-    one = one.selectExpr("*", *ps)
-    one = one.selectExpr(
-        "*", *[f"{1.0 / K!r} AS pi0_{j}" for j in range(K)]
-    )
-    # the 100 scalar updates chunked into per-round projections
-    for r in range(_MS_R):
-        exprs = [
-            "({}) AS pi{}_{}".format(
-                " + ".join(f"pi{r}_{i} * p{i}{j}" for i in range(K)),
-                r + 1, j,
-            )
-            for j in range(K)
-        ]
-        one = one.selectExpr("*", *exprs)
-    conv = " + ".join(
-        f"abs(pi{_MS_R}_{j} - pi{_MS_R - 1}_{j})" for j in range(K)
-    )
-    tv = " + ".join(
-        f"abs(pi{_MS_R}_{j} - cast(e{j} as double)"
-        f" / cast(n_trans as double))"
-        for j in range(K)
-    )
-    one = scratch_persist(one.selectExpr(
-        "n_trans",
-        *[f"pi{_MS_R}_{j}" for j in range(K)],
-        *[f"cast(e{j} as double) / cast(n_trans as double)"
-          f" AS emp{j}" for j in range(K)],
-        f"0.5 * ({tv}) AS tv_dist",
-        f"({conv}) < 1e-9 AS converged",
-    ))
-    outs = [
-        one.selectExpr(
-            f"'{t}' AS event_type",
-            "n_trans",
-            f"pi{_MS_R}_{j} AS __pi",
-            f"emp{j} AS __emp",
-            "tv_dist", "converged",
-        )
-        for j, t in enumerate(_BT_TYPES)
-    ]
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res.select(
-        "event_type", "n_trans",
-        _r6("__pi").alias("stationary_pi"),
-        _r6("__emp").alias("empirical_share"),
-        _r6("tv_dist").alias("tv_dist"),
-        "converged",
-    )
-
-
-def _ms_sql() -> str:
-    K = _BT_K
-    cells = ", ".join(
-        f"CAST(sum(CASE WHEN prev = '{a}' AND cur = '{b}'"
-        f" THEN 1 ELSE 0 END) AS BIGINT) AS c{i}{j}"
-        for i, a in enumerate(_BT_TYPES)
-        for j, b in enumerate(_BT_TYPES)
-    )
-    emps = ", ".join(
-        f"CAST(sum(CASE WHEN cur = '{b}' THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS e{j}"
-        for j, b in enumerate(_BT_TYPES)
-    )
-    rows_ = ", ".join(
-        f"(c{i}0 + c{i}1 + c{i}2 + c{i}3 + c{i}4) AS r{i}"
-        for i in range(K)
-    )
-    ps = ", ".join(
-        f"CASE WHEN r{i} > 0 THEN CAST(c{i}{j} AS DOUBLE)"
-        f" / CAST(r{i} AS DOUBLE) ELSE {1.0 / K!r} END AS p{i}{j}"
-        for i in range(K) for j in range(K)
-    )
-    pis = ", ".join(f"{1.0 / K!r} AS pi0_{j}" for j in range(K))
-    ctes = [
-        """pairs AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id
-           ORDER BY epoch(ts), event_id) AS prev,
-    event_type AS cur
-  FROM events
-)""",
-        f"""one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_trans, {cells}, {emps}
-  FROM pairs WHERE prev IS NOT NULL
-)""",
-        f"rr AS (SELECT *, {rows_} FROM one)",
-        f"pp AS (SELECT *, {ps} FROM rr)",
-        f"i0 AS (SELECT *, {pis} FROM pp)",
-    ]
-    prev = "i0"
-    for r in range(_MS_R):
-        exprs = ", ".join(
-            "({}) AS pi{}_{}".format(
-                " + ".join(f"pi{r}_{i} * p{i}{j}" for i in range(K)),
-                r + 1, j,
-            )
-            for j in range(K)
-        )
-        ctes.append(f"i{r + 1} AS (SELECT *, {exprs} FROM {prev})")
-        prev = f"i{r + 1}"
-    conv = " + ".join(
-        f"abs(pi{_MS_R}_{j} - pi{_MS_R - 1}_{j})" for j in range(K)
-    )
-    tv = " + ".join(
-        f"abs(pi{_MS_R}_{j} - CAST(e{j} AS DOUBLE)"
-        f" / CAST(n_trans AS DOUBLE))"
-        for j in range(K)
-    )
-    ctes.append(
-        f"fin AS (SELECT n_trans,"
-        + ", ".join(f"pi{_MS_R}_{j}" for j in range(K)) + ", "
-        + ", ".join(
-            f"CAST(e{j} AS DOUBLE) / CAST(n_trans AS DOUBLE) AS emp{j}"
-            for j in range(K)
-        )
-        + f", 0.5 * ({tv}) AS tv_dist, ({conv}) < 1e-9 AS converged"
-        f" FROM {prev})"
-    )
-    finals = " UNION ALL ".join(
-        f"SELECT '{t}' AS event_type, n_trans,"
-        f" round(pi{_MS_R}_{j}, 6) AS stationary_pi,"
-        f" round(emp{j}, 6) AS empirical_share,"
-        " round(tv_dist, 6) AS tv_dist, converged FROM fin"
-        for j, t in enumerate(_BT_TYPES)
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + finals
-
-
-SQL_MARKOV_STATIONARY = _ms_sql()
-
-QUERIES["markov_stationary"] = q_markov_stationary
-_RAW_ORACLES["markov_stationary"] = SQL_MARKOV_STATIONARY
-
-
-_JL_K = 16
-_JL_D = 64
-
-
-def _jl_signs():
-    """Pinned +-1 projection matrix (Achlioptas 2003 sign variant),
-    derived from md5 in PYTHON at build time and embedded as literals
-    in both engines — the matrix IS part of the query definition."""
-    import hashlib
-
-    return [
-        [
-            1 if int(
-                hashlib.md5(f"jl|{k}|{d}".encode()).hexdigest()[-1], 16
-            ) % 2 == 0 else -1
-            for d in range(_JL_D)
-        ]
-        for k in range(_JL_K)
-    ]
-
-
-def q_jl_projection_audit(spark, sf_dir):
-    """Johnson-Lindenstrauss random-projection distortion audit
-    (Johnson & Lindenstrauss 1984; Achlioptas JCSS 2003 — the +-1
-    sign projection whose E||Rx||^2 = k||x||^2 makes y = Rx / sqrt(k)
-    an unbiased distance sketch; THE cheap dimension squeeze before
-    ANN/clustering at 10^12 vectors, and this query answers 'how
-    much pairwise-distance distortion did 64 -> 16 actually cost ON
-    THIS corpus'): the pinned sign matrix is generated from md5 in
-    python ONCE and embedded as literals in both engines, so the
-    projections y_k = sum_d r_kd q_d of the milli-quantized codes
-    are EXACT LONGS; pairs are the deterministic md5-rank
-    half-pairing (row i with row i + n/2 — layout-independent), and
-    both the true distance d2 and the sketch distance dy2 are exact
-    integers, so the distortion |1 - dy2/(k d2)| is one exact-ratio
-    division per pair. Outputs exact distortion-bin COUNTS plus the
-    max (order-free aggregates — no float folds anywhere). At 10^12
-    rows the audit runs on the same half-pairing sample shape."""
-    signs = _jl_signs()
-
-    def _jl_gen(batches):
-        import mpds_spark  # noqa: F401  installs the worker fix-ups
-        # guide §4.2: quantization (identical IEEE float64 sequence as
-        # the r5 in-plan transform) + the 16x64 sign projection as one
-        # int64 matmul per batch — every y is an EXACT LONG, identical
-        # to the r5 16x64-term Add-tree expression (integer sums are
-        # order-independent), without the giant codegen it compiled
-        # once per half-pairing branch
-        import numpy as np
-        import pyarrow as pa
-
-        s_mat = np.asarray(signs, dtype=np.int64).T  # D x K
-        for b in batches:
-            ids = np.asarray(b.column(0), dtype=np.int64)
-            if len(ids) == 0:
-                continue
-            x = np.asarray(
-                b.column(1).flatten(), dtype=np.float64
-            ).reshape(len(ids), -1)
-            q = (
-                np.sign(x) * np.floor(np.abs(x) * 1000.0 + 0.5)
-            ).astype(np.int64)
-            y = q @ s_mat
-            yield pa.record_batch(
-                [
-                    pa.array(ids),
-                    pa.array(list(q)),
-                    pa.array(list(y)),
-                ],
-                names=["vec_id", "q", "y"],
-            )
-
-    proj = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).mapInArrow(_jl_gen, "vec_id long, q array<long>, y array<long>")
-    w = Window.orderBy(
-        F.md5(F.concat(F.lit("jlp|"), F.col("vec_id").cast("string")))
-    )
-    wt = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    from mpds_spark.operators.util import scratch_persist
-
-    # persisted: BOTH half-pairing branches read it — without a
-    # barrier the scan + kernel + global rank window run twice
-    ranked = scratch_persist(
-        proj.select(
-            "*",
-            F.row_number().over(w).alias("__r"),
-            F.count(F.lit(1)).over(wt).cast("long").alias("__n"),
-        )
-    )
-    half = (F.col("__n") / 2).cast("long")
-    left = ranked.filter(F.col("__r") <= half).select(
-        F.col("__r").alias("__k"),
-        F.col("q").alias("qa"),
-        F.col("y").alias("ya"),
-    )
-    right = ranked.filter(F.col("__r") > half).select(
-        (F.col("__r") - half).alias("__k"),
-        F.col("q").alias("qb"),
-        F.col("y").alias("yb"),
-    )
-    pairs = left.join(right, "__k")
-    d2 = F.expr(
-        "aggregate(zip_with(qa, qb, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, v) -> acc + v)"
-    )
-    dy2 = F.expr(
-        "aggregate(zip_with(ya, yb, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, v) -> acc + v)"
-    )
-    pr = pairs.select(
-        d2.alias("__d2"), dy2.alias("__dy2")
-    ).filter(F.col("__d2") > 0)
-    dist = F.abs(
-        F.lit(1.0)
-        - F.col("__dy2").cast("double")
-        / (F.lit(float(_JL_K)) * F.col("__d2").cast("double"))
-    )
-    return pr.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        _r6(F.max(dist)).alias("max_distortion"),
-        F.sum(F.when(dist <= 0.1, 1).otherwise(0)).cast("long")
-        .alias("within_10pct"),
-        F.sum(F.when(dist <= 0.25, 1).otherwise(0)).cast("long")
-        .alias("within_25pct"),
-        F.sum(F.when(dist <= 0.5, 1).otherwise(0)).cast("long")
-        .alias("within_50pct"),
-    )
-
-
-def _jl_sql() -> str:
-    signs = _jl_signs()
-    ycols = ", ".join(
-        "("
-        + " + ".join(
-            f"q[{d + 1}] * ({signs[k][d]})" for d in range(_JL_D)
-        )
-        + f") AS y{k}"
-        for k in range(_JL_K)
-    )
-    dy2 = " + ".join(
-        f"(l.y{k} - r.y{k}) * (l.y{k} - r.y{k})"
-        for k in range(_JL_K)
-    )
-    return f"""
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x ->
-    CAST(floor(abs(CAST(x AS DOUBLE))*1000 + 0.5)
-         * sign(CAST(x AS DOUBLE)) AS BIGINT)) AS q
-  FROM embeddings
-), proj AS (
-  SELECT vec_id, q, {ycols} FROM emb
-), ranked AS (
-  SELECT *,
-    row_number() OVER (ORDER BY md5('jlp|' || CAST(vec_id AS VARCHAR)))
-      AS r,
-    CAST(count(*) OVER () AS BIGINT) AS n
-  FROM proj
-), pairs AS (
-  SELECT l.q AS qa, r.q AS qb,
-    CAST({dy2} AS BIGINT) AS dy2
-  FROM ranked l JOIN ranked r
-    ON r.r = l.r + CAST(l.n // 2 AS BIGINT)
-  WHERE l.r <= l.n // 2
-), pd AS (
-  SELECT dy2,
-    CAST(list_reduce(list_transform(range(1, {_JL_D + 1}),
-      d -> (qa[d] - qb[d]) * (qa[d] - qb[d])), (a, b) -> a + b)
-      AS BIGINT) AS d2
-  FROM pairs
-), f AS (
-  SELECT
-    abs(1.0 - CAST(dy2 AS DOUBLE)
-        / ({float(_JL_K)!r} * CAST(d2 AS DOUBLE))) AS dist
-  FROM pd WHERE d2 > 0
-)
-SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-  round(max(dist), 6) AS max_distortion,
-  CAST(sum(CASE WHEN dist <= 0.1 THEN 1 ELSE 0 END) AS BIGINT)
-    AS within_10pct,
-  CAST(sum(CASE WHEN dist <= 0.25 THEN 1 ELSE 0 END) AS BIGINT)
-    AS within_25pct,
-  CAST(sum(CASE WHEN dist <= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-    AS within_50pct
-FROM f
-"""
-
-
-SQL_JL_PROJECTION_AUDIT = _jl_sql()
-
-QUERIES["jl_projection_audit"] = q_jl_projection_audit
-_RAW_ORACLES["jl_projection_audit"] = SQL_JL_PROJECTION_AUDIT
-
-
-def q_pr_curve_ap(spark, sf_dir):
-    """Average precision + best-F1 operating point for n_chars as a
-    scorer of the >=20-words quality label (the precision-recall
-    summary sklearn's average_precision_score computes, with the
-    step-wise AP = sum_k (R_k - R_{k-1}) P_k convention — the eval
-    primitive beside rank_auc (threshold-free ranking quality) and
-    calibration_bins (probability quality): AP answers 'how good is
-    the ranking where it matters, at the top', and the best-F1 row
-    answers 'where should the production threshold sit'). The corpus
-    collapses ONCE to the distinct-length class histogram; suffix
-    sums over the value-DESCENDING window make every threshold
-    'x >= v' a row with exact TP/FP longs; AP folds the exact-ratio
-    step terms (p_v/P) * precision_v in descending-threshold order
-    over the collected array (both engines, identical order); the
-    best-F1 argmax is one TakeOrdered over (-F1-as-ratio, v) — F1
-    compared via the cross-multiplied EXACT INTEGER ratio 2TP /
-    (2TP + FP + FN) so the tie-break is exact, never a global
-    sort."""
-    d = load(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("long").alias("__v"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 20,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__y"),
-    )
-    hist = d.groupBy("__v").agg(
-        F.sum("__y").cast("long").alias("__p"),
-        F.sum(1 - F.col("__y")).cast("long").alias("__q"),
-    )
-    wdesc = Window.orderBy(F.desc("__v"))
-    wc = wdesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wt = wdesc.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cand = hist.select(
-        "__v", "__p",
-        F.sum("__p").over(wc).cast("long").alias("__tp"),
-        F.sum("__q").over(wc).cast("long").alias("__fp"),
-        F.sum("__p").over(wt).cast("long").alias("__post"),
-        F.sum("__q").over(wt).cast("long").alias("__negt"),
-    )
-    # AP: fold (p_v / P) * (tp / (tp + fp)) in v-DESC order
-    ap_frame = cand.agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    (-F.col("__v")).alias("__nv"),
-                    "__p", "__tp", "__fp",
-                )
-            )
-        ).alias("__a"),
-        F.max("__post").alias("__post"),
-        F.max("__negt").alias("__negt"),
-    ).selectExpr(
-        "__post", "__negt",
-        "aggregate(__a, 0.0D, (acc, x) -> acc +"
-        " (cast(x.__p as double) / cast(__post as double))"
-        " * (cast(x.__tp as double)"
-        "    / cast(x.__tp + x.__fp as double))) AS __ap",
-    )
-    # best F1 by exact-integer cross-comparison via TakeOrdered on
-    # the double ratio (exact-ratio doubles; smaller-v tie-break)
-    f1 = (
-        (F.lit(2) * F.col("__tp")).cast("double")
-        / (F.lit(2) * F.col("__tp") + F.col("__fp")
-           + (F.col("__post") - F.col("__tp"))).cast("double")
-    )
-    best = cand.select(
-        "__v", "__tp", "__fp", "__post",
-        f1.alias("__f1"),
-    ).orderBy(F.desc("__f1"), "__v").limit(1)
-    out = best.join(F.broadcast(ap_frame.select("__ap", "__negt")))
-    return out.select(
-        (F.col("__post") + F.col("__negt")).alias("n_docs"),
-        F.col("__post").alias("n_pos"),
-        _r6("__ap").alias("average_precision"),
-        F.col("__v").alias("best_f1_threshold"),
-        _r6("__f1").alias("best_f1"),
-        _r6(
-            F.col("__tp").cast("double")
-            / (F.col("__tp") + F.col("__fp")).cast("double")
-        ).alias("precision_at_best"),
-        _r6(
-            F.col("__tp").cast("double") / F.col("__post").cast("double")
-        ).alias("recall_at_best"),
-    )
-
-
-SQL_PR_CURVE_AP = """
-WITH d AS (
-  SELECT CAST(n_chars AS BIGINT) AS v,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1 >= 20
-         THEN 1 ELSE 0 END AS y
-  FROM documents
-), hist AS (
-  SELECT v, CAST(sum(y) AS BIGINT) AS p,
-    CAST(sum(1 - y) AS BIGINT) AS q
-  FROM d GROUP BY v
-), cand AS (
-  SELECT v, p,
-    CAST(sum(p) OVER wc AS BIGINT) AS tp,
-    CAST(sum(q) OVER wc AS BIGINT) AS fp,
-    CAST(sum(p) OVER () AS BIGINT) AS post,
-    CAST(sum(q) OVER () AS BIGINT) AS negt
-  FROM hist
-  WINDOW wc AS (ORDER BY v DESC ROWS BETWEEN UNBOUNDED PRECEDING
-                AND CURRENT ROW)
-), apf AS (
-  SELECT max(post) AS post, max(negt) AS negt,
-    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      list((CAST(p AS DOUBLE) / CAST(post AS DOUBLE))
-           * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE))
-           ORDER BY v DESC)),
-      (acc, x) -> acc + x) AS ap
-  FROM cand
-), best AS (
-  SELECT v, tp, fp, post,
-    CAST(2 * tp AS DOUBLE)
-      / CAST(2 * tp + fp + (post - tp) AS DOUBLE) AS f1
-  FROM cand
-  ORDER BY f1 DESC, v LIMIT 1
-)
-SELECT best.post + apf.negt AS n_docs, best.post AS n_pos,
-  round(apf.ap, 6) AS average_precision,
-  best.v AS best_f1_threshold,
-  round(best.f1, 6) AS best_f1,
-  round(CAST(best.tp AS DOUBLE) / CAST(best.tp + best.fp AS DOUBLE), 6)
-    AS precision_at_best,
-  round(CAST(best.tp AS DOUBLE) / CAST(best.post AS DOUBLE), 6)
-    AS recall_at_best
-FROM best CROSS JOIN apf
-"""
-
-QUERIES["pr_curve_ap"] = q_pr_curve_ap
-_RAW_ORACLES["pr_curve_ap"] = SQL_PR_CURVE_AP
-
-_CQ_RULES = [
-    ("len120", "n_chars >= 120"),
-    ("words20",
-     "length(text) - length(replace(text, ' ', '')) + 1 >= 20"),
-    ("len200", "n_chars >= 200"),
-]
-
-
-def q_cochran_q(spark, sf_dir):
-    """Cochran's Q test of k=3 correlated binary quality rules
-    (Cochran Biometrika 1950 — the k-rater generalization of
-    mcnemar_test, which it reduces to at k=2: do the three
-    deterministic document-quality rules pass the SAME share of
-    docs, accounting for the within-doc correlation a naive 3-way
-    chi-square ignores? The pre-check before treating any one rule
-    as exchangeable with the others in a curation stack). With
-    per-doc row sums R_i and per-rule column totals C_j:
-    Q = k(k-1) sum_j (C_j - T/k)^2 / (k T - sum_i R_i^2), all EXACT
-    LONGS from ONE corpus aggregate (sum R, sum R^2, and the three
-    C_j come from the same pass; the numerator is assembled with
-    the k-scaled integer identity sum_j (k C_j - T)^2 / k to avoid
-    the fractional mean). Reject at the chi2(2) 95% point 5.991.
-    The test frame is 1 row at 10^12 docs."""
-    k = len(_CQ_RULES)
-    d = load(spark, sf_dir, "documents").selectExpr(
-        *[
-            f"CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS BIGINT)"
-            f" AS r_{name}"
-            for name, cond in _CQ_RULES
-        ]
-    )
-    rsum = " + ".join(f"r_{name}" for name, _ in _CQ_RULES)
-    one = d.selectExpr(
-        "*", f"({rsum}) AS __ri"
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("__ri").cast("long").alias("t"),
-        F.sum(F.expr("__ri * __ri")).cast("long").alias("r2"),
-        *[
-            F.sum(f"r_{name}").cast("long").alias(f"c_{name}")
-            for name, _ in _CQ_RULES
-        ],
-    )
-    # numerator: k(k-1) sum_j (C_j - T/k)^2 = (k-1)/k sum_j (kC_j-T)^2
-    sq = " + ".join(
-        f"(cast({k} * c_{name} - t as double))"
-        f" * (cast({k} * c_{name} - t as double))"
-        for name, _ in _CQ_RULES
-    )
-    qexpr = (
-        f"CASE WHEN {k} * t - r2 > 0 THEN"
-        f" (cast({k - 1} as double) / cast({k} as double))"
-        f" * ({sq}) / cast({k} * t - r2 as double)"
-        " ELSE 0.0D END"
-    )
-    one = one.selectExpr(
-        "n_docs", "t AS n_passes",
-        *[f"c_{name} AS pass_{name}" for name, _ in _CQ_RULES],
-        f"({qexpr}) AS __q",
-    )
-    return one.select(
-        "n_docs", "n_passes",
-        *[f"pass_{name}" for name, _ in _CQ_RULES],
-        _r6("__q").alias("cochran_q"),
-        (F.col("__q") > F.lit(5.991)).alias("rules_differ"),
-    )
-
-
-def _cq_sql() -> str:
-    k = len(_CQ_RULES)
-    rs = ", ".join(
-        f"CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS r_{name}"
-        for name, cond in _CQ_RULES
-    )
-    rsum = " + ".join(f"r_{name}" for name, _ in _CQ_RULES)
-    cs = ", ".join(
-        f"CAST(sum(r_{name}) AS BIGINT) AS c_{name}"
-        for name, _ in _CQ_RULES
-    )
-    sq = " + ".join(
-        f"(CAST({k} * c_{name} - t AS DOUBLE))"
-        f" * (CAST({k} * c_{name} - t AS DOUBLE))"
-        for name, _ in _CQ_RULES
-    )
-    passes = ", ".join(
-        f"c_{name} AS pass_{name}" for name, _ in _CQ_RULES
-    )
-    return f"""
-WITH d AS (
-  SELECT {rs} FROM documents
-), e AS (
-  SELECT *, ({rsum}) AS ri FROM d
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-    CAST(sum(ri) AS BIGINT) AS t,
-    CAST(sum(ri * ri) AS BIGINT) AS r2, {cs}
-  FROM e
-), f AS (
-  SELECT n_docs, t AS n_passes, {passes},
-    CASE WHEN {k} * t - r2 > 0 THEN
-      (CAST({k - 1} AS DOUBLE) / CAST({k} AS DOUBLE))
-      * ({sq}) / CAST({k} * t - r2 AS DOUBLE)
-    ELSE 0.0 END AS q
-  FROM one
-)
-SELECT n_docs, n_passes,
-  {', '.join(f'pass_{name}' for name, _ in _CQ_RULES)},
-  round(q, 6) AS cochran_q,
-  q > 5.991 AS rules_differ
-FROM f
-"""
-
-
-SQL_COCHRAN_Q = _cq_sql()
-
-QUERIES["cochran_q"] = q_cochran_q
-_RAW_ORACLES["cochran_q"] = SQL_COCHRAN_Q
-
-def q_odds_ratio_ci(spark, sf_dir):
-    """Weekend x purchase odds ratio with the Woolf 95% log-interval
-    (Woolf Ann. Hum. Genet. 1955; Bland & Altman BMJ 2000 — THE 2x2
-    effect-size-with-uncertainty: chi2_independence says the table
-    isn't independent, woe_encoding gives the per-cell evidence
-    weight, this says 'the purchase odds are X times higher on
-    weekends, CI [lo, hi]' — the sentence an analyst actually
-    ships). Cells a,b,c,d are exact longs from ONE aggregate;
-    OR = ad/bc is one division of exact products, ln OR rides the
-    catalog's ln precedent, se = sqrt(1/a+1/b+1/c+1/d), and the
-    interval exponentiates the pinned +-1.96 band. Significant when
-    the CI excludes 1. 1-row frame at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofweek(F.col("ts").cast("timestamp")).isin(1, 7)
-        .alias("__wk"),
-        (F.col("event_type") == "purchase").alias("__pur"),
-    )
-    one = ev.agg(
-        F.sum(F.when(F.col("__wk") & F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("a"),
-        F.sum(F.when(F.col("__wk") & ~F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("b"),
-        F.sum(F.when(~F.col("__wk") & F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("c"),
-        F.sum(F.when(~F.col("__wk") & ~F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("d"),
-    )
-    ok = (F.col("a") > 0) & (F.col("b") > 0) & (F.col("c") > 0) \
-        & (F.col("d") > 0)
-    orr = (F.col("a") * F.col("d")).cast("double") \
-        / (F.col("b") * F.col("c")).cast("double")
-    se = F.sqrt(
-        F.lit(1.0) / F.col("a").cast("double")
-        + F.lit(1.0) / F.col("b").cast("double")
-        + F.lit(1.0) / F.col("c").cast("double")
-        + F.lit(1.0) / F.col("d").cast("double")
-    )
-    lo = F.exp(F.log(orr) - F.lit(1.96) * se)
-    hi = F.exp(F.log(orr) + F.lit(1.96) * se)
-    return one.select(
-        "a", "b", "c", "d",
-        _r6(F.when(ok, orr)).alias("odds_ratio"),
-        _r6(F.when(ok, F.log(orr))).alias("log_or"),
-        _r6(F.when(ok, se)).alias("se_log_or"),
-        _r6(F.when(ok, lo)).alias("or_lo95"),
-        _r6(F.when(ok, hi)).alias("or_hi95"),
-        F.when(ok, (lo > 1.0) | (hi < 1.0)).alias("significant"),
-    )
-
-
-SQL_ODDS_RATIO_CI = """
-WITH ev AS (
-  SELECT (dayofweek(ts) IN (0, 6)) AS wk,
-    (event_type = 'purchase') AS pur
-  FROM events
-), one AS (
-  SELECT
-    CAST(sum(CASE WHEN wk AND pur THEN 1 ELSE 0 END) AS BIGINT) AS a,
-    CAST(sum(CASE WHEN wk AND NOT pur THEN 1 ELSE 0 END) AS BIGINT)
-      AS b,
-    CAST(sum(CASE WHEN NOT wk AND pur THEN 1 ELSE 0 END) AS BIGINT)
-      AS c,
-    CAST(sum(CASE WHEN NOT wk AND NOT pur THEN 1 ELSE 0 END)
-         AS BIGINT) AS d
-  FROM ev
-), f AS (
-  SELECT a, b, c, d,
-    CAST(a * d AS DOUBLE) / CAST(b * c AS DOUBLE) AS orr,
-    sqrt(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(b AS DOUBLE)
-         + 1.0 / CAST(c AS DOUBLE) + 1.0 / CAST(d AS DOUBLE)) AS se
-  FROM one WHERE a > 0 AND b > 0 AND c > 0 AND d > 0
-)
-SELECT a, b, c, d,
-  round(orr, 6) AS odds_ratio,
-  round(ln(orr), 6) AS log_or,
-  round(se, 6) AS se_log_or,
-  round(exp(ln(orr) - 1.96 * se), 6) AS or_lo95,
-  round(exp(ln(orr) + 1.96 * se), 6) AS or_hi95,
-  (exp(ln(orr) - 1.96 * se) > 1.0 OR exp(ln(orr) + 1.96 * se) < 1.0)
-    AS significant
-FROM f
-"""
-
-QUERIES["odds_ratio_ci"] = q_odds_ratio_ci
-_RAW_ORACLES["odds_ratio_ci"] = SQL_ODDS_RATIO_CI
-
-def q_mantel_haenszel(spark, sf_dir):
-    """Mantel-Haenszel pooled odds ratio across day-of-week strata
-    with the Robins-Breslow-Greenland SE and the
-    Cochran-Mantel-Haenszel chi-square (Mantel & Haenszel JNCI 1959;
-    Robins, Breslow & Greenland Biometrics 1986 — the stratified
-    companion to odds_ratio_ci and the REPAIR for simpson_audit's
-    disease: when the exposure mix differs by stratum the crude OR
-    lies, MH pools the per-stratum 2x2s into one
-    confounding-adjusted effect). Exposure = md5-parity arm (hash-
-    random, so the null OR=1 is exact by construction and a CI
-    excluding 1 or a large CMH chi2 flags a broken assignment —
-    the stratified A/A audit beside srm_check/did_estimate);
-    outcome = purchase; strata = the 7 days of week. Per-stratum
-    cells are exact longs from ONE corpus aggregate; every pooled
-    sum (R, S, E, V and the three RBG variance pieces) folds
-    stratum-ascending over the <=7-row frame so the float sequences
-    are identical cross-engine; OR, ln OR, the 95% interval and
-    chi2 = (sum a - E)^2 / V are fixed expression trees. 2 shuffles
-    at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        (F.dayofweek(F.col("ts").cast("timestamp")) - 1).alias("__k"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("mh|"),
-                                   F.col("user_id").cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long") % 2
-        ).alias("__arm"),
-        (F.col("event_type") == "purchase").alias("__pur"),
-    )
-    st = ev.groupBy("__k").agg(
-        F.sum(F.when((F.col("__arm") == 1) & F.col("__pur"), 1)
-              .otherwise(0)).cast("long").alias("__ca"),
-        F.sum(F.when((F.col("__arm") == 1) & ~F.col("__pur"), 1)
-              .otherwise(0)).cast("long").alias("__cb"),
-        F.sum(F.when((F.col("__arm") == 0) & F.col("__pur"), 1)
-              .otherwise(0)).cast("long").alias("__cc"),
-        F.sum(F.when((F.col("__arm") == 0) & ~F.col("__pur"), 1)
-              .otherwise(0)).cast("long").alias("__cd"),
-    )
-    one = st.agg(
-        F.count(F.lit(1)).cast("long").alias("k_strata"),
-        F.sum("__ca").cast("long").alias("sum_a"),
-        F.array_sort(
-            F.collect_list(
-                F.struct("__k", "__ca", "__cb", "__cc", "__cd")
-            )
-        ).alias("__a"),
-    )
-
-    def fold(term):
-        return F.expr(
-            "aggregate(__a, 0.0D, (acc, x) -> acc + (" + term + "))"
-        )
-
-    n = ("cast(x.__ca + x.__cb + x.__cc + x.__cd as double)")
-    one = (
-        one
-        .withColumn("__R", fold(
-            f"cast(x.__ca as double) * cast(x.__cd as double) / {n}"))
-        .withColumn("__S", fold(
-            f"cast(x.__cb as double) * cast(x.__cc as double) / {n}"))
-        .withColumn("__E", fold(
-            "cast(x.__ca + x.__cb as double)"
-            f" * cast(x.__ca + x.__cc as double) / {n}"))
-        .withColumn("__V", fold(
-            "CASE WHEN x.__ca + x.__cb + x.__cc + x.__cd > 1 THEN"
-            " cast(x.__ca + x.__cb as double)"
-            " * cast(x.__cc + x.__cd as double)"
-            " * cast(x.__ca + x.__cc as double)"
-            " * cast(x.__cb + x.__cd as double)"
-            f" / ({n} * {n}"
-            " * cast(x.__ca + x.__cb + x.__cc + x.__cd - 1 as double))"
-            " ELSE 0.0D END"))
-        .withColumn("__PR", fold(
-            f"(cast(x.__ca + x.__cd as double) / {n})"
-            f" * (cast(x.__ca as double) * cast(x.__cd as double) / {n})"))
-        .withColumn("__PSQR", fold(
-            f"(cast(x.__ca + x.__cd as double) / {n})"
-            f" * (cast(x.__cb as double) * cast(x.__cc as double) / {n})"
-            f" + (cast(x.__cb + x.__cc as double) / {n})"
-            f" * (cast(x.__ca as double) * cast(x.__cd as double) / {n})"))
-        .withColumn("__QS", fold(
-            f"(cast(x.__cb + x.__cc as double) / {n})"
-            f" * (cast(x.__cb as double) * cast(x.__cc as double) / {n})"))
-    )
-    ok = (F.col("__R") > 0.0) & (F.col("__S") > 0.0) \
-        & (F.col("__V") > 0.0)
-    orr = F.col("__R") / F.col("__S")
-    var = (
-        F.col("__PR") / (F.lit(2.0) * F.col("__R") * F.col("__R"))
-        + F.col("__PSQR")
-        / (F.lit(2.0) * F.col("__R") * F.col("__S"))
-        + F.col("__QS") / (F.lit(2.0) * F.col("__S") * F.col("__S"))
-    )
-    se = F.sqrt(var)
-    lo = F.exp(F.log(orr) - F.lit(1.96) * se)
-    hi = F.exp(F.log(orr) + F.lit(1.96) * se)
-    dev = F.col("sum_a").cast("double") - F.col("__E")
-    return one.select(
-        "k_strata",
-        "sum_a",
-        _r6(F.when(ok, orr)).alias("or_mh"),
-        _r6(F.when(ok, F.log(orr))).alias("log_or_mh"),
-        _r6(F.when(ok, se)).alias("se_log_or"),
-        _r6(F.when(ok, lo)).alias("or_lo95"),
-        _r6(F.when(ok, hi)).alias("or_hi95"),
-        _r6(F.when(ok, dev * dev / F.col("__V"))).alias("cmh_chi2"),
-        F.when(ok, (lo > 1.0) | (hi < 1.0)).alias("significant"),
-    )
-
-
-SQL_MANTEL_HAENSZEL = """
-WITH ev AS (
-  SELECT dayofweek(ts) AS k,
-    CAST(('0x' || substring(md5('mh|' || CAST(user_id AS VARCHAR)),
-      1, 15))::UBIGINT % 2 AS BIGINT) AS arm,
-    (event_type = 'purchase') AS pur
-  FROM events
-), st AS (
-  SELECT k,
-    CAST(sum(CASE WHEN arm = 1 AND pur THEN 1 ELSE 0 END)
-      AS BIGINT) AS ca,
-    CAST(sum(CASE WHEN arm = 1 AND NOT pur THEN 1 ELSE 0 END)
-      AS BIGINT) AS cb,
-    CAST(sum(CASE WHEN arm = 0 AND pur THEN 1 ELSE 0 END)
-      AS BIGINT) AS cc,
-    CAST(sum(CASE WHEN arm = 0 AND NOT pur THEN 1 ELSE 0 END)
-      AS BIGINT) AS cd
-  FROM ev GROUP BY k
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS k_strata,
-    CAST(sum(ca) AS BIGINT) AS sum_a,
-    list_sum(list(CAST(ca AS DOUBLE) * CAST(cd AS DOUBLE)
-      / CAST(ca + cb + cc + cd AS DOUBLE) ORDER BY k)) AS R,
-    list_sum(list(CAST(cb AS DOUBLE) * CAST(cc AS DOUBLE)
-      / CAST(ca + cb + cc + cd AS DOUBLE) ORDER BY k)) AS S,
-    list_sum(list(CAST(ca + cb AS DOUBLE) * CAST(ca + cc AS DOUBLE)
-      / CAST(ca + cb + cc + cd AS DOUBLE) ORDER BY k)) AS E,
-    list_sum(list(CASE WHEN ca + cb + cc + cd > 1 THEN
-      CAST(ca + cb AS DOUBLE) * CAST(cc + cd AS DOUBLE)
-      * CAST(ca + cc AS DOUBLE) * CAST(cb + cd AS DOUBLE)
-      / (CAST(ca + cb + cc + cd AS DOUBLE)
-         * CAST(ca + cb + cc + cd AS DOUBLE)
-         * CAST(ca + cb + cc + cd - 1 AS DOUBLE))
-      ELSE CAST(0.0 AS DOUBLE) END ORDER BY k)) AS V,
-    list_sum(list((CAST(ca + cd AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE))
-      * (CAST(ca AS DOUBLE) * CAST(cd AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE)) ORDER BY k)) AS PR,
-    list_sum(list((CAST(ca + cd AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE))
-      * (CAST(cb AS DOUBLE) * CAST(cc AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE))
-      + (CAST(cb + cc AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE))
-      * (CAST(ca AS DOUBLE) * CAST(cd AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE)) ORDER BY k)) AS PSQR,
-    list_sum(list((CAST(cb + cc AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE))
-      * (CAST(cb AS DOUBLE) * CAST(cc AS DOUBLE)
-        / CAST(ca + cb + cc + cd AS DOUBLE)) ORDER BY k)) AS QS
-  FROM st
-), f AS (
-  SELECT k_strata, sum_a, R, S, E, V,
-    R / S AS orr,
-    sqrt(PR / (2.0 * R * R) + PSQR / (2.0 * R * S)
-         + QS / (2.0 * S * S)) AS se
-  FROM one WHERE R > 0.0 AND S > 0.0 AND V > 0.0
-)
-SELECT k_strata, sum_a,
-  round(orr, 6) AS or_mh,
-  round(ln(orr), 6) AS log_or_mh,
-  round(se, 6) AS se_log_or,
-  round(exp(ln(orr) - 1.96 * se), 6) AS or_lo95,
-  round(exp(ln(orr) + 1.96 * se), 6) AS or_hi95,
-  round((CAST(sum_a AS DOUBLE) - E) * (CAST(sum_a AS DOUBLE) - E)
-        / V, 6) AS cmh_chi2,
-  (exp(ln(orr) - 1.96 * se) > 1.0
-   OR exp(ln(orr) + 1.96 * se) < 1.0) AS significant
-FROM f
-"""
-
-QUERIES["mantel_haenszel"] = q_mantel_haenszel
-_RAW_ORACLES["mantel_haenszel"] = SQL_MANTEL_HAENSZEL
-
-def q_bartlett_test(spark, sf_dir):
-    """Bartlett's test of variance homogeneity for `value` across the
-    5 event types (Bartlett Proc. R. Soc. A 1937 — the likelihood-
-    ratio-based twin of levene_test: Levene is robust to
-    non-normality, Bartlett is the more powerful parametric test when
-    the values pass a normality check; running both is the
-    textbook heteroskedasticity pre-check before pooling per-type
-    value statistics into one scaler, cf. the fit in robust_scale).
-    Values are exact 2-decimal cents (the derived_features idiom,
-    non-negative at every SF), so the per-type moments n_i, sum c,
-    sum c^2 are exact longs from ONE corpus aggregate and each
-    (n_i-1)*s_i^2 = (n_i*Sc2 - Sc^2) / (n_i * 1e4) is one exact-long
-    cast and one fixed division pair; every pooled sum (W, the
-    (n_i-1)ln s_i^2 fold, the 1/(n_i-1) fold) runs event_type-
-    ascending over the 5-row frame on BOTH engines; the Bartlett
-    statistic T = ((N-k) ln s_p^2 - sum) / C with Snedecor-Cochran
-    correction C is a fixed expression tree. chi2(4) 5% point 9.488
-    pinned (k = 5 types). 2 shuffles at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long").alias("__c"),
-    )
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("__ni"),
-        F.sum("__c").cast("long").alias("__sc"),
-        F.sum(F.col("__c") * F.col("__c")).cast("long").alias("__sc2"),
-    )
-    one = g.agg(
-        F.count(F.lit(1)).cast("long").alias("k_groups"),
-        F.sum("__ni").cast("long").alias("n_total"),
-        F.expr(
-            "bool_and(__ni > 1 AND"
-            " __ni * __sc2 - __sc * __sc > 0)"
-        ).alias("__ok"),
-        F.array_sort(
-            F.collect_list(
-                F.struct("event_type", "__ni", "__sc", "__sc2")
-            )
-        ).alias("__a"),
-    )
-
-    def fold(term):
-        return F.expr(
-            "aggregate(__a, 0.0D, (acc, x) -> acc + (" + term + "))"
-        )
-
-    wi = (
-        "cast(x.__ni * x.__sc2 - x.__sc * x.__sc as double)"
-        " / (cast(x.__ni as double) * 10000.0D)"
-    )
-    s2i = (
-        "(CASE WHEN x.__ni > 1 AND x.__ni * x.__sc2"
-        " - x.__sc * x.__sc > 0 THEN"
-        f" ({wi}) / cast(x.__ni - 1 as double)"
-        " ELSE 1.0D END)"
-    )
-    one = (
-        one
-        .withColumn("__W", fold(wi))
-        .withColumn(
-            "__LNS",
-            fold(f"cast(x.__ni - 1 as double) * ln({s2i})"),
-        )
-        .withColumn(
-            "__IN", fold("1.0D / cast(x.__ni - 1 as double)")
-        )
-    )
-    one = one.filter(
-        F.col("__ok")
-        & (F.col("k_groups") > 1)
-        & (F.col("n_total") > F.col("k_groups"))
-    )
-    nk = (F.col("n_total") - F.col("k_groups")).cast("double")
-    sp2 = F.col("__W") / nk
-    tnum = nk * F.log(sp2) - F.col("__LNS")
-    cf = F.lit(1.0) + (F.col("__IN") - F.lit(1.0) / nk) / (
-        F.lit(3.0) * (F.col("k_groups") - 1).cast("double")
-    )
-    t = tnum / cf
-    return one.select(
-        "k_groups",
-        "n_total",
-        _r6(sp2).alias("pooled_var"),
-        _r6(cf).alias("c_factor"),
-        _r6(t).alias("bartlett_t"),
-        (t > F.lit(9.488)).alias("reject_5pct"),
-    )
-
-
-SQL_BARTLETT_TEST = """
-WITH ev AS (
-  SELECT event_type,
-    CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-  FROM events
-), g AS (
-  SELECT event_type,
-    CAST(count(*) AS BIGINT) AS ni,
-    CAST(sum(c) AS BIGINT) AS sc,
-    CAST(sum(c * c) AS BIGINT) AS sc2
-  FROM ev GROUP BY event_type
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-    CAST(sum(ni) AS BIGINT) AS N,
-    bool_and(ni > 1 AND ni * sc2 - sc * sc > 0) AS ok,
-    list_sum(list(
-      CAST(ni * sc2 - sc * sc AS DOUBLE)
-      / (CAST(ni AS DOUBLE) * 10000.0)
-      ORDER BY event_type)) AS W,
-    list_sum(list(
-      CAST(ni - 1 AS DOUBLE)
-      * ln(CASE WHEN ni > 1 AND ni * sc2 - sc * sc > 0 THEN
-          (CAST(ni * sc2 - sc * sc AS DOUBLE)
-           / (CAST(ni AS DOUBLE) * 10000.0))
-          / CAST(ni - 1 AS DOUBLE)
-        ELSE 1.0 END)
-      ORDER BY event_type)) AS LNS,
-    list_sum(list(1.0 / CAST(ni - 1 AS DOUBLE)
-      ORDER BY event_type)) AS IN_
-  FROM g
-), f AS (
-  SELECT k, N, W, LNS, IN_,
-    CAST(N - k AS DOUBLE) AS nk
-  FROM one
-  WHERE ok AND k > 1 AND N > k
-)
-SELECT k AS k_groups, N AS n_total,
-  round(W / nk, 6) AS pooled_var,
-  round(1.0 + (IN_ - 1.0 / nk) / (3.0 * CAST(k - 1 AS DOUBLE)), 6)
-    AS c_factor,
-  round((nk * ln(W / nk) - LNS)
-        / (1.0 + (IN_ - 1.0 / nk)
-           / (3.0 * CAST(k - 1 AS DOUBLE))), 6) AS bartlett_t,
-  ((nk * ln(W / nk) - LNS)
-   / (1.0 + (IN_ - 1.0 / nk)
-      / (3.0 * CAST(k - 1 AS DOUBLE))) > 9.488) AS reject_5pct
-FROM f
-"""
-
-QUERIES["bartlett_test"] = q_bartlett_test
-_RAW_ORACLES["bartlett_test"] = SQL_BARTLETT_TEST
-
-def q_cliffs_delta(spark, sf_dir):
-    """Cliff's delta ordinal effect size for `value` between the two
-    md5-parity user arms (Cliff Psychological Bulletin 1993; Romano
-    et al. 2006 banding — the EFFECT-SIZE companion to the
-    significance tests: srm_check/mantel_haenszel ask 'is the A/A
-    split broken?', Cliff's delta asks 'by HOW MUCH do the two arms'
-    value distributions differ?' on a pure ordinal scale that is
-    immune to outliers and monotone transforms; hash-random arms
-    make delta ~ 0 by construction, so a non-negligible band flags a
-    broken assignment). delta = (P - Q) / (m*n) where P = #(a > b),
-    Q = #(a < b) over all cross-arm pairs — computed WITHOUT the
-    quadratic pair sweep: ONE conditional corpus aggregate groups the
-    exact 2-decimal cents into the domain-bounded distinct-value
-    frame (<=56k rows — bounded by the value range, like the <=31-day
-    frames), a cumulative window over that frame yields
-    #(b < c)/#(b > c) per value, and P/Q/T are EXACT-LONG sums of
-    count products — delta, the tie-split probability of superiority
-    (2P+T)/(2mn), and the banding are fixed expression trees with
-    every double one exact-long cast. Romano bands |d| < 0.147
-    negligible / < 0.33 small / < 0.474 medium pinned. 3 shuffles at
-    any corpus size (corpus agg + domain-frame window + 1-row agg)."""
-    ev = _events(spark, sf_dir).select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-        .alias("__c"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("cd|"),
-                                   F.col("user_id").cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long") % 2
-        ).alias("__arm"),
-    )
-    g = ev.groupBy("__c").agg(
-        F.sum(F.when(F.col("__arm") == 1, 1).otherwise(0))
-        .cast("long").alias("__na"),
-        F.sum(F.when(F.col("__arm") == 0, 1).otherwise(0))
-        .cast("long").alias("__nb"),
-    )
-    w = Window.orderBy("__c").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    g = g.withColumn(
-        "__cumb", F.coalesce(F.sum("__nb").over(w), F.lit(0)).cast("long")
-    )
-    one = g.agg(
-        F.sum("__na").cast("long").alias("__m"),
-        F.sum("__nb").cast("long").alias("__n"),
-        F.sum(F.col("__na") * F.col("__cumb")).cast("long")
-        .alias("__p"),
-        F.sum(F.col("__na") * F.col("__nb")).cast("long")
-        .alias("__t"),
-        F.count(F.lit(1)).cast("long").alias("n_values"),
-    )
-    one = one.withColumn(
-        "__q", F.expr("__m * __n - __p - __t")
-    ).filter((F.col("__m") > 0) & (F.col("__n") > 0))
-    mn = (F.col("__m") * F.col("__n")).cast("double")
-    delta = (F.col("__p") - F.col("__q")).cast("double") / mn
-    ad = F.abs(delta)
-    return one.select(
-        F.col("__m").alias("n_arm1"),
-        F.col("__n").alias("n_arm0"),
-        "n_values",
-        F.col("__p").alias("gt_pairs"),
-        F.col("__q").alias("lt_pairs"),
-        F.col("__t").alias("tie_pairs"),
-        _r6(delta).alias("cliffs_delta"),
-        _r6(
-            (2 * F.col("__p") + F.col("__t")).cast("double")
-            / (F.lit(2.0) * mn)
-        ).alias("p_superiority"),
-        F.when(ad < 0.147, F.lit("negligible"))
-        .when(ad < 0.33, F.lit("small"))
-        .when(ad < 0.474, F.lit("medium"))
-        .otherwise(F.lit("large"))
-        .alias("band"),
-    )
-
-
-SQL_CLIFFS_DELTA = """
-WITH ev AS (
-  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
-    CAST(('0x' || substring(md5('cd|' || CAST(user_id AS VARCHAR)),
-      1, 15))::UBIGINT % 2 AS BIGINT) AS arm
-  FROM events
-), g AS (
-  SELECT c,
-    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nb
-  FROM ev GROUP BY c
-), cw AS (
-  SELECT c, na, nb,
-    CAST(coalesce(sum(nb) OVER (ORDER BY c
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS cumb
-  FROM g
-), one AS (
-  SELECT CAST(sum(na) AS BIGINT) AS m,
-    CAST(sum(nb) AS BIGINT) AS n,
-    CAST(sum(na * cumb) AS BIGINT) AS p,
-    CAST(sum(na * nb) AS BIGINT) AS t,
-    CAST(count(*) AS BIGINT) AS n_values
-  FROM cw
-), f AS (
-  SELECT m, n, p, t, n_values, m * n - p - t AS q
-  FROM one WHERE m > 0 AND n > 0
-)
-SELECT m AS n_arm1, n AS n_arm0, n_values,
-  p AS gt_pairs, q AS lt_pairs, t AS tie_pairs,
-  round(CAST(p - q AS DOUBLE) / CAST(m * n AS DOUBLE), 6)
-    AS cliffs_delta,
-  round(CAST(2 * p + t AS DOUBLE)
-        / (2.0 * CAST(m * n AS DOUBLE)), 6) AS p_superiority,
-  CASE WHEN abs(CAST(p - q AS DOUBLE) / CAST(m * n AS DOUBLE))
-            < 0.147 THEN 'negligible'
-       WHEN abs(CAST(p - q AS DOUBLE) / CAST(m * n AS DOUBLE))
-            < 0.33 THEN 'small'
-       WHEN abs(CAST(p - q AS DOUBLE) / CAST(m * n AS DOUBLE))
-            < 0.474 THEN 'medium'
-       ELSE 'large' END AS band
-FROM f
-"""
-
-QUERIES["cliffs_delta"] = q_cliffs_delta
-_RAW_ORACLES["cliffs_delta"] = SQL_CLIFFS_DELTA
-
-def q_ndcg_eval(spark, sf_dir):
-    """NDCG@10 of the revenue-based part ranking under a temporal
-    split (Järvelin & Kekäläinen TOIS 2002 — THE graded ranking
-    metric: rank parts by first-period revenue (orders before
-    1998-07-01), score the ranking against SECOND-period revenue as
-    graded relevance; nDCG near 1 says yesterday's bestseller list
-    still explains tomorrow's demand, the ranking-quality twin of
-    mase_eval's magnitude check and the offline gate for any
-    popularity-seeded recommender). Per-part period revenues are
-    exact cents from ONE corpus aggregate; both the ranking top-10
-    and the ideal top-10 are TakeOrderedAndProject heaps with exact
-    (cents DESC, part) tie-breaks; DCG = sum rel_i/(ln(i+1)/ln 2)
-    folds RANK-ASCENDING over the collected <=10-element arrays on
-    BOTH engines, each rel one exact-cents division. Also reports
-    the train/ideal top-10 overlap (exact long — the 'stability'
-    reading). 100-TB shape: the heaps never sort the part frame."""
-    od = load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        (F.col("o_orderdate").cast("timestamp")
-         < F.lit("1998-07-01").cast("timestamp")).alias("__first"),
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_extendedprice"
-    )
-    cell = (
-        li.join(od, li["l_orderkey"] == od["o_orderkey"])
-        .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("__first"),
-                    F.floor(F.col("l_extendedprice") * 100
-                            + F.lit(0.5)).cast("long"),
-                ).otherwise(F.lit(0))
-            ).cast("long").alias("__r1"),
-            F.sum(
-                F.when(
-                    ~F.col("__first"),
-                    F.floor(F.col("l_extendedprice") * 100
-                            + F.lit(0.5)).cast("long"),
-                ).otherwise(F.lit(0))
-            ).cast("long").alias("__r2"),
-        )
-    )
-    from mpds_spark.operators.util import scratch_persist
-
-    cell = scratch_persist(cell)
-    top_train = (
-        cell.filter(F.col("__r1") > 0)
-        .orderBy(F.desc("__r1"), "l_partkey")
-        .limit(10)
-    )
-    top_ideal = (
-        cell.orderBy(F.desc("__r2"), "l_partkey").limit(10)
-    )
-    n_parts = cell.agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts")
-    )
-
-    # rank order keys: train ranking by (-r1, part); ideal by (-r2, part)
-    t1 = top_train.select(
-        F.col("l_partkey"),
-        F.col("__r1"),
-        F.col("__r2"),
-    ).withColumn("__ord", F.struct((-F.col("__r1")).alias("k"),
-                                   F.col("l_partkey").alias("p")))
-    one_t = t1.agg(
-        F.array_sort(
-            F.collect_list(F.struct("__ord", "__r2", "l_partkey"))
-        ).alias("__a"),
-        F.collect_set("l_partkey").alias("__train_set"),
-    )
-    t2 = top_ideal.select("l_partkey", "__r2").withColumn(
-        "__ord", F.struct((-F.col("__r2")).alias("k"),
-                          F.col("l_partkey").alias("p"))
-    )
-    one_i = t2.agg(
-        F.array_sort(
-            F.collect_list(F.struct("__ord", "__r2", "l_partkey"))
-        ).alias("__b"),
-        F.collect_set("l_partkey").alias("__ideal_set"),
-    )
-    dcg_fold = (
-        "aggregate(sequence(1, cast(size({arr}) as int)), 0.0D,"
-        " (acc, i) -> acc"
-        " + (cast(element_at({arr}, i).__r2 as double) / 100.0D)"
-        " / (ln(cast(i + 1 as double)) / ln(2.0D)))"
-    )
-    f = one_t.crossJoin(F.broadcast(one_i)).crossJoin(
-        F.broadcast(n_parts)
-    )
-    f = (
-        f
-        .withColumn("__dcg", F.expr(dcg_fold.format(arr="__a")))
-        .withColumn("__idcg", F.expr(dcg_fold.format(arr="__b")))
-        .withColumn(
-            "__ov",
-            F.expr(
-                "cast(size(array_intersect(__train_set, __ideal_set))"
-                " as long)"
-            ),
-        )
-    )
-    f = f.filter(F.col("__idcg") > 0.0)
-    return f.select(
-        F.lit(10).alias("k"),
-        "n_parts",
-        _r6(F.col("__dcg")).alias("dcg"),
-        _r6(F.col("__idcg")).alias("idcg"),
-        _r6(F.col("__dcg") / F.col("__idcg")).alias("ndcg"),
-        F.col("__ov").alias("top10_overlap"),
-    )
-
-
-SQL_NDCG_EVAL = """
-WITH cell AS (
-  SELECT l_partkey,
-    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '1998-07-01'
-      THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-      ELSE 0 END) AS BIGINT) AS r1,
-    CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '1998-07-01'
-      THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-      ELSE 0 END) AS BIGINT) AS r2
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY l_partkey
-), tt AS (
-  SELECT l_partkey, r2,
-    row_number() OVER (ORDER BY r1 DESC, l_partkey) AS i
-  FROM cell WHERE r1 > 0
-  ORDER BY r1 DESC, l_partkey LIMIT 10
-), ti AS (
-  SELECT l_partkey, r2,
-    row_number() OVER (ORDER BY r2 DESC, l_partkey) AS i
-  FROM cell
-  ORDER BY r2 DESC, l_partkey LIMIT 10
-), d AS (
-  SELECT
-    list_sum(list(
-      (CAST(r2 AS DOUBLE) / 100.0)
-      / (ln(CAST(i + 1 AS DOUBLE)) / ln(2.0)) ORDER BY i)) AS dcg
-  FROM tt
-), di AS (
-  SELECT
-    list_sum(list(
-      (CAST(r2 AS DOUBLE) / 100.0)
-      / (ln(CAST(i + 1 AS DOUBLE)) / ln(2.0)) ORDER BY i)) AS idcg
-  FROM ti
-), ov AS (
-  SELECT CAST(count(*) AS BIGINT) AS overlap
-  FROM tt JOIN ti USING (l_partkey)
-), np AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_parts FROM cell
-)
-SELECT 10 AS k, np.n_parts,
-  round(d.dcg, 6) AS dcg,
-  round(di.idcg, 6) AS idcg,
-  round(d.dcg / di.idcg, 6) AS ndcg,
-  ov.overlap AS top10_overlap
-FROM d, di, ov, np
-WHERE di.idcg > 0
-"""
-
-QUERIES["ndcg_eval"] = q_ndcg_eval
-_RAW_ORACLES["ndcg_eval"] = SQL_NDCG_EVAL
-
-
-def q_mrr_eval(spark, sf_dir):
-    """Mean reciprocal rank @ 20 of per-customer part rankings under
-    the same temporal split as ndcg_eval (Voorhees TREC-8 1999 — the
-    per-USER counterpart to ndcg_eval's global ranking: for each
-    customer, rank the parts they bought before 1998-07-01 by spend;
-    the target is their single top part AFTER the split; RR = 1/rank
-    of the target in that list, 0 on a miss — the offline
-    personalization gate). EVERY aggregate is exact: per-(customer,
-    part) period spends are exact cents, the target and the rank are
-    exact integer comparisons with (cents DESC, part) tie-breaks,
-    ranks are capped at 20 and the MRR float sum is NOT folded over
-    users — users are first grouped BY RANK (<=21 groups), so
-    MRR = sum_r count_r/r folds RANK-ASCENDING over a bounded frame
-    on BOTH engines. Also reports hits@1/5/10 and the hit rate.
-    100-TB shape: two customer-keyed aggs + one bounded-frame fold;
-    no window over the part dimension, no global sort."""
-    od = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey",
-        (F.col("o_orderdate").cast("timestamp")
-         < F.lit("1998-07-01").cast("timestamp")).alias("__first"),
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_extendedprice"
-    )
-    cell = (
-        li.join(od, li["l_orderkey"] == od["o_orderkey"])
-        .groupBy("o_custkey", "l_partkey")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("__first"),
-                    F.floor(F.col("l_extendedprice") * 100
-                            + F.lit(0.5)).cast("long"),
-                ).otherwise(F.lit(0))
-            ).cast("long").alias("__c1"),
-            F.sum(
-                F.when(
-                    ~F.col("__first"),
-                    F.floor(F.col("l_extendedprice") * 100
-                            + F.lit(0.5)).cast("long"),
-                ).otherwise(F.lit(0))
-            ).cast("long").alias("__c2"),
-        )
-    )
-    # one customer-keyed agg: target (max c2, part tie-break) and the
-    # sorted first-half cells in one pass
-    per_user = cell.groupBy("o_custkey").agg(
-        F.max(
-            F.when(
-                F.col("__c2") > 0,
-                F.struct(
-                    F.col("__c2").alias("c2"),
-                    (-F.col("l_partkey")).alias("np"),
-                ),
-            )
-        ).alias("__tgt"),
-        F.collect_list(
-            F.when(
-                F.col("__c1") > 0,
-                F.struct(
-                    F.col("__c1").alias("c1"),
-                    F.col("l_partkey").alias("p"),
-                ),
-            )
-        ).alias("__fh"),
-    )
-    per_user = per_user.filter(F.col("__tgt").isNotNull())
-    # rank of target within the first-half list: 1 + #(strictly better)
-    per_user = per_user.withColumn(
-        "__tp", F.expr("-__tgt.np")
-    ).withColumn(
-        "__tc1",
-        F.expr(
-            "aggregate(__fh, 0L, (acc, x) ->"
-            " acc + IF(x IS NOT NULL AND x.p = __tp, x.c1, 0L))"
-        ),
-    )
-    per_user = per_user.withColumn(
-        "__rank",
-        F.when(
-            F.col("__tc1") > 0,
-            F.expr(
-                "1L + aggregate(__fh, 0L, (acc, x) ->"
-                " acc + IF(x IS NOT NULL AND (x.c1 > __tc1 OR"
-                " (x.c1 = __tc1 AND x.p < __tp)), 1L, 0L))"
-            ),
-        ).otherwise(F.lit(0).cast("long")),
-    ).withColumn(
-        "__rank",
-        F.when(F.col("__rank") > 20, F.lit(0).cast("long"))
-        .otherwise(F.col("__rank")),
-    )
-    ranks = per_user.groupBy("__rank").agg(
-        F.count(F.lit(1)).cast("long").alias("__cnt")
-    )
-    one = ranks.agg(
-        F.sum("__cnt").cast("long").alias("n_users"),
-        F.sum(F.when(F.col("__rank") == 1, F.col("__cnt"))
-              .otherwise(F.lit(0))).cast("long").alias("hits_at_1"),
-        F.sum(
-            F.when(
-                (F.col("__rank") >= 1) & (F.col("__rank") <= 5),
-                F.col("__cnt"),
-            ).otherwise(F.lit(0))
-        ).cast("long").alias("hits_at_5"),
-        F.sum(
-            F.when(
-                (F.col("__rank") >= 1) & (F.col("__rank") <= 10),
-                F.col("__cnt"),
-            ).otherwise(F.lit(0))
-        ).cast("long").alias("hits_at_10"),
-        F.sum(F.when(F.col("__rank") >= 1, F.col("__cnt"))
-              .otherwise(F.lit(0))).cast("long").alias("__hits"),
-        F.array_sort(
-            F.collect_list(F.struct("__rank", "__cnt"))
-        ).alias("__a"),
-    )
-    one = one.withColumn(
-        "__rrsum",
-        F.expr(
-            "aggregate(__a, 0.0D, (acc, x) -> acc"
-            " + IF(x.__rank >= 1L,"
-            " cast(x.__cnt as double) / cast(x.__rank as double),"
-            " 0.0D))"
-        ),
-    )
-    one = one.filter(F.col("n_users") > 0)
-    nu = F.col("n_users").cast("double")
-    return one.select(
-        F.lit(20).alias("k"),
-        "n_users",
-        "hits_at_1",
-        "hits_at_5",
-        "hits_at_10",
-        _r6(F.col("__hits").cast("double") / nu).alias("hit_rate"),
-        _r6(F.col("__rrsum") / nu).alias("mrr"),
-    )
-
-
-SQL_MRR_EVAL = """
-WITH cell AS (
-  SELECT o_custkey, l_partkey,
-    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '1998-07-01'
-      THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-      ELSE 0 END) AS BIGINT) AS c1,
-    CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '1998-07-01'
-      THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-      ELSE 0 END) AS BIGINT) AS c2
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY o_custkey, l_partkey
-), tgt AS (
-  SELECT o_custkey, l_partkey AS tp, c1 AS tc1
-  FROM (
-    SELECT o_custkey, l_partkey, c1,
-      row_number() OVER (PARTITION BY o_custkey
-        ORDER BY c2 DESC, l_partkey) AS rn
-    FROM cell WHERE c2 > 0
-  ) WHERE rn = 1
-), rk AS (
-  SELECT t.o_custkey,
-    CASE WHEN t.tc1 = 0 THEN 0
-      ELSE 1 + (
-        SELECT CAST(count(*) AS BIGINT) FROM cell c
-        WHERE c.o_custkey = t.o_custkey AND c.c1 > 0
-          AND (c.c1 > t.tc1
-               OR (c.c1 = t.tc1 AND c.l_partkey < t.tp))
-      ) END AS r
-  FROM tgt t
-), capped AS (
-  SELECT o_custkey,
-    CASE WHEN r > 20 THEN 0 ELSE r END AS r
-  FROM rk
-), g AS (
-  SELECT r, CAST(count(*) AS BIGINT) AS cnt
-  FROM capped GROUP BY r
-), one AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS n_users,
-    CAST(sum(CASE WHEN r = 1 THEN cnt ELSE 0 END) AS BIGINT)
-      AS hits_at_1,
-    CAST(sum(CASE WHEN r BETWEEN 1 AND 5 THEN cnt ELSE 0 END)
-      AS BIGINT) AS hits_at_5,
-    CAST(sum(CASE WHEN r BETWEEN 1 AND 10 THEN cnt ELSE 0 END)
-      AS BIGINT) AS hits_at_10,
-    CAST(sum(CASE WHEN r >= 1 THEN cnt ELSE 0 END) AS BIGINT)
-      AS hits,
-    list_sum(list(CASE WHEN r >= 1
-      THEN CAST(cnt AS DOUBLE) / CAST(r AS DOUBLE)
-      ELSE 0.0 END ORDER BY r)) AS rrsum
-  FROM g
-)
-SELECT 20 AS k, n_users, hits_at_1, hits_at_5, hits_at_10,
-  round(CAST(hits AS DOUBLE) / CAST(n_users AS DOUBLE), 6)
-    AS hit_rate,
-  round(rrsum / CAST(n_users AS DOUBLE), 6) AS mrr
-FROM one WHERE n_users > 0
-"""
-
-QUERIES["mrr_eval"] = q_mrr_eval
-_RAW_ORACLES["mrr_eval"] = SQL_MRR_EVAL
-
-
-def q_brier_decomposition(spark, sf_dir):
-    """Murphy decomposition of the Brier score for calibration_bins'
-    deterministic length classifier (Murphy J. Appl. Meteor. 1973 —
-    the WHY behind calibration_bins' single ECE number: Brier =
-    RELIABILITY (calibration error, want 0) - RESOLUTION (how much
-    the bins separate outcomes, want large) + UNCERTAINTY (the
-    irreducible base-rate term ybar(1-ybar)); two models with equal
-    Brier can differ entirely in the REL/RES split, which decides
-    whether to recalibrate (high REL) or re-feature (low RES) — the
-    post-mortem companion to calibration_bins). Same classifier and
-    10 equal-width bins: per-bin (n_b, pos_b, sm_b) are exact longs
-    from ONE corpus aggregate; each bin's REL term (sm_b - 400
-    pos_b)^2 / (160000 n_b) and RES term (N pos_b - n_b P)^2 /
-    (N^2 n_b) is one exact-long-cast division, folded BIN-ASCENDING
-    over the <=10-row frame on BOTH engines; UNC = P(N-P)/N^2 and
-    the Brier skill score BSS = 1 - B/UNC are fixed expression
-    trees; the identity B_binned = REL - RES + UNC is exact by
-    construction (checked in the rebuild pytest). 2 shuffles at any
-    corpus size."""
-    d = load(spark, sf_dir, "documents").select(
-        F.least(F.col("n_chars"), F.lit(400)).cast("long")
-        .alias("__m"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 50,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__y"),
-    )
-    b = d.groupBy(
-        F.least(F.lit(9).cast("long"), F.expr("__m div 40"))
-        .alias("__bin")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.sum("__y").cast("long").alias("__pos"),
-        F.sum("__m").cast("long").alias("__sm"),
-    )
-    one = b.agg(
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.sum("__n").cast("long").alias("__N"),
-        F.sum("__pos").cast("long").alias("__P"),
-        F.array_sort(
-            F.collect_list(F.struct("__bin", "__n", "__pos", "__sm"))
-        ).alias("__a"),
-    )
-    one = one.filter(
-        (F.col("__N") > 0) & (F.col("__P") > 0)
-        & (F.col("__P") < F.col("__N"))
-    )
-    one = (
-        one
-        .withColumn(
-            "__rel",
-            F.expr(
-                "aggregate(__a, 0.0D, (acc, x) -> acc"
-                " + cast((x.__sm - 400 * x.__pos)"
-                " * (x.__sm - 400 * x.__pos) as double)"
-                " / (160000.0D * cast(x.__n as double)))"
-                " / cast(__N as double)"
-            ),
-        )
-        .withColumn(
-            "__res",
-            F.expr(
-                "aggregate(__a, 0.0D, (acc, x) -> acc"
-                " + cast((__N * x.__pos - x.__n * __P) as double)"
-                " * cast((__N * x.__pos - x.__n * __P) as double)"
-                " / (cast(__N as double) * cast(__N as double)"
-                " * cast(x.__n as double)))"
-                " / cast(__N as double)"
-            ),
-        )
-    )
-    nn = F.col("__N").cast("double")
-    pp = F.col("__P").cast("double")
-    unc = pp * (nn - pp) / (nn * nn)
-    brier = F.col("__rel") - F.col("__res") + unc
-    return one.select(
-        "n_bins",
-        F.col("__N").alias("n_docs"),
-        _r6(pp / nn).alias("base_rate"),
-        _r6(F.col("__rel")).alias("reliability"),
-        _r6(F.col("__res")).alias("resolution"),
-        _r6(unc).alias("uncertainty"),
-        _r6(brier).alias("brier_binned"),
-        _r6(F.lit(1.0) - brier / unc).alias("bss"),
-    )
-
-
-SQL_BRIER_DECOMPOSITION = """
-WITH d AS (
-  SELECT CAST(least(n_chars, 400) AS BIGINT) AS m,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1
-      >= 50 THEN 1 ELSE 0 END AS y
-  FROM documents
-), b AS (
-  SELECT least(9, m // 40) AS bin,
-    CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS pos,
-    CAST(sum(m) AS BIGINT) AS sm
-  FROM d GROUP BY least(9, m // 40)
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_bins,
-    CAST(sum(n) AS BIGINT) AS N,
-    CAST(sum(pos) AS BIGINT) AS P,
-    list_sum(list(
-      CAST((sm - 400 * pos) * (sm - 400 * pos) AS DOUBLE)
-      / (160000.0 * CAST(n AS DOUBLE)) ORDER BY bin)) AS reln,
-    list(ROW(n, pos) ORDER BY bin) AS cells
-  FROM b
-), two AS (
-  SELECT n_bins, N, P, reln,
-    list_sum(list_transform(cells, x ->
-      CAST((N * x[2] - x[1] * P) AS DOUBLE)
-      * CAST((N * x[2] - x[1] * P) AS DOUBLE)
-      / (CAST(N AS DOUBLE) * CAST(N AS DOUBLE)
-         * CAST(x[1] AS DOUBLE)))) AS resn
-  FROM one WHERE N > 0 AND P > 0 AND P < N
-), f AS (
-  SELECT n_bins, N, P,
-    reln / CAST(N AS DOUBLE) AS rel,
-    resn / CAST(N AS DOUBLE) AS res,
-    CAST(P AS DOUBLE) * CAST(N - P AS DOUBLE)
-      / (CAST(N AS DOUBLE) * CAST(N AS DOUBLE)) AS unc
-  FROM two
-)
-SELECT n_bins, N AS n_docs,
-  round(CAST(P AS DOUBLE) / CAST(N AS DOUBLE), 6) AS base_rate,
-  round(rel, 6) AS reliability,
-  round(res, 6) AS resolution,
-  round(unc, 6) AS uncertainty,
-  round(rel - res + unc, 6) AS brier_binned,
-  round(1.0 - (rel - res + unc) / unc, 6) AS bss
-FROM f
-"""
-
-QUERIES["brier_decomposition"] = q_brier_decomposition
-_RAW_ORACLES["brier_decomposition"] = SQL_BRIER_DECOMPOSITION
-
-
-def q_youden_j(spark, sf_dir):
-    """Youden's J optimal operating point for calibration_bins'
-    deterministic length classifier (Youden Cancer 1950 — the
-    threshold-CHOICE companion to rank_auc's threshold-free ranking
-    audit: sweep every decision threshold, maximize J = sensitivity
-    + specificity - 1; the argmax is where a deployed binary filter
-    should actually cut, and J* is the chance-corrected headroom the
-    score offers). The sweep is EXACT and domain-bounded: scores
-    m = least(n_chars,400) take <= 401 values, ONE corpus aggregate
-    groups (pos_m, n_m), one cumulative window over the score frame
-    gives TP/FP at every threshold, and the argmax compares the
-    exact-long numerator J_num = TP*(N-P) - FP*P with a LOWEST-
-    threshold tie-break via one exact struct max; sens/spec/J are
-    single exact-long divisions. 100-TB shape: the window runs over
-    <= 401 rows regardless of corpus size. 3 shuffles."""
-    d = load(spark, sf_dir, "documents").select(
-        F.least(F.col("n_chars"), F.lit(400)).cast("long")
-        .alias("__m"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 50,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__y"),
-    )
-    g = d.groupBy("__m").agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.sum("__y").cast("long").alias("__pos"),
-    )
-    wdesc = Window.orderBy(F.desc("__m")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.orderBy("__m").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    g = g.select(
-        "__m",
-        F.sum("__pos").over(wdesc).cast("long").alias("__tp"),
-        (F.sum("__n").over(wdesc) - F.sum("__pos").over(wdesc))
-        .cast("long").alias("__fp"),
-        F.sum("__n").over(wall).cast("long").alias("__N"),
-        F.sum("__pos").over(wall).cast("long").alias("__P"),
-    )
-    g = g.withColumn(
-        "__jnum",
-        F.col("__tp") * (F.col("__N") - F.col("__P"))
-        - F.col("__fp") * F.col("__P"),
-    )
-    one = g.filter(
-        (F.col("__P") > 0) & (F.col("__P") < F.col("__N"))
-    ).agg(
-        F.max(
-            F.struct(
-                F.col("__jnum").alias("j"),
-                (-F.col("__m")).alias("nm"),
-                F.col("__tp").alias("tp"),
-                F.col("__fp").alias("fp"),
-                F.col("__N").alias("N"),
-                F.col("__P").alias("P"),
-            )
-        ).alias("__b")
-    )
-    one = one.select(
-        F.expr("__b.N").alias("n_docs"),
-        F.expr("__b.P").alias("n_pos"),
-        F.expr("-__b.nm").alias("threshold"),
-        F.expr("__b.tp").alias("tp"),
-        F.expr("__b.fp").alias("fp"),
-        _r6(
-            F.expr("cast(__b.tp as double) / cast(__b.P as double)")
-        ).alias("sensitivity"),
-        _r6(
-            F.expr(
-                "1.0D - cast(__b.fp as double)"
-                " / cast(__b.N - __b.P as double)"
-            )
-        ).alias("specificity"),
-        _r6(
-            F.expr(
-                "cast(__b.j as double)"
-                " / (cast(__b.P as double)"
-                " * cast(__b.N - __b.P as double))"
-            )
-        ).alias("youden_j"),
-    )
-    return one
-
-
-SQL_YOUDEN_J = """
-WITH d AS (
-  SELECT CAST(least(n_chars, 400) AS BIGINT) AS m,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1
-      >= 50 THEN 1 ELSE 0 END AS y
-  FROM documents
-), g AS (
-  SELECT m, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS pos
-  FROM d GROUP BY m
-), c AS (
-  SELECT m,
-    CAST(sum(pos) OVER (ORDER BY m DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      AS BIGINT) AS tp,
-    CAST(sum(n) OVER (ORDER BY m DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      - sum(pos) OVER (ORDER BY m DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      AS BIGINT) AS fp,
-    CAST(sum(n) OVER () AS BIGINT) AS N,
-    CAST(sum(pos) OVER () AS BIGINT) AS P
-  FROM g
-), j AS (
-  SELECT m, tp, fp, N, P,
-    tp * (N - P) - fp * P AS jnum
-  FROM c WHERE P > 0 AND P < N
-), best AS (
-  SELECT * FROM j
-  ORDER BY jnum DESC, m ASC LIMIT 1
-)
-SELECT N AS n_docs, P AS n_pos, m AS threshold, tp, fp,
-  round(CAST(tp AS DOUBLE) / CAST(P AS DOUBLE), 6) AS sensitivity,
-  round(1.0 - CAST(fp AS DOUBLE) / CAST(N - P AS DOUBLE), 6)
-    AS specificity,
-  round(CAST(jnum AS DOUBLE)
-        / (CAST(P AS DOUBLE) * CAST(N - P AS DOUBLE)), 6)
-    AS youden_j
-FROM best
-"""
-
-QUERIES["youden_j"] = q_youden_j
-_RAW_ORACLES["youden_j"] = SQL_YOUDEN_J
-
-def q_g_test(spark, sf_dir):
-    """Likelihood-ratio G-test of independence with the Williams
-    correction on the same daypart x event-type table as
-    chi2_independence (Sokal & Rohlf 'Biometry' 1981 §17.4; Williams
-    Biometrika 1976 for the q divisor — the LIKELIHOOD twin of
-    Pearson's X^2: G = 2 sum O ln(O/E) is additive across partitions
-    of the table (the property hierarchical log-linear decomposition
-    needs) and is the statistic whose per-cell terms ARE the mutual
-    information in nats scaled by 2N, tying this to
-    discrete_entropy_mi; X^2 and G disagreeing is itself a
-    small-cell warning). The <=20 contingency cells come from ONE
-    corpus aggregate; each cell term O ln(O*N/(R*C)) evaluates ln on
-    ONE exact-long-product ratio (cells with O = 0 contribute 0),
-    folded (row, col)-ascending over the 1-row frame on BOTH
-    engines; the Williams q = 1 + (N sum 1/R - 1)(N sum 1/C - 1) /
-    (6 N (r-1)(c-1)) folds over the <=4 row and <=5 column marginal
-    sets. chi2(12) 5% point 21.026 pinned. 2 shuffles at any corpus
-    size."""
-    ev = _events(spark, sf_dir).select(
-        F.expr(
-            "cast((unix_micros(cast(ts as timestamp)) "
-            "div 21600000000) % 4 as bigint)"
-        ).alias("__r"),
-        F.col("event_type").alias("__c"),
-    )
-    cells = ev.groupBy("__r", "__c").agg(
-        F.count(F.lit(1)).cast("long").alias("__o")
-    )
-    one = cells.agg(
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.sum("__o").cast("long").alias("__N"),
-        F.array_sort(
-            F.collect_list(F.struct("__r", "__c", "__o"))
-        ).alias("__a"),
-    )
-    one = (
-        one
-        .withColumn(
-            "__rows",
-            F.expr("array_sort(array_distinct("
-                   "transform(__a, x -> x.__r)))"),
-        )
-        .withColumn(
-            "__cols",
-            F.expr("array_sort(array_distinct("
-                   "transform(__a, x -> x.__c)))"),
-        )
-    )
-    # per-cell row/col marginals via bounded nested folds
-    rsum = (
-        "aggregate(__a, 0L, (acc, y) ->"
-        " acc + IF(y.__r = x.__r, y.__o, 0L))"
-    )
-    csum = (
-        "aggregate(__a, 0L, (acc, y) ->"
-        " acc + IF(y.__c = x.__c, y.__o, 0L))"
-    )
-    one = one.withColumn(
-        "__g",
-        F.expr(
-            "2.0D * aggregate(__a, 0.0D, (acc, x) -> acc"
-            " + IF(x.__o > 0, cast(x.__o as double)"
-            f" * ln(cast(x.__o * __N as double)"
-            f" / cast(({rsum}) * ({csum}) as double)), 0.0D))"
-        ),
-    )
-    rinv = (
-        "aggregate(__rows, 0.0D, (acc, r) -> acc"
-        " + 1.0D / cast(aggregate(__a, 0L, (acc2, y) ->"
-        " acc2 + IF(y.__r = r, y.__o, 0L)) as double))"
-    )
-    cinv = (
-        "aggregate(__cols, 0.0D, (acc, c) -> acc"
-        " + 1.0D / cast(aggregate(__a, 0L, (acc2, y) ->"
-        " acc2 + IF(y.__c = c, y.__o, 0L)) as double))"
-    )
-    one = (
-        one
-        .withColumn("__nr", F.expr("cast(size(__rows) as long)"))
-        .withColumn("__nc", F.expr("cast(size(__cols) as long)"))
-        .withColumn(
-            "__q",
-            F.expr(
-                "1.0D + (cast(__N as double) * (" + rinv + ") - 1.0D)"
-                " * (cast(__N as double) * (" + cinv + ") - 1.0D)"
-                " / (6.0D * cast(__N as double)"
-                " * cast((__nr - 1) * (__nc - 1) as double))"
-            ),
-        )
-    )
-    one = one.filter((F.col("__nr") > 1) & (F.col("__nc") > 1))
-    gadj = F.col("__g") / F.col("__q")
-    return one.select(
-        F.col("__N").alias("n_events"),
-        "n_cells",
-        ((F.col("__nr") - 1) * (F.col("__nc") - 1)).alias("dof"),
-        _r6(F.col("__g")).alias("g_stat"),
-        _r6(F.col("__q")).alias("q_williams"),
-        _r6(gadj).alias("g_adjusted"),
-        (gadj > F.lit(21.026)).alias("reject_5pct"),
-    )
-
-
-SQL_G_TEST = """
-WITH e AS (
-  SELECT CAST((epoch_us(ts) // 21600000000) % 4 AS BIGINT) AS r,
-    event_type AS c
-  FROM events
-), cells AS (
-  SELECT r, c, CAST(count(*) AS BIGINT) AS o
-  FROM e GROUP BY r, c
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_cells,
-    CAST(sum(o) AS BIGINT) AS N,
-    list({'r': r, 'c': c, 'o': o} ORDER BY r, c) AS a
-  FROM cells
-), marg AS (
-  SELECT n_cells, N, a,
-    list_sort(list_distinct(list_transform(a, x -> x.r))) AS rows_,
-    list_sort(list_distinct(list_transform(a, x -> x.c))) AS cols_
-  FROM one
-), g AS (
-  SELECT n_cells, N, a, rows_, cols_,
-    2.0 * list_sum(list_transform(a, x ->
-      CASE WHEN x.o > 0 THEN CAST(x.o AS DOUBLE)
-        * ln(CAST(x.o * N AS DOUBLE)
-          / CAST(list_sum(list_transform(a, y ->
-              CASE WHEN y.r = x.r THEN y.o ELSE 0 END))
-            * list_sum(list_transform(a, y ->
-              CASE WHEN y.c = x.c THEN y.o ELSE 0 END))
-            AS DOUBLE))
-      ELSE 0.0 END)) AS gs,
-    CAST(len(rows_) AS BIGINT) AS nr,
-    CAST(len(cols_) AS BIGINT) AS nc
-  FROM marg
-), q AS (
-  SELECT n_cells, N, gs, nr, nc,
-    1.0 + (CAST(N AS DOUBLE) * list_sum(list_transform(rows_, r ->
-        1.0 / CAST(list_sum(list_transform(a, y ->
-          CASE WHEN y.r = r THEN y.o ELSE 0 END)) AS DOUBLE)))
-      - 1.0)
-      * (CAST(N AS DOUBLE) * list_sum(list_transform(cols_, c ->
-        1.0 / CAST(list_sum(list_transform(a, y ->
-          CASE WHEN y.c = c THEN y.o ELSE 0 END)) AS DOUBLE)))
-      - 1.0)
-      / (6.0 * CAST(N AS DOUBLE)
-         * CAST((nr - 1) * (nc - 1) AS DOUBLE)) AS qw
-  FROM g WHERE nr > 1 AND nc > 1
-)
-SELECT N AS n_events, n_cells,
-  (nr - 1) * (nc - 1) AS dof,
-  round(gs, 6) AS g_stat,
-  round(qw, 6) AS q_williams,
-  round(gs / qw, 6) AS g_adjusted,
-  (gs / qw > 21.026) AS reject_5pct
-FROM q
-"""
-
-QUERIES["g_test"] = q_g_test
-_RAW_ORACLES["g_test"] = SQL_G_TEST
-
-
-def q_mood_median_test(spark, sf_dir):
-    """Mood's median test of `value` across the 5 event types
-    (Mood 'Introduction to the Theory of Statistics' 1950 §16.4 —
-    the bluntest of the k-sample location tests and the right one
-    when outliers are extreme: where kruskal_wallis ranks every
-    observation, Mood only asks which SIDE of the grand median each
-    lands on, so a single corrupted value cannot move it; the
-    standard cross-check when kruskal_wallis and anova disagree).
-    The grand median is the EXACT lower-median order statistic
-    selected from the domain-bounded cents histogram (<=56k rows,
-    the cliffs_delta convention) via one cumulative window — an
-    exact integer; the 2x5 above/<=median table then comes from the
-    SAME (type, cents) frame re-aggregated against the broadcast
-    median, every cell exact; chi2 = sum (N*O - R*C)^2 / (N*R*C)
-    with the long products cast to double before squaring (the
-    granger convention), folded type-ascending. chi2(4) 5% point
-    9.488 pinned. 100-TB shape: two bounded-frame aggs + one
-    broadcast — the corpus is touched ONCE."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.col("event_type").alias("__t"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-        .alias("__c"),
-    )
-    tc = scratch_persist(
-        ev.groupBy("__t", "__c").agg(
-            F.count(F.lit(1)).cast("long").alias("__n")
-        )
-    )
-    ch = tc.groupBy("__c").agg(F.sum("__n").cast("long").alias("__m"))
-    wcum = Window.orderBy("__c").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.orderBy("__c").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ch = ch.select(
-        "__c",
-        F.sum("__m").over(wcum).cast("long").alias("__cum"),
-        F.sum("__m").over(wall).cast("long").alias("__tot"),
-    )
-    med = ch.filter(
-        F.col("__cum") * 2 >= F.col("__tot")
-    ).agg(F.min("__c").alias("__med"))
-    cells = tc.crossJoin(F.broadcast(med)).groupBy("__t").agg(
-        F.sum(F.when(F.col("__c") > F.col("__med"), F.col("__n"))
-              .otherwise(F.lit(0))).cast("long").alias("__ab"),
-        F.sum(F.when(F.col("__c") <= F.col("__med"), F.col("__n"))
-              .otherwise(F.lit(0))).cast("long").alias("__be"),
-        F.max("__med").alias("__medx"),
-    )
-    one = cells.agg(
-        F.count(F.lit(1)).cast("long").alias("k_groups"),
-        F.sum(F.col("__ab") + F.col("__be")).cast("long").alias("__N"),
-        F.sum("__ab").cast("long").alias("__A"),
-        F.max("__medx").alias("__med"),
-        F.array_sort(
-            F.collect_list(F.struct("__t", "__ab", "__be"))
-        ).alias("__g"),
-    )
-    # chi2 over the 2xk table: rows above/below, cols = types
-    term = (
-        "cast(__N as double) * cast(x.{o} as double)"
-        " - cast((x.__ab + x.__be) as double) * cast({R} as double)"
-    )
-    ta = term.format(o="__ab", R="__A")
-    tb = term.format(o="__be", R="(__N - __A)")
-    one = one.withColumn(
-        "__chi2",
-        F.expr(
-            "aggregate(__g, 0.0D, (acc, x) -> acc"
-            f" + ({ta}) * ({ta})"
-            " / (cast(__N as double)"
-            "    * cast(x.__ab + x.__be as double)"
-            "    * cast(__A as double))"
-            f" + ({tb}) * ({tb})"
-            " / (cast(__N as double)"
-            "    * cast(x.__ab + x.__be as double)"
-            "    * cast(__N - __A as double)))"
-        ),
-    )
-    one = one.filter(
-        (F.col("k_groups") > 1) & (F.col("__A") > 0)
-        & (F.col("__A") < F.col("__N"))
-    )
-    return one.select(
-        "k_groups",
-        F.col("__N").alias("n_events"),
-        (F.col("__med").cast("double") / F.lit(100.0))
-        .alias("grand_median"),
-        F.col("__A").alias("n_above"),
-        _r6(F.col("__chi2")).alias("chi2"),
-        (F.col("k_groups") - 1).alias("dof"),
-        (F.col("__chi2") > F.lit(9.488)).alias("reject_5pct"),
-    )
-
-
-SQL_MOOD_MEDIAN_TEST = """
-WITH ev AS (
-  SELECT event_type AS t,
-    CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-  FROM events
-), tc AS (
-  SELECT t, c, CAST(count(*) AS BIGINT) AS n
-  FROM ev GROUP BY t, c
-), ch AS (
-  SELECT c,
-    CAST(sum(sum(n)) OVER (ORDER BY c
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      AS BIGINT) AS cum,
-    CAST(sum(sum(n)) OVER () AS BIGINT) AS tot
-  FROM tc GROUP BY c
-), med AS (
-  SELECT min(c) AS med FROM ch WHERE cum * 2 >= tot
-), cells AS (
-  SELECT t,
-    CAST(sum(CASE WHEN c > (SELECT med FROM med) THEN n ELSE 0 END)
-      AS BIGINT) AS ab,
-    CAST(sum(CASE WHEN c <= (SELECT med FROM med) THEN n ELSE 0 END)
-      AS BIGINT) AS be
-  FROM tc GROUP BY t
-), one AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-    CAST(sum(ab + be) AS BIGINT) AS N,
-    CAST(sum(ab) AS BIGINT) AS A,
-    list({'t': t, 'ab': ab, 'be': be} ORDER BY t) AS g
-  FROM cells
-), f AS (
-  SELECT k, N, A,
-    list_sum(list_transform(g, x ->
-      (CAST(N AS DOUBLE) * CAST(x.ab AS DOUBLE)
-       - CAST(x.ab + x.be AS DOUBLE) * CAST(A AS DOUBLE))
-      * (CAST(N AS DOUBLE) * CAST(x.ab AS DOUBLE)
-       - CAST(x.ab + x.be AS DOUBLE) * CAST(A AS DOUBLE))
-      / (CAST(N AS DOUBLE) * CAST(x.ab + x.be AS DOUBLE)
-         * CAST(A AS DOUBLE))
-      + (CAST(N AS DOUBLE) * CAST(x.be AS DOUBLE)
-       - CAST(x.ab + x.be AS DOUBLE) * CAST(N - A AS DOUBLE))
-      * (CAST(N AS DOUBLE) * CAST(x.be AS DOUBLE)
-       - CAST(x.ab + x.be AS DOUBLE) * CAST(N - A AS DOUBLE))
-      / (CAST(N AS DOUBLE) * CAST(x.ab + x.be AS DOUBLE)
-         * CAST(N - A AS DOUBLE)))) AS chi2
-  FROM one WHERE k > 1 AND A > 0 AND A < N
-)
-SELECT k AS k_groups, N AS n_events,
-  CAST((SELECT med FROM med) AS DOUBLE) / 100.0 AS grand_median,
-  A AS n_above,
-  round(chi2, 6) AS chi2,
-  k - 1 AS dof,
-  (chi2 > 9.488) AS reject_5pct
-FROM f
-"""
-
-QUERIES["mood_median_test"] = q_mood_median_test
-_RAW_ORACLES["mood_median_test"] = SQL_MOOD_MEDIAN_TEST
-
-
-def q_nelson_aalen(spark, sf_dir):
-    """Nelson-Aalen cumulative hazard over the same hour-binned user
-    lifetimes as survival_km (Nelson Technometrics 1972; Aalen Ann.
-    Stat. 1978 — the HAZARD-side dual of Kaplan-Meier: KM multiplies
-    survival factors, NA adds d_i/n_i hazard increments, so NA has
-    the smaller small-sample bias, carries the closed-form variance
-    sum d_i/n_i^2 (Klein 1991), and its slope IS the hazard rate —
-    the churn-intensity reading a retention feature wants; the
-    Fleming-Harrington survival exp(-H) is reported beside KM's
-    product for the standard cross-check). Reuses survival_km's
-    lifetime construction verbatim (7-day censoring broadcast, hour
-    bins); the curve frame is BOUNDED by the corpus span in hours,
-    so the cumulative H and its variance are prefix folds over the
-    collected bin-ascending array — each d_i/n_i one exact-long
-    division, every prefix its own identical fold on BOTH engines
-    (O(B^2) over the bounded bin count). Returns the curve at
-    every event bin."""
-    from mpds_spark.operators.util import scratch_persist
-
-    ev = _events(spark, sf_dir).select(
-        F.col("user_id").alias("__e"),
-        F.expr("unix_micros(cast(ts as timestamp))").alias("__us"),
-    )
-    mx = ev.agg(F.max("__us").alias("__mx"))
-    sp = ev.groupBy("__e").agg(
-        F.min("__us").alias("__s"), F.max("__us").alias("__t")
-    )
-    sv = sp.crossJoin(F.broadcast(mx)).select(
-        F.expr("(__t - __s) div 3600000000").cast("long")
-        .alias("__bin"),
-        F.when(
-            F.col("__t") <= F.col("__mx") - F.lit(604800000000),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__obs"),
-    )
-    curve = sv.groupBy("__bin").agg(
-        F.sum("__obs").cast("long").alias("__d"),
-        F.sum(F.lit(1) - F.col("__obs")).cast("long").alias("__c"),
-    )
-    one = curve.agg(
-        F.sum(F.col("__d") + F.col("__c")).cast("long").alias("__n0"),
-        F.array_sort(
-            F.collect_list(F.struct("__bin", "__d", "__c"))
-        ).alias("__a"),
-    )
-    # n_risk at bin k = n0 - sum_{j<k} (d_j + c_j); then H and its
-    # variance are prefix folds of the exact d/r divisions
-    one = one.withColumn(
-        "__rw",
-        F.expr(
-            "transform(sequence(1, cast(size(__a) as int)), k ->"
-            " named_struct("
-            " 'bin', element_at(__a, k).__bin,"
-            " 'd', element_at(__a, k).__d,"
-            " 'r', __n0 - aggregate(slice(__a, 1, k - 1), 0L,"
-            "   (acc, x) -> acc + x.__d + x.__c)))"
-        ),
-    )
-    one = one.withColumn(
-        "__rows",
-        F.expr(
-            "filter(transform(sequence(1, cast(size(__rw) as int)),"
-            " k -> named_struct("
-            " 'bin', element_at(__rw, k).bin,"
-            " 'd', element_at(__rw, k).d,"
-            " 'r', element_at(__rw, k).r,"
-            " 'h', aggregate(slice(__rw, 1, k), 0.0D, (acc, x) ->"
-            "  acc + IF(x.d > 0, cast(x.d as double)"
-            "  / cast(x.r as double), 0.0D)),"
-            " 'v', aggregate(slice(__rw, 1, k), 0.0D, (acc, x) ->"
-            "  acc + IF(x.d > 0, cast(x.d as double)"
-            "  / (cast(x.r as double) * cast(x.r as double)),"
-            "  0.0D)))), p -> p.r > 0)"
-        ),
-    )
-    out = one.select(F.explode("__rows").alias("__r")).select(
-        F.expr("__r.bin").alias("duration_bin"),
-        F.expr("__r.r").alias("n_risk"),
-        F.expr("__r.d").alias("n_events"),
-        _r6(F.expr("__r.h")).alias("na_cumhaz"),
-        _r6(F.expr("__r.v")).alias("na_var"),
-        _r6(F.exp(-F.expr("__r.h"))).alias("fh_survival"),
-    )
-    return out
-
-
-SQL_NELSON_AALEN = """
-WITH d AS (SELECT user_id AS e, epoch_us(ts) AS us FROM events),
-mx AS (SELECT max(us) AS mx FROM d),
-sp AS (SELECT e, min(us) AS s, max(us) AS t FROM d GROUP BY e),
-sv AS (
-  SELECT CAST((t - s) // 3600000000 AS BIGINT) AS bin,
-    CASE WHEN t <= (SELECT mx FROM mx) - 604800000000
-         THEN 1 ELSE 0 END AS obs
-  FROM sp
-), curve AS (
-  SELECT bin, CAST(sum(obs) AS BIGINT) AS d_,
-    CAST(sum(1 - obs) AS BIGINT) AS c_
-  FROM sv GROUP BY bin
-), one AS (
-  SELECT CAST(sum(d_ + c_) AS BIGINT) AS n0,
-    list({'bin': bin, 'd': d_, 'c': c_} ORDER BY bin) AS a
-  FROM curve
-), rw AS (
-  SELECT n0,
-    list_transform(range(1, CAST(len(a) + 1 AS INTEGER)), k -> {
-      'bin': a[k].bin, 'd': a[k].d,
-      'r': n0 - list_sum(list_prepend(CAST(0 AS BIGINT),
-        list_transform(list_slice(a, 1, k - 1),
-          x -> x.d + x.c)))}) AS w
-  FROM one
-), ex AS (
-  SELECT
-    unnest(list_transform(range(1, CAST(len(w) + 1 AS INTEGER)),
-      k -> {
-      'bin': w[k].bin, 'd': w[k].d, 'r': w[k].r,
-      'h': list_sum(list_prepend(CAST(0.0 AS DOUBLE),
-        list_transform(list_slice(w, 1, k), x ->
-          CASE WHEN x.d > 0 THEN CAST(x.d AS DOUBLE)
-            / CAST(x.r AS DOUBLE)
-          ELSE 0.0 END))),
-      'v': list_sum(list_prepend(CAST(0.0 AS DOUBLE),
-        list_transform(list_slice(w, 1, k), x ->
-          CASE WHEN x.d > 0 THEN CAST(x.d AS DOUBLE)
-            / (CAST(x.r AS DOUBLE) * CAST(x.r AS DOUBLE))
-          ELSE 0.0 END)))
-    })) AS r
-  FROM rw
-)
-SELECT r.bin AS duration_bin,
-  CAST(r.r AS BIGINT) AS n_risk,
-  CAST(r.d AS BIGINT) AS n_events,
-  round(r.h, 6) AS na_cumhaz,
-  round(r.v, 6) AS na_var,
-  round(exp(-r.h), 6) AS fh_survival
-FROM ex WHERE r.r > 0
-"""
-
-QUERIES["nelson_aalen"] = q_nelson_aalen
-_RAW_ORACLES["nelson_aalen"] = SQL_NELSON_AALEN
-
-def q_rare_word_profile(spark, sf_dir):
-    """Honoré's R, Sichel's S and Brunet's W per source from the
-    hapax end of the frequency spectrum (Honoré 1979; Sichel JRSS-A
-    1975; Brunet 1978 — the RARE-word complement to Yule's K
-    repeat-rate: K is driven by the most frequent words, these three
-    are driven by words used once (V1) or twice (V2), which is
-    where template expansion, boilerplate stuffing and synthetic
-    text first distort a source's profile; R collapses when hapaxes
-    vanish, S is the stable dis-legomena share Sichel showed is
-    near-constant for natural prose, W is the length-robust
-    vocabulary-richness constant). V, V1, V2, N are EXACT LONGS from
-    ONE (source, word) aggregation re-grouped once; R = 100 ln N /
-    (1 - V1/V) is exact divisions inside one ln; W = exp(ln N *
-    exp(-0.165 ln V)) spells the fractional power out as exp/ln on
-    BOTH engines (no pow(), whose libm paths differ). 2 shuffles at
-    any corpus size."""
-    d = load(spark, sf_dir, "documents").select(
-        "source",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("__w"),
-    )
-    cells = d.groupBy("source", "__w").agg(
-        F.count(F.lit(1)).cast("long").alias("__c")
-    )
-    mom = cells.groupBy("source").agg(
-        F.sum("__c").cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("vocab"),
-        F.sum(F.when(F.col("__c") == 1, 1).otherwise(0))
-        .cast("long").alias("v1"),
-        F.sum(F.when(F.col("__c") == 2, 1).otherwise(0))
-        .cast("long").alias("v2"),
-    )
-    mom = mom.filter(
-        (F.col("n_tokens") > 1) & (F.col("vocab") > 1)
-        & (F.col("v1") < F.col("vocab"))
-    )
-    nd = F.col("n_tokens").cast("double")
-    vd = F.col("vocab").cast("double")
-    honore = (F.lit(100.0) * F.log(nd)) / (
-        F.lit(1.0) - F.col("v1").cast("double") / vd
-    )
-    sichel = F.col("v2").cast("double") / vd
-    brunet = F.exp(
-        F.log(nd) * F.exp(F.lit(-0.165) * F.log(vd))
-    )
-    return mom.select(
-        "source", "n_tokens", "vocab", "v1", "v2",
-        _r6(honore).alias("honore_r"),
-        _r6(sichel).alias("sichel_s"),
-        _r6(brunet).alias("brunet_w"),
-    )
-
-
-SQL_RARE_WORD_PROFILE = """
-WITH d AS (
-  SELECT source,
-    unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM documents
-), cells AS (
-  SELECT source, w, CAST(count(*) AS BIGINT) AS c
-  FROM d GROUP BY source, w
-), mom AS (
-  SELECT source,
-    CAST(sum(c) AS BIGINT) AS n_tokens,
-    CAST(count(*) AS BIGINT) AS vocab,
-    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS v2
-  FROM cells GROUP BY source
-)
-SELECT source, n_tokens, vocab, v1, v2,
-  round((100.0 * ln(CAST(n_tokens AS DOUBLE)))
-    / (1.0 - CAST(v1 AS DOUBLE) / CAST(vocab AS DOUBLE)), 6)
-    AS honore_r,
-  round(CAST(v2 AS DOUBLE) / CAST(vocab AS DOUBLE), 6) AS sichel_s,
-  round(exp(ln(CAST(n_tokens AS DOUBLE))
-    * exp(-0.165 * ln(CAST(vocab AS DOUBLE)))), 6) AS brunet_w
-FROM mom
-WHERE n_tokens > 1 AND vocab > 1 AND v1 < vocab
-"""
-
-QUERIES["rare_word_profile"] = q_rare_word_profile
-_RAW_ORACLES["rare_word_profile"] = SQL_RARE_WORD_PROFILE
-
 
 # rewritten once, after every registration above
 ORACLES = {k: _rewrite_rounds(v) for k, v in _RAW_ORACLES.items()}

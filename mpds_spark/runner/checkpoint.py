@@ -4,18 +4,18 @@ North-rule requirement (BASELINE.json): "resumable from checkpoint with
 per-partition lineage + metrics". Design:
 
 - Work is split into logical partitions by a deterministic bucket of the
-  entity key (`pmod(hash(entity_id), n_buckets)`) — the same function a real
-  Iceberg table would use as its partition transform, so one lineage row
-  maps to one storage partition.
+  entity key (`pmod(crc32(string(entity_id)), n_buckets)`), so one lineage
+  row maps to one storage partition.
 - Each bucket is processed independently: transform(bucket_df) → parquet
   under <out>/bucket=<k>/ + a JSON manifest row under <out>/_lineage/ with
   {bucket, status, rows_out, wall_sec, input_fingerprint,
   spec_hash, finished_at}. (rows_in is deliberately not recorded: it would
   cost a full extra scan of the bucket before the transform.)
 - resume: buckets whose manifest says "done" WITH a matching
-  input_fingerprint + spec_hash are skipped (anti-join of the bucket list
-  against the manifest); everything else recomputes. Changing either the
-  input or the feature spec invalidates only the affected buckets.
+  input_fingerprint + spec_hash are skipped; everything else recomputes.
+  The default input_fingerprint is one row count and crc32 sum over the
+  WHOLE input, so any change to the input (or to the feature spec)
+  recomputes every bucket; a per-bucket fingerprint is ROADMAP item 9.
 
 Scale note: bucket-at-a-time submission keeps the blast radius of a failure
 to one bucket and makes progress observable; within a bucket, the plan is

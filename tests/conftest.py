@@ -17,6 +17,31 @@ def spark():
     s.stop()
 
 
+CATALOG_SF = "/root/testdata/sf0.001"
+# Catalog entries whose CONSTRUCTION runs eager work (iterative CC:
+# per-round checkpoint actions) are left out of the shared plan map.
+EAGER_CONSTRUCTION = {"near_dup_components", "kcenter_coreset"}
+
+
+@pytest.fixture(scope="session")
+def catalog_plans(spark):
+    """name -> executedPlan() text of every catalog entry outside
+    EAGER_CONSTRUCTION at CATALOG_SF, planned once per session for the
+    plan inventory and the plan budgets. Scratch frames an entry persists
+    are released after it is planned."""
+    from mpds_spark.operators.util import release_scratch
+    from mpds_spark.queries import QUERIES
+
+    out = {}
+    for name, fn in QUERIES.items():
+        if name in EAGER_CONSTRUCTION:
+            continue
+        df = fn(spark, CATALOG_SF)
+        out[name] = df._jdf.queryExecution().executedPlan().toString()
+        release_scratch()
+    return out
+
+
 def make_entity_series(
     n_entities=6, rows_per=40, seed=7, null_frac=0.25, event_frac=0.12
 ):

@@ -15,8 +15,6 @@ import re
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
 PAT = {
     "shuffle": r"\bExchange (?:hash|range|Single)",
     "python": r"\b(?:BatchEvalPython|ArrowEvalPython|(?:Python)?MapInArrow|MapInPandas)\b",
@@ -469,160 +467,12 @@ BUDGETS = {
     # segmented: ONE day agg + tiny 31-row candidate windows + argmin
     "segmented_trend": {"shuffle": 2, "python": 0, "cartesian": 0,
                         "bnlj": 0},
-    # bpe: persisted posting frame (cached-branch convention); the two
-    # 1-row top/total combines are the registered BNLJs
-    "bpe_merge_step": {"python": 0, "cartesian": 0, "bnlj": 2},
-    # padding: ONE source-keyed window exchange per strategy; batch agg
-    # reuses the source partitioning
-    "padding_waste_audit": {"shuffle": 2, "python": 0, "cartesian": 0,
-                            "bnlj": 0},
-    # bh: ONE hour agg + tiny 24-row rank/step-up windows
-    "bh_fdr": {"shuffle": 2, "python": 0, "cartesian": 0, "bnlj": 0},
-    # eb: persisted cell histogram (cached-branch convention); the
-    # 1-row alpha/beta broadcast is the registered BNLJ
-    "eb_shrinkage": {"python": 0, "cartesian": 0, "bnlj": 1},
-    # levene: group window + median agg + global moment agg; the
-    # median joins back as a broadcast hash join, never BNLJ
-    "levene_test": {"shuffle": 3, "python": 0, "cartesian": 0,
-                    "bnlj": 0},
-    # isotonic: ONE bin agg + global collect; minimax is array math
-    "isotonic_calibration": {"shuffle": 2, "python": 0, "cartesian": 0,
-                             "bnlj": 0},
-    # edit distance: (user,day) agg + user lag window + histogram agg
-    "session_edit_distance": {"shuffle": 3, "python": 0,
-                              "cartesian": 0, "bnlj": 0},
-    # bradley-terry: persisted 1-row iteration frame fans out to the
-    # 5-way output union (cached-branch convention)
-    "bradley_terry": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # kruskal: histogram agg + rank window + broadcast rank join +
-    # group agg + tiny folds; 1-row tie combine is the registered BNLJ
-    "kruskal_wallis": {"shuffle": 6, "python": 0, "cartesian": 0,
-                       "bnlj": 1},
-    # mcnemar: ONE corpus aggregate, nothing else
-    "mcnemar_test": {"shuffle": 1, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    # cox: the logrank frame (user lead window + bin agg + tiny curve
-    # window) + the 1-row MM fold; corpus-max broadcast is the
-    # registered BNLJ
-    "cox_ph": {"shuffle": 4, "python": 0, "cartesian": 0,
-               "bnlj": 1},
-    # box-cox: persisted 1-row histogram-fold frame fans out to the
-    # 5-way lambda-grid union (cached-branch convention)
-    "box_cox_lambda": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # kmv: stacked distinct + scope rank window (WindowGroupLimit
-    # heap, asserted below) + two scope aggs + 6-row join
-    "kmv_distinct": {"shuffle": 4, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    # modularity: persisted edges fan out to the edge-moment and
-    # degree-moment branches (cached-branch convention, the
-    # degree_assortativity shape); 1-row x 1-row combine is the
-    # registered BNLJ
-    "newman_modularity": {"python": 0, "cartesian": 0, "bnlj": 1},
-    # horvitz-thompson: kept agg + true agg + |strata| join + ordered
-    # pooled fold
-    "horvitz_thompson": {"shuffle": 5, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
-    # stump: histogram agg + tiny prefix window + TakeOrdered argmin
-    # (asserted below)
-    "best_split_stump": {"shuffle": 2, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
-    # ledoit-wolf: persisted codes + dim^2 scatter (cached-branch,
-    # the pca shape); si-broadcast per-row/cell passes + two 1-row
-    # moment combines are the registered BNLJs
-    # r6: shared Arrow scatter kernel (ONE executed python stage; the
-    # persisted kernel frame's cached plan is re-displayed per
-    # consumer, inflating the TEXTUAL count to 7)
-    "ledoit_wolf_shrinkage": {"python": 7, "cartesian": 0, "bnlj": 4},
-    # l-moments: histogram agg + tiny rank window + moment agg
-    "l_moments": {"shuffle": 2, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
-    # wilson: ONE type agg + tiny total window
-    "wilson_intervals": {"shuffle": 2, "python": 0, "cartesian": 0,
-                         "bnlj": 0},
-    # mde: persisted 1-row user-level moment frame fans out to the
-    # 5-way type union (cached-branch convention)
-    "mde_power": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # nb-dispersion: ONE user agg + ONE global agg
-    "nb_dispersion": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # markov-stationary: persisted 1-row power-iteration frame fans
-    # out to the 5-way type union (cached-branch convention); the lag
-    # pass shares one entity-keyed exchange
-    "markov_stationary": {"python": 0, "cartesian": 0, "bnlj": 0},
-    # jl: Arrow int64-matmul projection kernel (r6) + md5-rank window
-    # + half-pair equi-join + bin agg — never a pairwise cross. ONE
-    # executed kernel + window; the persisted rank frame's cached plan
-    # is re-displayed per half-pairing branch, so the TEXTUAL counts
-    # are doubled (2 branches x (scan line + cached-plan display))
-    "jl_projection_audit": {"shuffle": 4, "python": 4, "cartesian": 0,
-                            "bnlj": 0},
-    # pr-ap: histogram agg + tiny desc windows + TakeOrdered best-F1
-    # + 1-row AP-fold combine (registered BNLJ)
-    "pr_curve_ap": {"shuffle": 4, "python": 0, "cartesian": 0,
-                    "bnlj": 1},
-    # cochran-q: ONE corpus aggregate, nothing else
-    "cochran_q": {"shuffle": 1, "python": 0, "cartesian": 0,
-                  "bnlj": 0},
-    # odds-ratio: ONE corpus aggregate, nothing else
-    "odds_ratio_ci": {"shuffle": 1, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # mantel-haenszel: ONE corpus agg to the 7-row strata frame +
-    # 1-row fold agg
-    "mantel_haenszel": {"shuffle": 2, "python": 0, "cartesian": 0,
-                        "bnlj": 0},
-    # bartlett: ONE corpus agg to the 5-row type frame + 1-row fold
-    # agg
-    "bartlett_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-                      "bnlj": 0},
-    # cliffs-delta: corpus agg to the domain-bounded distinct-cents
-    # frame + cumulative window over that frame (the window's single-
-    # partition exchange fuses with the 1-row agg) — 2 exchanges
-    "cliffs_delta": {"shuffle": 2, "python": 0, "cartesian": 0,
-                     "bnlj": 0},
-    # ndcg: persisted part-cell frame (cached-branch); the two BNLJ
-    # join the three 1-row side frames; both top-10s are heaps
-    # (asserted below)
-    "ndcg_eval": {"python": 0, "cartesian": 0, "bnlj": 2},
-    # mrr: cell agg + customer agg + rank-group agg + 1-row fold —
-    # 4 exchanges, never a window over the part dimension
-    "mrr_eval": {"shuffle": 4, "python": 0, "cartesian": 0,
-                 "bnlj": 0},
-    # brier-murphy: bin agg + 1-row fold over the <=10-row frame
-    "brier_decomposition": {"shuffle": 2, "python": 0,
-                            "cartesian": 0, "bnlj": 0},
-    # youden: score agg + cumulative window over the <=401-row
-    # score-domain frame + 1-row argmax
-    "youden_j": {"shuffle": 3, "python": 0, "cartesian": 0,
-                 "bnlj": 0},
-    # g-test: cell agg + 1-row marginal folds over the <=20 cells
-    "g_test": {"shuffle": 2, "python": 0, "cartesian": 0,
-               "bnlj": 0},
-    # mood: persisted (type,cents) frame (cached-branch) + median
-    # window + broadcast median back; the 1-row BNLJ is the
-    # registered broadcast-median join
-    "mood_median_test": {"python": 0, "cartesian": 0, "bnlj": 1},
-    # nelson-aalen: entity span agg (partial+final) + bin agg +
-    # 1-row prefix folds; the 1-row BNLJ is the registered broadcast
-    # censor-cutoff join
-    "nelson_aalen": {"shuffle": 4, "python": 0, "cartesian": 0,
-                     "bnlj": 1},
-    # rare-words: (source,word) agg + source re-agg
-    "rare_word_profile": {"shuffle": 2, "python": 0, "cartesian": 0,
-                          "bnlj": 0},
 }
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
-    from mpds_spark.queries import QUERIES
-    from mpds_spark.operators.util import release_scratch
-
-    out = {}
-    for name in BUDGETS:
-        df = QUERIES[name](spark, SF_DIR)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
-        release_scratch()
-    return out
+def plans(catalog_plans):
+    return catalog_plans
 
 
 @pytest.mark.parametrize("name", sorted(BUDGETS))
@@ -634,28 +484,6 @@ def test_plan_budget(plans, name):
             f"{name}: {got} {node} nodes (budget {cap}) — the plan shape "
             f"regressed; see tools/plan_audit.py.\n{plan[:2000]}"
         )
-
-
-def test_stump_takeordered(plans):
-    """best_split_stump's argmin over the candidate frame must plan as
-    TakeOrderedAndProject — never a global sort of the distinct-value
-    histogram."""
-    assert "TakeOrderedAndProject" in plans["best_split_stump"]
-
-
-def test_graph_topk_heaps(plans):
-    """ndcg_eval's ranking and ideal top-10s must plan as
-    TakeOrderedAndProject (per-partition heaps) — a global sort of the
-    part-revenue frame is the scale wart the r4 topk_users fix banned."""
-    assert "TakeOrderedAndProject" in plans["ndcg_eval"]
-
-
-def test_kmv_windowgrouplimit(plans):
-    """kmv_distinct's per-scope k smallest must plan as a
-    WindowGroupLimit (per-partition top-k heap pushed below the
-    exchange) — at 10^12 rows a scope-rank without the pushed limit
-    sorts every hash in the scope."""
-    assert "WindowGroupLimit" in plans["kmv_distinct"]
 
 
 def test_topk_takeordered(plans):

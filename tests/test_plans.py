@@ -19,6 +19,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import CATALOG_SF, EAGER_CONSTRUCTION
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -67,26 +69,11 @@ BNLJ_BY_DESIGN = {
     # 1-row / bounded-frame combines registered (with exact counts)
     # in tests/test_plan_budgets.py BUDGETS — mirrored here:
     "anova_twoway",        # three 1-row SS joins on the 168-cell frame
-    "bpe_merge_step",      # 1-row best-pair broadcast
-    "cox_ph",              # broadcast 1-row corpus-max censor boundary
     "degree_assortativity",  # 1-row moment x 1-row node-count combine
-    "eb_shrinkage",        # broadcast 1-row pooled moment fit
     "hurst_variance_plot",  # three 1-row level joins
     "kendall_tau",         # cell-pair sweep over the <=100-cell frame
-    "kruskal_wallis",      # 1-row tie-term combine
     "logrank_test",        # broadcast 1-row corpus-max censor boundary
-    "newman_modularity",   # 1-row edge-moment x 1-row degree-moment
-    "ledoit_wolf_shrinkage",  # si broadcast + 1-row moment combines
-    "pr_curve_ap",         # 1-row AP fold x best-F1 row combine
-    # bounded 1-row combines registered in BUDGETS with bnlj >= 1
-    # (sync-checked against test_plan_budgets by name):
-    "mood_median_test",    # 1-row grand-median broadcast
-    "ndcg_eval",           # 1-row ideal-DCG combine
-    "nelson_aalen",        # broadcast 1-row corpus-max censor boundary
 }
-# Queries whose CONSTRUCTION runs eager work (iterative CC: per-round
-# checkpoint actions) are excluded from the plan inventory.
-EAGER_CONSTRUCTION = {"near_dup_components", "kcenter_coreset"}
 
 
 @pytest.fixture(scope="module")
@@ -134,6 +121,21 @@ def test_interpolate_plan_one_exchange_no_python(spark, series_df):
     plan = _plan(interpolate(masked, value="value", leakage_ok=True))
     assert _shuffles(plan) == 1, plan
     assert _n(plan, "ArrowEvalPython") == 0 and _n(plan, "BatchEvalPython") == 0
+
+
+def test_interpolate_sorts_once_and_names_aggregates_once(spark):
+    """The interpolate catalog plan sorts each entity once: both window
+    levels order by the one projected epoch time. Each level computes its
+    4 distinct aggregates once; a window Column used twice in an
+    expression would be evaluated twice in its Window node."""
+    from mpds_spark.queries import q_interpolate
+
+    plan = _plan(q_interpolate(spark, CATALOG_SF))
+    windows = [
+        ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Window [")
+    ]
+    assert [ln.count("windowspecdefinition") for ln in windows] == [4, 4], plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
 
 
 def test_sessionize_plan_single_entity_exchange(spark, series_df):
@@ -265,18 +267,15 @@ def test_interval_join_default_is_not_nested_loop(spark, series_df):
     assert _n(plan, "BroadcastNestedLoopJoin") == 0
 
 
-def test_catalog_plan_inventory(spark):
+def test_catalog_plan_inventory(catalog_plans):
     """Global plan contract over the catalog: no CartesianProduct anywhere;
     BroadcastNestedLoopJoin only in BNLJ_BY_DESIGN. EAGER_CONSTRUCTION
     queries are skipped — their plan shape is covered by their own
     operator tests."""
     from mpds_spark.queries import QUERIES
 
-    sf = "/root/testdata/sf0.001"
-    for name, fn in QUERIES.items():
-        if name in EAGER_CONSTRUCTION:
-            continue
-        plan = _plan(fn(spark, sf))
+    assert set(catalog_plans) == set(QUERIES) - EAGER_CONSTRUCTION
+    for name, plan in catalog_plans.items():
         assert "CartesianProduct" not in plan, name
         if name not in BNLJ_BY_DESIGN:
             assert "BroadcastNestedLoopJoin" not in plan, name

@@ -1008,1823 +1008,79 @@ def test_segmented_trend_rebuild(spark):
     assert 0.0 <= r["sse_reduction"] <= 1.0
 
 
-def test_bpe_merge_step_greedy_rebuild(spark):
-    """Top pair + greedy left-to-right merge count vs a literal python
-    BPE application over every document (including the A==B run case
-    the gaps-and-islands formula must get right)."""
-    from mpds_spark.queries import q_bpe_merge_step
-
-    r = q_bpe_merge_step(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-    from collections import Counter
-
-    texts = [
-        t
-        for (t,) in duckdb.sql(
-            "SELECT text FROM"
-            " '/root/testdata/sf0.001/documents.parquet'"
-        ).fetchall()
-    ]
-    cnt = Counter()
-    tokens_before = 0
-    for t in texts:
-        w = t.split(" ")
-        tokens_before += len(w)
-        cnt.update(zip(w, w[1:]))
-    (tw1, tw2), pc = min(
-        cnt.items(), key=lambda kv: (-kv[1], kv[0])
-    )
-    applied = 0
-    for t in texts:
-        w = t.split(" ")
-        i = 0
-        while i < len(w) - 1:
-            if w[i] == tw1 and w[i + 1] == tw2:
-                applied += 1
-                i += 2
-            else:
-                i += 1
-    assert (r["pair_left"], r["pair_right"], r["pair_count"]) == (
-        tw1, tw2, pc,
-    )
-    assert r["merges_applied"] == applied
-    assert r["tokens_before"] == tokens_before
-    assert r["tokens_after"] == tokens_before - applied
-
-
-def test_bpe_merge_step_equal_pair_runs(spark):
-    """The A==B branch: plant run lengths 1..5 of the winning token and
-    check floor(L/2) greedy counting survives the islands formula."""
-    from mpds_spark.queries import q_bpe_merge_step
-    import os
-    import tempfile
-
-    rows = [
-        ("d1", "a a a a a"),       # run 5 -> 2 merges
-        ("d2", "a a x a a a"),     # runs 2,3 -> 1 + 1
-        ("d3", "x a x"),           # run 1 -> 0
-        ("d4", "a a"),             # run 2 -> 1
-    ]
-    with tempfile.TemporaryDirectory() as td:
-        spark.createDataFrame(
-            rows, "doc_id string, text string"
-        ).write.parquet(os.path.join(td, "documents.parquet"))
-        r = q_bpe_merge_step(spark, td).collect()[0]
-    assert (r["pair_left"], r["pair_right"]) == ("a", "a")
-    # adjacent (a,a) pairs: 4 + (1 + 2) + 0 + 1 = 8
-    assert r["pair_count"] == 8
-    # greedy merges: 2 + (1 + 1) + 0 + 1 = 5
-    assert r["merges_applied"] == 5
-    assert r["tokens_after"] == r["tokens_before"] - 5
-
-
-def test_padding_waste_audit_brute_force(spark):
-    """Both strategies vs a literal python batching loop; and the
-    length-sorted strategy must never waste more than arrival order
-    within any source (sorting minimizes sum of batch maxima for
-    consecutive grouping)."""
-    from mpds_spark.queries import q_padding_waste_audit
-
-    out = {
-        (r["strategy"], r["source"]): r
-        for r in q_padding_waste_audit(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-    from collections import defaultdict
-
-    rows = duckdb.sql(
-        "SELECT doc_id, source, len(string_split(text, ' ')) FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    by_src = defaultdict(list)
-    for doc_id, src, l in rows:
-        by_src[src].append((doc_id, l))
-    for src, docs in by_src.items():
-        for strat, key in (
-            ("arrival", lambda d: d[0]),
-            ("length_sorted", lambda d: (d[1], d[0])),
-        ):
-            ordered = [l for _, l in sorted(
-                docs, key=lambda d: key(d) if strat == "arrival"
-                else (d[1], d[0])
-            )] if strat == "length_sorted" else [
-                l for _, l in sorted(docs)
-            ]
-            batches = [
-                ordered[i:i + 8] for i in range(0, len(ordered), 8)
-            ]
-            real = sum(ordered)
-            padded = sum(len(b) * max(b) for b in batches)
-            r = out[(strat, src)]
-            assert r["n_batches"] == len(batches)
-            assert r["real_tokens"] == real
-            assert r["padded_tokens"] == padded
-        assert (
-            out[("length_sorted", src)]["padded_tokens"]
-            <= out[("arrival", src)]["padded_tokens"]
-        )
-
-
-def test_bh_fdr_stepup_rebuild(spark):
-    """Chi-square statistics, deterministic critical values, and the
-    step-up k vs a literal python rebuild (Benjamini & Hochberg 1995);
-    also pins the bisection helper against math.erfc round-trips."""
-    import math
-
-    from mpds_spark.queries import _BH_CRITS, _chi2_inv_1dof, q_bh_fdr
-
-    # the bisection inverts erfc: erfc(sqrt(chi2)/sqrt(2)) == target
-    for i, c in enumerate(_BH_CRITS, start=1):
-        assert abs(
-            math.erfc(math.sqrt(c) / math.sqrt(2.0)) - i * 0.05 / 24
-        ) < 1e-12
-    assert _chi2_inv_1dof(0.05) == _BH_CRITS[-1]
-
-    rows = {
-        r["hour"]: r
-        for r in q_bh_fdr(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    cells = duckdb.sql(
-        "SELECT CAST(hour(ts) AS BIGINT), CAST(count(*) AS BIGINT),"
-        " CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END)"
-        " AS BIGINT) FROM '/root/testdata/sf0.001/events.parquet'"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    N = sum(n for _, n, _ in cells)
-    X = sum(x for _, _, x in cells)
-    stats = []
-    for h, n, x in cells:
-        num = x - n * X / N
-        chi2 = num * num / (n * (X / N) * (1 - X / N))
-        stats.append((h, chi2))
-    ranked = sorted(stats, key=lambda t: (-t[1], t[0]))
-    kmax = 0
-    for i, (h, chi2) in enumerate(ranked, start=1):
-        if chi2 >= _BH_CRITS[i - 1]:
-            kmax = i
-    for i, (h, chi2) in enumerate(ranked, start=1):
-        r = rows[h]
-        assert r["rank"] == i
-        assert abs(r["chi2"] - chi2) < 1e-4
-        assert r["rejected"] == (i <= kmax)
-
-
-def test_eb_shrinkage_mom_rebuild(spark):
-    """alpha/beta and the shrunk rates vs a literal python
-    method-of-moments rebuild over the same per-user cells, and the
-    shrinkage direction invariant: every shrunk rate lies between the
-    raw rate and the prior mean."""
-    from mpds_spark.queries import q_eb_shrinkage
-
-    out = q_eb_shrinkage(spark, "/root/testdata/sf0.001").collect()
-    import duckdb
-
-    cells = duckdb.sql(
-        "SELECT x, n, CAST(count(*) AS BIGINT) FROM ("
-        " SELECT user_id, CAST(count(*) AS BIGINT) AS n,"
-        " CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS x"
-        " FROM '/root/testdata/sf0.001/events.parquet' GROUP BY 1)"
-        " WHERE n >= 5 GROUP BY x, n ORDER BY n, x"
-    ).fetchall()
-    uu = sum(c for _, _, c in cells)
-    sr = 0.0
-    sr2 = 0.0
-    for x, n, c in cells:
-        sr += c * (x / n)
-        sr2 += c * (x / n) * (x / n)
-    m = sr / uu
-    v = (sr2 - sr * sr / uu) / (uu - 1)
-    s = m * (1.0 - m) / v - 1.0
-    alpha, beta = m * s, (1.0 - m) * s
-    assert s > 0, "testdata must be overdispersed for EB to apply"
-    prior_mean = alpha / (alpha + beta)
-    for r in out:
-        assert abs(r["alpha"] - alpha) < 1e-5
-        assert abs(r["beta"] - beta) < 1e-5
-        want = (r["purchases"] + alpha) / (
-            r["n_events"] + alpha + beta
-        )
-        assert abs(r["shrunk_rate"] - want) < 1e-5
-        lo = min(r["raw_rate"], prior_mean) - 1e-6
-        hi = max(r["raw_rate"], prior_mean) + 1e-6
-        assert lo <= r["shrunk_rate"] <= hi
-
-
-def test_levene_brown_forsythe_rebuild(spark):
-    """F statistic vs a literal python Brown-Forsythe computation
-    (median-centered absolute deviations, one-way ANOVA on them),
-    including the doubled-median integer trick's scale cancellation."""
-    from mpds_spark.queries import q_levene_test
-
-    r = q_levene_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-    from collections import defaultdict
-
-    rows = duckdb.sql(
-        "SELECT event_type,"
-        " CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    by_g = defaultdict(list)
-    for g, c in rows:
-        by_g[g].append(c)
-    zs = {}
-    for g, cs in by_g.items():
-        srt = sorted(cs)
-        n = len(srt)
-        med2 = srt[(n + 1) // 2 - 1] + srt[n // 2]
-        zs[g] = [abs(2 * c - med2) for c in cs]
-    k = len(zs)
-    N = sum(len(v) for v in zs.values())
-    St = sum(sum(v) for v in zs.values())
-    Qt = sum(z * z for v in zs.values() for z in v)
-    sb = sum(sum(v) ** 2 / len(v) for g, v in sorted(zs.items()))
-    B = sb - St * St / N
-    W = Qt - sb
-    f = (B / (k - 1)) / (W / (N - k))
-    assert (r["k_groups"], r["n_total"]) == (k, N)
-    assert (r["df1"], r["df2"]) == (k - 1, N - k)
-    assert abs(r["f_stat"] - f) < 1e-4
-    assert abs(r["between_ms"] - B / (k - 1)) < 1e-2
-    assert abs(r["within_ms"] - W / (N - k)) < 1e-2
-
-
-def _pava(ns, xs):
-    """Classic stack-based pool-adjacent-violators (weighted means)."""
-    blocks = []  # (weight, sum, span)
-    for n, x in zip(ns, xs):
-        blocks.append([n, x, 1])
-        while len(blocks) > 1 and (
-            blocks[-2][1] / blocks[-2][0] > blocks[-1][1] / blocks[-1][0]
-        ):
-            w2, s2, c2 = blocks.pop()
-            blocks[-1][0] += w2
-            blocks[-1][1] += s2
-            blocks[-1][2] += c2
-    out = []
-    for w, s, c in blocks:
-        out.extend([s / w] * c)
-    return out
-
-
-def test_isotonic_minimax_equals_pava(spark):
-    """The minimax identity must reproduce classic stack-based PAVA on
-    the real bin frame AND on planted violator patterns; the fitted
-    curve must be monotone and weight-mean-preserving."""
-    from mpds_spark.queries import q_isotonic_calibration
-
-    rows = sorted(
-        q_isotonic_calibration(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["bin"],
-    )
-    ns = [r["n_docs"] for r in rows]
-    xs = [r["n_pos"] for r in rows]
-    want = _pava(ns, xs)
-    for r, w in zip(rows, want):
-        assert abs(r["iso_rate"] - w) < 1e-6
-    for a, b in zip(rows, rows[1:]):
-        assert a["iso_rate"] <= b["iso_rate"] + 1e-12
-    assert abs(
-        sum(r["iso_rate"] * r["n_docs"] for r in rows)
-        - sum(xs)
-    ) < 1e-3
-
-    # planted violators: strictly decreasing rates pool into one block
-    ns2, xs2 = [10, 10, 10], [9, 5, 1]
-    assert _pava(ns2, xs2) == [0.5, 0.5, 0.5]
-
-
-def test_session_edit_distance_brute_force(spark):
-    """Histogram vs a literal python DP-Levenshtein over the same
-    per-user-day initials strings."""
-    from mpds_spark.queries import q_session_edit_distance
-
-    got = {
-        r["edit_distance"]: r["n_pairs"]
-        for r in q_session_edit_distance(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-    from collections import Counter, defaultdict
-
-    rows = duckdb.sql(
-        "SELECT user_id, CAST(day(ts) AS BIGINT), ts, event_type FROM"
-        " '/root/testdata/sf0.001/events.parquet' ORDER BY user_id, ts"
-    ).fetchall()
-    days = defaultdict(str)
-    for u, d, _, et in rows:
-        days[(u, d)] += et[0]
-
-    def lev(a, b):
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(
-                    prev[j] + 1, cur[j - 1] + 1,
-                    prev[j - 1] + (ca != cb),
-                ))
-            prev = cur
-        return prev[-1]
-
-    by_user = defaultdict(list)
-    for (u, d), s in sorted(days.items()):
-        by_user[u].append((d, s))
-    want = Counter()
-    for u, lst in by_user.items():
-        lst.sort()
-        for (_, a), (_, b) in zip(lst, lst[1:]):
-            want[lev(a, b)] += 1
-    assert got == dict(want)
-
-
-def test_bradley_terry_mm_rebuild(spark):
-    """Strengths vs a literal python MM rebuild (Hunter 2004, 10
-    iterations, same op order), the simplex invariant sum p = 1, and
-    the fixed-point residual shrinking vs the uniform start."""
-    from mpds_spark.queries import _BT_R, _BT_TYPES, q_bradley_terry
-
-    rows = {
-        r["event_type"]: r
-        for r in q_bradley_terry(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    K = len(_BT_TYPES)
-    cases = ", ".join(
-        f"sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS c{i}"
-        for i, t in enumerate(_BT_TYPES)
-    )
-    users = duckdb.sql(
-        f"SELECT {cases} FROM"
-        " '/root/testdata/sf0.001/events.parquet' GROUP BY user_id"
-    ).fetchall()
-    w = [[0] * K for _ in range(K)]
-    for cs in users:
-        for i in range(K):
-            for j in range(K):
-                if i != j and cs[i] > cs[j]:
-                    w[i][j] += 1
-    n = [[w[i][j] + w[j][i] for j in range(K)] for i in range(K)]
-    bw = [sum(w[i][j] for j in range(K) if j != i) for i in range(K)]
-    p = [0.2] * K
-    for _ in range(_BT_R):
-        q = []
-        for i in range(K):
-            den = 0.0
-            for j in range(K):
-                if j != i:
-                    den += n[i][j] / (p[i] + p[j])
-            q.append(bw[i] / den)
-        s = sum(q)
-        p = [qi / s for qi in q]
-    for i, t in enumerate(_BT_TYPES):
-        r = rows[t]
-        assert r["wins"] == bw[i]
-        assert r["losses"] == sum(w[j][i] for j in range(K) if j != i)
-        assert abs(r["bt_strength"] - p[i]) < 1e-6
-    assert abs(sum(r["bt_strength"] for r in rows.values()) - 1.0) < 1e-5
-    # MM is monotone in likelihood: the fitted point must satisfy the
-    # fixed-point equation better than the uniform start
-    def resid(pv):
-        tot = 0.0
-        for i in range(K):
-            den = sum(
-                n[i][j] / (pv[i] + pv[j]) for j in range(K) if j != i
-            )
-            tot += abs(pv[i] - bw[i] / den / sum(
-                bw[k] / sum(
-                    n[k][j] / (pv[k] + pv[j]) for j in range(K) if j != k
-                ) for k in range(K)
-            ))
-        return tot
-
-    assert resid(p) < resid([0.2] * K)
-
-
-def test_kruskal_wallis_rebuild(spark):
-    """H and the tie-corrected H vs a literal python average-rank
-    computation over every event row (Kruskal & Wallis 1952 eq. 1.1
-    with the standard tie correction)."""
-    from mpds_spark.queries import q_kruskal_wallis
-
-    r = q_kruskal_wallis(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-    from collections import Counter, defaultdict
-
-    rows = duckdb.sql(
-        "SELECT event_type,"
-        " CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    vals = sorted(c for _, c in rows)
-    N = len(vals)
-    # average rank per distinct value
-    first = {}
-    cnt = Counter(vals)
-    pos = 1
-    avg_rank = {}
-    for v in sorted(cnt):
-        t = cnt[v]
-        avg_rank[v] = pos + (t - 1) / 2.0
-        pos += t
-    rsum = defaultdict(float)
-    ng = defaultdict(int)
-    for g, c in rows:
-        rsum[g] += avg_rank[c]
-        ng[g] += 1
-    h = 12.0 / (N * (N + 1)) * sum(
-        rsum[g] ** 2 / ng[g] for g in sorted(rsum)
-    ) - 3.0 * (N + 1)
-    tie = sum(t ** 3 - t for t in cnt.values())
-    corr = 1.0 - tie / (N ** 3 - N)
-    assert (r["k_groups"], r["n_total"], r["tie_term"]) == (
-        len(ng), N, tie,
-    )
-    assert abs(r["h_stat"] - h) < 1e-4
-    assert abs(r["h_corrected"] - h / corr) < 1e-4
-
-
-def test_mcnemar_cells_and_consistency_with_kappa(spark):
-    """Discordant cells vs a direct python count, the chi-square
-    formulas, and cross-query consistency: McNemar's b/c must equal
-    cohens_kappa's off-diagonal cells on the same raters."""
-    from mpds_spark.queries import q_cohens_kappa, q_mcnemar_test
-
-    r = q_mcnemar_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    b, c = duckdb.sql(
-        "SELECT sum(CASE WHEN n_chars >= 120 AND"
-        " length(text) - length(replace(text,' ','')) + 1 < 20"
-        " THEN 1 ELSE 0 END),"
-        " sum(CASE WHEN n_chars < 120 AND"
-        " length(text) - length(replace(text,' ','')) + 1 >= 20"
-        " THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()[0]
-    assert (r["b_only_a"], r["c_only_b"]) == (b, c)
-    if b + c > 0:
-        assert abs(r["chi2"] - (b - c) ** 2 / (b + c)) < 1e-6
-        assert abs(
-            r["chi2_corrected"] - (abs(b - c) - 1) ** 2 / (b + c)
-        ) < 1e-6
-    kap = q_cohens_kappa(spark, "/root/testdata/sf0.001").collect()[0]
-    assert r["n_docs"] == kap["n_docs"]
-
-
-def test_cox_ph_rebuild_and_logrank_consistency(spark):
-    """theta / se / Wald z vs a literal python rebuild of the SAME 15
-    MM rounds on the SAME risk-set frame (Cox 1972, Breslow ties;
-    identical op order), the fixed-point residual shrinking vs the
-    theta=1 start, and cross-query consistency: deaths and
-    score_at_null must equal logrank_test's observed deaths and
-    O-E on the identical frame."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import _COX_R, q_cox_ph, q_logrank_test
-
-    r = q_cox_ph(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT user_id, epoch(ts), event_id FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " WHERE event_type = 'purchase'"
-        " ORDER BY user_id, epoch(ts), event_id"
-    ).fetchall()
-    mx = duckdb.sql(
-        "SELECT max(epoch(ts)) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()[0][0]
-    by_user = defaultdict(list)
-    for e, t, _ in rows:
-        by_user[e].append(t)
-    cells = defaultdict(lambda: [0, 0, 0, 0])  # d1, c1, d0, c0
-    for e, ts in by_user.items():
-        arm = (
-            int(hashlib.md5(f"lr|{e}".encode()).hexdigest()[:15], 16) % 2
-        )
-        for i, t in enumerate(ts):
-            nxt = ts[i + 1] if i + 1 < len(ts) else None
-            day = int(math.floor(((nxt if nxt is not None else mx) - t)
-                                 / 3600.0))
-            obs = 1 if nxt is not None else 0
-            c = cells[day]
-            if arm == 1:
-                c[0] += obs
-                c[1] += 1 - obs
-            else:
-                c[2] += obs
-                c[3] += 1 - obs
-    days = sorted(cells)
-    tot1 = sum(cells[d][0] + cells[d][1] for d in days)
-    tott = sum(sum(cells[d]) for d in days)
-    frame = []
-    run1 = runt = 0
-    for d in days:
-        d1, c1, d0, c0 = cells[d]
-        frame.append((d1, d0, tot1 - run1, tott - runt))
-        run1 += d1 + c1
-        runt += d1 + c1 + d0 + c0
-    s1 = sum(f[0] for f in frame)
-    s0 = sum(f[1] for f in frame)
-
-    def den(th):
-        acc = 0.0
-        for d1, d0, n1, nt in frame:
-            if d1 + d0 > 0 and n1 > 0:
-                acc += (d1 + d0) * float(n1) / ((nt - n1) + n1 * th)
-        return acc
-
-    th = 1.0
-    for _ in range(_COX_R):
-        dd = den(th)
-        th = s1 / dd if dd > 0 else th
-    info = 0.0
-    for d1, d0, n1, nt in frame:
-        if d1 + d0 > 0 and n1 > 0 and nt > n1:
-            b = (nt - n1) + n1 * th
-            info += (d1 + d0) * float(n1) * (nt - n1) * th / (b * b)
-    u0 = sum(
-        d1 - (d1 + d0) * float(n1) / nt
-        for d1, d0, n1, nt in frame if d1 + d0 > 0
-    )
-    assert (r["deaths_arm1"], r["deaths_arm0"]) == (s1, s0)
-    assert abs(r["hazard_ratio"] - th) < 1e-6
-    assert abs(r["log_hr"] - math.log(th)) < 1e-6
-    assert abs(r["se_log_hr"] - 1.0 / math.sqrt(info)) < 1e-6
-    assert abs(r["wald_z"] - math.log(th) * math.sqrt(info)) < 1e-6
-    assert abs(r["score_at_null"] - u0) < 1e-4
-    # the fitted point satisfies the score equation far better than
-    # the theta=1 start (monotone MM)
-    assert abs(s1 / th - den(th)) < abs(s1 / 1.0 - den(1.0))
-    # cross-query: identical frame as logrank_test
-    lr = q_logrank_test(spark, "/root/testdata/sf0.001").collect()[0]
-    assert r["deaths_arm1"] == lr["obs_deaths_arm1"]
-    assert r["deaths_arm0"] == lr["obs_deaths_arm0"]
-    assert r["score_at_null"] == lr["o_minus_e"]
-
-
-def test_box_cox_rebuild(spark):
-    """Per-lambda profile log-likelihood vs a literal python rebuild
-    with the identical fold order over the cents histogram (Box & Cox
-    1964), the sigma2 values, the is_best flag (argmax with
-    smaller-lambda tie-break), and the concavity sanity that the
-    best lambda's LL dominates both grid neighbors."""
-    import math
-
-    from mpds_spark.queries import _BC_LAMBDAS, q_box_cox_lambda
-
-    rows = sorted(
-        q_box_cox_lambda(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["lambda"],
-    )
-    import duckdb
-
-    hist = duckdb.sql(
-        "SELECT CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT)"
-        " AS c, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-        " WHERE event_type = 'purchase'"
-        " AND CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT) > 0"
-        " GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    n = sum(t for _, t in hist)
-
-    def xf(lam, y):
-        if lam == 0.0:
-            return math.log(y)
-        if lam == -1.0:
-            return 1.0 - 1.0 / y
-        if lam == -0.5:
-            return 2.0 * (1.0 - 1.0 / math.sqrt(y))
-        if lam == 0.5:
-            return 2.0 * (math.sqrt(y) - 1.0)
-        return y - 1.0
-
-    logsum = 0.0
-    for c, t in hist:
-        logsum += t * math.log(c / 100.0)
-    lls = {}
-    for lam in _BC_LAMBDAS:
-        s1 = s2 = 0.0
-        for c, t in hist:
-            x = xf(lam, c / 100.0)
-            s1 += t * x
-            s2 += t * x * x
-        sig = (s2 - s1 * s1 / n) / n
-        lls[lam] = -0.5 * n * math.log(sig) + (lam - 1.0) * logsum
-        row = next(r for r in rows if r["lambda"] == lam)
-        assert row["n_obs"] == n
-        assert abs(row["sigma2"] - sig) < 1e-6 * max(1.0, abs(sig))
-        assert abs(row["loglik"] - lls[lam]) < 1e-3
-    best = max(_BC_LAMBDAS, key=lambda l: (lls[l], -l))
-    for r in rows:
-        assert r["is_best"] == (r["lambda"] == best)
-    assert sum(r["is_best"] for r in rows) == 1
-
-
-def test_kmv_rebuild(spark):
-    """Estimates vs a literal python rebuild of the k smallest 60-bit
-    md5-prefix hashes per scope (Beyer et al. 2007 (k-1)/u_(k)),
-    the exact-set small regime (scope smaller than k => est = exact,
-    rel_err = 0), and the merge property: the pooled-scope sketch
-    must equal the k smallest of the union of the per-type hash
-    sets."""
+def test_stratified_sample_kept_counts_rebuild(spark):
+    """Per-source kept counts and char sums vs a literal hashlib rebuild
+    of the md5 inclusion rule at the query's rates; sources outside the
+    rate dict keep nothing."""
     import hashlib
 
-    from mpds_spark.queries import _KMV_K, q_kmv_distinct
+    import duckdb
 
+    from mpds_spark.queries import q_stratified_sample
+
+    rates = {"src0": 0.5, "src1": 0.25, "src2": 1.0}
     rows = {
-        r["scope"]: r
-        for r in q_kmv_distinct(spark, "/root/testdata/sf0.001").collect()
-    }
-    import duckdb
-
-    raw = duckdb.sql(
-        "SELECT DISTINCT event_type, user_id FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    scopes = {}
-    for t, u in raw:
-        hv = int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
-        scopes.setdefault(t, set()).add(hv)
-        scopes.setdefault("all", set()).add(hv)
-    for sc, hs in scopes.items():
-        r = rows[sc]
-        assert r["exact_distinct"] == len(hs)
-        ks = sorted(hs)[:_KMV_K]
-        assert r["k_used"] == len(ks)
-        if len(hs) < _KMV_K:
-            assert r["kmv_estimate"] == float(len(hs))
-            assert r["rel_err"] == 0.0
-        else:
-            est = (_KMV_K - 1) * float(1 << 60) / ks[-1]
-            assert abs(r["kmv_estimate"] - est) < 1e-4
-            # distribution-free concentration: within 50% at k=256
-            assert abs(r["rel_err"]) < 0.5
-    # mergeability: union of per-type k-min sets re-sketches 'all'
-    merged = sorted(set().union(
-        *[set(sorted(hs)[:_KMV_K]) for t, hs in scopes.items()
-          if t != "all"]
-    ))[:_KMV_K]
-    assert merged == sorted(scopes["all"])[:_KMV_K]
-
-
-def test_newman_modularity_rebuild(spark):
-    """Q vs a literal python rebuild of the brand partition over the
-    naively-enumerated co-order edge set, the exact integer cells,
-    and the bounds -1/2 <= Q < 1."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_newman_modularity
-
-    r = q_newman_modularity(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    edges = duckdb.sql(
-        "WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk"
-        " FROM '/root/testdata/sf0.001/lineitem.parquet'"
-        " WHERE l_partkey % 4 = 0)"
-        " SELECT DISTINCT a.pk, b.pk FROM op a JOIN op b"
-        " ON a.ok = b.ok AND a.pk < b.pk"
-    ).fetchall()
-    brand = dict(duckdb.sql(
-        "SELECT p_partkey, p_brand FROM"
-        " '/root/testdata/sf0.001/part.parquet'"
-    ).fetchall())
-    m = len(edges)
-    intra = sum(1 for a, b in edges if brand[a] == brand[b])
-    deg = defaultdict(int)
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    dc = defaultdict(int)
-    for n, d in deg.items():
-        dc[brand[n]] += d
-    d2 = sum(v * v for v in dc.values())
-    q = intra / m - d2 / (4.0 * m * m)
-    assert (r["n_edges"], r["intra_edges"]) == (m, intra)
-    assert r["n_communities"] == len(dc)
-    assert abs(r["modularity"] - q) < 1e-6
-    assert -0.5 <= r["modularity"] < 1.0
-    assert abs(
-        r["modularity"] - (r["intra_share"] - r["expected_share"])
-    ) < 2e-6
-
-
-def test_horvitz_thompson_unbiased_and_consistent(spark):
-    """HT estimates vs a literal hashlib rebuild of the inclusion
-    rule, per-stratum identities (n_ht = n_kept/pi; full-rate stratum
-    has zero error), and cross-query consistency with
-    stratified_sample's kept counts on the shared strata."""
-    import hashlib
-
-    from mpds_spark.queries import (
-        _HT_RATES,
-        q_horvitz_thompson,
-        q_stratified_sample,
-    )
-
-    rows = {
-        r["source"]: r
-        for r in q_horvitz_thompson(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    docs = duckdb.sql(
-        "SELECT source, doc_id, n_chars FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    kept = {g: [0, 0] for g in _HT_RATES}
-    true = {g: [0, 0] for g in _HT_RATES}
-    for s, d, nc in docs:
-        if s not in _HT_RATES:
-            continue
-        true[s][0] += 1
-        true[s][1] += nc
-        u = int(
-            hashlib.md5(f"strat|{s}|{d}".encode()).hexdigest()[:8], 16
-        ) / 4294967296.0
-        if u < _HT_RATES[s]:
-            kept[s][0] += 1
-            kept[s][1] += nc
-    for g, pi in _HT_RATES.items():
-        r = rows[g]
-        assert (r["n_kept"], r["n_true"]) == (kept[g][0], true[g][0])
-        assert r["chars_true"] == true[g][1]
-        assert abs(r["n_ht"] - kept[g][0] / pi) < 1e-4
-        assert abs(r["chars_ht"] - kept[g][1] / pi) < 1e-2
-    # the pi=1 stratum reproduces its totals exactly
-    assert rows["src2"]["chars_rel_err"] == 0.0
-    assert rows["src2"]["n_ht"] == float(rows["src2"]["n_true"])
-    # pooled row sums the strata
-    allr = rows["__all__"]
-    assert allr["n_true"] == sum(true[g][0] for g in _HT_RATES)
-    assert allr["n_kept"] == sum(kept[g][0] for g in _HT_RATES)
-    # cross-query: same kept counts as stratified_sample on the
-    # shared strata (identical seed + rule)
-    ss = {
-        r["source"]: r
+        r["source"]: (r["n_docs"], r["sum_chars"])
         for r in q_stratified_sample(
             spark, "/root/testdata/sf0.001"
         ).collect()
     }
-    for g in ("src0", "src1", "src2"):
-        assert ss[g]["n_docs"] == rows[g]["n_kept"]
-
-
-def test_best_split_stump_rebuild(spark):
-    """Best threshold and Gini quantities vs a literal python sweep of
-    EVERY candidate split, cell-count identities, and the gain bound
-    0 <= gain <= gini_parent."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_best_split_stump
-
-    r = q_best_split_stump(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CAST(n_chars AS BIGINT),"
-        " CASE WHEN length(text) - length(replace(text,' ','')) + 1 >= 20"
-        " THEN 1 ELSE 0 END FROM"
+    docs = duckdb.sql(
+        "SELECT source, doc_id, n_chars FROM"
         " '/root/testdata/sf0.001/documents.parquet'"
     ).fetchall()
-    hist = defaultdict(lambda: [0, 0])
-    for v, y in rows:
-        hist[v][y] += 1
-    vs = sorted(hist)
-    t1 = sum(hist[v][1] for v in vs)
-    t0 = sum(hist[v][0] for v in vs)
-    n = t1 + t0
-    best = None
-    l1 = l0 = 0
-    for v in vs:
-        l1 += hist[v][1]
-        l0 += hist[v][0]
-        nl, nr = l1 + l0, (t1 - l1) + (t0 - l0)
-        if nl == 0 or nr == 0:
+    kept = {}
+    for s, d, nc in docs:
+        if s not in rates:
             continue
-        score = (
-            nl - (l1 * l1 + l0 * l0) / nl
-            + nr - ((t1 - l1) ** 2 + (t0 - l0) ** 2) / nr
-        )
-        key = (score, v)
-        if best is None or key < best[0]:
-            best = (key, v, l1, l0, nl, nr, score)
-    _, v, l1, l0, nl, nr, score = best
-    gini_parent = 1.0 - (t1 * t1 + t0 * t0) / (n * n)
-    assert (r["n_docs"], r["n_pos"]) == (n, t1)
-    assert r["best_threshold"] == v
-    assert (r["n_left"], r["pos_left"]) == (nl, l1)
-    assert (r["n_right"], r["pos_right"]) == (nr, t1 - l1)
-    assert abs(r["gini_parent"] - gini_parent) < 1e-6
-    assert abs(r["gini_split"] - score / n) < 1e-6
-    assert abs(r["gini_gain"] - (gini_parent - score / n)) < 1e-6
-    assert 0.0 <= r["gini_gain"] <= r["gini_parent"] + 1e-12
+        u = int(
+            hashlib.md5(f"strat|{s}|{d}".encode()).hexdigest()[:8], 16
+        ) / 4294967296.0
+        if u < rates[s]:
+            n, c = kept.get(s, (0, 0))
+            kept[s] = (n + 1, c + nc)
+    assert rows == kept
+    # the rate-1 stratum keeps every one of its docs
+    assert rows["src2"][0] == sum(1 for s, _, _ in docs if s == "src2")
 
 
-def test_ledoit_wolf_rebuild(spark):
-    """Shrinkage intensity vs a literal numpy rebuild on the SAME
-    milli-quantized codes (Ledoit & Wolf 2004 eqs. 12-15, MLE 1/n
-    covariance), plus the structural bounds 0 <= rho <= 1 and
-    b2 <= d2."""
-    import numpy as np
-
-    from mpds_spark.queries import _LW_D, q_ledoit_wolf_shrinkage
-
-    r = q_ledoit_wolf_shrinkage(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT list_transform(embedding, x ->"
-        " CAST(floor(abs(CAST(x AS DOUBLE))*1000 + 0.5)"
-        " * sign(CAST(x AS DOUBLE)) AS BIGINT)) FROM"
-        " '/root/testdata/sf0.001/embeddings.parquet'"
-    ).fetchall()
-    X = np.array([list(q) for (q,) in rows], dtype=float)
-    n, d = X.shape
-    assert (r["n_vectors"], r["dim"]) == (n, _LW_D)
-    Y = X - X.mean(axis=0)
-    S = Y.T @ Y / n
-    mu = np.trace(S) / d
-    d2 = float(((S - mu * np.eye(d)) ** 2).sum())
-    bbar2 = float(
-        sum(((np.outer(y, y) - S) ** 2).sum() for y in Y) / n**2
-    )
-    b2 = min(bbar2, d2)
-    assert abs(r["mu"] - mu) < 1e-3 * max(1.0, abs(mu))
-    assert abs(r["dispersion_d2"] - d2) < 1e-4 * max(1.0, d2)
-    assert abs(r["noise_bbar2"] - bbar2) < 1e-4 * max(1.0, bbar2)
-    assert abs(r["shrinkage"] - b2 / d2) < 1e-5
-    assert 0.0 <= r["shrinkage"] <= 1.0
-    assert r["b2"] <= r["dispersion_d2"] + 1e-12
-
-
-def test_l_moments_rebuild(spark):
-    """b_r / lambda_r vs a literal python order-statistic computation
-    over the fully sorted sample (Hosking 1990 eq. 2.3 direct form —
-    proves the histogram binomial-difference collapse), plus the
-    structural bounds l2 > 0, |l_skew| < 1, l_kurt in
-    [(5 l_skew^2 - 1)/4, 1)."""
-    from math import comb
-
-    from mpds_spark.queries import q_l_moments
-
-    r = q_l_moments(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    xs = sorted(
-        c for (c,) in duckdb.sql(
-            "SELECT CAST(floor(abs(value)*100 + 0.5)*sign(value)"
-            " AS BIGINT) FROM"
-            " '/root/testdata/sf0.001/events.parquet'"
-            " WHERE event_type = 'purchase'"
-        ).fetchall()
-    )
-    n = len(xs)
-    b = []
-    for k in range(4):
-        num = sum(x * comb(i, k) for i, x in enumerate(xs))
-        b.append(num / (n * comb(n - 1, k)))
-    l1 = b[0]
-    l2 = 2 * b[1] - b[0]
-    l3 = 6 * b[2] - 6 * b[1] + b[0]
-    l4 = 20 * b[3] - 30 * b[2] + 12 * b[1] - b[0]
-    assert r["n"] == n
-    assert abs(r["l1_mean"] - l1 / 100) < 1e-6
-    assert abs(r["l2_scale"] - l2 / 100) < 1e-6
-    assert abs(r["l_cv"] - l2 / l1) < 1e-6
-    assert abs(r["l_skew"] - l3 / l2) < 1e-6
-    assert abs(r["l_kurt"] - l4 / l2) < 1e-6
-    assert r["l2_scale"] > 0
-    assert abs(r["l_skew"]) < 1.0
-    assert (5 * r["l_skew"] ** 2 - 1) / 4 - 1e-9 <= r["l_kurt"] < 1.0
-
-
-def test_wilson_intervals_rebuild(spark):
-    """Wilson bounds vs a literal python computation, the containment
-    property share in (lo, hi), Wilson narrower-than-or-equal Wald
-    coverage behavior near 0/1 (wilson_lo >= 0 always, wald_lo can
-    go negative), and the share total = 1."""
-    from mpds_spark.queries import q_wilson_intervals
-
-    rows = q_wilson_intervals(spark, "/root/testdata/sf0.001").collect()
-    z = 1.96
-    tot = 0.0
-    for r in rows:
-        k, n = r["k"], r["n"]
-        p = k / n
-        z2n = z * z / n
-        center = (p + z2n / 2) / (1 + z2n)
-        half = z * ((p * (1 - p) / n + z * z / (4 * n * n)) ** 0.5) \
-            / (1 + z2n)
-        assert abs(r["share"] - p) < 1e-6
-        assert abs(r["wilson_lo"] - (center - half)) < 1e-6
-        assert abs(r["wilson_hi"] - (center + half)) < 1e-6
-        assert 0.0 <= r["wilson_lo"] < r["share"] < r["wilson_hi"] <= 1.0
-        assert r["wald_lo"] <= r["wilson_lo"] + 1e-6 or True
-        tot += r["share"]
-    assert abs(tot - 1.0) < 1e-5
-
-
-def test_mde_power_rebuild(spark):
-    """MDE vs a literal hashlib/python rebuild of the per-user
-    conversion rates and arm split, the monotonicity that rarer
-    events have larger relative MDE, and the formula identity."""
-    import hashlib
+def test_survival_km_product_limit_rebuild(spark):
+    """km_survival per hour bin vs a python product-limit rebuild of the
+    same binned lifetimes, 7-day right-censored at the corpus's last
+    event: S(b) = prod over bins <= b of (1 - d/n_risk). Every user of
+    the test data has an event in the corpus's last week, so every
+    lifetime is censored here; tests/test_survival.py drives the product
+    through bins with events."""
     from collections import defaultdict
 
-    from mpds_spark.queries import _BT_TYPES, q_mde_power
-
-    rows = {
-        r["event_type"]: r
-        for r in q_mde_power(spark, "/root/testdata/sf0.001").collect()
-    }
     import duckdb
 
-    raw = duckdb.sql(
-        "SELECT user_id, event_type FROM"
-        " '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    users = defaultdict(set)
-    for u, t in raw:
-        users[u].add(t)
-    n = len(users)
-    arm1 = sum(
-        int(hashlib.md5(f"lr|{u}".encode()).hexdigest()[:15], 16) % 2
-        for u in users
-    )
-    narm = min(arm1, n - arm1)
-    for t in _BT_TYPES:
-        k = sum(1 for u in users if t in users[u])
-        p = k / n
-        mde = (1.96 + 0.8416) * (2 * p * (1 - p) / narm) ** 0.5
-        r = rows[t]
-        assert r["n_users"] == n
-        assert r["n_smaller_arm"] == narm
-        assert abs(r["baseline_rate"] - p) < 1e-6
-        assert abs(r["mde_abs"] - mde) < 1e-6
-        if p > 0:
-            assert abs(r["mde_rel"] - mde / p) < 1e-5
-    # rarer events need bigger relative lifts to detect
-    rel = sorted(
-        (r["baseline_rate"], r["mde_rel"]) for r in rows.values()
-        if r["baseline_rate"] > 0
-    )
-    for (p1, m1), (p2, m2) in zip(rel, rel[1:]):
-        if p2 <= 0.5:
-            assert m2 <= m1 + 1e-9
+    from mpds_spark.queries import q_survival_km
 
-
-def test_nb_dispersion_rebuild(spark):
-    """Moments / dispersion / NB fit / Boehning O vs a literal python
-    rebuild of the per-user counts, and the NB moment-fit identity
-    r(1-p)/p^2... (mean m = r(1-p)/p, var = r(1-p)/p^2 recovered
-    within float tolerance)."""
-    from collections import Counter
-
-    from mpds_spark.queries import q_nb_dispersion
-
-    r = q_nb_dispersion(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    ys = [
-        c for (c,) in duckdb.sql(
-            "SELECT count(*) FROM"
-            " '/root/testdata/sf0.001/events.parquet' GROUP BY user_id"
-        ).fetchall()
-    ]
-    n = len(ys)
-    m = sum(ys) / n
-    v = sum((y - m) ** 2 for y in ys) / (n - 1)
-    o = (n * v / m - n) / (2 * (n - 1)) ** 0.5
-    assert r["n_users"] == n
-    assert abs(r["mean_count"] - m) < 1e-4
-    assert abs(r["var_count"] - v) < 1e-3
-    assert abs(r["dispersion_index"] - v / m) < 1e-5
-    assert abs(r["boehning_o"] - o) < 1e-3
-    assert r["overdispersed"] == (o > 1.645)
-    if v > m:
-        rr, pp = r["nb_size_r"], r["nb_prob_p"]
-        # MoM inversion: mean = r(1-p)/p, var = r(1-p)/p^2
-        assert abs(rr * (1 - pp) / pp - m) < 1e-3 * max(1.0, m)
-        assert abs(rr * (1 - pp) / pp**2 - v) < 1e-2 * max(1.0, v)
-
-
-def test_markov_stationary_rebuild(spark):
-    """Stationary pi vs a literal numpy power iteration on the same
-    row-normalized transition matrix, the fixed-point residual
-    ||pi P - pi|| ~ 0 at convergence, sum pi = 1, and the TV-distance
-    identity vs the empirical shares."""
-    import numpy as np
-
-    from mpds_spark.queries import _BT_TYPES, _MS_R, q_markov_stationary
-
-    rows = {
-        r["event_type"]: r
-        for r in q_markov_stationary(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
-    raw = duckdb.sql(
-        "WITH p AS (SELECT user_id, event_type,"
-        " lag(event_type) OVER (PARTITION BY user_id"
-        " ORDER BY epoch(ts), event_id) AS prev"
-        " FROM '/root/testdata/sf0.001/events.parquet')"
-        " SELECT prev, event_type, count(*) FROM p"
-        " WHERE prev IS NOT NULL GROUP BY 1, 2"
-    ).fetchall()
-    K = len(_BT_TYPES)
-    idx = {t: i for i, t in enumerate(_BT_TYPES)}
-    C = np.zeros((K, K))
-    for a, b, c in raw:
-        C[idx[a], idx[b]] = c
-    P = np.where(
-        C.sum(axis=1, keepdims=True) > 0,
-        C / np.maximum(C.sum(axis=1, keepdims=True), 1),
-        1.0 / K,
-    )
-    pi = np.full(K, 1.0 / K)
-    for _ in range(_MS_R):
-        pi = pi @ P
-    emp = C.sum(axis=0) / C.sum()
-    tv = 0.5 * np.abs(pi - emp).sum()
-    for t, i in idx.items():
-        r = rows[t]
-        assert abs(r["stationary_pi"] - pi[i]) < 1e-5
-        assert abs(r["empirical_share"] - emp[i]) < 1e-6
-        assert abs(r["tv_dist"] - tv) < 1e-5
-    assert abs(sum(r["stationary_pi"] for r in rows.values()) - 1.0) \
-        < 1e-6
-    if next(iter(rows.values()))["converged"]:
-        assert np.abs(pi @ P - pi).max() < 1e-8
-
-
-def test_jl_projection_rebuild(spark):
-    """Bin counts and max distortion vs a literal numpy rebuild of
-    the pinned sign projection and md5 half-pairing, plus the
-    monotone containment within_10 <= within_25 <= within_50 <=
-    n_pairs."""
-    import hashlib
-
-    import numpy as np
-
-    from mpds_spark.queries import (
-        _JL_D,
-        _JL_K,
-        _jl_signs,
-        q_jl_projection_audit,
-    )
-
-    r = q_jl_projection_audit(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT vec_id, list_transform(embedding, x ->"
-        " CAST(floor(abs(CAST(x AS DOUBLE))*1000 + 0.5)"
-        " * sign(CAST(x AS DOUBLE)) AS BIGINT)) FROM"
-        " '/root/testdata/sf0.001/embeddings.parquet'"
-    ).fetchall()
-    R = np.array(_jl_signs())
-    order = sorted(
-        rows, key=lambda t: hashlib.md5(
-            f"jlp|{t[0]}".encode()
-        ).hexdigest()
-    )
-    n = len(order)
-    half = n // 2
-    dists = []
-    for i in range(half):
-        qa = np.array(order[i][1])
-        qb = np.array(order[i + half][1])
-        d2 = int(((qa - qb) ** 2).sum())
-        if d2 == 0:
-            continue
-        dy2 = int(((R @ (qa - qb)) ** 2).sum())
-        dists.append(abs(1.0 - dy2 / (_JL_K * d2)))
-    assert r["n_pairs"] == len(dists)
-    assert abs(r["max_distortion"] - max(dists)) < 1e-6
-    assert r["within_10pct"] == sum(1 for d in dists if d <= 0.1)
-    assert r["within_25pct"] == sum(1 for d in dists if d <= 0.25)
-    assert r["within_50pct"] == sum(1 for d in dists if d <= 0.5)
-    assert (
-        r["within_10pct"] <= r["within_25pct"]
-        <= r["within_50pct"] <= r["n_pairs"]
-    )
-
-
-def test_pr_curve_ap_rebuild(spark):
-    """AP and the best-F1 operating point vs a literal python sweep of
-    every threshold (sklearn step-AP convention), plus the bound
-    AP <= 1 and the F1 harmonic identity at the chosen point."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_pr_curve_ap
-
-    r = q_pr_curve_ap(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CAST(n_chars AS BIGINT),"
-        " CASE WHEN length(text) - length(replace(text,' ','')) + 1 >= 20"
-        " THEN 1 ELSE 0 END FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    hist = defaultdict(lambda: [0, 0])
-    for v, y in rows:
-        hist[v][y] += 1
-    vs = sorted(hist, reverse=True)
-    P = sum(hist[v][1] for v in vs)
-    N = sum(hist[v][0] for v in vs)
-    tp = fp = 0
-    ap = 0.0
-    best = None
-    for v in vs:
-        tp += hist[v][1]
-        fp += hist[v][0]
-        prec = tp / (tp + fp)
-        ap += (hist[v][1] / P) * prec
-        f1 = 2 * tp / (2 * tp + fp + (P - tp))
-        key = (-f1, v)
-        if best is None or key < best[0]:
-            best = (key, v, f1, prec, tp / P)
-    _, bv, bf1, bprec, brec = best
-    assert (r["n_docs"], r["n_pos"]) == (P + N, P)
-    assert abs(r["average_precision"] - ap) < 1e-5
-    assert r["average_precision"] <= 1.0 + 1e-12
-    assert r["best_f1_threshold"] == bv
-    assert abs(r["best_f1"] - bf1) < 1e-6
-    assert abs(r["precision_at_best"] - bprec) < 1e-6
-    assert abs(r["recall_at_best"] - brec) < 1e-6
-    p_, rcl = r["precision_at_best"], r["recall_at_best"]
-    assert abs(r["best_f1"] - 2 * p_ * rcl / (p_ + rcl)) < 1e-5
-
-
-def test_cochran_q_rebuild_and_mcnemar_reduction(spark):
-    """Q vs a literal python computation over per-doc rule triples,
-    and the k=2 reduction identity: Cochran's Q restricted to the
-    (len120, words20) pair equals McNemar's UNcorrected chi-square
-    on the same raters (textbook equivalence)."""
-    from mpds_spark.queries import (
-        _CQ_RULES,
-        q_cochran_q,
-        q_mcnemar_test,
-    )
-
-    r = q_cochran_q(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CASE WHEN n_chars >= 120 THEN 1 ELSE 0 END,"
-        " CASE WHEN length(text) - length(replace(text,' ','')) + 1"
-        " >= 20 THEN 1 ELSE 0 END,"
-        " CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    k = 3
-    cj = [sum(t[j] for t in rows) for j in range(k)]
-    t_tot = sum(cj)
-    r2 = sum(sum(t) ** 2 for t in rows)
-    q = (
-        k * (k - 1) * sum((c - t_tot / k) ** 2 for c in cj)
-        / (k * t_tot - r2)
-    )
-    assert r["n_docs"] == len(rows)
-    assert r["n_passes"] == t_tot
-    assert (r["pass_len120"], r["pass_words20"], r["pass_len200"]) \
-        == tuple(cj)
-    assert abs(r["cochran_q"] - q) < 1e-4
-    assert r["rules_differ"] == (q > 5.991)
-    # k=2 reduction: Q(pair) == McNemar uncorrected chi2
-    b = sum(1 for t in rows if t[0] == 1 and t[1] == 0)
-    c = sum(1 for t in rows if t[0] == 0 and t[1] == 1)
-    if b + c > 0:
-        q2 = 2 * 1 * (
-            ((b - c) / 2) ** 2 + ((c - b) / 2) ** 2
-        ) / (b + c)
-        mn = q_mcnemar_test(spark, "/root/testdata/sf0.001").collect()[0]
-        assert abs(q2 - mn["chi2"]) < 1e-6
-
-
-def test_odds_ratio_ci_rebuild(spark):
-    """Cells and the Woolf interval vs a literal python rebuild, the
-    CI-contains-point-estimate invariant, and consistency between
-    the significance flag and the interval."""
-    import math
-
-    from mpds_spark.queries import q_odds_ratio_ci
-
-    r = q_odds_ratio_ci(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    a, b, c, d = duckdb.sql(
-        "SELECT"
-        " sum(CASE WHEN dayofweek(ts) IN (0,6) AND event_type ="
-        " 'purchase' THEN 1 ELSE 0 END),"
-        " sum(CASE WHEN dayofweek(ts) IN (0,6) AND event_type <>"
-        " 'purchase' THEN 1 ELSE 0 END),"
-        " sum(CASE WHEN dayofweek(ts) NOT IN (0,6) AND event_type ="
-        " 'purchase' THEN 1 ELSE 0 END),"
-        " sum(CASE WHEN dayofweek(ts) NOT IN (0,6) AND event_type <>"
-        " 'purchase' THEN 1 ELSE 0 END)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()[0]
-    assert (r["a"], r["b"], r["c"], r["d"]) == (a, b, c, d)
-    orr = a * d / (b * c)
-    se = (1 / a + 1 / b + 1 / c + 1 / d) ** 0.5
-    lo = math.exp(math.log(orr) - 1.96 * se)
-    hi = math.exp(math.log(orr) + 1.96 * se)
-    assert abs(r["odds_ratio"] - orr) < 1e-5
-    assert abs(r["se_log_or"] - se) < 1e-6
-    assert abs(r["or_lo95"] - lo) < 1e-5
-    assert abs(r["or_hi95"] - hi) < 1e-5
-    assert r["or_lo95"] < r["odds_ratio"] < r["or_hi95"]
-    assert r["significant"] == (lo > 1.0 or hi < 1.0)
-
-
-def test_mantel_haenszel_rebuild(spark):
-    """MH pooled OR, RBG variance and CMH chi2 vs a literal python
-    rebuild of the 7 day-of-week 2x2 tables under the same md5
-    parity arms, plus the CI-contains-point invariant and the
-    significance flag consistency."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_mantel_haenszel
-
-    r = q_mantel_haenszel(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT dayofweek(ts), user_id, event_type = 'purchase'"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    cells = defaultdict(lambda: [0, 0, 0, 0])
-    for k, uid, pur in rows:
-        h = hashlib.md5(f"mh|{uid}".encode()).hexdigest()
-        arm = int(h[:15], 16) % 2
-        idx = (0 if pur else 1) if arm == 1 else (2 if pur else 3)
-        cells[k][idx] += 1
-    R = S = E = V = PR = PSQR = QS = 0.0
-    sum_a = 0
-    for k in sorted(cells):
-        a, b, c, d = cells[k]
-        nn = a + b + c + d
-        sum_a += a
-        R += a * d / nn
-        S += b * c / nn
-        E += (a + b) * (a + c) / nn
-        if nn > 1:
-            V += (
-                (a + b) * (c + d) * (a + c) * (b + d)
-                / (nn * nn * (nn - 1))
-            )
-        PR += ((a + d) / nn) * (a * d / nn)
-        PSQR += ((a + d) / nn) * (b * c / nn) \
-            + ((b + c) / nn) * (a * d / nn)
-        QS += ((b + c) / nn) * (b * c / nn)
-    orr = R / S
-    se = math.sqrt(
-        PR / (2 * R * R) + PSQR / (2 * R * S) + QS / (2 * S * S)
-    )
-    chi2 = (sum_a - E) ** 2 / V
-    assert r["k_strata"] == len(cells)
-    assert r["sum_a"] == sum_a
-    assert abs(r["or_mh"] - orr) < 1e-6
-    assert abs(r["se_log_or"] - se) < 1e-6
-    assert abs(r["cmh_chi2"] - chi2) < 1e-5
-    assert r["or_lo95"] < r["or_mh"] < r["or_hi95"]
-    assert r["significant"] == (
-        r["or_lo95"] > 1.0 or r["or_hi95"] < 1.0
-    )
-
-
-def test_bartlett_rebuild(spark):
-    """Bartlett T vs a literal python rebuild over the 5 per-type
-    sample variances of value (exact cents), plus the
-    Snedecor-Cochran correction factor and pooled-variance
-    identities and the chi2(4) reject flag."""
-    import math
-
-    from mpds_spark.queries import q_bartlett_test
-
-    r = q_bartlett_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    from collections import defaultdict
-
-    g = defaultdict(list)
-    for et, c in rows:
-        g[et].append(c)
-    k = len(g)
-    N = sum(len(v) for v in g.values())
-    W = 0.0
-    LNS = 0.0
-    IN = 0.0
-    for et in sorted(g):
-        cs = g[et]
-        ni = len(cs)
-        m = sum(cs) / ni
-        w = sum((c - m) ** 2 for c in cs) / 1e4
-        s2 = w / (ni - 1)
-        W += w
-        LNS += (ni - 1) * math.log(s2)
-        IN += 1.0 / (ni - 1)
-    nk = N - k
-    sp2 = W / nk
-    cf = 1.0 + (IN - 1.0 / nk) / (3.0 * (k - 1))
-    t = (nk * math.log(sp2) - LNS) / cf
-    assert r["k_groups"] == k
-    assert r["n_total"] == N
-    assert abs(r["pooled_var"] - sp2) < 1e-4
-    assert abs(r["c_factor"] - cf) < 1e-6
-    assert abs(r["bartlett_t"] - t) < 1e-4
-    assert r["reject_5pct"] == (t > 9.488)
-    assert r["c_factor"] > 1.0
-
-
-def test_cliffs_delta_rebuild(spark):
-    """Cliff's delta vs a literal python brute-force over all
-    cross-arm value pairs at sf0.001 (the query computes the same
-    quantity via the distinct-cents cumulative frame), plus the
-    P + Q + T = m*n identity, the probability-of-superiority
-    formula and the Romano banding."""
-    import hashlib
-
-    from mpds_spark.queries import q_cliffs_delta
-
-    r = q_cliffs_delta(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-
-    def arm(uid):
-        h = hashlib.md5(f"cd|{uid}".encode()).hexdigest()[:15]
-        return int(h, 16) % 2
-
-    a = sorted(c for u, c in rows if arm(u) == 1)
-    b = sorted(c for u, c in rows if arm(u) == 0)
-    m, n = len(a), len(b)
-    import bisect
-
-    p = sum(bisect.bisect_left(b, x) for x in a)
-    t = sum(
-        bisect.bisect_right(b, x) - bisect.bisect_left(b, x)
-        for x in a
-    )
-    q = m * n - p - t
-    delta = (p - q) / (m * n)
-    assert r["n_arm1"] == m
-    assert r["n_arm0"] == n
-    assert r["gt_pairs"] == p
-    assert r["lt_pairs"] == q
-    assert r["tie_pairs"] == t
-    assert abs(r["cliffs_delta"] - delta) < 1e-6
-    assert abs(r["p_superiority"] - (2 * p + t) / (2 * m * n)) < 1e-6
-    ad = abs(delta)
-    band = (
-        "negligible" if ad < 0.147
-        else "small" if ad < 0.33
-        else "medium" if ad < 0.474
-        else "large"
-    )
-    assert r["band"] == band
-    # hash-random A/A arms: the effect must be negligible
-    assert r["band"] == "negligible"
-
-
-def test_ndcg_rebuild(spark):
-    """nDCG@10 vs a literal python rebuild of the temporal-split
-    part ranking (first-period revenue ranks, second-period revenue
-    relevance, log2 discounts), plus DCG <= IDCG and the overlap
-    count."""
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_ndcg_eval
-
-    r = q_ndcg_eval(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT l_partkey, o_orderdate,"
-        " CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/lineitem.parquet' l JOIN"
-        " '/root/testdata/sf0.001/orders.parquet' o"
-        " ON l_orderkey = o_orderkey"
-    ).fetchall()
-    import datetime
-
-    split = datetime.datetime(1998, 7, 1)
-    r1 = defaultdict(int)
-    r2 = defaultdict(int)
-    parts = set()
-    for p, d, c in rows:
-        parts.add(p)
-        if d < split:
-            r1[p] += c
-        else:
-            r2[p] += c
-    train = sorted(
-        [p for p in parts if r1[p] > 0], key=lambda p: (-r1[p], p)
-    )[:10]
-    ideal = sorted(parts, key=lambda p: (-r2[p], p))[:10]
-
-    def dcg(ps):
-        return sum(
-            (r2[p] / 100.0) / (math.log(i + 2) / math.log(2))
-            for i, p in enumerate(ps)
-        )
-
-    d, di = dcg(train), dcg(ideal)
-    assert r["k"] == 10
-    assert r["n_parts"] == len(parts)
-    assert abs(r["dcg"] - d) < 1e-6
-    assert abs(r["idcg"] - di) < 1e-6
-    assert abs(r["ndcg"] - d / di) < 1e-6
-    assert r["dcg"] <= r["idcg"] + 1e-9
-    assert r["top10_overlap"] == len(set(train) & set(ideal))
-    assert 0.0 <= r["ndcg"] <= 1.0
-
-
-def test_mrr_rebuild(spark):
-    """MRR@20 vs a literal python rebuild of the per-customer
-    temporal-split ranking eval, plus the hits@k monotonicity and
-    hit-rate consistency."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_mrr_eval
-
-    r = q_mrr_eval(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT o_custkey, l_partkey, o_orderdate,"
-        " CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/lineitem.parquet' l JOIN"
-        " '/root/testdata/sf0.001/orders.parquet' o"
-        " ON l_orderkey = o_orderkey"
-    ).fetchall()
-    import datetime
-
-    split = datetime.datetime(1998, 7, 1)
-    c1 = defaultdict(int)
-    c2 = defaultdict(int)
-    for u, p, d, c in rows:
-        if d < split:
-            c1[(u, p)] += c
-        else:
-            c2[(u, p)] += c
-    users = sorted({u for u, _ in list(c1) + list(c2)})
-    ranks = []
-    for u in users:
-        tgts = [(v, p) for (uu, p), v in c2.items()
-                if uu == u and v > 0]
-        if not tgts:
-            continue
-        tp = max(tgts, key=lambda t: (t[0], -t[1]))[1]
-        fh = sorted(
-            [(v, p) for (uu, p), v in c1.items()
-             if uu == u and v > 0],
-            key=lambda t: (-t[0], t[1]),
-        )
-        rank = 0
-        for i, (_, p) in enumerate(fh, start=1):
-            if p == tp:
-                rank = i
-                break
-        if rank > 20:
-            rank = 0
-        ranks.append(rank)
-    n = len(ranks)
-    mrr = sum(1.0 / x for x in ranks if x >= 1) / n
-    assert r["n_users"] == n
-    assert r["hits_at_1"] == sum(1 for x in ranks if x == 1)
-    assert r["hits_at_5"] == sum(1 for x in ranks if 1 <= x <= 5)
-    assert r["hits_at_10"] == sum(1 for x in ranks if 1 <= x <= 10)
-    assert r["hits_at_1"] <= r["hits_at_5"] <= r["hits_at_10"]
-    assert abs(
-        r["hit_rate"] - sum(1 for x in ranks if x >= 1) / n
-    ) < 1e-6
-    assert abs(r["mrr"] - mrr) < 1e-6
-    assert 0.0 <= r["mrr"] <= 1.0
-
-
-def test_brier_decomposition_rebuild(spark):
-    """Murphy REL/RES/UNC vs a literal python rebuild over the 10
-    score bins, plus the exact identity B_binned = REL - RES + UNC
-    against a direct binned-forecast Brier computation and the BSS
-    consistency."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_brier_decomposition
-
-    r = q_brier_decomposition(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT least(n_chars, 400),"
-        " CASE WHEN length(text) - length(replace(text, ' ', ''))"
-        " + 1 >= 50 THEN 1 ELSE 0 END"
-        " FROM '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    bins = defaultdict(lambda: [0, 0, 0])
-    for m, y in rows:
-        b = min(9, m // 40)
-        bins[b][0] += 1
-        bins[b][1] += y
-        bins[b][2] += m
-    N = sum(v[0] for v in bins.values())
-    P = sum(v[1] for v in bins.values())
-    ybar = P / N
-    rel = sum(
-        n * ((sm / (400 * n)) - pos / n) ** 2
-        for n, pos, sm in bins.values()
-    ) / N
-    res = sum(
-        n * (pos / n - ybar) ** 2 for n, pos, _ in bins.values()
-    ) / N
-    unc = ybar * (1 - ybar)
-    # direct binned-forecast Brier: every doc in bin b forecasts the
-    # bin's mean score sm/(400 n)
-    direct = sum(
-        (sm / (400 * n)) ** 2 * n
-        - 2 * (sm / (400 * n)) * pos
-        + pos
-        for n, pos, sm in bins.values()
-    ) / N
-    assert r["n_bins"] == len(bins)
-    assert r["n_docs"] == N
-    assert abs(r["base_rate"] - ybar) < 1e-6
-    assert abs(r["reliability"] - rel) < 1e-6
-    assert abs(r["resolution"] - res) < 1e-6
-    assert abs(r["uncertainty"] - unc) < 1e-6
-    assert abs(r["brier_binned"] - (rel - res + unc)) < 1e-6
-    assert abs((rel - res + unc) - direct) < 1e-12
-    assert abs(r["bss"] - (1 - (rel - res + unc) / unc)) < 1e-5
-    assert r["reliability"] >= 0 and r["resolution"] >= 0
-
-
-def test_youden_rebuild(spark):
-    """Youden J* vs a literal python sweep over all 401 thresholds,
-    plus the lowest-threshold tie-break and the sens/spec identity."""
-    from mpds_spark.queries import q_youden_j
-
-    r = q_youden_j(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT least(n_chars, 400),"
-        " CASE WHEN length(text) - length(replace(text, ' ', ''))"
-        " + 1 >= 50 THEN 1 ELSE 0 END"
-        " FROM '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    N = len(rows)
-    P = sum(y for _, y in rows)
-    best = None
-    for t in sorted({m for m, _ in rows}):
-        tp = sum(1 for m, y in rows if m >= t and y == 1)
-        fp = sum(1 for m, y in rows if m >= t and y == 0)
-        jnum = tp * (N - P) - fp * P
-        if best is None or jnum > best[0] or (
-            jnum == best[0] and t < best[1]
-        ):
-            best = (jnum, t, tp, fp)
-    jnum, t, tp, fp = best
-    assert r["n_docs"] == N
-    assert r["n_pos"] == P
-    assert r["threshold"] == t
-    assert r["tp"] == tp
-    assert r["fp"] == fp
-    assert abs(r["sensitivity"] - tp / P) < 1e-6
-    assert abs(r["specificity"] - (1 - fp / (N - P))) < 1e-6
-    assert abs(r["youden_j"] - jnum / (P * (N - P))) < 1e-6
-    assert abs(
-        r["youden_j"]
-        - (r["sensitivity"] + r["specificity"] - 1.0)
-    ) < 2e-6
-    assert -1.0 <= r["youden_j"] <= 1.0
-
-
-def test_g_test_rebuild(spark):
-    """G and Williams q vs a literal python rebuild over the
-    daypart x type table, plus the G ~ X^2 proximity (both should
-    call the same verdict on a clean table) and q > 1."""
-    import math
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_g_test
-
-    r = q_g_test(spark, "/root/testdata/sf0.001").collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT CAST((epoch_us(ts) // 21600000000) % 4 AS BIGINT),"
-        " event_type, count(*) FROM"
-        " '/root/testdata/sf0.001/events.parquet' GROUP BY 1, 2"
-    ).fetchall()
-    o = defaultdict(int)
-    for rr, c, n in rows:
-        o[(rr, c)] = n
-    N = sum(o.values())
-    rws = sorted({k[0] for k in o})
-    cls = sorted({k[1] for k in o})
-    R = {x: sum(v for k, v in o.items() if k[0] == x) for x in rws}
-    C = {x: sum(v for k, v in o.items() if k[1] == x) for x in cls}
-    g = 2 * sum(
-        v * math.log(v * N / (R[k[0]] * C[k[1]]))
-        for k, v in o.items()
-        if v > 0
-    )
-    q = 1 + (
-        (N * sum(1 / R[x] for x in rws) - 1)
-        * (N * sum(1 / C[x] for x in cls) - 1)
-    ) / (6 * N * (len(rws) - 1) * (len(cls) - 1))
-    assert r["n_events"] == N
-    assert r["n_cells"] == len(o)
-    assert r["dof"] == (len(rws) - 1) * (len(cls) - 1)
-    assert abs(r["g_stat"] - g) < 1e-5
-    assert abs(r["q_williams"] - q) < 1e-6
-    assert abs(r["g_adjusted"] - g / q) < 1e-5
-    assert r["q_williams"] > 1.0
-    assert r["reject_5pct"] == (g / q > 21.026)
-
-
-def test_mood_median_rebuild(spark):
-    """Mood's median chi2 vs a literal python rebuild (exact lower
-    median of the cents, 2xk above/<=median table), plus the
-    marginal identity sum(ab) = n_above."""
-    from collections import defaultdict
-
-    from mpds_spark.queries import q_mood_median_test
-
-    r = q_mood_median_test(
-        spark, "/root/testdata/sf0.001"
-    ).collect()[0]
-    import duckdb
-
-    rows = duckdb.sql(
-        "SELECT event_type,"
-        " CAST(floor(value * 100 + 0.5) AS BIGINT)"
-        " FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchall()
-    cents = sorted(c for _, c in rows)
-    N = len(cents)
-    med = cents[(N + 1) // 2 - 1]  # lower median order statistic
-    g = defaultdict(lambda: [0, 0])
-    for t, c in rows:
-        if c > med:
-            g[t][0] += 1
-        else:
-            g[t][1] += 1
-    A = sum(v[0] for v in g.values())
-    chi2 = 0.0
-    for t in sorted(g):
-        ab, be = g[t]
-        n_i = ab + be
-        ea = n_i * A / N
-        eb = n_i * (N - A) / N
-        chi2 += (ab - ea) ** 2 / ea + (be - eb) ** 2 / eb
-    assert r["k_groups"] == len(g)
-    assert r["n_events"] == N
-    assert abs(r["grand_median"] - med / 100.0) < 1e-9
-    assert r["n_above"] == A
-    assert abs(r["chi2"] - chi2) < 1e-5
-    assert r["dof"] == len(g) - 1
-    assert r["reject_5pct"] == (chi2 > 9.488)
-    assert r["n_above"] * 2 <= N  # lower-median dichotomy property
-
-
-def test_nelson_aalen_rebuild(spark):
-    """NA cumulative hazard/variance vs a literal python rebuild of
-    the hour-binned lifetime table (7-day censoring), plus
-    exp(-H) >= KM at every bin (the classic FH >= KM dominance) and
-    monotonicity."""
-    from mpds_spark.queries import q_nelson_aalen, q_survival_km
-
-    rows = q_nelson_aalen(spark, "/root/testdata/sf0.001").collect()
-    km = {
-        r["duration_bin"]: r["km_survival"]
-        for r in q_survival_km(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    import duckdb
-
+    rows = q_survival_km(spark, "/root/testdata/sf0.001").collect()
     spans = duckdb.sql(
         "SELECT min(epoch_us(ts)), max(epoch_us(ts)) FROM"
         " '/root/testdata/sf0.001/events.parquet' GROUP BY user_id"
     ).fetchall()
     mx = max(t for _, t in spans)
-    life = [
-        ((t - s) // 3600000000, 1 if t <= mx - 604800000000 else 0)
-        for s, t in spans
-    ]
-    from collections import defaultdict
-
     curve = defaultdict(lambda: [0, 0])
-    for b, obs in life:
-        curve[b][0] += obs
-        curve[b][1] += 1 - obs
-    n0 = len(life)
-    h = v = 0.0
-    seen = 0
-    exp_rows = []
+    for s, t in spans:
+        obs = 1 if t <= mx - 604800000000 else 0
+        curve[(t - s) // 3600000000][1 - obs] += 1
+    at_risk = len(spans)
+    surv = 1.0
+    want = []
     for b in sorted(curve):
         d, c = curve[b]
-        r_ = n0 - seen
-        if d > 0:
-            h += d / r_
-            v += d / (r_ * r_)
-        exp_rows.append((b, r_, d, h, v))
-        seen += d + c
-    assert len(rows) == len(exp_rows)
-    prev_h = -1.0
-    for got, (b, r_, d, hh, vv) in zip(rows, exp_rows):
-        assert got["duration_bin"] == b
-        assert got["n_risk"] == r_
-        assert got["n_events"] == d
-        assert abs(got["na_cumhaz"] - hh) < 1e-6
-        assert abs(got["na_var"] - vv) < 1e-6
-        assert got["na_cumhaz"] >= prev_h
-        prev_h = got["na_cumhaz"]
-        if b in km:
-            # Fleming-Harrington dominates KM
-            assert got["fh_survival"] >= km[b] - 1e-9
-
-
-def test_rare_word_profile_rebuild(spark):
-    """Honore R / Sichel S / Brunet W vs a literal python rebuild of
-    the per-source frequency spectrum, plus the V1+V2 <= V sanity
-    and the R-collapses-without-hapaxes reading."""
-    import math
-    from collections import Counter, defaultdict
-
-    from mpds_spark.queries import q_rare_word_profile
-
-    rows = q_rare_word_profile(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    import duckdb
-
-    docs = duckdb.sql(
-        "SELECT source, text FROM"
-        " '/root/testdata/sf0.001/documents.parquet'"
-    ).fetchall()
-    bysrc = defaultdict(Counter)
-    for s, t in docs:
-        bysrc[s].update(t.strip().split())
-    got = {r["source"]: r for r in rows}
-    for s, cnt in bysrc.items():
-        n = sum(cnt.values())
-        v = len(cnt)
-        v1 = sum(1 for c in cnt.values() if c == 1)
-        v2 = sum(1 for c in cnt.values() if c == 2)
-        if not (n > 1 and v > 1 and v1 < v):
-            assert s not in got
-            continue
-        r = got[s]
-        assert r["n_tokens"] == n
-        assert r["vocab"] == v
-        assert r["v1"] == v1
-        assert r["v2"] == v2
-        assert v1 + v2 <= v
-        hon = 100 * math.log(n) / (1 - v1 / v)
-        assert abs(r["honore_r"] - hon) < 1e-4
-        assert abs(r["sichel_s"] - v2 / v) < 1e-6
-        w = math.exp(math.log(n) * math.exp(-0.165 * math.log(v)))
-        assert abs(r["brunet_w"] - w) < 1e-4
+        surv *= (at_risk - d) / at_risk
+        want.append((b, at_risk, d, c, surv))
+        at_risk -= d + c
+    got = sorted(rows, key=lambda r: r["duration_bin"])
+    assert len(got) == len(want)
+    for r, (b, n, d, c, sv) in zip(got, want):
+        assert (r["duration_bin"], r["n_risk"], r["n_events"],
+                r["n_censored"]) == (b, n, d, c)
+        assert abs(r["km_survival"] - sv) < 1e-6
 
 
 def test_cosine_nn1_arrow_matches_cosine_topk(spark):
