@@ -70,6 +70,22 @@ def entry(spark: SparkSession) -> DataFrame:
 # is mirror-EXACT at sf0.01 on final code (tools/check_correctness.py —
 # the same value gate; see BENCH/BASELINE.md closing record).
 _PRIORITY = [
+    # new in round 5 (eightieth batch — continuation session)
+    "rare_word_profile",
+    # new in round 5 (sixty-second batch — continuation session)
+    "odds_ratio_ci",
+    # new in round 5 (fifty-ninth batch — continuation session)
+    "nb_dispersion",
+    # new in round 5 (fifty-eighth batch — continuation session)
+    "wilson_intervals",
+    # new in round 5 (fifty-fourth batch — continuation session)
+    "best_split_stump",
+    # new in round 5 (fifty-first batch — continuation session)
+    "kmv_distinct",
+    # new in round 5 (forty-seventh batch — continuation session)
+    "mcnemar_test",
+    # new in round 5 (forty-third batch — continuation session)
+    "session_edit_distance",
     # new in round 5 (thirty-seventh batch — continuation session)
     "logrank_test",
     "segmented_trend",

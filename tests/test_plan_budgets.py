@@ -467,6 +467,32 @@ BUDGETS = {
     # segmented: ONE day agg + tiny 31-row candidate windows + argmin
     "segmented_trend": {"shuffle": 2, "python": 0, "cartesian": 0,
                         "bnlj": 0},
+    # edit distance: (user,day) agg + user lag window + histogram agg
+    "session_edit_distance": {"shuffle": 3, "python": 0,
+                              "cartesian": 0, "bnlj": 0},
+    # mcnemar: ONE corpus aggregate, nothing else
+    "mcnemar_test": {"shuffle": 1, "python": 0, "cartesian": 0,
+                     "bnlj": 0},
+    # kmv: stacked distinct + scope rank window (WindowGroupLimit
+    # heap, asserted below) + two scope aggs + 6-row join
+    "kmv_distinct": {"shuffle": 4, "python": 0, "cartesian": 0,
+                     "bnlj": 0},
+    # stump: histogram agg + tiny prefix window + TakeOrdered argmin
+    # (asserted below)
+    "best_split_stump": {"shuffle": 2, "python": 0, "cartesian": 0,
+                         "bnlj": 0},
+    # wilson: ONE type agg + tiny total window
+    "wilson_intervals": {"shuffle": 2, "python": 0, "cartesian": 0,
+                         "bnlj": 0},
+    # nb-dispersion: ONE user agg + ONE global agg
+    "nb_dispersion": {"shuffle": 2, "python": 0, "cartesian": 0,
+                      "bnlj": 0},
+    # odds-ratio: ONE corpus aggregate, nothing else
+    "odds_ratio_ci": {"shuffle": 1, "python": 0, "cartesian": 0,
+                      "bnlj": 0},
+    # rare-words: (source,word) agg + source re-agg
+    "rare_word_profile": {"shuffle": 2, "python": 0, "cartesian": 0,
+                          "bnlj": 0},
 }
 
 
@@ -484,6 +510,21 @@ def test_plan_budget(plans, name):
             f"{name}: {got} {node} nodes (budget {cap}) — the plan shape "
             f"regressed; see tools/plan_audit.py.\n{plan[:2000]}"
         )
+
+
+def test_stump_takeordered(plans):
+    """best_split_stump's argmin over the candidate frame must plan as
+    TakeOrderedAndProject — never a global sort of the distinct-value
+    histogram."""
+    assert "TakeOrderedAndProject" in plans["best_split_stump"]
+
+
+def test_kmv_windowgrouplimit(plans):
+    """kmv_distinct's per-scope k smallest must plan as a
+    WindowGroupLimit (per-partition top-k heap pushed below the
+    exchange) — at 10^12 rows a scope-rank without the pushed limit
+    sorts every hash in the scope."""
+    assert "WindowGroupLimit" in plans["kmv_distinct"]
 
 
 def test_topk_takeordered(plans):

@@ -1008,6 +1008,317 @@ def test_segmented_trend_rebuild(spark):
     assert 0.0 <= r["sse_reduction"] <= 1.0
 
 
+def test_session_edit_distance_brute_force(spark):
+    """Histogram vs a literal python DP-Levenshtein over the same
+    per-user-day initials strings."""
+    from mpds_spark.queries import q_session_edit_distance
+
+    got = {
+        r["edit_distance"]: r["n_pairs"]
+        for r in q_session_edit_distance(
+            spark, "/root/testdata/sf0.001"
+        ).collect()
+    }
+    import duckdb
+    from collections import Counter, defaultdict
+
+    rows = duckdb.sql(
+        "SELECT user_id, CAST(day(ts) AS BIGINT), ts, event_type FROM"
+        " '/root/testdata/sf0.001/events.parquet' ORDER BY user_id, ts"
+    ).fetchall()
+    days = defaultdict(str)
+    for u, d, _, et in rows:
+        days[(u, d)] += et[0]
+
+    def lev(a, b):
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(min(
+                    prev[j] + 1, cur[j - 1] + 1,
+                    prev[j - 1] + (ca != cb),
+                ))
+            prev = cur
+        return prev[-1]
+
+    by_user = defaultdict(list)
+    for (u, d), s in sorted(days.items()):
+        by_user[u].append((d, s))
+    want = Counter()
+    for u, lst in by_user.items():
+        lst.sort()
+        for (_, a), (_, b) in zip(lst, lst[1:]):
+            want[lev(a, b)] += 1
+    assert got == dict(want)
+
+
+def test_mcnemar_cells_and_consistency_with_kappa(spark):
+    """Discordant cells vs a direct python count, the chi-square
+    formulas, and cross-query consistency: McNemar's b/c must equal
+    cohens_kappa's off-diagonal cells on the same raters."""
+    from mpds_spark.queries import q_cohens_kappa, q_mcnemar_test
+
+    r = q_mcnemar_test(spark, "/root/testdata/sf0.001").collect()[0]
+    import duckdb
+
+    b, c = duckdb.sql(
+        "SELECT sum(CASE WHEN n_chars >= 120 AND"
+        " length(text) - length(replace(text,' ','')) + 1 < 20"
+        " THEN 1 ELSE 0 END),"
+        " sum(CASE WHEN n_chars < 120 AND"
+        " length(text) - length(replace(text,' ','')) + 1 >= 20"
+        " THEN 1 ELSE 0 END)"
+        " FROM '/root/testdata/sf0.001/documents.parquet'"
+    ).fetchall()[0]
+    assert (r["b_only_a"], r["c_only_b"]) == (b, c)
+    if b + c > 0:
+        assert abs(r["chi2"] - (b - c) ** 2 / (b + c)) < 1e-6
+        assert abs(
+            r["chi2_corrected"] - (abs(b - c) - 1) ** 2 / (b + c)
+        ) < 1e-6
+    kap = q_cohens_kappa(spark, "/root/testdata/sf0.001").collect()[0]
+    assert r["n_docs"] == kap["n_docs"]
+
+
+def test_kmv_rebuild(spark):
+    """Estimates vs a literal python rebuild of the k smallest 60-bit
+    md5-prefix hashes per scope (Beyer et al. 2007 (k-1)/u_(k)),
+    the exact-set small regime (scope smaller than k => est = exact,
+    rel_err = 0), and the merge property: the pooled-scope sketch
+    must equal the k smallest of the union of the per-type hash
+    sets."""
+    import hashlib
+
+    from mpds_spark.queries import _KMV_K, q_kmv_distinct
+
+    rows = {
+        r["scope"]: r
+        for r in q_kmv_distinct(spark, "/root/testdata/sf0.001").collect()
+    }
+    import duckdb
+
+    raw = duckdb.sql(
+        "SELECT DISTINCT event_type, user_id FROM"
+        " '/root/testdata/sf0.001/events.parquet'"
+    ).fetchall()
+    scopes = {}
+    for t, u in raw:
+        hv = int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
+        scopes.setdefault(t, set()).add(hv)
+        scopes.setdefault("all", set()).add(hv)
+    for sc, hs in scopes.items():
+        r = rows[sc]
+        assert r["exact_distinct"] == len(hs)
+        ks = sorted(hs)[:_KMV_K]
+        assert r["k_used"] == len(ks)
+        if len(hs) < _KMV_K:
+            assert r["kmv_estimate"] == float(len(hs))
+            assert r["rel_err"] == 0.0
+        else:
+            est = (_KMV_K - 1) * float(1 << 60) / ks[-1]
+            assert abs(r["kmv_estimate"] - est) < 1e-4
+            # distribution-free concentration: within 50% at k=256
+            assert abs(r["rel_err"]) < 0.5
+    # mergeability: union of per-type k-min sets re-sketches 'all'
+    merged = sorted(set().union(
+        *[set(sorted(hs)[:_KMV_K]) for t, hs in scopes.items()
+          if t != "all"]
+    ))[:_KMV_K]
+    assert merged == sorted(scopes["all"])[:_KMV_K]
+
+
+def test_best_split_stump_rebuild(spark):
+    """Best threshold and Gini quantities vs a literal python sweep of
+    EVERY candidate split, cell-count identities, and the gain bound
+    0 <= gain <= gini_parent."""
+    from collections import defaultdict
+
+    from mpds_spark.queries import q_best_split_stump
+
+    r = q_best_split_stump(spark, "/root/testdata/sf0.001").collect()[0]
+    import duckdb
+
+    rows = duckdb.sql(
+        "SELECT CAST(n_chars AS BIGINT),"
+        " CASE WHEN length(text) - length(replace(text,' ','')) + 1 >= 20"
+        " THEN 1 ELSE 0 END FROM"
+        " '/root/testdata/sf0.001/documents.parquet'"
+    ).fetchall()
+    hist = defaultdict(lambda: [0, 0])
+    for v, y in rows:
+        hist[v][y] += 1
+    vs = sorted(hist)
+    t1 = sum(hist[v][1] for v in vs)
+    t0 = sum(hist[v][0] for v in vs)
+    n = t1 + t0
+    best = None
+    l1 = l0 = 0
+    for v in vs:
+        l1 += hist[v][1]
+        l0 += hist[v][0]
+        nl, nr = l1 + l0, (t1 - l1) + (t0 - l0)
+        if nl == 0 or nr == 0:
+            continue
+        score = (
+            nl - (l1 * l1 + l0 * l0) / nl
+            + nr - ((t1 - l1) ** 2 + (t0 - l0) ** 2) / nr
+        )
+        key = (score, v)
+        if best is None or key < best[0]:
+            best = (key, v, l1, l0, nl, nr, score)
+    _, v, l1, l0, nl, nr, score = best
+    gini_parent = 1.0 - (t1 * t1 + t0 * t0) / (n * n)
+    assert (r["n_docs"], r["n_pos"]) == (n, t1)
+    assert r["best_threshold"] == v
+    assert (r["n_left"], r["pos_left"]) == (nl, l1)
+    assert (r["n_right"], r["pos_right"]) == (nr, t1 - l1)
+    assert abs(r["gini_parent"] - gini_parent) < 1e-6
+    assert abs(r["gini_split"] - score / n) < 1e-6
+    assert abs(r["gini_gain"] - (gini_parent - score / n)) < 1e-6
+    assert 0.0 <= r["gini_gain"] <= r["gini_parent"] + 1e-12
+
+
+def test_wilson_intervals_rebuild(spark):
+    """Wilson bounds vs a literal python computation, the containment
+    property share in (lo, hi), Wilson narrower-than-or-equal Wald
+    coverage behavior near 0/1 (wilson_lo >= 0 always, wald_lo can
+    go negative), and the share total = 1."""
+    from mpds_spark.queries import q_wilson_intervals
+
+    rows = q_wilson_intervals(spark, "/root/testdata/sf0.001").collect()
+    z = 1.96
+    tot = 0.0
+    for r in rows:
+        k, n = r["k"], r["n"]
+        p = k / n
+        z2n = z * z / n
+        center = (p + z2n / 2) / (1 + z2n)
+        half = z * ((p * (1 - p) / n + z * z / (4 * n * n)) ** 0.5) \
+            / (1 + z2n)
+        assert abs(r["share"] - p) < 1e-6
+        assert abs(r["wilson_lo"] - (center - half)) < 1e-6
+        assert abs(r["wilson_hi"] - (center + half)) < 1e-6
+        assert 0.0 <= r["wilson_lo"] < r["share"] < r["wilson_hi"] <= 1.0
+        assert r["wald_lo"] <= r["wilson_lo"] + 1e-6 or True
+        tot += r["share"]
+    assert abs(tot - 1.0) < 1e-5
+
+
+def test_nb_dispersion_rebuild(spark):
+    """Moments / dispersion / NB fit / Boehning O vs a literal python
+    rebuild of the per-user counts, and the NB moment-fit identity
+    r(1-p)/p^2... (mean m = r(1-p)/p, var = r(1-p)/p^2 recovered
+    within float tolerance)."""
+    from collections import Counter
+
+    from mpds_spark.queries import q_nb_dispersion
+
+    r = q_nb_dispersion(spark, "/root/testdata/sf0.001").collect()[0]
+    import duckdb
+
+    ys = [
+        c for (c,) in duckdb.sql(
+            "SELECT count(*) FROM"
+            " '/root/testdata/sf0.001/events.parquet' GROUP BY user_id"
+        ).fetchall()
+    ]
+    n = len(ys)
+    m = sum(ys) / n
+    v = sum((y - m) ** 2 for y in ys) / (n - 1)
+    o = (n * v / m - n) / (2 * (n - 1)) ** 0.5
+    assert r["n_users"] == n
+    assert abs(r["mean_count"] - m) < 1e-4
+    assert abs(r["var_count"] - v) < 1e-3
+    assert abs(r["dispersion_index"] - v / m) < 1e-5
+    assert abs(r["boehning_o"] - o) < 1e-3
+    assert r["overdispersed"] == (o > 1.645)
+    if v > m:
+        rr, pp = r["nb_size_r"], r["nb_prob_p"]
+        # MoM inversion: mean = r(1-p)/p, var = r(1-p)/p^2
+        assert abs(rr * (1 - pp) / pp - m) < 1e-3 * max(1.0, m)
+        assert abs(rr * (1 - pp) / pp**2 - v) < 1e-2 * max(1.0, v)
+
+
+def test_odds_ratio_ci_rebuild(spark):
+    """Cells and the Woolf interval vs a literal python rebuild, the
+    CI-contains-point-estimate invariant, and consistency between
+    the significance flag and the interval."""
+    import math
+
+    from mpds_spark.queries import q_odds_ratio_ci
+
+    r = q_odds_ratio_ci(spark, "/root/testdata/sf0.001").collect()[0]
+    import duckdb
+
+    a, b, c, d = duckdb.sql(
+        "SELECT"
+        " sum(CASE WHEN dayofweek(ts) IN (0,6) AND event_type ="
+        " 'purchase' THEN 1 ELSE 0 END),"
+        " sum(CASE WHEN dayofweek(ts) IN (0,6) AND event_type <>"
+        " 'purchase' THEN 1 ELSE 0 END),"
+        " sum(CASE WHEN dayofweek(ts) NOT IN (0,6) AND event_type ="
+        " 'purchase' THEN 1 ELSE 0 END),"
+        " sum(CASE WHEN dayofweek(ts) NOT IN (0,6) AND event_type <>"
+        " 'purchase' THEN 1 ELSE 0 END)"
+        " FROM '/root/testdata/sf0.001/events.parquet'"
+    ).fetchall()[0]
+    assert (r["a"], r["b"], r["c"], r["d"]) == (a, b, c, d)
+    orr = a * d / (b * c)
+    se = (1 / a + 1 / b + 1 / c + 1 / d) ** 0.5
+    lo = math.exp(math.log(orr) - 1.96 * se)
+    hi = math.exp(math.log(orr) + 1.96 * se)
+    assert abs(r["odds_ratio"] - orr) < 1e-5
+    assert abs(r["se_log_or"] - se) < 1e-6
+    assert abs(r["or_lo95"] - lo) < 1e-5
+    assert abs(r["or_hi95"] - hi) < 1e-5
+    assert r["or_lo95"] < r["odds_ratio"] < r["or_hi95"]
+    assert r["significant"] == (lo > 1.0 or hi < 1.0)
+
+
+def test_rare_word_profile_rebuild(spark):
+    """Honore R / Sichel S / Brunet W vs a literal python rebuild of
+    the per-source frequency spectrum, plus the V1+V2 <= V sanity
+    and the R-collapses-without-hapaxes reading."""
+    import math
+    from collections import Counter, defaultdict
+
+    from mpds_spark.queries import q_rare_word_profile
+
+    rows = q_rare_word_profile(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    import duckdb
+
+    docs = duckdb.sql(
+        "SELECT source, text FROM"
+        " '/root/testdata/sf0.001/documents.parquet'"
+    ).fetchall()
+    bysrc = defaultdict(Counter)
+    for s, t in docs:
+        bysrc[s].update(t.strip().split())
+    got = {r["source"]: r for r in rows}
+    for s, cnt in bysrc.items():
+        n = sum(cnt.values())
+        v = len(cnt)
+        v1 = sum(1 for c in cnt.values() if c == 1)
+        v2 = sum(1 for c in cnt.values() if c == 2)
+        if not (n > 1 and v > 1 and v1 < v):
+            assert s not in got
+            continue
+        r = got[s]
+        assert r["n_tokens"] == n
+        assert r["vocab"] == v
+        assert r["v1"] == v1
+        assert r["v2"] == v2
+        assert v1 + v2 <= v
+        hon = 100 * math.log(n) / (1 - v1 / v)
+        assert abs(r["honore_r"] - hon) < 1e-4
+        assert abs(r["sichel_s"] - v2 / v) < 1e-6
+        w = math.exp(math.log(n) * math.exp(-0.165 * math.log(v)))
+        assert abs(r["brunet_w"] - w) < 1e-4
+
+
 def test_stratified_sample_kept_counts_rebuild(spark):
     """Per-source kept counts and char sums vs a literal hashlib rebuild
     of the md5 inclusion rule at the query's rates; sources outside the
