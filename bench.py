@@ -170,11 +170,7 @@ def engine_throughput(
     entity event stream (one exchange, zero Python beyond the battery).
     Falls back to inline generation when input_dir is None
     (the pre-round-3 measurement, kept for comparison)."""
-    from pyspark.sql import functions as F
-
-    from mpds_spark.operators.asof import asof_join
-    from mpds_spark.operators.battery import extract_token_battery
-    from mpds_spark.operators.windows import derived_features
+    from mpds_spark.runner.submit import extract_transform
     from mpds_spark.session import get_spark
     from mpds_spark.sources.synth import synth_sequences
 
@@ -183,15 +179,6 @@ def engine_throughput(
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
     )
-
-    def _pipeline(frame):
-        feat = extract_token_battery(frame, keep_tokens=False)
-        feat = feat.withColumn("dss", F.element_at("features", 1))
-        events = feat.filter(F.crc32(F.col("doc_id")) % 10 == 0).select(
-            "entity_id", "ts", F.col("dss").alias("event_val")
-        )
-        der = derived_features(feat, value="dss")
-        return asof_join(der, events, on="ts", by="entity_id")
     # FIXED scan split count, identical for every parallelism leg: the
     # batched battery's per-sequence cost depends on Arrow chunk size,
     # which follows partition size — tying partitions to `cpus` would let
@@ -213,7 +200,7 @@ def engine_throughput(
     # vector) — at 10^12-row scale the token arrays are ~85% of the bytes
     # and must never ride through a shuffle (the passthrough contract
     # itself is pinned by the token-equality tests).
-    joined = _pipeline(df)
+    joined = extract_transform(df)
     # untimed per-rep priming pass on a tiny slice of the SAME plan,
     # repartitioned across every core: forks all Python workers (each
     # pays its pandas/pyarrow import), compiles the Arrow battery stage,
@@ -224,7 +211,7 @@ def engine_throughput(
     # Both actions write to the noop sink: count() would let Catalyst prune
     # every Window node, so the windowed features would go untimed. The
     # as-of join keeps every left row, so the output has one row per doc.
-    _noop(_pipeline(df.limit(2000).repartition(cpus)))
+    _noop(extract_transform(df.limit(2000).repartition(cpus)))
     t0 = time.perf_counter()
     _noop(joined)
     dt = time.perf_counter() - t0

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -11,12 +13,27 @@ def epoch_seconds(df: DataFrame, col: str) -> Column:
 
     TIMESTAMP_NTZ cannot cast straight to double in Spark 4 — route through
     TIMESTAMP (session tz is pinned to UTC, so NTZ == UTC instant).
+
+    A column that is already double is returned uncast: the analyzer
+    projects a cast inside a window expression out as an alias (`_w0`),
+    and that projection stops Catalyst from collapsing the window into a
+    neighbouring one over the same spec.
     """
     t = df.schema[col].dataType.typeName()
     c = F.col(col)
+    if t == "double":
+        return c
     if t.startswith("timestamp"):
         return c.cast("timestamp").cast("double")
     return c.cast("double")
+
+
+def ieee_div(a: Column, b: Column) -> Column:
+    """a / b with IEEE semantics for a zero divisor: ±Inf, or NaN for 0/0,
+    as R and numpy give. Under ANSI mode (the Spark 4 default) a plain
+    `a / b` fails the whole action with DIVIDE_BY_ZERO; ANSI stays on for
+    every other expression. A zero divisor is taken as +0."""
+    return F.when(b == 0, a * F.lit(math.inf)).otherwise(a / b)
 
 
 def duck_round(c: Column, digits: int = 6) -> Column:

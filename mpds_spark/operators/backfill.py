@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mpds_spark.functions.timeutil import epoch_seconds
+from mpds_spark.functions.timeutil import epoch_seconds, ieee_div
 
 from mpds_spark.operators.asof import LeakageError
 
@@ -97,6 +97,11 @@ def interpolate(
        all-null entity <- default everywhere
     2. interior nulls: (yn*(x-xp) + yp*(xn-x)) / (xn-xp) between the padded
        previous/next non-null neighbors.
+
+    A null row whose previous and next non-null neighbors share its ts has
+    xn - xp = 0 and a zero numerator: it gets the reference's 0/0 = NaN
+    (`ieee_div`), not an ANSI DIVIDE_BY_ZERO error. Which of several rows
+    at one ts count as previous or next follows Spark's order of the tie.
     """
     if not leakage_ok:
         raise LeakageError(
@@ -134,7 +139,7 @@ def interpolate(
         "__xn": F.first(x, ignorenulls=True).over(wf),
     }
     t, yp, xp, yn, xn = (F.col(c) for c in ("__t", *near))
-    interp = (yn * (t - xp) + yp * (xn - t)) / (xn - xp)
+    interp = ieee_div(yn * (t - xp) + yp * (xn - t), xn - xp)
     out = d.withColumns(near).withColumn(
         oc, F.when(y.isNotNull(), y).otherwise(interp)
     )

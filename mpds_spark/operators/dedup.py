@@ -10,9 +10,11 @@ All JVM-side (higher-order array functions + joins) — no Python UDFs:
   hash) — candidates = pairs agreeing on >= 1 full band.
 - near_dup_pairs: LSH candidates → exact-Jaccard verify over ONE shared
   persisted shingle frame — the two-tier default at corpus scale.
-- SimHash: 16-bit (back-compat oracle) and 64-bit as two 32-bit halves;
-  simhash_near_dups = 4x16-bit pigeonhole band join (guaranteed recall at
-  Hamming <= 3) + popcount verify.
+- SimHash: 64-bit as two 32-bit halves; simhash_near_dups = 4x16-bit
+  pigeonhole band join (guaranteed recall at Hamming <= 3) + popcount
+  verify.
+- connected_components / dedup_keep_list: near-dup PAIRS → dedup GROUPS
+  (large-/small-star, log rounds whatever the diameter) + keep-min.
 
 Scale notes: shingle explode multiplies rows by ~doc length — the
 self-join partitions by shingle, so hot shingles (stopword n-grams) skew;
@@ -508,140 +510,29 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation: every
-    vertex converges to the MINIMUM vertex id reachable from it — the
-    canonical-representative step that turns near-dup PAIRS into dedup
-    GROUPS.
-
-    Each iteration is one join + one groupBy-min over the (vertex, label)
-    frame (both keyed by vertex/neighbor — ordinary hash exchanges, AQE
-    applies); iterations needed = graph diameter in label-hops. The frame
-    is localCheckpoint'ed (eager) per round: each update references the
-    previous labels TWICE (through the neighbor agg and the join), so a
-    merely-persisted lineage doubles per round and the logical plan grows
-    2^iterations — Catalyst planning itself OOMs around iteration ~18
-    (observed). Checkpointing truncates the lineage to the materialized
-    blocks, the standard discipline for iterative Spark algorithms. The
-    loop stops at the first fixpoint (no label changed) — a driver-side
-    convergence CHECK, not driver-side data.
-
-    At 10^12-edge scale, swap min-label for the large-star/small-star
-    variant; the per-iteration plan shape (join + min-agg) is the same.
-    """
-    # persist the edge list FIRST: every loop iteration joins against it,
-    # and without materialization each round would recompute the edge
-    # frame's entire upstream pipeline (for near-dup input that is the
-    # full shingle/minhash/verify DAG — measured 66 s vs ~8 s at sf0.1)
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .persist()
-    )
-    und.count()
-    verts = und.select(F.col("a").alias("v")).distinct()
-    labels, prev = tracked_local_checkpoint(
-        verts.withColumn("label", F.col("v"))
-    )
-    converged = False
-    for _ in range(max_iter):
-        neigh = (
-            und.join(labels, und["a"] == labels["v"])
-            .select(F.col("b").alias("v"), "label")
-            .groupBy("v")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # carry the old label through the update so convergence is a FILTER
-        # on the checkpointed frame, not another join — one action per round
-        upd, ids = tracked_local_checkpoint(
-            labels.join(neigh, "v", "left").select(
-                "v",
-                F.col("label").alias("__old"),
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-        )
-        # the new checkpoint is materialized (eager) and nothing references
-        # the previous round's frame anymore — free its blocks now instead
-        # of accruing one checkpoint per round for the session's lifetime
-        release_rdds(prev)
-        prev = ids
-        changed = upd.filter(F.col("label") != F.col("__old")).count()
-        labels = upd.drop("__old")
-        if changed == 0:
-            converged = True
-            break
-    und.unpersist()
-    # the final round's blocks back the RETURNED frame: release only after
-    # the caller's final action (next release_scratch())
-    defer_release(prev)
-    if not converged:
-        # silently-unconverged labels are WRONG components; min-label needs
-        # diameter rounds — raise so callers either bump max_iter or switch
-        # to connected_components_star (log-round, diameter-free)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star"
-        )
-    return labels.select(F.col("v").alias("doc_id"), F.col("label").alias("component"))
-
-
-def dedup_keep_list(
-    docs: DataFrame,
-    pairs: DataFrame,
-    key: str = "doc_id",
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    algorithm: str = "label",
-) -> DataFrame:
-    """Final dedup verdict per document: its near-dup component and whether
-    it is the KEPT representative (the component's minimum id — the same
-    keep-smallest convention as exact_dedup). Docs in no pair keep
-    themselves. algorithm: "label" (min-label propagation — diameter-bound
-    rounds, fine for small dedup clusters), "star" (large/small-star —
-    log rounds, the choice when clusters can chain), or "auto" (driver
-    union-find under an edge-count threshold, star above — see
-    connected_components_auto)."""
-    cc = {
-        "label": connected_components,
-        "star": connected_components_star,
-        "auto": connected_components_auto,
-    }[algorithm]
-    comp = cc(pairs, src, dst)
-    out = docs.select(key).join(
-        comp.withColumnRenamed("doc_id", key), key, "left"
-    )
-    component = F.coalesce("component", F.col(key))
-    return out.select(
-        F.col(key),
-        component.alias("component"),
-        (component == F.col(key)).alias("keep"),
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components via the alternating large-star / small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SOCC'14) — O(log^2 n) rounds independent of graph DIAMETER,
-    vs min-label propagation's diameter-bound rounds. The at-scale choice
-    for 10^12-edge graphs with long chains.
+    """Connected components of an edge list: every vertex is labelled with
+    the MINIMUM vertex id of its component — the canonical-representative
+    step that turns near-dup PAIRS into dedup GROUPS. Returns
+    (doc_id, component) for every vertex that appears in an edge.
 
-    large-star: every neighbor LARGER than u is re-pointed at
-    m(u) = min(N(u) ∪ {u}); small-star: every neighbor <= u likewise.
-    Alternating the two contracts each component to a star on its minimum
-    vertex; the final edge set IS the (vertex -> component) mapping.
-    Per round: one groupBy-min + one join, localCheckpoint'ed (see
-    connected_components for why checkpointing is load-bearing).
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SOCC'14): O(log^2 n) rounds
+    whatever the graph's DIAMETER, so a long near-dup chain costs no more
+    rounds than a star. large-star: every neighbor LARGER than u is
+    re-pointed at m(u) = min(N(u) ∪ {u}); small-star: every neighbor <= u
+    likewise. Alternating the two contracts each component to a star on
+    its minimum vertex; the final edge set IS the (vertex -> component)
+    mapping.
+
+    Per round: one groupBy-min + one join, localCheckpoint'ed (eager).
+    Each round's frame references the previous one more than once, so a
+    merely-persisted lineage grows geometrically until Catalyst planning
+    itself runs out of memory; checkpointing truncates
+    the lineage to the materialized blocks, the standard discipline for
+    iterative Spark algorithms. Raises RuntimeError if the edge set has
+    not reached its fixpoint after max_iter double-rounds.
     """
 
     def star(e, large: bool):
@@ -673,7 +564,7 @@ def connected_components_star(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     )
     # vertex universe BEFORE dropping self-loops: a vertex appearing only in
-    # a self-loop edge is a singleton component, same as connected_components
+    # a self-loop edge is a singleton component
     verts, verts_ids = tracked_local_checkpoint(
         raw.select(F.col("u").alias("doc_id"))
         .unionByName(raw.select(F.col("v").alias("doc_id")))
@@ -719,7 +610,7 @@ def connected_components_star(
                 + e.exceptAll(e2).limit(1).count()
             )
         # the fixpoint check was the last reference to the previous round —
-        # free its checkpoint blocks (see connected_components)
+        # free its checkpoint blocks
         release_rdds(prev)
         prev = ids
         e = e2
@@ -734,7 +625,7 @@ def connected_components_star(
         release_rdds(prev)
         release_rdds(verts_ids)
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
+            f"connected_components did not converge in {max_iter} "
             "double-rounds"
         )
     # the final round + vertex universe back the RETURNED frame — release
@@ -749,78 +640,27 @@ def connected_components_star(
     )
 
 
-def connected_components_driver(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
-) -> DataFrame:
-    """Connected components on the DRIVER: one collect + union-find with
-    path compression, labels = component minimum (identical output contract
-    to connected_components / connected_components_star).
-
-    Only valid when the EDGE LIST is small — the caller
-    (connected_components_auto) gates on a measured edge count. This is
-    the standard hybrid endgame for near-dup graphs: after LSH banding +
-    verification the surviving edge set is typically orders of magnitude
-    smaller than the corpus, and a sub-threshold graph pays ~20 shuffle
-    rounds of pure overhead in the iterative algorithms."""
-    pdf = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).toPandas()
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for u, v in zip(pdf["u"], pdf["v"]):
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[ru] = rv
-        parent.setdefault(u, ru)
-        parent.setdefault(v, rv)
-    # label every vertex with the component MINIMUM (min-label contract)
-    roots = {x: find(x) for x in parent}
-    cmin: dict = {}
-    for x, r in roots.items():
-        if r not in cmin or x < cmin[r]:
-            cmin[r] = x
-    spark = edges.sparkSession
-    out = [(x, cmin[r]) for x, r in roots.items()]
-    if not out:
-        return spark.createDataFrame([], "doc_id string, component string")
-    return spark.createDataFrame(out, ["doc_id", "component"])
-
-
-def connected_components_auto(
-    edges: DataFrame,
+def dedup_keep_list(
+    docs: DataFrame,
+    pairs: DataFrame,
+    key: str = "doc_id",
     src: str = "doc_a",
     dst: str = "doc_b",
-    driver_max_edges: int = 5_000_000,
-    max_iter: int = 30,
 ) -> DataFrame:
-    """Adaptive connected components: count the edge frame once (it must
-    materialize for either path), then
-
-    - <= driver_max_edges: driver union-find (collect + path compression —
-      a verified near-dup edge set is usually tiny relative to the corpus);
-    - larger: alternating large-/small-star (log-round, diameter-free,
-      the 10^12-edge path — Kiveris et al. SOCC'14).
-
-    Both paths emit identical (doc_id, component-minimum) labels
-    (differential-tested on random graphs in tests/test_dedup_groups.py).
-    The edge count is a driver-side CONTROL decision on one scalar, not
-    driver-side data flow; the threshold bounds collected bytes at
-    ~driver_max_edges * 2 ids."""
-    ed = scratch_persist(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    """Final dedup verdict per document: its near-dup component
+    (connected_components over the pairs) and whether it is the KEPT
+    representative (the component's minimum id — the same keep-smallest
+    convention as exact_dedup). Docs in no pair keep themselves."""
+    comp = connected_components(pairs, src, dst)
+    out = docs.select(key).join(
+        comp.withColumnRenamed("doc_id", key), key, "left"
     )
-    n = ed.count()
-    if n <= driver_max_edges:
-        return connected_components_driver(ed, "u", "v")
-    return connected_components_star(ed, "u", "v", max_iter=max_iter)
+    component = F.coalesce("component", F.col(key))
+    return out.select(
+        F.col(key),
+        component.alias("component"),
+        (component == F.col(key)).alias("keep"),
+    )
 
 
 def _dup_span_positions(df, tokens, text, key, k, min_df):

@@ -250,9 +250,9 @@ def label_propagation(
     each round every node adopts the most frequent label among its
     neighbors, ties broken to the SMALLEST label (the classic
     randomized tie-break is replaced by a total order, so the result
-    is a pure function of the graph). Complements min-label connected
-    components (which ignore density) with density-sensitive
-    communities.
+    is a pure function of the graph). Complements connected components
+    (dedup.connected_components, which ignore density) with
+    density-sensitive communities.
 
     Determinism: labels are node ids (exact longs); per-round counts
     are exact; the argmax is one max(struct(count, -label)) aggregate —

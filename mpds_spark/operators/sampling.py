@@ -75,7 +75,7 @@ def sample_token_budget(
         # groups (it splits the per-group window partition 16^nibbles
         # ways at the cost of a |groups|*16^nibbles driver carry table);
         # with many groups the plain per-group window is already the
-        # maximally parallel plan. Mirrors connected_components_auto.
+        # maximally parallel plan.
         meta = t.groupBy(group).agg(F.count(F.lit(1)).alias("__c")).agg(
             F.count(F.lit(1)).alias("__g"), F.max("__c").alias("__mx")
         ).collect()[0]

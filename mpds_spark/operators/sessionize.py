@@ -9,6 +9,8 @@ Parity:
 - unite_adjacent_on_intervals ← mimicUsefulFunction.R:449-494
   (mimic.UniteAdjacentOnIntervals): 0-gaps between two 1-runs are filled
   when (first-1-of-next-run ts) - (last-1-of-prev-run ts) <= union_th.
+  Both are offline, two-sided signal cleaners: a row's output depends on
+  later rows of its entity, so both require leakage_ok=True.
 - event_response ← dssFunctionLibrary.R:1350-1368 + 1419-1503
   (time-weighted trapezoidal averages over the post-event window
   (t_e, t_e+wind] and, in pre_post mode, the pre-event window
@@ -33,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mpds_spark.functions.timeutil import epoch_seconds
+from mpds_spark.operators.asof import LeakageError
 
 
 def sessionize(
@@ -73,7 +76,17 @@ def remove_short_on_intervals(
     ts: str = "ts",
     time_th: float = 3600.0,
     out_col: str = "signal_clean",
+    leakage_ok: bool = False,
 ) -> DataFrame:
+    """1 where a row's signal run spans >= time_th seconds, else 0.
+
+    Forward-looking (a run's span includes its later rows): requires
+    leakage_ok — train-prep only, never feature columns."""
+    if not leakage_ok:
+        raise LeakageError(
+            "remove_short_on_intervals() reads the rest of each run "
+            "(forward-looking); pass leakage_ok=True — train-prep only."
+        )
     sig, run = _runs(df, entity, ts, signal)
     d = df.withColumn("__sig", sig).withColumn("__run", run)
     wr = Window.partitionBy(entity, "__run")
@@ -92,7 +105,18 @@ def unite_adjacent_on_intervals(
     ts: str = "ts",
     union_th: float = 3600.0,
     out_col: str = "signal_united",
+    leakage_ok: bool = False,
 ) -> DataFrame:
+    """1 where a row's signal is 1 or lies in a short 0-gap between two
+    1-runs, else 0.
+
+    Forward-looking (the gap's end is the next 1-row): requires
+    leakage_ok — train-prep only, never feature columns."""
+    if not leakage_ok:
+        raise LeakageError(
+            "unite_adjacent_on_intervals() reads the next on-row "
+            "(forward-looking); pass leakage_ok=True — train-prep only."
+        )
     w = Window.partitionBy(entity).orderBy(ts)
     t = epoch_seconds(df, ts)
     sig = F.coalesce(F.col(signal), F.lit(0))
@@ -131,8 +155,6 @@ def event_response(
 
     Forward-looking by definition (label/eval op): requires leakage_ok.
     """
-    from mpds_spark.operators.asof import LeakageError
-
     if not leakage_ok:
         raise LeakageError(
             "event_response aggregates future rows; pass leakage_ok=True "

@@ -29,7 +29,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from mpds_spark.functions.timeutil import epoch_seconds
+from mpds_spark.functions.timeutil import epoch_seconds, ieee_div
 
 
 def entity_window(entity: str = "entity_id", ts: str = "ts") -> WindowSpec:
@@ -105,6 +105,12 @@ def derived_features(
     backward-looking (leakage-safe). NaN/NULL → 0 as in the reference's
     res_df[is.na(res_df)] = 0.
 
+    A zero divisor gives the reference's IEEE result, not an ANSI error
+    (`ieee_div`): two rows of one entity at one ts make that row's rate
+    0/0 = NaN, so the rate sums are NaN → 0 from there on; an entity
+    whose running Σt is 0 (first row at epoch 0) gets the Σt-weighted
+    averages as x/0 = ±Inf, or NaN → 0.
+
     Scale: two Window nodes over one entity exchange and one sort — the lag
     pair (`_first_diffs`), then every expanding aggregate in one `select`
     over the one frame spec, each computed once. The feature ratios are a
@@ -115,8 +121,8 @@ def derived_features(
     we = expanding(w)
     t = epoch_seconds(df, ts)
     v = F.col(value)
-    rate = signed_diff / diff_t
-    abs_rate = abs_diff / diff_t
+    rate = ieee_div(signed_diff, diff_t)
+    abs_rate = ieee_div(abs_diff, diff_t)
     sums = {
         "__dss_s_v": v,
         "__dss_s_vt": v * t,
@@ -140,14 +146,14 @@ def derived_features(
     a = {k: F.col(k) for k in aggs}
     feats = {
         "dss_avg": a["__dss_s_v"] / a["__dss_n"],
-        "dss_ht_avg": a["__dss_s_vt"] / a["__dss_s_t"],
-        "dss_ht_sq_avg": a["__dss_s_vtt"] / a["__dss_s_tt"],
+        "dss_ht_avg": ieee_div(a["__dss_s_vt"], a["__dss_s_t"]),
+        "dss_ht_sq_avg": ieee_div(a["__dss_s_vtt"], a["__dss_s_tt"]),
         "dss_max": a["__dss_max"],
         "dss_min": a["__dss_min"],
         "dss_rate_avg": a["__dss_s_r"] / a["__dss_n"],
-        "dss_rate_ht_avg": a["__dss_s_rt"] / a["__dss_s_t"],
+        "dss_rate_ht_avg": ieee_div(a["__dss_s_rt"], a["__dss_s_t"]),
         "dss_abs_rate_avg": a["__dss_s_a"] / a["__dss_n"],
-        "dss_abs_rate_ht_avg": a["__dss_s_at"] / a["__dss_s_t"],
+        "dss_abs_rate_ht_avg": ieee_div(a["__dss_s_at"], a["__dss_s_t"]),
     }
     return (
         lagged.withColumns(aggs)

@@ -150,7 +150,7 @@ def dedup_corpus(
     — keep is None when stop_after cut the run short.
     """
     from mpds_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         near_dup_pairs,
         simhash_near_dups,
     )
@@ -252,7 +252,7 @@ def dedup_corpus(
         "03_components",
         fingerprint,
         spec3,
-        lambda: connected_components_star(pairs, "doc_a", "doc_b"),
+        lambda: connected_components(pairs, "doc_a", "doc_b"),
         stages,
     )
     if stop_after == 3:

@@ -455,7 +455,7 @@ def q_remove_short(spark, sf_dir):
         F.col("ts").cast("timestamp").cast("double").alias("ts"),
         (F.col("value") > 15).cast("int").alias("signal"),
     )
-    out = remove_short_on_intervals(ev, time_th=1200.0)
+    out = remove_short_on_intervals(ev, time_th=1200.0, leakage_ok=True)
     return out.select("event_id", "signal", "signal_clean")
 
 
@@ -493,7 +493,7 @@ def q_unite_adjacent(spark, sf_dir):
         F.col("ts").cast("timestamp").cast("double").alias("ts"),
         (F.col("value") > 15).cast("int").alias("signal"),
     )
-    out = unite_adjacent_on_intervals(ev, union_th=1200.0)
+    out = unite_adjacent_on_intervals(ev, union_th=1200.0, leakage_ok=True)
     return out.select("event_id", "signal", "signal_united")
 
 
@@ -2017,11 +2017,13 @@ _RAW_ORACLES["gopher_quality"] = SQL_GOPHER_QUALITY
 
 
 def q_near_dup_components(spark, sf_dir):
-    """Dedup GROUPS from near-dup PAIRS: connected components by iterative
-    min-label propagation (join + min-agg per round, fixpoint-terminated) +
-    keep = component representative (min id). The oracle computes the same
-    components with a DuckDB RECURSIVE CTE — an iterative Spark algorithm
-    checked against a recursive SQL one."""
+    """Dedup GROUPS from near-dup PAIRS: connected components by the
+    alternating large-/small-star algorithm (operators/dedup.py
+    connected_components — log rounds whatever the graph's diameter) +
+    keep = component representative (min id). The oracle computes the
+    same components with a DuckDB RECURSIVE CTE — an iterative Spark
+    algorithm checked against a recursive SQL one; tests/test_dedup.py
+    checks the components against a pure-Python union-find."""
     from mpds_spark.operators.dedup import dedup_keep_list, simhash_near_dups
 
     docs = load(spark, sf_dir, "documents")
@@ -2029,14 +2031,8 @@ def q_near_dup_components(spark, sf_dir):
     # MinHash pipeline (which near_dup_verified already times separately)
     # at a third of the pipeline cost — the query's subject is the
     # components algorithm, not a second run of the pair generator.
-    # algorithm="auto": a verified near-dup edge set is orders of magnitude
-    # smaller than the corpus, so the adaptive path measures the edge count
-    # and runs driver union-find below 5M edges (identical labels), keeping
-    # the diameter-free large-/small-star loop (log rounds — the 10^12-edge
-    # choice) for larger graphs; all three variants are differential-tested
-    # equal in tests/test_dedup_groups.py.
     pairs = simhash_near_dups(docs, max_hamming=3)
-    return dedup_keep_list(docs, pairs, algorithm="auto")
+    return dedup_keep_list(docs, pairs)
 
 
 SQL_NEAR_DUP_COMPONENTS = f"""
@@ -2080,18 +2076,13 @@ _RAW_ORACLES["near_dup_components"] = SQL_NEAR_DUP_COMPONENTS
 
 
 def q_near_dup_components_star(spark, sf_dir):
-    """FORCES the large-/small-star component algorithm (Kiveris et al.
-    SOCC'14) — the diameter-free log-round path a 10^12-edge graph must
-    take — on a purpose-built component fixture: 5 chains of 40 (diameter
-    39 — min-label propagation would need 39 rounds; star needs ~log),
-    10 stars of 9 spokes, 50 singletons. The auto router picks driver
-    union-find at toy edge counts, so without this query the at-scale
-    algorithm would only ever run under pytest; the fixture keeps a
-    standing driver-gated row against a RECURSIVE-CTE oracle while
-    exercising MORE star rounds than the sf0.01 simhash edges did at a
-    fraction of the cost (VERDICT r3 ask #7, re-gated per r4 ask #8 —
-    the simhash edge path stays gated via near_dup_components's auto
-    route and the 3-way differential in tests/test_dedup_groups.py)."""
+    """The large-/small-star component algorithm (Kiveris et al. SOCC'14)
+    on a purpose-built component fixture: 5 chains of 40 (diameter 39 —
+    a min-label propagation would need 39 rounds; star needs ~log), 10
+    stars of 9 spokes, 50 singletons. The simhash edges of
+    near_dup_components form small clusters, so this fixture is the
+    catalog row that drives the algorithm through many rounds, against a
+    RECURSIVE-CTE oracle."""
     from mpds_spark.operators.dedup import dedup_keep_list
 
     verts = spark.range(350).select(F.col("id").alias("doc_id"))
@@ -2112,7 +2103,7 @@ def q_near_dup_components_star(spark, sf_dir):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        return dedup_keep_list(verts, chain.unionAll(star), algorithm="star")
+        return dedup_keep_list(verts, chain.unionAll(star))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -3262,305 +3253,6 @@ FROM a JOIN v ON a.source = v.source
 
 QUERIES["source_stats"] = q_source_stats
 _RAW_ORACLES["source_stats"] = SQL_SOURCE_STATS
-
-
-def _stream_dir(sf_dir, name):
-    """File-source streaming needs a DIRECTORY; the testdata tables are
-    single parquet files — symlink one into a per-(sf,table) temp dir.
-
-    The dir name hashes the FULL absolute sf_dir so two datasets whose
-    paths share a basename (/a/sf0.01 vs /b/sf0.01) never reuse each
-    other's symlink, and an existing link is verified to point at the
-    requested target before reuse (r4 ADVICE)."""
-    import hashlib
-    import os
-    import tempfile
-
-    target = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
-    tag = hashlib.sha256(target.encode()).hexdigest()[:12]
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"mpds_stream_{os.path.basename(sf_dir.rstrip('/'))}_{name}_{tag}",
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{name}.parquet")
-    if os.path.islink(link) and os.readlink(link) != target:
-        os.unlink(link)
-    if not os.path.exists(link):
-        try:
-            os.symlink(target, link)
-        except FileExistsError:
-            pass  # concurrent process won the race — same target
-    return d
-
-
-def q_streaming_sessions(spark, sf_dir):
-    """Structured Streaming gap sessionization run THROUGH the streaming
-    engine (file source -> session_window agg -> memory sink, complete
-    mode, availableNow): one row per (user, session) with bounds and
-    aggregates. Deterministic over a finite input, so the batch gap-rule
-    SQL is an exact oracle — the driver row that pins the streaming tier,
-    not just its pytest batch-equivalence twin."""
-    from mpds_spark.streaming.sessions import session_agg
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _stream_dir(sf_dir, "events")
-    )
-    agg = session_agg(
-        stream, gap="30 minutes", entity="user_id", ts="ts", value="value"
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("mpds_q_streaming_sessions")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("mpds_q_streaming_sessions")
-    # epoch-second doubles, not raw timestamps: pandas materializes Spark
-    # NTZ as datetime64[ns] but DuckDB as [us], so the gate's int64 canon
-    # would compare mismatched units (same convention as every ts query)
-    return out.select(
-        "user_id",
-        F.col("session_start")
-        .cast("timestamp")
-        .cast("double")
-        .alias("session_start"),
-        F.col("session_end")
-        .cast("timestamp")
-        .cast("double")
-        .alias("session_end"),
-        F.col("n_events").cast("long").alias("n_events"),
-        _r6("sum_value").alias("sum_value"),
-    )
-
-
-SQL_STREAMING_SESSIONS = """
-WITH m AS (
-  SELECT user_id, ts, value,
-    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                > INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS brk
-  FROM events
-), s AS (
-  SELECT user_id, ts, value,
-    sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS UNBOUNDED PRECEDING) AS sid
-  FROM m
-)
-SELECT user_id,
-  epoch(min(ts)) AS session_start,
-  epoch(max(ts) + INTERVAL 30 MINUTE) AS session_end,
-  count(*) AS n_events,
-  round(sum(value), 6) AS sum_value
-FROM s GROUP BY user_id, sid
-"""
-
-QUERIES["streaming_sessions"] = q_streaming_sessions
-_RAW_ORACLES["streaming_sessions"] = SQL_STREAMING_SESSIONS
-
-
-def q_streaming_dedup(spark, sf_dir):
-    """Streaming exact dedup run THROUGH the streaming engine (stateful
-    dropDuplicates on md5(text), availableNow): which row arrives first
-    per hash is scheduling-dependent, but the SET of surviving hashes is
-    not — project to (text_hash, n_chars-of-survivor? no: hash only) plus
-    a count row-invariant: one output row per distinct content."""
-    from mpds_spark.streaming.dedup import stream_exact_dedup
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _stream_dir(sf_dir, "documents")
-    )
-    ded = stream_exact_dedup(stream)
-    q = (
-        ded.select("text_hash")
-        .writeStream.format("memory")
-        .queryName("mpds_q_streaming_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("mpds_q_streaming_dedup").select("text_hash")
-
-
-SQL_STREAMING_DEDUP = """
-SELECT DISTINCT md5(text) AS text_hash FROM documents
-"""
-
-QUERIES["streaming_dedup"] = q_streaming_dedup
-_RAW_ORACLES["streaming_dedup"] = SQL_STREAMING_DEDUP
-
-
-def q_streaming_asof_enrich(spark, sf_dir):
-    """The engine's streaming crown piece run THROUGH the streaming engine
-    and value-gated: stateful point-in-time enrichment
-    (applyInPandasWithState, one (ts, value) state row per entity) of
-    observation events against the latest purchase reference at-or-before
-    each observation. Over a finite file source the result equals the
-    batch as-of join, so DuckDB's native ASOF JOIN is an exact oracle."""
-    from mpds_spark.streaming.stateful import streaming_asof_enrich
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, "events"))
-    ev = raw.select(
-        F.col("user_id").cast("string").alias("entity_id"),
-        F.col("ts").cast("timestamp").cast("double").alias("ts"),
-        F.when(F.col("event_type") == "purchase", F.lit("ref"))
-        .otherwise(F.lit("obs"))
-        .alias("kind"),
-        F.col("value").cast("double").alias("value"),
-    )
-    q = (
-        streaming_asof_enrich(ev)
-        .writeStream.format("memory")
-        .queryName("mpds_q_streaming_asof")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("mpds_q_streaming_asof").select(
-        "entity_id", "ts", "value", "ref_val", "ref_ts"
-    )
-
-
-SQL_STREAMING_ASOF_ENRICH = """
-WITH e AS (
-  SELECT CAST(user_id AS VARCHAR) AS entity_id, epoch(ts) AS ts,
-    CASE WHEN event_type = 'purchase' THEN 'ref' ELSE 'obs' END AS kind,
-    value
-  FROM events
-), obs AS (SELECT entity_id, ts, value FROM e WHERE kind = 'obs'),
-ref AS (SELECT entity_id, ts AS ref_ts, value AS ref_val FROM e
-        WHERE kind = 'ref')
-SELECT o.entity_id, o.ts, o.value, r.ref_val, r.ref_ts
-FROM obs o ASOF LEFT JOIN ref r
-  ON o.entity_id = r.entity_id AND o.ts >= r.ref_ts
-"""
-
-QUERIES["streaming_asof_enrich"] = q_streaming_asof_enrich
-_RAW_ORACLES["streaming_asof_enrich"] = SQL_STREAMING_ASOF_ENRICH
-
-
-def q_streaming_token_budget(spark, sf_dir):
-    """Streaming per-source token-budget admission run THROUGH the
-    streaming engine (applyInPandasWithState, one running-total state row
-    per source): over a finite single-batch source the admitted set is
-    exactly the batch sample_token_budget greedy hash-order prefix, so
-    the same window SQL is an exact oracle (budget 700, matching the
-    batch catalog query)."""
-    from mpds_spark.operators.dedup import words_col
-    from mpds_spark.streaming.sampling import streaming_token_budget
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = spark.readStream.schema(schema).parquet(
-        _stream_dir(sf_dir, "documents")
-    )
-    docs = raw.select(
-        "doc_id",
-        "source",
-        F.size(words_col("text")).cast("long").alias("n_tok"),
-    )
-    q = (
-        streaming_token_budget(docs, budget=700)
-        .writeStream.format("memory")
-        .queryName("mpds_q_streaming_budget")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("mpds_q_streaming_budget").select(
-        "doc_id", "source", "n_tok", "cum_tok"
-    )
-
-
-QUERIES["streaming_token_budget"] = q_streaming_token_budget
-_RAW_ORACLES["streaming_token_budget"] = SQL_SAMPLE_TOKEN_BUDGET
-
-
-def q_streaming_pack(spark, sf_dir):
-    """Streaming per-source sequence packing run THROUGH the streaming
-    engine (applyInPandasWithState; state = the partial trailing bin per
-    source). Over a finite single-batch source the emitted rows are
-    exactly the batch concat-and-chunk's FULL bins per source, so the
-    windowed SQL packer restricted to full bins is an exact oracle.
-    Tokens = per-word lengths (engine-portable int tokenization)."""
-    from mpds_spark.streaming.packing import streaming_pack
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = spark.readStream.schema(schema).parquet(
-        _stream_dir(sf_dir, "documents")
-    )
-    docs = raw.select(
-        "doc_id",
-        "source",
-        F.expr(
-            "transform(split(trim(text), '\\\\s+'), x -> int(length(x)))"
-        ).alias("tokens"),
-    )
-    q = (
-        streaming_pack(docs, length=64)
-        .writeStream.format("memory")
-        .queryName("mpds_q_streaming_pack")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("mpds_q_streaming_pack")
-    return out.select(
-        "source",
-        "bin_id",
-        F.expr("cast(size(tokens) as long)").alias("n_tok_packed"),
-        F.col("n_segments").cast("int").alias("n_segments"),
-        F.md5(F.concat_ws(" ", F.col("tokens"))).alias("packed_hash"),
-    )
-
-
-SQL_STREAMING_PACK = """
-WITH t AS (
-  SELECT doc_id, source,
-    list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                   x -> CAST(length(x) AS INT)) AS ws,
-    len(regexp_split_to_array(trim(text), '\\s+')) AS n,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM documents
-  WHERE len(regexp_split_to_array(trim(text), '\\s+')) > 0
-), c AS (
-  SELECT doc_id, source, ws, n,
-    CAST(sum(n) OVER (PARTITION BY source ORDER BY h, doc_id
-                      ROWS UNBOUNDED PRECEDING) - n AS BIGINT) AS s
-  FROM t
-), p AS (
-  SELECT source, ws, n, s,
-    unnest(range(s // 64, (s + n - 1) // 64 + 1)) AS bin
-  FROM c
-), pieces AS (
-  SELECT source, bin, s,
-    list_slice(ws, CAST(greatest(bin * 64 - s, 0) AS BIGINT) + 1,
-               CAST(least(n, (bin + 1) * 64 - s) AS BIGINT)) AS piece
-  FROM p
-), packed AS (
-  SELECT source, bin, list(piece ORDER BY s) AS pl, count(*) AS n_segments
-  FROM pieces GROUP BY source, bin
-)
-SELECT source,
-  CAST(bin AS BIGINT) AS bin_id,
-  CAST(len(flatten(pl)) AS BIGINT) AS n_tok_packed,
-  CAST(n_segments AS INT) AS n_segments,
-  md5(coalesce(array_to_string(flatten(pl), ' '), '')) AS packed_hash
-FROM packed
-WHERE len(flatten(pl)) = 64
-"""
-
-QUERIES["streaming_pack"] = q_streaming_pack
-_RAW_ORACLES["streaming_pack"] = SQL_STREAMING_PACK
 
 
 def q_asof_nearest(spark, sf_dir):
@@ -5135,69 +4827,6 @@ FROM agg JOIN peak ON peak.user_id = agg.user_id
 
 QUERIES["hourly_seasonality"] = q_hourly_seasonality
 _RAW_ORACLES["hourly_seasonality"] = _sql_hourly_seasonality()
-
-
-def q_streaming_windowed_counts(spark, sf_dir):
-    """Watermarked tumbling-window rollup run THROUGH the streaming
-    engine (streaming/sessions.py tumbling_counts: file source ->
-    withWatermark -> F.window agg -> memory sink, complete mode,
-    availableNow): per (hour, user) event count + exact-cents value sum.
-    Complete mode re-emits every window, so the batch GROUP BY is an
-    exact oracle; the append-mode drop-late semantics are pinned by
-    tests/test_streaming.py::test_session_watermark_drops_late_event and
-    the tumbling twin below it."""
-    from mpds_spark.streaming.sessions import tumbling_counts
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _stream_dir(sf_dir, "events")
-    )
-    cents = (
-        F.signum("value") * F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-    ).cast("long")
-    # withWatermark requires TIMESTAMP (not NTZ); session tz is UTC-pinned
-    agg = tumbling_counts(
-        stream.withColumn("value", cents)
-        .withColumn("ts", F.col("ts").cast("timestamp")),
-        window="1 hour",
-        entity="user_id",
-        ts="ts",
-        value="value",
-        watermark="30 minutes",
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("mpds_q_streaming_windowed_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("mpds_q_streaming_windowed_counts")
-    return out.select(
-        "user_id",
-        F.col("window_start").cast("timestamp").cast("double")
-        .alias("window_start"),
-        F.col("window_end").cast("timestamp").cast("double")
-        .alias("window_end"),
-        F.col("n_events").cast("long").alias("n_events"),
-        (F.col("sum_value").cast("double") / 100.0).alias("sum_value"),
-    )
-
-
-SQL_STREAMING_WINDOWED_COUNTS = """
-SELECT user_id,
-  floor(epoch(ts) / 3600) * 3600 AS window_start,
-  floor(epoch(ts) / 3600) * 3600 + 3600 AS window_end,
-  CAST(count(*) AS BIGINT) AS n_events,
-  sum(CAST(floor(abs(value)*100 + 0.5)*sign(value) AS BIGINT))::DOUBLE
-    / 100.0 AS sum_value
-FROM events
-GROUP BY user_id, floor(epoch(ts) / 3600)
-"""
-
-QUERIES["streaming_windowed_counts"] = q_streaming_windowed_counts
-_RAW_ORACLES["streaming_windowed_counts"] = SQL_STREAMING_WINDOWED_COUNTS
 
 
 def q_zscore_outliers(spark, sf_dir):
@@ -7202,9 +6831,8 @@ def q_sliding_windows(spark, sf_dir):
     epoch-aligned): per-window event + distinct-user counts via
     F.window(slide) — Catalyst's Expand assigns each event its 4
     overlapping windows in the map stage, so the cost is one widened
-    aggregation, never a per-window scan or a grid self-join. The batch
-    twin of streaming_windowed_counts' tumbling path; the DuckDB oracle
-    derives each event's window starts s in (t-3600, t] from first
+    aggregation, never a per-window scan or a grid self-join. The DuckDB
+    oracle derives each event's window starts s in (t-3600, t] from first
     principles with generate_series, proving the assignment arithmetic.
     Output keyed by window start (epoch seconds)."""
     ev = _events(spark, sf_dir).select(
@@ -12964,726 +12592,6 @@ FROM f ORDER BY sse, b LIMIT 1
 
 QUERIES["segmented_trend"] = q_segmented_trend
 _RAW_ORACLES["segmented_trend"] = SQL_SEGMENTED_TREND
-
-
-def q_session_edit_distance(spark, sf_dir):
-    """Histogram of Levenshtein edit distances between each user's
-    CONSECUTIVE active-day behavior strings (Levenshtein 1966; the
-    day's events collapse to an initials string in time order —
-    'vvcp' = view view click purchase — so the distance measures how
-    much a user's daily routine mutates day over day: the behavioral-
-    stability feature that separates habitual from exploratory users,
-    and the sequence-level drift audit for event pipelines). Day
-    strings are deterministic (ts is unique per user); distances are
-    exact integers from the JVM/native levenshtein on BOTH engines;
-    the histogram is exact longs — zero floats anywhere. One
-    (user, day) aggregate + one user-keyed lag; day strings are <= a
-    few dozen chars so the O(len^2) DP is constant work per pair."""
-    ev = _events(spark, sf_dir).select(
-        "user_id",
-        F.dayofmonth(F.col("ts").cast("timestamp")).cast("long")
-        .alias("__d"),
-        F.col("ts").cast("timestamp").cast("double").alias("__t"),
-        F.substring("event_type", 1, 1).alias("__i"),
-    )
-    day = ev.groupBy("user_id", "__d").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("__t", "__i"))),
-                lambda e: e["__i"],
-            ),
-            "",
-        ).alias("__s")
-    )
-    w = Window.partitionBy("user_id").orderBy("__d")
-    pairs = day.select(
-        F.lag("__s").over(w).alias("__p"), "__s"
-    ).filter(F.col("__p").isNotNull())
-    return (
-        pairs.select(
-            F.levenshtein("__p", "__s").cast("long")
-            .alias("edit_distance")
-        )
-        .groupBy("edit_distance")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    )
-
-
-SQL_SESSION_EDIT_DISTANCE = """
-WITH e AS (
-  SELECT user_id, CAST(day(ts) AS BIGINT) AS d, ts,
-    substring(event_type, 1, 1) AS i
-  FROM events
-), day AS (
-  SELECT user_id, d, string_agg(i, '' ORDER BY ts) AS s
-  FROM e GROUP BY user_id, d
-), pairs AS (
-  SELECT lag(s) OVER (PARTITION BY user_id ORDER BY d) AS p, s
-  FROM day
-)
-SELECT CAST(levenshtein(p, s) AS BIGINT) AS edit_distance,
-  CAST(count(*) AS BIGINT) AS n_pairs
-FROM pairs WHERE p IS NOT NULL
-GROUP BY 1
-"""
-
-QUERIES["session_edit_distance"] = q_session_edit_distance
-_RAW_ORACLES["session_edit_distance"] = SQL_SESSION_EDIT_DISTANCE
-
-
-def q_mcnemar_test(spark, sf_dir):
-    """McNemar's test on the cohens_kappa rater pair (McNemar 1947;
-    Edwards 1948 continuity correction — the PAIRED disagreement test
-    that kappa does not give you: kappa says how much two
-    quality-filter rules agree, McNemar says whether their
-    DISAGREEMENTS are one-sided, i.e. one rule is systematically
-    stricter, which is what you check before swapping rule A for rule
-    B in a curation pipeline). Uses the identical deterministic raters
-    (n_chars >= 120 vs >= 20 words via the space-count identity); the
-    discordant cells b = A-only, c = B-only come from ONE aggregate;
-    chi2 = (b-c)^2/(b+c) and the corrected (|b-c|-1)^2/(b+c) are
-    single exact-integer-ratio divisions."""
-    d = load(spark, sf_dir, "documents").select(
-        F.when(F.col("n_chars") >= 120, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("__ra"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 20,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__rb"),
-    )
-    a = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.col("__ra") * (1 - F.col("__rb"))).cast("long")
-        .alias("b_only_a"),
-        F.sum((1 - F.col("__ra")) * F.col("__rb")).cast("long")
-        .alias("c_only_b"),
-    )
-    b = F.col("b_only_a")
-    c = F.col("c_only_b")
-    bc = (b + c).cast("double")
-    chi2 = F.when(
-        b + c > 0,
-        ((b - c) * (b - c)).cast("double") / bc,
-    ).otherwise(F.lit(0.0))
-    chi2_cc = F.when(
-        b + c > 0,
-        ((F.abs(b - c) - 1) * (F.abs(b - c) - 1)).cast("double") / bc,
-    ).otherwise(F.lit(0.0))
-    return a.select(
-        "n_docs", "b_only_a", "c_only_b",
-        _r6(chi2).alias("chi2"),
-        _r6(chi2_cc).alias("chi2_corrected"),
-        (chi2_cc > F.lit(3.841)).alias("one_sided_disagreement"),
-    )
-
-
-SQL_MCNEMAR_TEST = """
-WITH d AS (
-  SELECT CASE WHEN n_chars >= 120 THEN 1 ELSE 0 END AS ra,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1 >= 20
-         THEN 1 ELSE 0 END AS rb
-  FROM documents
-), a AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-    CAST(sum(ra * (1 - rb)) AS BIGINT) AS b_only_a,
-    CAST(sum((1 - ra) * rb) AS BIGINT) AS c_only_b
-  FROM d
-)
-SELECT n_docs, b_only_a, c_only_b,
-  round(CASE WHEN b_only_a + c_only_b > 0
-    THEN CAST((b_only_a - c_only_b) * (b_only_a - c_only_b) AS DOUBLE)
-         / CAST(b_only_a + c_only_b AS DOUBLE)
-    ELSE 0.0 END, 6) AS chi2,
-  round(CASE WHEN b_only_a + c_only_b > 0
-    THEN CAST((abs(b_only_a - c_only_b) - 1)
-              * (abs(b_only_a - c_only_b) - 1) AS DOUBLE)
-         / CAST(b_only_a + c_only_b AS DOUBLE)
-    ELSE 0.0 END, 6) AS chi2_corrected,
-  CASE WHEN b_only_a + c_only_b > 0
-    THEN CAST((abs(b_only_a - c_only_b) - 1)
-              * (abs(b_only_a - c_only_b) - 1) AS DOUBLE)
-         / CAST(b_only_a + c_only_b AS DOUBLE)
-    ELSE 0.0 END > 3.841 AS one_sided_disagreement
-FROM a
-"""
-
-QUERIES["mcnemar_test"] = q_mcnemar_test
-_RAW_ORACLES["mcnemar_test"] = SQL_MCNEMAR_TEST
-
-
-_KMV_K = 256
-_KMV_SPACE = float(1 << 60)  # 16^15, the 60-bit md5-prefix hash space
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """KMV / k-minimum-values distinct-count sketch of users per event
-    type and pooled (Bar-Yossef et al. RANDOM 2002; Beyer et al.
-    SIGMOD 2007 unbiased estimator D = (k-1)/u_(k)) — the ORDER-
-    STATISTIC sketch family beside hll_cardinality's register family:
-    KMV supports set EXPRESSIONS (union/intersection via the combined
-    k smallest) and gives a distribution-free error bound, which is
-    why join-size planners carry it. Hashes are the catalog's 60-bit
-    md5 prefixes (exact longs, uniform on [0, 2^60)); the k smallest
-    per scope come from a rank window that plans as a per-partition
-    WindowGroupLimit heap — never a global sort; when a scope has
-    fewer than k distinct keys the sketch IS the exact set (est =
-    count, the standard small-regime behavior). The estimate
-    (k-1) * 2^60 / h_(k) is one division of exactly-representable
-    values, audited against the exact distinct count per scope. At
-    10^12 rows each scope ships k=256 longs — mergeable by taking
-    the k smallest of a union."""
-    ev = _events(spark, sf_dir).select("event_type", "user_id")
-    stacked = ev.select(
-        F.col("event_type").alias("__scope"), "user_id"
-    ).unionAll(
-        ev.select(F.lit("all").alias("__scope"), "user_id")
-    ).distinct()
-    h = stacked.select(
-        "__scope",
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16, 10,
-        ).cast("long").alias("__h"),
-    )
-    exact = h.groupBy("__scope").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_distinct")
-    )
-    wr = Window.partitionBy("__scope").orderBy("__h")
-    topk = h.withColumn("__rn", F.row_number().over(wr)).filter(
-        F.col("__rn") <= F.lit(_KMV_K)
-    ).groupBy("__scope").agg(
-        F.count(F.lit(1)).cast("long").alias("k_used"),
-        F.max("__h").cast("long").alias("__kth"),
-    )
-    j = exact.join(topk, "__scope")
-    est = F.when(
-        F.col("k_used") < F.lit(_KMV_K),
-        F.col("k_used").cast("double"),
-    ).otherwise(
-        F.lit(float(_KMV_K - 1)) * F.lit(_KMV_SPACE)
-        / F.col("__kth").cast("double")
-    )
-    return j.select(
-        F.col("__scope").alias("scope"),
-        "exact_distinct",
-        "k_used",
-        _r6(est).alias("kmv_estimate"),
-        _r6(
-            (est - F.col("exact_distinct").cast("double"))
-            / F.col("exact_distinct").cast("double")
-        ).alias("rel_err"),
-    )
-
-
-SQL_KMV_DISTINCT = f"""
-WITH stacked AS (
-  SELECT DISTINCT scope, user_id FROM (
-    SELECT event_type AS scope, user_id FROM events
-    UNION ALL
-    SELECT 'all' AS scope, user_id FROM events
-  )
-), h AS (
-  SELECT scope,
-    CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))
-      ::UBIGINT AS BIGINT) AS hv
-  FROM stacked
-), exact AS (
-  SELECT scope, CAST(count(*) AS BIGINT) AS exact_distinct
-  FROM h GROUP BY scope
-), topk AS (
-  SELECT scope, CAST(count(*) AS BIGINT) AS k_used,
-    CAST(max(hv) AS BIGINT) AS kth
-  FROM (
-    SELECT scope, hv,
-      row_number() OVER (PARTITION BY scope ORDER BY hv) AS rn
-    FROM h
-  ) WHERE rn <= {_KMV_K}
-  GROUP BY scope
-), j AS (
-  SELECT exact.scope, exact_distinct, k_used,
-    CASE WHEN k_used < {_KMV_K} THEN CAST(k_used AS DOUBLE)
-      ELSE {float(_KMV_K - 1)!r} * {_KMV_SPACE!r}
-           / CAST(kth AS DOUBLE) END AS est
-  FROM exact JOIN topk USING (scope)
-)
-SELECT scope, exact_distinct, k_used,
-  round(est, 6) AS kmv_estimate,
-  round((est - CAST(exact_distinct AS DOUBLE))
-        / CAST(exact_distinct AS DOUBLE), 6) AS rel_err
-FROM j
-"""
-
-QUERIES["kmv_distinct"] = q_kmv_distinct
-_RAW_ORACLES["kmv_distinct"] = SQL_KMV_DISTINCT
-
-
-def q_best_split_stump(spark, sf_dir):
-    """CART decision-stump split finder (Breiman et al. 1984): the
-    single n_chars threshold that best separates the >=20-words
-    quality label by Gini impurity — the one-feature special case of
-    the split search every tree learner runs, and the weak-supervision
-    primitive that turns a labeling rule into a cheap surrogate
-    feature threshold. The corpus collapses ONCE to the distinct-
-    n_chars histogram with per-class counts (exact longs); prefix
-    sums over the value-ascending window make every candidate split
-    'x <= v' a row, the weighted Gini
-    sum_side (n_s - (s1^2 + s0^2)/n_s) is a fixed expression over
-    exact integers per candidate (single divisions), and the argmin
-    is a TakeOrdered over (score, threshold) — smallest-threshold
-    tie-break, no global sort. At 10^12 docs the candidate frame is
-    the number of distinct lengths."""
-    d = load(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("long").alias("__v"),
-        F.when(
-            F.length("text")
-            - F.length(F.regexp_replace("text", " ", "")) + 1 >= 20,
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("__y"),
-    )
-    hist = d.groupBy("__v").agg(
-        F.sum("__y").cast("long").alias("__p"),
-        F.sum(1 - F.col("__y")).cast("long").alias("__q"),
-    )
-    w = Window.orderBy("__v")
-    wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wt = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cand = hist.select(
-        "__v",
-        F.sum("__p").over(wc).cast("long").alias("__l1"),
-        F.sum("__q").over(wc).cast("long").alias("__l0"),
-        F.sum("__p").over(wt).cast("long").alias("__t1"),
-        F.sum("__q").over(wt).cast("long").alias("__t0"),
-    ).select(
-        "__v", "__l1", "__l0", "__t1", "__t0",
-        (F.col("__l1") + F.col("__l0")).alias("__nl"),
-        (F.col("__t1") - F.col("__l1") + F.col("__t0") - F.col("__l0"))
-        .alias("__nr"),
-    ).filter((F.col("__nl") > 0) & (F.col("__nr") > 0))
-    r1 = F.col("__t1") - F.col("__l1")
-    r0 = F.col("__t0") - F.col("__l0")
-    score = (
-        F.col("__nl").cast("double")
-        - (F.col("__l1") * F.col("__l1")
-           + F.col("__l0") * F.col("__l0")).cast("double")
-        / F.col("__nl").cast("double")
-        + F.col("__nr").cast("double")
-        - (r1 * r1 + r0 * r0).cast("double")
-        / F.col("__nr").cast("double")
-    )
-    best = cand.select(
-        "__v", "__l1", "__l0", "__t1", "__t0", "__nl", "__nr",
-        score.alias("__score"),
-    ).orderBy("__score", "__v").limit(1)
-    n = (F.col("__t1") + F.col("__t0")).cast("double")
-    gini_parent = F.lit(1.0) - (
-        (F.col("__t1") * F.col("__t1")
-         + F.col("__t0") * F.col("__t0")).cast("double") / (n * n)
-    )
-    return best.select(
-        (F.col("__t1") + F.col("__t0")).alias("n_docs"),
-        F.col("__t1").alias("n_pos"),
-        F.col("__v").alias("best_threshold"),
-        F.col("__nl").alias("n_left"),
-        F.col("__l1").alias("pos_left"),
-        F.col("__nr").alias("n_right"),
-        (F.col("__t1") - F.col("__l1")).alias("pos_right"),
-        _r6(gini_parent).alias("gini_parent"),
-        _r6(F.col("__score") / n).alias("gini_split"),
-        _r6(gini_parent - F.col("__score") / n).alias("gini_gain"),
-    )
-
-
-SQL_BEST_SPLIT_STUMP = """
-WITH d AS (
-  SELECT CAST(n_chars AS BIGINT) AS v,
-    CASE WHEN length(text) - length(replace(text, ' ', '')) + 1 >= 20
-         THEN 1 ELSE 0 END AS y
-  FROM documents
-), hist AS (
-  SELECT v, CAST(sum(y) AS BIGINT) AS p,
-    CAST(sum(1 - y) AS BIGINT) AS q
-  FROM d GROUP BY v
-), cand AS (
-  SELECT v,
-    CAST(sum(p) OVER wc AS BIGINT) AS l1,
-    CAST(sum(q) OVER wc AS BIGINT) AS l0,
-    CAST(sum(p) OVER () AS BIGINT) AS t1,
-    CAST(sum(q) OVER () AS BIGINT) AS t0
-  FROM hist
-  WINDOW wc AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                AND CURRENT ROW)
-), scored AS (
-  SELECT v, l1, l0, t1, t0, l1 + l0 AS nl,
-    (t1 - l1) + (t0 - l0) AS nr,
-    CAST(l1 + l0 AS DOUBLE)
-      - CAST(l1 * l1 + l0 * l0 AS DOUBLE) / CAST(l1 + l0 AS DOUBLE)
-      + CAST((t1 - l1) + (t0 - l0) AS DOUBLE)
-      - CAST((t1 - l1) * (t1 - l1) + (t0 - l0) * (t0 - l0) AS DOUBLE)
-        / CAST((t1 - l1) + (t0 - l0) AS DOUBLE) AS score
-  FROM cand
-  WHERE l1 + l0 > 0 AND (t1 - l1) + (t0 - l0) > 0
-), best AS (
-  SELECT * FROM scored ORDER BY score, v LIMIT 1
-)
-SELECT t1 + t0 AS n_docs, t1 AS n_pos, v AS best_threshold,
-  nl AS n_left, l1 AS pos_left, nr AS n_right, t1 - l1 AS pos_right,
-  round(1.0 - CAST(t1 * t1 + t0 * t0 AS DOUBLE)
-        / (CAST(t1 + t0 AS DOUBLE) * CAST(t1 + t0 AS DOUBLE)), 6)
-    AS gini_parent,
-  round(score / CAST(t1 + t0 AS DOUBLE), 6) AS gini_split,
-  round(1.0 - CAST(t1 * t1 + t0 * t0 AS DOUBLE)
-        / (CAST(t1 + t0 AS DOUBLE) * CAST(t1 + t0 AS DOUBLE))
-        - score / CAST(t1 + t0 AS DOUBLE), 6) AS gini_gain
-FROM best
-"""
-
-QUERIES["best_split_stump"] = q_best_split_stump
-_RAW_ORACLES["best_split_stump"] = SQL_BEST_SPLIT_STUMP
-
-
-_WI_Z = 1.96
-
-
-def q_wilson_intervals(spark, sf_dir):
-    """Wilson score 95% intervals for each event type's share of
-    total events (Wilson JASA 1927; Brown, Cai & DasGupta 2001 —
-    the proportion CI that actually holds its coverage at small n
-    and extreme p, where the naive Wald interval collapses; what a
-    metrics layer should print next to every rate). Counts are exact
-    longs from ONE aggregate; the interval
-    (p + z^2/2n +- z sqrt(p(1-p)/n + z^2/4n^2)) / (1 + z^2/n) is a
-    fixed expression tree per type with the z = 1.96 literal pinned,
-    and the Wald interval rides along to show the difference. At
-    10^12 events the interval frame is |types| rows."""
-    ev = _events(spark, sf_dir).select("event_type")
-    cells = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("k")
-    )
-    wt = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    t = cells.select(
-        "event_type", "k",
-        F.sum("k").over(wt).cast("long").alias("n"),
-    )
-    z = F.lit(_WI_Z)
-    kd = F.col("k").cast("double")
-    nd = F.col("n").cast("double")
-    p = kd / nd
-    z2n = z * z / nd
-    center = (p + z2n / F.lit(2.0)) / (F.lit(1.0) + z2n)
-    half = (
-        z
-        * F.sqrt(
-            p * (F.lit(1.0) - p) / nd
-            + z * z / (F.lit(4.0) * nd * nd)
-        )
-        / (F.lit(1.0) + z2n)
-    )
-    wald = z * F.sqrt(p * (F.lit(1.0) - p) / nd)
-    return t.select(
-        "event_type", "k", "n",
-        _r6(p).alias("share"),
-        _r6(center - half).alias("wilson_lo"),
-        _r6(center + half).alias("wilson_hi"),
-        _r6(p - wald).alias("wald_lo"),
-        _r6(p + wald).alias("wald_hi"),
-    )
-
-
-SQL_WILSON_INTERVALS = f"""
-WITH cells AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS k
-  FROM events GROUP BY event_type
-), t AS (
-  SELECT event_type, k, CAST(sum(k) OVER () AS BIGINT) AS n FROM cells
-), f AS (
-  SELECT event_type, k, n,
-    CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-    {_WI_Z!r} * {_WI_Z!r} / CAST(n AS DOUBLE) AS z2n
-  FROM t
-), g AS (
-  SELECT event_type, k, n, p,
-    (p + z2n / 2.0) / (1.0 + z2n) AS center,
-    {_WI_Z!r} * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-      + {_WI_Z!r} * {_WI_Z!r}
-        / (4.0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-      / (1.0 + z2n) AS half,
-    {_WI_Z!r} * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)) AS wald
-  FROM f
-)
-SELECT event_type, k, n,
-  round(p, 6) AS share,
-  round(center - half, 6) AS wilson_lo,
-  round(center + half, 6) AS wilson_hi,
-  round(p - wald, 6) AS wald_lo,
-  round(p + wald, 6) AS wald_hi
-FROM g
-"""
-
-QUERIES["wilson_intervals"] = q_wilson_intervals
-_RAW_ORACLES["wilson_intervals"] = SQL_WILSON_INTERVALS
-
-
-def q_nb_dispersion(spark, sf_dir):
-    """Poisson overdispersion test + negative-binomial moment fit for
-    per-user event counts (Boehning 1994's O statistic — the
-    asymptotically-normal score test of H0: Poisson; Cameron &
-    Trivedi 1990 family — the 'is a Poisson rate feature enough, or
-    do we need the NB dispersion parameter' gate every count-feature
-    pipeline should run before modeling): with exact integer moments
-    n, S = sum y, Q = sum y^2 over the per-user counts, the sample
-    mean/variance, the dispersion index v/m, the MoM NB size
-    r = m^2/(v - m) and p = m/v, and O = (n S2/m - n)/sqrt(2(n-1))
-    are all fixed expression trees (v written as the exact-integer
-    ratio (nQ - S^2)/(n(n-1)) so both engines divide identical
-    longs). Overdispersed at the one-sided 5% point 1.645. ONE
-    user agg + ONE global agg; the test frame is 1 row at 10^12
-    events."""
-    ev = _events(spark, sf_dir).select("user_id")
-    peru = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("__y")
-    )
-    mom = peru.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("__y").cast("long").alias("s"),
-        F.sum(F.col("__y") * F.col("__y")).cast("long").alias("q"),
-    )
-    nd = F.col("n_users").cast("double")
-    m = F.col("s").cast("double") / nd
-    vnum = (
-        F.col("n_users") * F.col("q") - F.col("s") * F.col("s")
-    ).cast("double")
-    vden = (
-        F.col("n_users") * (F.col("n_users") - 1)
-    ).cast("double")
-    v = vnum / vden
-    disp = v / m
-    r = F.when(v > m, m * m / (v - m))
-    p = F.when(v > 0, m / v)
-    o = (nd * v / m - nd) / F.sqrt(
-        F.lit(2.0) * (nd - F.lit(1.0))
-    )
-    return mom.select(
-        "n_users",
-        _r6(m).alias("mean_count"),
-        _r6(v).alias("var_count"),
-        _r6(disp).alias("dispersion_index"),
-        _r6(r).alias("nb_size_r"),
-        _r6(p).alias("nb_prob_p"),
-        _r6(o).alias("boehning_o"),
-        (o > F.lit(1.645)).alias("overdispersed"),
-    )
-
-
-SQL_NB_DISPERSION = """
-WITH peru AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY user_id
-), mom AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS s,
-    CAST(sum(y * y) AS BIGINT) AS q
-  FROM peru
-), f AS (
-  SELECT n,
-    CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS m,
-    CAST(n * q - s * s AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE) AS v
-  FROM mom
-), g AS (
-  SELECT n, m, v, v / m AS disp,
-    CASE WHEN v > m THEN m * m / (v - m) END AS r,
-    CASE WHEN v > 0 THEN m / v END AS p,
-    (CAST(n AS DOUBLE) * v / m - CAST(n AS DOUBLE))
-      / sqrt(2.0 * (CAST(n AS DOUBLE) - 1.0)) AS o
-  FROM f
-)
-SELECT n AS n_users,
-  round(m, 6) AS mean_count,
-  round(v, 6) AS var_count,
-  round(disp, 6) AS dispersion_index,
-  round(r, 6) AS nb_size_r,
-  round(p, 6) AS nb_prob_p,
-  round(o, 6) AS boehning_o,
-  o > 1.645 AS overdispersed
-FROM g
-"""
-
-QUERIES["nb_dispersion"] = q_nb_dispersion
-_RAW_ORACLES["nb_dispersion"] = SQL_NB_DISPERSION
-
-
-def q_odds_ratio_ci(spark, sf_dir):
-    """Weekend x purchase odds ratio with the Woolf 95% log-interval
-    (Woolf Ann. Hum. Genet. 1955; Bland & Altman BMJ 2000 — THE 2x2
-    effect-size-with-uncertainty: chi2_independence says the table
-    isn't independent, woe_encoding gives the per-cell evidence
-    weight, this says 'the purchase odds are X times higher on
-    weekends, CI [lo, hi]' — the sentence an analyst actually
-    ships). Cells a,b,c,d are exact longs from ONE aggregate;
-    OR = ad/bc is one division of exact products, ln OR rides the
-    catalog's ln precedent, se = sqrt(1/a+1/b+1/c+1/d), and the
-    interval exponentiates the pinned +-1.96 band. Significant when
-    the CI excludes 1. 1-row frame at any corpus size."""
-    ev = _events(spark, sf_dir).select(
-        F.dayofweek(F.col("ts").cast("timestamp")).isin(1, 7)
-        .alias("__wk"),
-        (F.col("event_type") == "purchase").alias("__pur"),
-    )
-    one = ev.agg(
-        F.sum(F.when(F.col("__wk") & F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("a"),
-        F.sum(F.when(F.col("__wk") & ~F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("b"),
-        F.sum(F.when(~F.col("__wk") & F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("c"),
-        F.sum(F.when(~F.col("__wk") & ~F.col("__pur"), 1).otherwise(0))
-        .cast("long").alias("d"),
-    )
-    ok = (F.col("a") > 0) & (F.col("b") > 0) & (F.col("c") > 0) \
-        & (F.col("d") > 0)
-    orr = (F.col("a") * F.col("d")).cast("double") \
-        / (F.col("b") * F.col("c")).cast("double")
-    se = F.sqrt(
-        F.lit(1.0) / F.col("a").cast("double")
-        + F.lit(1.0) / F.col("b").cast("double")
-        + F.lit(1.0) / F.col("c").cast("double")
-        + F.lit(1.0) / F.col("d").cast("double")
-    )
-    lo = F.exp(F.log(orr) - F.lit(1.96) * se)
-    hi = F.exp(F.log(orr) + F.lit(1.96) * se)
-    return one.select(
-        "a", "b", "c", "d",
-        _r6(F.when(ok, orr)).alias("odds_ratio"),
-        _r6(F.when(ok, F.log(orr))).alias("log_or"),
-        _r6(F.when(ok, se)).alias("se_log_or"),
-        _r6(F.when(ok, lo)).alias("or_lo95"),
-        _r6(F.when(ok, hi)).alias("or_hi95"),
-        F.when(ok, (lo > 1.0) | (hi < 1.0)).alias("significant"),
-    )
-
-
-SQL_ODDS_RATIO_CI = """
-WITH ev AS (
-  SELECT (dayofweek(ts) IN (0, 6)) AS wk,
-    (event_type = 'purchase') AS pur
-  FROM events
-), one AS (
-  SELECT
-    CAST(sum(CASE WHEN wk AND pur THEN 1 ELSE 0 END) AS BIGINT) AS a,
-    CAST(sum(CASE WHEN wk AND NOT pur THEN 1 ELSE 0 END) AS BIGINT)
-      AS b,
-    CAST(sum(CASE WHEN NOT wk AND pur THEN 1 ELSE 0 END) AS BIGINT)
-      AS c,
-    CAST(sum(CASE WHEN NOT wk AND NOT pur THEN 1 ELSE 0 END)
-         AS BIGINT) AS d
-  FROM ev
-), f AS (
-  SELECT a, b, c, d,
-    CAST(a * d AS DOUBLE) / CAST(b * c AS DOUBLE) AS orr,
-    sqrt(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(b AS DOUBLE)
-         + 1.0 / CAST(c AS DOUBLE) + 1.0 / CAST(d AS DOUBLE)) AS se
-  FROM one WHERE a > 0 AND b > 0 AND c > 0 AND d > 0
-)
-SELECT a, b, c, d,
-  round(orr, 6) AS odds_ratio,
-  round(ln(orr), 6) AS log_or,
-  round(se, 6) AS se_log_or,
-  round(exp(ln(orr) - 1.96 * se), 6) AS or_lo95,
-  round(exp(ln(orr) + 1.96 * se), 6) AS or_hi95,
-  (exp(ln(orr) - 1.96 * se) > 1.0 OR exp(ln(orr) + 1.96 * se) < 1.0)
-    AS significant
-FROM f
-"""
-
-QUERIES["odds_ratio_ci"] = q_odds_ratio_ci
-_RAW_ORACLES["odds_ratio_ci"] = SQL_ODDS_RATIO_CI
-
-
-def q_rare_word_profile(spark, sf_dir):
-    """Honoré's R, Sichel's S and Brunet's W per source from the
-    hapax end of the frequency spectrum (Honoré 1979; Sichel JRSS-A
-    1975; Brunet 1978 — the RARE-word complement to Yule's K
-    repeat-rate: K is driven by the most frequent words, these three
-    are driven by words used once (V1) or twice (V2), which is
-    where template expansion, boilerplate stuffing and synthetic
-    text first distort a source's profile; R collapses when hapaxes
-    vanish, S is the stable dis-legomena share Sichel showed is
-    near-constant for natural prose, W is the length-robust
-    vocabulary-richness constant). V, V1, V2, N are EXACT LONGS from
-    ONE (source, word) aggregation re-grouped once; R = 100 ln N /
-    (1 - V1/V) is exact divisions inside one ln; W = exp(ln N *
-    exp(-0.165 ln V)) spells the fractional power out as exp/ln on
-    BOTH engines (no pow(), whose libm paths differ). 2 shuffles at
-    any corpus size."""
-    d = load(spark, sf_dir, "documents").select(
-        "source",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("__w"),
-    )
-    cells = d.groupBy("source", "__w").agg(
-        F.count(F.lit(1)).cast("long").alias("__c")
-    )
-    mom = cells.groupBy("source").agg(
-        F.sum("__c").cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("vocab"),
-        F.sum(F.when(F.col("__c") == 1, 1).otherwise(0))
-        .cast("long").alias("v1"),
-        F.sum(F.when(F.col("__c") == 2, 1).otherwise(0))
-        .cast("long").alias("v2"),
-    )
-    mom = mom.filter(
-        (F.col("n_tokens") > 1) & (F.col("vocab") > 1)
-        & (F.col("v1") < F.col("vocab"))
-    )
-    nd = F.col("n_tokens").cast("double")
-    vd = F.col("vocab").cast("double")
-    honore = (F.lit(100.0) * F.log(nd)) / (
-        F.lit(1.0) - F.col("v1").cast("double") / vd
-    )
-    sichel = F.col("v2").cast("double") / vd
-    brunet = F.exp(
-        F.log(nd) * F.exp(F.lit(-0.165) * F.log(vd))
-    )
-    return mom.select(
-        "source", "n_tokens", "vocab", "v1", "v2",
-        _r6(honore).alias("honore_r"),
-        _r6(sichel).alias("sichel_s"),
-        _r6(brunet).alias("brunet_w"),
-    )
-
-
-SQL_RARE_WORD_PROFILE = """
-WITH d AS (
-  SELECT source,
-    unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM documents
-), cells AS (
-  SELECT source, w, CAST(count(*) AS BIGINT) AS c
-  FROM d GROUP BY source, w
-), mom AS (
-  SELECT source,
-    CAST(sum(c) AS BIGINT) AS n_tokens,
-    CAST(count(*) AS BIGINT) AS vocab,
-    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS v2
-  FROM cells GROUP BY source
-)
-SELECT source, n_tokens, vocab, v1, v2,
-  round((100.0 * ln(CAST(n_tokens AS DOUBLE)))
-    / (1.0 - CAST(v1 AS DOUBLE) / CAST(vocab AS DOUBLE)), 6)
-    AS honore_r,
-  round(CAST(v2 AS DOUBLE) / CAST(vocab AS DOUBLE), 6) AS sichel_s,
-  round(exp(ln(CAST(n_tokens AS DOUBLE))
-    * exp(-0.165 * ln(CAST(vocab AS DOUBLE)))), 6) AS brunet_w
-FROM mom
-WHERE n_tokens > 1 AND vocab > 1 AND v1 < vocab
-"""
-
-QUERIES["rare_word_profile"] = q_rare_word_profile
-_RAW_ORACLES["rare_word_profile"] = SQL_RARE_WORD_PROFILE
 
 
 # rewritten once, after every registration above

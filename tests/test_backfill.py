@@ -94,6 +94,38 @@ def test_interpolate_all_null_entity_gets_default(spark):
     assert got["value_interp"].tolist() == [3.5, 3.5]
 
 
+def test_interpolate_null_between_rows_at_its_ts_is_nan(spark):
+    """A null whose previous and next known rows share its ts has
+    xn - xp = 0 over a zero numerator: the reference's 0/0 = NaN, where a
+    plain division fails the action under ANSI mode. One input partition
+    keeps the tie's input order through the (stable) window sort, so the
+    null sits between the two known rows at ts 20, as in the reference."""
+    import pandas as pd
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    pdf = pd.DataFrame(
+        {
+            "entity_id": "a",
+            "ts": [10.0, 20.0, 20.0, 20.0, 30.0],
+            "value": [1.0, 2.0, None, 2.0, 5.0],
+        }
+    )
+    df = spark.createDataFrame(
+        pdf, "entity_id string, ts double, value double"
+    ).coalesce(1)
+    got = (
+        interpolate(df, value="value", leakage_ok=True)
+        .orderBy("ts")
+        .toPandas()["value_interp"]
+        .to_numpy(dtype=float)
+    )
+    expected = oracles.interpolate_single(
+        pdf["ts"].to_numpy(), pdf["value"].to_numpy(dtype=float), 0.0
+    )
+    assert np.isnan(expected[2])
+    np.testing.assert_array_equal(np.sort(got), np.sort(expected))
+
+
 def test_interpolate_requires_leakage_opt_in(spark):
     df = spark.createDataFrame(make_entity_series())
     with pytest.raises(LeakageError):

@@ -131,17 +131,32 @@ def test_dedup_keep_list(spark, docs_df):
     assert out["d3"] == ("d3", True)
 
 
+def _union_find_components(edges):
+    """Pure-Python reference: vertex -> minimum vertex id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 @pytest.mark.parametrize("seed", [99, 7, 2024])
-def test_star_cc_matches_label_propagation(spark, seed):
-    """Differential: alternating large/small-star CC equals min-label
-    propagation on random graphs (including long chains, where the star
-    algorithm's round count advantage matters)."""
+def test_connected_components_matches_union_find(spark, seed):
+    """Differential: large/small-star CC equals a union-find reference on
+    random graphs, including a long chain (diameter 19) and a vertex that
+    appears only in a self-loop (a singleton component)."""
     import numpy as np
 
-    from mpds_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from mpds_spark.operators.dedup import connected_components
 
     rng = np.random.default_rng(seed)
     edges = []
@@ -152,12 +167,12 @@ def test_star_cc_matches_label_propagation(spark, seed):
             edges.append((f"n{a:02d}", f"n{b:02d}"))
     # plus a long chain (diameter 19)
     edges += [(f"c{i:02d}", f"c{i+1:02d}") for i in range(19)]
+    edges.append(("s77", "s77"))
     e = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    lab = {r.doc_id: r.component for r in connected_components(e, max_iter=40).collect()}
-    star = {r.doc_id: r.component for r in connected_components_star(e).collect()}
-    assert lab == star
-    # the chain collapsed to its minimum
-    assert star["c19"] == "c00"
+    got = {r.doc_id: r.component for r in connected_components(e).collect()}
+    assert got == _union_find_components(edges)
+    assert got["c19"] == "c00"
+    assert got["s77"] == "s77"
 
 
 def test_max_bucket_guard_drops_oversized_buckets(spark):
@@ -177,74 +192,6 @@ def test_max_bucket_guard_drops_oversized_buckets(spark):
     guarded = lsh_candidate_pairs(df, max_bucket=5).collect()
     assert not any(r.doc_a.startswith("c") for r in guarded)
     assert any({r.doc_a, r.doc_b} == {"x1", "x2"} for r in guarded)
-
-
-def test_dedup_keep_list_star_algorithm(spark, docs_df):
-    """keep-list via the star-CC algorithm equals the min-label default."""
-    from mpds_spark.operators.dedup import dedup_keep_list, near_dup_pairs
-
-    pairs = near_dup_pairs(docs_df, threshold=0.3)
-    a = {(r.doc_id, r.component, r.keep)
-         for r in dedup_keep_list(docs_df, pairs).collect()}
-    b = {(r.doc_id, r.component, r.keep)
-         for r in dedup_keep_list(docs_df, pairs, algorithm="star").collect()}
-    assert a == b
-
-
-@pytest.mark.parametrize("seed", [99, 7])
-def test_driver_cc_matches_distributed(spark, seed):
-    """Differential: the driver union-find path (connected_components_auto
-    below the edge threshold) emits identical labels to min-label
-    propagation, including self-loop-only singletons."""
-    import numpy as np
-
-    from mpds_spark.operators.dedup import (
-        connected_components,
-        connected_components_auto,
-        connected_components_driver,
-    )
-
-    rng = np.random.default_rng(seed)
-    edges = [
-        (f"n{a:02d}", f"n{b:02d}")
-        for a, b in rng.integers(0, 60, (50, 2))
-        if a != b
-    ]
-    edges += [(f"c{i:02d}", f"c{i+1:02d}") for i in range(19)]
-    edges.append(("s77", "s77"))  # self-loop: singleton component
-    e = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    lab = {
-        r.doc_id: r.component
-        for r in connected_components(e, max_iter=40).collect()
-    }
-    drv = {
-        r.doc_id: r.component for r in connected_components_driver(e).collect()
-    }
-    auto = {
-        r.doc_id: r.component for r in connected_components_auto(e).collect()
-    }
-    assert lab == drv == auto
-    assert drv["s77"] == "s77"
-
-
-def test_auto_cc_above_threshold_uses_star(spark):
-    """Over the driver threshold the auto path must run the distributed
-    star loop (forced by driver_max_edges=0) and still match."""
-    from mpds_spark.operators.dedup import (
-        connected_components_auto,
-        connected_components_driver,
-    )
-
-    edges = [("a2", "a1"), ("a3", "a2"), ("b2", "b1")]
-    e = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    star = {
-        r.doc_id: r.component
-        for r in connected_components_auto(e, driver_max_edges=0).collect()
-    }
-    drv = {
-        r.doc_id: r.component for r in connected_components_driver(e).collect()
-    }
-    assert star == drv == {"a1": "a1", "a2": "a1", "a3": "a1", "b1": "b1", "b2": "b1"}
 
 
 def test_duplicate_spans_token_arrays(spark):

@@ -221,7 +221,7 @@ def _window_plans():
         "lag_lead_diff": (lambda df: lag_lead_diff(df, "value"), 1),
         "time_since_event": (tse, 1),
         "sessionize": (lambda df: sessionize(df, gap=1800.0), 2),
-        "narrow_chain": (_narrow_chain, 6),
+        "narrow_chain": (_narrow_chain, 5),
         "derived_then_asof": (_derived_then_asof, 3),
         "rolling_slope": (rolling_slope, 2),
         "event_burstiness": (event_burstiness, 1),

@@ -108,7 +108,7 @@ def test_sessionize_family_property(spark, sig, th, seed):
     )
     df = spark.createDataFrame(pdf)
     got_rs = (
-        remove_short_on_intervals(df, time_th=th)
+        remove_short_on_intervals(df, time_th=th, leakage_ok=True)
         .orderBy("ts")
         .toPandas()["signal_clean"]
         .to_numpy()
@@ -119,7 +119,7 @@ def test_sessionize_family_property(spark, sig, th, seed):
     )
     np.testing.assert_array_equal(got_rs, exp_rs)
     got_ua = (
-        unite_adjacent_on_intervals(df, union_th=th)
+        unite_adjacent_on_intervals(df, union_th=th, leakage_ok=True)
         .orderBy("ts")
         .toPandas()["signal_united"]
         .to_numpy()

@@ -35,7 +35,9 @@ def test_remove_short_on_intervals_matches_reference(spark, th):
     pdf = make_entity_series(seed=11)
     df = spark.createDataFrame(pdf)
     got = (
-        remove_short_on_intervals(df, signal="signal", time_th=th)
+        remove_short_on_intervals(
+            df, signal="signal", time_th=th, leakage_ok=True
+        )
         .orderBy("entity_id", "ts")
         .toPandas()
     )
@@ -51,7 +53,9 @@ def test_unite_adjacent_on_intervals_matches_reference(spark, th):
     pdf = make_entity_series(seed=13)
     df = spark.createDataFrame(pdf)
     got = (
-        unite_adjacent_on_intervals(df, signal="signal", union_th=th)
+        unite_adjacent_on_intervals(
+            df, signal="signal", union_th=th, leakage_ok=True
+        )
         .orderBy("entity_id", "ts")
         .toPandas()
     )
@@ -60,6 +64,17 @@ def test_unite_adjacent_on_intervals_matches_reference(spark, th):
         s["entity_id"].to_numpy(), s["ts"].to_numpy(), s["signal"].to_numpy(), th
     )
     np.testing.assert_array_equal(got["signal_united"].to_numpy(), expected)
+
+
+@pytest.mark.parametrize(
+    "op", [remove_short_on_intervals, unite_adjacent_on_intervals]
+)
+def test_interval_cleaners_require_leakage_opt_in(spark, op):
+    """Both signal cleaners read later rows of the entity, so each refuses
+    to run without leakage_ok, as interpolate does."""
+    df = spark.createDataFrame(make_entity_series(seed=11))
+    with pytest.raises(LeakageError):
+        op(df)
 
 
 @pytest.mark.parametrize("pre_post", [False, True])

@@ -46,6 +46,33 @@ def test_derived_features_matches_reference(spark):
         )
 
 
+@pytest.mark.parametrize(
+    "ts, dss",
+    [
+        ([10.0, 20.0, 20.0, 30.0], [1.0, 2.0, 2.0, 5.0]),
+        ([0.0, 10.0, 20.0], [1.0, 3.0, 2.0]),
+        ([-10.0, 10.0, 20.0], [1.0, 3.0, 2.0]),
+    ],
+    ids=["duplicate_ts", "first_ts_zero", "running_ts_sum_zero"],
+)
+def test_derived_features_zero_divisor_matches_reference(spark, ts, dss):
+    """A zero divisor (two rows at one ts; a running Σt of 0) gives the
+    reference's IEEE result — NaN → 0, ±Inf kept — under ANSI mode, where
+    a plain division fails the whole action with DIVIDE_BY_ZERO."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    pdf = pd.DataFrame({"entity_id": "e", "ts": ts, "dss": dss})
+    got = (
+        derived_features(spark.createDataFrame(pdf), value="dss")
+        .orderBy("ts")
+        .toPandas()
+    )
+    expected = oracles.derived_features(pdf, value="dss", ts="ts")
+    for c in expected.columns:
+        np.testing.assert_allclose(
+            got[c].to_numpy(), expected[c].to_numpy(), rtol=1e-12, err_msg=c
+        )
+
+
 def test_time_since_event_matches_reference(spark):
     pdf = make_entity_series()
     df = spark.createDataFrame(pdf)
